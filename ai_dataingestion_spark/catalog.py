@@ -14,10 +14,21 @@ value hash), so:
 
 from __future__ import annotations
 
+import dis
+import functools
+import hashlib
+import inspect
+import json
+import linecache
+import sys
+import types
 from collections.abc import Callable
 from dataclasses import dataclass
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ai_dataingestion_spark.registry import register_views
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -41,462 +52,201 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
             raise ValueError(f"duplicate operator id: {name}")
 
         def invoke(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # release the PREVIOUS operator's tracked intermediate caches
-            # (its result has been consumed by now — harness loops are
-            # sequential); fixes the 50-query-session heap accumulation
-            # measured at the sfx1.0 sweep (opcache.py)
+            # Release the previous operator's tracked caches: harness loops
+            # run operators in sequence, so its result is consumed by now
+            # (opcache.py).
             from ai_dataingestion_spark.opcache import release_op_caches
 
             release_op_caches()
             try:
                 return fn(spark, sf_dir)
             except BaseException:
-                # a raising operator returns no DataFrame anyone could still
-                # consume — release its orphaned caches NOW instead of
-                # leaking them until the next invocation (VERDICT r7 item 7);
-                # abandoned=True so strict mode doesn't replace the real
-                # exception with a consumed-check failure (round 10)
+                # A raising operator returns no DataFrame, so its caches are
+                # orphaned: release them now. abandoned=True keeps strict
+                # mode from replacing the real exception with a
+                # consumed-check failure.
                 release_op_caches(abandoned=True)
                 raise
 
         invoke.__name__ = fn.__name__
         invoke.__doc__ = fn.__doc__
+        invoke.__wrapped__ = fn
         _REGISTRY[name] = QuerySpec(name, invoke, oracle, doc or (fn.__doc__ or ""))
         return fn
 
     return wrap
 
 
-# Operators earlier driver sweeps already verified green on the CURRENT
-# corpus. The driver caps its oracle sweep at the FIRST 50 entries of
-# queries() per round, so registration order is the coverage rotation knob:
-# not-yet-driver-checked operators must come first to earn their green rows.
-# Round-5 rotation (VERDICT r4 items 1-2, 4-5): the 49 green rows of
-# CORRECTNESS_r04 move into this set; the r4 deferred tier is emptied so
-# its 12 locally-green IDs rank 0 into the r5 window alongside the fixed
-# text_fingerprint (the one r4 ERR — output shape, now array_join'ed);
-# udf_grouped_map / udf_map_in_pandas (evicted from the r4 window, green
-# evidence predates the corpus regen) re-check at rank 1; the 3 rows-only
-# IDs take rank-2 tail slots for their first driver rows. Remaining window
-# slots fall to attested-green rank-4 entries and any round-5 additions
-# (which register at rank 0).
-_DRIVER_CHECKED: frozenset[str] = frozenset(
-    {
-        # --- round 1 green (still attested: no events dependency) ---
-        "agg_groupby", "agg_global", "agg_distinct",
-        "agg_having", "agg_rollup", "agg_grouping_sets",
-        "agg_percentile", "agg_stats", "agg_collect",
-        "agg_top_groups", "agg_arg_minmax",
-        "agg_rollup_grouping", "agg_bool", "tpch_q3_shipping_priority",
-        "tpch_q5_local_volume", "tpch_q10_returned_items",
-        "unpivot_melt",
-        "win_nth_value", "join_bucketed", "quality_observe", "join_inner",
-        "join_broadcast", "join_left", "join_right", "join_full",
-        "join_semi", "join_anti", "join_cross",
-        "join_multiway", "join_null_safe", "project_select", "project_cast",
-        "filter_pred", "filter_like_regex", "distinct_rows",
-        "set_union_distinct", "set_intersect", "set_except", "sort_multi",
-        "topk_global",
-        # --- round 2 green (still attested) ---
-        "dedup_exact", "dedup_ngram_jaccard", "embed_normalize", "fn_array",
-        "fn_array_hof", "fn_bitwise", "fn_cond", "fn_date", "fn_hash",
-        "fn_math", "fn_null_semantics", "fn_regex",
-        "fn_string", "fn_string_parts", "fn_struct_array",
-        "fn_trig", "limit_offset", "multimodal_binary_features",
-        "multimodal_join", "sentiment_lexicon", "sim_cosine_topk",
-        "sim_knn_label", "sim_pair_dedup", "text_clean", "text_langid",
-        "text_ngrams", "text_quality_filter", "text_quality_score",
-        "text_stopwords", "text_tfidf", "text_token_count", "text_tokenize",
-        "udf_pandas_agg",
-        "udf_pandas_scalar", "udf_python",
-        "win_ntile_dist", "win_rank", "win_running", "win_topk_group",
-        # --- round 3 green (checked against the regenerated µs corpus) ---
-        "text_lang_stats", "udtf_python", "scan_parquet", "scan_csv",
-        "scan_json", "scan_text", "sink_parquet_part", "sink_csv_json",
-        "quality_profile", "quality_constraints", "schema_evolve",
-        "pipeline_upsert_merge", "pipeline_cdc_diff", "source_stream_file",
-        "stream_dedup", "stream_stateful", "stream_sink_parquet",
-        "ingest_incremental", "pipeline_e2e_text", "tpch_q6_forecast_revenue",
-        "tpch_q14_promo_revenue", "tpch_q7_volume_shipping",
-        "subquery_scalar_avg", "agg_median", "agg_weighted_avg",
-        "quality_outlier_iqr", "fn_levenshtein_match", "embed_label_centroid",
-        "text_keyword_extract", "dedup_cross_source",
-        "dedup_cluster_components", "multimodal_frame_sample",
-        "stream_static_join", "agg_histogram_bins", "text_pii_scrub",
-        "text_chunk_overlap", "split_train_eval", "join_salted_skew",
-        "embed_quantize_int8", "text_perplexity_proxy", "tpch_q4_late_orders",
-        "tpch_q12_priority_by_flag", "tpch_q13_order_distribution",
-        # --- round 4 green (49 rows of CORRECTNESS_r04) ---
-        "agg_approx_distinct", "agg_cube", "events_cohort_retention",
-        "events_transition_matrix", "events_dau_mau", "join_range",
-        "join_asof", "win_lag_lead", "win_moving_range", "win_first_last",
-        "fn_timestamp", "dedup_near_minhash", "dedup_simhash",
-        "dedup_fingerprint_pairs", "text_containment_pairs",
-        "embed_dim_stats", "pipeline_compact_latest", "stream_tumbling",
-        "stream_sliding", "stream_session", "events_timeseries_rollup",
-        "pipeline_scd2_intervals", "events_anomaly_zscore",
-        "tpch_q18_large_orders", "text_contamination_ngram",
-        "text_repetition_stats", "dedup_normalized_text",
-        "sample_stratified", "pack_context_windows", "agg_mode_per_group",
-        "join_interval_overlap", "win_gaps_islands", "quality_domain_cap",
-        "text_vocab_growth", "stream_stream_join", "events_sessionize_batch",
-        "customer_rfm_segments", "lineitem_abc_pareto",
-        "embed_centroid_outliers", "agg_corr_regression", "agg_conditional",
-        "agg_salted_skew", "events_funnel", "pivot_wide", "set_union_all",
-        "win_moving", "win_lag_default", "fn_map", "fn_json",
-        # --- round 5 green (all 50 rows of CORRECTNESS_r05: 47 oracle
-        # pass + sim_ann_lsh / sim_ann_ivf / stream_watermark_late
-        # rows-only-by-design rows with non-null spark_rows) ---
-        "agg_count_min_topk", "agg_higher_moments", "corpus_source_entropy",
-        "customer_value_deciles", "dedup_affix_prefix", "dedup_family_sizes",
-        "embed_cosine_histogram", "embed_kmeans_iterations",
-        "embed_norm_percentiles", "events_bot_rate_flag", "events_ewma_daily",
-        "events_gap_fill_locf", "events_hourly_matrix", "fn_interval_arith",
-        "join_bloom_prefilter", "join_existence_flags",
-        "lineitem_shipping_delay_stats", "market_basket_pairs",
-        "orders_cumulative_share_monthly", "orders_priority_aging",
-        "part_brand_share", "pipeline_dead_letter", "pipeline_reconcile_totals",
-        "sales_yoy_growth", "scan_orc", "sim_ann_ivf", "sim_ann_lsh",
-        "sim_pair_dedup_lsh", "stream_watermark_late", "supplier_revenue_gini",
-        "text_boilerplate_lines", "text_charset_stats", "text_code_detect",
-        "text_entropy_filter", "text_fingerprint", "text_length_band_filter",
-        "text_mixture_weights", "text_paragraph_dedup", "text_sentence_stats",
-        "text_zipf_slope", "tpch_q11_part_value_concentration",
-        "tpch_q15_top_supplier", "tpch_q16_brand_supplier_counts",
-        "tpch_q17_small_quantity_revenue", "tpch_q19_disjunctive",
-        "tpch_q22_idle_customers", "tpch_q8_market_share",
-        "tpch_q9_profit_by_nation_year", "udf_grouped_map",
-        "udf_map_in_pandas",
-        # --- round 6 green (all 50 rows of CORRECTNESS_r06: clean sweep,
-        # 0 fail / 0 err) ---
-        "agg_chi_square_independence", "agg_geo_harmonic_means",
-        "brand_copurchase_lift", "catalog_table_stats", "customer_cohort_ltv",
-        "customer_order_gap_stats", "dedup_edit_distance_blocked",
-        "dedup_lsh_band_tuning", "dedup_minhash_estimate_error",
-        "embed_label_eta_squared", "embed_pca_top_component",
-        "events_ab_proportion_ztest", "events_anomaly_mad",
-        "events_attribution_last_touch", "events_autocorrelation_daily",
-        "events_error_burst_5min", "events_funnel_time_bounded",
-        "events_hour_gap_ranges", "events_markov_2step_paths",
-        "events_peak_concurrency", "events_survival_weeks",
-        "events_type_cooccurrence", "events_type_day_jaccard",
-        "events_user_lifecycle_states", "fn_string_codec", "fn_string_format",
-        "fn_try_safe_arith", "join_dpp_partitioned",
-        "lineitem_discount_quantity_regr", "lineitem_quantity_cusum_shift",
-        "lineitem_ship_latency_by_nation", "orders_basket_size_histogram",
-        "orders_duplicate_invoice_detect", "orders_repeat_customer_rate",
-        "orders_seasonal_index", "pipeline_watermark_lag_report",
-        "quality_benford_first_digit", "quality_null_blank_matrix",
-        "quality_referential_integrity", "scan_csv_malformed_permissive",
-        "scan_partition_pruned", "sim_cosine_range_search",
-        "text_bigram_cond_entropy", "text_hapax_ratio",
-        "text_kl_divergence_sources", "text_shingle_df_spectrum",
-        "tpch_q20_excess_share_suppliers", "tpch_q21_single_late_supplier",
-        "tpch_q2_min_cost_supplier", "win_percentile_disc_vs_cont",
-        # --- round 7 green (all 50 rows of CORRECTNESS_r07: 49 oracle pass
-        # + agg_hll_sketch_merge rows-only-by-design, 0 fail / 0 err) ---
-        "agg_empty_relation_semantics", "agg_equidepth_histogram",
-        "agg_hll_sketch_merge", "brand_pareto_coverage",
-        "dedup_incremental_batch", "dedup_removal_plan",
-        "embed_label_confusion", "events_alert_rules",
-        "events_attribution_linear", "events_cep_triple_pattern",
-        "events_gap_fill_linear", "events_late_arrival_audit",
-        "events_pre_post_welch_t", "events_rolling_7d_active_users",
-        "events_seasonal_naive_backtest", "events_sessions_bounce_rate",
-        "events_time_to_convert_quantiles", "events_top_session_paths",
-        "events_value_winsorized_stats", "fn_array_set_ops",
-        "fn_content_uuid", "fn_iso_week_parity", "fn_timezone_convert",
-        "graph_copurchase_triangles", "lineitem_abc_xyz_matrix",
-        "multimodal_coverage_audit", "multimodal_payload_dedup",
-        "pipeline_compaction_planner", "pipeline_idempotent_ledger",
-        "quality_schema_contract", "sample_k_per_group_stable",
-        "scan_binary_files", "scan_json_schema_infer",
-        "scan_parquet_schema_merge", "scan_text_wholefile",
-        "search_inverted_index_and_query", "sink_csv_quoted_roundtrip",
-        "sink_parquet_codecs", "sink_write_modes",
-        "subquery_not_in_null_trap", "supplier_hhi_by_nation",
-        "text_bm25_topk", "text_chunk_dup_ratio", "text_collocation_pmi",
-        "text_js_divergence_pairwise", "topk_per_group_strategies",
-        "udf_python_arrow", "win_default_frame_ties",
-        "win_range_numeric_frame", "win_running_distinct",
-        # --- round 8 green (all 50 rows of CORRECTNESS_r08: clean sweep,
-        # 0 fail / 0 err) ---
-        "agg_log2_histogram", "agg_median_of_means",
-        "agg_partial_merge_proof", "agg_weighted_median",
-        "dedup_eval_precision_recall", "dedup_partition_invariance",
-        "dedup_representative_selection", "embed_dim_corr_pairs",
-        "embed_index_upsert_refresh", "embed_mmr_select",
-        "events_cuped_adjustment", "events_diff_in_differences",
-        "events_longest_same_type_run", "events_sample_size_calc",
-        "events_session_depth_survival", "events_session_gap_sensitivity",
-        "events_transition_dwell_stats", "events_wow_change_contributions",
-        "fn_business_days_diff", "fn_minmax_scale_check",
-        "graph_pagerank_trade", "join_asof_directions",
-        "lineitem_price_index", "multimodal_image_resize_pool",
-        "orders_fiscal_calendar_rollup", "orders_moving_annual_total",
-        "orders_open_backlog_sweepline", "orders_priority_mix_shift",
-        "orders_ytd_vs_prior_year", "part_single_source_risk",
-        "pipeline_resume_watermark", "pipeline_retention_gc_plan",
-        "pipeline_shard_manifest", "quality_contingency_residuals",
-        "quality_key_sequence_gaps", "quality_ks_two_sample",
-        "quality_psi_drift", "scan_csv_column_reorder",
-        "sink_file_layout_audit", "sort_keyset_pagination",
-        "sort_null_ordering", "supplier_quadrant_classification",
-        "supplier_scorecard_composite", "text_batch_novelty_rate",
-        "text_rank_stability_spearman", "text_readability_score",
-        "text_token_length_histogram", "text_topk_coverage_curve",
-        "text_vocab_oov_rate", "trade_flow_nation_matrix",
-        # --- round 9 green (all 50 rows of CORRECTNESS_r09: clean sweep,
-        # 0 fail / 0 err) ---
-        "agg_bitmap_exact_distinct", "agg_bootstrap_mean_ci",
-        "agg_cube_margin_consistency",
-        "agg_stratified_estimator_variance", "agg_theil_decomposition",
-        "catalog_temporal_coverage", "customer_segment_migration",
-        "dedup_cdc_chunking", "embed_pq_reconstruction_error",
-        "embed_prefix_energy_fraction", "embed_sign_hamming_separation",
-        "events_ab_srm_check", "events_circular_time_stats",
-        "events_interarrival_burstiness", "events_kaplan_meier_daily",
-        "events_markov_entropy_rate", "events_max_sliding_hour_rate",
-        "events_pchart_error_rate", "events_pit_training_features",
-        "events_rolling_corr_daily", "fn_aes_encrypt_roundtrip",
-        "fn_array_reduce_horner", "fn_collation_lcase_group",
-        "fn_json_nested_roundtrip", "fn_url_parse",
-        "fn_variant_json_path", "fn_xpath_extract",
-        "graph_degree_distribution", "join_epsilon_float",
-        "join_lateral_topk", "join_strategy_equivalence",
-        "lineitem_wilson_ci_return_rate",
-        "orders_fulfillment_vintage_curves",
-        "orders_hierarchy_share_of_parent",
-        "orders_seasonal_decomposition_additive",
-        "orders_simpsons_reversal_check", "part_skyline_price_size",
-        "pipeline_cdc_column_breakdown", "pipeline_zorder_layout_plan",
-        "quality_column_entropy_profile", "quality_fd_discovery",
-        "quality_table_fingerprint", "scan_parquet_footer_audit",
-        "sink_csv_gzip_roundtrip", "sink_dynamic_partition_overwrite",
-        "sql_recursive_cte_rollup", "stream_foreachbatch_upsert",
-        "text_bpe_pair_merge", "text_naive_bayes_source_classifier",
-        "win_loo_outlier_zscore",
-        # --- round 10 green (all 50 rows of CORRECTNESS_r10: 27 first-time
-        # IDs — the entire remaining backlog — + 23 staleness re-checks;
-        # 444/444 oracle-backed IDs now hash-green, 4 rows-only-by-design) ---
-        "agg_approx_percentile_error", "agg_hll_union_rollup",
-        "embed_logistic_regression_step", "events_bayesian_ab_posterior",
-        "fn_global_row_index_scalable", "fn_ip_cidr_match",
-        "fn_multiformat_timestamp_parse", "fn_utf8_multibyte_semantics",
-        "graph_link_prediction_jaccard", "join_spatial_grid",
-        "pipeline_cdc_apply_deletes", "pipeline_medallion_orders",
-        "pipeline_shard_skew_audit", "quality_expectation_suite",
-        "quality_partition_fingerprint_diff", "sample_weighted_systematic",
-        "scan_csv_multichar_delim", "scan_recursive_glob",
-        "scan_xml_roundtrip", "sink_max_records_per_file",
-        "source_python_datasource", "sql_group_by_all",
-        "sql_named_window_clause", "sql_pivot_clause",
-        "stream_available_now_drain", "text_url_canonicalize_dedup",
-        "win_range_interval_frame",
-        # --- round 11 green (all 50 rows of CORRECTNESS_r11: 5 first-time
-        # state-v2 IDs + 3 changed-contract re-checks + 42 staleness
-        # re-certifications, clean sweep 0 fail / 0 err) ---
-        "stream_tws_list_state", "stream_tws_map_state",
-        "stream_tws_initial_state", "stream_tws_event_timer",
-        "source_python_datasource_stream",
-        # --- round 12 green (18 first-time IDs of CORRECTNESS_r12: 9 pipe
-        # + 4 UDTF-depth + 5 VARIANT-depth, plus 32 staleness
-        # re-certifications, clean sweep 0 fail / 0 err) ---
-        "sql_pipe_agg_pricing", "sql_pipe_chain_orders",
-        "sql_pipe_join_agg", "sql_pipe_window_topk", "sql_pipe_set_ops",
-        "sql_pipe_pivot", "sql_pipe_unpivot", "sql_pipe_agg_having",
-        "sql_pipe_subquery_compose",
-        "udtf_analyze_passthrough", "udtf_analyze_word_cols",
-        "udtf_table_partition_stats", "udtf_self_partition_counts",
-        "fn_variant_explode_array", "fn_variant_object_explode",
-        "fn_variant_typed_coercion", "fn_variant_to_struct_shred",
-        "fn_variant_schema_inventory",
-        # --- round 13 green (29 first-time IDs of CORRECTNESS_r13: 6 SQL
-        # scripting + 5 statestore reader + 3 catalog metadata + 4 SQL UDFs
-        # + 4 function surface + 3 collation + 3 observability +
-        # udf_map_in_arrow, plus 21 staleness re-certs, 50/50 full pass) ---
-        "sql_script_while_accumulate", "sql_script_for_cursor_rollup",
-        "sql_script_if_elseif_branch", "sql_script_repeat_until_search",
-        "sql_script_exit_handler_fallback",
-        "sql_script_execute_immediate_params",
-        "statestore_read_agg_state", "statestore_read_dedup_state",
-        "statestore_read_liststate_tail", "statestore_read_join_buffer",
-        "statestore_read_metadata_inventory",
-        "catalog_meta_columns_inventory", "catalog_meta_table_profile",
-        "catalog_meta_type_census",
-        "sql_udf_scalar_inline", "sql_udf_table_parameterized",
-        "sql_udf_lateral_correlated", "sql_udf_default_composed",
-        "fn_listagg_within_group", "fn_null_safety_family",
-        "fn_datetime_names", "sql_session_variables",
-        "fn_collation_ci_join", "fn_collation_ci_predicates",
-        "fn_collation_ci_distinct",
-        "fn_observe_metrics_gate", "scan_metadata_file_audit",
-        "fn_approx_top_k_types",
-        "udf_map_in_arrow",
-        # --- round 14 green (27 first-time IDs of CORRECTNESS_r14: 5
-        # point-in-time state reads + 2 Python-source pushdown + 3 XML +
-        # 2 DESCRIBE-AS-JSON/SHOW + 4 map HOFs + 2 parameterized SQL +
-        # 3 CSV + 3 generators + 2 ingest byte-hygiene +
-        # fn_regexp_position_family, plus 4 same-round code-change
-        # re-certs and 19 staleness re-certs, 50/50 full pass) ---
-        "statestore_read_batch0_agg", "statestore_read_batch_evolution",
-        "statestore_read_changefeed_dedup", "statestore_read_changefeed_agg",
-        "statestore_read_snapshot_reconstruction",
-        "source_pyds_filter_pushdown", "source_pyds_pushdown_residual",
-        "fn_xml_roundtrip_struct", "fn_from_xml_attributes",
-        "fn_schema_of_xml_inventory",
-        "catalog_describe_json_columns", "catalog_show_surface",
-        "fn_map_transform_family", "fn_map_zip_merge",
-        "fn_str_to_map_parse", "fn_map_concat_entries",
-        "sql_named_parameters", "sql_positional_parameters",
-        "fn_csv_roundtrip_struct", "fn_from_csv_delimiter_options",
-        "fn_schema_of_csv_inventory",
-        "fn_stack_wide_to_long", "fn_inline_struct_array",
-        "fn_posexplode_outer_preserving",
-        "fn_utf8_validation_family", "fn_digest_family",
-        "fn_regexp_position_family",
-        # --- round 15 green (9 first-time IDs of CORRECTNESS_r15: 3
-        # §2.W changefeed-window/join-store-inventory reads + 3 §2.AB
-        # streaming observe()/listener relations + 3 §2.AK
-        # sketch/bitwise/mask ops, plus 41 re-certs — 50/50 full pass,
-        # incl. all 20 decimal-hardened common-path re-checks) ---
-        "statestore_read_changefeed_window",
-        "statestore_read_changefeed_prefix_replay",
-        "statestore_read_join_store_inventory",
-        "stream_observe_batch_metrics", "stream_listener_progress_relation",
-        "stream_listener_lifecycle_audit",
-        "agg_theta_sketch_sets", "agg_bitwise_conditional",
-        "fn_mask_redaction_family",
-        # --- round 16 green (the 11 first-time IDs of CORRECTNESS_r16:
-        # §2.AL TIME type ×3, §2.AM scalar-function completion ×5, §2.AN
-        # DF-cap loss curve ×1, §2.AO catalog depth ×2 — all green on
-        # first presentation; the other 39 rows were re-certs) ---
-        "fn_time_type_family", "fn_time_trunc_diff_family",
-        "events_time_of_day_rollup",
-        "fn_width_bucket_binning", "fn_string_pick_family",
-        "fn_try_datetime_make", "fn_json_array_introspect",
-        "fn_aes_roundtrip_property",
-        "text_shingle_df_cap_loss",
-        "catalog_show_partitions_inventory", "catalog_tblproperties_roundtrip",
-    }
-)
+def sql_op(name: str, spark_sql: str | tuple[str, ...], oracle: str, doc: str):
+    """Register an operator that is pure Spark SQL over the corpus views.
+    A tuple of statements runs in order; the last one's result is returned."""
+    stmts = (spark_sql,) if isinstance(spark_sql, str) else tuple(spark_sql)
 
-# Formerly-green oracle-backed IDs whose evidence went stale (e.g. a
-# driver corpus regeneration, or a contract change): re-check them right
-# after the rank-0 block. Round 13: empty — stream_tws_event_timer's r12
-# re-check under its changed oracle (ADVICE r11 #3 ms-truncation) came
-# back green, so its evidence is current again.
-# Round 14: the four attested ops whose CODE changed that round all came
-# back green in CORRECTNESS_r14 on the shipped code, so the set emptied.
-# Round 15: the 20 ops whose CODE changed that round (the
-# stable_rounded_sum / stable_sum hardening of every residual
-# round-of-double-sum site) re-checked and ALL came back hash-green in
-# CORRECTNESS_r15 on the shipped decimal accumulation, so the set
-# emptied again (VERDICT-r15 item 1 fold). Round 16: any op whose code
-# changes this round goes here for same-round re-cert.
-# Round 17 (VERDICT-r16 item 2): the five r16-restructured ops the r16
-# rotation window missed (their greens predate the restructuring) re-check
-# at the head of the window, together with every op whose CODE changed in
-# this optimization round (the minhash/shingle driver-build rewrites).
-_EVENTS_RECHECK: frozenset[str] = frozenset(
-    {
-        # r16 restructured, driver attestation owed (VERDICT-r16 item 2)
-        "graph_pagerank_trade", "graph_copurchase_triangles",
-        "graph_degree_distribution", "dedup_lsh_band_tuning",
-        "multimodal_image_resize_pool",
-        # r17 code-changed (driver-build string-expression rewrites; the
-        # partition-level LSH pair kernel)
-        "dedup_removal_plan", "dedup_near_minhash",
-        "dedup_minhash_estimate_error", "dedup_eval_precision_recall",
-        "sim_pair_dedup_lsh",
-        "catalog_meta_type_census", "udtf_self_partition_counts",
-        # r17 second batch (sweep follow-ups): streaming pair-kernel
-        # yield, day-clustered sink writes, simhash/mmr/logreg
-        # expression rewrites and gradient caching
-        "sim_pair_dedup", "sink_dynamic_partition_overwrite",
-        "dedup_simhash", "embed_mmr_select",
-        "embed_logistic_regression_step", "quality_psi_drift",
-    }
-)
+    def _fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        register_views(spark, sf_dir)
+        for stmt in stmts[:-1]:
+            spark.sql(stmt)
+        return spark.sql(stmts[-1])
+
+    _fn.__name__ = name
+    _fn.__doc__ = doc
+    return register(name, oracle=oracle, doc=doc)(_fn)
 
 
-# Operators added AFTER this round's 50-slot window was planned: they rank
-# behind the rows-only tier so they can't displace the planned window
-# mid-round. EACH ROUND: empty this set (the IDs then rank 0 in
-# registration order and queue for the next windows) and move the new
-# CORRECTNESS greens into _DRIVER_CHECKED above. The current backlog /
-# window plan is COMPUTED, never narrated here: run
-# `python scripts/rotation_plan.py` for the live numbers (it derives them
-# from this registry plus the CORRECTNESS_r*.json files, and
-# tests/test_oracle_parity.py asserts the same figure).
-_DEFER_TO_NEXT_ROUND: frozenset[str] = frozenset()
+# ---------------------------------------------------------------------------
+# Driver rotation. The driver hash-checks only the FIRST 50 entries of
+# queries() per round, so the order of all_specs() decides which operators
+# earn fresh evidence. Ranks, front of the window first:
+#   0  no green driver row yet, oracle-backed
+#   1  green, oracle-backed, and its code fingerprint differs from the one
+#      recorded when that green row was folded in
+#   2  no green driver row yet, rows-only
+#   4  the rest: oracle-backed before rows-only (a rows-only check buys the
+#      least evidence), then oldest latest-green round first
+# Registration order breaks ties within a rank.
+# ---------------------------------------------------------------------------
 
-# Rows-only IDs promoted into the current driver window: normally rows-only
-# operators rank 2 (behind every unchecked oracle-backed ID). Used in r7 to
-# land agg_hll_sketch_merge's first driver row (VERDICT r6 item 3); empty
-# since — every rows-only ID now has a driver row.
-_PROMOTE_ROWS_ONLY: frozenset[str] = frozenset()
-
-
-def _rotation_rank(spec: QuerySpec) -> int:
-    """0 = unchecked with oracle (front of the driver window) or promoted
-    rows-only, 1 = stale events-touching green needing re-check, 2 =
-    unchecked rows-only, 3 = deferred-to-next-round additions, 4 = attested
-    driver-green (back of the line)."""
-    if spec.name in _EVENTS_RECHECK:
-        return 1
-    if spec.name in _DEFER_TO_NEXT_ROUND:
-        return 3
-    if spec.name in _DRIVER_CHECKED:
-        return 4
-    if spec.name in _PROMOTE_ROWS_ONLY:
-        return 0
-    return 0 if spec.oracle is not None else 2
+_PKG = __name__.partition(".")[0]
+_REBIND_OPS = frozenset({dis.opmap["STORE_GLOBAL"], dis.opmap["DELETE_GLOBAL"]})
+_RECERT_PATH = Path(__file__).resolve().parent / "recert_order.json"
 
 
-def _latest_green_round() -> dict[str, int]:
-    """ID -> latest CORRECTNESS round that attested it, from the generated
-    ``recert_order.json`` (written by ``scripts/rotation_plan.py --write``,
-    which derives it from the repo-root CORRECTNESS_r*.json files — the
-    package itself never depends on repo-root artifacts at runtime).
-
-    Missing or unparseable file => {} and the rotation falls back to pure
-    registration order, which is exactly the pre-round-11 behavior.
-    """
-    import json
-    from pathlib import Path
-
-    path = Path(__file__).resolve().parent / "recert_order.json"
+def _recert_table() -> tuple[dict[str, int], dict[str, str]]:
+    """(ID -> latest green CORRECTNESS round, ID -> fingerprint recorded for
+    it) from ``recert_order.json``, which ``scripts/rotation_plan.py
+    --write`` generates from the repo-root CORRECTNESS_r*.json files (the
+    package never reads repo-root files at run time). A missing or
+    unreadable table ranks every operator as never checked."""
     try:
-        data = json.loads(path.read_text())
-        return {str(k): int(v) for k, v in data["latest_green_round"].items()}
-    except (OSError, ValueError, KeyError, TypeError):
-        return {}
+        data = json.loads(_RECERT_PATH.read_text())
+        latest = {str(k): int(v) for k, v in data["latest_green_round"].items()}
+        certified = {str(k): str(v) for k, v in data["certified_fingerprint"].items()}
+    except (OSError, ValueError, KeyError, TypeError, AttributeError):
+        return {}, {}
+    return latest, certified
+
+
+def _const_text(v) -> str | None:
+    """Stable text of a str/number constant or of a tuple/frozenset of them
+    (frozenset members sorted, so it does not depend on the hash seed); None
+    for anything else. Mutable containers are left out: module-level dicts
+    and lists include run-time caches, which are not code."""
+    if isinstance(v, (str, int, float)):
+        return repr(v)
+    if not isinstance(v, (tuple, frozenset)):
+        return None
+    parts = [_const_text(x) for x in v]
+    if None in parts:
+        return None
+    return "(" + ",".join(sorted(parts) if isinstance(v, frozenset) else parts) + ")"
+
+
+@functools.cache
+def _code_digest(code: types.CodeType) -> tuple[str, tuple[str, ...], frozenset[str]]:
+    """(source text of the code, every name it and its nested functions look
+    up, the globals they rebind with a ``global`` statement). The text spans
+    the first line (decorators included) to the last line any instruction
+    covers."""
+    names: set[str] = set()
+    rebound: set[str] = set()
+    last = code.co_firstlineno
+    stack = [code]
+    while stack:
+        c = stack.pop()
+        names.update(c.co_names)
+        if not _REBIND_OPS.isdisjoint(c.co_code[::2]):  # opcodes sit at even offsets
+            rebound.update(
+                i.argval for i in dis.get_instructions(c) if i.opcode in _REBIND_OPS
+            )
+        last = max([last, *(end for _, end, _, _ in c.co_positions() if end)])
+        stack.extend(k for k in c.co_consts if isinstance(k, types.CodeType))
+    lines = linecache.getlines(code.co_filename)[code.co_firstlineno - 1 : last]
+    return "".join(lines), tuple(sorted(names)), frozenset(rebound)
+
+
+def fingerprint(spec: QuerySpec) -> str:
+    """Digest of what an operator's result depends on: its oracle SQL and
+    the source of its function plus every package function, class and
+    str/number constant reached by name from there, transitively (module
+    globals, closure cells, function-local imports). Globals that a reached
+    function rebinds are run-time state, not code, and are left out, as are
+    module names, so moving unchanged code to another module keeps the
+    digest."""
+    items = [("oracle", spec.oracle or "")]
+    seen: set[int] = set()
+    state: set[str] = set()
+    todo: list[tuple[str, object]] = [("fn", inspect.unwrap(spec.fn))]
+    while todo:
+        key, obj = todo.pop()
+        ours = str(getattr(obj, "__module__", "")).startswith(_PKG)
+        if not (ours and isinstance(obj, (types.FunctionType, type))):
+            text = _const_text(obj)
+            if text is not None:
+                items.append((key, text))
+            continue
+        if id(obj) in seen:
+            continue
+        seen.add(id(obj))
+        if isinstance(obj, type):
+            for n, v in vars(obj).items():
+                if isinstance(v, property):
+                    v = v.fget
+                elif isinstance(v, (staticmethod, classmethod)):
+                    v = v.__func__
+                if not n.startswith("__"):
+                    todo.append((f"{obj.__qualname__}.{n}", v))
+            continue
+        key = obj.__qualname__
+        src, names, rebound = _code_digest(obj.__code__)
+        items.append((key, src))
+        state |= rebound
+        for var, cell in zip(obj.__code__.co_freevars, obj.__closure__ or ()):
+            todo.append((f"{key}.{var}", cell.cell_contents))
+        # module globals, then package modules reached by name (module
+        # imports and function-local `from ... import`)
+        scopes = [obj.__globals__]
+        scopes += [vars(sys.modules[n]) for n in names if n.startswith(_PKG) and n in sys.modules]
+        for scope in scopes:
+            for n in names:
+                v = scope.get(n)
+                if not isinstance(v, types.ModuleType):
+                    todo.append((n, v))
+                elif v.__name__.startswith(_PKG) and not any(vars(v) is s for s in scopes):
+                    scopes.append(vars(v))
+    digest = hashlib.blake2b(digest_size=8)
+    for key, text in sorted(i for i in items if i[0] not in state):
+        digest.update(f"{key}\0{text}\0".encode())
+    return digest.hexdigest()
+
+
+_current_fingerprint = functools.cache(fingerprint)  # once per process
+
+
+def _rotation_rank(
+    spec: QuerySpec,
+    latest: dict[str, int],
+    certified: dict[str, str],
+    fingerprint_of: Callable[[QuerySpec], str] = _current_fingerprint,
+) -> int:
+    if spec.name not in latest:
+        return 0 if spec.oracle is not None else 2
+    if spec.oracle is not None and certified.get(spec.name) != fingerprint_of(spec):
+        return 1
+    return 4
 
 
 def all_specs() -> dict[str, QuerySpec]:
-    """All registered operators, ordered for the driver's 50-query sweep
-    window (imports the operator packages on demand).
-
-    Rank-4 (attested-green) entries are staleness-ordered (VERDICT-r10
-    item 1): oracle-backed IDs first, then by OLDEST latest-green round,
-    then registration order — so with a zero backlog the driver window
-    re-certifies the 50 IDs whose evidence is most out of date (r1/r2
-    vintage first) instead of sweeping the same registration prefix
-    forever. Rows-only IDs sort behind oracle-backed ones at equal rank:
-    their driver check is count+schema only, so a window slot spent there
-    buys the least evidence.
-    """
+    """All registered operators in driver-rotation order (imports the
+    operator packages on demand)."""
     import ai_dataingestion_spark.operators  # noqa: F401  (self-registers)
 
-    latest = _latest_green_round()
-    fresh = 1 + max(latest.values(), default=0)  # never-attested: back of line
+    latest, certified = _recert_table()
 
     def key(t: tuple[int, QuerySpec]):
         idx, spec = t
-        rank = _rotation_rank(spec)
+        rank = _rotation_rank(spec, latest, certified)
         if rank == 4:
-            return (4, spec.oracle is None, latest.get(spec.name, fresh), idx)
+            return (4, spec.oracle is None, latest[spec.name], idx)
         return (rank, False, 0, idx)
 
     ordered = sorted(enumerate(_REGISTRY.values()), key=key)

@@ -3,8 +3,8 @@
 The driver hash-compares Spark output against a DuckDB oracle, so any
 emitted float must round identically on both engines. Two layers exist:
 
-- ``floor(x * 10^dp + 0.5) / 10^dp`` (the per-module ``_pround`` closures)
-  — ABSOLUTE decimal rounding, right for values whose magnitude is bounded
+- ``pround`` below, ``floor(x * 10^dp + 0.5) / 10^dp`` — ABSOLUTE decimal
+  rounding, right for values whose magnitude is bounded
   by the domain (ratios, probabilities, per-row prices).
 - ``mant_exp_cols`` below — RELATIVE (significant-digit) emission as a
   (mantissa, power-of-ten exponent) column pair, required for values whose
@@ -48,6 +48,32 @@ def mant_exp_cols(col: Column, name: str, dp: int = 6) -> list[Column]:
         .otherwise(mag.cast("int"))
         .alias(f"{name}_exp10"),
     ]
+
+
+def pround(col: Column, dp: int = 6) -> Column:
+    """Portable IEEE rounding floor(x*10^dp + 0.5)/10^dp — bit-identical
+    on both engines (built-in round() diverges on exact decimal ties;
+    see tpch_q2_min_cost_supplier)."""
+    scale = 10**dp
+    return F.floor(col * scale + 0.5) / scale
+
+
+def dec_sum(col: Column) -> Column:
+    """Engine-exact money-product sum: DECIMAL(38,6) accumulation (summation
+    order can flip a rounded 2-dp digit in plain double — measured).
+
+    Returns the DECIMAL sum: callers round in the decimal domain (HALF_UP
+    in both engines, verified at exact .xx5 boundaries) and only THEN cast
+    to double — rounding after the double cast diverges between engines
+    when the exact sum lands on a half-cent boundary (measured:
+    lineitem_abc_pareto at sf0.01, two parts off by a cent each)."""
+    return F.sum(col.cast("decimal(38,6)"))
+
+
+def sql_quote(s: str) -> str:
+    """``s`` as a single-quoted SQL string literal, read identically by
+    Spark SQL and DuckDB."""
+    return "'" + s.replace("'", "''") + "'"
 
 
 # ---------------------------------------------------------------------------

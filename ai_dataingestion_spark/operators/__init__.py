@@ -18,10 +18,6 @@ from ai_dataingestion_spark import sources  # noqa: F401
 from ai_dataingestion_spark import pipeline  # noqa: F401
 from ai_dataingestion_spark import streaming  # noqa: F401
 from ai_dataingestion_spark import plans  # noqa: F401
-
-# Round-2+ additions import LAST: their registration indices append to the
-# end of the rotation order, so they cannot displace the operators queued
-# for the current driver correctness window (catalog._rotation_rank).
 from ai_dataingestion_spark.operators import advanced  # noqa: F401
 from ai_dataingestion_spark.operators import round5  # noqa: F401
 from ai_dataingestion_spark.operators import round5_waves  # noqa: F401

@@ -4,10 +4,6 @@ weighted means), a gap-filled time-series rollup, fuzzy string matching,
 per-label embedding centroids, SCD2 interval building, per-doc keyword
 extraction, and cross-source exact-dup (leakage) detection.
 
-Registered AFTER every round-1 module so these operators append to the end
-of the rotation order and never displace the current driver sweep window
-(catalog._rotation_rank).
-
 Float discipline follows SURVEY.md §5.4: sums of money PRODUCTS go through
 DECIMAL(38,6); quotients (averages, ratios) round at 6 dp; counts and keys
 are exact.
@@ -18,21 +14,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ai_dataingestion_spark.catalog import register
-from ai_dataingestion_spark.functions.portable import stable_sum, stable_sum_sql
+from ai_dataingestion_spark.functions.portable import (
+    dec_sum,
+    stable_sum,
+    stable_sum_sql,
+)
 from ai_dataingestion_spark.scale import broadcast_if_small
 from ai_dataingestion_spark.registry import Tables
-
-
-def _dec_sum(col):
-    """Engine-exact money-product sum: DECIMAL(38,6) accumulation (summation
-    order can flip a rounded 2-dp digit in plain double — measured).
-
-    Returns the DECIMAL sum: callers round in the decimal domain (HALF_UP
-    in both engines, verified at exact .xx5 boundaries) and only THEN cast
-    to double — rounding after the double cast diverges between engines
-    when the exact sum lands on a half-cent boundary (measured:
-    lineitem_abc_pareto at sf0.01, two parts off by a cent each)."""
-    return F.sum(col.cast("decimal(38,6)"))
 
 
 @register(
@@ -59,7 +47,7 @@ def tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("l_discount").between(0.05, 0.07)
         & (F.col("l_quantity") < 24)
     ).agg(
-        F.round(_dec_sum(F.col("l_extendedprice") * F.col("l_discount")), 2).cast("double").alias("revenue"),
+        F.round(dec_sum(F.col("l_extendedprice") * F.col("l_discount")), 2).cast("double").alias("revenue"),
         F.count(F.lit(1)).alias("n_lines"),
     )
 
@@ -151,7 +139,7 @@ def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             "supp_nation", "cust_nation", F.year("l_shipdate").alias("ship_year")
         )
         .agg(
-            F.round(_dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).cast("double").alias("revenue")
+            F.round(dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).cast("double").alias("revenue")
         )
     )
 
@@ -2049,7 +2037,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     rfm = o.groupBy("o_custkey").agg(
         F.unix_micros(F.max("o_orderdate").cast("timestamp")).alias("last_us"),
         F.count(F.lit(1)).alias("freq"),
-        F.round(_dec_sum(F.col("o_totalprice")), 2).cast("double").alias("monetary"),
+        F.round(dec_sum(F.col("o_totalprice")), 2).cast("double").alias("monetary"),
     )
     def score(col: str) -> F.Column:
         return F.ntile(4).over(
@@ -2107,7 +2095,7 @@ def lineitem_abc_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     CASE is engine-stable."""
     li = Tables(spark, sf_dir).lineitem
     rev = li.groupBy("l_partkey").agg(
-        F.round(_dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).cast("double").alias("revenue")
+        F.round(dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).cast("double").alias("revenue")
     )
     w_cum = Window.orderBy(F.col("revenue").desc(), F.col("l_partkey")).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -2124,7 +2112,7 @@ def lineitem_abc_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return classed.groupBy("abc_class").agg(
         F.count(F.lit(1)).alias("n_parts"),
-        F.round(_dec_sum(F.col("revenue")), 2).cast("double").alias("class_revenue"),
+        F.round(dec_sum(F.col("revenue")), 2).cast("double").alias("class_revenue"),
     )
 
 

@@ -27,11 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ai_dataingestion_spark.catalog import register
+from ai_dataingestion_spark.functions.portable import sql_quote
 from ai_dataingestion_spark.registry import SCHEMAS, TABLE_NAMES, register_views
-
-
-def _sql_quote(s: str) -> str:
-    return "'" + s.replace("'", "''") + "'"
 
 
 # DESCRIBE AS JSON renders the type's top-level name ("array" for
@@ -42,14 +39,14 @@ def _json_type_name(simple: str) -> str:
 
 
 _DESCRIBE_VALUES = ",\n  ".join(
-    f"({_sql_quote(t)}, {i}, {_sql_quote(f.name)}, "
-    f"{_sql_quote(_json_type_name(f.dataType.simpleString()))}, true)"
+    f"({sql_quote(t)}, {i}, {sql_quote(f.name)}, "
+    f"{sql_quote(_json_type_name(f.dataType.simpleString()))}, true)"
     for t in TABLE_NAMES
     for i, f in enumerate(SCHEMAS[t].fields)
 )
 
 _SHOW_VALUES = ",\n  ".join(
-    f"({_sql_quote(t)}, true, {len(SCHEMAS[t].fields)})" for t in TABLE_NAMES
+    f"({sql_quote(t)}, true, {len(SCHEMAS[t].fields)})" for t in TABLE_NAMES
 )
 
 

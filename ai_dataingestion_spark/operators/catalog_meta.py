@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ai_dataingestion_spark.catalog import register
+from ai_dataingestion_spark.functions.portable import sql_quote
 from ai_dataingestion_spark.registry import SCHEMAS, TABLE_NAMES, register_views
 
 
@@ -45,17 +46,13 @@ def _declared_rows() -> list[tuple[str, str, str, int]]:
     return rows
 
 
-def _sql_quote(s: str) -> str:
-    return "'" + s.replace("'", "''") + "'"
-
-
 _INVENTORY_VALUES = ",\n  ".join(
-    f"({_sql_quote(t)}, {_sql_quote(c)}, {_sql_quote(dt)}, {i})"
+    f"({sql_quote(t)}, {sql_quote(c)}, {sql_quote(dt)}, {i})"
     for t, c, dt, i in _declared_rows()
 )
 
 _CENSUS_VALUES = ",\n  ".join(
-    f"({_sql_quote(t)}, {_sql_quote(dt)})" for t, _, dt, _ in _declared_rows()
+    f"({sql_quote(t)}, {sql_quote(dt)})" for t, _, dt, _ in _declared_rows()
 )
 
 
@@ -88,7 +85,7 @@ def catalog_meta_columns_inventory(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 _PROFILE_UNION = "\n  UNION ALL ".join(
-    f"SELECT {_sql_quote(t)} AS table_name, "
+    f"SELECT {sql_quote(t)} AS table_name, "
     f"CAST({len(SCHEMAS[t].fields)} AS BIGINT) AS n_columns, "
     f"(SELECT count(*) FROM {t}) AS n_rows"
     for t in TABLE_NAMES
@@ -127,7 +124,7 @@ def catalog_meta_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = spark.sql(
         "SELECT * FROM (\n  "
         + "\n  UNION ALL ".join(
-            f"SELECT {_sql_quote(t)} AS table_name, "
+            f"SELECT {sql_quote(t)} AS table_name, "
             f"(SELECT count(*) FROM {t}) AS n_rows"
             for t in TABLE_NAMES
         )

@@ -28,10 +28,7 @@ distinct.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from ai_dataingestion_spark.catalog import register
-from ai_dataingestion_spark.registry import register_views
+from ai_dataingestion_spark.catalog import sql_op
 
 # Deterministic mixed-case segment: even keys upper, odd keys lower —
 # the corpus stores segments uniformly upper, so the case variance the
@@ -51,21 +48,11 @@ FROM orders
 """
 
 
-def _sql_op(name: str, spark_sql: str, oracle: str, doc: str):
-    def _fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir)
-        return spark.sql(spark_sql)
-
-    _fn.__name__ = name
-    _fn.__doc__ = doc
-    return register(name, oracle=oracle, doc=doc)(_fn)
-
-
 # ---------------------------------------------------------------------------
 # fn_collation_ci_join — case-insensitive equality JOIN keys
 # ---------------------------------------------------------------------------
 
-_sql_op(
+sql_op(
     "fn_collation_ci_join",
     spark_sql=f"""
 WITH fact AS ({_MIXED_SEG}),
@@ -109,7 +96,7 @@ GROUP BY d.sector
 # fn_collation_ci_predicates — CI =, startswith, contains
 # ---------------------------------------------------------------------------
 
-_sql_op(
+sql_op(
     "fn_collation_ci_predicates",
     spark_sql=f"""
 WITH p AS ({_MIXED_PRIO})
@@ -150,7 +137,7 @@ FROM p
 # fn_collation_ci_distinct — DISTINCT under collation
 # ---------------------------------------------------------------------------
 
-_sql_op(
+sql_op(
     "fn_collation_ci_distinct",
     spark_sql=f"""
 WITH p AS ({_MIXED_PRIO})

@@ -4,11 +4,6 @@ market-basket and seasonality analytics, time-series gap fill with LOCF,
 corpus-mixture / Zipf / charset text statistics, duplicate-family
 accounting, and cross-table reconciliation quality checks.
 
-Registered AFTER every earlier module so these operators append to the end
-of the rotation order and never displace the current driver sweep window
-(catalog._rotation_rank) — new IDs are rank-0 and fill the r5 window's
-remaining slots.
-
 Float discipline follows SURVEY.md §5.4: sums of money PRODUCTS go through
 DECIMAL(38,6) and are rounded in the decimal domain before the double
 cast; quotients round at 6 dp on both sides; counts and keys are exact.
@@ -25,11 +20,6 @@ from ai_dataingestion_spark.functions.portable import (
 )
 from ai_dataingestion_spark.scale import broadcast_if_small
 from ai_dataingestion_spark.registry import Tables
-
-
-def _dec_sum(col):
-    """Engine-exact money-product sum (see operators/advanced.py)."""
-    return F.sum(col.cast("decimal(38,6)"))
 
 
 _NET = "(l_extendedprice * (1 - l_discount))"

@@ -9,6 +9,7 @@ from ai_dataingestion_spark.catalog import register
 from ai_dataingestion_spark.functions.portable import (
     grid_sum,
     grid_sum_sql,
+    pround,
 )
 from ai_dataingestion_spark.opcache import op_cache
 from ai_dataingestion_spark.tmpdirs import op_tmpdir
@@ -38,17 +39,7 @@ import glob
 # Round-5 twenty-seventh wave (SURVEY.md §2.Q, continued):
 # difference-in-differences estimation, a Laspeyres price index,
 # sink file-layout auditing, and incremental batch novelty.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
-
-def _pround(col, dp: int = 6):
-    """Portable IEEE rounding floor(x*10^dp + 0.5)/10^dp (see
-    tpch_q2_min_cost_supplier)."""
-    scale = 10**dp
-    return F.floor(col * scale + 0.5) / scale
-
 
 _DID_CUT = "2024-01-15"
 
@@ -140,11 +131,11 @@ def events_diff_in_differences(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return wide.select(
         "n_events",
-        _pround(F.col("t0")).alias("treated_pre"),
-        _pround(F.col("t1")).alias("treated_post"),
-        _pround(F.col("c0")).alias("control_pre"),
-        _pround(F.col("c1")).alias("control_post"),
-        _pround(
+        pround(F.col("t0")).alias("treated_pre"),
+        pround(F.col("t1")).alias("treated_post"),
+        pround(F.col("c0")).alias("control_pre"),
+        pround(F.col("c1")).alias("control_post"),
+        pround(
             (F.col("t1") - F.col("t0")) - (F.col("c1") - F.col("c0"))
         ).alias("did_estimate"),
     )
@@ -214,14 +205,14 @@ def lineitem_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     paired = base.join(cur, "l_partkey")
     num = F.sum(
-        _pround(F.col("p1") * F.col("q0")).cast("decimal(38,6)")
+        pround(F.col("p1") * F.col("q0")).cast("decimal(38,6)")
     ).cast("double")
     den = F.sum(
-        _pround(F.col("p0") * F.col("q0")).cast("decimal(38,6)")
+        pround(F.col("p0") * F.col("q0")).cast("decimal(38,6)")
     ).cast("double")
     return paired.agg(
         F.count(F.lit(1)).alias("n_parts_priced"),
-        _pround(num / den).alias("laspeyres_index"),
+        pround(num / den).alias("laspeyres_index"),
     )
 
 
@@ -338,7 +329,7 @@ def text_batch_novelty_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "batch_distinct_grams",
             "novel_grams",
-            _pround(
+            pround(
                 F.col("novel_grams").cast("double")
                 / F.col("batch_distinct_grams")
             ).alias("novelty_rate"),
@@ -352,9 +343,6 @@ def text_batch_novelty_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # variance reduction, log2 heavy-tail histogram, a composite supplier
 # scorecard, and experiment sample-size calculation — closing the
 # experimentation suite (z-test, Welch t, DiD, CUPED, power).
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 _CUPED_CUT = "2024-01-15"
@@ -455,10 +443,10 @@ def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     mo = per_user.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(_pround(F.col("x")).cast("decimal(38,6)"))
+        F.sum(pround(F.col("x")).cast("decimal(38,6)"))
         .cast("double")
         .alias("sx"),
-        F.sum(_pround(F.col("y")).cast("decimal(38,6)"))
+        F.sum(pround(F.col("y")).cast("decimal(38,6)"))
         .cast("double")
         .alias("sy"),
         F.sum(F.col("x") * F.col("y")).alias("sxy"),
@@ -472,10 +460,10 @@ def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     var_cuped = (cyy - cxy * cxy / cxx) / (F.col("n") - 1)
     return mo.select(
         "n",
-        _pround(cxy / cxx).alias("theta"),
+        pround(cxy / cxx).alias("theta"),
         *mant_exp_cols(var_y, "var_y"),
         *mant_exp_cols(var_cuped, "var_y_cuped"),
-        _pround(1 - (cyy - cxy * cxy / cxx) / cyy).alias(
+        pround(1 - (cyy - cxy * cxy / cxx) / cyy).alias(
             "variance_reduction"
         ),
     )
@@ -581,7 +569,7 @@ def supplier_scorecard_composite(
         F.min("mean_latency").alias("llo"),
         F.max("mean_latency").alias("lhi"),
     )
-    score = _pround(
+    score = pround(
         0.6 * ((F.col("volume") - F.col("vlo")) / (F.col("vhi") - F.col("vlo")))
         + 0.4
         * (
@@ -668,7 +656,7 @@ def events_sample_size_calc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     mo = per_user.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(_pround(F.col("y")).cast("decimal(38,6)"))
+        F.sum(pround(F.col("y")).cast("decimal(38,6)"))
         .cast("double")
         .alias("sy"),
         F.sum(F.col("y") * F.col("y")).alias("syy"),
@@ -695,9 +683,6 @@ def events_sample_size_calc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round-5 twenty-ninth wave (SURVEY.md §2.Q, continued): Population
 # Stability Index drift, the median-of-means robust estimator, and
 # quality-aware dedup representative selection.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 _PSI_CUT = "2024-01-15"
@@ -825,7 +810,7 @@ def quality_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.when(tot_post > 0, tot_post)
         ).alias("q"),
     )
-    term = _pround(
+    term = pround(
         (F.col("p") - F.col("q")) * F.log(F.col("p") / F.col("q")), 9
     ).cast("decimal(38,9)")
     agg = shares.agg(
@@ -834,7 +819,7 @@ def quality_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return agg.select(
         "n_bins",
-        _pround(F.col("psi_raw")).alias("psi"),
+        pround(F.col("psi_raw")).alias("psi"),
         F.when(F.col("psi_raw") >= 0.2, 1)
         .otherwise(0)
         .cast("int")
@@ -893,10 +878,10 @@ def agg_median_of_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     dec = F.col("o_totalprice").cast("decimal(38,2)")
     bucketed = o.select(bkt.alias("bkt"), dec.alias("v"))
     bucket_means = bucketed.groupBy("bkt").agg(
-        _pround(F.sum("v").cast("double") / F.count(F.lit(1))).alias("m")
+        pround(F.sum("v").cast("double") / F.count(F.lit(1))).alias("m")
     )
     overall = bucketed.agg(
-        _pround(F.sum("v").cast("double") / F.count(F.lit(1))).alias(
+        pround(F.sum("v").cast("double") / F.count(F.lit(1))).alias(
             "plain_mean"
         )
     )
@@ -1012,9 +997,6 @@ def dedup_representative_selection(
 # Round-5 thirtieth wave (SURVEY.md §2.Q, continued): moving annual
 # total, session-depth survival, session-gap parameter sensitivity, and
 # token-length histograms.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 @register(
@@ -1159,7 +1141,7 @@ def events_session_depth_survival(
     return ge_k.crossJoin(F.broadcast(tot)).select(
         "k",
         F.col("n_ge_k").cast("bigint").alias("n_sessions_ge_k"),
-        _pround(F.col("n_ge_k").cast("double") / F.col("n_sessions")).alias(
+        pround(F.col("n_ge_k").cast("double") / F.col("n_sessions")).alias(
             "survival"
         ),
     )
@@ -1236,7 +1218,7 @@ def events_session_gap_sensitivity(
             F.expr(
                 "percentile_cont(0.5) WITHIN GROUP (ORDER BY n_events)"
             ).alias("p50_events"),
-            _pround(bounce.cast("double") / F.count(F.lit(1))).alias(
+            pround(bounce.cast("double") / F.count(F.lit(1))).alias(
                 "bounce_rate"
             ),
         ).select(
@@ -1287,9 +1269,6 @@ def text_token_length_histogram(
 # vocabulary rank stability, longest same-type runs (RLE), embedding
 # dimension correlation pairs, and header-driven CSV column
 # reconciliation.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 @register(
@@ -1355,7 +1334,7 @@ def text_rank_stability_spearman(
     rho = 1 - 6.0 * d2 / (n * (n.cast("double") * n - 1))
     return paired.agg(
         n.alias("n_shared_tokens"),
-        _pround(rho).alias("spearman_rho"),
+        pround(rho).alias("spearman_rho"),
         F.max(F.abs(F.col("ra") - F.col("rb")))
         .cast("bigint")
         .alias("max_rank_shift"),
@@ -1418,7 +1397,7 @@ def events_longest_same_type_run(
     return run_lengths.groupBy("event_type").agg(
         F.max("run_len").cast("bigint").alias("longest_run"),
         n.cast("bigint").alias("n_runs"),
-        _pround(F.sum("run_len").cast("double") / n).alias("mean_run_len"),
+        pround(F.sum("run_len").cast("double") / n).alias("mean_run_len"),
     )
 
 
@@ -1499,7 +1478,7 @@ def embed_dim_corr_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("xb") * F.col("xb")).alias("syy"),
         )
     )
-    r = _pround(
+    r = pround(
         (F.col("sxy") - F.col("sx") * F.col("sy") / F.col("n"))
         / F.sqrt(
             (F.col("sxx") - F.col("sx") * F.col("sx") / F.col("n"))
@@ -1573,9 +1552,6 @@ def scan_csv_column_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round-5 thirty-second wave (SURVEY.md §2.Q, continued): week-over-
 # week change contributions, the nation trade-flow matrix, NULL
 # ordering semantics, and the contiguous-prefix resume watermark.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 @register(
@@ -1638,7 +1614,7 @@ def events_wow_change_contributions(
         total.cast("bigint").alias("total_delta"),
         F.when(
             total != 0,
-            _pround(F.col("delta").cast("double") / total.cast("double")),
+            pround(F.col("delta").cast("double") / total.cast("double")),
         ).alias("contribution_share"),
     )
 
@@ -1860,9 +1836,6 @@ def pipeline_resume_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round-5 thirty-third wave (SURVEY.md §2.Q, continued): dedup
 # detector evaluation against injected ground truth, weighted medians,
 # and the top-k vocabulary coverage curve.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 _EVAL_ORACLE = (
@@ -1976,9 +1949,9 @@ def dedup_eval_precision_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_detected",
         "n_truth",
         "n_tp",
-        _pround(prec).alias("precision_vs_truth"),
-        _pround(rec).alias("recall"),
-        _pround(2.0 * prec * rec / (prec + rec)).alias("f1"),
+        pround(prec).alias("precision_vs_truth"),
+        pround(rec).alias("recall"),
+        pround(2.0 * prec * rec / (prec + rec)).alias("f1"),
     )
 
 
@@ -2112,7 +2085,7 @@ def text_topk_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return per_k.select(
         "k",
-        _pround(F.col("cum_k").cast("double") / F.col("tot_k")).alias(
+        pround(F.col("cum_k").cast("double") / F.col("tot_k")).alias(
             "coverage"
         ),
     )
@@ -2123,9 +2096,6 @@ def text_topk_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round-5 thirty-fourth wave (SURVEY.md §2.Q, continued): sweep-line
 # open-order backlog, weighted PageRank over the nation trade graph,
 # categorical mix-shift drift, and contingency-cell residuals.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 @register(
@@ -2343,7 +2313,7 @@ def graph_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(t.nation),
         F.col("nk") == F.col("n_nationkey"),
     ).select(
-        F.col("n_name").alias("nation"), _pround(F.col("r")).alias("pagerank")
+        F.col("n_name").alias("nation"), pround(F.col("r")).alias("pagerank")
     )
 
 
@@ -2507,9 +2477,6 @@ def quality_contingency_residuals(spark: SparkSession, sf_dir: str) -> DataFrame
 # Round-5 thirty-fifth wave (SURVEY.md §2.Q, continued): skyline
 # (Pareto-optimal set) via sort + running max, Theil inequality-index
 # decomposition, and rolling bivariate correlation.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 @register(
@@ -2762,9 +2729,6 @@ def events_rolling_corr_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round-5 thirty-sixth wave (SURVEY.md §2.Q, continued):
 # content-defined chunking dedup, categorical-column entropy profiling,
 # and inter-arrival burstiness from exact integer moment sums.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 # Expected chunk length = modulus tokens; 8 keeps chunks long enough to
@@ -3062,9 +3026,6 @@ def events_interarrival_burstiness(
 # Round-5 thirty-seventh wave (SURVEY.md §2.Q, continued): customer
 # segment migration, Kaplan–Meier survival with censoring, and a
 # deterministic Poisson-bootstrap confidence interval.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 _SPLIT_DATE = "1998-01-01"
@@ -3359,9 +3320,6 @@ def agg_bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round-5 thirty-eighth wave (SURVEY.md §2.Q, continued): embedding
 # prefix-energy (Matryoshka truncation) analysis, Wilson proportion CIs,
 # and a three-strategy join-equivalence proof.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 _PREFIX_KS = (8, 16, 32, 64)
@@ -3568,9 +3526,6 @@ def join_strategy_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round-5 thirty-ninth wave (SURVEY.md §2.Q, continued): epsilon
 # similarity join on scalars without a cartesian, time-interval RANGE
 # frames, and dynamic partition overwrite semantics.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 _EPS = 5.0
@@ -3809,9 +3764,6 @@ def sink_dynamic_partition_overwrite(
 # Round-5 fortieth wave (SURVEY.md §2.Q, continued): foreachBatch
 # streaming UPSERT (merge, not append), stratified-sampling estimator
 # variance, and a p-chart attribute control chart.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 @register(
@@ -4108,9 +4060,6 @@ def events_pchart_error_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round-5 forty-first wave (SURVEY.md §2.Q, continued): leakage-safe
 # point-in-time feature assembly, closed-form sign-binarized Hamming
 # separation, and hierarchical share-of-parent rollups.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 _WEEK_S = 7 * 24 * 3600
@@ -4400,9 +4349,6 @@ def orders_hierarchy_share_of_parent(
 # Round-5 forty-second wave (SURVEY.md §2.Q, continued): Markov
 # entropy rate of the event stream, product-quantization reconstruction
 # error, and compressed-CSV round-trip interop.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 @register(
@@ -4655,9 +4601,6 @@ def sink_csv_gzip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round-5 forty-third wave (SURVEY.md §2.Q, continued): a trained
 # Naive-Bayes source classifier evaluated on a held-out split, classical
 # additive seasonal decomposition, and nested-JSON round-trip parity.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 # Train/test assignment: first md5 hex nibble of the salted doc id
@@ -5030,9 +4973,6 @@ def fn_json_nested_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round-5 forty-fourth wave (SURVEY.md §2.Q, continued): cohort
 # fulfillment vintage curves, higher-order array reduction (Horner), and
 # circular (directional) time-of-day statistics.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 @register(
@@ -5229,9 +5169,6 @@ def events_circular_time_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round-5 forty-fifth wave (SURVEY.md §2.Q, continued): leave-one-out
 # outlier scoring via window-frame arithmetic and a cube margin
 # consistency proof.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 @register(
@@ -5365,9 +5302,6 @@ def agg_cube_margin_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round-5 forty-sixth wave (SURVEY.md §2.Q, continued): sample-ratio
 # mismatch guard, functional-dependency discovery, and a temporal
 # coverage inventory.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 _CHI2_95_DF1 = 3.841458820694124
@@ -5577,9 +5511,6 @@ def catalog_temporal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round-5 forty-seventh wave (SURVEY.md §2.Q, continued): Simpson's
 # paradox reversal detection and column-level change-data-capture
 # breakdown.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 _SEG_A = "BUILDING"
@@ -5775,9 +5706,6 @@ def pipeline_cdc_column_breakdown(
 # wave module round6v (formerly operators/round6v.py)
 # Round-5 forty-eighth wave (SURVEY.md §2.Q, continued): portable
 # order-independent table-content fingerprints.
-#
-# Deferred to the r6 driver window (catalog._DEFER_TO_NEXT_ROUND);
-# locally oracle-verified at sf0.01 + sf0.001.
 # ===========================================================================
 
 # Canonical row text per table: every column rendered through a type

@@ -1,32 +1,23 @@
-"""Compute (never narrate) the driver-window rotation plan.
+"""Compute the driver-window rotation plan and audit its bookkeeping.
 
 Usage:
     python scripts/rotation_plan.py           # report + consistency audit
     python scripts/rotation_plan.py --write   # regenerate recert_order.json
 
-The driver hash-checks only the FIRST 50 entries of queries() per round, so
-registration order is the coverage rotation knob (catalog._rotation_rank).
-catalog.py's prose comments drifted twice (ADVICE-r7 item 4, VERDICT-r8
-"What's wrong" 1) when these numbers were hand-maintained; this script is the
-single source of truth. It derives the plan from the live registry plus the
-CORRECTNESS_r*.json evidence files and prints:
+The driver hash-checks only the first 50 entries of queries() per round, in
+the order catalog.all_specs() computes (rank table in catalog.py). A driver
+row is green when rows, schema and hash match with no error, or when it is a
+rows-only ``no_oracle`` row that recorded a row count.
 
-  - total registered operators and evidence attested so far,
-  - the pending backlog (IDs with no driver row yet), split by rotation rank,
-  - the exact 50-ID window the driver will sweep next round,
-  - how many further windows the remaining tail needs,
-  - any DISAGREEMENT between _DRIVER_CHECKED and the CORRECTNESS files
-    (an ID green in a file but not folded, or folded without a green row).
+--write folds the repo-root CORRECTNESS_r*.json files into
+ai_dataingestion_spark/recert_order.json: every ID's latest green round and,
+for each ID whose latest green round advanced, the fingerprint of its current
+code; other IDs keep the fingerprint already recorded. Run it right after a
+driver round's CORRECTNESS file is committed, before the code changes again.
 
-Round 11 (VERDICT-r10 item 1): with the backlog at 0, the window flips to
-STALENESS-ORDERED RE-CERTIFICATION — attested-green IDs are swept oldest
-latest-evidence first (r1/r2 vintage before r9/r10). The staleness table
-lives in ai_dataingestion_spark/recert_order.json so catalog.py never reads
-repo-root artifacts at runtime; --write regenerates it from the CORRECTNESS
-files, and the default (verify) mode exits 1 if the packaged table disagrees
-with the files (stale table => mis-planned window).
-
-Exit code 0 iff bookkeeping is consistent (no disagreement lines).
+The default mode prints the backlog (IDs with no green row) and the next
+50-ID window, and exits 1 if the packaged table disagrees with the
+CORRECTNESS files or a prose operator count disagrees with the registry.
 """
 
 from __future__ import annotations
@@ -39,152 +30,94 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-RECERT_PATH = REPO / "ai_dataingestion_spark" / "recert_order.json"
 
-
-def correctness_greens() -> dict[str, str]:
-    """ID -> latest round file that attested it (rows+schema match, no err).
-
-    Hash-green and rows-only-by-design rows both count: a rows-only driver
-    row IS the driver's evidence for oracle-less operators (hash_match is
-    null there, never false).
-    """
-    greens: dict[str, str] = {}
-    for path in sorted(REPO.glob("CORRECTNESS_r*.json")):
-        rows = json.loads(path.read_text())
-        for qid, row in rows.items():
-            hash_green = (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match") is not False
-                and row.get("err") is None
-            )
-            # rows-only-by-design driver row: no oracle, but the driver ran
-            # the Spark query and recorded a non-null row count.
-            rows_only = (
-                row.get("err") == "no_oracle"
-                and row.get("spark_rows") is not None
-                and row.get("spark_rows") >= 0
-            )
-            if hash_green or rows_only:
-                greens[qid] = path.name
-    return greens
+def is_green(row: dict) -> bool:
+    if row.get("err") == "no_oracle":
+        return row.get("spark_rows") is not None and row["spark_rows"] >= 0
+    return bool(
+        row.get("rows_match")
+        and row.get("schema_match")
+        and row.get("hash_match") is not False
+        and row.get("err") is None
+    )
 
 
 def latest_green_round() -> dict[str, int]:
-    """ID -> the highest round NUMBER whose CORRECTNESS file attested it."""
+    """ID -> the highest round number whose CORRECTNESS file has it green."""
     latest: dict[str, int] = {}
-    for path in sorted(REPO.glob("CORRECTNESS_r*.json")):
-        m = re.search(r"r(\d+)", path.name)
-        rnd = int(m.group(1)) if m else 0
-        rows = json.loads(path.read_text())
-        for qid, row in rows.items():
-            green = (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match") is not False
-                and row.get("err") is None
-            )
-            rows_only = (
-                row.get("err") == "no_oracle"
-                and row.get("spark_rows") is not None
-                and row.get("spark_rows") >= 0
-            )
-            if green or rows_only:
+    for path in REPO.glob("CORRECTNESS_r*.json"):
+        rnd = int(re.search(r"r(\d+)", path.name).group(1))
+        for qid, row in json.loads(path.read_text()).items():
+            if is_green(row):
                 latest[qid] = max(latest.get(qid, 0), rnd)
     return latest
 
 
 def write_recert_table() -> dict[str, int]:
-    latest = latest_green_round()
-    RECERT_PATH.write_text(
-        json.dumps(
-            {
-                "_comment": (
-                    "Generated by scripts/rotation_plan.py --write from the "
-                    "repo-root CORRECTNESS_r*.json files; consumed by "
-                    "catalog.all_specs() to staleness-order the attested-"
-                    "green rotation tail. Regenerate after each driver round."
-                ),
-                "latest_green_round": dict(sorted(latest.items())),
-            },
-            indent=1,
-        )
-        + "\n"
+    from ai_dataingestion_spark.catalog import (
+        _RECERT_PATH,
+        _recert_table,
+        all_specs,
+        fingerprint,
     )
+
+    specs = all_specs()
+    old_latest, certified = _recert_table()
+    latest = latest_green_round()
+    for qid, rnd in latest.items():
+        if qid in specs and rnd > old_latest.get(qid, 0):
+            certified[qid] = fingerprint(specs[qid])
+    table = {
+        "_comment": "Generated by scripts/rotation_plan.py --write.",
+        "latest_green_round": dict(sorted(latest.items())),
+        "certified_fingerprint": dict(sorted(certified.items())),
+    }
+    _RECERT_PATH.write_text(json.dumps(table, indent=1) + "\n")
     return latest
 
 
 def main(argv: list[str]) -> int:
     if "--write" in argv:
         latest = write_recert_table()
-        print(f"wrote {RECERT_PATH} ({len(latest)} IDs)")
+        print(f"wrote recert_order.json ({len(latest)} IDs)")
         return 0
 
-    from ai_dataingestion_spark.catalog import (
-        _DRIVER_CHECKED,
-        _latest_green_round,
-        _rotation_rank,
-        all_specs,
-    )
+    from ai_dataingestion_spark.catalog import _recert_table, _rotation_rank, all_specs
 
     specs = all_specs()
     names = list(specs)
-    greens = correctness_greens()
-    # Pending = no green file evidence (VERDICT-r9 item 4) — NOT "not yet
-    # folded into _DRIVER_CHECKED"; folding lag is reported separately by
-    # the consistency audit below.
-    pending = [n for n in names if n not in greens]
+    latest = latest_green_round()
+    packaged_latest, certified = _recert_table()
+    changed = {
+        n for n in names
+        if _rotation_rank(specs[n], packaged_latest, certified) == 1
+    }
+    pending = [n for n in names if n not in latest]
     window = names[:50]
-    windows_left = -(-len(pending) // 50)  # ceil
-
-    latest_files = latest_green_round()
-    latest_packaged = _latest_green_round()
 
     print(f"registered operators : {len(names)}")
-    print(f"attested green (files): {len(set(greens) & set(names))}")
-    print(f"_DRIVER_CHECKED size : {len(_DRIVER_CHECKED)}")
-    print(f"pending backlog      : {len(pending)}  (~{windows_left} window(s) at 50/round)")
-    by_rank: dict[int, int] = {}
-    for n in pending:
-        by_rank[_rotation_rank(specs[n])] = by_rank.get(_rotation_rank(specs[n]), 0) + 1
-    print(f"pending by rank      : {dict(sorted(by_rank.items()))}")
+    print(f"attested green (files): {len(set(latest) & set(names))}")
+    print(f"pending backlog      : {len(pending)}  (~{-(-len(pending) // 50)} window(s) at 50/round)")
+    print(f"code changed since green: {len(changed)}")
     print("\nnext driver window (first 50 of queries()):")
     for i, n in enumerate(window):
-        # "pending" means NO green file evidence exists (VERDICT-r9 item 4):
-        # an ID whose green row landed but isn't folded into _DRIVER_CHECKED
-        # yet is labeled distinctly so the plan never contradicts evidence.
-        if n in greens:
-            rank = _rotation_rank(specs[n])
-            if rank >= 4:
-                tag = f"re-certify(last green r{latest_files.get(n, 0)})"
-            elif rank == 1:
-                tag = f"re-check(stale contract, last green r{latest_files.get(n, 0)})"
-            else:
-                tag = "green-unfolded"
-        else:
+        if n not in latest:
             tag = "pending"
+        elif n in changed:
+            tag = f"re-check(code changed since green r{latest[n]})"
+        else:
+            tag = f"re-certify(last green r{latest[n]})"
         print(f"  {i + 1:2d}. {n}  [{tag}]")
-    if len(pending) > 50:
-        print(f"\ntail after this window ({len(pending) - 50} IDs):")
-        for n in pending[50:] if pending[:50] == window else [p for p in pending if p not in window]:
+    tail = [n for n in pending if n not in window]
+    if tail:
+        print(f"\npending after this window ({len(tail)} IDs):")
+        for n in tail:
             print(f"  - {n}")
 
-    # Consistency audit: the evidence ledgers must agree.
     problems = []
-    for qid, src in sorted(greens.items()):
-        if qid in specs and qid not in _DRIVER_CHECKED:
-            problems.append(f"UNFOLDED: {qid} green in {src} but not in _DRIVER_CHECKED")
-    for qid in sorted(_DRIVER_CHECKED):
-        if qid not in greens:
-            problems.append(f"UNATTESTED: {qid} in _DRIVER_CHECKED but no green CORRECTNESS row")
-        if qid not in specs:
-            problems.append(f"UNREGISTERED: {qid} in _DRIVER_CHECKED but not in the registry")
-    # Ledger audit (VERDICT-r14 item 4 — SURVEY.md:1333 drifted by one when
-    # the prose sum was hand-maintained): every PROSE operator count must
-    # equal the live registry. Checked: README's "**N registered operators**"
-    # headline, tests/test_oracle_parity.py's TOTAL_OPERATORS constant, and
-    # the LAST "→ N registered" round-outcome line in SURVEY.md §7.2.
+    # Every prose operator count must equal the live registry: README's
+    # "**N registered operators**" headline, tests/test_oracle_parity.py's
+    # TOTAL_OPERATORS, and the last "→ N registered" line in SURVEY.md §7.2.
     n = len(names)
     readme = (REPO / "README.md").read_text()
     m = re.search(r"\*\*(\d+) registered operators\*\*", readme)
@@ -207,14 +140,13 @@ def main(argv: list[str]) -> int:
             f"LEDGER: SURVEY.md's last round-outcome line says "
             f"→ {arrows[-1] if arrows else '??'} registered, registry has {n}"
         )
-    # Staleness-table audit: the packaged recert_order.json must match what
-    # the CORRECTNESS files say, else the driver window re-certifies the
-    # wrong IDs. (Only IDs in the registry matter.)
-    for qid in sorted(set(latest_files) & set(specs)):
-        if latest_packaged.get(qid) != latest_files[qid]:
+    # The packaged table must match the CORRECTNESS files, else the window
+    # re-certifies the wrong IDs. (Only IDs in the registry matter.)
+    for qid in sorted(set(latest) & set(specs)):
+        if packaged_latest.get(qid) != latest[qid]:
             problems.append(
                 f"STALE-TABLE: {qid} recert_order.json says "
-                f"r{latest_packaged.get(qid)} but files say r{latest_files[qid]} "
+                f"r{packaged_latest.get(qid)} but files say r{latest[qid]} "
                 "(run: python scripts/rotation_plan.py --write)"
             )
     if problems:
@@ -222,8 +154,8 @@ def main(argv: list[str]) -> int:
         for p in problems:
             print(f"  {p}")
         return 1
-    print("\nbookkeeping consistent: _DRIVER_CHECKED == CORRECTNESS greens"
-          " == recert_order.json")
+    print("\nbookkeeping consistent: recert_order.json == CORRECTNESS greens,"
+          " prose counts == registry")
     return 0
 
 

@@ -60,73 +60,57 @@ def test_oracle_outputs_are_scalar_only(spark, sf_small):
     assert not violations, f"non-scalar oracle-compared columns: {violations}"
 
 
+def _rotation():
+    """(ID -> latest green round, ID -> rotation rank) for the live registry."""
+    from ai_dataingestion_spark.catalog import _recert_table, _rotation_rank
+
+    latest, certified = _recert_table()
+    return latest, {n: _rotation_rank(s, latest, certified) for n, s in SPECS.items()}
+
+
 def test_driver_window_rotation():
     """The driver hash-checks only the FIRST 50 entries of queries() per
-    round; registration order is the coverage rotation. Round-5 invariants:
-    ordering follows the rotation rank exactly; every not-yet-green ID
-    (rank < 4) lands inside the 50-slot window while such IDs fit (so no
-    pending evidence is stranded behind attested-green entries); and any
-    attested-green entry in the window appears only after all pending ones.
-    """
-    from ai_dataingestion_spark.catalog import (
-        _DRIVER_CHECKED,
-        _EVENTS_RECHECK,
-        _rotation_rank,
-    )
-
+    round. The order follows the rotation rank exactly; every ID without a
+    green row (rank < 4) lands inside the 50-slot window while such IDs fit;
+    green entries in the window only fill slots the pending ones leave; and
+    re-checks of changed code (rank 1) are oracle-backed."""
+    latest, ranks = _rotation()
     names = list(SPECS)
     assert len(names) == TOTAL_OPERATORS
-    ranks = [_rotation_rank(SPECS[n]) for n in names]
-    assert ranks == sorted(ranks)
+    assert [ranks[n] for n in names] == sorted(ranks.values())
 
     window = names[:50]
-    pending = [n for n in names if _rotation_rank(SPECS[n]) < 4]
+    pending = [n for n in names if ranks[n] < 4]
     if len(pending) <= 50:
         assert set(pending) <= set(window), "pending ID stranded outside window"
     else:
-        assert all(_rotation_rank(SPECS[n]) < 4 for n in window)
-    # every re-check ID must be oracle-backed, else re-checking is pointless
-    for n in _EVENTS_RECHECK:
-        assert SPECS[n].oracle is not None, f"{n} recheck without oracle"
-    # green entries only fill window slots left over after pending ones
+        assert all(ranks[n] < 4 for n in window)
+    for n in names:
+        if ranks[n] == 1:
+            assert SPECS[n].oracle is not None, f"{n} re-check without oracle"
     for n in window:
-        if n in _DRIVER_CHECKED and n not in _EVENTS_RECHECK:
+        if ranks[n] == 4:
             assert len(pending) < 50
-    # Backlog bookkeeping pin (ADVICE r7 item 4): the hand-maintained
-    # rotation comments plan driver windows from this count — assert it so
-    # an off-by-one in _DRIVER_CHECKED / _DEFER_TO_NEXT_ROUND maintenance is
-    # caught by pytest, not by a mis-planned window. Update alongside
-    # TOTAL_OPERATORS each round: backlog = total - attested-green.
-    EXPECTED_BACKLOG = 0  # r16 block's 11 IDs went green in CORRECTNESS_r16 and are folded; no new operators this optimization round (rank-1 entries are re-checks, not backlog)
-    # _EVENTS_RECHECK members rank <4 to claim window slots, but they HAVE
-    # driver evidence (it's merely stale) — they are re-checks, not backlog.
-    first_time = [n for n in pending if n not in _EVENTS_RECHECK]
+    # Backlog pin: IDs with no green driver row at all (a rank-1 re-check
+    # has one, it is only outdated). Update alongside TOTAL_OPERATORS.
+    EXPECTED_BACKLOG = 0
+    first_time = [n for n in names if n not in latest]
     assert len(first_time) == EXPECTED_BACKLOG, (
-        f"rotation backlog {len(first_time)} != planned {EXPECTED_BACKLOG}; "
-        "update _DRIVER_CHECKED (fold the new CORRECTNESS greens) and this pin"
+        f"rotation backlog {len(first_time)} != planned {EXPECTED_BACKLOG}: "
+        f"{first_time[:5]}"
     )
 
 
 def test_recertification_window_is_staleness_ordered():
-    """Round-11 rotation (VERDICT-r10 item 1): with the backlog at 0, the
-    attested-green tail is ordered oldest-latest-evidence first, from the
-    packaged recert_order.json (regenerated each round by
-    `scripts/rotation_plan.py --write`). Pins: (a) the table exists and
-    covers every registered ID, (b) oracle-backed rank-4 entries are
-    non-decreasing in latest-green round, (c) rows-only IDs never precede
-    oracle-backed ones inside rank 4 (their driver check is weakest)."""
-    from ai_dataingestion_spark.catalog import (
-        _latest_green_round,
-        _rotation_rank,
-    )
-
-    latest = _latest_green_round()
+    """Rank-4 (green, code unchanged) entries re-certify oldest evidence
+    first: (a) recert_order.json exists, (b) oracle-backed rank-4 entries
+    are non-decreasing in latest-green round, (c) rows-only IDs never
+    precede oracle-backed ones inside rank 4 (their driver check is
+    weakest)."""
+    latest, ranks = _rotation()
     assert latest, "recert_order.json missing or empty"
-    names = list(SPECS)
-    missing = [n for n in names if n not in latest and _rotation_rank(SPECS[n]) >= 4]
-    assert not missing, f"attested IDs missing from recert_order.json: {missing[:5]}"
 
-    rank4 = [n for n in names if _rotation_rank(SPECS[n]) >= 4]
+    rank4 = [n for n in SPECS if ranks[n] == 4]
     oracle_tail = [n for n in rank4 if SPECS[n].oracle is not None]
     rounds = [latest[n] for n in oracle_tail]
     assert rounds == sorted(rounds), "oracle-backed recert tail not staleness-ordered"

@@ -1,0 +1,95 @@
+"""Driver-rotation bookkeeping: the packaged recert_order.json agrees with
+the CORRECTNESS files, and a code fingerprint moves exactly the operators
+whose code changed to the re-check rank."""
+
+from __future__ import annotations
+
+import json
+import os
+import subprocess
+import sys
+from pathlib import Path
+
+import pytest
+
+from ai_dataingestion_spark import catalog, registry, tmpdirs
+from ai_dataingestion_spark.ai import dedup
+
+REPO = Path(__file__).resolve().parent.parent
+SPECS = catalog.all_specs()
+
+
+def test_rotation_plan_audit_passes(capsys):
+    """A committed CORRECTNESS file without `rotation_plan.py --write`
+    leaves the table stale; that must fail here, not mis-plan a window."""
+    from scripts import rotation_plan
+
+    assert rotation_plan.main([]) == 0, capsys.readouterr().out
+
+
+@pytest.fixture(scope="module")
+def certified():
+    """Every operator certified at round 1 on the code as it is now."""
+    return {n: catalog.fingerprint(s) for n, s in SPECS.items()}
+
+
+def _ranks(certified: dict[str, str]) -> dict[str, int]:
+    latest = dict.fromkeys(SPECS, 1)
+    return {
+        n: catalog._rotation_rank(s, latest, certified, catalog.fingerprint)
+        for n, s in SPECS.items()
+    }
+
+
+def test_unchanged_code_ranks_behind_everything(certified):
+    assert set(_ranks(certified).values()) == {4}
+
+
+@pytest.mark.parametrize(
+    "module, name, value, moved",
+    [
+        (dedup, "_minhash_band_bucket", lambda prefix, b: "0", "dedup_near_minhash"),
+        # reached through a function-local import in round5_waves
+        (dedup, "_cw_sig_agg_exprs", lambda: [],
+         "dedup_near_minhash dedup_eval_precision_recall"),
+        (dedup, "_SHINGLES_EXPR", "array()",
+         "dedup_eval_precision_recall dedup_minhash_estimate_error "
+         "dedup_near_minhash dedup_ngram_jaccard text_containment_pairs "
+         "text_shingle_df_cap_loss text_shingle_df_spectrum"),
+        # run-time state: a global op_tmpdir rebinds, and a cache dict
+        (tmpdirs, "_ROOT", "/elsewhere", ""),
+        (registry, "_events_ts_unit", {("a",): "ns"}, ""),
+    ],
+    ids=["helper", "helper-local-import", "module-sql-constant",
+         "rebound-global", "cache-dict"],
+)
+def test_changed_dependency_moves_exactly_its_operators(
+    certified, monkeypatch, module, name, value, moved
+):
+    monkeypatch.setattr(module, name, value)
+    assert _ranks(certified) == {n: 1 if n in moved.split() else 4 for n in SPECS}
+
+
+def test_changed_factory_closure_sql_moves_one_operator(certified, monkeypatch):
+    fn = SPECS["fn_listagg_within_group"].fn.__wrapped__
+    cell = fn.__closure__[fn.__code__.co_freevars.index("stmts")]
+    monkeypatch.setattr(cell, "cell_contents", ("SELECT 1 AS x",))
+    assert _ranks(certified) == {
+        n: 1 if n == "fn_listagg_within_group" else 4 for n in SPECS
+    }
+
+
+def test_fingerprint_depends_on_code_only(certified):
+    """A fresh process with another hash seed agrees with this one, whatever
+    operators this process has run before."""
+    code = (
+        "import json; from ai_dataingestion_spark import catalog; "
+        "print(json.dumps({n: catalog.fingerprint(s) "
+        "for n, s in catalog.all_specs().items()}))"
+    )
+    env = dict(os.environ, PYTHONHASHSEED="12345", PYTHONPATH=str(REPO))
+    out = subprocess.run(
+        [sys.executable, "-c", code], env=env, cwd=REPO,
+        capture_output=True, text=True, check=True,
+    ).stdout
+    assert json.loads(out) == certified
