@@ -9,15 +9,29 @@ Scale posture: every near-dup algorithm here is candidate-generation via a
 key-equality join (LSH band bucket / simhash chunk / rare shingle) followed
 by exact verification on the candidate pairs only. Nothing is O(n²) over the
 corpus; the shuffles are on bucket keys.
+
+The near-dup family shares one definition of each pipeline step: a Spark
+builder and the DuckDB twin its oracles are written with. They are the
+shingled-docs relation (_shingled_docs / _shingled_cte), the Carter-Wegman
+signature (_minhash_signature / _SIG_CTE), the 8×4 LSH band → candidate →
+exact-Jaccard ≥ 0.6 chain (_minhash_near_pairs / _LSH_CAND_CTES +
+_LSH_VERIFY_SQL), and the exact-Jaccard expression (_n_common, _jaccard /
+_DUCK_N_COMMON, _DUCK_JACCARD).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ai_dataingestion_spark.catalog import register
+from ai_dataingestion_spark.functions.portable import pround
 from ai_dataingestion_spark.opcache import op_cache
 from ai_dataingestion_spark.registry import Tables
+from ai_dataingestion_spark.scale import (
+    ARRAY_TABLE_BYTES as _ARRAY_GATE,
+    bounded_self_join,
+    hint_array_side,
+)
 
 # MinHash constants (FIXTURES.md): 3-token shingles, 32 seeds, 8 bands x 4 rows.
 SHINGLE_K = 3
@@ -26,6 +40,7 @@ N_BANDS = 8
 ROWS_PER_BAND = 4
 
 _DUP_OFFSET = 1_000_000
+_NEAR_OFFSET = 2_000_000  # dedup_removal_plan: near copies beside exact ones
 
 
 def _corpus_with_exact_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -37,40 +52,139 @@ def _corpus_with_exact_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.unionByName(dups)
 
 
-def _corpus_with_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents ∪ near-copies of every 5th doc (last token dropped) —
-    Jaccard vs the original ≈ (n-3)/n on 3-token shingles, well above any
-    near-dup threshold for realistic lengths."""
-    d = Tables(spark, sf_dir).documents.select("doc_id", "text")
+def _near_copies(d: DataFrame, offset: int = _DUP_OFFSET) -> DataFrame:
+    """Near-copies of every 5th doc of a (doc_id, text) frame, ids shifted
+    by ``offset``, last token dropped — Jaccard vs the original ≈ (n-3)/n
+    on 3-token shingles, well above any near-dup threshold for realistic
+    lengths."""
     toks = F.split("text", " ")
     # The >= 2 guard pins the degenerate case: dropping a single-token
     # document's only token leaves NO text — Spark's array_join([]) is ''
     # but the oracles' array_to_string([]) is NULL, so without the guard
     # the two engines disagree on whether the mutated doc exists at all
     # (found by the null tier via its empty-text rows).
-    mutated = d.filter(F.col("doc_id") % 5 == 0).select(
-        (F.col("doc_id") + _DUP_OFFSET).alias("doc_id"),
+    return d.filter(F.col("doc_id") % 5 == 0).select(
+        (F.col("doc_id") + offset).alias("doc_id"),
         F.when(
             F.size(toks) >= 2,
             F.array_join(F.slice(toks, 1, F.size(toks) - 1), " "),
         ).alias("text"),
     )
-    return d.unionByName(mutated)
 
 
-# The explicit NULL branch is load-bearing: Spark's size(NULL) is -1 (legacy
-# sizeOfNull) and concat_ws(' ', NULL) is '' — without it a NULL document
-# mints the [''] shingle set, identical signatures, and every NULL doc pairs
-# with every other (found by the null-injected tier: 238 phantom pairs).
-# DuckDB's list ops NULL-propagate, so the oracles already exclude them.
-_SHINGLES_EXPR = f"""
-CASE WHEN toks IS NULL THEN NULL
-     ELSE array_distinct(transform(
-       sequence(1, greatest(size(toks) - {SHINGLE_K - 1}, 1)),
-       i -> concat_ws(' ', slice(toks, i, {SHINGLE_K}))
-     ))
-END
-"""
+def _corpus_with_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents ∪ _near_copies of every 5th doc (ids offset by 1e6)."""
+    d = Tables(spark, sf_dir).documents.select("doc_id", "text")
+    return d.unionByName(_near_copies(d))
+
+
+# DuckDB twin of _corpus_with_near_dups, as (doc_id, toks).
+_NEAR_CORPUS_CTE = f"""corpus AS (
+  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
+  UNION ALL
+  SELECT doc_id + {_DUP_OFFSET},
+         list_slice(string_split(text, ' '), 1, len(string_split(text, ' ')) - 1)
+  FROM documents WHERE doc_id % 5 = 0
+)"""
+
+
+def _shingles_sql(each: str = "{}", distinct: bool = True) -> str:
+    """Spark SQL over a ``toks`` array column: its SHINGLE_K-token shingles
+    (one shingle when the document is shorter), each passed through the
+    ``each`` format string, de-duplicated when ``distinct``.
+
+    The explicit NULL branch is load-bearing: Spark's size(NULL) is -1
+    (legacy sizeOfNull) and concat_ws(' ', NULL) is '' — without it a NULL
+    document mints the [''] shingle set, identical signatures, and every
+    NULL doc pairs with every other (found by the null-injected tier: 238
+    phantom pairs). DuckDB's list ops NULL-propagate, so the oracles
+    already exclude them."""
+    shingle = each.format(f"concat_ws(' ', slice(toks, i, {SHINGLE_K}))")
+    arr = (
+        f"transform(sequence(1, greatest(size(toks) - {SHINGLE_K - 1}, 1)), "
+        f"i -> {shingle})"
+    )
+    if distinct:
+        arr = f"array_distinct({arr})"
+    return f"CASE WHEN toks IS NULL THEN NULL ELSE {arr} END"
+
+
+_SHINGLES_EXPR = _shingles_sql()
+
+# DuckDB twin of one shingle: tokens i .. i + SHINGLE_K - 1 of ``toks``.
+_DUCK_SHINGLE = f"array_to_string(list_slice(toks, i, i + {SHINGLE_K - 1}), ' ')"
+
+
+def _shingled_docs(corpus: DataFrame) -> DataFrame:
+    """(doc_id, shingles) of a (doc_id, text) corpus, persisted through
+    op_cache. Every consumer reads it more than once (signature build,
+    index, both verify sides), and exploding a generator whose input is the
+    shingle transform over an uncached corpus re-evaluates the tokenization
+    pathologically (60+ s/pass vs 0.3 s from cache on the extremes tier's
+    100k-char documents)."""
+    return (
+        corpus.withColumn("toks", F.split("text", " "))
+        .selectExpr("doc_id", f"{_SHINGLES_EXPR} AS shingles")
+        .transform(op_cache)
+    )
+
+
+# (doc_id, toks) of the documents table, a _shingled_cte source.
+_DOCS_TOKS_SQL = "(SELECT doc_id, string_split(text, ' ') AS toks FROM documents)"
+
+
+def _shingled_cte(source: str = "corpus") -> str:
+    """DuckDB twin of _shingled_docs: the ``shingled`` CTE over ``source``,
+    a relation of (doc_id, toks). The split stays in ``source``, outside
+    the lambda: inlined, DuckDB re-splits the text per shingle —
+    O(tokens × chars), 33-66 s on 100k-char documents."""
+    return f"""shingled AS MATERIALIZED (
+  SELECT doc_id,
+         list_distinct(list_transform(
+           range(1, greatest(len(toks) - {SHINGLE_K - 2}, 2)),
+           i -> {_DUCK_SHINGLE}
+         )) AS shingles
+  FROM {source}
+)"""
+
+
+def _with_shingle_sets(
+    pairs: DataFrame,
+    docs: DataFrame,
+    sf_dir: str,
+    ids: tuple[str, str] = ("id1", "id2"),
+) -> DataFrame:
+    """``pairs`` with the shingle arrays of its two ``ids`` columns
+    attached as sh1 and sh2. hint_array_side (scale.py): the shingle-ARRAY
+    relation must never be estimator-driven — Catalyst sizes a narrow
+    projection of the cached table and under-counts the arrays (measured
+    at 10x sf0.1: a driver-OOM broadcast build). Shuffle-hash while
+    documents is provably tiny, spillable sort-merge once it is not (SHJ
+    builds can't spill — the sfx1.0 can't-acquire class)."""
+    for key, sh in zip(ids, ("sh1", "sh2")):
+        side = docs.select(F.col("doc_id").alias(key), F.col("shingles").alias(sh))
+        pairs = pairs.join(hint_array_side(side, sf_dir, "documents"), key)
+    return pairs
+
+
+def _n_common() -> Column:
+    """|sh1 ∩ sh2|: shingles two attached sets share (both are distinct)."""
+    return F.size(F.array_intersect("sh1", "sh2"))
+
+
+def _jaccard() -> Column:
+    """Exact Jaccard of the attached shingle sets sh1 and sh2."""
+    return _n_common().cast("double") / F.size(F.array_union("sh1", "sh2")).cast(
+        "double"
+    )
+
+
+# DuckDB twins of _n_common and _jaccard over shingled rows s1 and s2.
+_DUCK_N_COMMON = "len(list_filter(s1.shingles, s -> list_contains(s2.shingles, s)))"
+_DUCK_JACCARD = (
+    f"CAST({_DUCK_N_COMMON} AS DOUBLE)\n"
+    f"         / (len(s1.shingles) + len(s2.shingles) - {_DUCK_N_COMMON})"
+)
 
 
 # Engine-portable 60-bit hash: the first 15 hex chars of md5, parsed as an
@@ -205,30 +319,115 @@ _CW_A = [(i * 2654435761 + 104729) % _MERSENNE_P or 1 for i in range(N_HASHES)]
 _CW_B = [(i * 40503 + 7919) % _MERSENNE_P for i in range(N_HASHES)]
 
 
-def _minhash_band_bucket(prefix: str, b: int) -> str:
-    """Band-bucket combine (both dialects): polynomial roll of the band's 4
-    minhash values — each value < 2^31, so ((((b*31+h)*31+h)...) stays well
-    under 2^63 with 31-ary rolling over 4 values mod P per step."""
-    expr = str(b)
-    for r in range(ROWS_PER_BAND):
-        expr = f"(({expr}) * 31 + {prefix}{b * ROWS_PER_BAND + r}) % {_MERSENNE_P}"
+# Plan-construction invariant of the MinHash stages below: each stage is ONE
+# parsed SQL expression (selectExpr / F.expr / one inline() of structs),
+# never a loop of Column operations. Every intermediate Column costs a py4j
+# round trip and an eager re-analysis of the growing plan: the per-term
+# loops (32 CW aggregates, 8 band structs) measured ~0.5 s of driver-side
+# DataFrame build per call against ~0.1 s of Catalyst analyze + optimize +
+# physical planning at sf0.1. The parsed trees are term for term the Column
+# forms (int literals * bigint hm, silent wrap, every product < 2^62), and
+# the SQL text matches the DuckDB twins.
+
+
+def _minhash_band_bucket(prefix: str, band: int, rows: int = ROWS_PER_BAND) -> str:
+    """Band-bucket combine (both dialects): polynomial roll of the band's
+    ``rows`` minhash values — each value < 2^31 and every step is reduced
+    mod P, so no intermediate reaches 2^36: overflow-free in both
+    engines."""
+    expr = str(band)
+    for k in range(rows):
+        expr = f"(({expr}) * 31 + {prefix}{band * rows + k}) % {_MERSENNE_P}"
     return f"CAST({expr} AS BIGINT)"
 
 
 def _cw_sig_agg_exprs() -> list:
-    """The N_HASHES Carter-Wegman min-hash aggregates, each as ONE parsed
-    SQL expression (optimization r17, guide §5 driver-side work): the
-    original per-term Column arithmetic (lit*col+lit)%P issued ~5 py4j
-    round trips per hash — and every intermediate Column triggers eager
-    re-analysis of the growing plan — measuring ~0.5 s of pure driver-side
-    DataFrame-BUILD time per invocation at 32 hashes. One F.expr per hash
-    is one parse call; the parsed tree (int literals * bigint hm, silent
-    wrap, every product < 2^62) is semantically identical to the Column
-    form, and the SQL text matches the DuckDB oracles' term for term."""
+    """The N_HASHES Carter-Wegman min-hash aggregates, one parsed SQL
+    expression each."""
     return [
         F.expr(f"min(({_CW_A[i]} * hm + {_CW_B[i]}) % {_MERSENNE_P}) AS h{i}")
         for i in range(N_HASHES)
     ]
+
+
+def _minhash_signature(docs: DataFrame) -> DataFrame:
+    """(doc_id, h0 .. h31): the Carter-Wegman MinHash signature of the
+    shingled docs — ONE portable md5-derived base hash per shingle, then 32
+    affine transforms mod 2³¹−1, one shuffle on doc_id."""
+    return (
+        docs.selectExpr("doc_id", "explode(shingles) AS shingle")
+        .selectExpr("doc_id", f"{_spark_h('shingle')} % {_MERSENNE_P} AS hm")
+        .groupBy("doc_id")
+        .agg(*_cw_sig_agg_exprs())
+    )
+
+
+# DuckDB twin of _minhash_signature over the ``shingled`` CTE.
+_SIG_CTE = f"""sp AS (SELECT doc_id, {_duck_h("shingle")} % {_MERSENNE_P} AS hm
+       FROM (SELECT doc_id, unnest(shingles) AS shingle FROM shingled)),
+sig AS MATERIALIZED (
+  SELECT doc_id,
+         {", ".join("min((%d * hm + %d) %% %d) AS h%d" % (_CW_A[i], _CW_B[i], _MERSENNE_P, i) for i in range(N_HASHES))}
+  FROM sp GROUP BY doc_id
+)"""
+
+# corpus → shingled → sig over the _corpus_with_near_dups fixture
+_SIG_CTES = f"{_NEAR_CORPUS_CTE},\n{_shingled_cte()},\n{_SIG_CTE}"
+
+_BAND_STRUCTS = ", ".join(
+    f"named_struct('band', {b}, 'bucket', {_minhash_band_bucket('h', b)})"
+    for b in range(N_BANDS)
+)
+
+
+def _minhash_near_pairs(docs: DataFrame, sf_dir: str) -> DataFrame:
+    """(id1, id2, jaccard) near-dup pairs of the shingled docs: signature →
+    8 bands × 4 rows → (band, bucket) equality self-join for candidates →
+    exact Jaccard on the candidate pairs only → pairs ≥ 0.6.
+
+    bounded_self_join (scale.py) is unhinted / estimator-driven while the
+    corpus bytes are provably small and a spillable sort-merge once the
+    text-derived banded relation stops being provably tiny."""
+    banded = _minhash_signature(docs).selectExpr(
+        "doc_id", f"inline(array({_BAND_STRUCTS}))"
+    )
+    cand = bounded_self_join(
+        banded, ["band", "bucket"], "doc_id", sf_dir, "documents",
+        gate=_ARRAY_GATE,
+    ).distinct()
+    return (
+        _with_shingle_sets(cand, docs, sf_dir)
+        .withColumn("jaccard", _jaccard())
+        .filter(F.col("jaccard") >= 0.6)
+        .select("id1", "id2", "jaccard")
+    )
+
+
+def _banded_sql(bands: int, rows: int) -> str:
+    """DuckDB: (doc_id, band, bucket) rows of ``sig`` for one banding."""
+    return " UNION ALL ".join(
+        f"SELECT doc_id, {j} AS band, {_minhash_band_bucket('h', j, rows)} AS bucket"
+        " FROM sig"
+        for j in range(bands)
+    )
+
+
+# DuckDB twin of _minhash_near_pairs: the banded/cand CTEs over ``sig``,
+# then the verify query of (id1, id2, jaccard) over ``cand`` and ``shingled``.
+_LSH_CAND_CTES = f"""banded AS (
+  {_banded_sql(N_BANDS, ROWS_PER_BAND)}
+),
+cand AS (
+  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
+  FROM banded a JOIN banded b
+    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
+)"""
+
+_LSH_VERIFY_SQL = f"""SELECT id1, id2, {_DUCK_JACCARD} AS jaccard
+FROM cand
+JOIN shingled s1 ON s1.doc_id = id1
+JOIN shingled s2 ON s2.doc_id = id2
+WHERE {_DUCK_JACCARD} >= 0.6"""
 
 
 def _simhash_vote_agg_exprs() -> list:
@@ -262,50 +461,9 @@ _SIMHASH_CHUNKS_EXPR = "array({})".format(
 
 
 _MINHASH_ORACLE = f"""
-WITH corpus AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-  UNION ALL
-  SELECT doc_id + {_DUP_OFFSET},
-         list_slice(string_split(text, ' '), 1, len(string_split(text, ' ')) - 1)
-  FROM documents WHERE doc_id % 5 = 0
-),
-shingled AS MATERIALIZED (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           range(1, greatest(len(toks) - {SHINGLE_K - 2}, 2)),
-           i -> array_to_string(list_slice(toks, i, i + {SHINGLE_K - 1}), ' ')
-         )) AS shingles
-  FROM corpus
-),
-sp AS (SELECT doc_id, {_duck_h("shingle")} % {_MERSENNE_P} AS hm
-       FROM (SELECT doc_id, unnest(shingles) AS shingle FROM shingled)),
-sig AS MATERIALIZED (
-  SELECT doc_id,
-         {", ".join("min((%d * hm + %d) %% %d) AS h%d" % (_CW_A[i], _CW_B[i], _MERSENNE_P, i) for i in range(N_HASHES))}
-  FROM sp GROUP BY doc_id
-),
-banded AS (
-  {" UNION ALL ".join("SELECT doc_id, %d AS band, %s AS bucket FROM sig" % (b, _minhash_band_bucket("h", b)) for b in range(N_BANDS))}
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-  FROM banded a JOIN banded b
-    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-)
-SELECT id1, id2,
-       CAST(len(list_filter(s1.shingles, s -> list_contains(s2.shingles, s)))
-            AS DOUBLE) /
-       (len(s1.shingles) + len(s2.shingles)
-        - len(list_filter(s1.shingles, s -> list_contains(s2.shingles, s))))
-         AS jaccard
-FROM cand
-JOIN shingled s1 ON s1.doc_id = id1
-JOIN shingled s2 ON s2.doc_id = id2
-WHERE CAST(len(list_filter(s1.shingles, s -> list_contains(s2.shingles, s)))
-           AS DOUBLE) /
-      (len(s1.shingles) + len(s2.shingles)
-       - len(list_filter(s1.shingles, s -> list_contains(s2.shingles, s))))
-        >= 0.6
+WITH {_SIG_CTES},
+{_LSH_CAND_CTES}
+{_LSH_VERIFY_SQL}
 """
 
 
@@ -326,59 +484,8 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles are groupBy(doc_id) for signatures and the (band, bucket)
     equality join — candidate verification touches candidate pairs only.
     """
-    corpus = _corpus_with_near_dups(spark, sf_dir).withColumn(
-        "toks", F.split("text", " ")
-    )
-    # op_cache: exploding a generator whose input is the shingle transform
-    # over the corpus UNION re-evaluates the tokenization pathologically
-    # (measured 60+ s/pass vs 0.3 s from cache on the extremes tier's
-    # giant docs, round 10) — materialize once, explode from the cache
-    docs = corpus.selectExpr(
-        "doc_id", f"{_SHINGLES_EXPR} AS shingles"
-    ).transform(op_cache)
-
-    # Optimization r17 (guide §5, driver-side work): one parsed SQL string
-    # per stage — the per-term Column loops (32 CW aggregates, 8 band
-    # structs) measured ~0.5 s of py4j round trips + eager per-step
-    # re-analysis per invocation on this operator family.
-    pairs = docs.selectExpr("doc_id", "explode(shingles) AS shingle").selectExpr(
-        "doc_id", f"{_spark_h('shingle')} % {_MERSENNE_P} AS hm"
-    )
-    sig = pairs.groupBy("doc_id").agg(*_cw_sig_agg_exprs())
-    band_structs = ", ".join(
-        f"named_struct('band', {b}, 'bucket', {_minhash_band_bucket('h', b)})"
-        for b in range(N_BANDS)
-    )
-    banded = sig.selectExpr("doc_id", f"inline(array({band_structs}))")
-
-    # shared bounded pair generator (scale.py): unhinted/estimator-driven at
-    # provably-small corpus bytes (plan identical to the pre-helper one at
-    # bench SF), spillable sort-merge once the text-derived banded relation
-    # stops being provably tiny
-    from ai_dataingestion_spark.scale import ARRAY_TABLE_BYTES, bounded_self_join
-
-    cand = bounded_self_join(
-        banded, ["band", "bucket"], "doc_id", sf_dir, "documents",
-        gate=ARRAY_TABLE_BYTES,
-    ).distinct()
-
-    sh1 = docs.select(F.col("doc_id").alias("id1"), F.col("shingles").alias("sh1"))
-    sh2 = docs.select(F.col("doc_id").alias("id2"), F.col("shingles").alias("sh2"))
-    inter = F.size(F.array_intersect("sh1", "sh2")).cast("double")
-    union = F.size(F.array_union("sh1", "sh2")).cast("double")
-    # hint_array_side: the CACHED shingle relation's narrow-projection
-    # stats under-count the arrays, so Catalyst would broadcast it and
-    # OOM the driver at 10x (the documented scale.py failure mode —
-    # surfaced here by the round-10 op_cache)
-    from ai_dataingestion_spark.scale import hint_array_side
-
-    return (
-        cand.join(hint_array_side(sh1, sf_dir, "documents"), "id1")
-        .join(hint_array_side(sh2, sf_dir, "documents"), "id2")
-        .withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= 0.6)
-        .select("id1", "id2", "jaccard")
-    )
+    docs = _shingled_docs(_corpus_with_near_dups(spark, sf_dir))
+    return _minhash_near_pairs(docs, sf_dir)
 
 
 def _simhash_votes_duck() -> str:
@@ -512,21 +619,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_ngram_jaccard",
     oracle=f"""
-WITH corpus AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-  UNION ALL
-  SELECT doc_id + {_DUP_OFFSET},
-         list_slice(string_split(text, ' '), 1, len(string_split(text, ' ')) - 1)
-  FROM documents WHERE doc_id % 5 = 0
-),
-shingled AS MATERIALIZED (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           range(1, greatest(len(toks) - {SHINGLE_K - 2}, 2)),
-           i -> array_to_string(list_slice(toks, i, i + {SHINGLE_K - 1}), ' ')
-         )) AS shingles
-  FROM corpus
-),
+WITH {_NEAR_CORPUS_CTE},
+{_shingled_cte()},
 inv AS (SELECT doc_id, unnest(shingles) AS shingle FROM shingled),
 df AS (SELECT shingle FROM inv GROUP BY shingle HAVING count(*) <= 50),
 rare AS (SELECT inv.doc_id, inv.shingle FROM inv JOIN df USING (shingle)),
@@ -543,12 +637,7 @@ prefiltered AS (
   WHERE 3 * n_common >= len(s1.shingles) + len(s2.shingles)
 ),
 verified AS (
-  SELECT id1, id2,
-         CAST(len(list_filter(s1.shingles, s -> list_contains(s2.shingles, s)))
-              AS DOUBLE) /
-         (len(s1.shingles) + len(s2.shingles)
-          - len(list_filter(s1.shingles, s -> list_contains(s2.shingles, s))))
-           AS jaccard
+  SELECT id1, id2, {_DUCK_JACCARD} AS jaccard
   FROM prefiltered
   JOIN shingled s1 ON s1.doc_id = id1
   JOIN shingled s2 ON s2.doc_id = id2
@@ -576,15 +665,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dedup_removal_plan's staged exact->near composition), which collapses
     identical copies and restores shingle rarity before this op runs.
     """
-    corpus = _corpus_with_near_dups(spark, sf_dir).withColumn(
-        "toks", F.split("text", " ")
-    )
-    # op_cache: the shingled relation feeds the index AND both exact-verify
-    # sides; uncached, each pass re-runs the shingle transform over the
-    # corpus union (60+ s/pass on extremes-tier giant docs, round 10)
-    docs = corpus.select(
-        "doc_id", F.expr(_SHINGLES_EXPR).alias("shingles")
-    ).transform(op_cache)
+    docs = _shingled_docs(_corpus_with_near_dups(spark, sf_dir))
     # The index/self-join phase runs on xxhash64(shingle) — 8-byte shuffle
     # keys instead of ~30-byte shingle strings through the widest joins.
     # DF-cap semantics must match the oracle's STRING-level cap, but a
@@ -607,15 +688,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count common rare shingles per pair; 3*I >= |A|+|B| is EXACTLY
     # J >= 0.5 when the DF cap doesn't bite, so almost all of the ~1.6M raw
     # candidate pairs die on integer counts before any array work
-    from ai_dataingestion_spark.scale import (
-        ARRAY_TABLE_BYTES,
-        bounded_self_join,
-        hint_array_side,
-    )
-
     cand = (
         bounded_self_join(
-            rare, ["h"], "doc_id", sf_dir, "documents", gate=ARRAY_TABLE_BYTES
+            rare, ["h"], "doc_id", sf_dir, "documents", gate=_ARRAY_GATE
         )
         .groupBy("id1", "id2")
         .agg(F.count(F.lit(1)).alias("n_common"))
@@ -631,22 +706,11 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(3 * F.col("n_common") >= F.col("sz1") + F.col("sz2"))
         .select("id1", "id2")
     )
-    # hint_array_side (scale.py): the shingle-ARRAY relation must never be
-    # estimator-driven — Catalyst sizes a narrow projection of the cached
-    # table and under-counts the arrays (measured at 10x sf0.1: a
-    # driver-OOM broadcast build). Shuffle-hash while documents is provably
-    # tiny (bench plan unchanged), spillable sort-merge once it is not
-    # (SHJ builds can't spill — the sfx1.0 can't-acquire class).
-    s1 = docs.select(F.col("doc_id").alias("id1"), F.col("shingles").alias("sh1"))
-    s2 = docs.select(F.col("doc_id").alias("id2"), F.col("shingles").alias("sh2"))
-    survivors = (
-        prefiltered.join(hint_array_side(s1, sf_dir, "documents"), "id1")
-        .join(hint_array_side(s2, sf_dir, "documents"), "id2")
-    )
-    inter = F.size(F.array_intersect("sh1", "sh2")).cast("double")
+    inter = _n_common().cast("double")
     union = (F.size("sh1") + F.size("sh2")).cast("double") - inter
     return (
-        survivors.withColumn("jaccard", inter / union)
+        _with_shingle_sets(prefiltered, docs, sf_dir)
+        .withColumn("jaccard", inter / union)
         .filter(F.col("jaccard") >= 0.5)
         .select("id1", "id2", "jaccard")
     )
@@ -659,13 +723,7 @@ _FP_DF_CAP = 50     # hashes in > this many docs are boilerplate: skip them
 
 
 _FINGERPRINT_PAIRS_ORACLE = f"""
-WITH corpus AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-  UNION ALL
-  SELECT doc_id + {_DUP_OFFSET},
-         list_slice(string_split(text, ' '), 1, len(string_split(text, ' ')) - 1)
-  FROM documents WHERE doc_id % 5 = 0
-),
+WITH {_NEAR_CORPUS_CTE},
 fp AS MATERIALIZED (
   SELECT doc_id,
          list_slice(list_sort(list_distinct(list_transform(
@@ -722,11 +780,9 @@ def dedup_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     inv = fp.select("doc_id", F.explode("fingerprint").alias("h"))
     rare_h = inv.groupBy("h").count().filter(F.col("count") <= _FP_DF_CAP).select("h")
     rare = inv.join(rare_h, "h")
-    from ai_dataingestion_spark.scale import ARRAY_TABLE_BYTES, bounded_self_join
-
     return (
         bounded_self_join(
-            rare, ["h"], "doc_id", sf_dir, "documents", gate=ARRAY_TABLE_BYTES
+            rare, ["h"], "doc_id", sf_dir, "documents", gate=_ARRAY_GATE
         )
         .groupBy("id1", "id2")
         .agg(F.count(F.lit(1)).alias("n_shared"))
@@ -743,14 +799,7 @@ WITH corpus AS (
                     1, greatest(len(string_split(text, ' ')) // 2, {SHINGLE_K}))
   FROM documents WHERE doc_id % 7 = 0
 ),
-shingled AS MATERIALIZED (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           range(1, greatest(len(toks) - {SHINGLE_K - 2}, 2)),
-           i -> array_to_string(list_slice(toks, i, i + {SHINGLE_K - 1}), ' ')
-         )) AS shingles
-  FROM corpus
-),
+{_shingled_cte()},
 inv AS (SELECT doc_id, unnest(shingles) AS shingle FROM shingled),
 df AS (SELECT shingle FROM inv GROUP BY shingle HAVING count(*) <= 50),
 rare AS (SELECT inv.doc_id, inv.shingle FROM inv JOIN df USING (shingle)),
@@ -760,14 +809,12 @@ cand AS (
   GROUP BY a.doc_id, b.doc_id
 )
 SELECT small_id, big_id,
-       CAST(len(list_filter(s1.shingles, s -> list_contains(s2.shingles, s)))
-            AS DOUBLE) / len(s1.shingles) AS containment
+       CAST({_DUCK_N_COMMON} AS DOUBLE) / len(s1.shingles) AS containment
 FROM cand
 JOIN shingled s1 ON s1.doc_id = small_id
 JOIN shingled s2 ON s2.doc_id = big_id
 WHERE 10 * n_common >= 8 * len(s1.shingles)
-  AND CAST(len(list_filter(s1.shingles, s -> list_contains(s2.shingles, s)))
-           AS DOUBLE) / len(s1.shingles) >= 0.8
+  AND CAST({_DUCK_N_COMMON} AS DOUBLE) / len(s1.shingles) >= 0.8
 """
 
 
@@ -802,28 +849,16 @@ def text_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             " ",
         ).alias("text"),
     )
-    corpus = d.unionByName(truncated).withColumn("toks", F.split("text", " "))
-    # op_cache: docs feeds the index, sizes, and both verify sides — and
-    # the uncached shingle-over-union explode is pathological on giant
-    # docs (extremes tier, round 10)
-    docs = corpus.select(
-        "doc_id", F.expr(_SHINGLES_EXPR).alias("shingles")
-    ).transform(op_cache)
+    docs = _shingled_docs(d.unionByName(truncated))
     shingle_rows = docs.select("doc_id", F.explode("shingles").alias("sh"))
     inv = shingle_rows.select("doc_id", "sh", F.xxhash64("sh").alias("h"))
     rare = _rare_shingle_index(inv, cap=50, small_corpus=_small_corpus(sf_dir))
-    from ai_dataingestion_spark.scale import (
-        ARRAY_TABLE_BYTES,
-        bounded_self_join,
-        hint_array_side,
-    )
-
     # ordered=False: containment roles are asymmetric (small-in-big), so
     # both pair directions are emitted and the containment filter decides
     cand = (
         bounded_self_join(
             rare, ["h"], "doc_id", sf_dir, "documents",
-            gate=ARRAY_TABLE_BYTES, out=("small_id", "big_id"), ordered=False,
+            gate=_ARRAY_GATE, out=("small_id", "big_id"), ordered=False,
         )
         .groupBy("small_id", "big_id")
         .agg(F.count(F.lit(1)).alias("n_common"))
@@ -833,15 +868,342 @@ def text_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         sizes.select(F.col("doc_id").alias("small_id"), F.col("sz").alias("sz1")),
         "small_id",
     ).filter(10 * F.col("n_common") >= 8 * F.col("sz1")).select("small_id", "big_id")
-    s1 = docs.select(F.col("doc_id").alias("small_id"), F.col("shingles").alias("sh1"))
-    s2 = docs.select(F.col("doc_id").alias("big_id"), F.col("shingles").alias("sh2"))
-    containment = (
-        F.size(F.array_intersect("sh1", "sh2")).cast("double") / F.size("sh1")
-    )
+    containment = _n_common().cast("double") / F.size("sh1")
     return (
-        prefiltered.join(hint_array_side(s1, sf_dir, "documents"), "small_id")
-        .join(hint_array_side(s2, sf_dir, "documents"), "big_id")
+        _with_shingle_sets(prefiltered, docs, sf_dir, ("small_id", "big_id"))
         .withColumn("containment", containment)
         .filter(F.col("containment") >= 0.8)
         .select("small_id", "big_id", "containment")
+    )
+
+
+_N_EQ_SUM = " + ".join(
+    f"CASE WHEN a.h{i} = b.h{i} THEN 1 ELSE 0 END" for i in range(N_HASHES)
+)
+
+_MINHASH_ERROR_ORACLE = f"""
+WITH {_SIG_CTES},
+pairs AS (
+  SELECT a.doc_id AS doc_id, ({_N_EQ_SUM}) AS n_eq
+  FROM sig a JOIN sig b ON b.doc_id = a.doc_id + {_DUP_OFFSET}
+  WHERE a.doc_id % 5 = 0 AND a.doc_id < {_DUP_OFFSET}
+),
+exact AS (
+  SELECT p.doc_id, p.n_eq, {_DUCK_JACCARD} AS j_raw
+  FROM pairs p
+  JOIN shingled s1 ON s1.doc_id = p.doc_id
+  JOIN shingled s2 ON s2.doc_id = p.doc_id + {_DUP_OFFSET}
+)
+SELECT doc_id,
+       floor(j_raw * 1000000 + 0.5) / 1000000 AS jaccard_exact,
+       CAST(n_eq AS DOUBLE) / {N_HASHES} AS jaccard_est,
+       floor(abs(CAST(n_eq AS DOUBLE) / {N_HASHES} - j_raw) * 1000000 + 0.5)
+         / 1000000 AS abs_err
+FROM exact
+"""
+
+
+@register("dedup_minhash_estimate_error", oracle=_MINHASH_ERROR_ORACLE)
+def dedup_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash calibration: for every KNOWN near-dup pair (doc, doc with
+    its last token dropped — the _corpus_with_near_dups fixture), the
+    signature-estimated Jaccard (matching fraction of the 32 slots) next
+    to the exact shingle-set Jaccard, per pair with absolute error — the
+    introspection query that tells you whether 32 hashes are enough for
+    your threshold before you trust an LSH sweep at corpus scale.
+    Signatures are the same portable Carter-Wegman pipeline as
+    dedup_near_minhash (oracle-identical end-to-end); the estimate k/32
+    is binary-exact so only the exact-Jaccard ratio needs the portable
+    floor(x·1e6+0.5)/1e6 rounding (SURVEY §5.4 round-tie trap)."""
+    docs = _shingled_docs(_corpus_with_near_dups(spark, sf_dir))
+    # cache: both pair sides consume sig — uncached, Spark replays the
+    # explode + 32-min aggregation per side. docs-count-sized (33 cols).
+    sig = _minhash_signature(docs).transform(op_cache)
+    a = sig.alias("a")
+    b = sig.alias("b")
+    n_eq = sum(
+        F.when(F.col(f"a.h{i}") == F.col(f"b.h{i}"), 1).otherwise(0)
+        for i in range(N_HASHES)
+    )
+    pairs = (
+        a.join(b, F.col("b.doc_id") == F.col("a.doc_id") + _DUP_OFFSET)
+        .filter((F.col("a.doc_id") % 5 == 0) & (F.col("a.doc_id") < _DUP_OFFSET))
+        .select(F.col("a.doc_id").alias("doc_id"), n_eq.alias("n_eq"))
+    )
+    s1 = docs.select(F.col("doc_id").alias("d1"), F.col("shingles").alias("sh1"))
+    s2 = docs.select(F.col("doc_id").alias("d2"), F.col("shingles").alias("sh2"))
+    inter = _n_common()
+    union = F.size("sh1") + F.size("sh2") - inter
+    j_raw = inter.cast("double") / union
+    est = F.col("n_eq").cast("double") / N_HASHES
+    return (
+        pairs.join(s1, F.col("doc_id") == F.col("d1"))
+        .join(s2, F.col("doc_id") + _DUP_OFFSET == F.col("d2"))
+        .select(
+            "doc_id",
+            (F.floor(j_raw * 1_000_000 + 0.5) / 1_000_000).alias("jaccard_exact"),
+            est.alias("jaccard_est"),
+            (F.floor(F.abs(est - j_raw) * 1_000_000 + 0.5) / 1_000_000).alias(
+                "abs_err"
+            ),
+        )
+    )
+
+
+# (bands, rows_per_band) sweep configs — all consume the same 32-value
+# signature. r >= 2 keeps single-hash buckets (threshold 0.03, quadratic
+# hot buckets) out of the sweep.
+_TUNE_CONFIGS = [(16, 2), (8, 4), (4, 8), (2, 16)]
+
+
+def _tune_config_sql(b: int, r: int) -> str:
+    banded = _banded_sql(b, r)
+    return f"""
+SELECT {b} AS bands, {r} AS rows_per_band,
+       floor(pow(1.0 / {b}, 1.0 / {r}) * 1000000 + 0.5) / 1000000
+         AS threshold_50,
+       (SELECT count(*) FROM (
+          SELECT DISTINCT a.doc_id AS id1, b2.doc_id AS id2
+          FROM ({banded}) a JOIN ({banded}) b2
+            ON a.band = b2.band AND a.bucket = b2.bucket
+               AND a.doc_id < b2.doc_id
+       )) AS n_candidate_pairs
+"""
+
+
+@register(
+    "dedup_lsh_band_tuning",
+    oracle=f"WITH {_SIG_CTES}\n"
+    + "\nUNION ALL\n".join(_tune_config_sql(b, r) for b, r in _TUNE_CONFIGS),
+)
+def dedup_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LSH band/row tuning sweep (the S-curve knob of Broder-style
+    near-dup detection): ONE 32-value Carter-Wegman signature relation,
+    re-banded four ways — (16 bands × 2 rows) … (2 × 16) — reporting the
+    theoretical 50%-collision threshold (1/b)^(1/r) next to the MEASURED
+    distinct candidate-pair count per configuration. This is the
+    introspection that turns the 0.6-threshold default of
+    dedup_near_minhash into an informed choice: more bands → lower
+    threshold → more candidates to verify. The signature build (the
+    expensive shuffle) is shared and cached across all four configs;
+    each config adds only a (band, bucket) equality self-join on
+    signature-width rows. Single-hash bands (r=1) are excluded — their
+    0.03 threshold makes hot buckets quadratic."""
+    docs = _shingled_docs(_corpus_with_near_dups(spark, sf_dir))
+    sig = _minhash_signature(docs).transform(op_cache)
+    # All four bandings explode from the cached signature ONCE into a
+    # single (bands, rows, band, bucket)-keyed relation — 16+8+4+2 = 30
+    # rows per document — so ONE candidate self-join, ONE distinct and ONE
+    # groupBy serve every config, and the signature subtree appears twice
+    # in the plan (one per join side), not eight times as in a branch per
+    # config. Per-config pair counts equal separate bandings': the config
+    # columns are part of the block key, so pairs never cross configs.
+    structs = ", ".join(
+        f"named_struct('bands', {b}, 'rows_per_band', {r}, 'band', {j}, "
+        f"'bucket', {_minhash_band_bucket('h', j, r)})"
+        for b, r in _TUNE_CONFIGS
+        for j in range(b)
+    )
+    banded = sig.selectExpr("doc_id", f"inline(array({structs}))")
+    counts = (
+        bounded_self_join(
+            banded, ["bands", "rows_per_band", "band", "bucket"], "doc_id",
+            sf_dir, "documents", gate=_ARRAY_GATE,
+            carry=["bands", "rows_per_band"],
+        )
+        .select("bands", "rows_per_band", "id1", "id2")
+        .distinct()
+        .groupBy("bands", "rows_per_band")
+        .agg(F.count(F.lit(1)).alias("n_candidate_pairs"))
+    )
+    # Every config emits a row even with zero candidates (a groupBy drops
+    # empty groups — the empty-corpus contract): left join the counts onto
+    # the 4-row config relation. threshold_50 is a PYTHON-computed literal
+    # per config (CPython libm pow), never a per-row JVM Math.pow — the two
+    # can differ in the last ulp. repr() round-trips the double exactly, and
+    # the D suffix keeps the SQL literal a DOUBLE (a bare decimal literal
+    # parses as DECIMAL and would change the output type); the floor-based
+    # 6-dp rounding stays in SQL, identical to pround.
+    stack_args = ", ".join(
+        f"{b}, {r}, floor({(1.0 / b) ** (1.0 / r)!r}D * 1000000 + 0.5) / 1000000"
+        for b, r in _TUNE_CONFIGS
+    )
+    configs = spark.range(1).selectExpr(
+        f"stack(4, {stack_args}) AS (bands, rows_per_band, threshold_50)"
+    )
+    return configs.join(
+        F.broadcast(counts), ["bands", "rows_per_band"], "left"
+    ).selectExpr(
+        "bands",
+        "rows_per_band",
+        "threshold_50",
+        "coalesce(n_candidate_pairs, 0L) AS n_candidate_pairs",
+    )
+
+
+
+
+_REMOVAL_CORPUS_SQL = f"""
+corpus AS (
+  SELECT doc_id, text FROM documents
+  UNION ALL
+  SELECT doc_id + {_DUP_OFFSET}, text FROM documents WHERE doc_id % 2 = 0
+  UNION ALL
+  SELECT doc_id + {_NEAR_OFFSET},
+         array_to_string(list_slice(string_split(text, ' '), 1,
+           len(string_split(text, ' ')) - 1), ' ')
+  FROM documents WHERE doc_id % 5 = 0
+)
+"""
+
+
+@register(
+    "dedup_removal_plan",
+    oracle="WITH "
+    + _REMOVAL_CORPUS_SQL
+    + f""",
+exact_removed AS (
+  SELECT doc_id, 'exact' AS reason FROM (
+    SELECT doc_id,
+           row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
+    FROM corpus)
+  WHERE rn > 1
+),
+toksed AS (SELECT doc_id, string_split(text, ' ') AS toks FROM corpus),
+{_shingled_cte("toksed")},
+{_SIG_CTE},
+{_LSH_CAND_CTES},
+near_pairs AS (
+{_LSH_VERIFY_SQL}
+),
+near_removed AS (
+  SELECT DISTINCT id2 AS doc_id, 'near' AS reason FROM near_pairs
+),
+decisions AS (
+  SELECT doc_id, reason, 1 AS prio FROM exact_removed
+  UNION ALL
+  SELECT doc_id, reason, 2 FROM near_removed
+)
+SELECT doc_id, reason FROM (
+  SELECT doc_id, reason,
+         row_number() OVER (PARTITION BY doc_id ORDER BY prio) AS rn
+  FROM decisions)
+WHERE rn = 1
+""",
+)
+def dedup_removal_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The end-to-end dedup REMOVAL PLAN — the artifact a training-data
+    pipeline actually ships: one (doc_id, reason) work-list composing
+    byte-exact dedup (md5 groups, keep the smallest id) and MinHash
+    near-dup dedup (LSH candidates → Jaccard ≥ 0.6 verify → remove the
+    larger id of each pair), with priority semantics: a doc caught by
+    both is attributed to the CHEAPER stage that would have removed it
+    first (exact > near), mirroring how staged dedup short-circuits at
+    scale. The corpus carries BOTH injection idioms (exact copies of
+    even ids at +1e6, last-token-dropped near copies of %5 ids at +2e6)
+    so each stage's recall is independently verifiable. Every stage is
+    the proven scale shape: hash groupBy for exact, banded signature
+    equality join for near — text never shuffles past the shingle
+    explode."""
+    d = Tables(spark, sf_dir).documents.select("doc_id", "text")
+    corpus = _corpus_with_exact_dups(spark, sf_dir).unionByName(
+        _near_copies(d, _NEAR_OFFSET)
+    )
+    # stage 1: byte-exact — hash groupBy, keep min id per group
+    w_exact = Window.partitionBy(F.md5("text")).orderBy("doc_id")
+    exact_removed = (
+        corpus.withColumn("rn", F.row_number().over(w_exact))
+        .filter(F.col("rn") > 1)
+        .select("doc_id", F.lit("exact").alias("reason"), F.lit(1).alias("prio"))
+    )
+    # stage 2: MinHash LSH near-dup — remove the larger id of each pair
+    near_removed = (
+        _minhash_near_pairs(_shingled_docs(corpus), sf_dir)
+        .select(F.col("id2").alias("doc_id"))
+        .distinct()
+        .select("doc_id", F.lit("near").alias("reason"), F.lit(2).alias("prio"))
+    )
+    decisions = exact_removed.unionByName(near_removed)
+    w_prio = Window.partitionBy("doc_id").orderBy("prio")
+    return (
+        decisions.withColumn("rn", F.row_number().over(w_prio))
+        .filter(F.col("rn") == 1)
+        .select("doc_id", "reason")
+    )
+
+
+_EVAL_ORACLE = (
+    "WITH detected AS (" + _MINHASH_ORACLE + "),\n"
+    + f"""
+truth AS (
+  SELECT doc_id AS id1, doc_id + {_DUP_OFFSET} AS id2
+  FROM documents WHERE doc_id % 5 = 0
+),
+tp AS (
+  SELECT count(*) AS n FROM detected d
+  WHERE EXISTS (SELECT 1 FROM truth t
+                WHERE t.id1 = d.id1 AND t.id2 = d.id2)
+),
+counts AS (
+  SELECT (SELECT count(*) FROM detected) AS n_detected,
+         (SELECT count(*) FROM truth) AS n_truth,
+         (SELECT n FROM tp) AS n_tp
+)
+SELECT n_detected, n_truth, n_tp,
+       floor(CAST(n_tp AS DOUBLE) / n_detected * 1000000 + 0.5) / 1000000
+         AS precision_vs_truth,
+       floor(CAST(n_tp AS DOUBLE) / n_truth * 1000000 + 0.5) / 1000000
+         AS recall,
+       floor(2.0 * (CAST(n_tp AS DOUBLE) / n_detected)
+             * (CAST(n_tp AS DOUBLE) / n_truth)
+             / (CAST(n_tp AS DOUBLE) / n_detected
+                + CAST(n_tp AS DOUBLE) / n_truth) * 1000000 + 0.5) / 1000000
+         AS f1
+FROM counts
+"""
+)
+
+
+@register("dedup_eval_precision_recall", oracle=_EVAL_ORACLE)
+def dedup_eval_precision_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Detector EVALUATION against injected ground truth: the
+    dedup_near_minhash detector runs (_minhash_near_pairs), and its
+    detected pairs are scored against the known injection set (every 5th
+    doc's last-token-dropped copy) — precision-vs-truth, recall, F1.
+    Recall < 1 means signatures or banding regressed; precision-vs-truth
+    < 1 means the detector ALSO finds organic near-dups (legitimate —
+    which is why the metric is named against-truth, not absolute). This
+    is the measurement layer a dedup pipeline ships with: the same
+    operator, re-pointed at a labeled corpus, becomes its regression
+    gate."""
+    docs = _shingled_docs(_corpus_with_near_dups(spark, sf_dir))
+    # detected feeds BOTH the true-positive semi-join and the n_detected
+    # count: uncached, the whole LSH candidate + verify chain would run once
+    # per branch. The cached relation is two ids per detected pair.
+    detected = (
+        _minhash_near_pairs(docs, sf_dir).select("id1", "id2").transform(op_cache)
+    )
+    truth = (
+        Tables(spark, sf_dir)
+        .documents.filter(F.col("doc_id") % 5 == 0)
+        .select(
+            F.col("doc_id").alias("id1"),
+            (F.col("doc_id") + _DUP_OFFSET).alias("id2"),
+        )
+    )
+    tp = detected.join(truth, ["id1", "id2"], "left_semi").agg(
+        F.count(F.lit(1)).alias("n_tp")
+    )
+    nd = detected.agg(F.count(F.lit(1)).alias("n_detected"))
+    nt = truth.agg(F.count(F.lit(1)).alias("n_truth"))
+    j = nd.crossJoin(F.broadcast(nt)).crossJoin(F.broadcast(tp))
+    prec = F.col("n_tp").cast("double") / F.col("n_detected")
+    rec = F.col("n_tp").cast("double") / F.col("n_truth")
+    return j.select(
+        "n_detected",
+        "n_truth",
+        "n_tp",
+        pround(prec).alias("precision_vs_truth"),
+        pround(rec).alias("recall"),
+        pround(2.0 * prec * rec / (prec + rec)).alias("f1"),
     )

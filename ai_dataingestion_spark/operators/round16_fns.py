@@ -39,6 +39,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ai_dataingestion_spark.ai.dedup import (
+    _DOCS_TOKS_SQL,
+    _shingled_cte,
+    _shingled_docs,
+)
 from ai_dataingestion_spark.catalog import register
 from ai_dataingestion_spark.functions.portable import (
     stable_rounded_sum,
@@ -624,14 +629,7 @@ _FACTORS = (1, 2, 5, 10, 25, 50)
 @register(
     "text_shingle_df_cap_loss",
     oracle=f"""
-WITH shingled AS MATERIALIZED (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           range(1, greatest(len(toks) - 1, 2)),
-           i -> array_to_string(list_slice(toks, i, i + 2), ' ')
-         )) AS shingles
-  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-),
+WITH {_shingled_cte(_DOCS_TOKS_SQL)},
 inst AS MATERIALIZED (SELECT doc_id, unnest(shingles) AS sh FROM shingled),
 df AS MATERIALIZED (SELECT sh, count(*) AS d FROM inst GROUP BY sh),
 spectrum AS MATERIALIZED (SELECT d, count(*) AS n_sh FROM df GROUP BY d),
@@ -697,14 +695,7 @@ def text_shingle_df_cap_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts (no float-sum surface; the denominators are > 0 whenever a
     row exists — a shingle-free corpus emits ZERO rows on both engines,
     never a 0/0)."""
-    from ai_dataingestion_spark.ai.dedup import _SHINGLES_EXPR
-
-    t = Tables(spark, sf_dir)
-    docs = (
-        t.documents.withColumn("toks", F.split("text", " "))
-        .select("doc_id", F.expr(_SHINGLES_EXPR).alias("shingles"))
-        .transform(op_cache)
-    )
+    docs = _shingled_docs(Tables(spark, sf_dir).documents)
     inst = docs.select("doc_id", F.explode("shingles").alias("sh"))
     # op_cache: df feeds BOTH the spectrum aggregate and the per-doc
     # min-DF join — uncached, the whole inst→groupBy(sh) shuffle runs

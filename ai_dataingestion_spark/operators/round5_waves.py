@@ -7,7 +7,7 @@ indices are unchanged). Each section keeps its original wave docstring.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
-from ai_dataingestion_spark.catalog import register
+from ai_dataingestion_spark.catalog import register, sql_op
 from ai_dataingestion_spark.functions.portable import (
     pround,
     stable_rounded_sum,
@@ -16,30 +16,16 @@ from ai_dataingestion_spark.functions.portable import (
     stable_sum_sql,
 )
 from ai_dataingestion_spark.opcache import op_cache
-from ai_dataingestion_spark.scale import (
-    ARRAY_TABLE_BYTES as _ARRAY_MERGE_LIMIT,
-    bounded_self_join,
-    broadcast_if_small,
-    hint_merge_if_large,
-)
+from ai_dataingestion_spark.scale import broadcast_if_small
 from ai_dataingestion_spark.tmpdirs import op_tmpdir
 from ai_dataingestion_spark.ai.dedup import (
-    _CW_A,
-    _CW_B,
+    _DOCS_TOKS_SQL,
     _DUP_OFFSET,
-    _MERSENNE_P,
-    _SHINGLES_EXPR,
-    _corpus_with_near_dups,
-    _cw_sig_agg_exprs,
-    _duck_h,
-    _minhash_band_bucket,
-    _spark_h,
-    N_BANDS,
-    N_HASHES,
-    SHINGLE_K,
+    _shingled_cte,
+    _shingled_docs,
 )
 from pyspark.sql.types import StringType
-from ai_dataingestion_spark.registry import Tables, register_views
+from ai_dataingestion_spark.registry import Tables
 import os
 
 
@@ -2243,9 +2229,8 @@ def events_error_burst_5min(spark: SparkSession, sf_dir: str) -> DataFrame:
 # wave module round5g (formerly operators/round5g.py)
 # Round-5 seventh wave (SURVEY.md §2.Q, continued): growth accounting
 # (weekly new/retained/resurrected/churned user states), a cross-table
-# referential-integrity audit with injected violations, a time-bounded
-# conversion funnel (each step within 24 h of the previous), and MinHash
-# estimate-vs-exact Jaccard calibration over known near-dup pairs.
+# referential-integrity audit with injected violations, and a time-bounded
+# conversion funnel (each step within 24 h of the previous).
 # ===========================================================================
 
 _EPOCH = "DATE '2024-01-01'"
@@ -2537,137 +2522,6 @@ def events_funnel_time_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     return nv.crossJoin(F.broadcast(nc)).crossJoin(F.broadcast(np_))
 
 
-def _minhash_error_oracle() -> str:
-    from ai_dataingestion_spark.ai.dedup import (
-        _CW_A,
-        _CW_B,
-        _DUP_OFFSET,
-        _MERSENNE_P,
-        _duck_h,
-        N_HASHES,
-        SHINGLE_K,
-    )
-
-    sig_cols = ", ".join(
-        "min((%d * hm + %d) %% %d) AS h%d" % (_CW_A[i], _CW_B[i], _MERSENNE_P, i)
-        for i in range(N_HASHES)
-    )
-    eq_sum = " + ".join(
-        f"CASE WHEN a.h{i} = b.h{i} THEN 1 ELSE 0 END" for i in range(N_HASHES)
-    )
-    return f"""
-WITH corpus AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-  UNION ALL
-  SELECT doc_id + {_DUP_OFFSET},
-         list_slice(string_split(text, ' '), 1, len(string_split(text, ' ')) - 1)
-  FROM documents WHERE doc_id % 5 = 0
-),
-shingled AS MATERIALIZED (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           range(1, greatest(len(toks) - {SHINGLE_K - 2}, 2)),
-           i -> array_to_string(list_slice(toks, i, i + {SHINGLE_K - 1}), ' ')
-         )) AS shingles
-  FROM corpus
-),
-sp AS (SELECT doc_id, {_duck_h("shingle")} % {_MERSENNE_P} AS hm
-       FROM (SELECT doc_id, unnest(shingles) AS shingle FROM shingled)),
-sig AS MATERIALIZED (SELECT doc_id, {sig_cols} FROM sp GROUP BY doc_id),
-pairs AS (
-  SELECT a.doc_id AS doc_id, ({eq_sum}) AS n_eq
-  FROM sig a JOIN sig b ON b.doc_id = a.doc_id + {_DUP_OFFSET}
-  WHERE a.doc_id % 5 = 0 AND a.doc_id < {_DUP_OFFSET}
-),
-exact AS (
-  SELECT p.doc_id, p.n_eq,
-         CAST(len(list_filter(s1.shingles, s -> list_contains(s2.shingles, s)))
-              AS DOUBLE)
-         / (len(s1.shingles) + len(s2.shingles)
-            - len(list_filter(s1.shingles, s -> list_contains(s2.shingles, s))))
-           AS j_raw
-  FROM pairs p
-  JOIN shingled s1 ON s1.doc_id = p.doc_id
-  JOIN shingled s2 ON s2.doc_id = p.doc_id + {_DUP_OFFSET}
-)
-SELECT doc_id,
-       floor(j_raw * 1000000 + 0.5) / 1000000 AS jaccard_exact,
-       CAST(n_eq AS DOUBLE) / {N_HASHES} AS jaccard_est,
-       floor(abs(CAST(n_eq AS DOUBLE) / {N_HASHES} - j_raw) * 1000000 + 0.5)
-         / 1000000 AS abs_err
-FROM exact
-"""
-
-
-@register("dedup_minhash_estimate_error", oracle=_minhash_error_oracle())
-def dedup_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash calibration: for every KNOWN near-dup pair (doc, doc with
-    its last token dropped — the _corpus_with_near_dups fixture), the
-    signature-estimated Jaccard (matching fraction of the 32 slots) next
-    to the exact shingle-set Jaccard, per pair with absolute error — the
-    introspection query that tells you whether 32 hashes are enough for
-    your threshold before you trust an LSH sweep at corpus scale.
-    Signatures are the same portable Carter-Wegman pipeline as
-    dedup_near_minhash (oracle-identical end-to-end); the estimate k/32
-    is binary-exact so only the exact-Jaccard ratio needs the portable
-    floor(x·1e6+0.5)/1e6 rounding (SURVEY §5.4 round-tie trap)."""
-    from ai_dataingestion_spark.ai.dedup import (
-        _DUP_OFFSET,
-        _MERSENNE_P,
-        _SHINGLES_EXPR,
-        _corpus_with_near_dups,
-        _cw_sig_agg_exprs,
-        _spark_h,
-        N_HASHES,
-    )
-
-    corpus = _corpus_with_near_dups(spark, sf_dir).withColumn(
-        "toks", F.split("text", " ")
-    )
-    # op_cache: the shingled relation feeds the signature AND the exact-
-    # Jaccard verify; uncached, the shingle-over-union explode re-runs
-    # pathologically on giant docs (extremes tier, round 10)
-    docs = corpus.selectExpr(
-        "doc_id", f"{_SHINGLES_EXPR} AS shingles"
-    ).transform(op_cache)
-    sp = docs.selectExpr("doc_id", "explode(shingles) AS shingle").selectExpr(
-        "doc_id", f"{_spark_h('shingle')} % {_MERSENNE_P} AS hm"
-    )
-    # cache: both pair sides consume sig — uncached, Spark replays the
-    # explode + 32-min aggregation per side. docs-count-sized (33 cols).
-    # r17: one parsed expression per CW aggregate (driver-build cost).
-    sig = sp.groupBy("doc_id").agg(*_cw_sig_agg_exprs()).transform(op_cache)
-    a = sig.alias("a")
-    b = sig.alias("b")
-    n_eq = sum(
-        F.when(F.col(f"a.h{i}") == F.col(f"b.h{i}"), 1).otherwise(0)
-        for i in range(N_HASHES)
-    )
-    pairs = (
-        a.join(b, F.col("b.doc_id") == F.col("a.doc_id") + _DUP_OFFSET)
-        .filter((F.col("a.doc_id") % 5 == 0) & (F.col("a.doc_id") < _DUP_OFFSET))
-        .select(F.col("a.doc_id").alias("doc_id"), n_eq.alias("n_eq"))
-    )
-    s1 = docs.select(F.col("doc_id").alias("d1"), F.col("shingles").alias("sh1"))
-    s2 = docs.select(F.col("doc_id").alias("d2"), F.col("shingles").alias("sh2"))
-    inter = F.size(F.array_intersect("sh1", "sh2"))
-    union = F.size("sh1") + F.size("sh2") - inter
-    j_raw = inter.cast("double") / union
-    est = F.col("n_eq").cast("double") / N_HASHES
-    return (
-        pairs.join(s1, F.col("doc_id") == F.col("d1"))
-        .join(s2, F.col("doc_id") + _DUP_OFFSET == F.col("d2"))
-        .select(
-            "doc_id",
-            (F.floor(j_raw * 1_000_000 + 0.5) / 1_000_000).alias("jaccard_exact"),
-            est.alias("jaccard_est"),
-            (F.floor(F.abs(est - j_raw) * 1_000_000 + 0.5) / 1_000_000).alias(
-                "abs_err"
-            ),
-        )
-    )
-
-
 # ===========================================================================
 # wave module round5h (formerly operators/round5h.py)
 # Round-5 eighth wave (SURVEY.md §2.Q, continued): discrete-vs-
@@ -2750,17 +2604,8 @@ def events_markov_2step_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_shingle_df_spectrum",
-    oracle="""
-WITH shingled AS MATERIALIZED (
-  -- split hoisted OUT of the lambda: inlined, DuckDB re-splits the text
-  -- per shingle — O(tokens x chars), 33-66 s on 100k-char docs (round 10)
-  SELECT doc_id,
-         list_distinct(list_transform(
-           range(1, greatest(len(toks) - 1, 2)),
-           i -> array_to_string(list_slice(toks, i, i + 2), ' ')
-         )) AS shingles
-  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-),
+    oracle=f"""
+WITH {_shingled_cte(_DOCS_TOKS_SQL)},
 df AS (
   SELECT shingle, count(*) AS doc_freq
   FROM (SELECT doc_id, unnest(shingles) AS shingle FROM shingled)
@@ -2777,17 +2622,7 @@ def text_shingle_df_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     index rests on (ai/dedup.py): a heavy tail above the cap means the
     hot-hash rescue path actually carries load. Two chained
     partial-aggregable groupBys; the spectrum is ≤ max-df rows."""
-    from ai_dataingestion_spark.ai.dedup import _SHINGLES_EXPR
-
-    t = Tables(spark, sf_dir)
-    # op_cache: exploding the shingle transform directly re-evaluates the
-    # slice-per-index lambda pathologically on giant token arrays (38 s vs
-    # 0.3 s from cache on the extremes tier, round 10)
-    docs = (
-        t.documents.withColumn("toks", F.split("text", " "))
-        .select("doc_id", F.expr(_SHINGLES_EXPR).alias("shingles"))
-        .transform(op_cache)
-    )
+    docs = _shingled_docs(Tables(spark, sf_dir).documents)
     df = (
         docs.select("doc_id", F.explode("shingles").alias("shingle"))
         .groupBy("shingle")
@@ -3401,172 +3236,11 @@ def events_ab_proportion_ztest(
 
 # ===========================================================================
 # wave module round5j (formerly operators/round5j.py)
-# Round-5 tenth wave (SURVEY.md §2.Q, continued): LSH band/row tuning
-# sweep over the portable minhash signatures, bigram-PMI collocation
+# Round-5 tenth wave (SURVEY.md §2.Q, continued): bigram-PMI collocation
 # extraction, chunk-granularity inter-document duplication ratio
 # (MassiveText-style filter), a schema-evolution mergeSchema scan, and a
 # parquet compression-codec round-trip sink.
 # ===========================================================================
-
-# (bands, rows_per_band) sweep configs — all consume the same 32-value
-# signature. r >= 2 keeps single-hash buckets (threshold 0.03, quadratic
-# hot buckets) out of the sweep.
-_TUNE_CONFIGS = [(16, 2), (8, 4), (4, 8), (2, 16)]
-
-
-def _bucket_poly(prefix: str, band: int, r: int) -> str:
-    """Polynomial band-bucket roll over r signature values (both SQL
-    dialects): every intermediate stays < 2^62, overflow-free in both
-    engines (the _minhash_band_bucket idiom, generalized over r)."""
-    expr = str(band)
-    for k in range(r):
-        expr = f"(({expr}) * 31 + {prefix}{band * r + k}) % {_MERSENNE_P}"
-    return f"CAST({expr} AS BIGINT)"
-
-
-_SIG_CTES = f"""
-corpus AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-  UNION ALL
-  SELECT doc_id + {_DUP_OFFSET},
-         list_slice(string_split(text, ' '), 1, len(string_split(text, ' ')) - 1)
-  FROM documents WHERE doc_id % 5 = 0
-),
-shingled AS MATERIALIZED (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           range(1, greatest(len(toks) - {SHINGLE_K - 2}, 2)),
-           i -> array_to_string(list_slice(toks, i, i + {SHINGLE_K - 1}), ' ')
-         )) AS shingles
-  FROM corpus
-),
-sp AS (SELECT doc_id, {_duck_h("shingle")} % {_MERSENNE_P} AS hm
-       FROM (SELECT doc_id, unnest(shingles) AS shingle FROM shingled)),
-sig AS MATERIALIZED (
-  SELECT doc_id,
-         {", ".join("min((%d * hm + %d) %% %d) AS h%d" % (_CW_A[i], _CW_B[i], _MERSENNE_P, i) for i in range(N_HASHES))}
-  FROM sp GROUP BY doc_id
-)
-"""
-
-
-def _tune_config_sql(b: int, r: int) -> str:
-    banded = " UNION ALL ".join(
-        f"SELECT doc_id, {j} AS band, {_bucket_poly('h', j, r)} AS bucket FROM sig"
-        for j in range(b)
-    )
-    return f"""
-SELECT {b} AS bands, {r} AS rows_per_band,
-       floor(pow(1.0 / {b}, 1.0 / {r}) * 1000000 + 0.5) / 1000000
-         AS threshold_50,
-       (SELECT count(*) FROM (
-          SELECT DISTINCT a.doc_id AS id1, b2.doc_id AS id2
-          FROM ({banded}) a JOIN ({banded}) b2
-            ON a.band = b2.band AND a.bucket = b2.bucket
-               AND a.doc_id < b2.doc_id
-       )) AS n_candidate_pairs
-"""
-
-
-@register(
-    "dedup_lsh_band_tuning",
-    oracle="WITH "
-    + _SIG_CTES
-    + "\n"
-    + "\nUNION ALL\n".join(_tune_config_sql(b, r) for b, r in _TUNE_CONFIGS),
-)
-def dedup_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH band/row tuning sweep (the S-curve knob of Broder-style
-    near-dup detection): ONE 32-value Carter-Wegman signature relation,
-    re-banded four ways — (16 bands × 2 rows) … (2 × 16) — reporting the
-    theoretical 50%-collision threshold (1/b)^(1/r) next to the MEASURED
-    distinct candidate-pair count per configuration. This is the
-    introspection that turns the 0.6-threshold default of
-    dedup_near_minhash into an informed choice: more bands → lower
-    threshold → more candidates to verify. The signature build (the
-    expensive shuffle) is shared and cached across all four configs;
-    each config adds only a (band, bucket) equality self-join on
-    signature-width rows. Single-hash bands (r=1) are excluded — their
-    0.03 threshold makes hot buckets quadratic."""
-    # Optimization r17 (guide §5, driver-side work): this operator's local
-    # wall was dominated by Python-side DataFrame BUILD time, not Catalyst —
-    # measured by splitting qe phases: build 1.26 s vs analyze+optimize+
-    # physical 0.12 s at sf0.1. Every intermediate Column costs a py4j round
-    # trip AND an eager re-analysis of the growing plan, so the loops below
-    # now emit ONE parsed SQL string per stage (selectExpr / F.expr): the
-    # 30-struct banding explode is a single inline() call, the 32 CW
-    # aggregates are one parse each (_cw_sig_agg_exprs), and the 4-row
-    # config frame is one stack() literal. Build time measured 1.65 s ->
-    # 0.50 s warm; the parsed trees are term-for-term the Column forms.
-    corpus = _corpus_with_near_dups(spark, sf_dir).withColumn(
-        "toks", F.split("text", " ")
-    )
-    pairs = (
-        # op_cache: the uncached shingle-over-union explode re-tokenizes
-        # pathologically on giant docs (extremes tier, round 10)
-        corpus.selectExpr("doc_id", f"{_SHINGLES_EXPR} AS shingles")
-        .transform(op_cache)
-        .selectExpr("doc_id", "explode(shingles) AS shingle")
-        .selectExpr("doc_id", f"{_spark_h('shingle')} % {_MERSENNE_P} AS hm")
-    )
-    sig = pairs.groupBy("doc_id").agg(*_cw_sig_agg_exprs()).transform(op_cache)
-
-    # Optimization r16 (guide §2.4 + §3.3 plan-size note): the first draft
-    # looped the four (bands, rows) configs into four separate
-    # explode -> self-join -> distinct -> agg branches, so the analyzed
-    # plan embedded the signature subtree EIGHT times (both join sides ×
-    # 4 configs). All four bandings explode from the cached signature ONCE
-    # into a single (bands, rows, band, bucket)-keyed relation — the same
-    # 16+8+4+2 = 30 rows per document in total — so there is ONE candidate
-    # self-join, ONE distinct, ONE groupBy for all configs, and the
-    # signature subtree appears twice, not eight times. Per-config pair
-    # counts are identical: the config columns are part of the block key,
-    # so pairs never cross configurations.
-    structs = ", ".join(
-        f"named_struct('bands', {b}, 'rows_per_band', {r}, 'band', {j}, "
-        f"'bucket', {_bucket_poly('h', j, r)})"
-        for b, r in _TUNE_CONFIGS
-        for j in range(b)
-    )
-    banded = sig.selectExpr("doc_id", f"inline(array({structs}))")
-    counts = (
-        bounded_self_join(
-            banded, ["bands", "rows_per_band", "band", "bucket"], "doc_id",
-            sf_dir, "documents", gate=_ARRAY_MERGE_LIMIT,
-            carry=["bands", "rows_per_band"],
-        )
-        .select("bands", "rows_per_band", "id1", "id2")
-        .distinct()
-        .groupBy("bands", "rows_per_band")
-        .agg(F.count(F.lit(1)).alias("n_candidate_pairs"))
-    )
-    # Every config emits a row even with zero candidates (the per-config
-    # global agg of the unfused form always returned one row; a fused
-    # groupBy would drop empty groups — the empty-corpus contract): left
-    # join the counts onto the 4-row config relation. threshold_50 stays a
-    # PYTHON-computed literal per config (CPython libm pow), never a
-    # per-row JVM Math.pow — the two can differ in the last ulp, and the
-    # 6-dp portable rounding must keep producing bit-identical values to
-    # the pre-fusion emission. repr() round-trips the double exactly, and
-    # the D suffix keeps the SQL literal a DOUBLE (a bare decimal literal
-    # parses as DECIMAL and would change the output type); the floor-based
-    # 6-dp rounding stays in SQL, identical to pround.
-    stack_args = ", ".join(
-        f"{b}, {r}, floor({(1.0 / b) ** (1.0 / r)!r}D * 1000000 + 0.5) / 1000000"
-        for b, r in _TUNE_CONFIGS
-    )
-    configs = spark.range(1).selectExpr(
-        f"stack(4, {stack_args}) AS (bands, rows_per_band, threshold_50)"
-    )
-    return configs.join(
-        F.broadcast(counts), ["bands", "rows_per_band"], "left"
-    ).selectExpr(
-        "bands",
-        "rows_per_band",
-        "threshold_50",
-        "coalesce(n_candidate_pairs, 0L) AS n_candidate_pairs",
-    )
-
 
 @register(
     "text_collocation_pmi",
@@ -3846,10 +3520,8 @@ def sink_parquet_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # wave module round5k (formerly operators/round5k.py)
 # Round-5 eleventh wave (SURVEY.md §2.Q, continued): a watermark-
-# tuning late-arrival audit over injected event-time disorder, the
-# end-to-end dedup REMOVAL PLAN composing exact / near / chunk dedup with
-# priority semantics, JSONL schema inference, and numeric RANGE window
-# frames.
+# tuning late-arrival audit over injected event-time disorder, JSONL
+# schema inference, and numeric RANGE window frames.
 # ===========================================================================
 
 _ARRIVAL_BUCKET = 1000  # events per arrival bucket (event_id DIV 1000)
@@ -3947,181 +3619,6 @@ def events_late_arrival_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.groupBy(
         "event_type", band.alias("lateness_band")
     ).agg(F.count(F.lit(1)).alias("n"))
-
-
-_EXACT_OFFSET = 1_000_000
-_NEAR_OFFSET = 2_000_000
-
-
-_REMOVAL_CORPUS_SQL = f"""
-corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + {_EXACT_OFFSET}, text FROM documents WHERE doc_id % 2 = 0
-  UNION ALL
-  SELECT doc_id + {_NEAR_OFFSET},
-         array_to_string(list_slice(string_split(text, ' '), 1,
-           len(string_split(text, ' ')) - 1), ' ')
-  FROM documents WHERE doc_id % 5 = 0
-)
-"""
-
-
-# _ARRAY_MERGE_LIMIT is scale.ARRAY_TABLE_BYTES (imported at top): one home
-# for the array-table merge gate so scale.py recalibrations reach every site.
-
-
-@register(
-    "dedup_removal_plan",
-    oracle="WITH "
-    + _REMOVAL_CORPUS_SQL
-    + f""",
-exact_removed AS (
-  SELECT doc_id, 'exact' AS reason FROM (
-    SELECT doc_id,
-           row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-    FROM corpus)
-  WHERE rn > 1
-),
-toksed AS (SELECT doc_id, string_split(text, ' ') AS toks FROM corpus),
-shingled AS MATERIALIZED (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           range(1, greatest(len(toks) - {SHINGLE_K - 2}, 2)),
-           i -> array_to_string(list_slice(toks, i, i + {SHINGLE_K - 1}), ' ')
-         )) AS shingles
-  FROM toksed
-),
-sp AS (SELECT doc_id, {_duck_h("shingle")} % {_MERSENNE_P} AS hm
-       FROM (SELECT doc_id, unnest(shingles) AS shingle FROM shingled)),
-sig AS MATERIALIZED (
-  SELECT doc_id,
-         {", ".join("min((%d * hm + %d) %% %d) AS h%d" % (_CW_A[i], _CW_B[i], _MERSENNE_P, i) for i in range(N_HASHES))}
-  FROM sp GROUP BY doc_id
-),
-banded AS (
-  {" UNION ALL ".join("SELECT doc_id, %d AS band, %s AS bucket FROM sig" % (b, _minhash_band_bucket("h", b)) for b in range(N_BANDS))}
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-  FROM banded a JOIN banded b
-    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-),
-near_pairs AS (
-  SELECT id1, id2 FROM cand
-  JOIN shingled s1 ON s1.doc_id = id1
-  JOIN shingled s2 ON s2.doc_id = id2
-  WHERE CAST(len(list_filter(s1.shingles, s -> list_contains(s2.shingles, s)))
-             AS DOUBLE) /
-        (len(s1.shingles) + len(s2.shingles)
-         - len(list_filter(s1.shingles, s -> list_contains(s2.shingles, s))))
-          >= 0.6
-),
-near_removed AS (
-  SELECT DISTINCT id2 AS doc_id, 'near' AS reason FROM near_pairs
-),
-decisions AS (
-  SELECT doc_id, reason, 1 AS prio FROM exact_removed
-  UNION ALL
-  SELECT doc_id, reason, 2 FROM near_removed
-)
-SELECT doc_id, reason FROM (
-  SELECT doc_id, reason,
-         row_number() OVER (PARTITION BY doc_id ORDER BY prio) AS rn
-  FROM decisions)
-WHERE rn = 1
-""",
-)
-def dedup_removal_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The end-to-end dedup REMOVAL PLAN — the artifact a training-data
-    pipeline actually ships: one (doc_id, reason) work-list composing
-    byte-exact dedup (md5 groups, keep the smallest id) and MinHash
-    near-dup dedup (LSH candidates → Jaccard ≥ 0.6 verify → remove the
-    larger id of each pair), with priority semantics: a doc caught by
-    both is attributed to the CHEAPER stage that would have removed it
-    first (exact > near), mirroring how staged dedup short-circuits at
-    scale. The corpus carries BOTH injection idioms (exact copies of
-    even ids at +1e6, last-token-dropped near copies of %5 ids at +2e6)
-    so each stage's recall is independently verifiable. Every stage is
-    the proven scale shape: hash groupBy for exact, banded signature
-    equality join for near — text never shuffles past the shingle
-    explode."""
-    d = Tables(spark, sf_dir).documents.select("doc_id", "text")
-    toks = F.split("text", " ")
-    corpus = (
-        d.unionByName(
-            d.filter(F.col("doc_id") % 2 == 0).select(
-                (F.col("doc_id") + _EXACT_OFFSET).alias("doc_id"), "text"
-            )
-        )
-        .unionByName(
-            d.filter(F.col("doc_id") % 5 == 0).select(
-                (F.col("doc_id") + _NEAR_OFFSET).alias("doc_id"),
-                F.array_join(F.slice(toks, 1, F.size(toks) - 1), " ").alias(
-                    "text"
-                ),
-            )
-        )
-    )
-    # stage 1: byte-exact — hash groupBy, keep min id per group
-    w_exact = Window.partitionBy(F.md5("text")).orderBy("doc_id")
-    exact_removed = (
-        corpus.withColumn("rn", F.row_number().over(w_exact))
-        .filter(F.col("rn") > 1)
-        .select("doc_id", F.lit("exact").alias("reason"), F.lit(1).alias("prio"))
-    )
-    # stage 2: MinHash LSH near-dup — remove the larger id of each pair
-    # the shingle relation feeds the signature build AND both verify
-    # sides of the candidate join: cache it (MEMORY_AND_DISK — spills,
-    # never OOMs) so the explode+dedup of shingles runs once, not 3x
-    # Optimization r17 (guide §5, driver-side work): build the signature
-    # and banding stages as ONE parsed SQL string each — the per-term
-    # Column loops (32 CW aggregates, 8 band structs) cost ~0.5 s of py4j
-    # round trips + eager per-step re-analysis per invocation (the same
-    # driver-build wall measured on dedup_lsh_band_tuning; phase split:
-    # build 0.85 s vs analyze+optimize+physical 0.11 s at sf0.1).
-    docs = corpus.withColumn("toks", F.split("text", " ")).selectExpr(
-        "doc_id", f"{_SHINGLES_EXPR} AS shingles"
-    ).transform(op_cache)
-    sig = (
-        docs.selectExpr("doc_id", "explode(shingles) AS shingle")
-        .selectExpr("doc_id", f"{_spark_h('shingle')} % {_MERSENNE_P} AS hm")
-        .groupBy("doc_id")
-        .agg(*_cw_sig_agg_exprs())
-    )
-    band_structs = ", ".join(
-        f"named_struct('band', {b}, 'bucket', {_minhash_band_bucket('h', b)})"
-        for b in range(N_BANDS)
-    )
-    banded = sig.selectExpr("doc_id", f"inline(array({band_structs}))")
-    cand = bounded_self_join(
-        banded, ["band", "bucket"], "doc_id", sf_dir, "documents",
-        gate=_ARRAY_MERGE_LIMIT,
-    ).distinct()
-    sh1 = docs.select(F.col("doc_id").alias("id1"), F.col("shingles").alias("sh1"))
-    sh2 = docs.select(F.col("doc_id").alias("id2"), F.col("shingles").alias("sh2"))
-    inter = F.size(F.array_intersect("sh1", "sh2")).cast("double")
-    union = F.size(F.array_union("sh1", "sh2")).cast("double")
-    # merge gate at 1 MiB (not the 64 MiB join default): shingle-ARRAY
-    # relations expand ~100x from the compressed text bytes, and the
-    # broadcast OOM measured at the sfx1.0 sweep happened at just 5.3 MB
-    # of documents parquet (ai/dedup.py:558 rule). Sort-merge spills where
-    # both broadcast and shuffled-hash builds cannot.
-    near_removed = (
-        cand.join(hint_merge_if_large(sh1, sf_dir, "documents", _ARRAY_MERGE_LIMIT), "id1")
-        .join(hint_merge_if_large(sh2, sf_dir, "documents", _ARRAY_MERGE_LIMIT), "id2")
-        .filter(inter / union >= 0.6)
-        .select(F.col("id2").alias("doc_id"))
-        .distinct()
-        .select("doc_id", F.lit("near").alias("reason"), F.lit(2).alias("prio"))
-    )
-    decisions = exact_removed.unionByName(near_removed)
-    w_prio = Window.partitionBy("doc_id").orderBy("prio")
-    return (
-        decisions.withColumn("rn", F.row_number().over(w_prio))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "reason")
-    )
 
 
 @register(
@@ -4919,37 +4416,7 @@ def sink_write_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(rows, "step string, rows_after bigint")
 
 
-@register(
-    "subquery_not_in_null_trap",
-    oracle="""
-WITH keys AS (
-  SELECT CASE WHEN c_custkey % 97 = 0 THEN NULL ELSE c_custkey END AS k
-  FROM customer
-)
-SELECT
-  (SELECT count(*) FROM orders WHERE o_custkey IN (SELECT k FROM keys))
-    AS n_in,
-  (SELECT count(*) FROM orders WHERE o_custkey NOT IN (SELECT k FROM keys))
-    AS n_not_in,
-  (SELECT count(*) FROM orders o
-   WHERE NOT EXISTS (SELECT 1 FROM keys WHERE k = o.o_custkey))
-    AS n_not_exists,
-  (SELECT count(*) FROM orders) AS n_total
-""",
-)
-def subquery_not_in_null_trap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The NOT IN + NULL three-valued-logic trap, pinned as executable
-    documentation: when the subquery list contains a single NULL,
-    `x NOT IN (...)` is never TRUE (x <> NULL is UNKNOWN), so n_not_in
-    collapses to 0 while the NOT EXISTS spelling counts real
-    non-members — the most common silent-wrong-answer rewrite in
-    analytics SQL. Both engines must agree on all four counts
-    (membership, the collapsed NOT IN, the anti-join truth, total).
-    Spark plans the NOT IN as a null-aware anti join — same SQL text on
-    both sides via the registered-view entry point (§3.2 EP2)."""
-    register_views(spark, sf_dir)
-    return spark.sql(
-        """
+_NOT_IN_SQL = """
 WITH keys AS (
   SELECT CASE WHEN c_custkey % 97 = 0 THEN NULL ELSE c_custkey END AS k
   FROM customer
@@ -4964,7 +4431,22 @@ SELECT
     AS n_not_exists,
   (SELECT count(*) FROM orders) AS n_total
 """
-    )
+
+
+sql_op(
+    "subquery_not_in_null_trap",
+    spark_sql=_NOT_IN_SQL,
+    oracle=_NOT_IN_SQL,
+    doc="""The NOT IN + NULL three-valued-logic trap, pinned as executable
+    documentation: when the subquery list contains a single NULL,
+    `x NOT IN (...)` is never TRUE (x <> NULL is UNKNOWN), so n_not_in
+    collapses to 0 while the NOT EXISTS spelling counts real
+    non-members — the most common silent-wrong-answer rewrite in
+    analytics SQL. Both engines must agree on all four counts
+    (membership, the collapsed NOT IN, the anti-join truth, total).
+    Spark plans the NOT IN as a null-aware anti join — same SQL text on
+    both sides via the registered-view entry point (§3.2 EP2).""",
+)
 
 
 @register(

@@ -5,7 +5,7 @@ per-wave modules round6a–round6z (registration order preserved).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
-from ai_dataingestion_spark.catalog import register
+from ai_dataingestion_spark.catalog import register, sql_op
 from ai_dataingestion_spark.functions.portable import (
     grid_sum,
     grid_sum_sql,
@@ -15,22 +15,14 @@ from ai_dataingestion_spark.opcache import op_cache
 from ai_dataingestion_spark.tmpdirs import op_tmpdir
 from ai_dataingestion_spark.scale import broadcast_if_small, table_bytes
 from ai_dataingestion_spark.ai.dedup import (
-    _CW_A,
-    _CW_B,
-    _DUP_OFFSET,
-    _MERSENNE_P,
-    _MINHASH_ORACLE,
-    _SHINGLES_EXPR,
-    _corpus_with_near_dups,
-    _minhash_band_bucket,
+    _DUCK_SHINGLE,
+    _duck_h,
+    _shingles_sql,
     _spark_h,
-    N_BANDS,
-    N_HASHES,
 )
-from ai_dataingestion_spark.ai.dedup import _duck_h
 import os
 import math
-from ai_dataingestion_spark.registry import Tables, register_views
+from ai_dataingestion_spark.registry import Tables
 import glob
 
 
@@ -257,7 +249,7 @@ def sink_file_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_batch_novelty_rate",
-    oracle="""
+    oracle=f"""
 WITH tokenized AS MATERIALIZED (
   -- split hoisted OUT of the lateral: inlined, DuckDB re-splits the text
   -- per (row, i) — O(tokens x chars) on 100k-char docs (round 10)
@@ -268,15 +260,13 @@ WITH tokenized AS MATERIALIZED (
   WHERE text IS NOT NULL
 ),
 lake_grams AS (
-  SELECT DISTINCT md5(array_to_string(
-           list_slice(toks, i, i + 2), ' ')) AS g
+  SELECT DISTINCT md5({_DUCK_SHINGLE}) AS g
   FROM tokenized,
        unnest(generate_series(1, greatest(len(toks) - 2, 1))) s(i)
   WHERE doc_id % 3 <> 0
 ),
 batch_grams AS (
-  SELECT DISTINCT md5(array_to_string(
-           list_slice(toks, i, i + 2), ' ')) AS g
+  SELECT DISTINCT md5({_DUCK_SHINGLE}) AS g
   FROM tokenized,
        unnest(generate_series(1, greatest(len(toks) - 2, 1))) s(i)
   WHERE doc_id % 3 = 0
@@ -302,13 +292,7 @@ def text_batch_novelty_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation is the same digest index the incremental dedup keeps."""
     d = Tables(spark, sf_dir).documents
     toks = F.split("text", " ")
-    # NULL branch: size(NULL) = -1 + concat_ws(' ', NULL) = '' would mint
-    # md5('') shingles for NULL docs (the _SHINGLES_EXPR rule)
-    grams = F.expr(
-        "CASE WHEN toks IS NULL THEN NULL"
-        " ELSE transform(sequence(1, greatest(size(toks) - 2, 1)),"
-        " i -> md5(concat_ws(' ', slice(toks, i, 3)))) END"
-    )
+    grams = F.expr(_shingles_sql("md5({})", distinct=False))
 
     def gram_set(df: DataFrame) -> DataFrame:
         return (
@@ -1833,127 +1817,9 @@ def pipeline_resume_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # wave module round6g (formerly operators/round6g.py)
-# Round-5 thirty-third wave (SURVEY.md §2.Q, continued): dedup
-# detector evaluation against injected ground truth, weighted medians,
-# and the top-k vocabulary coverage curve.
+# Round-5 thirty-third wave (SURVEY.md §2.Q, continued): weighted
+# medians and the top-k vocabulary coverage curve.
 # ===========================================================================
-
-_EVAL_ORACLE = (
-    "WITH detected AS (" + _MINHASH_ORACLE + "),\n"
-    + f"""
-truth AS (
-  SELECT doc_id AS id1, doc_id + {_DUP_OFFSET} AS id2
-  FROM documents WHERE doc_id % 5 = 0
-),
-tp AS (
-  SELECT count(*) AS n FROM detected d
-  WHERE EXISTS (SELECT 1 FROM truth t
-                WHERE t.id1 = d.id1 AND t.id2 = d.id2)
-),
-counts AS (
-  SELECT (SELECT count(*) FROM detected) AS n_detected,
-         (SELECT count(*) FROM truth) AS n_truth,
-         (SELECT n FROM tp) AS n_tp
-)
-SELECT n_detected, n_truth, n_tp,
-       floor(CAST(n_tp AS DOUBLE) / n_detected * 1000000 + 0.5) / 1000000
-         AS precision_vs_truth,
-       floor(CAST(n_tp AS DOUBLE) / n_truth * 1000000 + 0.5) / 1000000
-         AS recall,
-       floor(2.0 * (CAST(n_tp AS DOUBLE) / n_detected)
-             * (CAST(n_tp AS DOUBLE) / n_truth)
-             / (CAST(n_tp AS DOUBLE) / n_detected
-                + CAST(n_tp AS DOUBLE) / n_truth) * 1000000 + 0.5) / 1000000
-         AS f1
-FROM counts
-"""
-)
-
-
-@register("dedup_eval_precision_recall", oracle=_EVAL_ORACLE)
-def dedup_eval_precision_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Detector EVALUATION against injected ground truth: the full
-    MinHash-LSH near-dup pipeline runs (the dedup_near_minhash plan,
-    verbatim), and its detected pairs are scored against the known
-    injection set (every 5th doc's last-token-dropped copy) —
-    precision-vs-truth, recall, F1. Recall < 1 means signatures or
-    banding regressed; precision-vs-truth < 1 means the detector ALSO
-    finds organic near-dups (legitimate — which is why the metric is
-    named against-truth, not absolute). This is the measurement layer
-    a dedup pipeline ships with: the same operator, re-pointed at a
-    labeled corpus, becomes its regression gate."""
-    corpus = _corpus_with_near_dups(spark, sf_dir).withColumn(
-        "toks", F.split("text", " ")
-    )
-    docs = corpus.selectExpr(
-        "doc_id", f"{_SHINGLES_EXPR} AS shingles"
-    ).transform(op_cache)
-    # r17: one parsed SQL string per stage (32 CW aggregates, 8 band
-    # structs) — the per-term Column loops cost ~0.5 s of driver-side
-    # py4j/build time per invocation (guide §5).
-    from ai_dataingestion_spark.ai.dedup import _cw_sig_agg_exprs
-
-    pairs = docs.selectExpr(
-        "doc_id", "explode(shingles) AS shingle"
-    ).selectExpr(
-        "doc_id", f"{_spark_h('shingle')} % {_MERSENNE_P} AS hm"
-    )
-    sig = pairs.groupBy("doc_id").agg(*_cw_sig_agg_exprs())
-    band_structs = ", ".join(
-        f"named_struct('band', {b}, 'bucket', {_minhash_band_bucket('h', b)})"
-        for b in range(N_BANDS)
-    )
-    banded = sig.selectExpr("doc_id", f"inline(array({band_structs}))")
-    from ai_dataingestion_spark.scale import ARRAY_TABLE_BYTES, bounded_self_join
-
-    cand = bounded_self_join(
-        banded, ["band", "bucket"], "doc_id", sf_dir, "documents",
-        gate=ARRAY_TABLE_BYTES,
-    ).distinct()
-    sh1 = docs.select(F.col("doc_id").alias("id1"), F.col("shingles").alias("sh1"))
-    sh2 = docs.select(F.col("doc_id").alias("id2"), F.col("shingles").alias("sh2"))
-    inter = F.size(F.array_intersect("sh1", "sh2")).cast("double")
-    union = F.size(F.array_union("sh1", "sh2")).cast("double")
-    # hint_array_side: cached shingle stats under-count the arrays —
-    # Catalyst would broadcast and OOM the driver at 10x (scale.py rule)
-    from ai_dataingestion_spark.scale import hint_array_side
-
-    # r17: detected feeds BOTH the true-positive semi-join and the
-    # n_detected count — uncached, the whole LSH candidate+verify chain
-    # executed once per branch (guide §5, the kmeans-a2 pattern); the
-    # cached relation is two ids per detected pair, corpus-bounded.
-    detected = (
-        cand.join(hint_array_side(sh1, sf_dir, "documents"), "id1")
-        .join(hint_array_side(sh2, sf_dir, "documents"), "id2")
-        .filter(inter / union >= 0.6)
-        .select("id1", "id2")
-        .transform(op_cache)
-    )
-    truth = (
-        Tables(spark, sf_dir)
-        .documents.filter(F.col("doc_id") % 5 == 0)
-        .select(
-            F.col("doc_id").alias("id1"),
-            (F.col("doc_id") + _DUP_OFFSET).alias("id2"),
-        )
-    )
-    tp = detected.join(truth, ["id1", "id2"], "left_semi").agg(
-        F.count(F.lit(1)).alias("n_tp")
-    )
-    nd = detected.agg(F.count(F.lit(1)).alias("n_detected"))
-    nt = truth.agg(F.count(F.lit(1)).alias("n_truth"))
-    j = nd.crossJoin(F.broadcast(nt)).crossJoin(F.broadcast(tp))
-    prec = F.col("n_tp").cast("double") / F.col("n_detected")
-    rec = F.col("n_tp").cast("double") / F.col("n_truth")
-    return j.select(
-        "n_detected",
-        "n_truth",
-        "n_tp",
-        pround(prec).alias("precision_vs_truth"),
-        pround(rec).alias("recall"),
-        pround(2.0 * prec * rec / (prec + rec)).alias("f1"),
-    )
-
 
 @register(
     "agg_weighted_median",
@@ -5879,9 +5745,12 @@ GROUP BY root
 """
 
 
-@register("sql_recursive_cte_rollup", oracle=_RECURSIVE_SQL)
-def sql_recursive_cte_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recursive CTE (WITH RECURSIVE, Spark 4.0 SPARK-24497): a
+sql_op(
+    "sql_recursive_cte_rollup",
+    # Spark's VALUES-in-FROM spelling drops the parens DuckDB requires.
+    spark_sql=_RECURSIVE_SQL.replace("(VALUES (0), (1))", "VALUES (0), (1)"),
+    oracle=_RECURSIVE_SQL,
+    doc="""Recursive CTE (WITH RECURSIVE, Spark 4.0 SPARK-24497): a
     bill-of-materials-style hierarchy rollup. The part hierarchy is the
     implicit binary tree ``k -> {2k, 2k+1}`` (synthesized: the corpus has
     no parent column; the operator under test is recursive traversal, and
@@ -5894,10 +5763,8 @@ def sql_recursive_cte_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     100-level guard. The ``node >= 1`` guard pins the k=0 self-loop
     (0*2=0) that would otherwise never exhaust — the classic cyclic-input
     recursion trap, caught by prototype. Oracle: DuckDB runs the identical
-    statement."""
-    register_views(spark, sf_dir)
-    # Spark's VALUES-in-FROM spelling drops the parens DuckDB requires.
-    return spark.sql(_RECURSIVE_SQL.replace("(VALUES (0), (1))", "VALUES (0), (1)"))
+    statement.""",
+)
 
 
 @register(
@@ -5956,9 +5823,11 @@ FROM nation n, LATERAL (
 """
 
 
-@register("join_lateral_topk", oracle=_LATERAL_SQL)
-def join_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LATERAL correlated subquery (Spark 4 SPARK-34382): top-2 customers
+sql_op(
+    "join_lateral_topk",
+    spark_sql=_LATERAL_SQL,
+    oracle=_LATERAL_SQL,
+    doc="""LATERAL correlated subquery (Spark 4 SPARK-34382): top-2 customers
     by balance per nation, written as the for-each-row subquery a SQL user
     migrating from Postgres/DuckDB would write. Catalyst de-correlates the
     LATERAL into a join + per-key limit rather than executing the inner
@@ -5966,9 +5835,8 @@ def join_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k (win_topk_group) but proving the correlated-subquery surface.
     ORDER BY carries the c_name tie-break so the top-2 set is
     deterministic cross-engine. Oracle: DuckDB runs the identical
-    statement."""
-    register_views(spark, sf_dir)
-    return spark.sql(_LATERAL_SQL)
+    statement.""",
+)
 
 
 @register(
@@ -6211,9 +6079,11 @@ FROM probesy p CROSS JOIN lstats s
 """
 
 
-@register("pipeline_zorder_layout_plan", oracle=_zorder_sql("duck"))
-def pipeline_zorder_layout_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order layout planning: quantifies min/max data-skipping
+sql_op(
+    "pipeline_zorder_layout_plan",
+    spark_sql=_zorder_sql("spark"),
+    oracle=_zorder_sql("duck"),
+    doc="""Z-order layout planning: quantifies min/max data-skipping
     effectiveness of a Morton-interleaved sort vs a linear sort BEFORE
     rewriting a 100 TB table. Rows get a 12-bit Morton code over
     (custkey%64, dayofyear%64) — spelled in portable div/mod arithmetic,
@@ -6232,9 +6102,8 @@ def pipeline_zorder_layout_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     75% / 87.5% for x / y — the multi-dimension justification for a
     z-order rewrite, at the cost of an aggregation instead of a table
     rewrite. Oracle: DuckDB runs the same statement modulo dialect
-    (// vs div, strftime vs date_format)."""
-    register_views(spark, sf_dir)
-    return spark.sql(_zorder_sql("spark"))
+    (// vs div, strftime vs date_format).""",
+)
 
 
 @register(
@@ -6644,14 +6513,15 @@ _STRIP_DUCK = (
 )
 
 
-@register(
+sql_op(
     "text_url_canonicalize_dedup",
+    spark_sql=_URL_CANON_TEMPLATE.replace("{STRIP}", _STRIP_SPARK).replace(
+            "{SYN}", _URL_SYN_SPARK
+        ),
     oracle=_URL_CANON_TEMPLATE.replace("{STRIP}", _STRIP_DUCK).replace(
         "{SYN}", _URL_SYN_SPARK.replace("AS STRING", "AS VARCHAR")
     ),
-)
-def text_url_canonicalize_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Web-crawl URL canonicalization — the first dedup stage of a crawl
+    doc="""Web-crawl URL canonicalization — the first dedup stage of a crawl
     ingestion pipeline (CommonCrawl-style): lowercase the scheme+host,
     drop fragments, strip tracking params (utm_*, ref=) while preserving
     meaningful query strings, then report raw-vs-canonical distinct
@@ -6661,13 +6531,8 @@ def text_url_canonicalize_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality: 500 raw variants collapse to exactly 200 canonical
     (host x page residues). Dialect trap pinned by the oracle: DuckDB's
     regexp_replace needs the 'g' flag to match Spark's replace-all
-    default — without it the canonical count read 367, not 200."""
-    register_views(spark, sf_dir)
-    return spark.sql(
-        _URL_CANON_TEMPLATE.replace("{STRIP}", _STRIP_SPARK).replace(
-            "{SYN}", _URL_SYN_SPARK
-        )
-    )
+    default — without it the canonical count read 367, not 200.""",
+)
 
 
 @register(
@@ -6789,16 +6654,17 @@ FROM orders GROUP BY ALL
 """
 
 
-@register("sql_group_by_all", oracle=_GBA_SQL)
-def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUP BY ALL (Spark 3.4+ / DuckDB shared syntax): the analyst
+sql_op(
+    "sql_group_by_all",
+    spark_sql=_GBA_SQL,
+    oracle=_GBA_SQL,
+    doc="""GROUP BY ALL (Spark 3.4+ / DuckDB shared syntax): the analyst
     shorthand that infers grouping keys from the non-aggregate select
     items. Semantically identical to the explicit GROUP BY — Catalyst
     resolves it at analysis time, so the physical plan is the ordinary
     partial-aggregable hash aggregate. Both engines run the identical
-    statement."""
-    register_views(spark, sf_dir)
-    return spark.sql(_GBA_SQL)
+    statement.""",
+)
 
 
 _IVFRAME_SQL = """
@@ -6811,14 +6677,15 @@ FROM orders
 """
 
 
-@register(
+sql_op(
     "win_range_interval_frame",
+    spark_sql=_IVFRAME_SQL.replace("{IV}", "INTERVAL '7' DAY").replace(
+            "{STR}", "STRING"
+        ),
     oracle=_IVFRAME_SQL.replace("{IV}", "INTERVAL 7 DAY").replace(
         "{STR}", "VARCHAR"
     ),
-)
-def win_range_interval_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-based RANGE window frame with an INTERVAL literal: trailing
+    doc="""Time-based RANGE window frame with an INTERVAL literal: trailing
     7-day spend per customer, `RANGE BETWEEN INTERVAL '7' DAY PRECEDING
     AND CURRENT ROW` over the order timestamp. Unlike a ROWS frame this
     is value-based — gaps and same-day multiples are handled by the time
@@ -6827,10 +6694,5 @@ def win_range_interval_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     INTERVAL boundary type end-to-end. Per-customer partitions keep the
     window parallel (no global sort); frame evaluation is the standard
     sliding-sum pass. Oracle: DuckDB runs the identical statement
-    (INTERVAL 7 DAY spelling)."""
-    register_views(spark, sf_dir)
-    return spark.sql(
-        _IVFRAME_SQL.replace("{IV}", "INTERVAL '7' DAY").replace(
-            "{STR}", "STRING"
-        )
-    )
+    (INTERVAL 7 DAY spelling).""",
+)

@@ -6,14 +6,14 @@ from __future__ import annotations
 
 import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from ai_dataingestion_spark.catalog import register
+from ai_dataingestion_spark.catalog import register, sql_op
 from ai_dataingestion_spark.scale import hint_merge_if_large
 from ai_dataingestion_spark.opcache import op_cache
 from ai_dataingestion_spark.registry import Tables
 from ai_dataingestion_spark.tmpdirs import op_tmpdir
 from ai_dataingestion_spark.ai.dedup import _duck_h, _spark_h
 import glob
-from ai_dataingestion_spark.registry import Tables, register_views
+from ai_dataingestion_spark.registry import Tables
 import shutil
 
 
@@ -615,18 +615,19 @@ GROUP BY seg
 """
 
 
-@register("sql_pivot_clause", oracle=_PIVOT_DUCK)
-def sql_pivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SQL PIVOT clause (Spark 3.4+): two measures (count, revenue)
+sql_op(
+    "sql_pivot_clause",
+    spark_sql=_PIVOT_SPARK,
+    oracle=_PIVOT_DUCK,
+    doc="""The SQL PIVOT clause (Spark 3.4+): two measures (count, revenue)
     spread across three pinned status columns per market segment —
     the analyst spelling of the DataFrame pivot already covered by
     pivot_wide. Pinned IN-list means no extra distinct-values job;
     Catalyst compiles the clause to the same single partial-aggregable
     hash aggregate as manual FILTER columns (which is exactly how the
     DuckDB oracle spells it, pinning both semantics and output naming
-    f_n/f_rev/...)."""
-    register_views(spark, sf_dir)
-    return spark.sql(_PIVOT_SPARK)
+    f_n/f_rev/...).""",
+)
 
 
 # NULLS LAST is spelled out because this one statement runs VERBATIM on
@@ -643,18 +644,19 @@ WINDOW w AS (PARTITION BY o_custkey
 """
 
 
-@register("sql_named_window_clause", oracle=_WINDOW_SQL)
-def sql_named_window_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Named WINDOW definitions: one shared `WINDOW w AS (...)` clause
+sql_op(
+    "sql_named_window_clause",
+    spark_sql=_WINDOW_SQL,
+    oracle=_WINDOW_SQL,
+    doc="""Named WINDOW definitions: one shared `WINDOW w AS (...)` clause
     referenced by multiple over-expressions — the deduplicated spelling
     that also guarantees both functions share ONE physical Window node
     (same partitioning + ordering => one sort, one pass), instead of
     the accidental two-window plans copy-pasted inline specs can drift
     into. Both engines run the identical statement; the running sum's
     default frame (RANGE UNBOUNDED PRECEDING..CURRENT ROW) ties by the
-    orderkey sort key so it is deterministic."""
-    register_views(spark, sf_dir)
-    return spark.sql(_WINDOW_SQL)
+    orderkey sort key so it is deterministic.""",
+)
 
 
 # ===========================================================================
@@ -872,9 +874,11 @@ FROM pair
 """
 
 
-@register("events_bayesian_ab_posterior", oracle=_BAYES_SQL)
-def events_bayesian_ab_posterior(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bayesian A/B conversion analysis with Beta(1,1)-Binomial
+sql_op(
+    "events_bayesian_ab_posterior",
+    spark_sql=_BAYES_SQL,
+    oracle=_BAYES_SQL,
+    doc="""Bayesian A/B conversion analysis with Beta(1,1)-Binomial
     posteriors: per-arm (user_id parity) purchase conversion yields
     posterior means/variances in closed form, and P(B beats A) via the
     moment-matched normal approximation with the logistic sigmoid proxy
@@ -886,9 +890,8 @@ def events_bayesian_ab_posterior(spark: SparkSession, sf_dir: str) -> DataFrame:
     a probability statement, not a p-value. One user-grain shuffle + a
     2-row reduce; the z input is rounded to 6 dp before the sigmoid so
     both engines saturate identically. Both engines run the identical
-    statement."""
-    register_views(spark, sf_dir)
-    return spark.sql(_BAYES_SQL)
+    statement.""",
+)
 
 
 _LINKPRED_SQL = """

@@ -48,12 +48,11 @@ import sys
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from fixture_common import TABLES  # noqa: E402
+
 SRC = os.environ.get("SPARK_GRAFT_DRIFT_SRC", "/root/testdata/sf0.01")
 OUT = os.environ.get("SPARK_GRAFT_DRIFT_DIR", "/tmp/spark_graft_drift")
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 def _slice(tbl: pa.Table, lo: float, hi: float) -> pa.Table:

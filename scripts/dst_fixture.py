@@ -51,12 +51,11 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from fixture_common import TABLES, stable_hash  # noqa: E402
+
 SRC = os.environ.get("SPARK_GRAFT_DST_SRC", "/root/testdata/sf0.01")
 OUT = os.environ.get("SPARK_GRAFT_DST_DIR", "/tmp/spark_graft_dst")
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 # UTC window starts covering each 2024 transition of the converted zones
 WINDOWS = [
@@ -69,18 +68,11 @@ WINDOW_MINUTES = 120
 RATE_PER_WINDOW = 0.005
 
 
-def _h(s: str) -> int:
-    h = 14695981039346656037
-    for b in s.encode():
-        h = ((h ^ b) * 1099511628211) % (2**64)
-    return h
-
-
 def inject(table: str, tbl: pa.Table) -> pa.Table:
     if table != "events":
         return tbl
     n = tbl.num_rows
-    rng = np.random.default_rng(_h("dst-events") % (2**32))
+    rng = np.random.default_rng(stable_hash("dst-events") % (2**32))
     pick = rng.random((len(WINDOWS), n))
     vals = tbl.column("ts").combine_chunks().to_pylist()
     for w, base in enumerate(WINDOWS):

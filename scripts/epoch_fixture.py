@@ -42,30 +42,16 @@ import sys
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.parquet as pq
+
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from fixture_common import row_mask, write_tier  # noqa: E402
 
 SRC = os.environ.get("SPARK_GRAFT_EPOCH_SRC", "/root/testdata/sf0.01")
 OUT = os.environ.get("SPARK_GRAFT_EPOCH_DIR", "/tmp/spark_graft_epoch")
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
 BACK = dt.timedelta(days=36524)  # 100 Gregorian years of days
 FWD = dt.timedelta(weeks=5200)  # ~99.7 years forward (2123)
 ORDER_MOD = 97  # orders/lineitem coherent-shift key predicate
-
-
-def _h(s: str) -> int:
-    h = 14695981039346656037
-    for b in s.encode():
-        h = ((h ^ b) * 1099511628211) % (2**64)
-    return h
-
-
-def _mask(tag: str, n: int, rate: float) -> np.ndarray:
-    rng = np.random.default_rng(_h(tag) % (2**32))
-    return rng.random(n) < rate
 
 
 def inject(table: str, tbl: pa.Table) -> pa.Table:
@@ -80,8 +66,8 @@ def inject(table: str, tbl: pa.Table) -> pa.Table:
         cols[col] = pa.array(vals, type=tbl.schema.field(col).type)
 
     if table == "events":
-        m_back = _mask("events.ts#back", n, 0.02)
-        m_fwd = _mask("events.ts#fwd", n, 0.005) & ~m_back
+        m_back = row_mask("events.ts#back", n, 0.02)
+        m_fwd = row_mask("events.ts#fwd", n, 0.005) & ~m_back
         shift("ts", m_back, -BACK)
         shift("ts", m_fwd, FWD)
     elif table == "orders":
@@ -94,15 +80,7 @@ def inject(table: str, tbl: pa.Table) -> pa.Table:
 
 
 def main() -> None:
-    os.makedirs(OUT, exist_ok=True)
-    for t in TABLES:
-        dst = os.path.join(OUT, f"{t}.parquet")
-        if os.path.exists(dst):
-            print(f"[skip] {t} (exists)")
-            continue
-        tbl = pq.read_table(os.path.join(SRC, f"{t}.parquet"))
-        pq.write_table(inject(t, tbl), dst)
-        print(f"[ok] {t}")
+    write_tier(SRC, OUT, inject)
 
 
 if __name__ == "__main__":

@@ -41,26 +41,12 @@ import sys
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.parquet as pq
+
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from fixture_common import row_mask, write_tier  # noqa: E402
 
 SRC = os.environ.get("SPARK_GRAFT_EXTREMES_SRC", "/root/testdata/sf0.01")
 OUT = os.environ.get("SPARK_GRAFT_EXTREMES_DIR", "/tmp/spark_graft_extremes")
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-
-def _h(s: str) -> int:
-    h = 14695981039346656037
-    for b in s.encode():
-        h = ((h ^ b) * 1099511628211) % (2**64)
-    return h
-
-
-def _mask(tag: str, n: int, rate: float) -> np.ndarray:
-    rng = np.random.default_rng(_h(tag) % (2**32))
-    return rng.random(n) < rate
 
 
 def inject(table: str, tbl: pa.Table) -> pa.Table:
@@ -69,7 +55,7 @@ def inject(table: str, tbl: pa.Table) -> pa.Table:
 
     def mutate(col: str, tag: str, rate: float, fn):
         vals = cols[col].to_pylist()
-        for i in np.flatnonzero(_mask(f"{table}.{col}#{tag}", n, rate)):
+        for i in np.flatnonzero(row_mask(f"{table}.{col}#{tag}", n, rate)):
             if vals[i] is not None:
                 vals[i] = fn(vals[i], int(i))
         cols[col] = pa.array(vals, type=tbl.schema.field(col).type)
@@ -98,7 +84,7 @@ def inject(table: str, tbl: pa.Table) -> pa.Table:
         vals = cols["text"].to_pylist()
         lens = cols["n_chars"].to_pylist()
         picks = sorted(
-            int(i) for i in np.flatnonzero(_mask("documents#long", n, 1.0))
+            int(i) for i in np.flatnonzero(row_mask("documents#long", n, 1.0))
         )[:6]
         for j, i in enumerate(picks):
             if j < 3:  # ~100k chars of distinct-shingle sentences
@@ -115,15 +101,7 @@ def inject(table: str, tbl: pa.Table) -> pa.Table:
 
 
 def main() -> None:
-    os.makedirs(OUT, exist_ok=True)
-    for t in TABLES:
-        dst = os.path.join(OUT, f"{t}.parquet")
-        if os.path.exists(dst):
-            print(f"[skip] {t} (exists)")
-            continue
-        tbl = pq.read_table(os.path.join(SRC, f"{t}.parquet"))
-        pq.write_table(inject(t, tbl), dst)
-        print(f"[ok] {t}")
+    write_tier(SRC, OUT, inject)
 
 
 if __name__ == "__main__":

@@ -33,26 +33,12 @@ import sys
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.parquet as pq
+
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from fixture_common import row_mask, write_tier  # noqa: E402
 
 SRC = os.environ.get("SPARK_GRAFT_JSON_SRC", "/root/testdata/sf0.01")
 OUT = os.environ.get("SPARK_GRAFT_JSON_DIR", "/tmp/spark_graft_json")
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-
-def _h(s: str) -> int:
-    h = 14695981039346656037
-    for b in s.encode():
-        h = ((h ^ b) * 1099511628211) % (2**64)
-    return h
-
-
-def _mask(tag: str, n: int, rate: float) -> np.ndarray:
-    rng = np.random.default_rng(_h(tag) % (2**32))
-    return rng.random(n) < rate
 
 
 def _mutants(k: str) -> list:
@@ -88,7 +74,7 @@ def inject(table: str, tbl: pa.Table) -> pa.Table:
     n = tbl.num_rows
     cols = {c: tbl.column(c).combine_chunks() for c in tbl.column_names}
     vals = cols["props"].to_pylist()
-    m = _mask("events.props#json", n, 0.09)
+    m = row_mask("events.props#json", n, 0.09)
     for i in np.flatnonzero(m):
         v = vals[i]
         if not v:
@@ -102,15 +88,7 @@ def inject(table: str, tbl: pa.Table) -> pa.Table:
 
 
 def main() -> None:
-    os.makedirs(OUT, exist_ok=True)
-    for t in TABLES:
-        dst = os.path.join(OUT, f"{t}.parquet")
-        if os.path.exists(dst):
-            print(f"[skip] {t} (exists)")
-            continue
-        tbl = pq.read_table(os.path.join(SRC, f"{t}.parquet"))
-        pq.write_table(inject(t, tbl), dst)
-        print(f"[ok] {t}")
+    write_tier(SRC, OUT, inject)
 
 
 if __name__ == "__main__":

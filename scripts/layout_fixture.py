@@ -25,12 +25,11 @@ import sys
 
 import pyarrow.parquet as pq
 
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from fixture_common import TABLES  # noqa: E402
+
 SRC = os.environ.get("SPARK_GRAFT_LAYOUT_SRC", "/root/testdata/sf0.01")
 OUT = os.environ.get("SPARK_GRAFT_LAYOUT_DIR", "/tmp/spark_graft_layout")
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 N_FILES = 4
 

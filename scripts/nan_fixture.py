@@ -38,26 +38,12 @@ import sys
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.parquet as pq
+
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from fixture_common import row_mask, write_tier  # noqa: E402
 
 SRC = os.environ.get("SPARK_GRAFT_NAN_SRC", "/root/testdata/sf0.01")
 OUT = os.environ.get("SPARK_GRAFT_NAN_DIR", "/tmp/spark_graft_nan")
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-
-def _h(s: str) -> int:
-    h = 14695981039346656037
-    for b in s.encode():
-        h = ((h ^ b) * 1099511628211) % (2**64)
-    return h
-
-
-def _mask(tag: str, n: int, rate: float) -> np.ndarray:
-    rng = np.random.default_rng(_h(tag) % (2**32))
-    return rng.random(n) < rate
 
 
 def inject(table: str, tbl: pa.Table) -> pa.Table:
@@ -66,9 +52,9 @@ def inject(table: str, tbl: pa.Table) -> pa.Table:
 
     if table == "events":
         vals = cols["value"].to_pylist()
-        m_nan = _mask("events.value#nan", n, 0.01)
-        m_pinf = _mask("events.value#pinf", n, 0.005) & ~m_nan
-        m_ninf = _mask("events.value#ninf", n, 0.005) & ~m_nan & ~m_pinf
+        m_nan = row_mask("events.value#nan", n, 0.01)
+        m_pinf = row_mask("events.value#pinf", n, 0.005) & ~m_nan
+        m_ninf = row_mask("events.value#ninf", n, 0.005) & ~m_nan & ~m_pinf
         for i in np.flatnonzero(m_nan):
             if vals[i] is not None:
                 vals[i] = math.nan
@@ -81,13 +67,13 @@ def inject(table: str, tbl: pa.Table) -> pa.Table:
         cols["value"] = pa.array(vals, type=tbl.schema.field("value").type)
     elif table == "embeddings":
         vecs = cols["embedding"].to_pylist()
-        m_nan = _mask("embeddings.vec#nan", n, 0.01)
-        m_inf = _mask("embeddings.vec#inf", n, 0.005) & ~m_nan
+        m_nan = row_mask("embeddings.vec#nan", n, 0.01)
+        m_inf = row_mask("embeddings.vec#inf", n, 0.005) & ~m_nan
         # NULL components (ADVICE r9): a vector like [1.0, NULL, 2.0] is the
         # exact shape where Spark's exists() 3VL and DuckDB's list_filter
         # NULL-dropping diverge — inject it so the finite_vec/VEC_FINITE_SQL
         # twins are exercised, not just whole-vector NULLs (null tier).
-        m_null = _mask("embeddings.vec#nullcomp", n, 0.005) & ~m_nan & ~m_inf
+        m_null = row_mask("embeddings.vec#nullcomp", n, 0.005) & ~m_nan & ~m_inf
         for i in np.flatnonzero(m_nan):
             v = vecs[i]
             if v:
@@ -107,15 +93,7 @@ def inject(table: str, tbl: pa.Table) -> pa.Table:
 
 
 def main() -> None:
-    os.makedirs(OUT, exist_ok=True)
-    for t in TABLES:
-        dst = os.path.join(OUT, f"{t}.parquet")
-        if os.path.exists(dst):
-            print(f"[skip] {t} (exists)")
-            continue
-        tbl = pq.read_table(os.path.join(SRC, f"{t}.parquet"))
-        pq.write_table(inject(t, tbl), dst)
-        print(f"[ok] {t}")
+    write_tier(SRC, OUT, inject)
 
 
 if __name__ == "__main__":

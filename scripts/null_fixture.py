@@ -34,7 +34,9 @@ import sys
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.parquet as pq
+
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from fixture_common import row_mask, write_tier  # noqa: E402
 
 SRC = os.environ.get("SPARK_GRAFT_NULLS_SRC", "/root/testdata/sf0.01")
 OUT = os.environ.get("SPARK_GRAFT_NULLS_DIR", "/tmp/spark_graft_nulls")
@@ -95,25 +97,6 @@ RATES: dict[str, dict[str, float]] = {
 EMPTY_TEXT_RATE = 0.01
 BLANK_TEXT_RATE = 0.01
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-
-def mask_for(table: str, col: str, n: int, rate: float) -> np.ndarray:
-    """Deterministic per-(table,column) boolean mask: True = null out."""
-    seed = abs(hash_stable(f"{table}.{col}")) % (2**32)
-    rng = np.random.default_rng(seed)
-    return rng.random(n) < rate
-
-
-def hash_stable(s: str) -> int:
-    # hash() is salted per-process; use a fixed FNV-1a so reruns are identical
-    h = 14695981039346656037
-    for b in s.encode():
-        h = ((h ^ b) * 1099511628211) % (2**64)
-    return h
-
 
 def inject(table: str, tbl: pa.Table) -> pa.Table:
     n = tbl.num_rows
@@ -122,15 +105,15 @@ def inject(table: str, tbl: pa.Table) -> pa.Table:
     for name in tbl.column_names:
         arr = tbl.column(name).combine_chunks()
         if name in rates:
-            m = mask_for(table, name, n, rates[name])
+            m = row_mask(f"{table}.{name}", n, rates[name])
             arr = pc.if_else(pa.array(~m), arr, pa.nulls(n, arr.type))
         cols[name] = arr
     if table == "documents":
         # empty + whitespace-only text on rows NOT already nulled
         text = cols["text"]
         base = np.asarray(pc.is_null(text))
-        m_empty = mask_for(table, "text#empty", n, EMPTY_TEXT_RATE) & ~base
-        m_blank = mask_for(table, "text#blank", n, BLANK_TEXT_RATE) & ~base & ~m_empty
+        m_empty = row_mask(f"{table}.text#empty", n, EMPTY_TEXT_RATE) & ~base
+        m_blank = row_mask(f"{table}.text#blank", n, BLANK_TEXT_RATE) & ~base & ~m_empty
         py = text.to_pylist()
         for i in np.flatnonzero(m_empty):
             py[i] = ""
@@ -140,22 +123,15 @@ def inject(table: str, tbl: pa.Table) -> pa.Table:
     return pa.table(cols)
 
 
+def _null_note(_, out: pa.Table) -> str:
+    injected = {
+        c: out.column(c).null_count for c in out.column_names if out.column(c).null_count
+    }
+    return f": {out.num_rows} rows, nulls {injected or '{}'}"
+
+
 def main() -> None:
-    os.makedirs(OUT, exist_ok=True)
-    for t in TABLES:
-        dst = os.path.join(OUT, f"{t}.parquet")
-        if os.path.exists(dst):
-            print(f"[skip] {t} (exists)")
-            continue
-        tbl = pq.read_table(os.path.join(SRC, f"{t}.parquet"))
-        out = inject(t, tbl)
-        pq.write_table(out, dst)
-        injected = {
-            c: out.column(c).null_count
-            for c in out.column_names
-            if out.column(c).null_count
-        }
-        print(f"[ok] {t}: {out.num_rows} rows, nulls {injected or '{}'}")
+    write_tier(SRC, OUT, inject, note=_null_note)
 
 
 if __name__ == "__main__":

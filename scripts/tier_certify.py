@@ -136,22 +136,33 @@ def build_corpus(steps: list[tuple[str, dict[str, str]]], keep: bool) -> None:
         )
 
 
-def sweep(sf_dir: str) -> tuple[str, bool]:
+def sweep(
+    sf_dir: str, ids: list[str] | tuple[str, ...] = (), dump: str | None = None
+) -> tuple[str, bool]:
+    """Run driver_sim over ``sf_dir`` — every operator, or just ``ids`` —
+    in a fresh subprocess; return (summary line, passed). On failure the
+    FULL driver_sim output is written to ``dump`` when one is given: the
+    one-line summary drops the spark-vs-oracle row diff, which twice left
+    an intermittent mismatch undiagnosable after the fact."""
     proc = subprocess.run(
-        [PY, os.path.join(SCRIPTS, "driver_sim.py"), "--sf-dir", sf_dir],
+        [PY, os.path.join(SCRIPTS, "driver_sim.py"), "--sf-dir", sf_dir, *ids],
         capture_output=True,
         text=True,
     )
+    ok = proc.returncode == 0
+    if dump and not ok:
+        with open(dump, "w") as fh:
+            fh.write(f"{proc.stdout}\n--- stderr ---\n{proc.stderr or ''}")
     tail = proc.stdout.strip().splitlines()
     m = _SUMMARY_RE.search(tail[-1]) if tail else None
     if m is None:
         err = (proc.stderr or proc.stdout).strip().splitlines()[-8:]
         return f"NO SUMMARY (exit {proc.returncode}): " + " | ".join(err), False
-    fails = [ln for ln in tail if ln.startswith("[FAIL]")]
+    fails = [ln for ln in tail if ln.startswith(("[FAIL]", "[ ERR"))]
     line = m.group(0)
     if fails:
         line += "  FIRST FAILURES: " + "; ".join(fails[:5])
-    return line, proc.returncode == 0
+    return line, ok
 
 
 def main() -> int:

@@ -8,9 +8,10 @@ for a 13-op block) so new-code defects surface while the code is still
 fresh (round 12: caught udtf_table_partition_stats' first-event NULL
 conflation on the nulls tier within minutes of writing it).
 
-Reuses tier_certify's fixture definitions (corpora are built once and
-reused via the keep semantics); each tier runs driver_sim in a fresh
-subprocess with the ID list.
+Reuses tier_certify's tier table, corpus builder (corpora are built once
+and reused via the keep semantics) and sweep(): each tier runs driver_sim
+in a fresh subprocess with the ID list, and a failing tier's full output
+is kept in /tmp/tier_subset_fail_<tier>.log.
 
 Usage: python scripts/tier_subset.py id1 [id2 ...]
 """
@@ -18,7 +19,6 @@ Usage: python scripts/tier_subset.py id1 [id2 ...]
 from __future__ import annotations
 
 import os
-import subprocess
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -33,28 +33,11 @@ def main() -> int:
     fail = False
     for tier, (steps, sf_dir) in tc.TIERS.items():
         tc.build_corpus(steps, keep=True)
-        proc = subprocess.run(
-            [sys.executable, os.path.join(tc.SCRIPTS, "driver_sim.py"),
-             "--sf-dir", sf_dir] + ids,
-            capture_output=True, text=True,
-        )
-        tail = proc.stdout.strip().splitlines()
-        summary = tail[-1] if tail else "(no output)"
-        fails = [ln for ln in tail
-                 if ln.startswith("[FAIL]") or ln.startswith("[ ERR")]
-        print(f"{tier:10s} {summary}"
-              + ("  " + "; ".join(fails[:4]) if fails else ""), flush=True)
-        if proc.returncode != 0:
+        dump = f"/tmp/tier_subset_fail_{tier}.log"
+        line, ok = tc.sweep(sf_dir, ids, dump=dump)
+        print(f"{tier:10s} {line}", flush=True)
+        if not ok:
             fail = True
-            # Persist the FULL driver_sim output: the one-line fail
-            # summary drops the spark-vs-oracle row diff, which twice in
-            # r14 left an intermittent mismatch undiagnosable after the
-            # fact (the stream_session ties investigation).
-            dump = f"/tmp/tier_subset_fail_{tier}.log"
-            with open(dump, "w") as fh:
-                fh.write(proc.stdout)
-                fh.write("\n--- stderr ---\n")
-                fh.write(proc.stderr or "")
             print(f"{'':10s} full output -> {dump}", flush=True)
     print("TIER SUBSET:", "FAIL" if fail else "PASS")
     return 1 if fail else 0

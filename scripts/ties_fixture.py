@@ -39,7 +39,9 @@ import sys
 
 import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.parquet as pq
+
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from fixture_common import write_tier  # noqa: E402
 
 SRC = os.environ.get("SPARK_GRAFT_TIES_SRC", "/root/testdata/sf0.01")
 OUT = os.environ.get("SPARK_GRAFT_TIES_DIR", "/tmp/spark_graft_ties")
@@ -76,16 +78,10 @@ def build_table(t: str, tbl: pa.Table) -> pa.Table:
 
 
 def main() -> None:
-    os.makedirs(OUT, exist_ok=True)
-    for t in PLAN:
-        dst = os.path.join(OUT, f"{t}.parquet")
-        if os.path.exists(dst):
-            print(f"[skip] {t} (exists)")
-            continue
-        tbl = pq.read_table(os.path.join(SRC, f"{t}.parquet"))
-        out = build_table(t, tbl)
-        pq.write_table(out, dst)
-        print(f"[ok] {t}: {tbl.num_rows} -> {out.num_rows} rows")
+    write_tier(
+        SRC, OUT, build_table, tables=PLAN,
+        note=lambda tbl, out: f": {tbl.num_rows} -> {out.num_rows} rows",
+    )
 
 
 if __name__ == "__main__":

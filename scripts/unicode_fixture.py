@@ -30,7 +30,9 @@ import sys
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.parquet as pq
+
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from fixture_common import row_mask, stable_hash, write_tier  # noqa: E402
 
 SRC = os.environ.get("SPARK_GRAFT_UNICODE_SRC", "/root/testdata/sf0.01")
 OUT = os.environ.get("SPARK_GRAFT_UNICODE_DIR", "/tmp/spark_graft_unicode")
@@ -54,25 +56,9 @@ FRAGMENTS = [
     "ﬁﬂﬀﬆ ŉǰ և ﬓﬔ ẖẗ ᾷᾼ",
 ]
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-
-def _h(s: str) -> int:
-    h = 14695981039346656037
-    for b in s.encode():
-        h = ((h ^ b) * 1099511628211) % (2**64)
-    return h
-
-
-def _mask(tag: str, n: int, rate: float) -> np.ndarray:
-    rng = np.random.default_rng(_h(tag) % (2**32))
-    return rng.random(n) < rate
-
 
 def _frag(tag: str, i: int) -> str:
-    return FRAGMENTS[(_h(f"{tag}:{i}")) % len(FRAGMENTS)]
+    return FRAGMENTS[(stable_hash(f"{tag}:{i}")) % len(FRAGMENTS)]
 
 
 def inject(table: str, tbl: pa.Table) -> pa.Table:
@@ -81,8 +67,8 @@ def inject(table: str, tbl: pa.Table) -> pa.Table:
 
     def splice(col: str, rate_append: float, rate_embed: float = 0.0):
         vals = cols[col].to_pylist()
-        m_app = _mask(f"{table}.{col}#app", n, rate_append)
-        m_emb = _mask(f"{table}.{col}#emb", n, rate_embed) & ~m_app
+        m_app = row_mask(f"{table}.{col}#app", n, rate_append)
+        m_emb = row_mask(f"{table}.{col}#emb", n, rate_embed) & ~m_app
         for i in np.flatnonzero(m_app):
             if vals[i] is not None:
                 vals[i] = f"{vals[i]} {_frag(col, int(i))}"
@@ -104,7 +90,7 @@ def inject(table: str, tbl: pa.Table) -> pa.Table:
     elif table == "events":
         # unicode INSIDE JSON string values: parse-safe, value-adversarial
         vals = cols["props"].to_pylist()
-        m = _mask("events.props", n, 0.05)
+        m = row_mask("events.props", n, 0.05)
         for i in np.flatnonzero(m):
             v = vals[i]
             if v and v.endswith("}") and '"' in v:
@@ -114,16 +100,7 @@ def inject(table: str, tbl: pa.Table) -> pa.Table:
 
 
 def main() -> None:
-    os.makedirs(OUT, exist_ok=True)
-    for t in TABLES:
-        dst = os.path.join(OUT, f"{t}.parquet")
-        if os.path.exists(dst):
-            print(f"[skip] {t} (exists)")
-            continue
-        tbl = pq.read_table(os.path.join(SRC, f"{t}.parquet"))
-        out = inject(t, tbl)
-        pq.write_table(out, dst)
-        print(f"[ok] {t}: {out.num_rows} rows")
+    write_tier(SRC, OUT, inject, note=lambda _, out: f": {out.num_rows} rows")
 
 
 if __name__ == "__main__":

@@ -59,13 +59,8 @@ EPOCH_TIER_IDS = [
 
 @pytest.fixture(scope="module")
 def epoch_dir(tmp_path_factory):
-    import pyarrow.parquet as pq
-
     out = str(tmp_path_factory.mktemp("epoch_sf0001"))
-    src = "/root/testdata/sf0.001"
-    for t in _ep.TABLES:
-        tbl = pq.read_table(os.path.join(src, f"{t}.parquet"))
-        pq.write_table(_ep.inject(t, tbl), os.path.join(out, f"{t}.parquet"))
+    _ep.write_tier("/root/testdata/sf0.001", out, _ep.inject)
     return out
 
 

@@ -52,13 +52,8 @@ EXTREMES_TIER_IDS = [
 
 @pytest.fixture(scope="module")
 def extremes_dir(tmp_path_factory):
-    import pyarrow.parquet as pq
-
     out = str(tmp_path_factory.mktemp("extremes_sf0001"))
-    src = "/root/testdata/sf0.001"
-    for t in _ext.TABLES:
-        tbl = pq.read_table(os.path.join(src, f"{t}.parquet"))
-        pq.write_table(_ext.inject(t, tbl), os.path.join(out, f"{t}.parquet"))
+    _ext.write_tier("/root/testdata/sf0.001", out, _ext.inject)
     return out
 
 

@@ -53,13 +53,8 @@ JSON_TIER_IDS = [
 
 @pytest.fixture(scope="module")
 def json_dir(tmp_path_factory):
-    import pyarrow.parquet as pq
-
     out = str(tmp_path_factory.mktemp("json_sf0001"))
-    src = "/root/testdata/sf0.001"
-    for t in _js.TABLES:
-        tbl = pq.read_table(os.path.join(src, f"{t}.parquet"))
-        pq.write_table(_js.inject(t, tbl), os.path.join(out, f"{t}.parquet"))
+    _js.write_tier("/root/testdata/sf0.001", out, _js.inject)
     return out
 
 

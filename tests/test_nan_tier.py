@@ -77,13 +77,8 @@ NAN_TIER_IDS = [
 
 @pytest.fixture(scope="module")
 def nan_dir(tmp_path_factory):
-    import pyarrow.parquet as pq
-
     out = str(tmp_path_factory.mktemp("nan_sf0001"))
-    src = "/root/testdata/sf0.001"
-    for t in _nan.TABLES:
-        tbl = pq.read_table(os.path.join(src, f"{t}.parquet"))
-        pq.write_table(_nan.inject(t, tbl), os.path.join(out, f"{t}.parquet"))
+    _nan.write_tier("/root/testdata/sf0.001", out, _nan.inject)
     return out
 
 

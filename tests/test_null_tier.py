@@ -67,15 +67,8 @@ NULL_TIER_IDS = [
 @pytest.fixture(scope="module")
 def nulls_dir(tmp_path_factory):
     """sf0.001-derived null-injected corpus, built once per test run."""
-    import pyarrow.parquet as pq
-
     out = str(tmp_path_factory.mktemp("nulls_sf0001"))
-    src = "/root/testdata/sf0.001"
-    for t in _null_fixture.TABLES:
-        tbl = pq.read_table(os.path.join(src, f"{t}.parquet"))
-        pq.write_table(
-            _null_fixture.inject(t, tbl), os.path.join(out, f"{t}.parquet")
-        )
+    _null_fixture.write_tier("/root/testdata/sf0.001", out, _null_fixture.inject)
     return out
 
 

@@ -48,14 +48,18 @@ def test_unchanged_code_ranks_behind_everything(certified):
 @pytest.mark.parametrize(
     "module, name, value, moved",
     [
-        (dedup, "_minhash_band_bucket", lambda prefix, b: "0", "dedup_near_minhash"),
-        # reached through a function-local import in round5_waves
-        (dedup, "_cw_sig_agg_exprs", lambda: [],
-         "dedup_near_minhash dedup_eval_precision_recall"),
+        (dedup, "_minhash_near_pairs", lambda docs, sf_dir: docs,
+         "dedup_near_minhash dedup_eval_precision_recall dedup_removal_plan"),
+        # reached through function-local imports in ai/text.py and round5.py
+        (dedup, "_corpus_with_exact_dups", lambda spark, sf_dir: None,
+         "dedup_exact dedup_simhash dedup_removal_plan text_paragraph_dedup "
+         "dedup_family_sizes"),
+        # reached through _shingled_docs, also from round5_waves/round16_fns
         (dedup, "_SHINGLES_EXPR", "array()",
-         "dedup_eval_precision_recall dedup_minhash_estimate_error "
-         "dedup_near_minhash dedup_ngram_jaccard text_containment_pairs "
-         "text_shingle_df_cap_loss text_shingle_df_spectrum"),
+         "dedup_eval_precision_recall dedup_lsh_band_tuning "
+         "dedup_minhash_estimate_error dedup_near_minhash dedup_ngram_jaccard "
+         "dedup_removal_plan text_containment_pairs text_shingle_df_cap_loss "
+         "text_shingle_df_spectrum"),
         # run-time state: a global op_tmpdir rebinds, and a cache dict
         (tmpdirs, "_ROOT", "/elsewhere", ""),
         (registry, "_events_ts_unit", {("a",): "ns"}, ""),

@@ -51,13 +51,8 @@ UNICODE_TIER_IDS = [
 
 @pytest.fixture(scope="module")
 def unicode_dir(tmp_path_factory):
-    import pyarrow.parquet as pq
-
     out = str(tmp_path_factory.mktemp("unicode_sf0001"))
-    src = "/root/testdata/sf0.001"
-    for t in _uni.TABLES:
-        tbl = pq.read_table(os.path.join(src, f"{t}.parquet"))
-        pq.write_table(_uni.inject(t, tbl), os.path.join(out, f"{t}.parquet"))
+    _uni.write_tier("/root/testdata/sf0.001", out, _uni.inject)
     return out
 
 
