@@ -4,6 +4,7 @@ operator into the catalog (ai_dataingestion_spark.catalog)."""
 from ai_dataingestion_spark.operators import (  # noqa: F401
     aggregates,
     analytics,
+    events,
     extended,
     joins,
     projections,

@@ -1,8 +1,8 @@
 """Round-2 surface extensions (SURVEY.md §2.N): deeper TPC-H composites,
 decorrelated scalar subqueries, robust statistics (median / IQR outliers /
-weighted means), a gap-filled time-series rollup, fuzzy string matching,
-per-label embedding centroids, SCD2 interval building, per-doc keyword
-extraction, and cross-source exact-dup (leakage) detection.
+weighted means), fuzzy string matching, per-label embedding centroids, SCD2
+interval building, per-doc keyword extraction, and cross-source exact-dup
+(leakage) detection.
 
 Float discipline follows SURVEY.md §5.4: sums of money PRODUCTS go through
 DECIMAL(38,6); quotients (averages, ratios) round at 6 dp; counts and keys
@@ -266,54 +266,6 @@ def quality_outlier_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.any_value("q3"), 4).alias("q3"),
             F.count(F.when(F.col("o_totalprice") > hi, 1)).alias("n_high"),
             F.count(F.when(F.col("o_totalprice") < lo, 1)).alias("n_low"),
-        )
-    )
-
-
-@register(
-    "events_timeseries_rollup",
-    oracle="""
-WITH spine AS (
-  SELECT CAST(unnest(generate_series(DATE '2024-01-01', DATE '2024-01-30',
-                                     INTERVAL 1 DAY)) AS DATE) AS d
-),
-daily AS (
-  SELECT CAST(ts AS DATE) AS d, count(*) AS n FROM events GROUP BY 1
-)
-SELECT CAST(s.d AS VARCHAR) AS day,
-       coalesce(dy.n, 0) AS n,
-       round(avg(coalesce(dy.n, 0)) OVER (
-         ORDER BY s.d ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 6) AS ma7
-FROM spine s LEFT JOIN daily dy ON s.d = dy.d
-""",
-)
-def events_timeseries_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-filled daily rollup + 7-day trailing mean: a generated date spine
-    LEFT-JOINs the daily aggregate so silent gaps become explicit zeros
-    (a rolling window over a gappy series silently averages the wrong
-    days), then a rows-frame moving average. At 100 TB the spine is trivially
-    broadcast and the daily aggregate is the only real shuffle."""
-    e = Tables(spark, sf_dir).events
-    spine = spark.range(1).select(
-        F.explode(
-            F.sequence(
-                F.lit("2024-01-01").cast("date"),
-                F.lit("2024-01-30").cast("date"),
-                F.expr("interval 1 day"),
-            )
-        ).alias("d")
-    )
-    daily = e.groupBy(F.col("ts").cast("date").alias("d")).agg(
-        F.count(F.lit(1)).alias("n_raw")
-    )
-    w = Window.orderBy("d").rowsBetween(-6, 0)
-    return (
-        spine.join(daily, "d", "left")
-        .select("d", F.coalesce("n_raw", F.lit(0)).alias("n"))
-        .select(
-            F.col("d").cast("string").alias("day"),
-            "n",
-            F.round(F.avg("n").over(w), 6).alias("ma7"),
         )
     )
 
@@ -856,50 +808,6 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.regexp_extract_all("text", F.lit(_PHONE_RE), 0))
         .cast("bigint")
         .alias("n_phones"),
-    )
-
-
-@register(
-    "events_anomaly_zscore",
-    oracle="""
-WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS d, count(*) AS n
-  FROM events GROUP BY 1, 2
-),
-stats AS (
-  SELECT event_type, avg(n) AS mu, stddev_samp(n) AS sigma
-  FROM daily GROUP BY event_type
-)
-SELECT d.event_type, CAST(d.d AS VARCHAR) AS day, d.n,
-       round((d.n - s.mu) / s.sigma, 6) AS z
-FROM daily d JOIN stats s ON d.event_type = s.event_type
-WHERE abs((d.n - s.mu) / s.sigma) >= 1.5
-""",
-)
-def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Volume-anomaly detection (pipeline observability): per-type daily
-    counts z-scored against that type's own mean/stddev; days beyond
-    |z| >= 1.5 are flagged. Two partial-aggregable passes with the tiny
-    stats table broadcast back — the same shape as quality_outlier_iqr but
-    over a derived time series. z is a quotient of identically-computed
-    doubles, stable at 6 dp."""
-    e = Tables(spark, sf_dir).events
-    daily = e.groupBy(
-        "event_type", F.col("ts").cast("date").alias("d")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    stats = daily.groupBy("event_type").agg(
-        F.avg("n").alias("mu"), F.stddev_samp("n").alias("sigma")
-    )
-    z = (F.col("n") - F.col("mu")) / F.col("sigma")
-    return (
-        daily.join(F.broadcast(stats), "event_type")
-        .filter(F.abs(z) >= 1.5)
-        .select(
-            "event_type",
-            F.col("d").cast("string").alias("day"),
-            "n",
-            F.round(z, 6).alias("z"),
-        )
     )
 
 
@@ -1921,82 +1829,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.unix_micros("purchase_ts") - F.unix_micros("click_ts")).alias(
             "lag_us"
         ),
-    )
-
-
-@register(
-    "events_sessionize_batch",
-    oracle="""
-WITH seq AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id
-                                      ORDER BY ts, event_id)
-                   > INTERVAL 30 MINUTE
-              OR lag(ts) OVER (PARTITION BY user_id
-                               ORDER BY ts, event_id) IS NULL
-              THEN 1 ELSE 0 END AS is_new
-  FROM events
-),
-sess AS (
-  -- event_id tiebreak matches the Spark cum window: with duplicate
-  -- (user_id, ts) rows a ts-only ROWS frame would make the cumsum order
-  -- nondeterministic (ADVICE r2)
-  SELECT user_id, ts,
-         CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-  FROM seq
-),
-per_session AS (
-  SELECT user_id, session_id, count(*) AS n_events,
-         epoch_us(max(ts)) - epoch_us(min(ts)) AS dur_us
-  FROM sess GROUP BY user_id, session_id
-)
-SELECT user_id, count(*) AS n_sessions,
-       max(n_events) AS max_session_events,
-       CAST(max(dur_us) AS BIGINT) AS max_session_dur_us
-FROM per_session
-GROUP BY user_id
-ORDER BY user_id
-""",
-)
-def events_sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch sessionization with the 30-minute-gap rule (the offline twin
-    of `stream_session`'s session windows): flag session starts with lag,
-    running-sum the flags into session ids, then roll up per session and
-    per user. All four windows/aggregations partition by user_id — one
-    shuffle feeds the entire pipeline. Durations exported as epoch-µs
-    deltas (sub-second timestamps never cross engines as strings)."""
-    e = Tables(spark, sf_dir).events
-    w = Window.partitionBy("user_id").orderBy(F.asc_nulls_last("ts"), "event_id")
-    prev = F.lag("ts").over(w)
-    gap_us = F.unix_micros(F.col("ts").cast("timestamp")) - F.unix_micros(
-        prev.cast("timestamp")
-    )
-    seq = e.select(
-        "user_id",
-        "ts",
-        F.when(prev.isNull() | (gap_us > 30 * 60 * 1_000_000), 1)
-        .otherwise(0)
-        .alias("is_new"),
-        "event_id",
-    )
-    cum = Window.partitionBy("user_id").orderBy(F.asc_nulls_last("ts"), "event_id").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    sess = seq.select(
-        "user_id", "ts", F.sum("is_new").over(cum).alias("session_id")
-    )
-    per_session = sess.groupBy("user_id", "session_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        (
-            F.unix_micros(F.max("ts").cast("timestamp"))
-            - F.unix_micros(F.min("ts").cast("timestamp"))
-        ).alias("dur_us"),
-    )
-    return per_session.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_sessions"),
-        F.max("n_events").alias("max_session_events"),
-        F.max("dur_us").alias("max_session_dur_us"),
     )
 
 

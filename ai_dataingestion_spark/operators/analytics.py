@@ -1,7 +1,6 @@
-"""Composite analytics queries: TPC-H-shaped multi-operator queries adapted
-to the corpus schema, and event-funnel/cohort workloads over the stream
-table — the full-query surface a user of an analytics engine actually runs,
-exercising many operators per plan (scan+filter+join+agg+window+topk).
+"""TPC-H-shaped composite queries adapted to the corpus schema: the
+full-query surface a user of an analytics engine actually runs, exercising
+many operators per plan (scan+filter+join+agg+window+topk).
 """
 
 from __future__ import annotations
@@ -167,199 +166,6 @@ def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "events_funnel",
-    oracle="""
-WITH firsts AS (
-  SELECT user_id,
-         min(CASE WHEN event_type = 'signup'   THEN ts END) AS t_signup,
-         min(CASE WHEN event_type = 'click'    THEN ts END) AS t_click,
-         min(CASE WHEN event_type = 'purchase' THEN ts END) AS t_purchase
-  FROM events
-  GROUP BY user_id
-)
-SELECT count(*)                                             AS n_users,
-       count(t_signup)                                      AS n_signup,
-       count(CASE WHEN t_click > t_signup THEN 1 END)       AS n_click_after,
-       count(CASE WHEN t_purchase > t_click
-                   AND t_click > t_signup THEN 1 END)       AS n_full_funnel
-FROM firsts
-""",
-)
-def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered funnel: signup → first click after signup → first purchase
-    after that click. One conditional-min aggregation pass per user, then a
-    single funnel rollup — no self-joins (each stage gate is a comparison
-    of first-occurrence times), which is what keeps funnels linear-cost at
-    100 TB."""
-    e = Tables(spark, sf_dir).events
-    firsts = e.groupBy("user_id").agg(
-        F.min(F.when(F.col("event_type") == "signup", F.col("ts"))).alias("t_signup"),
-        F.min(F.when(F.col("event_type") == "click", F.col("ts"))).alias("t_click"),
-        F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias(
-            "t_purchase"
-        ),
-    )
-    return firsts.agg(
-        F.count(F.lit(1)).alias("n_users"),
-        F.count("t_signup").alias("n_signup"),
-        F.count(F.when(F.col("t_click") > F.col("t_signup"), 1)).alias(
-            "n_click_after"
-        ),
-        F.count(
-            F.when(
-                (F.col("t_purchase") > F.col("t_click"))
-                & (F.col("t_click") > F.col("t_signup")),
-                1,
-            )
-        ).alias("n_full_funnel"),
-    )
-
-
-@register(
-    "events_cohort_retention",
-    oracle="""
-WITH firsts AS (
-  SELECT user_id, CAST(min(ts) AS DATE) AS cohort_day FROM events GROUP BY user_id
-),
-activity AS (
-  SELECT DISTINCT e.user_id, f.cohort_day,
-         date_diff('day', f.cohort_day, CAST(e.ts AS DATE)) AS day_offset
-  FROM events e JOIN firsts f ON e.user_id = f.user_id
-)
-SELECT CAST(cohort_day AS VARCHAR) AS cohort,
-       day_offset,
-       count(*) AS n_active
-FROM activity
-WHERE day_offset BETWEEN 0 AND 7
-GROUP BY cohort_day, day_offset
-""",
-)
-def events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention triangle: users grouped by first-seen day, counted
-    as active per day-offset 0..7. The cohort assignment is a per-user
-    aggregate joined back (broadcastable: one row per user), then a
-    distinct + rollup — the standard retention shape."""
-    e = Tables(spark, sf_dir).events
-    firsts = e.groupBy("user_id").agg(
-        F.min("ts").cast("date").alias("cohort_day")
-    )
-    activity = (
-        e.join(firsts, "user_id")
-        .select(
-            "user_id",
-            "cohort_day",
-            F.datediff(F.col("ts").cast("date"), F.col("cohort_day")).alias(
-                "day_offset"
-            ),
-        )
-        .distinct()
-    )
-    return (
-        activity.filter(F.col("day_offset").between(0, 7))
-        .groupBy("cohort_day", "day_offset")
-        .agg(F.count(F.lit(1)).alias("n_active"))
-        .select(
-            F.col("cohort_day").cast("string").alias("cohort"),
-            F.col("day_offset").cast("bigint").alias("day_offset"),
-            "n_active",
-        )
-    )
-
-
-@register(
-    "events_transition_matrix",
-    oracle="""
-WITH ordered AS (
-  SELECT user_id, event_type,
-         lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-           AS prev_type
-  FROM events
-),
-counts AS (
-  SELECT prev_type, event_type AS next_type, count(*) AS n
-  FROM ordered WHERE prev_type IS NOT NULL
-  GROUP BY prev_type, event_type
-)
-SELECT prev_type, next_type, n,
-       round(CAST(n AS DOUBLE) /
-             sum(n) OVER (PARTITION BY prev_type), 6) AS p
-FROM counts
-""",
-)
-def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition matrix over per-user event streams:
-    lag(event_type) within (user, ts-order) gives bigrams, counted and
-    normalized per source state. The lag window shuffles once on user_id;
-    the transition counts then collapse to |event_types|² rows, so the
-    normalizing window runs on a broadcast-sized relation at any corpus
-    size. Deterministic ordering via the (ts, event_id) tie-break."""
-    e = Tables(spark, sf_dir).events
-    w = Window.partitionBy("user_id").orderBy(F.asc_nulls_last("ts"), "event_id")
-    ordered = e.select(
-        "user_id",
-        "event_type",
-        F.lag("event_type").over(w).alias("prev_type"),
-    )
-    counts = (
-        ordered.filter(F.col("prev_type").isNotNull())
-        .groupBy("prev_type", F.col("event_type").alias("next_type"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    wp = Window.partitionBy("prev_type")
-    return counts.select(
-        "prev_type",
-        "next_type",
-        "n",
-        F.round(
-            F.col("n").cast("double") / F.sum("n").over(wp), 6
-        ).alias("p"),
-    )
-
-
-@register(
-    "events_dau_mau",
-    oracle="""
-WITH daily AS (
-  SELECT date_trunc('day', ts) AS day,
-         date_trunc('month', ts) AS month,
-         count(DISTINCT user_id) AS dau
-  FROM events GROUP BY 1, 2
-),
-monthly AS (
-  SELECT date_trunc('month', ts) AS month,
-         count(DISTINCT user_id) AS mau
-  FROM events GROUP BY 1
-)
-SELECT d.day, d.dau, m.mau,
-       round(CAST(d.dau AS DOUBLE) / m.mau, 6) AS stickiness
-FROM daily d JOIN monthly m USING (month)
-""",
-)
-def events_dau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DAU/MAU engagement: distinct users per day, per month, and the
-    day-over-month stickiness ratio. Two partial-aggregable distinct
-    counts; the day->month join is broadcast-sized (one row per month) at
-    any scale. The month column rides along in the daily aggregate so the
-    join needs no recomputation from day values."""
-    e = Tables(spark, sf_dir).events
-    daily = e.groupBy(
-        F.date_trunc("day", "ts").alias("day"),
-        F.date_trunc("month", "ts").alias("month"),
-    ).agg(F.countDistinct("user_id").alias("dau"))
-    monthly = e.groupBy(F.date_trunc("month", "ts").alias("month")).agg(
-        F.countDistinct("user_id").alias("mau")
-    )
-    return daily.join(F.broadcast(monthly), "month").select(
-        "day",
-        "dau",
-        "mau",
-        F.round(F.col("dau").cast("double") / F.col("mau"), 6).alias(
-            "stickiness"
-        ),
-    )
-
-
-@register(
     "tpch_q15_top_supplier",
     oracle="""
 WITH revenue AS (
@@ -467,119 +273,4 @@ def tpch_q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("revenue"),
             F.count(F.lit(1)).alias("n_items"),
         )
-    )
-
-
-@register(
-    "events_bot_rate_flag",
-    oracle="""
-WITH rate AS (
-  SELECT user_id, date_trunc('day', ts) AS day, count(*) AS n
-  FROM events GROUP BY 1, 2
-),
-per_user AS (
-  SELECT user_id,
-         max(n) AS peak_daily,
-         CAST(sum(n) AS BIGINT) AS total_events,
-         count(*) AS active_days
-  FROM rate GROUP BY user_id
-)
-SELECT user_id, peak_daily, total_events, active_days
-FROM per_user WHERE peak_daily >= 7
-""",
-)
-def events_bot_rate_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rate-based bot/abuse screen (the ingestion gate a training pipeline
-    runs before trusting behavioral data): bucket events per (user, day),
-    flag users whose peak daily rate >= 7 (the measured p99+ of this
-    corpus), reporting peak, volume, and active days. Two stacked
-    partial-aggregable groupBys — the (user, day) relation is the only
-    shuffle that scales with data, and it carries counts, not events."""
-    e = Tables(spark, sf_dir).events
-    rate = e.groupBy(
-        "user_id", F.date_trunc("day", "ts").alias("day")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    per_user = rate.groupBy("user_id").agg(
-        F.max("n").alias("peak_daily"),
-        F.sum("n").alias("total_events"),
-        F.count(F.lit(1)).alias("active_days"),
-    )
-    return per_user.filter(F.col("peak_daily") >= 7)
-
-
-_EWMA_ALPHA = 0.3
-
-
-@register(
-    "events_ewma_daily",
-    oracle=f"""
-WITH daily AS (
-  -- NULL timestamps have no day: a daily series cannot seat them, and
-  -- the two engines would disagree on which end of the sequence the
-  -- NULL day occupies (t=0 poisons x0 on one side)
-  SELECT event_type, date_trunc('day', ts) AS day,
-         CAST(count(*) AS DOUBLE) AS x
-  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2
-),
-seq AS (
-  SELECT event_type, day, x,
-         row_number() OVER (PARTITION BY event_type ORDER BY day) - 1 AS t,
-         first_value(x) OVER (PARTITION BY event_type ORDER BY day) AS x0
-  FROM daily
-),
-acc AS (
-  SELECT event_type, day, x, t, x0,
-         sum(CASE WHEN t = 0 THEN 0.0
-                  ELSE x * power({1 - _EWMA_ALPHA}, -t) END)
-           OVER (PARTITION BY event_type ORDER BY t) AS wsum
-  FROM seq
-)
-SELECT event_type, day, CAST(x AS BIGINT) AS n_events,
-       round(power({1 - _EWMA_ALPHA}, t) * (x0 + {_EWMA_ALPHA} * wsum), 6)
-         AS ewma
-FROM acc
-""",
-)
-def events_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exponentially-weighted moving average of daily event volume per
-    type (recursive y_t = (1-α)y_(t-1) + αx_t, y_0 = x_0) — the smoothing
-    primitive of anomaly/trend monitors, expressed NON-recursively via the
-    closed form y_t = (1-α)^t·x_0 + α·Σ (1-α)^(t-i)·x_i, which is one
-    running window sum of power-weighted terms. The weight (1-α)^(-i)
-    grows only to (0.7)^-30 ≈ 4e4 over this corpus's 30-day span, so the
-    prefix-sum trick is numerically safe; both engines evaluate identical
-    double math, rounded to 6 dp. One shuffle on event_type; window input
-    is days × types — broadcast-sized at any event volume."""
-    e = Tables(spark, sf_dir).events.where(F.col("ts").isNotNull())
-    daily = e.groupBy(
-        "event_type", F.date_trunc("day", "ts").alias("day")
-    ).agg(F.count(F.lit(1)).cast("double").alias("x"))
-    w_ord = Window.partitionBy("event_type").orderBy("day")
-    seq = daily.select(
-        "event_type",
-        "day",
-        "x",
-        (F.row_number().over(w_ord) - 1).alias("t"),
-        F.first("x").over(w_ord).alias("x0"),
-    )
-    w_acc = (
-        Window.partitionBy("event_type")
-        .orderBy("t")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    beta = 1 - _EWMA_ALPHA
-    wsum = F.sum(
-        F.when(F.col("t") == 0, 0.0).otherwise(
-            F.col("x") * F.pow(F.lit(beta), -F.col("t"))
-        )
-    ).over(w_acc)
-    return seq.select(
-        "event_type",
-        "day",
-        F.col("x").cast("bigint").alias("n_events"),
-        F.round(
-            F.pow(F.lit(beta), F.col("t"))
-            * (F.col("x0") + _EWMA_ALPHA * wsum),
-            6,
-        ).alias("ewma"),
     )

@@ -1,8 +1,8 @@
 """Round-5 surface extensions (SURVEY.md §2.P): the remaining TPC-H
 composites (adapted where the corpus lacks partsupp / commit dates),
-market-basket and seasonality analytics, time-series gap fill with LOCF,
-corpus-mixture / Zipf / charset text statistics, duplicate-family
-accounting, and cross-table reconciliation quality checks.
+growth, market-basket, decile and aging analytics, corpus-mixture / Zipf /
+charset text statistics, duplicate-family accounting, and cross-table
+reconciliation quality checks.
 
 Float discipline follows SURVEY.md §5.4: sums of money PRODUCTS go through
 DECIMAL(38,6) and are rounded in the decimal domain before the double
@@ -14,10 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ai_dataingestion_spark.catalog import register
-from ai_dataingestion_spark.functions.portable import (
-    stable_rounded_sum,
-    stable_rounded_sum_sql,
-)
 from ai_dataingestion_spark.scale import broadcast_if_small
 from ai_dataingestion_spark.registry import Tables
 
@@ -322,7 +318,7 @@ def tpch_q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# §2.P.2 analytics: growth, baskets, seasonality, deciles, aging
+# §2.P.2 analytics: growth, baskets, deciles, aging
 # ---------------------------------------------------------------------------
 
 
@@ -409,106 +405,6 @@ def market_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("part1", "part2")
         .agg(F.count(F.lit(1)).alias("n_orders"))
         .filter(F.col("n_orders") >= 3)
-    )
-
-
-@register(
-    "events_gap_fill_locf",
-    oracle=f"""
-WITH daily AS (
-  SELECT user_id, CAST(date_trunc('day', ts) AS DATE) AS day,
-         {stable_rounded_sum_sql("value", 6)} AS day_value
-  FROM events WHERE user_id % 50 = 0
-  GROUP BY user_id, CAST(date_trunc('day', ts) AS DATE)
-),
-spans AS (
-  SELECT user_id, min(day) AS d0, max(day) AS d1 FROM daily GROUP BY user_id
-),
-calendar AS (
-  SELECT user_id, unnest(generate_series(d0, d1, INTERVAL 1 DAY))::DATE AS day
-  FROM spans
-),
-joined AS (
-  SELECT c.user_id, c.day, d.day_value,
-         count(d.day_value) OVER (PARTITION BY c.user_id ORDER BY c.day
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp
-  FROM calendar c LEFT JOIN daily d USING (user_id, day)
-)
-SELECT user_id, day,
-       max(day_value) OVER (PARTITION BY user_id, grp) AS filled_value,
-       CAST(day_value IS NULL AS BOOLEAN) AS was_gap
-FROM joined
-""",
-)
-def events_gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-series gap fill with last-observation-carried-forward: each
-    sampled user's daily value series is densified to a full calendar
-    (sequence + explode — rows generated map-side, never collected) and
-    gaps take the most recent observed value via last(ignorenulls) over an
-    ordered window. One shuffle on user_id serves the window; the calendar
-    explode is bounded by each user's own span. day_value accumulates
-    order-independently (portable.py:stable_rounded_sum) so the value each
-    gap CARRIES FORWARD is draw-deterministic — a boundary flip here would
-    propagate into every filled day after it."""
-    t = Tables(spark, sf_dir)
-    daily = (
-        t.events.filter(F.col("user_id") % 50 == 0)
-        .groupBy(
-            "user_id", F.to_date(F.date_trunc("day", "ts")).alias("day")
-        )
-        .agg(stable_rounded_sum("value", 6).alias("day_value"))
-    )
-    spans = daily.groupBy("user_id").agg(
-        F.min("day").alias("d0"), F.max("day").alias("d1")
-    )
-    calendar = spans.select(
-        "user_id",
-        F.explode(F.expr("sequence(d0, d1, interval 1 day)")).alias("day"),
-    )
-    joined = calendar.join(daily, ["user_id", "day"], "left")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # day goes out as timestamp_ntz: DuckDB DATE arrives in pandas as a
-    # midnight datetime64, and Spark DateType as datetime.date — the driver
-    # canonicalizer treats those as distinct values (same class as the
-    # int-vs-float strictness), so both sides emit midnight timestamps
-    return joined.select(
-        "user_id",
-        F.col("day").cast("timestamp_ntz").alias("day"),
-        F.last("day_value", ignorenulls=True).over(w).alias("filled_value"),
-        F.col("day_value").isNull().alias("was_gap"),
-    )
-
-
-@register(
-    "events_hourly_matrix",
-    oracle="""
-SELECT dayofweek(ts) AS dow, hour(ts) AS hod,
-       count(*) AS n_events,
-       round(avg(value), 6) AS avg_value
-FROM events GROUP BY dayofweek(ts), hour(ts)
-""",
-)
-def events_hourly_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seasonality matrix: event count and mean value per (day-of-week,
-    hour-of-day) cell — a 7 x 24-bounded output at any corpus size, fully
-    partial-aggregable (map-side combine carries 168 cells per task).
-    Dialect note: Spark dayofweek() is 1=Sunday..7=Saturday; DuckDB
-    dayofweek() is 0=Sunday..6 — aligned by matching Spark to DuckDB+1
-    via the expression below."""
-    t = Tables(spark, sf_dir)
-    # Spark dayofweek: Sunday=1; DuckDB dayofweek: Sunday=0 -> use Spark-1
-    return (
-        t.events.groupBy(
-            (F.dayofweek("ts") - 1).alias("dow"), F.hour("ts").alias("hod")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.avg("value"), 6).alias("avg_value"),
-        )
     )
 
 

@@ -31,13 +31,12 @@ import os
 
 # ===========================================================================
 # wave module round5b (formerly operators/round5b.py)
-# Round-5 second wave (SURVEY.md §2.Q): the last two classic TPC-H
-# shapes (Q2 min-cost argmin subquery, Q21 single-late-supplier multi-
-# condition exists), customer purchase-cadence analytics, event attribution
-# and co-occurrence, corpus-divergence / lexical-richness text statistics,
-# blocked edit-distance dedup, alternative means, a per-column data-quality
-# matrix, and a per-dimension label-separability (eta-squared) profile over
-# the embedding corpus.
+# Round-5 second wave (SURVEY.md §2.Q): the last two classic TPC-H shapes
+# (Q2 min-cost argmin subquery, Q21 single-late-supplier multi-condition
+# exists), customer purchase-cadence analytics, corpus-divergence /
+# lexical-richness text statistics, blocked edit-distance dedup, alternative
+# means, a per-column data-quality matrix, and a per-dimension
+# label-separability (eta-squared) profile over the embedding corpus.
 #
 # Float discipline follows SURVEY.md §5.4: money-product sums in
 # DECIMAL(38,6) rounded in the decimal domain; ratios/doubles rounded at
@@ -314,98 +313,6 @@ def customer_order_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # §2.Q.3 event attribution + co-occurrence
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "events_attribution_last_touch",
-    oracle="""
-WITH touched AS (
-  SELECT event_type,
-         last_value(CASE WHEN event_type <> 'purchase' THEN event_type END
-                    IGNORE NULLS)
-           OVER (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-           AS attributed
-  FROM events
-)
-SELECT attributed, count(*) AS conversions
-FROM touched
-WHERE event_type = 'purchase' AND attributed IS NOT NULL
-GROUP BY attributed
-""",
-)
-def events_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Last-touch attribution: each purchase is credited to the user's
-    most recent PRIOR non-purchase event type (marketing-attribution
-    core). One user-partitioned window carrying only (type, ts, id) —
-    the ignore-nulls last_value trick replaces a per-purchase history
-    self-join, so lineage never leaves the user's partition."""
-    t = Tables(spark, sf_dir)
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.asc_nulls_last("ts"), "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    touched = t.events.select(
-        "event_type",
-        F.last(
-            F.when(F.col("event_type") != "purchase", F.col("event_type")),
-            ignorenulls=True,
-        )
-        .over(w)
-        .alias("attributed"),
-    )
-    return (
-        touched.filter(
-            (F.col("event_type") == "purchase") & F.col("attributed").isNotNull()
-        )
-        .groupBy("attributed")
-        .agg(F.count(F.lit(1)).alias("conversions"))
-    )
-
-
-@register(
-    "events_type_cooccurrence",
-    oracle="""
-WITH ud AS (
-  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day, event_type
-  FROM events
-)
-SELECT a.event_type AS type_a, b.event_type AS type_b,
-       count(*) AS n_user_days
-FROM ud a JOIN ud b
-  ON a.user_id = b.user_id AND a.day = b.day
- AND a.event_type < b.event_type
-GROUP BY a.event_type, b.event_type
-""",
-)
-def events_type_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-type co-occurrence: for every unordered type pair, the
-    number of (user, day) contexts where both occurred. Distinct-reduce
-    FIRST (≤ |types| rows per user-day — here ≤ 5), then a self-join
-    keyed on (user, day): the quadratic blow-up is bounded by types², not
-    by event volume, so the plan survives arbitrarily hot users."""
-    t = Tables(spark, sf_dir)
-    ud = t.events.select(
-        "user_id",
-        F.col("ts").cast("date").alias("day"),
-        "event_type",
-    ).distinct()
-    a = ud.alias("a")
-    b = ud.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.user_id") == F.col("b.user_id"))
-            & (F.col("a.day") == F.col("b.day"))
-            & (F.col("a.event_type") < F.col("b.event_type")),
-        )
-        .groupBy(
-            F.col("a.event_type").alias("type_a"),
-            F.col("b.event_type").alias("type_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_user_days"))
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -843,8 +750,8 @@ def embed_label_eta_squared(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round-5 third wave (SURVEY.md §2.Q, continued): the two partition-
 # pruning scan paths every 100 TB lake lives on (static partition pruning
 # and dynamic partition pruning through a join), cohort lifetime value,
-# brand co-purchase lift, calendar hour-gap detection, activity survival
-# curves, bigram conditional entropy, and binary-codec function parity.
+# brand co-purchase lift, bigram conditional entropy, and binary-codec
+# function parity.
 # ===========================================================================
 
 # ---------------------------------------------------------------------------
@@ -1106,133 +1013,6 @@ def brand_copurchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
-    "events_hour_gap_ranges",
-    oracle="""
-WITH span AS (
-  SELECT event_type,
-         min(date_trunc('hour', ts)) AS h0,
-         max(date_trunc('hour', ts)) AS h1
-  FROM events GROUP BY event_type
-),
-calendar AS (
-  SELECT event_type, unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour
-  FROM span
-),
-observed AS (
-  SELECT DISTINCT event_type, date_trunc('hour', ts) AS hour FROM events
-),
-missing AS (
-  SELECT c.event_type, c.hour,
-         row_number() OVER (PARTITION BY c.event_type ORDER BY c.hour) AS rn
-  FROM calendar c ANTI JOIN observed o
-    ON c.event_type = o.event_type AND c.hour = o.hour
-)
-SELECT event_type,
-       min(hour) AS gap_start, max(hour) AS gap_end,
-       count(*) AS n_hours
-FROM missing
-GROUP BY event_type, hour - rn * INTERVAL 1 HOUR
-""",
-)
-def events_hour_gap_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Coverage-gap detection: for each event type, the contiguous hour
-    ranges inside its [first, last] span with NO events — the backfill
-    work-list of an ingest pipeline. Aggregate-first: the dense hourly
-    calendar is sequence()-exploded from the types-sized span relation
-    (span-bounded, not event-bounded), missing hours are an anti join
-    against the distinct observed hours, and ranges come from the
-    gaps-and-islands rn-difference key. Everything past the two distinct
-    reductions is calendar-sized."""
-    t = Tables(spark, sf_dir)
-    hour = F.date_trunc("hour", "ts")
-    span = t.events.groupBy("event_type").agg(
-        F.min(hour).alias("h0"), F.max(hour).alias("h1")
-    )
-    calendar = span.select(
-        "event_type",
-        F.explode(
-            F.sequence("h0", "h1", F.expr("INTERVAL 1 HOUR"))
-        ).alias("hour"),
-    )
-    observed = t.events.select(
-        "event_type", hour.alias("hour")
-    ).distinct()
-    missing = calendar.join(observed, ["event_type", "hour"], "left_anti")
-    w = Window.partitionBy("event_type").orderBy("hour")
-    keyed = missing.select(
-        "event_type",
-        "hour",
-        (
-            # rn cast to LONG before the multiply: a multi-century gap
-            # calendar puts rn in the millions and rn*3600 past int32
-            F.col("hour").cast("long")
-            - F.row_number().over(w).cast("long") * 3600
-        ).alias("island"),
-    )
-    return keyed.groupBy("event_type", "island").agg(
-        F.min("hour").alias("gap_start"),
-        F.max("hour").alias("gap_end"),
-        F.count(F.lit(1)).alias("n_hours"),
-    ).select("event_type", "gap_start", "gap_end", "n_hours")
-
-
-@register(
-    "events_survival_weeks",
-    oracle="""
-WITH lifespans AS (
-  SELECT user_id,
-         datediff('day', min(CAST(ts AS DATE)), max(CAST(ts AS DATE))) // 7
-           AS weeks_active
-  FROM events GROUP BY user_id
-),
-ks AS (
-  SELECT unnest(generate_series(0, weeks_active)) AS week FROM lifespans
-),
-counts AS (SELECT week, count(*) AS n_surviving FROM ks GROUP BY week)
-SELECT week, n_surviving,
-       round(CAST(n_surviving AS DOUBLE)
-             / max(n_surviving) OVER (), 6) AS survival_rate
-FROM counts
-""",
-)
-def events_survival_weeks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """User-retention survival curve: the fraction of users whose
-    observed activity span reaches ≥ k weeks, for every k. Per-user
-    lifespans aggregate first (one shuffle on user_id); each user then
-    explodes into weeks_active+1 rows — fan-out bounded by the
-    observation window in weeks, not by event volume — and the share
-    normalizes against the k=0 row (every user survives week 0) via a
-    window over the weeks-sized histogram."""
-    t = Tables(spark, sf_dir)
-    lifespans = t.events.groupBy("user_id").agg(
-        (
-            F.datediff(
-                F.max(F.col("ts").cast("date")),
-                F.min(F.col("ts").cast("date")),
-            )
-            / 7
-        )
-        .cast("bigint")
-        .alias("weeks_active")
-    )
-    ks = lifespans.select(
-        F.explode(F.sequence(F.lit(0).cast("bigint"), "weeks_active")).alias(
-            "week"
-        )
-    )
-    counts = ks.groupBy("week").agg(F.count(F.lit(1)).alias("n_surviving"))
-    return counts.select(
-        "week",
-        "n_surviving",
-        F.round(
-            F.col("n_surviving").cast("double")
-            / F.max("n_surviving").over(Window.partitionBy()),
-            6,
-        ).alias("survival_rate"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # §2.Q.10 bigram conditional entropy + codec parity
 # ---------------------------------------------------------------------------
@@ -1343,12 +1123,12 @@ def fn_string_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # wave module round5d (formerly operators/round5d.py)
 # Round-5 fourth wave (SURVEY.md §2.Q, continued): statistical screens —
-# chi-squared independence, Benford first-digit conformance, daily-series
-# autocorrelation, per-group OLS regression, and multiplicative seasonal
-# decomposition. Every formula is written as raw power sums / explicit
-# ratios so Spark and DuckDB evaluate the IDENTICAL expression (the
-# agg_higher_moments rule: built-in corr/stddev differ in bias correction
-# across engines); 6-dp rounding absorbs summation order.
+# chi-squared independence, Benford first-digit conformance, per-group OLS
+# regression, and multiplicative seasonal decomposition. Every formula is
+# written as raw power sums / explicit ratios so Spark and DuckDB evaluate
+# the IDENTICAL expression (the agg_higher_moments rule: built-in
+# corr/stddev differ in bias correction across engines); 6-dp rounding
+# absorbs summation order.
 # ===========================================================================
 
 @register(
@@ -1484,55 +1264,6 @@ def quality_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "events_autocorrelation_daily",
-    oracle="""
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS DOUBLE) AS x
-  FROM events GROUP BY CAST(ts AS DATE)
-),
-pairs AS (
-  SELECT k.lag, a.x AS x0, b.x AS x1
-  FROM daily a
-  JOIN (SELECT unnest(generate_series(1, 7)) AS lag) k ON true
-  JOIN daily b ON b.day = a.day + CAST(k.lag AS INTEGER)
-)
-SELECT lag, count(*) AS n_pairs,
-       round((avg(x0 * x1) - avg(x0) * avg(x1))
-             / sqrt((avg(x0 * x0) - avg(x0) * avg(x0))
-                    * (avg(x1 * x1) - avg(x1) * avg(x1))), 6) AS acf
-FROM pairs GROUP BY lag
-""",
-)
-def events_autocorrelation_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Autocorrelation of the daily event-count series at lags 1-7 —
-    the weekly-seasonality detector. Aggregate-first: events collapse to
-    the days-sized series in one shuffle; the lag pairing is a keyed
-    self-join of that tiny relation against a 7-row lag spine (never the
-    raw events), and Pearson r is raw power sums (identical on both
-    engines)."""
-    t = Tables(spark, sf_dir)
-    daily = t.events.groupBy(F.col("ts").cast("date").alias("day")).agg(
-        F.count(F.lit(1)).cast("double").alias("x")
-    )
-    lags = spark.range(1, 8).select(F.col("id").cast("int").alias("lag"))
-    a = daily.select(F.col("day").alias("day0"), F.col("x").alias("x0"))
-    b = daily.select(F.col("day").alias("day1"), F.col("x").alias("x1"))
-    pairs = (
-        a.crossJoin(F.broadcast(lags))
-        .join(b, F.expr("day1 = date_add(day0, lag)"))
-    )
-    x0, x1 = F.col("x0"), F.col("x1")
-    r = (F.avg(x0 * x1) - F.avg(x0) * F.avg(x1)) / F.sqrt(
-        (F.avg(x0 * x0) - F.avg(x0) * F.avg(x0))
-        * (F.avg(x1 * x1) - F.avg(x1) * F.avg(x1))
-    )
-    return pairs.groupBy("lag").agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.round(r, 6).alias("acf"),
-    )
-
-
-@register(
     "lineitem_discount_quantity_regr",
     oracle="""
 WITH obs AS (
@@ -1651,10 +1382,9 @@ def orders_seasonal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # wave module round5e (formerly operators/round5e.py)
 # Round-5 fifth wave (SURVEY.md §2.Q, continued): TPC-H Q20 — which
 # completes all 22 TPC-H query shapes, adapted to this corpus — a
-# catalog-level table-profiling operator, event-type active-day Jaccard
-# similarity, and the PCA flagship: dominant principal component of the
-# embedding corpus via a partial-Gram Arrow kernel + five unrolled power
-# iterations on the 64×64 covariance.
+# catalog-level table-profiling operator, and the PCA flagship: dominant
+# principal component of the embedding corpus via a partial-Gram Arrow
+# kernel + five unrolled power iterations on the 64×64 covariance.
 # ===========================================================================
 
 @register(
@@ -1780,70 +1510,6 @@ def catalog_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select("table_name", "n_rows", "n_distinct_keys")
         out = stats if out is None else out.unionByName(stats)
     return out
-
-
-@register(
-    "events_type_day_jaccard",
-    oracle="""
-WITH td AS (
-  SELECT DISTINCT event_type, CAST(ts AS DATE) AS day FROM events
-),
-sizes AS (SELECT event_type, count(*) AS n_days FROM td GROUP BY event_type),
-inter AS (
-  SELECT a.event_type AS type_a, b.event_type AS type_b, count(*) AS n_both
-  FROM td a JOIN td b ON a.day = b.day AND a.event_type < b.event_type
-  GROUP BY a.event_type, b.event_type
-)
-SELECT type_a, type_b, n_both,
-       round(CAST(n_both AS DOUBLE)
-             / (sa.n_days + sb.n_days - n_both), 6) AS jaccard
-FROM inter
-JOIN sizes sa ON type_a = sa.event_type
-JOIN sizes sb ON type_b = sb.event_type
-""",
-)
-def events_type_day_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Active-day Jaccard similarity between event types — the set-
-    similarity twin of events_type_cooccurrence, measuring whether two
-    event types live on the same calendar (deploy markers vs errors,
-    campaigns vs purchases). Distinct-reduce FIRST: the join operates on
-    the (type, day) relation, ≤ |types|·|days| rows at any event volume,
-    and the type-marginal sizes broadcast onto the pairs."""
-    t = Tables(spark, sf_dir)
-    td = t.events.select(
-        "event_type", F.col("ts").cast("date").alias("day")
-    ).distinct()
-    sizes = td.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_days"))
-    a = td.alias("a")
-    b = td.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.day") == F.col("b.day"))
-            & (F.col("a.event_type") < F.col("b.event_type")),
-        )
-        .groupBy(
-            F.col("a.event_type").alias("type_a"),
-            F.col("b.event_type").alias("type_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_both"))
-    )
-    sa = sizes.select(F.col("event_type").alias("ta"), F.col("n_days").alias("na"))
-    sb = sizes.select(F.col("event_type").alias("tb"), F.col("n_days").alias("nb"))
-    return (
-        inter.join(F.broadcast(sa), F.col("type_a") == F.col("ta"))
-        .join(F.broadcast(sb), F.col("type_b") == F.col("tb"))
-        .select(
-            "type_a",
-            "type_b",
-            "n_both",
-            F.round(
-                F.col("n_both").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("n_both")),
-                6,
-            ).alias("jaccard"),
-        )
-    )
 
 
 _GRAM_SCHEMA = "i int, j int, s double"
@@ -2017,8 +1683,8 @@ def agg_hll_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # wave module round5f (formerly operators/round5f.py)
 # Round-5 sixth wave (SURVEY.md §2.Q, continued): ANSI error-safe
 # arithmetic (try_*), permissive malformed-CSV ingestion with corrupt-
-# record capture, CUSUM changepoint detection on the daily shipment
-# series, and fine-grained error-burst detection over 5-minute buckets.
+# record capture, and CUSUM changepoint detection on the daily shipment
+# series.
 # ===========================================================================
 
 @register(
@@ -2169,177 +1835,11 @@ def lineitem_quantity_cusum_shift(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@register(
-    "events_error_burst_5min",
-    oracle="""
-WITH buckets AS (
-  SELECT CAST(floor(epoch(ts) / 300) AS BIGINT) AS bucket,
-         count(*) AS n_errors
-  FROM events WHERE event_type = 'error'
-  GROUP BY 1
-),
-stats AS (
-  SELECT bucket, n_errors,
-         avg(n_errors) OVER () AS mu,
-         sqrt(avg(n_errors * n_errors) OVER ()
-              - avg(n_errors) OVER () * avg(n_errors) OVER ()) AS sigma
-  FROM buckets
-)
-SELECT bucket, n_errors,
-       round((n_errors - mu) / sigma, 6) AS zscore
-FROM stats
-WHERE n_errors > mu + 3 * sigma
-""",
-)
-def events_error_burst_5min(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Error-burst detection at 5-minute granularity: buckets whose
-    error count exceeds mean + 3σ of the bucket distribution — the
-    paging rule of an ingest monitor, and the fine-grained sibling of
-    events_anomaly_zscore (daily). Buckets are integer epoch/300 keys
-    (no timestamp-zone parity surface); σ is population form from raw
-    power sums; all windows run over the buckets-sized relation."""
-    t = Tables(spark, sf_dir)
-    buckets = (
-        t.events.filter(F.col("event_type") == "error")
-        .groupBy(
-            F.floor(F.unix_timestamp("ts") / 300).cast("bigint").alias("bucket")
-        )
-        .agg(F.count(F.lit(1)).alias("n_errors"))
-    )
-    w = Window.partitionBy()
-    n = F.col("n_errors")
-    stats = buckets.select(
-        "bucket",
-        "n_errors",
-        F.avg(n).over(w).alias("mu"),
-        F.sqrt(
-            F.avg(n * n).over(w) - F.avg(n).over(w) * F.avg(n).over(w)
-        ).alias("sigma"),
-    )
-    return stats.filter(
-        n > F.col("mu") + 3 * F.col("sigma")
-    ).select(
-        "bucket",
-        "n_errors",
-        F.round((n - F.col("mu")) / F.col("sigma"), 6).alias("zscore"),
-    )
-
-
 # ===========================================================================
 # wave module round5g (formerly operators/round5g.py)
-# Round-5 seventh wave (SURVEY.md §2.Q, continued): growth accounting
-# (weekly new/retained/resurrected/churned user states), a cross-table
-# referential-integrity audit with injected violations, and a time-bounded
-# conversion funnel (each step within 24 h of the previous).
+# Round-5 seventh wave (SURVEY.md §2.Q, continued): a cross-table
+# referential-integrity audit with injected violations.
 # ===========================================================================
-
-_EPOCH = "DATE '2024-01-01'"
-
-
-@register(
-    "events_user_lifecycle_states",
-    oracle=f"""
-WITH uw AS (
-  SELECT DISTINCT user_id,
-         datediff('day', {_EPOCH}, CAST(ts AS DATE)) // 7 AS week
-  FROM events
-),
-maxw AS (SELECT max(week) AS max_week FROM uw),
-flagged AS (
-  SELECT user_id, week,
-         min(week) OVER (PARTITION BY user_id) AS first_week,
-         lag(week)  OVER (PARTITION BY user_id ORDER BY week) AS prev_week,
-         lead(week) OVER (PARTITION BY user_id ORDER BY week) AS next_week
-  FROM uw
-),
-states AS (
-  SELECT week,
-         count(CASE WHEN week = first_week THEN 1 END) AS n_new,
-         count(CASE WHEN week > first_week AND prev_week = week - 1
-                    THEN 1 END) AS n_retained,
-         count(CASE WHEN week > first_week
-                     AND (prev_week IS NULL OR prev_week < week - 1)
-                    THEN 1 END) AS n_resurrected
-  FROM flagged GROUP BY week
-),
-churn AS (
-  SELECT f.week + 1 AS week, count(*) AS n_churned
-  FROM flagged f CROSS JOIN maxw m
-  WHERE (f.next_week IS NULL OR f.next_week > f.week + 1)
-    AND f.week + 1 <= m.max_week
-  GROUP BY f.week + 1
-)
-SELECT s.week, s.n_new, s.n_retained, s.n_resurrected,
-       COALESCE(c.n_churned, 0) AS n_churned
-FROM states s LEFT JOIN churn c ON s.week = c.week
-""",
-)
-def events_user_lifecycle_states(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Growth accounting: per week, users who are NEW (first activity),
-    RETAINED (also active the prior week), RESURRECTED (returning after
-    a gap), and CHURNED (active the prior week, absent now) — the
-    canonical DAU-quality decomposition. Distinct-reduce first: every
-    window runs over the (user, week) relation (≤ users × weeks rows);
-    the churn anchor week comes from a scalar broadcast, never a global
-    window over the grid."""
-    t = Tables(spark, sf_dir)
-    week = (
-        F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
-        / 7
-    ).cast("bigint")
-    uw = t.events.select("user_id", week.alias("week")).distinct()
-    # churn anchor from RAW events (same max as over the distinct grid):
-    # deriving it from uw would replay the distinct shuffle for a scalar
-    maxw = t.events.agg(F.max(week).alias("max_week"))
-    w_user = Window.partitionBy("user_id")
-    w_seq = Window.partitionBy("user_id").orderBy("week")
-    flagged = uw.select(
-        "user_id",
-        "week",
-        F.min("week").over(w_user).alias("first_week"),
-        F.lag("week").over(w_seq).alias("prev_week"),
-        F.lead("week").over(w_seq).alias("next_week"),
-    )
-    states = flagged.groupBy("week").agg(
-        F.count(F.when(F.col("week") == F.col("first_week"), 1)).alias("n_new"),
-        F.count(
-            F.when(
-                (F.col("week") > F.col("first_week"))
-                & (F.col("prev_week") == F.col("week") - 1),
-                1,
-            )
-        ).alias("n_retained"),
-        F.count(
-            F.when(
-                (F.col("week") > F.col("first_week"))
-                & (
-                    F.col("prev_week").isNull()
-                    | (F.col("prev_week") < F.col("week") - 1)
-                ),
-                1,
-            )
-        ).alias("n_resurrected"),
-    )
-    churn = (
-        flagged.crossJoin(F.broadcast(maxw))
-        .filter(
-            (F.col("next_week").isNull() | (F.col("next_week") > F.col("week") + 1))
-            & (F.col("week") + 1 <= F.col("max_week"))
-        )
-        .groupBy((F.col("week") + 1).alias("week"))
-        .agg(F.count(F.lit(1)).alias("n_churned"))
-    )
-    return (
-        states.join(churn, "week", "left")
-        .select(
-            "week",
-            "n_new",
-            "n_retained",
-            "n_resurrected",
-            F.coalesce(F.col("n_churned"), F.lit(0)).alias("n_churned"),
-        )
-    )
-
 
 _RI_OFFSET = 900_000_000
 
@@ -2447,87 +1947,12 @@ def quality_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@register(
-    "events_funnel_time_bounded",
-    oracle="""
-WITH v AS (
-  SELECT user_id, min(ts) AS t1 FROM events
-  WHERE event_type = 'view' GROUP BY user_id
-),
-c AS (
-  SELECT e.user_id, min(e.ts) AS t2
-  FROM events e JOIN v ON e.user_id = v.user_id
-  WHERE e.event_type = 'click'
-    AND e.ts > v.t1 AND e.ts <= v.t1 + INTERVAL 24 HOUR
-  GROUP BY e.user_id
-),
-p AS (
-  SELECT e.user_id, min(e.ts) AS t3
-  FROM events e JOIN c ON e.user_id = c.user_id
-  WHERE e.event_type = 'purchase'
-    AND e.ts > c.t2 AND e.ts <= c.t2 + INTERVAL 24 HOUR
-  GROUP BY e.user_id
-)
-SELECT (SELECT count(*) FROM v) AS n_viewed,
-       (SELECT count(*) FROM c) AS n_clicked_24h,
-       (SELECT count(*) FROM p) AS n_purchased_24h
-""",
-)
-def events_funnel_time_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-bounded conversion funnel: first view → first click within
-    24 h of it → first purchase within 24 h of that. The unbounded
-    events_funnel counts eventual converters; this one enforces the
-    step deadline product analytics actually uses. Each stage is one
-    per-user aggregate + one user-keyed join — the stage relations
-    shrink monotonically, and nothing self-joins raw events against raw
-    events."""
-    t = Tables(spark, sf_dir)
-    ev = t.events
-    # v and c each feed BOTH their own stage count and the next stage:
-    # uncached, Spark recomputes the chain per count (events scanned
-    # 1+2+3 = 6 times; measured 9.6 s -> 4.3 s at the 10x sweep). The
-    # cached relations are per-user aggregates (users-sized, spill-safe).
-    v = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t1"))
-        .transform(op_cache)
-    )
-    c = (
-        ev.filter(F.col("event_type") == "click")
-        .join(v.select(F.col("user_id").alias("vu"), "t1"),
-              F.col("user_id") == F.col("vu"))
-        .filter(
-            (F.col("ts") > F.col("t1"))
-            & (F.col("ts") <= F.col("t1") + F.expr("INTERVAL 24 HOURS"))
-        )
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t2"))
-        .transform(op_cache)
-    )
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(c.select(F.col("user_id").alias("cu"), "t2"),
-              F.col("user_id") == F.col("cu"))
-        .filter(
-            (F.col("ts") > F.col("t2"))
-            & (F.col("ts") <= F.col("t2") + F.expr("INTERVAL 24 HOURS"))
-        )
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t3"))
-    )
-    nv = v.agg(F.count(F.lit(1)).alias("n_viewed"))
-    nc = c.agg(F.count(F.lit(1)).alias("n_clicked_24h"))
-    np_ = p.agg(F.count(F.lit(1)).alias("n_purchased_24h"))
-    return nv.crossJoin(F.broadcast(nc)).crossJoin(F.broadcast(np_))
-
-
 # ===========================================================================
 # wave module round5h (formerly operators/round5h.py)
-# Round-5 eighth wave (SURVEY.md §2.Q, continued): discrete-vs-
-# continuous percentile parity, two-step event path mining, the shingle
-# document-frequency spectrum (the introspection that justifies the
-# rare-shingle DF cap), and a per-type ingestion freshness report.
+# Round-5 eighth wave (SURVEY.md §2.Q, continued): discrete-vs-continuous
+# percentile parity, the shingle document-frequency spectrum (the
+# introspection that justifies the rare-shingle DF cap), and a per-type
+# ingestion freshness report.
 # ===========================================================================
 
 @register(
@@ -2563,42 +1988,6 @@ def win_percentile_disc_vs_cont(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "percentile_cont(0.9) WITHIN GROUP (ORDER BY l_quantity)"
         ).alias("p90_cont"),
-    )
-
-
-@register(
-    "events_markov_2step_paths",
-    oracle="""
-WITH seq AS (
-  SELECT event_type AS step3,
-         lag(event_type, 1) OVER (PARTITION BY user_id
-                                  ORDER BY ts, event_id) AS step2,
-         lag(event_type, 2) OVER (PARTITION BY user_id
-                                  ORDER BY ts, event_id) AS step1
-  FROM events
-)
-SELECT step1, step2, step3, count(*) AS n_paths
-FROM seq WHERE step1 IS NOT NULL AND step2 IS NOT NULL
-GROUP BY step1, step2, step3
-""",
-)
-def events_markov_2step_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-step path mining: counts of every (A → B → C) event-type
-    trigram along user timelines — the sequence-mining extension of
-    events_transition_matrix (1-step). One user-partitioned window
-    carrying only the type column produces both lags; output is bounded
-    by |types|³ at any event volume."""
-    t = Tables(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy(F.asc_nulls_last("ts"), "event_id")
-    seq = t.events.select(
-        F.col("event_type").alias("step3"),
-        F.lag("event_type", 1).over(w).alias("step2"),
-        F.lag("event_type", 2).over(w).alias("step1"),
-    )
-    return (
-        seq.filter(F.col("step1").isNotNull() & F.col("step2").isNotNull())
-        .groupBy("step1", "step2", "step3")
-        .agg(F.count(F.lit(1)).alias("n_paths"))
     )
 
 
@@ -2724,232 +2113,10 @@ def sim_cosine_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # wave module round5i (formerly operators/round5i.py)
-# Round-5 ninth wave (SURVEY.md §2.Q, continued): peak session
-# concurrency via a DISTRIBUTED prefix sum (the scale-shaped sweep-line),
-# robust MAD anomaly screening, duplicate-invoice detection against
-# injected duplicates, ship-latency quantiles per supplier nation, the
-# string-formatting parity family, and a deterministic A/B two-proportion
-# z-test.
+# Round-5 ninth wave (SURVEY.md §2.Q, continued): duplicate-invoice
+# detection against injected duplicates, ship-latency quantiles per
+# supplier nation, and the string-formatting parity family.
 # ===========================================================================
-
-_SESSION_BOUNDS_SQL = """
-seq AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id
-                                      ORDER BY ts, event_id)
-                   > INTERVAL 30 MINUTE
-              OR lag(ts) OVER (PARTITION BY user_id
-                               ORDER BY ts, event_id) IS NULL
-              THEN 1 ELSE 0 END AS is_new
-  -- an event with no timestamp cannot sit on a concurrency timeline
-  FROM events WHERE ts IS NOT NULL
-),
-sess AS (
-  SELECT user_id, ts,
-         CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-  FROM seq
-),
-intervals AS (
-  SELECT user_id, session_id,
-         epoch_us(min(ts)) AS start_us, epoch_us(max(ts)) AS end_us
-  FROM sess GROUP BY user_id, session_id
-)
-"""
-
-
-@register(
-    "events_peak_concurrency",
-    oracle="""
-WITH """
-    + _SESSION_BOUNDS_SQL
-    + """,
-deltas AS (
-  SELECT start_us AS t, 1 AS d FROM intervals
-  UNION ALL
-  SELECT end_us + 1 AS t, -1 AS d FROM intervals
-),
-bounds AS (
-  SELECT t, CAST(sum(d) AS BIGINT) AS net FROM deltas GROUP BY t
-),
-running AS (
-  SELECT t,
-         CAST(sum(net) OVER (ORDER BY t ROWS UNBOUNDED PRECEDING)
-              AS BIGINT) AS conc
-  FROM bounds
-),
-peaks AS (
-  SELECT date_trunc('day', make_timestamp(t)) AS day,
-         max(conc) AS peak_concurrency,
-         count(*) AS n_boundary_points
-  FROM running GROUP BY 1
-),
-starts AS (
-  SELECT date_trunc('day', make_timestamp(start_us)) AS day,
-         count(*) AS sessions_started
-  FROM intervals GROUP BY 1
-)
-SELECT p.day, coalesce(s.sessions_started, 0) AS sessions_started,
-       p.peak_concurrency, p.n_boundary_points
-FROM peaks p LEFT JOIN starts s ON p.day = s.day
-""",
-)
-def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Peak concurrent sessions per day — the sweep-line / interval-
-    concurrency primitive (capacity planning, rate limiting). Sessions
-    are 30-minute-gap sessionized (the events_sessionize_batch rule);
-    each interval [start, end] emits +1 at start and -1 at end+1µs, and
-    peak concurrency is the max of the boundary-point prefix sum.
-
-    The prefix sum is DISTRIBUTED: a single global ordered window would
-    serialize session-count boundary points through one partition at
-    100 TB, so Spark computes it in two levels — a within-day running
-    sum (partitioned window) plus each day's carried-in offset from a
-    days-sized cumulative of per-day totals — the classic parallel
-    scan decomposition. The oracle spells the same quantity as one
-    global window; peaks are always attained at +1 boundary points, so
-    the per-day max over boundary points is the true within-day peak.
-    """
-    e = Tables(spark, sf_dir).events.where(F.col("ts").isNotNull())
-    w = Window.partitionBy("user_id").orderBy(F.asc_nulls_last("ts"), "event_id")
-    prev = F.lag("ts").over(w)
-    gap_us = F.unix_micros(F.col("ts").cast("timestamp")) - F.unix_micros(
-        prev.cast("timestamp")
-    )
-    seq = e.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.when(prev.isNull() | (gap_us > 30 * 60 * 1_000_000), 1)
-        .otherwise(0)
-        .alias("is_new"),
-    )
-    cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sess = seq.select(
-        "user_id", "ts", F.sum("is_new").over(cum).alias("session_id")
-    )
-    # intervals feeds THREE branches (start deltas, end deltas, per-day
-    # session starts): cache the sessions-sized relation so the two-window
-    # sessionize chain over events runs once, not per branch
-    intervals = sess.groupBy("user_id", "session_id").agg(
-        F.unix_micros(F.min("ts").cast("timestamp")).alias("start_us"),
-        F.unix_micros(F.max("ts").cast("timestamp")).alias("end_us"),
-    ).transform(op_cache)
-    deltas = intervals.select(
-        F.col("start_us").alias("t"), F.lit(1).alias("d")
-    ).unionAll(
-        intervals.select(
-            (F.col("end_us") + 1).alias("t"), F.lit(-1).alias("d")
-        )
-    )
-    bounds = deltas.groupBy("t").agg(F.sum("d").alias("net"))
-    # UTC session tz: LTZ->NTZ cast renders the same wall clock DuckDB's
-    # tz-less make_timestamp(µs) produces; date_trunc timestamps (not
-    # DATE) cross the compare harness losslessly (events_dau_mau idiom)
-    day = F.date_trunc(
-        "day", F.timestamp_micros(F.col("t")).cast("timestamp_ntz")
-    )
-    # level 1: running sum within each day (parallel across days)
-    w_day = Window.partitionBy("day").orderBy("t").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    within = bounds.withColumn("day", day).withColumn(
-        "within", F.sum("net").over(w_day)
-    )
-    # level 2: days-sized carried-in offsets (broadcast back to level 1)
-    day_tot = within.groupBy("day").agg(F.sum("net").alias("day_net"))
-    w_days = Window.orderBy("day").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = day_tot.select(
-        "day", F.coalesce(F.sum("day_net").over(w_days), F.lit(0)).alias("off")
-    )
-    conc = within.join(F.broadcast(offsets), "day").withColumn(
-        "conc", F.col("off") + F.col("within")
-    )
-    peaks = conc.groupBy("day").agg(
-        F.max("conc").alias("peak_concurrency"),
-        F.count(F.lit(1)).alias("n_boundary_points"),
-    )
-    starts = intervals.groupBy(
-        F.date_trunc(
-            "day",
-            F.timestamp_micros(F.col("start_us")).cast("timestamp_ntz"),
-        ).alias("day")
-    ).agg(F.count(F.lit(1)).alias("sessions_started"))
-    return peaks.join(F.broadcast(starts), "day", "left").select(
-        "day",
-        F.coalesce("sessions_started", F.lit(0)).alias("sessions_started"),
-        "peak_concurrency",
-        "n_boundary_points",
-    )
-
-
-@register(
-    "events_anomaly_mad",
-    oracle="""
-WITH daily AS (
-  SELECT event_type, date_trunc('day', ts) AS day, count(*) AS n
-  FROM events GROUP BY 1, 2
-),
-med AS (
-  SELECT event_type, median(n) AS med FROM daily GROUP BY 1
-),
-dev AS (
-  SELECT d.event_type, d.day, d.n, m.med, abs(d.n - m.med) AS adev
-  FROM daily d JOIN med m ON d.event_type = m.event_type
-),
-mad AS (
-  SELECT event_type, median(adev) AS mad FROM dev GROUP BY 1
-)
-SELECT d.event_type, d.day, d.n,
-       floor(0.6745 * (d.n - d.med) / nullif(m.mad, 0) * 1000000 + 0.5)
-         / 1000000 AS robust_z,
-       CAST(CASE WHEN abs(0.6745 * (d.n - d.med) / nullif(m.mad, 0)) > 3.5
-                 THEN 1 ELSE 0 END AS INT) AS is_anomaly
-FROM dev d JOIN mad m ON d.event_type = m.event_type
-""",
-)
-def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust anomaly screen on daily event volumes: the median-absolute-
-    deviation z-score 0.6745·(x − median)/MAD with the |z| > 3.5 flag
-    (Iglewicz-Hoaglin) — the outlier-resistant twin of
-    events_anomaly_zscore, which a single traffic spike can mask by
-    inflating the stddev it is judged against. Two types-sized median
-    aggregates broadcast back onto the (type, day) grid; daily counts are
-    integers and medians interpolate at exact binary halves, so the only
-    rounding layer needed is the portable 6-dp formula on the ratio."""
-    t = Tables(spark, sf_dir)
-    daily = t.events.groupBy(
-        "event_type", F.date_trunc("day", "ts").alias("day")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    med = daily.groupBy("event_type").agg(F.expr("median(n)").alias("med"))
-    # dev feeds BOTH the MAD aggregate and the final select: cache the
-    # (types x days)-sized grid so events is scanned once, not per branch
-    dev = (
-        daily.join(F.broadcast(med), "event_type")
-        .withColumn("adev", F.abs(F.col("n") - F.col("med")))
-        .transform(op_cache)
-    )
-    mad = dev.groupBy("event_type").agg(F.expr("median(adev)").alias("mad"))
-    z = (
-        F.lit(0.6745)
-        * (F.col("n") - F.col("med"))
-        / F.nullif(F.col("mad"), F.lit(0))
-    )
-    return (
-        dev.join(F.broadcast(mad), "event_type")
-        .select(
-            "event_type",
-            "day",
-            "n",
-            pround(z).alias("robust_z"),
-            F.when(F.abs(z) > 3.5, 1).otherwise(0).cast("int").alias(
-                "is_anomaly"
-            ),
-        )
-    )
-
 
 @register(
     "orders_duplicate_invoice_detect",
@@ -3127,110 +2294,6 @@ def fn_string_format(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat_ws(
             "|", "p_brand", "p_type", F.col("p_size").cast("string")
         ).alias("packed"),
-    )
-
-
-@register(
-    "events_ab_proportion_ztest",
-    oracle="""
-WITH users AS (
-  SELECT user_id,
-         CASE WHEN CAST('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 1)
-                        AS BIGINT) % 2 = 0
-              THEN 'A' ELSE 'B' END AS grp,
-         CASE WHEN sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                   > 13 THEN 1 ELSE 0 END AS conv
-  FROM events GROUP BY user_id
-),
-cells AS (
-  SELECT CAST(sum(CASE WHEN grp = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-         CAST(sum(CASE WHEN grp = 'B' THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-         CAST(sum(CASE WHEN grp = 'A' THEN conv ELSE 0 END) AS BIGINT)
-           AS conv_a,
-         CAST(sum(CASE WHEN grp = 'B' THEN conv ELSE 0 END) AS BIGINT)
-           AS conv_b
-  FROM users
-)
-SELECT n_a, n_b, conv_a, conv_b,
-       floor(CAST(conv_a AS DOUBLE) / n_a * 1000000 + 0.5) / 1000000
-         AS rate_a,
-       floor(CAST(conv_b AS DOUBLE) / n_b * 1000000 + 0.5) / 1000000
-         AS rate_b,
-       floor((CAST(conv_a AS DOUBLE) / n_a - CAST(conv_b AS DOUBLE) / n_b)
-             / nullif(sqrt(CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b)
-                    * (1 - CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b))
-                    * (1.0 / n_a + 1.0 / n_b)), 0)
-             * 1000000 + 0.5) / 1000000 AS z_score
-FROM cells
-""",
-)
-def events_ab_proportion_ztest(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Two-proportion z-test for a deterministic A/B split: users are
-    hash-assigned (first md5 nibble parity — the portable-hash idiom, so
-    assignment is reproducible and balanced) and the pooled-variance z
-    statistic compares the two conversion rates — the experimentation
-    primitive of a product analytics engine. The conversion predicate is
-    the pluggable part; in this corpus EVERY user purchases at least
-    once (150/150 at sf0.01 — "any purchase" degenerates to pooled
-    p = 1 and a 0/0 z), so the demo predicate is "more than 13
-    purchases", which splits the population. Per-user reduce, then four
-    conditional sums to ONE row; the z formula is written with identical
-    operation order in both engines (pure IEEE mul/div/sqrt are
-    correctly rounded, hence bit-identical), nullif-guarded against a
-    degenerate pooled rate, and portable-6dp-rounded."""
-    e = Tables(spark, sf_dir).events
-    grp = F.when(
-        F.expr(
-            "conv(substring(md5(cast(user_id as string)), 1, 1), 16, 10)"
-        ).cast("bigint")
-        % 2
-        == 0,
-        "A",
-    ).otherwise("B")
-    users = e.groupBy("user_id").agg(
-        F.when(
-            F.sum(
-                F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-            )
-            > 13,
-            1,
-        )
-        .otherwise(0)
-        .alias("conv")
-    ).select(grp.alias("grp"), "conv")
-    cells = users.agg(
-        F.sum(F.when(F.col("grp") == "A", 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_a"),
-        F.sum(F.when(F.col("grp") == "B", 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_b"),
-        F.sum(F.when(F.col("grp") == "A", F.col("conv")).otherwise(0))
-        .cast("bigint")
-        .alias("conv_a"),
-        F.sum(F.when(F.col("grp") == "B", F.col("conv")).otherwise(0))
-        .cast("bigint")
-        .alias("conv_b"),
-    )
-    ra = F.col("conv_a").cast("double") / F.col("n_a")
-    rb = F.col("conv_b").cast("double") / F.col("n_b")
-    pp = (F.col("conv_a") + F.col("conv_b")).cast("double") / (
-        F.col("n_a") + F.col("n_b")
-    )
-    z = (ra - rb) / F.nullif(
-        F.sqrt(pp * (1 - pp) * (1.0 / F.col("n_a") + 1.0 / F.col("n_b"))),
-        F.lit(0.0),
-    )
-    return cells.select(
-        "n_a",
-        "n_b",
-        "conv_a",
-        "conv_b",
-        pround(ra).alias("rate_a"),
-        pround(rb).alias("rate_b"),
-        pround(z).alias("z_score"),
     )
 
 
@@ -3519,107 +2582,9 @@ def sink_parquet_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # wave module round5k (formerly operators/round5k.py)
-# Round-5 eleventh wave (SURVEY.md §2.Q, continued): a watermark-
-# tuning late-arrival audit over injected event-time disorder, JSONL
-# schema inference, and numeric RANGE window frames.
+# Round-5 eleventh wave (SURVEY.md §2.Q, continued): JSONL schema
+# inference and numeric RANGE window frames.
 # ===========================================================================
-
-_ARRIVAL_BUCKET = 1000  # events per arrival bucket (event_id DIV 1000)
-
-
-@register(
-    "events_late_arrival_audit",
-    oracle=f"""
-WITH feed AS (
-  -- injected disorder: every 37th event's event-time shifts back by
-  -- 1..7 minutes while its ARRIVAL position (event_id) stays put
-  SELECT event_id, event_type,
-         CASE WHEN event_id % 37 = 0
-              THEN ts - to_minutes(CAST(event_id % 7 + 1 AS BIGINT))
-              ELSE ts END AS ts,
-         event_id // {_ARRIVAL_BUCKET} AS bkt
-  FROM events
-),
-bucket_max AS (
-  SELECT event_type, bkt, max(ts) AS bmax
-  FROM feed GROUP BY event_type, bkt
-),
-wm AS (
-  SELECT event_type, bkt,
-         max(bmax) OVER (PARTITION BY event_type ORDER BY bkt
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-           AS watermark
-  FROM bucket_max
-),
-scored AS (
-  SELECT f.event_type,
-         CASE
-           WHEN w.watermark IS NULL OR f.ts >= w.watermark THEN 'on_time'
-           WHEN epoch_us(w.watermark) - epoch_us(f.ts) <= 60000000
-             THEN 'late_1m'
-           WHEN epoch_us(w.watermark) - epoch_us(f.ts) <= 300000000
-             THEN 'late_5m'
-           ELSE 'late_over_5m'
-         END AS lateness_band
-  FROM feed f JOIN wm w
-    ON f.event_type = w.event_type AND f.bkt = w.bkt
-)
-SELECT event_type, lateness_band, count(*) AS n
-FROM scored GROUP BY event_type, lateness_band
-""",
-)
-def events_late_arrival_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermark-tuning audit: how late do events actually arrive? Event
-    time is compared against the per-type watermark carried into each
-    ARRIVAL bucket (1000-event ingestion batches by event_id — arrival
-    order), and lateness is banded on_time / ≤1 min / ≤5 min / >5 min —
-    exactly the histogram that justifies a `withWatermark` delay choice
-    for stream_watermark_late. The corpus arrives perfectly ordered
-    (measured: zero late events), so disorder is deterministically
-    injected: every 37th event's event-time shifts back 1-7 minutes
-    while its arrival position stays put. Scale shape: the watermark is
-    a running max over the BUCKETS-sized aggregate (never an
-    events-sized ordered window), joined back by (type, bucket)."""
-    e = Tables(spark, sf_dir).events
-    shifted = F.when(
-        F.col("event_id") % 37 == 0,
-        F.col("ts")
-        - F.make_interval(mins=(F.col("event_id") % 7 + 1).cast("int")),
-    ).otherwise(F.col("ts"))
-    feed = e.select(
-        "event_id",
-        "event_type",
-        shifted.alias("ts"),
-        (F.col("event_id") / _ARRIVAL_BUCKET).cast("bigint").alias("bkt"),
-    )
-    bucket_max = feed.groupBy("event_type", "bkt").agg(
-        F.max("ts").alias("bmax")
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    wm = bucket_max.select(
-        "event_type", "bkt", F.max("bmax").over(w).alias("watermark")
-    )
-    joined = feed.join(F.broadcast(wm), ["event_type", "bkt"])
-    late_us = F.unix_micros(F.col("watermark").cast("timestamp")) - F.unix_micros(
-        F.col("ts").cast("timestamp")
-    )
-    band = (
-        F.when(
-            F.col("watermark").isNull() | (F.col("ts") >= F.col("watermark")),
-            "on_time",
-        )
-        .when(late_us <= 60_000_000, "late_1m")
-        .when(late_us <= 300_000_000, "late_5m")
-        .otherwise("late_over_5m")
-    )
-    return joined.groupBy(
-        "event_type", band.alias("lateness_band")
-    ).agg(F.count(F.lit(1)).alias("n"))
-
 
 @register(
     "scan_json_schema_infer",
@@ -3701,82 +2666,10 @@ def win_range_numeric_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # wave module round5l (formerly operators/round5l.py)
-# Round-5 twelfth wave (SURVEY.md §2.Q, continued): session bounce
-# rate, embedding label-confusion matrix, per-brand Pareto coverage
-# depth, and IANA timezone conversion parity.
+# Round-5 twelfth wave (SURVEY.md §2.Q, continued): embedding
+# label-confusion matrix, per-brand Pareto coverage depth, and IANA
+# timezone conversion parity.
 # ===========================================================================
-
-@register(
-    "events_sessions_bounce_rate",
-    oracle="""
-WITH seq AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id
-                                      ORDER BY ts, event_id)
-                   > INTERVAL 30 MINUTE
-              OR lag(ts) OVER (PARTITION BY user_id
-                               ORDER BY ts, event_id) IS NULL
-              THEN 1 ELSE 0 END AS is_new
-  -- an event with no timestamp cannot be sessionized onto a day
-  FROM events WHERE ts IS NOT NULL
-),
-sess AS (
-  SELECT user_id, ts,
-         CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-  FROM seq
-),
-per_session AS (
-  SELECT user_id, session_id, count(*) AS n_events,
-         date_trunc('day', min(ts)) AS day
-  FROM sess GROUP BY user_id, session_id
-)
-SELECT day,
-       count(*) AS n_sessions,
-       CAST(sum(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_bounces,
-       floor(CAST(sum(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-             / count(*) * 1000000 + 0.5) / 1000000 AS bounce_rate
-FROM per_session GROUP BY day
-""",
-)
-def events_sessions_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily bounce rate: share of 30-minute-gap sessions containing
-    exactly one event, attributed to the day the session started — the
-    engagement-quality headline next to events_dau_mau's volume view.
-    Same single user-partitioned shuffle as events_sessionize_batch;
-    the daily rollup is days-sized."""
-    e = Tables(spark, sf_dir).events.where(F.col("ts").isNotNull())
-    w = Window.partitionBy("user_id").orderBy(F.asc_nulls_last("ts"), "event_id")
-    prev = F.lag("ts").over(w)
-    gap_us = F.unix_micros(F.col("ts").cast("timestamp")) - F.unix_micros(
-        prev.cast("timestamp")
-    )
-    seq = e.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.when(prev.isNull() | (gap_us > 30 * 60 * 1_000_000), 1)
-        .otherwise(0)
-        .alias("is_new"),
-    )
-    cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sess = seq.select(
-        "user_id", "ts", F.sum("is_new").over(cum).alias("session_id")
-    )
-    per_session = sess.groupBy("user_id", "session_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.date_trunc("day", F.min("ts")).alias("day"),
-    )
-    bounces = F.sum(F.when(F.col("n_events") == 1, 1).otherwise(0))
-    return per_session.groupBy("day").agg(
-        F.count(F.lit(1)).alias("n_sessions"),
-        bounces.cast("bigint").alias("n_bounces"),
-        pround(bounces.cast("double") / F.count(F.lit(1))).alias(
-            "bounce_rate"
-        ),
-    )
-
 
 @register(
     "embed_label_confusion",
@@ -3997,141 +2890,10 @@ def fn_timezone_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # wave module round5m (formerly operators/round5m.py)
-# Round-5 thirteenth wave (SURVEY.md §2.Q, continued): linear-
-# interpolation gap fill (the two-sided sibling of LOCF), supplier
-# market-concentration HHI, binary-payload exact dedup over the
-# multimodal column, and winsorized robust statistics.
+# Round-5 thirteenth wave (SURVEY.md §2.Q, continued): supplier
+# market-concentration HHI and binary-payload exact dedup over the
+# multimodal column.
 # ===========================================================================
-
-@register(
-    "events_gap_fill_linear",
-    oracle=f"""
-WITH daily AS (
-  -- finite gate (nan-tier contract): one NaN day total would ramp NaN
-  -- into every interpolated neighbor, and floor-rounded NaN arithmetic
-  -- diverges between the engines
-  SELECT user_id, CAST(date_trunc('day', ts) AS DATE) AS day,
-         {stable_rounded_sum_sql("value", 6)} AS day_value
-  FROM events WHERE user_id % 50 = 0
-    AND (value IS NULL OR isfinite(value))
-  GROUP BY user_id, CAST(date_trunc('day', ts) AS DATE)
-),
-spans AS (
-  SELECT user_id, min(day) AS d0, max(day) AS d1 FROM daily GROUP BY user_id
-),
-calendar AS (
-  SELECT user_id, unnest(generate_series(d0, d1, INTERVAL 1 DAY))::DATE AS day
-  FROM spans
-),
-joined AS (
-  SELECT c.user_id, c.day, d.day_value,
-         last_value(d.day_value IGNORE NULLS) OVER (
-           PARTITION BY c.user_id ORDER BY c.day
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pv,
-         last_value(CASE WHEN d.day_value IS NOT NULL THEN c.day END
-                    IGNORE NULLS) OVER (
-           PARTITION BY c.user_id ORDER BY c.day
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pd,
-         first_value(d.day_value IGNORE NULLS) OVER (
-           PARTITION BY c.user_id ORDER BY c.day
-           ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nv,
-         first_value(CASE WHEN d.day_value IS NOT NULL THEN c.day END
-                     IGNORE NULLS) OVER (
-           PARTITION BY c.user_id ORDER BY c.day
-           ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nd
-  FROM calendar c LEFT JOIN daily d USING (user_id, day)
-)
-SELECT user_id, day,
-       CASE
-         WHEN day_value IS NOT NULL THEN day_value
-         WHEN pv IS NOT NULL AND nv IS NOT NULL THEN
-           floor((pv + (nv - pv) * (CAST(day - pd AS DOUBLE)
-                                    / CAST(nd - pd AS DOUBLE)))
-                 * 1000000 + 0.5) / 1000000
-         WHEN pv IS NOT NULL THEN pv
-         ELSE nv
-       END AS filled_value,
-       CAST(day_value IS NULL AS BOOLEAN) AS was_gap
-FROM joined
-""",
-)
-def events_gap_fill_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Calendar densification with LINEAR interpolation — the two-sided
-    sibling of events_gap_fill_locf for series where a gap should ramp
-    between its endpoints (sensor readings, balances) instead of
-    holding flat: filled = prev + (next − prev) · elapsed/gap_span,
-    with one-sided gaps extended from the available endpoint. Four
-    ignore-nulls windows over the SAME user-partitioned ordering — one
-    shuffle serves them all; the calendar explode is bounded by each
-    user's own span. The interpolation formula is written with
-    identical operation order in both engines and portable-6dp-rounded
-    (observed values pass through un-re-rounded)."""
-    from ai_dataingestion_spark.functions.portable import finite
-
-    t = Tables(spark, sf_dir)
-    daily = (
-        t.events.filter((F.col("user_id") % 50 == 0) & finite("value"))
-        .groupBy(
-            "user_id", F.to_date(F.date_trunc("day", "ts")).alias("day")
-        )
-        # order-independent endpoints (portable.py:stable_rounded_sum): a
-        # boundary flip in one day total would ramp into every
-        # interpolated day between its neighbors
-        .agg(stable_rounded_sum("value", 6).alias("day_value"))
-    )
-    spans = daily.groupBy("user_id").agg(
-        F.min("day").alias("d0"), F.max("day").alias("d1")
-    )
-    calendar = spans.select(
-        "user_id",
-        F.explode(F.expr("sequence(d0, d1, interval 1 day)")).alias("day"),
-    )
-    joined = calendar.join(daily, ["user_id", "day"], "left")
-    wb = (
-        Window.partitionBy("user_id")
-        .orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # forward carry as a REVERSED running frame, not CURRENT..UNBOUNDED
-    # FOLLOWING: Spark's unbounded-following frame re-scans the partition
-    # tail per row (O(n²) — 186 s on the extremes tier's 83k-day calendar
-    # span, measured round 10), while a running frame over the descending
-    # order is a single O(n) pass. first(ignore nulls) at-or-after in
-    # ascending order == last(ignore nulls) at-or-before in descending.
-    wf = (
-        Window.partitionBy("user_id")
-        .orderBy(F.desc("day"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    obs_day = F.when(F.col("day_value").isNotNull(), F.col("day"))
-    pv = F.last("day_value", ignorenulls=True).over(wb)
-    pd_ = F.last(obs_day, ignorenulls=True).over(wb)
-    nv = F.last("day_value", ignorenulls=True).over(wf)
-    nd = F.last(obs_day, ignorenulls=True).over(wf)
-    interp = pround(
-        pv
-        + (nv - pv)
-        * (
-            F.datediff(F.col("day"), pd_).cast("double")
-            / F.datediff(nd, pd_).cast("double")
-        )
-    )
-    filled = (
-        F.when(F.col("day_value").isNotNull(), F.col("day_value"))
-        .when(pv.isNotNull() & nv.isNotNull(), interp)
-        .when(pv.isNotNull(), pv)
-        .otherwise(nv)
-    )
-    # day crosses as timestamp_ntz (the events_gap_fill_locf rule: DuckDB
-    # DATE lands in pandas as midnight datetime64, Spark DateType as
-    # datetime.date — distinct to the driver canonicalizer)
-    return joined.select(
-        "user_id",
-        F.col("day").cast("timestamp_ntz").alias("day"),
-        filled.alias("filled_value"),
-        F.col("day_value").isNull().alias("was_gap"),
-    )
-
 
 @register(
     "supplier_hhi_by_nation",
@@ -4254,90 +3016,6 @@ def multimodal_payload_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .filter(F.col("n_copies") >= 2)
-    )
-
-
-@register(
-    "events_value_winsorized_stats",
-    oracle="""
-WITH cuts AS (
-  -- DISC percentiles: the cuts must be actual data values, not
-  -- interpolations — at sfx1.0 the interpolated cut lands INSIDE a tie
-  -- run and the engines' last-ulp interpolation differences flip the
-  -- hard value<p05 comparison for the whole tie group (measured: a
-  -- 50-row n_clamped drift). percentile_disc/quantile_disc agree
-  -- bit-exactly cross-engine (win_percentile_disc_vs_cont).
-  SELECT event_type,
-         CAST(quantile_disc(value, 0.05) AS DOUBLE) AS p05,
-         CAST(quantile_disc(value, 0.95) AS DOUBLE) AS p95
-  FROM events
-  WHERE (value IS NULL OR isfinite(value))
-  GROUP BY event_type
-)
-SELECT e.event_type,
-       count(*) AS n,
-       floor(CAST(sum(CAST(e.value AS DECIMAL(38, 6))) AS DOUBLE)
-             / count(*) * 1000000 + 0.5) / 1000000 AS mean_raw,
-       floor(CAST(sum(CAST(least(greatest(e.value, c.p05), c.p95)
-                           AS DECIMAL(38, 6))) AS DOUBLE)
-             / count(*) * 1000000 + 0.5) / 1000000 AS mean_winsorized,
-       CAST(sum(CASE WHEN e.value < c.p05 OR e.value > c.p95
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_clamped
-FROM events e JOIN cuts c ON e.event_type = c.event_type
-WHERE (e.value IS NULL OR isfinite(e.value))
-GROUP BY e.event_type
-""",
-)
-def events_value_winsorized_stats(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Winsorized mean per event type: values clamped to [p05, p95]
-    (DISC percentiles — actual data values, so the clamp boundary is
-    tie-stable cross-engine at any scale) before averaging — the robust-stats answer to 'one whale event
-    wrecked the average' that a trimmed count can't give (n is
-    preserved). The corpus value column carries exactly 2 decimals, so
-    the DECIMAL(38,6) accumulation is EXACT (order-independent) and
-    each mean is one portable-rounded IEEE division; the percentile
-    cut relation is types-sized and broadcasts back. Two aggregate
-    passes over events, no window. Gated to the FINITE domain (nan-tier
-    contract, mirrored in the oracle): winsorization exists to clamp
-    whales, but clamping NaN is undefined (least/greatest NaN ordering
-    diverges cross-engine) and ±Inf breaks the exact DECIMAL sums —
-    non-finite rows are quarantined, not clamped."""
-    from ai_dataingestion_spark.functions.portable import finite
-
-    e = Tables(spark, sf_dir).events.where(finite("value"))
-    cuts = e.groupBy("event_type").agg(
-        F.expr("percentile_disc(0.05) WITHIN GROUP (ORDER BY value)").alias(
-            "p05"
-        ),
-        F.expr("percentile_disc(0.95) WITHIN GROUP (ORDER BY value)").alias(
-            "p95"
-        ),
-    )
-    clamped = F.least(F.greatest(F.col("value"), F.col("p05")), F.col("p95"))
-    n = F.count(F.lit(1))
-    return (
-        e.join(F.broadcast(cuts), "event_type")
-        .groupBy("event_type")
-        .agg(
-            n.alias("n"),
-            pround(
-                F.sum(F.col("value").cast("decimal(38,6)")).cast("double") / n
-            ).alias("mean_raw"),
-            pround(
-                F.sum(clamped.cast("decimal(38,6)")).cast("double") / n
-            ).alias("mean_winsorized"),
-            F.sum(
-                F.when(
-                    (F.col("value") < F.col("p05"))
-                    | (F.col("value") > F.col("p95")),
-                    1,
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_clamped"),
-        )
     )
 
 
@@ -4539,10 +3217,9 @@ def quality_schema_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # wave module round5o (formerly operators/round5o.py)
-# Round-5 fifteenth wave (SURVEY.md §2.Q, continued): CSV quoting
-# round-trip with embedded delimiters/newlines, pre/post Welch t-test,
-# running-distinct-count windows, and incremental batch dedup against an
-# existing lake.
+# Round-5 fifteenth wave (SURVEY.md §2.Q, continued): CSV quoting round-trip
+# with embedded delimiters/newlines, running-distinct-count windows, and
+# incremental batch dedup against an existing lake.
 # ===========================================================================
 
 @register(
@@ -4606,103 +3283,6 @@ def sink_csv_quoted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n_with_newline"),
         F.countDistinct("tricky").alias("n_distinct_tricky"),
         F.sum("o_orderkey").cast("bigint").alias("key_sum"),
-    )
-
-
-_CUTOVER = "2024-01-15"
-
-
-@register(
-    "events_pre_post_welch_t",
-    oracle=f"""
-WITH sides AS (
-  SELECT event_type,
-         CASE WHEN ts < TIMESTAMP '{_CUTOVER}' THEN 'pre' ELSE 'post' END
-           AS side,
-         CAST(value AS DECIMAL(38, 2)) AS v
-  FROM events
-  WHERE (value IS NULL OR isfinite(value))
-),
-mo AS (
-  SELECT event_type, side, count(*) AS n,
-         CAST(sum(v) AS DOUBLE) AS sx,
-         CAST(sum(v * v) AS DOUBLE) AS sx2
-  FROM sides GROUP BY event_type, side
-),
-wide AS (
-  SELECT event_type,
-         max(CASE WHEN side = 'pre' THEN n END) AS n1,
-         max(CASE WHEN side = 'pre' THEN sx END) AS sx1,
-         max(CASE WHEN side = 'pre' THEN sx2 END) AS sxx1,
-         max(CASE WHEN side = 'post' THEN n END) AS n2,
-         max(CASE WHEN side = 'post' THEN sx END) AS sx2_,
-         max(CASE WHEN side = 'post' THEN sx2 END) AS sxx2
-  FROM mo GROUP BY event_type
-)
-SELECT event_type, n1, n2,
-       floor(sx1 / n1 * 1000000 + 0.5) / 1000000 AS mean_pre,
-       floor(sx2_ / n2 * 1000000 + 0.5) / 1000000 AS mean_post,
-       floor((sx1 / n1 - sx2_ / n2)
-             / sqrt((sxx1 - sx1 * sx1 / n1) / (n1 - 1) / n1
-                    + (sxx2 - sx2_ * sx2_ / n2) / (n2 - 1) / n2)
-             * 1000000 + 0.5) / 1000000 AS welch_t
-FROM wide
-""",
-)
-def events_pre_post_welch_t(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre/post intervention comparison: Welch's unequal-variance t
-    statistic on the value column around a cutover date, per event
-    type — the release-impact / experiment-readout primitive for
-    continuous metrics (the proportions twin is
-    events_ab_proportion_ztest). Raw power sums (n, Σx, Σx²)
-    accumulate in DECIMAL — exact and order-independent (values carry
-    2 decimals) — then means, variances, and t are derived with
-    IDENTICAL IEEE operation order in both engines and portable-
-    rounded. One partial-aggregable pass; output is types-sized. The
-    metric is gated to the FINITE domain (nan-tier contract, mirrored
-    in the oracle): ±Inf is a DECIMAL conversion error in the oracle's
-    exact-sum path and a t of NaN answers nothing."""
-    from ai_dataingestion_spark.functions.portable import finite
-
-    e = Tables(spark, sf_dir).events.where(finite("value"))
-    v = F.col("value").cast("decimal(38,2)")
-    sides = e.select(
-        "event_type",
-        F.when(
-            F.col("ts") < F.lit(_CUTOVER).cast("timestamp"), "pre"
-        ).otherwise("post").alias("side"),
-        v.alias("v"),
-    )
-    mo = sides.groupBy("event_type", "side").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("v").cast("double").alias("sx"),
-        F.sum(F.col("v") * F.col("v")).cast("double").alias("sx2"),
-    )
-    wide = mo.groupBy("event_type").agg(
-        F.max(F.when(F.col("side") == "pre", F.col("n"))).alias("n1"),
-        F.max(F.when(F.col("side") == "pre", F.col("sx"))).alias("sx1"),
-        F.max(F.when(F.col("side") == "pre", F.col("sx2"))).alias("sxx1"),
-        F.max(F.when(F.col("side") == "post", F.col("n"))).alias("n2"),
-        F.max(F.when(F.col("side") == "post", F.col("sx"))).alias("sx2_"),
-        F.max(F.when(F.col("side") == "post", F.col("sx2"))).alias("sxx2"),
-    )
-    m1 = F.col("sx1") / F.col("n1")
-    m2 = F.col("sx2_") / F.col("n2")
-    se2 = (
-        (F.col("sxx1") - F.col("sx1") * F.col("sx1") / F.col("n1"))
-        / (F.col("n1") - 1)
-        / F.col("n1")
-        + (F.col("sxx2") - F.col("sx2_") * F.col("sx2_") / F.col("n2"))
-        / (F.col("n2") - 1)
-        / F.col("n2")
-    )
-    return wide.select(
-        "event_type",
-        "n1",
-        "n2",
-        pround(m1).alias("mean_pre"),
-        pround(m2).alias("mean_post"),
-        pround((m1 - m2) / F.sqrt(se2)).alias("welch_t"),
     )
 
 
@@ -4820,8 +3400,8 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # wave module round5p (formerly operators/round5p.py)
 # Round-5 sixteenth wave (SURVEY.md §2.Q, continued): exactly-once
-# batch ledger semantics, stable k-per-group sampling, deterministic
-# content-UUID minting, and session-bounded CEP-style pattern matching.
+# batch ledger semantics, stable k-per-group sampling, and deterministic
+# content-UUID minting.
 # ===========================================================================
 
 @register(
@@ -4974,95 +3554,11 @@ def fn_content_uuid(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", uuid.alias("content_uuid"))
 
 
-@register(
-    "events_cep_triple_pattern",
-    oracle="""
-WITH seq AS (
-  SELECT user_id, ts, event_id, event_type,
-         CASE WHEN ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-              OR lag(ts) OVER w IS NULL THEN 1 ELSE 0 END AS is_new
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-sess AS (
-  SELECT user_id, ts, event_id, event_type,
-         CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-  FROM seq
-),
-pat AS (
-  SELECT user_id, session_id, event_type AS e1,
-         lead(event_type, 1) OVER w2 AS e2,
-         lead(event_type, 2) OVER w2 AS e3,
-         lead(session_id, 2) OVER w2 AS s3
-  FROM sess
-  WINDOW w2 AS (PARTITION BY user_id ORDER BY ts, event_id)
-)
-SELECT user_id, count(*) AS n_matches
-FROM pat
-WHERE e1 = 'view' AND e2 = 'click' AND e3 = 'purchase'
-  AND s3 = session_id
-GROUP BY user_id
-""",
-)
-def events_cep_triple_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MATCH_RECOGNIZE-style pattern detection without a CEP engine:
-    strictly consecutive view→click→purchase triples, all three inside
-    ONE 30-minute session (a lead() across a session boundary must not
-    match — checked by comparing the 3rd row's session id). The
-    Flink-CEP/MATCH_RECOGNIZE workload expressed as two stacked windows
-    over one user partitioning: sessionize, then a lead-chain predicate.
-    Per-user match counts; strict contiguity is what separates this
-    from events_markov_2step_paths' unconditional trigram census."""
-    e = Tables(spark, sf_dir).events
-    w = Window.partitionBy("user_id").orderBy(F.asc_nulls_last("ts"), "event_id")
-    prev = F.lag("ts").over(w)
-    gap_us = F.unix_micros(F.col("ts").cast("timestamp")) - F.unix_micros(
-        prev.cast("timestamp")
-    )
-    seq = e.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "event_type",
-        F.when(prev.isNull() | (gap_us > 30 * 60 * 1_000_000), 1)
-        .otherwise(0)
-        .alias("is_new"),
-    )
-    cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sess = seq.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "event_type",
-        F.sum("is_new").over(cum).alias("session_id"),
-    )
-    pat = sess.select(
-        "user_id",
-        "session_id",
-        F.col("event_type").alias("e1"),
-        F.lead("event_type", 1).over(w).alias("e2"),
-        F.lead("event_type", 2).over(w).alias("e3"),
-        F.lead("session_id", 2).over(w).alias("s3"),
-    )
-    return (
-        pat.filter(
-            (F.col("e1") == "view")
-            & (F.col("e2") == "click")
-            & (F.col("e3") == "purchase")
-            & (F.col("s3") == F.col("session_id"))
-        )
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_matches"))
-    )
-
-
 # ===========================================================================
 # wave module round5q (formerly operators/round5q.py)
 # Round-5 seventeenth wave (SURVEY.md §2.Q, continued): co-purchase
-# graph triangle census, whole-file text ingestion, seasonal-naive
-# forecast backtesting, and a top-k-per-group strategy-equivalence
-# proof.
+# graph triangle census, whole-file text ingestion, and a
+# top-k-per-group strategy-equivalence proof.
 # ===========================================================================
 
 @register(
@@ -5208,62 +3704,6 @@ def scan_text_wholefile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "events_seasonal_naive_backtest",
-    oracle="""
-WITH daily AS (
-  -- ts IS NOT NULL: a NULL day has no lag-7 seat, and the oracle
-  -- engine's window over a NULL grouped date is nondeterministic
-  -- (observed flipping across identical runs on this corpus)
-  SELECT event_type, date_trunc('day', ts) AS day, count(*) AS n
-  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2
-),
-lagged AS (
-  SELECT event_type, day, n,
-         lag(n, 7) OVER (PARTITION BY event_type ORDER BY day) AS fc
-  FROM daily
-),
-scored AS (SELECT * FROM lagged WHERE fc IS NOT NULL)
-SELECT event_type,
-       count(*) AS n_days_scored,
-       CAST(sum(abs(n - fc)) AS BIGINT) AS abs_err_sum,
-       floor(CAST(sum(abs(n - fc)) AS DOUBLE) / count(*) * 1000000 + 0.5)
-         / 1000000 AS mae,
-       floor(sqrt(CAST(sum((n - fc) * (n - fc)) AS DOUBLE) / count(*))
-             * 1000000 + 0.5) / 1000000 AS rmse,
-       CAST(sum(n - fc) AS BIGINT) AS bias
-FROM scored GROUP BY event_type
-""",
-)
-def events_seasonal_naive_backtest(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Seasonal-naive forecast backtest: predict each day's event volume
-    with the same weekday's count one week earlier (lag-7) and score
-    MAE / RMSE / bias per type — THE baseline every fancier forecaster
-    must beat before it earns a deploy (and the denominator of a MASE
-    score). Error sums are exact integer arithmetic; the two final
-    divisions and the sqrt are portable-rounded. Windows run over the
-    types×days aggregate — broadcast-sized at any event volume."""
-    e = Tables(spark, sf_dir).events.where(F.col("ts").isNotNull())
-    daily = e.groupBy(
-        "event_type", F.date_trunc("day", "ts").alias("day")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    w = Window.partitionBy("event_type").orderBy("day")
-    scored = daily.withColumn("fc", F.lag("n", 7).over(w)).filter(
-        F.col("fc").isNotNull()
-    )
-    err = F.col("n") - F.col("fc")
-    cnt = F.count(F.lit(1))
-    return scored.groupBy("event_type").agg(
-        cnt.alias("n_days_scored"),
-        F.sum(F.abs(err)).cast("bigint").alias("abs_err_sum"),
-        pround(F.sum(F.abs(err)).cast("double") / cnt).alias("mae"),
-        pround(F.sqrt(F.sum(err * err).cast("double") / cnt)).alias("rmse"),
-        F.sum(err).cast("bigint").alias("bias"),
-    )
-
-
-@register(
     "topk_per_group_strategies",
     oracle="""
 WITH rev AS (
@@ -5354,265 +3794,9 @@ def topk_per_group_strategies(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # wave module round5r (formerly operators/round5r.py)
-# Round-5 eighteenth wave (SURVEY.md §2.Q, continued): top session
-# paths, linear multi-touch attribution, conversion-latency quantiles,
-# and a small-files compaction planner.
+# Round-5 eighteenth wave (SURVEY.md §2.Q, continued): a small-files
+# compaction planner.
 # ===========================================================================
-
-@register(
-    "events_top_session_paths",
-    oracle="""
-WITH seq AS (
-  SELECT user_id, ts, event_id, event_type,
-         CASE WHEN ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-              OR lag(ts) OVER w IS NULL THEN 1 ELSE 0 END AS is_new
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-sess AS (
-  SELECT user_id, ts, event_id, event_type,
-         CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-  FROM seq
-),
-paths AS (
-  SELECT user_id, session_id,
-         string_agg(event_type, '>' ORDER BY ts, event_id) AS path
-  FROM sess
-  GROUP BY user_id, session_id
-  HAVING count(*) <= 8
-),
-counted AS (SELECT path, count(*) AS n_sessions FROM paths GROUP BY path)
-SELECT path, n_sessions FROM (
-  SELECT path, n_sessions,
-         row_number() OVER (ORDER BY n_sessions DESC, path) AS rn
-  FROM counted)
-WHERE rn <= 20
-""",
-)
-def events_top_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 session paths: each 30-minute session rendered as its
-    ordered event-type string (view>click>purchase…), counted across
-    sessions — the "what do users actually do" report behind every
-    funnel hypothesis. Sessions longer than 8 events are excluded (long
-    tails are unique paths that never rank and only bloat the shuffle).
-    Path strings are built ORDER-DETERMINISTICALLY: Spark sorts the
-    collected (ts, event_id, type) structs before joining — collect_list
-    alone has nondeterministic shuffle order (the §5.4 trap) — matching
-    DuckDB's ordered string_agg. Top-20 cut is count-then-path
-    deterministic."""
-    e = Tables(spark, sf_dir).events
-    w = Window.partitionBy("user_id").orderBy(F.asc_nulls_last("ts"), "event_id")
-    prev = F.lag("ts").over(w)
-    gap_us = F.unix_micros(F.col("ts").cast("timestamp")) - F.unix_micros(
-        prev.cast("timestamp")
-    )
-    seq = e.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "event_type",
-        F.when(prev.isNull() | (gap_us > 30 * 60 * 1_000_000), 1)
-        .otherwise(0)
-        .alias("is_new"),
-    )
-    cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sess = seq.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "event_type",
-        F.sum("is_new").over(cum).alias("session_id"),
-    )
-    paths = (
-        sess.groupBy("user_id", "session_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.array_join(
-                F.transform(
-                    # the +inf sentinel sorts NULL-ts events LAST (struct
-                    # field comparison would put them first; the oracle's
-                    # ORDER BY ts is NULLS LAST) — event_id tiebreaks both
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                F.coalesce(
-                                    F.col("ts"),
-                                    F.lit("9999-12-31").cast("timestamp"),
-                                ).alias("ts_k"),
-                                "event_id",
-                                "event_type",
-                            )
-                        )
-                    ),
-                    lambda s: s.getField("event_type"),
-                ),
-                ">",
-            ).alias("path_raw"),
-        )
-        .filter(F.col("n_events") <= 8)
-        # all-NULL-type sessions: array_join renders '', the oracle's
-        # string_agg renders NULL — nullif pins the NULL contract (no
-        # event_type in this corpus is the empty string)
-        .withColumn("path", F.nullif(F.col("path_raw"), F.lit("")))
-    )
-    counted = paths.groupBy("path").agg(F.count(F.lit(1)).alias("n_sessions"))
-    wr = Window.orderBy(F.desc("n_sessions"), F.asc_nulls_last("path"))
-    return (
-        counted.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= 20)
-        .select("path", "n_sessions")
-    )
-
-
-@register(
-    "events_attribution_linear",
-    oracle="""
-WITH seq AS (
-  SELECT user_id, ts, event_id, event_type,
-         CAST(ts AS DATE) AS day
-  FROM events
-),
-purchases AS (
-  SELECT user_id, day, ts, event_id FROM seq WHERE event_type = 'purchase'
-),
-touches AS (
-  SELECT s.user_id, p.event_id AS purchase_id, s.event_type AS touch_type,
-         count(*) OVER (PARTITION BY p.event_id) AS k
-  FROM purchases p
-  JOIN seq s
-    ON s.user_id = p.user_id AND s.day = p.day
-   AND (s.ts < p.ts OR (s.ts = p.ts AND s.event_id < p.event_id))
-   AND s.event_type <> 'purchase'
-),
-credited AS (
-  SELECT touch_type,
-         CAST(floor(1.0 / k * 1000000000 + 0.5) / 1000000000
-              AS DECIMAL(38, 9)) AS credit
-  FROM touches
-)
-SELECT touch_type,
-       count(*) AS n_touches,
-       CAST(sum(credit) AS DOUBLE) AS linear_credit
-FROM credited GROUP BY touch_type
-""",
-)
-def events_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Linear multi-touch attribution: every same-day touch preceding a
-    purchase shares the conversion credit equally (1/k each) — the
-    equal-weight sibling of events_attribution_last_touch, the model
-    marketing uses when no single touch deserves the win. Determinism
-    trick: each 1/k credit is portable-rounded to 9dp FIRST and then
-    accumulated as DECIMAL(38,9) — rounded terms sum exactly and
-    order-independently, where a raw double Σ(1/k) would differ by
-    summation order across engines/partitionings. The purchase⇄touch
-    join is keyed (user, day): fan-out bounded by a user's daily
-    activity, never cross-user."""
-    e = Tables(spark, sf_dir).events
-    seq = e.select(
-        "user_id", "ts", "event_id", "event_type", F.to_date("ts").alias("day")
-    )
-    purchases = seq.filter(F.col("event_type") == "purchase").select(
-        "user_id",
-        "day",
-        F.col("ts").alias("pts"),
-        F.col("event_id").alias("purchase_id"),
-    )
-    touches = (
-        purchases.join(seq, ["user_id", "day"])
-        .filter(
-            (
-                (F.col("ts") < F.col("pts"))
-                | (
-                    (F.col("ts") == F.col("pts"))
-                    & (F.col("event_id") < F.col("purchase_id"))
-                )
-            )
-            & (F.col("event_type") != "purchase")
-        )
-        .select("purchase_id", F.col("event_type").alias("touch_type"))
-    )
-    k = F.count(F.lit(1)).over(Window.partitionBy("purchase_id"))
-    credited = touches.select(
-        "touch_type",
-        pround(F.lit(1.0) / k, 9).cast("decimal(38,9)").alias("credit"),
-    )
-    return credited.groupBy("touch_type").agg(
-        F.count(F.lit(1)).alias("n_touches"),
-        F.sum("credit").cast("double").alias("linear_credit"),
-    )
-
-
-@register(
-    "events_time_to_convert_quantiles",
-    oracle="""
-WITH firsts AS (
-  SELECT user_id,
-         min(CASE WHEN event_type = 'view' THEN ts END) AS first_view,
-         min(CASE WHEN event_type = 'purchase' THEN ts END) AS first_purchase
-  FROM events GROUP BY user_id
-),
-lat AS (
-  SELECT user_id,
-         CAST((epoch_us(first_purchase) - epoch_us(first_view)) / 60000000.0
-              AS DOUBLE) AS minutes
-  FROM firsts
-  WHERE first_view IS NOT NULL AND first_purchase IS NOT NULL
-    AND first_purchase >= first_view
-)
-SELECT count(*) AS n_converted,
-       floor(CAST(quantile_cont(minutes, 0.5) AS DOUBLE) * 1000000 + 0.5)
-         / 1000000 AS p50_minutes,
-       floor(CAST(quantile_cont(minutes, 0.9) AS DOUBLE) * 1000000 + 0.5)
-         / 1000000 AS p90_minutes,
-       floor(CAST(max(minutes) AS DOUBLE) * 1000000 + 0.5) / 1000000
-         AS max_minutes
-FROM lat
-""",
-)
-def events_time_to_convert_quantiles(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Conversion-latency distribution: minutes from each user's FIRST
-    view to their FIRST subsequent purchase, summarized as p50/p90/max —
-    the funnel-velocity headline ("half convert within X minutes") that
-    events_funnel's pure counts can't answer. One per-user conditional-
-    min reduce (partial-aggregable), then quantiles over the
-    users-sized latency relation. Latency is exact integer µs divided
-    once by 6e7 — bit-identical before the interpolating quantile."""
-    e = Tables(spark, sf_dir).events
-    firsts = e.groupBy("user_id").agg(
-        F.min(
-            F.when(F.col("event_type") == "view", F.col("ts"))
-        ).alias("first_view"),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.col("ts"))
-        ).alias("first_purchase"),
-    )
-    lat = firsts.filter(
-        F.col("first_view").isNotNull()
-        & F.col("first_purchase").isNotNull()
-        & (F.col("first_purchase") >= F.col("first_view"))
-    ).select(
-        (
-            (
-                F.unix_micros(F.col("first_purchase").cast("timestamp"))
-                - F.unix_micros(F.col("first_view").cast("timestamp"))
-            )
-            / 60_000_000.0
-        ).alias("minutes")
-    )
-    return lat.agg(
-        F.count(F.lit(1)).alias("n_converted"),
-        pround(
-            F.expr("percentile_cont(0.5) WITHIN GROUP (ORDER BY minutes)")
-        ).alias("p50_minutes"),
-        pround(
-            F.expr("percentile_cont(0.9) WITHIN GROUP (ORDER BY minutes)")
-        ).alias("p90_minutes"),
-        pround(F.max("minutes")).alias("max_minutes"),
-    )
-
 
 _TARGET_FILE_BYTES = 4 * 1024 * 1024  # 4 MiB scratch-scale stand-in
 
@@ -5879,109 +4063,10 @@ def agg_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # wave module round5t (formerly operators/round5t.py)
-# Round-5 twentieth wave (SURVEY.md §2.Q, continued): a declarative
-# alert-rules engine, empty-relation aggregate semantics, the default-
-# window-frame ties pin, and pairwise Jensen-Shannon source drift.
+# Round-5 twentieth wave (SURVEY.md §2.Q, continued): empty-relation
+# aggregate semantics, the default-window-frame ties pin, and pairwise
+# Jensen-Shannon source drift.
 # ===========================================================================
-
-@register(
-    "events_alert_rules",
-    oracle="""
-WITH totals AS (
-  SELECT count(*) AS n,
-         sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS n_err
-  FROM events
-),
-daily AS (
-  SELECT date_trunc('day', ts) AS day, count(*) AS n FROM events GROUP BY 1
-),
-daily_stats AS (
-  SELECT min(CAST(n AS DOUBLE)) AS min_daily,
-         CAST(sum(n) AS DOUBLE) / count(*) AS mean_daily
-  FROM daily
-),
-p95v AS (
-  -- finite gate (nan-tier contract): the engines' quantile kernels
-  -- disagree on NaN placement, and an alert threshold compared to NaN
-  -- never fires — rank the observable domain only
-  SELECT CAST(quantile_cont(value, 0.95) AS DOUBLE) AS p95 FROM events
-  WHERE (value IS NULL OR isfinite(value))
-)
-SELECT 'error_rate_gt_19pct' AS rule,
-       floor(CAST(n_err AS DOUBLE) / n * 1000000 + 0.5) / 1000000 AS metric,
-       0.19 AS threshold,
-       CAST(CASE WHEN CAST(n_err AS DOUBLE) / n > 0.19
-                 THEN 1 ELSE 0 END AS INT) AS fired
-FROM totals
-UNION ALL
-SELECT 'daily_volume_drop_gt_50pct',
-       floor(min_daily / mean_daily * 1000000 + 0.5) / 1000000,
-       0.5,
-       CAST(CASE WHEN min_daily / mean_daily < 0.5 THEN 1 ELSE 0 END AS INT)
-FROM daily_stats
-UNION ALL
-SELECT 'value_p95_gt_100',
-       floor(p95 * 1000000 + 0.5) / 1000000,
-       100.0,
-       CAST(CASE WHEN p95 > 100 THEN 1 ELSE 0 END AS INT)
-FROM p95v
-""",
-)
-def events_alert_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Declarative monitoring rules engine: three alert rules (error
-    share, worst-day volume drop vs mean, value p95 ceiling) evaluated
-    over the corpus into one (rule, metric, threshold, fired) report —
-    the operator a scheduler runs after every ingest, and the shape
-    (metric expression + threshold + comparator per row) that makes
-    alert definitions DATA instead of code. Each rule is an
-    aggregate-first scalar; thresholds are literals shared verbatim
-    with the oracle; metrics are portable-rounded, firing decisions
-    computed on the UNROUNDED metric in both engines."""
-    e = Tables(spark, sf_dir).events
-    totals = e.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0)).alias(
-            "n_err"
-        ),
-    )
-    err_rate = F.col("n_err").cast("double") / F.col("n")
-    r1 = totals.select(
-        F.lit("error_rate_gt_19pct").alias("rule"),
-        pround(err_rate).alias("metric"),
-        F.lit(0.19).alias("threshold"),
-        F.when(err_rate > 0.19, 1).otherwise(0).cast("int").alias("fired"),
-    )
-    daily = e.groupBy(F.date_trunc("day", "ts").alias("day")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    ds = daily.agg(
-        F.min(F.col("n").cast("double")).alias("min_daily"),
-        (F.sum("n").cast("double") / F.count(F.lit(1))).alias("mean_daily"),
-    )
-    drop = F.col("min_daily") / F.col("mean_daily")
-    r2 = ds.select(
-        F.lit("daily_volume_drop_gt_50pct").alias("rule"),
-        pround(drop).alias("metric"),
-        F.lit(0.5).alias("threshold"),
-        F.when(drop < 0.5, 1).otherwise(0).cast("int").alias("fired"),
-    )
-    # finite gate on the ranked metric only (nan-tier contract, mirrored
-    # in the oracle's p95v CTE); the count-based rules keep every row
-    from ai_dataingestion_spark.functions.portable import finite
-
-    p95 = e.where(finite("value")).agg(
-        F.expr("percentile_cont(0.95) WITHIN GROUP (ORDER BY value)").alias(
-            "p95"
-        )
-    )
-    r3 = p95.select(
-        F.lit("value_p95_gt_100").alias("rule"),
-        pround(F.col("p95")).alias("metric"),
-        F.lit(100.0).alias("threshold"),
-        F.when(F.col("p95") > 100, 1).otherwise(0).cast("int").alias("fired"),
-    )
-    return r1.unionByName(r2).unionByName(r3)
-
 
 @register(
     "agg_empty_relation_semantics",
@@ -6165,8 +4250,8 @@ def text_js_divergence_pairwise(
 # ===========================================================================
 # wave module round5u (formerly operators/round5u.py)
 # Round-5 twenty-first wave (SURVEY.md §2.Q, continued): BM25 lexical
-# ranking, inverted-index boolean search, doc⇄embedding coverage audit,
-# and rolling 7-day distinct actives via the explode-offset pattern.
+# ranking, inverted-index boolean search, and doc⇄embedding coverage
+# audit.
 # ===========================================================================
 
 _BM25_TERMS = ["hash", "join", "filter"]
@@ -6407,64 +4492,6 @@ def multimodal_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "coverage_ratio"
             ),
         )
-    )
-
-
-@register(
-    "events_rolling_7d_active_users",
-    oracle="""
-WITH user_days AS (
-  SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS DATE) AS day
-  FROM events
-),
-expanded AS (
-  SELECT user_id, day + CAST(off AS INT) AS window_day
-  FROM user_days, unnest(generate_series(0, 6)) g(off)
-),
-bounds AS (SELECT min(day) AS d0, max(day) AS d1 FROM user_days)
-SELECT CAST(window_day AS TIMESTAMP) AS window_day,
-       count(DISTINCT user_id) AS active_7d
-FROM expanded CROSS JOIN bounds
-WHERE window_day >= d0 AND window_day <= d1
-GROUP BY window_day
-""",
-)
-def events_rolling_7d_active_users(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Rolling 7-day distinct active users per day — the windowed
-    DISTINCT that neither window frames (no COUNT DISTINCT OVER) nor
-    plain grouping can express — via the EXPLODE-OFFSET pattern: each
-    distinct (user, day) activity emits itself into the 7 window-days
-    it contributes to (map-side ×7 fan-out of user-day rows, never raw
-    events), then one distinct-count per window-day. Calendar edges
-    trimmed to observed days. This is the standard WAU/rolling-MAU
-    shape at any scale: fan-out is bounded by window length, not data
-    skew."""
-    e = Tables(spark, sf_dir).events
-    user_days = e.select(
-        "user_id", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).distinct()
-    bounds = user_days.agg(
-        F.min("day").alias("d0"), F.max("day").alias("d1")
-    )
-    expanded = user_days.select(
-        "user_id",
-        F.explode(
-            F.expr("sequence(0, 6)")
-        ).alias("off"),
-        "day",
-    ).select(
-        "user_id", F.expr("date_add(day, off)").alias("window_day")
-    )
-    return (
-        expanded.crossJoin(F.broadcast(bounds))
-        .filter(
-            (F.col("window_day") >= F.col("d0"))
-            & (F.col("window_day") <= F.col("d1"))
-        )
-        .groupBy(F.col("window_day").cast("timestamp").alias("window_day"))
-        .agg(F.countDistinct("user_id").alias("active_7d"))
     )
 
 
@@ -6837,8 +4864,8 @@ def dedup_partition_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # wave module round5w (formerly operators/round5w.py)
 # Round-5 twenty-third wave (SURVEY.md §2.Q, continued): partial-
-# aggregation merge proof, transition dwell-time stats, training-shard
-# manifest build, and median-split quadrant classification.
+# aggregation merge proof, training-shard manifest build, and median-split
+# quadrant classification.
 # ===========================================================================
 
 @register(
@@ -6946,59 +4973,6 @@ def agg_partial_merge_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
         *mant_exp_cols(var_whole, "variance_whole"),
         *mant_exp_cols(var_merged, "variance_merged"),
         mismatch.cast("int").alias("merge_mismatch"),
-    )
-
-
-@register(
-    "events_transition_dwell_stats",
-    oracle="""
-WITH seq AS (
-  SELECT user_id, ts, event_id, event_type,
-         lag(event_type) OVER w AS prev_type,
-         epoch_us(ts) - epoch_us(lag(ts) OVER w) AS dwell_us
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-)
-SELECT prev_type, event_type AS next_type,
-       count(*) AS n_transitions,
-       CAST(sum(dwell_us) AS BIGINT) AS dwell_us_sum,
-       floor(CAST(sum(dwell_us) AS DOUBLE) / count(*) / 1000000
-             * 1000000 + 0.5) / 1000000 AS mean_dwell_s,
-       CAST(quantile_cont(dwell_us, 0.5) AS DOUBLE) AS p50_dwell_us
-FROM seq WHERE prev_type IS NOT NULL
-GROUP BY prev_type, event_type
-""",
-)
-def events_transition_dwell_stats(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Dwell time per transition: how long users linger BETWEEN each
-    (from → to) event-type pair — the timing layer the count-only
-    events_transition_matrix lacks (a view→purchase edge that takes 2
-    seconds vs 20 minutes is a different product story). One
-    user-partitioned lag window emits (prev, next, µs delta); exact
-    integer µs sums, one rounded division for the mean, interpolating
-    median over exact integers. Output bounded by types²."""
-    e = Tables(spark, sf_dir).events
-    w = Window.partitionBy("user_id").orderBy(F.asc_nulls_last("ts"), "event_id")
-    dwell = F.unix_micros(F.col("ts").cast("timestamp")) - F.unix_micros(
-        F.lag("ts").over(w).cast("timestamp")
-    )
-    seq = e.select(
-        F.lag("event_type").over(w).alias("prev_type"),
-        F.col("event_type").alias("next_type"),
-        dwell.alias("dwell_us"),
-    ).filter(F.col("prev_type").isNotNull())
-    n = F.count(F.lit(1))
-    return seq.groupBy("prev_type", "next_type").agg(
-        n.alias("n_transitions"),
-        F.sum("dwell_us").cast("bigint").alias("dwell_us_sum"),
-        pround(F.sum("dwell_us").cast("double") / n / 1_000_000).alias(
-            "mean_dwell_s"
-        ),
-        F.expr(
-            "percentile_cont(0.5) WITHIN GROUP (ORDER BY dwell_us)"
-        ).alias("p50_dwell_us"),
     )
 
 

@@ -21,117 +21,15 @@ from ai_dataingestion_spark.ai.dedup import (
     _spark_h,
 )
 import os
-import math
 from ai_dataingestion_spark.registry import Tables
 import glob
 
 
 # ===========================================================================
 # wave module round6a (formerly operators/round6a.py)
-# Round-5 twenty-seventh wave (SURVEY.md §2.Q, continued):
-# difference-in-differences estimation, a Laspeyres price index,
-# sink file-layout auditing, and incremental batch novelty.
+# Round-5 twenty-seventh wave (SURVEY.md §2.Q, continued): a Laspeyres
+# price index, sink file-layout auditing, and incremental batch novelty.
 # ===========================================================================
-
-_DID_CUT = "2024-01-15"
-
-
-@register(
-    "events_diff_in_differences",
-    oracle=f"""
-WITH tagged AS (
-  SELECT CASE WHEN CAST('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 1)
-                        AS BIGINT) % 2 = 0
-              THEN 'treated' ELSE 'control' END AS grp,
-         CASE WHEN ts < TIMESTAMP '{_DID_CUT}' THEN 'pre' ELSE 'post' END
-           AS period,
-         CAST(value AS DECIMAL(38, 2)) AS v
-  FROM events
-  WHERE (value IS NULL OR isfinite(value))
-),
-cells AS (
-  SELECT grp, period, count(*) AS n,
-         CAST(sum(v) AS DOUBLE) AS s
-  FROM tagged GROUP BY grp, period
-),
-wide AS (
-  SELECT
-    max(CASE WHEN grp = 'treated' AND period = 'pre'  THEN s / n END) AS t0,
-    max(CASE WHEN grp = 'treated' AND period = 'post' THEN s / n END) AS t1,
-    max(CASE WHEN grp = 'control' AND period = 'pre'  THEN s / n END) AS c0,
-    max(CASE WHEN grp = 'control' AND period = 'post' THEN s / n END) AS c1,
-    CAST(sum(n) AS BIGINT) AS n_events
-  FROM cells
-)
-SELECT n_events,
-       floor(t0 * 1000000 + 0.5) / 1000000 AS treated_pre,
-       floor(t1 * 1000000 + 0.5) / 1000000 AS treated_post,
-       floor(c0 * 1000000 + 0.5) / 1000000 AS control_pre,
-       floor(c1 * 1000000 + 0.5) / 1000000 AS control_post,
-       floor(((t1 - t0) - (c1 - c0)) * 1000000 + 0.5) / 1000000
-         AS did_estimate
-FROM wide
-""",
-)
-def events_diff_in_differences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Difference-in-differences: (post − pre) for the treated group
-    minus (post − pre) for control — the workhorse causal estimator
-    when randomization is only at the group level, composed from the
-    repo's two established idioms (md5-nibble deterministic group
-    assignment, cutover-date period split). Four cell means from
-    exact DECIMAL sums, the DiD contrast derived with identical IEEE
-    order in both engines. One partial-aggregable pass to a 4-cell
-    relation. Metric gated to the FINITE domain (nan-tier contract,
-    mirrored in the oracle): ±Inf is a DECIMAL conversion error in the
-    oracle's exact-sum path."""
-    from ai_dataingestion_spark.functions.portable import finite
-
-    e = Tables(spark, sf_dir).events.where(finite("value"))
-    grp = F.when(
-        F.expr(
-            "conv(substring(md5(cast(user_id as string)), 1, 1), 16, 10)"
-        ).cast("bigint")
-        % 2
-        == 0,
-        "treated",
-    ).otherwise("control")
-    period = F.when(
-        F.col("ts") < F.lit(_DID_CUT).cast("timestamp"), "pre"
-    ).otherwise("post")
-    cells = e.select(
-        grp.alias("grp"),
-        period.alias("period"),
-        F.col("value").cast("decimal(38,2)").alias("v"),
-    ).groupBy("grp", "period").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("v").cast("double").alias("s")
-    )
-
-    def cell(g: str, p: str):
-        return F.max(
-            F.when(
-                (F.col("grp") == g) & (F.col("period") == p),
-                F.col("s") / F.col("n"),
-            )
-        )
-
-    wide = cells.agg(
-        cell("treated", "pre").alias("t0"),
-        cell("treated", "post").alias("t1"),
-        cell("control", "pre").alias("c0"),
-        cell("control", "post").alias("c1"),
-        F.sum("n").cast("bigint").alias("n_events"),
-    )
-    return wide.select(
-        "n_events",
-        pround(F.col("t0")).alias("treated_pre"),
-        pround(F.col("t1")).alias("treated_post"),
-        pround(F.col("c0")).alias("control_pre"),
-        pround(F.col("c1")).alias("control_post"),
-        pround(
-            (F.col("t1") - F.col("t0")) - (F.col("c1") - F.col("c0"))
-        ).alias("did_estimate"),
-    )
-
 
 @register(
     "lineitem_price_index",
@@ -323,135 +221,9 @@ def text_batch_novelty_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # wave module round6b (formerly operators/round6b.py)
-# Round-5 twenty-eighth wave (SURVEY.md §2.Q, continued): CUPED
-# variance reduction, log2 heavy-tail histogram, a composite supplier
-# scorecard, and experiment sample-size calculation — closing the
-# experimentation suite (z-test, Welch t, DiD, CUPED, power).
+# Round-5 twenty-eighth wave (SURVEY.md §2.Q, continued): log2
+# heavy-tail histogram and a composite supplier scorecard.
 # ===========================================================================
-
-_CUPED_CUT = "2024-01-15"
-
-
-@register(
-    "events_cuped_adjustment",
-    oracle=f"""
-WITH per_user AS (
-  SELECT user_id,
-         CAST(sum(CASE WHEN ts < TIMESTAMP '{_CUPED_CUT}'
-                       THEN CAST(value AS DECIMAL(38, 2)) ELSE 0 END)
-              AS DOUBLE) AS x,
-         CAST(sum(CASE WHEN ts >= TIMESTAMP '{_CUPED_CUT}'
-                       THEN CAST(value AS DECIMAL(38, 2)) ELSE 0 END)
-              AS DOUBLE) AS y
-  FROM events
-  WHERE (value IS NULL OR isfinite(value))
-  GROUP BY user_id
-),
-mo AS (
-  -- first moments through the 6dp-round-then-DECIMAL idiom (its domain,
-  -- |x| < ~9e12, covers any per-user total); SECOND moments are raw
-  -- double sums: x*y at lake magnitudes (~1e20) is past both the idiom's
-  -- floor-grid exactness and the engine's integer floor range, and the
-  -- downstream ratios are scale-free while the variances are emitted as
-  -- mantissa/exponent pairs (functions/portable.py)
-  SELECT count(*) AS n,
-         CAST(sum(CAST(floor(x * 1000000 + 0.5) / 1000000
-                       AS DECIMAL(38, 6))) AS DOUBLE) AS sx,
-         CAST(sum(CAST(floor(y * 1000000 + 0.5) / 1000000
-                       AS DECIMAL(38, 6))) AS DOUBLE) AS sy,
-         sum(x * y) AS sxy,
-         sum(x * x) AS sxx,
-         sum(y * y) AS syy
-  FROM per_user
-),
-derived AS (
-  SELECT n,
-         (sxy - sx * sy / n) / (sxx - sx * sx / n) AS theta_raw,
-         (syy - sy * sy / n) / (n - 1) AS var_y_raw,
-         ((syy - sy * sy / n)
-          - (sxy - sx * sy / n) * (sxy - sx * sy / n)
-            / (sxx - sx * sx / n)) / (n - 1) AS var_cuped_raw,
-         1 - ((syy - sy * sy / n)
-              - (sxy - sx * sy / n) * (sxy - sx * sy / n)
-                / (sxx - sx * sx / n))
-             / (syy - sy * sy / n) AS vr_raw
-  FROM mo
-)
-SELECT n,
-       floor(theta_raw * 1000000 + 0.5) / 1000000 AS theta,
-       CASE WHEN var_y_raw = 0 THEN 0.0
-            ELSE round(var_y_raw / pow(10, floor(log10(abs(var_y_raw)))), 6)
-       END AS var_y_mant,
-       CAST(CASE WHEN var_y_raw = 0 THEN 0
-                 ELSE floor(log10(abs(var_y_raw))) END AS INT)
-         AS var_y_exp10,
-       CASE WHEN var_cuped_raw = 0 THEN 0.0
-            ELSE round(var_cuped_raw
-                   / pow(10, floor(log10(abs(var_cuped_raw)))), 6)
-       END AS var_y_cuped_mant,
-       CAST(CASE WHEN var_cuped_raw = 0 THEN 0
-                 ELSE floor(log10(abs(var_cuped_raw))) END AS INT)
-         AS var_y_cuped_exp10,
-       floor(vr_raw * 1000000 + 0.5) / 1000000 AS variance_reduction
-FROM derived
-""",
-)
-def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUPED variance reduction (Deng et al. 2013): per user, the
-    pre-period value total X becomes the covariate for the post-period
-    metric Y; θ = cov(X,Y)/var(X), and var(Y − θX) = var(Y)·(1 − ρ²) —
-    the standard trick that cuts experiment runtimes by the squared
-    pre/post correlation. Per-user X/Y from exact DECIMAL sums; cross
-    moments use the 6dp-round-then-DECIMAL-accumulate idiom so Σxy is
-    order-independent; θ and both variances derive with identical IEEE
-    order. One per-user reduce, then a single moment row. The metric is
-    gated to the FINITE domain (nan-tier contract, mirrored in the
-    oracle): a ±Inf value is a DECIMAL conversion error in the oracle
-    and would zero the covariance structure here."""
-    from ai_dataingestion_spark.functions.portable import finite
-
-    e = Tables(spark, sf_dir).events.where(finite("value"))
-    dec = F.col("value").cast("decimal(38,2)")
-    pre = F.col("ts") < F.lit(_CUPED_CUT).cast("timestamp")
-    per_user = e.groupBy("user_id").agg(
-        F.sum(F.when(pre, dec).otherwise(F.lit(0))).cast("double").alias("x"),
-        F.sum(F.when(~pre, dec).otherwise(F.lit(0)))
-        .cast("double")
-        .alias("y"),
-    )
-    # second moments are RAW double sums (the 6dp-round idiom's floor
-    # grid is exact only below ~9e12; x*y reaches ~1e20 at lake
-    # magnitudes); the scale-free ratios stay 6dp, the variances emit as
-    # mantissa/exponent pairs (oracle mirrors both shapes)
-    from ai_dataingestion_spark.functions.portable import mant_exp_cols
-
-    mo = per_user.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(pround(F.col("x")).cast("decimal(38,6)"))
-        .cast("double")
-        .alias("sx"),
-        F.sum(pround(F.col("y")).cast("decimal(38,6)"))
-        .cast("double")
-        .alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-    )
-    cxy = F.col("sxy") - F.col("sx") * F.col("sy") / F.col("n")
-    cxx = F.col("sxx") - F.col("sx") * F.col("sx") / F.col("n")
-    cyy = F.col("syy") - F.col("sy") * F.col("sy") / F.col("n")
-    var_y = cyy / (F.col("n") - 1)
-    var_cuped = (cyy - cxy * cxy / cxx) / (F.col("n") - 1)
-    return mo.select(
-        "n",
-        pround(cxy / cxx).alias("theta"),
-        *mant_exp_cols(var_y, "var_y"),
-        *mant_exp_cols(var_cuped, "var_y_cuped"),
-        pround(1 - (cyy - cxy * cxy / cxx) / cyy).alias(
-            "variance_reduction"
-        ),
-    )
-
 
 @register(
     "agg_log2_histogram",
@@ -572,93 +344,6 @@ def supplier_scorecard_composite(
         .select(
             "l_suppkey", "score", F.col("rn").cast("bigint").alias("rank")
         )
-    )
-
-
-@register(
-    "events_sample_size_calc",
-    oracle="""
-WITH per_user AS (
-  SELECT user_id,
-         CAST(sum(CAST(value AS DECIMAL(38, 2))) AS DOUBLE) AS y
-  FROM events
-  WHERE (value IS NULL OR isfinite(value))
-  GROUP BY user_id
-),
-mo AS (
-  -- syy is a RAW double sum: y*y at lake magnitudes exceeds the 6dp
-  -- floor-grid's exact domain; the variance is emitted as a mantissa/
-  -- exponent pair and n-per-arm is a scale-free ratio (sigma^2/mean^2)
-  SELECT count(*) AS n,
-         CAST(sum(CAST(floor(y * 1000000 + 0.5) / 1000000
-                       AS DECIMAL(38, 6))) AS DOUBLE) AS sy,
-         sum(y * y) AS syy
-  FROM per_user
-),
-derived AS (
-  SELECT n, (syy - sy * sy / n) / (n - 1) AS var_raw,
-         ceil(2 * ((syy - sy * sy / n) / (n - 1))
-              * (1.959964 + 0.841621) * (1.959964 + 0.841621)
-              / ((0.05 * (sy / n)) * (0.05 * (sy / n)))) AS n_req
-  FROM mo
-)
-SELECT n AS n_users_observed,
-       CASE WHEN var_raw = 0 THEN 0.0
-            ELSE round(var_raw / pow(10, floor(log10(abs(var_raw)))), 6)
-       END AS metric_variance_mant,
-       CAST(CASE WHEN var_raw = 0 THEN 0
-                 ELSE floor(log10(abs(var_raw))) END AS INT)
-         AS metric_variance_exp10,
-       CAST(n_req AS BIGINT) AS n_per_arm_required,
-       CAST(CASE WHEN n >= 2 * n_req THEN 1 ELSE 0 END AS INT)
-         AS currently_powered
-FROM derived
-""",
-)
-def events_sample_size_calc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Experiment power / sample-size calculation from observed data:
-    n-per-arm = 2σ²(z_{α/2}+z_β)²/δ² for α=0.05, power 0.8, and a
-    minimum detectable effect of 5% of the current mean — the
-    answer to "can we even run this test?", computed from the
-    per-user metric's observed variance (the same moment pipeline as
-    CUPED, whose variance_reduction directly shrinks this n). The z
-    constants are fixed literals shared with the oracle; moments use
-    the round-then-DECIMAL idiom; output is one row with the
-    go/no-go flag. Metric gated to the FINITE domain (nan-tier
-    contract, mirrored in the oracle): ±Inf is a DECIMAL conversion
-    error in the oracle's exact-sum path."""
-    from ai_dataingestion_spark.functions.portable import finite
-
-    e = Tables(spark, sf_dir).events.where(finite("value"))
-    per_user = e.groupBy("user_id").agg(
-        F.sum(F.col("value").cast("decimal(38,2)")).cast("double").alias("y")
-    )
-    # syy raw double (the 6dp idiom's floor grid stops being exact at
-    # lake magnitudes); variance emits as mantissa/exponent, n-per-arm
-    # is scale-free (sigma^2/mean^2) — oracle mirrors both shapes
-    from ai_dataingestion_spark.functions.portable import mant_exp_cols
-
-    mo = per_user.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(pround(F.col("y")).cast("decimal(38,6)"))
-        .cast("double")
-        .alias("sy"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-    )
-    var = (F.col("syy") - F.col("sy") * F.col("sy") / F.col("n")) / (
-        F.col("n") - 1
-    )
-    z = 1.959964 + 0.841621
-    delta = 0.05 * (F.col("sy") / F.col("n"))
-    n_req = F.ceil(2 * var * z * z / (delta * delta))
-    return mo.select(
-        F.col("n").alias("n_users_observed"),
-        *mant_exp_cols(var, "metric_variance"),
-        n_req.cast("bigint").alias("n_per_arm_required"),
-        F.when(F.col("n") >= 2 * n_req, 1)
-        .otherwise(0)
-        .cast("int")
-        .alias("currently_powered"),
     )
 
 
@@ -979,8 +664,7 @@ def dedup_representative_selection(
 # ===========================================================================
 # wave module round6d (formerly operators/round6d.py)
 # Round-5 thirtieth wave (SURVEY.md §2.Q, continued): moving annual
-# total, session-depth survival, session-gap parameter sensitivity, and
-# token-length histograms.
+# total and token-length histograms.
 # ===========================================================================
 
 @register(
@@ -1041,180 +725,6 @@ def orders_moving_annual_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SESSION_SQL_PREFIX = """
-seq AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN ts - lag(ts) OVER w > INTERVAL {gap} MINUTE
-              OR lag(ts) OVER w IS NULL THEN 1 ELSE 0 END AS is_new
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-sess AS (
-  SELECT user_id,
-         CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-  FROM seq
-),
-lengths AS (
-  SELECT user_id, session_id, count(*) AS n_events
-  FROM sess GROUP BY user_id, session_id
-)
-"""
-
-
-@register(
-    "events_session_depth_survival",
-    oracle="WITH "
-    + _SESSION_SQL_PREFIX.format(gap=30)
-    + """,
-tot AS (SELECT CAST(count(*) AS DOUBLE) AS n_sessions FROM lengths)
-SELECT k,
-       CAST(n_ge_k AS BIGINT) AS n_sessions_ge_k,
-       floor(CAST(n_ge_k AS DOUBLE) / n_sessions * 1000000 + 0.5) / 1000000
-         AS survival
-FROM (
-  SELECT g.k, count(*) AS n_ge_k
-  FROM (SELECT unnest(generate_series(1, 8)) AS k) g
-  JOIN lengths l ON l.n_events >= g.k
-  GROUP BY g.k
-) CROSS JOIN tot
-""",
-)
-def events_session_depth_survival(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Session-depth survival curve: the share of sessions reaching at
-    least k events, k = 1..8 — the engagement-depth complement of the
-    bounce rate (its k=2 point is 1 − bounce), and the curve whose
-    slope says where sessions die. Session lengths come from one
-    sessionize pass; the ≥k counts join the 8-row k spine against the
-    AGGREGATED lengths relation (the events_survival_weeks explode
-    pattern) — never against raw events."""
-    e = Tables(spark, sf_dir).events
-    w = Window.partitionBy("user_id").orderBy(F.asc_nulls_last("ts"), "event_id")
-    prev = F.lag("ts").over(w)
-    gap_us = F.unix_micros(F.col("ts").cast("timestamp")) - F.unix_micros(
-        prev.cast("timestamp")
-    )
-    seq = e.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.when(prev.isNull() | (gap_us > 30 * 60 * 1_000_000), 1)
-        .otherwise(0)
-        .alias("is_new"),
-    )
-    cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    lengths = (
-        seq.select(
-            "user_id", F.sum("is_new").over(cum).alias("session_id")
-        )
-        .groupBy("user_id", "session_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    tot = lengths.agg(
-        F.count(F.lit(1)).cast("double").alias("n_sessions")
-    )
-    spine = spark.range(1, 9).select(F.col("id").alias("k"))
-    ge_k = (
-        F.broadcast(spine)
-        .join(lengths, lengths.n_events >= F.col("k"))
-        .groupBy("k")
-        .agg(F.count(F.lit(1)).alias("n_ge_k"))
-    )
-    return ge_k.crossJoin(F.broadcast(tot)).select(
-        "k",
-        F.col("n_ge_k").cast("bigint").alias("n_sessions_ge_k"),
-        pround(F.col("n_ge_k").cast("double") / F.col("n_sessions")).alias(
-            "survival"
-        ),
-    )
-
-
-_GAPS_MIN = [15, 30, 60]
-
-
-def _gap_cfg_sql(gap: int) -> str:
-    return (
-        "SELECT "
-        + str(gap)
-        + " AS gap_minutes, count(*) AS n_sessions, "
-        + "CAST(quantile_cont(n_events, 0.5) AS DOUBLE) AS p50_events, "
-        + "floor(CAST(sum(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) "
-        + "AS DOUBLE) / count(*) * 1000000 + 0.5) / 1000000 AS bounce_rate "
-        + "FROM lengths_"
-        + str(gap)
-    )
-
-
-@register(
-    "events_session_gap_sensitivity",
-    oracle="WITH "
-    + ",".join(
-        _SESSION_SQL_PREFIX.format(gap=g)
-        .replace("seq AS", f"seq_{g} AS")
-        .replace("sess AS", f"sess_{g} AS")
-        .replace("FROM seq", f"FROM seq_{g}")
-        .replace("FROM sess", f"FROM sess_{g}")
-        .replace("lengths AS", f"lengths_{g} AS")
-        for g in _GAPS_MIN
-    )
-    + "\n"
-    + "\nUNION ALL\n".join(_gap_cfg_sql(g) for g in _GAPS_MIN),
-)
-def events_session_gap_sensitivity(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Sessionization gap-parameter sensitivity: the same corpus
-    sessionized under 15 / 30 / 60-minute inactivity gaps, reporting
-    session count, median depth, and bounce rate per configuration —
-    the sweep that turns the 30-minute industry default into a
-    justified choice for THIS traffic (the dedup_lsh_band_tuning
-    introspection pattern applied to sessionization). Each config is
-    one user-partitioned window pass; all three share the same scan."""
-    e = Tables(spark, sf_dir).events
-    out = None
-    for gap in _GAPS_MIN:
-        w = Window.partitionBy("user_id").orderBy(F.asc_nulls_last("ts"), "event_id")
-        prev = F.lag("ts").over(w)
-        gap_us = F.unix_micros(
-            F.col("ts").cast("timestamp")
-        ) - F.unix_micros(prev.cast("timestamp"))
-        seq = e.select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.when(prev.isNull() | (gap_us > gap * 60 * 1_000_000), 1)
-            .otherwise(0)
-            .alias("is_new"),
-        )
-        cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        lengths = (
-            seq.select(
-                "user_id", F.sum("is_new").over(cum).alias("session_id")
-            )
-            .groupBy("user_id", "session_id")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-        )
-        bounce = F.sum(F.when(F.col("n_events") == 1, 1).otherwise(0))
-        cfg = lengths.agg(
-            F.count(F.lit(1)).alias("n_sessions"),
-            F.expr(
-                "percentile_cont(0.5) WITHIN GROUP (ORDER BY n_events)"
-            ).alias("p50_events"),
-            pround(bounce.cast("double") / F.count(F.lit(1))).alias(
-                "bounce_rate"
-            ),
-        ).select(
-            F.lit(gap).alias("gap_minutes"),
-            "n_sessions",
-            "p50_events",
-            "bounce_rate",
-        )
-        out = cfg if out is None else out.unionByName(cfg)
-    return out
-
-
 @register(
     "text_token_length_histogram",
     oracle="""
@@ -1249,10 +759,9 @@ def text_token_length_histogram(
 
 # ===========================================================================
 # wave module round6e (formerly operators/round6e.py)
-# Round-5 thirty-first wave (SURVEY.md §2.Q, continued): Spearman
-# vocabulary rank stability, longest same-type runs (RLE), embedding
-# dimension correlation pairs, and header-driven CSV column
-# reconciliation.
+# Round-5 thirty-first wave (SURVEY.md §2.Q, continued): Spearman vocabulary
+# rank stability, embedding dimension correlation pairs, and header-driven
+# CSV column reconciliation.
 # ===========================================================================
 
 @register(
@@ -1322,66 +831,6 @@ def text_rank_stability_spearman(
         F.max(F.abs(F.col("ra") - F.col("rb")))
         .cast("bigint")
         .alias("max_rank_shift"),
-    )
-
-
-@register(
-    "events_longest_same_type_run",
-    oracle="""
-WITH seq AS (
-  SELECT user_id, event_type, ts, event_id,
-         CASE WHEN event_type = lag(event_type)
-                   OVER (PARTITION BY user_id ORDER BY ts, event_id)
-              THEN 0 ELSE 1 END AS brk
-  FROM events
-),
-runs AS (
-  SELECT user_id, event_type,
-         CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS run_id
-  FROM seq
-),
-run_lengths AS (
-  SELECT user_id, event_type, run_id, count(*) AS run_len
-  FROM runs GROUP BY user_id, event_type, run_id
-)
-SELECT event_type,
-       CAST(max(run_len) AS BIGINT) AS longest_run,
-       CAST(count(*) AS BIGINT) AS n_runs,
-       floor(CAST(sum(run_len) AS DOUBLE) / count(*) * 1000000 + 0.5)
-         / 1000000 AS mean_run_len
-FROM run_lengths GROUP BY event_type
-""",
-)
-def events_longest_same_type_run(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Run-length encoding of user timelines: consecutive same-type
-    event runs (break-flag + running sum — the gaps-and-islands kernel
-    keyed on VALUE CHANGE instead of time gap), rolled up to longest /
-    count / mean run per type. Long error runs mean retry storms; long
-    click runs mean scripted traffic — RLE is the compression-and-
-    anomaly primitive over ordered categorical streams. One user
-    partitioning serves both windows."""
-    e = Tables(spark, sf_dir).events
-    w = Window.partitionBy("user_id").orderBy(F.asc_nulls_last("ts"), "event_id")
-    brk = F.when(
-        F.col("event_type") == F.lag("event_type").over(w), 0
-    ).otherwise(1)
-    cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    runs = e.select(
-        "user_id",
-        "event_type",
-        F.sum(brk).over(cum).alias("run_id"),
-    )
-    run_lengths = runs.groupBy("user_id", "event_type", "run_id").agg(
-        F.count(F.lit(1)).alias("run_len")
-    )
-    n = F.count(F.lit(1))
-    return run_lengths.groupBy("event_type").agg(
-        F.max("run_len").cast("bigint").alias("longest_run"),
-        n.cast("bigint").alias("n_runs"),
-        pround(F.sum("run_len").cast("double") / n).alias("mean_run_len"),
     )
 
 
@@ -1533,75 +982,10 @@ def scan_csv_column_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # wave module round6f (formerly operators/round6f.py)
-# Round-5 thirty-second wave (SURVEY.md §2.Q, continued): week-over-
-# week change contributions, the nation trade-flow matrix, NULL
-# ordering semantics, and the contiguous-prefix resume watermark.
+# Round-5 thirty-second wave (SURVEY.md §2.Q, continued): the nation
+# trade-flow matrix, NULL ordering semantics, and the contiguous-prefix
+# resume watermark.
 # ===========================================================================
-
-@register(
-    "events_wow_change_contributions",
-    oracle="""
-WITH cells AS (
-  -- a NULL timestamp has no week; the engines would seat the NULL week
-  -- at opposite ends of each type's lag sequence
-  SELECT date_trunc('week', ts) AS m, event_type, count(*) AS n
-  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2
-),
-lagged AS (
-  SELECT m, event_type, n,
-         lag(n) OVER (PARTITION BY event_type ORDER BY m) AS prev_n
-  FROM cells
-),
-deltas AS (
-  SELECT m, event_type, n, n - prev_n AS delta
-  FROM lagged WHERE prev_n IS NOT NULL
-)
-SELECT m, event_type,
-       CAST(n AS BIGINT) AS n,
-       CAST(delta AS BIGINT) AS delta,
-       CAST(sum(delta) OVER (PARTITION BY m) AS BIGINT) AS total_delta,
-       CASE WHEN sum(delta) OVER (PARTITION BY m) <> 0 THEN
-         floor(CAST(delta AS DOUBLE)
-               / CAST(sum(delta) OVER (PARTITION BY m) AS DOUBLE)
-               * 1000000 + 0.5) / 1000000
-       END AS contribution_share
-FROM deltas
-""",
-)
-def events_wow_change_contributions(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Week-over-week change decomposition (the waterfall chart's
-    data — the events corpus spans ONE month, so weeks are the
-    non-degenerate period): per (week, type), the volume delta vs the
-    prior week and its share of the week's TOTAL change — the "which segment moved
-    the number" attribution every growth review starts with, exact
-    because Δtotal ≡ ΣΔtype. Integer deltas; the only division is the
-    guarded share. Windows over the weeks×types aggregate."""
-    e = Tables(spark, sf_dir).events.where(F.col("ts").isNotNull())
-    cells = e.groupBy(
-        F.date_trunc("week", "ts").alias("m"), "event_type"
-    ).agg(F.count(F.lit(1)).alias("n"))
-    w_lag = Window.partitionBy("event_type").orderBy("m")
-    deltas = (
-        cells.withColumn("prev_n", F.lag("n").over(w_lag))
-        .filter(F.col("prev_n").isNotNull())
-        .withColumn("delta", F.col("n") - F.col("prev_n"))
-    )
-    w_m = Window.partitionBy("m")
-    total = F.sum("delta").over(w_m)
-    return deltas.select(
-        "m",
-        "event_type",
-        F.col("n").cast("bigint").alias("n"),
-        F.col("delta").cast("bigint").alias("delta"),
-        total.cast("bigint").alias("total_delta"),
-        F.when(
-            total != 0,
-            pround(F.col("delta").cast("double") / total.cast("double")),
-        ).alias("contribution_share"),
-    )
-
 
 @register(
     "trade_flow_nation_matrix",
@@ -2341,8 +1725,8 @@ def quality_contingency_residuals(spark: SparkSession, sf_dir: str) -> DataFrame
 # ===========================================================================
 # wave module round6i (formerly operators/round6i.py)
 # Round-5 thirty-fifth wave (SURVEY.md §2.Q, continued): skyline
-# (Pareto-optimal set) via sort + running max, Theil inequality-index
-# decomposition, and rolling bivariate correlation.
+# (Pareto-optimal set) via sort + running max and Theil
+# inequality-index decomposition.
 # ===========================================================================
 
 @register(
@@ -2512,89 +1896,11 @@ def agg_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "events_rolling_corr_daily",
-    oracle="""
-WITH daily AS (
-  -- NULL timestamps have no day; the engines would seat the NULL day at
-  -- opposite ends of the rolling ORDER BY day sequence
-  SELECT CAST(ts AS DATE) AS day,
-         count(CASE WHEN event_type = 'click' THEN 1 END) AS x,
-         count(CASE WHEN event_type = 'purchase' THEN 1 END) AS y
-  FROM events WHERE ts IS NOT NULL GROUP BY 1
-),
-mom AS (
-  SELECT day,
-         count(*) OVER w AS n,
-         sum(x) OVER w AS sx, sum(y) OVER w AS sy,
-         sum(x * y) OVER w AS sxy,
-         sum(x * x) OVER w AS sxx, sum(y * y) OVER w AS syy,
-         row_number() OVER (ORDER BY day) AS rn
-  FROM daily
-  WINDOW w AS (ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-)
-SELECT CAST(day AS VARCHAR) AS day,
-       CASE WHEN (n * sxx - sx * sx) * (n * syy - sy * sy) = 0 THEN NULL
-            ELSE round(
-              CAST(n * sxy - sx * sy AS DOUBLE)
-              / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
-                     * CAST(n * syy - sy * sy AS DOUBLE)), 6)
-       END AS corr_7d
-FROM mom WHERE rn >= 7
-""",
-)
-def events_rolling_corr_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling 7-day Pearson correlation between daily click and
-    purchase volumes — the co-movement monitor behind 'did engagement
-    decouple from conversion this week'. Correlation over a sliding
-    frame isn't a built-in window aggregate in either engine, so it is
-    assembled from the five moment sums (Σx, Σy, Σxy, Σx², Σy²), each
-    an INTEGER window sum over the days-sized daily relation — exact in
-    any accumulation order, so the only float op is the final fraction.
-    Days with a degenerate window (zero variance) yield NULL on both
-    sides; the first six ramp-up days are excluded by row_number."""
-    t = Tables(spark, sf_dir)
-    daily = (
-        t.events.where(F.col("ts").isNotNull())  # oracle mirrors: no day
-        .groupBy(F.col("ts").cast("date").alias("day"))
-        .agg(
-            F.count(F.when(F.col("event_type") == "click", 1)).alias("x"),
-            F.count(F.when(F.col("event_type") == "purchase", 1)).alias("y"),
-        )
-    )
-    w = Window.orderBy("day").rowsBetween(-6, Window.currentRow)
-    mom = daily.select(
-        "day",
-        F.count(F.lit(1)).over(w).alias("n"),
-        F.sum("x").over(w).alias("sx"),
-        F.sum("y").over(w).alias("sy"),
-        F.sum(F.col("x") * F.col("y")).over(w).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).over(w).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).over(w).alias("syy"),
-        F.row_number().over(Window.orderBy("day")).alias("rn"),
-    )
-    vx = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    vy = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
-    cov = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
-    return mom.where(F.col("rn") >= 7).select(
-        F.col("day").cast("string").alias("day"),
-        F.when(vx * vy == 0, F.lit(None).cast("double"))
-        .otherwise(
-            F.round(
-                cov.cast("double")
-                / F.sqrt(vx.cast("double") * vy.cast("double")),
-                6,
-            )
-        )
-        .alias("corr_7d"),
-    )
-
-
 # ===========================================================================
 # wave module round6j (formerly operators/round6j.py)
 # Round-5 thirty-sixth wave (SURVEY.md §2.Q, continued):
-# content-defined chunking dedup, categorical-column entropy profiling,
-# and inter-arrival burstiness from exact integer moment sums.
+# content-defined chunking dedup and categorical-column entropy
+# profiling.
 # ===========================================================================
 
 # Expected chunk length = modulus tokens; 8 keeps chunks long enough to
@@ -2798,100 +2104,11 @@ def quality_column_entropy_profile(
     )
 
 
-@register(
-    "events_interarrival_burstiness",
-    oracle="""
-WITH gaps AS (
-  SELECT event_type,
-         epoch_us(ts) - lag(epoch_us(ts))
-           OVER (PARTITION BY event_type ORDER BY ts, event_id) AS d
-  FROM events
-),
-mom AS (
-  SELECT event_type,
-         count(*) AS n,
-         sum(d) AS s1,
-         sum(CAST(d AS HUGEINT) * d) AS s2
-  FROM gaps WHERE d IS NOT NULL
-  GROUP BY event_type
-),
-stats AS (
-  SELECT event_type, n,
-         CAST(s1 AS DOUBLE) / n / 1000000.0 AS mu,
-         sqrt(CAST(CAST(n AS HUGEINT) * s2
-                   - CAST(s1 AS HUGEINT) * s1 AS DOUBLE)
-              / (CAST(n AS DOUBLE) * (n - 1))) / 1000000.0 AS sd
-  FROM mom
-)
-SELECT event_type,
-       CAST(n AS BIGINT) AS n_gaps,
-       round(mu, 6) AS mean_gap_s,
-       round(sd, 6) AS sd_gap_s,
-       round(sd / mu, 6) AS cv,
-       round((sd - mu) / (sd + mu), 6) AS burstiness
-FROM stats
-""",
-)
-def events_interarrival_burstiness(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Inter-arrival burstiness per event type: the Goh–Barabási index
-    B = (σ−μ)/(σ+μ) of the gap distribution (−1 = metronome, 0 =
-    Poisson, →1 = heavy-tailed bursts) plus the coefficient of
-    variation. The portability trap: stddev_samp on ~10⁹-magnitude
-    microsecond gaps diverges across engines' accumulation algorithms
-    beyond 6-dp rounding, so the variance is assembled from EXACT
-    integer moment sums instead — Σd in BIGINT, Σd² in DECIMAL(38,0)
-    (HUGEINT on the oracle side) — and floats appear only in the final
-    n·Σd²−(Σd)² → double conversion, identical on both engines. Gaps
-    order by (ts, event_id) so timestamp ties break deterministically;
-    one corpus shuffle on event_type for the lag, then a 5-row rollup."""
-    e = Tables(spark, sf_dir).events
-    w = Window.partitionBy("event_type").orderBy(F.asc_nulls_last("ts"), "event_id")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    gaps = e.select(
-        "event_type", (us - F.lag(us).over(w)).alias("d")
-    ).where(F.col("d").isNotNull())
-    mom = gaps.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("d").alias("s1"),
-        F.sum(F.col("d").cast("decimal(38,0)") * F.col("d")).alias("s2"),
-    )
-    num = (
-        F.col("n").cast("decimal(38,0)") * F.col("s2")
-        - F.col("s1").cast("decimal(38,0)") * F.col("s1")
-    )
-    mu = F.col("s1").cast("double") / F.col("n") / 1e6
-    sd = (
-        F.sqrt(
-            num.cast("double")
-            / (F.col("n").cast("double") * (F.col("n") - 1))
-        )
-        / 1e6
-    )
-    stats = mom.select(
-        "event_type",
-        F.col("n").cast("bigint").alias("n_gaps"),
-        mu.alias("mu"),
-        sd.alias("sd"),
-    )
-    return stats.select(
-        "event_type",
-        "n_gaps",
-        F.round("mu", 6).alias("mean_gap_s"),
-        F.round("sd", 6).alias("sd_gap_s"),
-        F.round(F.col("sd") / F.col("mu"), 6).alias("cv"),
-        F.round(
-            (F.col("sd") - F.col("mu")) / (F.col("sd") + F.col("mu")), 6
-        ).alias("burstiness"),
-    )
-
-
 # ===========================================================================
 # wave module round6k (formerly operators/round6k.py)
 # Round-5 thirty-seventh wave (SURVEY.md §2.Q, continued): customer
-# segment migration, Kaplan–Meier survival with censoring, and a
-# deterministic Poisson-bootstrap confidence interval.
+# segment migration and a deterministic Poisson-bootstrap confidence
+# interval.
 # ===========================================================================
 
 _SPLIT_DATE = "1998-01-01"
@@ -2968,93 +2185,6 @@ def customer_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .agg(F.count(F.lit(1)).alias("n_customers"))
-    )
-
-
-@register(
-    "events_kaplan_meier_daily",
-    oracle="""
-WITH uw AS (
-  SELECT user_id,
-         max(CAST(datediff('day', DATE '2024-01-01',
-                          CAST(ts AS DATE)) + 1 AS INTEGER)) AS last_day
-  FROM events GROUP BY user_id
-),
-mx AS (SELECT max(last_day) AS mw FROM uw),
-cnt AS (
-  SELECT last_day, count(*) AS ended FROM uw GROUP BY last_day
-),
-days AS (
-  SELECT last_day AS day, ended,
-         sum(ended) OVER (ORDER BY last_day DESC
-                          ROWS UNBOUNDED PRECEDING) AS n_at_risk,
-         CASE WHEN last_day < (SELECT mw FROM mx) THEN ended ELSE 0 END
-           AS churned
-  FROM cnt
-)
-SELECT day,
-       CAST(n_at_risk AS BIGINT) AS n_at_risk,
-       CAST(churned AS BIGINT) AS n_churned,
-       round(exp(sum(ln(1.0 - CAST(churned AS DOUBLE) / n_at_risk))
-                 OVER (ORDER BY day ROWS UNBOUNDED PRECEDING)), 6)
-         AS survival
-FROM days
-""",
-)
-def events_kaplan_meier_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kaplan–Meier product-limit survival curve over user activity
-    days WITH censoring — the estimator events_survival_weeks's naive
-    share-active curve is not: users whose last activity falls on the
-    final observed day are censored (still alive at cutoff), not
-    churned, so they contribute to the risk set but not to any failure
-    count. S(t) = Π_{i≤t}(1 − d_i/n_i) computed as exp∘cumsum∘ln over
-    the days-sized relation; the risk set n_i is a DESCENDING
-    cumulative sum (everyone whose last day is ≥ i), so the whole
-    estimator runs in two windows over ≤ n_days rows after one
-    per-user max aggregate — the only corpus-sized shuffle."""
-    e = Tables(spark, sf_dir).events
-    day = (
-        F.datediff(
-            F.col("ts").cast("date"), F.lit("2024-01-01").cast("date")
-        )
-        + 1
-    ).cast("int")
-    uw = e.groupBy("user_id").agg(F.max(day).alias("last_day"))
-    cnt = uw.groupBy("last_day").agg(F.count(F.lit(1)).alias("ended"))
-    w_all = Window.partitionBy()
-    w_desc = Window.orderBy(F.desc("last_day")).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    days = cnt.select(
-        F.col("last_day").alias("day"),
-        "ended",
-        F.sum("ended").over(w_desc).alias("n_at_risk"),
-        F.when(
-            F.col("last_day") < F.max("last_day").over(w_all),
-            F.col("ended"),
-        )
-        .otherwise(F.lit(0))
-        .alias("churned"),
-    )
-    w_asc = Window.orderBy("day").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return days.select(
-        "day",
-        F.col("n_at_risk").cast("bigint").alias("n_at_risk"),
-        F.col("churned").cast("bigint").alias("n_churned"),
-        F.round(
-            F.exp(
-                F.sum(
-                    F.log(
-                        1.0
-                        - F.col("churned").cast("double")
-                        / F.col("n_at_risk")
-                    )
-                ).over(w_asc)
-            ),
-            6,
-        ).alias("survival"),
     )
 
 
@@ -3390,8 +2520,8 @@ def join_strategy_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # wave module round6m (formerly operators/round6m.py)
 # Round-5 thirty-ninth wave (SURVEY.md §2.Q, continued): epsilon
-# similarity join on scalars without a cartesian, time-interval RANGE
-# frames, and dynamic partition overwrite semantics.
+# similarity join on scalars without a cartesian and dynamic partition
+# overwrite semantics.
 # ===========================================================================
 
 _EPS = 5.0
@@ -3445,59 +2575,6 @@ def join_epsilon_float(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy(F.col("n_name").alias("nation"))
         .agg(F.count(F.lit(1)).alias("n_pairs"))
-    )
-
-
-@register(
-    "events_max_sliding_hour_rate",
-    oracle="""
-WITH sec AS (
-  SELECT event_type, CAST(floor(epoch(ts)) AS BIGINT) AS t FROM events
-),
-rates AS (
-  SELECT event_type,
-         count(*) OVER (PARTITION BY event_type ORDER BY t
-                        RANGE BETWEEN 3599 PRECEDING AND CURRENT ROW)
-           AS hour_count
-  FROM sec
-)
-SELECT event_type,
-       CAST(max(hour_count) AS BIGINT) AS max_hour_count,
-       count(*) AS n_events
-FROM rates GROUP BY event_type
-""",
-)
-def events_max_sliding_hour_rate(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Peak TRUE-sliding one-hour event rate per type: for every event,
-    how many same-type events landed in the trailing 3600 s, then the
-    max — the rate-limiter / burst-SLA view that bucketed variants
-    (events_error_burst_5min) systematically understate when a burst
-    straddles a bucket edge. The time-interval RANGE frame (§2.E's
-    value-range frame applied to epoch seconds) makes the window
-    VALUE-based: timestamp ties all share one frame, so the count is
-    deterministic with no tie-break key needed. One shuffle on
-    event_type; the frame never materializes the hour — Spark's
-    running RANGE frame is O(n) per partition."""
-    e = Tables(spark, sf_dir).events
-    sec = e.select(
-        "event_type",
-        F.floor(
-            F.unix_micros(F.col("ts").cast("timestamp")) / 1_000_000
-        ).alias("t"),
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("t")
-        .rangeBetween(-3599, Window.currentRow)
-    )
-    rates = sec.select(
-        "event_type", F.count(F.lit(1)).over(w).alias("hour_count")
-    )
-    return rates.groupBy("event_type").agg(
-        F.max("hour_count").cast("bigint").alias("max_hour_count"),
-        F.count(F.lit(1)).alias("n_events"),
     )
 
 
@@ -3628,8 +2705,8 @@ def sink_dynamic_partition_overwrite(
 # ===========================================================================
 # wave module round6n (formerly operators/round6n.py)
 # Round-5 fortieth wave (SURVEY.md §2.Q, continued): foreachBatch
-# streaming UPSERT (merge, not append), stratified-sampling estimator
-# variance, and a p-chart attribute control chart.
+# streaming UPSERT (merge, not append) and stratified-sampling
+# estimator variance.
 # ===========================================================================
 
 @register(
@@ -3850,174 +2927,12 @@ def agg_stratified_estimator_variance(
     )
 
 
-@register(
-    "events_pchart_error_rate",
-    oracle="""
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS day,
-         count(*) AS n,
-         count(CASE WHEN event_type = 'error' THEN 1 END) AS x
-  FROM events GROUP BY 1
-),
-g AS (
-  SELECT day, n, x,
-         CAST(sum(x) OVER () AS DOUBLE) / sum(n) OVER () AS pbar
-  FROM daily
-)
-SELECT CAST(day AS VARCHAR) AS day,
-       CAST(n AS BIGINT) AS n_events,
-       CAST(x AS BIGINT) AS n_errors,
-       round(CAST(x AS DOUBLE) / n, 6) AS rate,
-       round(greatest(pbar - 3 * sqrt(pbar * (1 - pbar) / n), 0.0), 6)
-         AS lcl,
-       round(pbar + 3 * sqrt(pbar * (1 - pbar) / n), 6) AS ucl,
-       CAST(x AS DOUBLE) / n
-         > pbar + 3 * sqrt(pbar * (1 - pbar) / n)
-       OR CAST(x AS DOUBLE) / n
-         < greatest(pbar - 3 * sqrt(pbar * (1 - pbar) / n), 0.0)
-         AS out_of_control
-FROM g
-""",
-)
-def events_pchart_error_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shewhart p-chart over the daily error-event share: 3σ binomial
-    control limits around the center line p̄ = Σx/Σn, with per-day
-    limits widening on low-volume days (the √(p̄(1−p̄)/n_t) term) — the
-    attribute-control-chart sibling of lineitem_quantity_cusum_shift
-    (which detects small sustained shifts; the p-chart flags single
-    out-of-control days). Everything derives from exact integer daily
-    counts and two window totals over the days-sized relation; the
-    flag compares the SAME float expressions on both engines, so no
-    epsilon is needed at the boundary."""
-    e = Tables(spark, sf_dir).events
-    daily = e.groupBy(F.col("ts").cast("date").alias("day")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(F.when(F.col("event_type") == "error", 1)).alias("x"),
-    )
-    w_all = Window.partitionBy()
-    g = daily.select(
-        "day",
-        "n",
-        "x",
-        (
-            F.sum("x").over(w_all).cast("double")
-            / F.sum("n").over(w_all)
-        ).alias("pbar"),
-    )
-    rate = F.col("x").cast("double") / F.col("n")
-    sig = F.sqrt(
-        F.col("pbar") * (1 - F.col("pbar")) / F.col("n")
-    )
-    lcl = F.greatest(F.col("pbar") - 3 * sig, F.lit(0.0))
-    ucl = F.col("pbar") + 3 * sig
-    return g.select(
-        F.col("day").cast("string").alias("day"),
-        F.col("n").cast("bigint").alias("n_events"),
-        F.col("x").cast("bigint").alias("n_errors"),
-        F.round(rate, 6).alias("rate"),
-        F.round(lcl, 6).alias("lcl"),
-        F.round(ucl, 6).alias("ucl"),
-        ((rate > ucl) | (rate < lcl)).alias("out_of_control"),
-    )
-
-
 # ===========================================================================
 # wave module round6o (formerly operators/round6o.py)
-# Round-5 forty-first wave (SURVEY.md §2.Q, continued): leakage-safe
-# point-in-time feature assembly, closed-form sign-binarized Hamming
-# separation, and hierarchical share-of-parent rollups.
+# Round-5 forty-first wave (SURVEY.md §2.Q, continued): closed-form
+# sign-binarized Hamming separation and hierarchical share-of-parent
+# rollups.
 # ===========================================================================
-
-_WEEK_S = 7 * 24 * 3600
-
-
-@register(
-    "events_pit_training_features",
-    oracle=f"""
-WITH sec AS (
-  SELECT user_id, event_type, CAST(ts AS DATE) AS day,
-         CAST(floor(epoch(ts)) AS BIGINT) AS t
-  FROM events
-),
-feat AS (
-  SELECT day, event_type,
-         sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-           OVER w AS trailing_clicks,
-         sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-           OVER w AS trailing_views,
-         sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-           OVER w AS trailing_errors
-  FROM sec
-  WINDOW w AS (PARTITION BY user_id ORDER BY t
-               RANGE BETWEEN {_WEEK_S} PRECEDING AND 1 PRECEDING)
-)
-SELECT CAST(day AS VARCHAR) AS day,
-       count(*) AS n_purchases,
-       round(avg(coalesce(trailing_clicks, 0)), 6) AS avg_trailing_clicks,
-       round(avg(coalesce(trailing_views, 0)), 6) AS avg_trailing_views,
-       round(avg(coalesce(trailing_errors, 0)), 6) AS avg_trailing_errors
-FROM feat WHERE event_type = 'purchase'
-GROUP BY day
-""",
-)
-def events_pit_training_features(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Point-in-time-correct training-feature assembly — the
-    feature-store pattern behind leakage-free ML datasets: for every
-    purchase (the label event), per-user behavioral counts over the
-    trailing 7 days STRICTLY BEFORE the purchase second (the RANGE
-    frame ends at 1 PRECEDING, so nothing co-timed with or after the
-    label leaks into its features; join_asof picks one nearest value,
-    this aggregates a whole window). The frame is value-based on epoch
-    seconds — deterministic under timestamp ties, no tie-break key
-    needed — and all three feature columns come from ONE window pass
-    over the user partition; the label filter then drops to the
-    days-sized report. One corpus shuffle on user_id."""
-    e = Tables(spark, sf_dir).events
-    sec = e.select(
-        "user_id",
-        "event_type",
-        F.col("ts").cast("date").alias("day"),
-        F.floor(
-            F.unix_micros(F.col("ts").cast("timestamp")) / 1_000_000
-        ).alias("t"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("t")
-        .rangeBetween(-_WEEK_S, -1)
-    )
-    feat = sec.select(
-        "day",
-        "event_type",
-        F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-        .over(w)
-        .alias("trailing_clicks"),
-        F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
-        .over(w)
-        .alias("trailing_views"),
-        F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
-        .over(w)
-        .alias("trailing_errors"),
-    )
-    return (
-        feat.where(F.col("event_type") == "purchase")
-        .groupBy(F.col("day").cast("string").alias("day"))
-        .agg(
-            F.count(F.lit(1)).alias("n_purchases"),
-            F.round(
-                F.avg(F.coalesce("trailing_clicks", F.lit(0))), 6
-            ).alias("avg_trailing_clicks"),
-            F.round(
-                F.avg(F.coalesce("trailing_views", F.lit(0))), 6
-            ).alias("avg_trailing_views"),
-            F.round(
-                F.avg(F.coalesce("trailing_errors", F.lit(0))), 6
-            ).alias("avg_trailing_errors"),
-        )
-    )
-
 
 @register(
     "embed_sign_hamming_separation",
@@ -4212,74 +3127,10 @@ def orders_hierarchy_share_of_parent(
 
 # ===========================================================================
 # wave module round6p (formerly operators/round6p.py)
-# Round-5 forty-second wave (SURVEY.md §2.Q, continued): Markov
-# entropy rate of the event stream, product-quantization reconstruction
-# error, and compressed-CSV round-trip interop.
+# Round-5 forty-second wave (SURVEY.md §2.Q, continued):
+# product-quantization reconstruction error and compressed-CSV
+# round-trip interop.
 # ===========================================================================
-
-@register(
-    "events_markov_entropy_rate",
-    oracle="""
-WITH seq AS (
-  SELECT event_type AS nxt,
-         lag(event_type) OVER (PARTITION BY user_id
-                               ORDER BY ts, event_id) AS prv
-  FROM events
-),
-cells AS (
-  SELECT prv, nxt, count(*) AS c FROM seq WHERE prv IS NOT NULL
-  GROUP BY prv, nxt
-),
-probs AS (
-  SELECT prv, c,
-         CAST(c AS DOUBLE) / sum(c) OVER (PARTITION BY prv) AS pij,
-         CAST(sum(c) OVER (PARTITION BY prv) AS DOUBLE)
-           / sum(c) OVER () AS pi
-  FROM cells
-)
-SELECT round(-sum(pi * pij * ln(pij)), 6) AS entropy_rate_nats,
-       round(-sum(pi * pij * ln(pij)) / ln(5.0), 6)
-         AS normalized_entropy_rate,
-       CAST(sum(c) AS BIGINT) AS n_transitions
-FROM probs
-""",
-)
-def events_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entropy rate of the per-user event-type Markov chain:
-    H = −Σ_i π_i Σ_j P_ij ln P_ij with the stationary weight π taken
-    empirically from transition counts — ONE number for 'how
-    predictable is the next event given the current one' (0 =
-    deterministic flows, ln(5) = uniform chaos), normalized by ln(k).
-    This is the summary scalar over the same relation
-    events_transition_matrix reports cell-by-cell and the conditional
-    sibling of corpus_source_entropy. One corpus shuffle for the
-    per-user lag; everything after runs on the ≤ types² cell
-    aggregate, probabilities as exact integer-count ratios."""
-    e = Tables(spark, sf_dir).events
-    w = Window.partitionBy("user_id").orderBy(F.asc_nulls_last("ts"), "event_id")
-    seq = e.select(
-        F.col("event_type").alias("nxt"),
-        F.lag("event_type").over(w).alias("prv"),
-    ).where(F.col("prv").isNotNull())
-    cells = seq.groupBy("prv", "nxt").agg(F.count(F.lit(1)).alias("c"))
-    w_prv = Window.partitionBy("prv")
-    w_all = Window.partitionBy()
-    probs = cells.select(
-        "c",
-        (F.col("c").cast("double") / F.sum("c").over(w_prv)).alias("pij"),
-        (
-            F.sum("c").over(w_prv).cast("double") / F.sum("c").over(w_all)
-        ).alias("pi"),
-    )
-    h = -F.sum(F.col("pi") * F.col("pij") * F.log(F.col("pij")))
-    return probs.agg(
-        F.round(h, 6).alias("entropy_rate_nats"),
-        F.round(h / F.log(F.lit(5.0)), 6).alias(
-            "normalized_entropy_rate"
-        ),
-        F.sum("c").cast("bigint").alias("n_transitions"),
-    )
-
 
 _PQ_BLOCKS = 4
 _PQ_SUBDIM = 16
@@ -4837,8 +3688,8 @@ def fn_json_nested_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # wave module round6r (formerly operators/round6r.py)
 # Round-5 forty-fourth wave (SURVEY.md §2.Q, continued): cohort
-# fulfillment vintage curves, higher-order array reduction (Horner), and
-# circular (directional) time-of-day statistics.
+# fulfillment vintage curves and higher-order array reduction
+# (Horner).
 # ===========================================================================
 
 @register(
@@ -4954,79 +3805,6 @@ def fn_array_reduce_horner(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.avg("h"), 6).alias("mean_value"),
         F.round(F.min("h"), 6).alias("min_value"),
         F.round(F.max("h"), 6).alias("max_value"),
-    )
-
-
-_TWO_PI = 2 * math.pi
-
-
-@register(
-    "events_circular_time_stats",
-    oracle=f"""
-WITH ang AS (
-  SELECT event_type,
-         {_TWO_PI} * (CAST(floor(epoch(ts)) AS BIGINT) % 86400) / 86400.0
-           AS theta
-  FROM events
-),
-mom AS (
-  SELECT event_type, count(*) AS n,
-         {grid_sum_sql("cos(theta)")} AS sc,
-         {grid_sum_sql("sin(theta)")} AS ss
-  FROM ang GROUP BY event_type
-)
-SELECT event_type,
-       CAST(n AS BIGINT) AS n_events,
-       round(sqrt(sc * sc + ss * ss) / n, 6) AS resultant_length,
-       round(
-         (CASE WHEN atan2(ss, sc) < 0
-               THEN atan2(ss, sc) + {_TWO_PI}
-               ELSE atan2(ss, sc) END) * 24.0 / {_TWO_PI}, 4)
-         AS mean_hour
-FROM mom
-""",
-)
-def events_circular_time_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Circular (directional) statistics of event time-of-day per type:
-    hours live on a circle, so the arithmetic mean of 23:00 and 01:00
-    is the nonsense 12:00 — the right estimator maps each time to an
-    angle and averages the unit vectors: mean hour from atan2(Σsin,
-    Σcos) and concentration R = |Σe^iθ|/n (R→0: uniform around the
-    clock, R→1: sharply peaked). The stability rule: on near-uniform
-    data Σcos/Σsin are small differences of large sums, and atan2
-    AMPLIFIES accumulation-order noise — so both vector sums
-    accumulate on the exact 1e-6 integer grid (portable.py:grid_sum:
-    bit-identical per-term quantization with pure IEEE ops, exact
-    order-independent BIGINT sum — no decimal-cast midpoint semantics
-    on trial) BEFORE atan2, making the angle bit-identical AND
-    draw-deterministic. One shuffle to the 5-type rollup."""
-    e = Tables(spark, sf_dir).events
-    theta = (
-        F.lit(_TWO_PI)
-        * (
-            F.floor(
-                F.unix_micros(F.col("ts").cast("timestamp")) / 1_000_000
-            )
-            % 86400
-        )
-        / 86400.0
-    )
-    mom = e.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        grid_sum(F.cos(theta)).alias("sc"),
-        grid_sum(F.sin(theta)).alias("ss"),
-    )
-    ang = F.atan2(F.col("ss"), F.col("sc"))
-    wrapped = F.when(ang < 0, ang + _TWO_PI).otherwise(ang)
-    return mom.select(
-        "event_type",
-        F.col("n").cast("bigint").alias("n_events"),
-        F.round(
-            F.sqrt(F.col("sc") * F.col("sc") + F.col("ss") * F.col("ss"))
-            / F.col("n"),
-            6,
-        ).alias("resultant_length"),
-        F.round(wrapped * 24.0 / _TWO_PI, 4).alias("mean_hour"),
     )
 
 
@@ -5165,76 +3943,9 @@ def agg_cube_margin_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # wave module round6t (formerly operators/round6t.py)
-# Round-5 forty-sixth wave (SURVEY.md §2.Q, continued): sample-ratio
-# mismatch guard, functional-dependency discovery, and a temporal
-# coverage inventory.
+# Round-5 forty-sixth wave (SURVEY.md §2.Q, continued):
+# functional-dependency discovery and a temporal coverage inventory.
 # ===========================================================================
-
-_CHI2_95_DF1 = 3.841458820694124
-
-
-@register(
-    "events_ab_srm_check",
-    oracle=f"""
-WITH arms AS (
-  SELECT CASE WHEN substring(md5('srm' || CAST(user_id AS VARCHAR)), 1, 1)
-                   <= '7'
-              THEN 'A' ELSE 'B' END AS arm
-  FROM (SELECT DISTINCT user_id FROM events)
-),
-cnt AS (
-  SELECT count(CASE WHEN arm = 'A' THEN 1 END) AS na,
-         count(CASE WHEN arm = 'B' THEN 1 END) AS nb,
-         count(*) AS n
-  FROM arms
-)
-SELECT CAST(na AS BIGINT) AS n_arm_a,
-       CAST(nb AS BIGINT) AS n_arm_b,
-       round((na - n / 2.0) * (na - n / 2.0) / (n / 2.0)
-             + (nb - n / 2.0) * (nb - n / 2.0) / (n / 2.0), 6) AS chi2,
-       (na - n / 2.0) * (na - n / 2.0) / (n / 2.0)
-         + (nb - n / 2.0) * (nb - n / 2.0) / (n / 2.0)
-         > {_CHI2_95_DF1} AS srm_detected
-FROM cnt
-""",
-)
-def events_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sample-ratio-mismatch (SRM) guard for the deterministic 50/50
-    md5 user split every A/B operator here relies on
-    (events_ab_proportion_ztest, CUPED, DiD): a χ²₁ goodness-of-fit of
-    observed arm sizes against the designed ratio — THE pre-test that
-    invalidates an experiment before any metric is read (Fabijan
-    2019). Nibbles 0-7 vs 8-f give an exactly-50/50 design; all
-    inputs are integer counts off the distinct-user aggregate, the
-    χ² threshold is the same literal on both engines, and the flag
-    compares identical doubles. One distinct + one 1-row reduce."""
-    e = Tables(spark, sf_dir).events
-    arm = F.when(
-        F.substring(
-            F.md5(F.concat(F.lit("srm"), F.col("user_id").cast("string"))),
-            1,
-            1,
-        )
-        <= "7",
-        "A",
-    ).otherwise("B")
-    arms = e.select("user_id").distinct().select(arm.alias("arm"))
-    cnt = arms.agg(
-        F.count(F.when(F.col("arm") == "A", 1)).alias("na"),
-        F.count(F.when(F.col("arm") == "B", 1)).alias("nb"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    half = F.col("n") / 2.0
-    chi2 = (F.col("na") - half) * (F.col("na") - half) / half + (
-        F.col("nb") - half
-    ) * (F.col("nb") - half) / half
-    return cnt.select(
-        F.col("na").cast("bigint").alias("n_arm_a"),
-        F.col("nb").cast("bigint").alias("n_arm_b"),
-        F.round(chi2, 6).alias("chi2"),
-        (chi2 > _CHI2_95_DF1).alias("srm_detected"),
-    )
-
 
 @register(
     "quality_fd_discovery",

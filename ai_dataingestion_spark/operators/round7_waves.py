@@ -835,64 +835,9 @@ def stream_available_now_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # wave module round7e (formerly operators/round7e.py)
 # Round-6 fifty-seventh wave (SURVEY.md §2.R): decision-science and
-# data-contract operators — Beta-Binomial Bayesian A/B posteriors,
-# Jaccard link prediction on the co-purchase graph, and a one-pass
-# declarative expectation suite.
+# data-contract operators — Jaccard link prediction on the co-purchase
+# graph and a one-pass declarative expectation suite.
 # ===========================================================================
-
-_BAYES_SQL = """
-WITH arms AS (
-  SELECT user_id % 2 AS arm,
-         max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
-  FROM events GROUP BY user_id),
-post AS (
-  -- all-DOUBLE posterior arithmetic: a bare 1.0 literal is DECIMAL in
-  -- both engines, and Spark's decimal-division scale rules truncate the
-  -- Beta variance (~1.8e-8 at sfx1.0, where every user converts) to a
-  -- hard 0.000000 at scale 6 -> sqrt(0) -> ANSI DIVIDE_BY_ZERO; doubles
-  -- also keep the (1+c)(1+n-c) numerator from overflowing BIGINT at
-  -- lake-scale n. Measured at the round-8 sfx1.0 full-surface sweep.
-  SELECT arm, count(*) AS n, sum(conv) AS conv,
-         (CAST(1 AS DOUBLE) + sum(conv)) / (2 + count(*)) AS pmean,
-         ((CAST(1 AS DOUBLE) + sum(conv))
-          * (CAST(1 AS DOUBLE) + count(*) - sum(conv)))
-           / ((2 + count(*)) * CAST(2 + count(*) AS DOUBLE)
-              * (3 + count(*)))
-           AS pvar
-  FROM arms GROUP BY arm),
-pair AS (
-  SELECT a.pmean AS ma, a.pvar AS va, b.pmean AS mb, b.pvar AS vb,
-         a.n AS n_a, a.conv AS c_a, b.n AS n_b, b.conv AS c_b
-  FROM post a, post b WHERE a.arm = 0 AND b.arm = 1)
-SELECT n_a, CAST(c_a AS BIGINT) AS conv_a, n_b, CAST(c_b AS BIGINT) AS conv_b,
-       CAST(round(ma, 6) AS DOUBLE) AS post_mean_a,
-       CAST(round(mb, 6) AS DOUBLE) AS post_mean_b,
-       CAST(round(1.0 / (1.0 + exp(-1.702 *
-            round((mb - ma) / sqrt(va + vb), 6))), 4) AS DOUBLE)
-         AS prob_b_beats_a
-FROM pair
-"""
-
-
-sql_op(
-    "events_bayesian_ab_posterior",
-    spark_sql=_BAYES_SQL,
-    oracle=_BAYES_SQL,
-    doc="""Bayesian A/B conversion analysis with Beta(1,1)-Binomial
-    posteriors: per-arm (user_id parity) purchase conversion yields
-    posterior means/variances in closed form, and P(B beats A) via the
-    moment-matched normal approximation with the logistic sigmoid proxy
-    for Phi (|Phi(z) - sigma(1.702 z)| < 0.0095 uniformly — Bowling 2009,
-    "A logistic approximation to the cumulative normal distribution";
-    chosen because neither engine ships erf, and the proxy is identical
-    portable arithmetic on both). This is the decision-facing complement
-    to the frequentist battery (events_ab_proportion_ztest, CUPED, SRM):
-    a probability statement, not a p-value. One user-grain shuffle + a
-    2-row reduce; the z input is rounded to 6 dp before the sigmoid so
-    both engines saturate identically. Both engines run the identical
-    statement.""",
-)
-
 
 _LINKPRED_SQL = """
 WITH basket AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),

@@ -101,7 +101,7 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH seq AS (
   SELECT user_id, ts, event_id, value,
          CASE WHEN lag(ts) OVER w IS NULL
-                OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE
+                OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
               THEN 1 ELSE 0 END AS is_new
   FROM events WHERE ts IS NOT NULL  -- session_window drops NULL ts too
   WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
@@ -134,10 +134,12 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows with a 30-minute inactivity gap per user.
 
     Spark session semantics (pinned by the oracle's gap-and-island twin):
-    a session is [first_ts, last_ts + gap); an event at exactly
-    last_ts + gap starts a NEW session (hence `>=` in the oracle's gap
-    test). Boundaries are emitted as epoch-µs (string formats diverge on
-    sub-second timestamps across engines).
+    each event spans [ts, ts + gap), and session_window merges spans that
+    overlap or touch: an event at exactly last_ts + gap still joins the
+    session (`>` in the oracle's gap test, the rule of
+    operators/events.py:_sessions), and a session reports
+    [first_ts, last_ts + gap). Boundaries are emitted as epoch-µs (string
+    formats diverge on sub-second timestamps across engines).
 
     Two determinism hardenings from the r14 ties-tier flake (an
     intermittent full-sweep mismatch this op produced twice while every

@@ -7,18 +7,22 @@ Usage: python scripts/capture_plans.py <tag> [query ...]
 
 Runs under the same session shape as bench.py (warm tables, AQE off at
 sf<1, shuffle partitions min(16, cpus)) so the captured plan is the plan
-the bench actually times.
+the bench actually times. Expression IDs (`#123`) and `plan_id=123` are
+stripped before writing, so `diff -r` between two captures shows only
+real plan changes.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+_RUN_IDS = re.compile(r"(#|plan_id=)\d+")
 
 
 def main() -> int:
@@ -70,7 +74,7 @@ def main() -> int:
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
                 df.explain("formatted")
-            plan = buf.getvalue()
+            plan = _RUN_IDS.sub(r"\1", buf.getvalue())
         except Exception as e:  # capture what we can, keep going
             plan = f"EXPLAIN FAILED: {type(e).__name__}: {e}"
         path = os.path.join(out_dir, f"{qid}_{suffix}.txt")

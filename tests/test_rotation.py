@@ -14,6 +14,7 @@ import pytest
 
 from ai_dataingestion_spark import catalog, registry, tmpdirs
 from ai_dataingestion_spark.ai import dedup
+from ai_dataingestion_spark.operators import events
 
 REPO = Path(__file__).resolve().parent.parent
 SPECS = catalog.all_specs()
@@ -60,12 +61,19 @@ def test_unchanged_code_ranks_behind_everything(certified):
          "dedup_minhash_estimate_error dedup_near_minhash dedup_ngram_jaccard "
          "dedup_removal_plan text_containment_pairs text_shingle_df_cap_loss "
          "text_shingle_df_spectrum"),
+        (events, "_sessions", lambda e, keep=(), gap_min=30: e,
+         "events_sessionize_batch events_sessions_bounce_rate "
+         "events_session_depth_survival events_session_gap_sensitivity "
+         "events_peak_concurrency events_cep_triple_pattern "
+         "events_top_session_paths"),
+        (events, "_user_day_calendar", lambda daily: daily,
+         "events_gap_fill_locf events_gap_fill_linear"),
         # run-time state: a global op_tmpdir rebinds, and a cache dict
         (tmpdirs, "_ROOT", "/elsewhere", ""),
         (registry, "_events_ts_unit", {("a",): "ns"}, ""),
     ],
     ids=["helper", "helper-local-import", "module-sql-constant",
-         "rebound-global", "cache-dict"],
+         "sessions-helper", "calendar-helper", "rebound-global", "cache-dict"],
 )
 def test_changed_dependency_moves_exactly_its_operators(
     certified, monkeypatch, module, name, value, moved
