@@ -1,8 +1,7 @@
-"""Round-2 surface extensions (SURVEY.md §2.N): deeper TPC-H composites,
-decorrelated scalar subqueries, robust statistics (median / IQR outliers /
-weighted means), fuzzy string matching, per-label embedding centroids, SCD2
-interval building, per-doc keyword extraction, and cross-source exact-dup
-(leakage) detection.
+"""Round-2 surface extensions (SURVEY.md §2.N): robust statistics (median /
+IQR outliers / weighted means), fuzzy string matching, per-label embedding
+centroids, SCD2 interval building, per-doc keyword extraction, and
+cross-source exact-dup (leakage) detection.
 
 Float discipline follows SURVEY.md §5.4: sums of money PRODUCTS go through
 DECIMAL(38,6); quotients (averages, ratios) round at 6 dp; counts and keys
@@ -14,164 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ai_dataingestion_spark.catalog import register
-from ai_dataingestion_spark.functions.portable import (
-    dec_sum,
-    stable_sum,
-    stable_sum_sql,
-)
+from ai_dataingestion_spark.functions.portable import stable_sum, stable_sum_sql
 from ai_dataingestion_spark.scale import broadcast_if_small
 from ai_dataingestion_spark.registry import Tables
-
-
-@register(
-    "tpch_q6_forecast_revenue",
-    oracle="""
-SELECT CAST(round(sum(CAST(l_extendedprice * l_discount AS DECIMAL(38,6))), 2) AS DOUBLE)
-         AS revenue,
-       count(*) AS n_lines
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
-  AND l_discount BETWEEN 0.05 AND 0.07
-  AND l_quantity < 24
-""",
-)
-def tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 shape (forecast revenue change): pure filter + global agg —
-    the canonical predicate-pushdown showcase; all three predicates reach
-    the parquet scan, no shuffle beyond the final 1-row reduce."""
-    li = Tables(spark, sf_dir).lineitem
-    return li.filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
-        & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp_ntz"))
-        & F.col("l_discount").between(0.05, 0.07)
-        & (F.col("l_quantity") < 24)
-    ).agg(
-        F.round(dec_sum(F.col("l_extendedprice") * F.col("l_discount")), 2).cast("double").alias("revenue"),
-        F.count(F.lit(1)).alias("n_lines"),
-    )
-
-
-@register(
-    "tpch_q14_promo_revenue",
-    oracle=f"""
-SELECT round(
-         100.0 * {stable_sum_sql(
-             "CASE WHEN p.p_type = 'PROMO' "
-             "THEN l.l_extendedprice * (1 - l.l_discount) END")}
-               / {stable_sum_sql(
-                   "l.l_extendedprice * (1 - l.l_discount)")}, 6) AS promo_pct
-FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-WHERE l.l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND l.l_shipdate <  TIMESTAMP '1996-04-01 00:00:00'
-""",
-)
-def tpch_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape (promo revenue share): broadcast dim join + ratio of
-    conditional aggregates. Both sums accumulate in DECIMAL(38,6)
-    (portable.py:stable_sum, the r15 residual-site hardening): the two
-    operands are then bit-identical doubles on both engines, so the
-    quotient and its 6dp rounding are draw-deterministic — not merely
-    noise-cancelling."""
-    t = Tables(spark, sf_dir)
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        t.lineitem.filter(
-            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
-            & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp_ntz"))
-        )
-        .join(
-            broadcast_if_small(t.part, sf_dir, "part"),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-        .agg(
-            F.round(
-                100.0
-                * stable_sum(F.when(F.col("p_type") == "PROMO", rev))
-                / stable_sum(rev),
-                6,
-            ).alias("promo_pct")
-        )
-    )
-
-
-@register(
-    "tpch_q7_volume_shipping",
-    oracle="""
-SELECT ns.n_name AS supp_nation, nc.n_name AS cust_nation,
-       year(l.l_shipdate) AS ship_year,
-       CAST(round(sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(38,6))), 2) AS DOUBLE)
-         AS revenue
-FROM lineitem l
-JOIN supplier s ON l.l_suppkey  = s.s_suppkey
-JOIN orders o   ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey  = c.c_custkey
-JOIN nation ns  ON s.s_nationkey = ns.n_nationkey
-JOIN nation nc  ON c.c_nationkey = nc.n_nationkey
-WHERE ((ns.n_name = 'NATION_0' AND nc.n_name = 'NATION_1')
-    OR (ns.n_name = 'NATION_1' AND nc.n_name = 'NATION_0'))
-GROUP BY ns.n_name, nc.n_name, year(l.l_shipdate)
-""",
-)
-def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7 shape (bilateral shipping volume): fact⋈fact⋈fact chain with
-    two broadcast nation dims and a cross-nation pair predicate, grouped by
-    (supplier nation, customer nation, ship year). The nation filter is
-    pushed through both dim joins so only qualifying rows shuffle."""
-    t = Tables(spark, sf_dir)
-    ns = t.nation.select(
-        F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")
-    )
-    nc = t.nation.select(
-        F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cust_nation")
-    )
-    pair = (
-        (F.col("supp_nation") == "NATION_0") & (F.col("cust_nation") == "NATION_1")
-    ) | ((F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_0"))
-    return (
-        t.lineitem.join(t.supplier, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(t.orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(ns), F.col("s_nationkey") == F.col("s_nk"))
-        .join(F.broadcast(nc), F.col("c_nationkey") == F.col("c_nk"))
-        .filter(pair)
-        .groupBy(
-            "supp_nation", "cust_nation", F.year("l_shipdate").alias("ship_year")
-        )
-        .agg(
-            F.round(dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).cast("double").alias("revenue")
-        )
-    )
-
-
-@register(
-    "subquery_scalar_avg",
-    oracle="""
-WITH type_avg AS (
-  SELECT p_type, avg(p_retailprice) AS avg_price FROM part GROUP BY p_type
-)
-SELECT p.p_type, count(*) AS n_above, round(any_value(t.avg_price), 6) AS avg_price
-FROM part p JOIN type_avg t ON p.p_type = t.p_type
-WHERE p.p_retailprice > t.avg_price
-GROUP BY p.p_type
-""",
-)
-def subquery_scalar_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decorrelated scalar subquery: parts priced above their type's average
-    — the correlated `WHERE price > (SELECT avg ...)` rewritten as the plan
-    an optimizer produces: tiny per-type aggregate, broadcast back onto the
-    base table. The average is a quotient (6 dp engine-stable)."""
-    p = Tables(spark, sf_dir).part
-    type_avg = p.groupBy("p_type").agg(F.avg("p_retailprice").alias("avg_price"))
-    return (
-        p.join(F.broadcast(type_avg), "p_type")
-        .filter(F.col("p_retailprice") > F.col("avg_price"))
-        .groupBy("p_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_above"),
-            F.round(F.any_value("avg_price"), 6).alias("avg_price"),
-        )
-    )
 
 
 @register(
@@ -1071,174 +915,6 @@ def text_perplexity_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "tpch_q4_late_orders",
-    oracle="""
-SELECT o_orderpriority, count(*) AS order_count
-FROM orders o
-WHERE o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND o.o_orderdate <  TIMESTAMP '1996-07-01 00:00:00'
-  AND EXISTS (
-    SELECT 1 FROM lineitem l
-    WHERE l.l_orderkey = o.o_orderkey
-      AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
-  )
-GROUP BY o_orderpriority
-ORDER BY o_orderpriority
-""",
-)
-def tpch_q4_late_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape (order-priority checking): EXISTS-correlated subquery
-    — Catalyst decorrelates it into a LEFT SEMI join on l_orderkey with the
-    cross-relation ship-lag predicate evaluated inside the join condition.
-    The corpus lineitem has no commit/receipt dates, so 'late' is shipped
-    more than 60 days after the order date. One shuffle (semi join keys),
-    then a 5-group agg."""
-    t = Tables(spark, sf_dir)
-    o = t.orders.filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
-        & (F.col("o_orderdate") < F.lit("1996-07-01").cast("timestamp_ntz"))
-    )
-    li = t.lineitem
-    return (
-        o.join(
-            li,
-            (F.col("o_orderkey") == F.col("l_orderkey"))
-            & (
-                F.col("l_shipdate")
-                > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
-            ),
-            "left_semi",
-        )
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-    )
-
-
-@register(
-    "tpch_q12_priority_by_flag",
-    oracle="""
-SELECT l_returnflag,
-       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                     THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-       CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                     THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-  AND l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
-GROUP BY l_returnflag
-ORDER BY l_returnflag
-""",
-)
-def tpch_q12_priority_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12 shape (shipping-mode priority split; the corpus carries no
-    l_shipmode, so the grouping key is l_returnflag): fact-to-fact join with
-    the year filter pushed into the lineitem scan, then conditional CASE
-    sums — the map-side-combinable 'pivot a flag into two counts' idiom."""
-    t = Tables(spark, sf_dir)
-    li = t.lineitem.filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp_ntz"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp_ntz"))
-    )
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        t.orders.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .groupBy("l_returnflag")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
-            # when(~high), not otherwise(1): a NULL priority is three-valued
-            # NEITHER bucket in the oracle's IN / NOT IN pair — the
-            # otherwise() spelling would count it as low
-            F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"),
-        )
-    )
-
-
-@register(
-    "tpch_q13_order_distribution",
-    oracle="""
-SELECT c_count, count(*) AS custdist
-FROM (
-  SELECT c.c_custkey, count(o.o_orderkey) AS c_count
-  FROM customer c
-  LEFT JOIN orders o
-    ON c.c_custkey = o.o_custkey AND o.o_orderstatus <> 'F'
-  GROUP BY c.c_custkey
-)
-GROUP BY c_count
-ORDER BY custdist DESC, c_count DESC
-""",
-)
-def tpch_q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 (customer order-count distribution): LEFT OUTER join with
-    an extra non-equi predicate on the join (status filter must NOT drop
-    customers — the zero-order bucket is the point), double aggregation:
-    per-customer count, then histogram of counts. count(o_orderkey) counts
-    only matched rows, so no-order customers land in c_count = 0."""
-    t = Tables(spark, sf_dir)
-    joined = t.customer.join(
-        t.orders,
-        (F.col("c_custkey") == F.col("o_custkey"))
-        & (F.col("o_orderstatus") != "F"),
-        "left",
-    )
-    return (
-        joined.groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-        .groupBy("c_count")
-        .agg(F.count(F.lit(1)).alias("custdist"))
-    )
-
-
-@register(
-    "tpch_q18_large_orders",
-    oracle="""
-SELECT c_name, o_orderkey, epoch_us(o_orderdate) AS order_epoch_us,
-       o_totalprice, total_qty
-FROM (
-  SELECT l_orderkey, sum(l_quantity) AS total_qty
-  FROM lineitem GROUP BY l_orderkey HAVING sum(l_quantity) > 250
-) big
-JOIN orders ON o_orderkey = big.l_orderkey
-JOIN customer ON c_custkey = o_custkey
-ORDER BY o_totalprice DESC, o_orderkey
-""",
-)
-def tpch_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 (large-volume customers): HAVING-filtered aggregate as the
-    probe side — the per-order quantity rollup shrinks lineitem ~7x before
-    any join, the tiny survivor set then joins orders and customer (both
-    joins broadcast the survivor side at every scale: the >250 filter is
-    ~1%-selective). Quantities are small integers, exact in double, so the
-    sum is order-insensitive. Order date exported as epoch-µs (timestamp
-    string forms differ between engines)."""
-    t = Tables(spark, sf_dir)
-    big = (
-        t.lineitem.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("total_qty"))
-        .filter(F.col("total_qty") > 250)
-    )
-    return (
-        # `big` is an aggregate FILTERED to ~1% of orders, but its size
-        # still scales with the corpus — gate the hint (lineitem bytes as
-        # the proxy); threshold+AQE decide from measured size at scale
-        t.orders.join(
-            broadcast_if_small(big, sf_dir, "lineitem"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        .join(t.customer, F.col("c_custkey") == F.col("o_custkey"))
-        .select(
-            "c_name",
-            "o_orderkey",
-            F.unix_micros(F.col("o_orderdate").cast("timestamp")).alias(
-                "order_epoch_us"
-            ),
-            "o_totalprice",
-            "total_qty",
-        )
-    )
-
-
-@register(
     "text_contamination_ngram",
     oracle="""
 WITH toks AS (
@@ -1829,122 +1505,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.unix_micros("purchase_ts") - F.unix_micros("click_ts")).alias(
             "lag_us"
         ),
-    )
-
-
-@register(
-    "customer_rfm_segments",
-    oracle="""
-WITH rfm AS (
-  SELECT o_custkey,
-         epoch_us(max(o_orderdate)) AS last_us,
-         count(*) AS freq,
-         CAST(round(sum(CAST(o_totalprice AS DECIMAL(38,6))), 2) AS DOUBLE)
-           AS monetary
-  FROM orders GROUP BY o_custkey
-),
-scored AS (
-  SELECT o_custkey,
-         ntile(4) OVER (ORDER BY last_us DESC, o_custkey) AS r_score,
-         ntile(4) OVER (ORDER BY freq DESC, o_custkey)    AS f_score,
-         ntile(4) OVER (ORDER BY monetary DESC, o_custkey) AS m_score
-  FROM rfm
-)
-SELECT r_score, f_score, m_score, count(*) AS n_customers
-FROM scored
-GROUP BY r_score, f_score, m_score
-ORDER BY r_score, f_score, m_score
-""",
-)
-def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFM segmentation (recency/frequency/monetary quartiles — the
-    classic customer-value cube): one aggregate over orders, three ntile
-    rankings with deterministic tie-breaks, rolled up to segment counts.
-    The ntile windows are global but run over the per-customer AGGREGATE
-    (|customers| ≪ |orders|); at extreme cardinality the same scores come
-    from approx quantile cutpoints + a broadcast bin join. Monetary uses
-    decimal accumulation (2-dp-quantized money sums land exactly on round
-    boundaries otherwise — SURVEY §5.4)."""
-    o = Tables(spark, sf_dir).orders
-    rfm = o.groupBy("o_custkey").agg(
-        F.unix_micros(F.max("o_orderdate").cast("timestamp")).alias("last_us"),
-        F.count(F.lit(1)).alias("freq"),
-        F.round(dec_sum(F.col("o_totalprice")), 2).cast("double").alias("monetary"),
-    )
-    def score(col: str) -> F.Column:
-        return F.ntile(4).over(
-            Window.orderBy(F.col(col).desc(), F.col("o_custkey").asc())
-        )
-    scored = rfm.select(
-        score("last_us").cast("bigint").alias("r_score"),
-        score("freq").cast("bigint").alias("f_score"),
-        score("monetary").cast("bigint").alias("m_score"),
-    )
-    return scored.groupBy("r_score", "f_score", "m_score").agg(
-        F.count(F.lit(1)).alias("n_customers")
-    )
-
-
-@register(
-    "lineitem_abc_pareto",
-    oracle="""
-WITH rev AS (
-  SELECT l_partkey,
-         CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
-               AS DECIMAL(38,6))), 2) AS DOUBLE) AS revenue
-  FROM lineitem GROUP BY l_partkey
-),
-ranked AS (
-  SELECT l_partkey, revenue,
-         sum(revenue) OVER (ORDER BY revenue DESC, l_partkey
-                            ROWS UNBOUNDED PRECEDING) AS cum_rev,
-         sum(revenue) OVER () AS total_rev
-  FROM rev
-),
-classed AS (
-  SELECT CASE WHEN cum_rev / total_rev <= 0.5 THEN 'A'
-              WHEN cum_rev / total_rev <= 0.8 THEN 'B'
-              ELSE 'C' END AS abc_class,
-         revenue
-  FROM ranked
-)
-SELECT abc_class, count(*) AS n_parts,
-       CAST(round(sum(CAST(revenue AS DECIMAL(38,6))), 2) AS DOUBLE)
-         AS class_revenue
-FROM classed
-GROUP BY abc_class
-ORDER BY abc_class
-""",
-)
-def lineitem_abc_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ABC / Pareto classification (which parts carry 50/80% of revenue):
-    per-part revenue rollup, a descending cumulative share over the
-    aggregated relation, CASE into classes, re-aggregate. The global
-    cumsum window runs over per-part aggregates (20k rows per million
-    lineitems), not the fact table. Revenue is 2-dp-quantized money ×
-    discount — decimal accumulation on both engines, and the class
-    boundaries are revenue RATIOS (never on a rounding grid), so the
-    CASE is engine-stable."""
-    li = Tables(spark, sf_dir).lineitem
-    rev = li.groupBy("l_partkey").agg(
-        F.round(dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).cast("double").alias("revenue")
-    )
-    w_cum = Window.orderBy(F.col("revenue").desc(), F.col("l_partkey")).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    w_all = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    share = F.sum("revenue").over(w_cum) / F.sum("revenue").over(w_all)
-    classed = rev.select(
-        F.when(share <= 0.5, "A").when(share <= 0.8, "B").otherwise("C").alias(
-            "abc_class"
-        ),
-        "revenue",
-    )
-    return classed.groupBy("abc_class").agg(
-        F.count(F.lit(1)).alias("n_parts"),
-        F.round(dec_sum(F.col("revenue")), 2).cast("double").alias("class_revenue"),
     )
 
 

@@ -12,6 +12,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ai_dataingestion_spark.catalog import register
 from ai_dataingestion_spark.functions.portable import (
+    NET_PRICE_SQL,
+    money_sum,
+    money_sum_sql,
+    net_price,
     stable_rounded_sum,
     stable_rounded_sum_sql,
     stable_sum,
@@ -27,10 +31,8 @@ SELECT
   l_linestatus,
   round(sum(l_quantity), 2)                                        AS sum_qty,
   {stable_rounded_sum_sql("l_extendedprice", 2)}                   AS sum_base_price,
-  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
-                      AS DECIMAL(38,6))), 2) AS DOUBLE)            AS sum_disc_price,
-  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax)
-                      AS DECIMAL(38,6))), 2) AS DOUBLE)            AS sum_charge,
+  {money_sum_sql(NET_PRICE_SQL)}                                   AS sum_disc_price,
+  {money_sum_sql(NET_PRICE_SQL + " * (1 + l_tax)")}                AS sum_charge,
   round(avg(l_quantity), 4)                                        AS avg_qty,
   round(avg(l_extendedprice), 4)                                   AS avg_price,
   round(avg(l_discount), 6)                                        AS avg_disc,
@@ -48,18 +50,15 @@ def agg_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle after partial agg is ~6 rows per task regardless of input size.
     """
     li = Tables(spark, sf_dir).lineitem
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    disc_price = net_price()
     return (
         li.filter(F.col("l_shipdate") <= F.lit("2000-12-01").cast("timestamp_ntz"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
             stable_rounded_sum("l_extendedprice", 2).alias("sum_base_price"),
-            F.round(
-                F.sum(disc_price.cast("decimal(38,6)")), 2).cast("double").alias("sum_disc_price"),
-            F.round(F.sum(
-                    (disc_price * (1 + F.col("l_tax"))).cast("decimal(38,6)")
-                ), 2).cast("double").alias("sum_charge"),
+            money_sum(disc_price).alias("sum_disc_price"),
+            money_sum(disc_price * (1 + F.col("l_tax"))).alias("sum_charge"),
             F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
             F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
             F.round(F.avg("l_discount"), 6).alias("avg_disc"),

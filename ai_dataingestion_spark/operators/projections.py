@@ -14,18 +14,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ai_dataingestion_spark.catalog import register
+from ai_dataingestion_spark.functions.portable import NET_PRICE_SQL, net_price
 from ai_dataingestion_spark.registry import Tables
 
 
 @register(
     "project_select",
-    oracle="""
+    oracle=f"""
 SELECT
   l_orderkey,
   l_linenumber,
-  l_extendedprice * (1 - l_discount)               AS net_price,
-  l_extendedprice * (1 - l_discount) * (1 + l_tax) AS gross_price,
-  l_returnflag || '/' || l_linestatus              AS flag_status
+  {NET_PRICE_SQL}                     AS net_price,
+  {NET_PRICE_SQL} * (1 + l_tax)       AS gross_price,
+  l_returnflag || '/' || l_linestatus AS flag_status
 FROM lineitem
 """,
 )
@@ -38,7 +39,7 @@ def project_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates, where it smooths summation-order noise instead).
     """
     li = Tables(spark, sf_dir).lineitem
-    net = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    net = net_price()
     return li.select(
         "l_orderkey",
         "l_linenumber",

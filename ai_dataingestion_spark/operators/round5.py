@@ -1,6 +1,4 @@
-"""Round-5 surface extensions (SURVEY.md §2.P): the remaining TPC-H
-composites (adapted where the corpus lacks partsupp / commit dates),
-growth, market-basket, decile and aging analytics, corpus-mixture / Zipf /
+"""Round-5 surface extensions (SURVEY.md §2.P): corpus-mixture / Zipf /
 charset text statistics, duplicate-family accounting, and cross-table
 reconciliation quality checks.
 
@@ -14,528 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ai_dataingestion_spark.catalog import register
-from ai_dataingestion_spark.scale import broadcast_if_small
 from ai_dataingestion_spark.registry import Tables
-
-
-_NET = "(l_extendedprice * (1 - l_discount))"
-
-
-# ---------------------------------------------------------------------------
-# §2.P.1 remaining TPC-H composites
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "tpch_q8_market_share",
-    oracle=f"""
-WITH all_sales AS (
-  SELECT year(o_orderdate) AS o_year,
-         CAST({_NET} AS DECIMAL(38,6)) AS volume,
-         sn.n_name AS supp_nation
-  FROM lineitem
-  JOIN orders   ON l_orderkey = o_orderkey
-  JOIN part     ON l_partkey = p_partkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation sn ON s_nationkey = sn.n_nationkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation cn ON c_nationkey = cn.n_nationkey
-  JOIN region   ON cn.n_regionkey = r_regionkey
-  WHERE r_name = 'AMERICA' AND p_type = 'ECONOMY'
-)
-SELECT o_year,
-       CAST(round(sum(CASE WHEN supp_nation = 'NATION_1' THEN volume
-                           ELSE CAST(0 AS DECIMAL(38,6)) END), 2) AS DOUBLE)
-         AS nation_volume,
-       CAST(round(sum(volume), 2) AS DOUBLE) AS total_volume,
-       round(CAST(sum(CASE WHEN supp_nation = 'NATION_1' THEN volume
-                           ELSE CAST(0 AS DECIMAL(38,6)) END) AS DOUBLE)
-             / CAST(sum(volume) AS DOUBLE), 6) AS mkt_share
-FROM all_sales GROUP BY o_year
-""",
-)
-def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8 (national market share), adapted to this corpus's flat
-    p_type domain: NATION_1's share of ECONOMY-part revenue sold into
-    AMERICA per order-year. Dimension chain customer→nation→region and
-    supplier→nation are broadcast; the one big join (lineitem ⋈ orders) is
-    keyed on l_orderkey — the canonical shape Catalyst reorders freely."""
-    t = Tables(spark, sf_dir)
-    sn = t.nation.select(
-        F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")
-    )
-    cn = t.nation.select("n_nationkey", "n_regionkey")
-    amer = cn.join(
-        F.broadcast(t.region.filter(F.col("r_name") == "AMERICA")),
-        cn.n_regionkey == F.col("r_regionkey"),
-    ).select(F.col("n_nationkey").alias("c_nk"))
-    sales = (
-        t.lineitem.join(t.orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(
-            broadcast_if_small(t.part.filter(F.col("p_type") == "ECONOMY"), sf_dir, "part"),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-        .join(t.supplier, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
-        .join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(amer), F.col("c_nationkey") == F.col("c_nk"))
-        .select(
-            F.year("o_orderdate").alias("o_year"),
-            (F.col("l_extendedprice") * (1 - F.col("l_discount")))
-            .cast("decimal(38,6)")
-            .alias("volume"),
-            "supp_nation",
-        )
-    )
-    zero = F.lit(0).cast("decimal(38,6)")
-    nation_vol = F.sum(
-        F.when(F.col("supp_nation") == "NATION_1", F.col("volume")).otherwise(zero)
-    )
-    total_vol = F.sum("volume")
-    return sales.groupBy("o_year").agg(
-        F.round(nation_vol, 2).cast("double").alias("nation_volume"),
-        F.round(total_vol, 2).cast("double").alias("total_volume"),
-        F.round(nation_vol.cast("double") / total_vol.cast("double"), 6).alias(
-            "mkt_share"
-        ),
-    )
-
-
-@register(
-    "tpch_q9_profit_by_nation_year",
-    oracle=f"""
-SELECT n_name AS nation, year(o_orderdate) AS o_year,
-       CAST(round(sum(CAST({_NET} - p_retailprice * l_quantity * 0.1
-                           AS DECIMAL(38,6))), 2) AS DOUBLE) AS profit
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN part     ON l_partkey = p_partkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation   ON s_nationkey = n_nationkey
-WHERE p_name LIKE '%widget%'
-GROUP BY n_name, year(o_orderdate)
-""",
-)
-def tpch_q9_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9 (product-type profit), adapted: the corpus has no partsupp,
-    so supply cost is proxied as 10% of p_retailprice per unit. Profit per
-    (supplier nation, order year) over parts named '%widget%'. The p_name
-    filter prunes part BEFORE its broadcast; lineitem⋈orders stays the only
-    shuffle join."""
-    t = Tables(spark, sf_dir)
-    profit_amt = (
-        F.col("l_extendedprice") * (1 - F.col("l_discount"))
-        - F.col("p_retailprice") * F.col("l_quantity") * 0.1
-    ).cast("decimal(38,6)")
-    return (
-        t.lineitem.join(t.orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(
-            broadcast_if_small(t.part.filter(F.col("p_name").like("%widget%")), sf_dir, "part"),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-        .join(t.supplier, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(t.nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            F.year("o_orderdate").alias("o_year"),
-        )
-        .agg(F.round(F.sum(profit_amt), 2).cast("double").alias("profit"))
-    )
-
-
-@register(
-    "tpch_q11_part_value_concentration",
-    oracle=f"""
-WITH part_value AS (
-  SELECT l_partkey AS partkey,
-         sum(CAST({_NET} AS DECIMAL(38,6))) AS value
-  FROM lineitem
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation   ON s_nationkey = n_nationkey
-  WHERE n_name = 'NATION_3'
-  GROUP BY l_partkey
-),
-total AS (SELECT sum(value) AS total_value FROM part_value)
-SELECT partkey, CAST(round(value, 2) AS DOUBLE) AS value
-FROM part_value, total
-WHERE CAST(value AS DOUBLE) > CAST(total_value AS DOUBLE) * 0.002
-""",
-)
-def tpch_q11_part_value_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q11 (important stock), adapted: no partsupp, so a part's
-    'value' is its traded revenue through NATION_3 suppliers; emit parts
-    holding > 0.2% of that nation's total. The scalar total is a 1-row
-    cross join (decorrelated subquery — the Q11 pattern); part_value is
-    aggregated ONCE and Catalyst reuses the exchange for both branches."""
-    t = Tables(spark, sf_dir)
-    n3 = t.nation.filter(F.col("n_name") == "NATION_3").select("n_nationkey")
-    pv = (
-        t.lineitem.join(t.supplier, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(n3), F.col("s_nationkey") == F.col("n_nationkey"))
-        .groupBy(F.col("l_partkey").alias("partkey"))
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                    "decimal(38,6)"
-                )
-            ).alias("value")
-        )
-    )
-    total = pv.agg(F.sum("value").alias("total_value"))
-    return (
-        pv.crossJoin(F.broadcast(total))
-        .filter(
-            F.col("value").cast("double")
-            > F.col("total_value").cast("double") * 0.002
-        )
-        .select("partkey", F.round("value", 2).cast("double").alias("value"))
-    )
-
-
-@register(
-    "tpch_q16_brand_supplier_counts",
-    oracle="""
-SELECT p_brand, p_type, p_size,
-       count(DISTINCT l_suppkey) AS supplier_cnt
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-WHERE p_brand <> 'Brand#2' AND p_type <> 'PROMO' AND p_size IN (1, 5, 9, 13)
-GROUP BY p_brand, p_type, p_size
-""",
-)
-def tpch_q16_brand_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q16 (parts/supplier relationship), adapted from partsupp to
-    lineitem as the part-supplier relation: distinct supplier count per
-    (brand, type, size) outside one brand/type, for four sizes. The
-    dimension filters land in the broadcast build of part; countDistinct
-    is the one shuffle."""
-    t = Tables(spark, sf_dir)
-    p = t.part.filter(
-        (F.col("p_brand") != "Brand#2")
-        & (F.col("p_type") != "PROMO")
-        & F.col("p_size").isin(1, 5, 9, 13)
-    )
-    return (
-        t.lineitem.join(broadcast_if_small(p, sf_dir, "part"), F.col("l_partkey") == F.col("p_partkey"))
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-    )
-
-
-@register(
-    "tpch_q17_small_quantity_revenue",
-    oracle="""
-WITH part_avg AS (
-  SELECT l_partkey AS pk, avg(l_quantity) AS avg_qty
-  FROM lineitem GROUP BY l_partkey
-)
-SELECT CAST(round(sum(CAST(l_extendedprice AS DECIMAL(38,6))) / 7.0, 2)
-            AS DOUBLE) AS avg_yearly
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-JOIN part_avg ON l_partkey = pk
-WHERE p_brand = 'Brand#23' AND l_quantity < 0.5 * avg_qty
-""",
-)
-def tpch_q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 (small-quantity-order revenue): revenue lost if orders
-    below half a part's average quantity were not taken, for one brand.
-    The correlated AVG subquery decorrelates into one groupBy on
-    l_partkey joined back — both sides shuffle on the same key, so AQE
-    plans them into one exchange reuse. Threshold 0.5 (vs spec's 0.2)
-    keeps the result non-degenerate on this corpus's uniform quantities."""
-    t = Tables(spark, sf_dir)
-    pa = t.lineitem.groupBy(F.col("l_partkey").alias("pk")).agg(
-        F.avg("l_quantity").alias("avg_qty")
-    )
-    return (
-        t.lineitem.join(
-            broadcast_if_small(t.part.filter(F.col("p_brand") == "Brand#23"), sf_dir, "part"),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-        .join(pa, F.col("l_partkey") == F.col("pk"))
-        .filter(F.col("l_quantity") < 0.5 * F.col("avg_qty"))
-        .agg(
-            (F.sum(F.col("l_extendedprice").cast("decimal(38,6)")) / 7.0)
-            .cast("decimal(38,12)")
-            .alias("s")
-        )
-        .select(F.round("s", 2).cast("double").alias("avg_yearly"))
-    )
-
-
-@register(
-    "tpch_q22_idle_customers",
-    oracle="""
-WITH pos_avg AS (
-  SELECT avg(c_acctbal) AS threshold FROM customer WHERE c_acctbal > 0.0
-),
-last_year AS (SELECT max(year(o_orderdate)) AS yr FROM orders)
-SELECT c_nationkey AS nationkey,
-       count(*) AS numcust,
-       CAST(round(sum(CAST(c_acctbal AS DECIMAL(38,6))), 2) AS DOUBLE)
-         AS totacctbal
-FROM customer, pos_avg
-WHERE c_acctbal > threshold
-  AND NOT EXISTS (SELECT 1 FROM orders, last_year
-                  WHERE o_custkey = c_custkey AND year(o_orderdate) = yr)
-GROUP BY c_nationkey
-""",
-)
-def tpch_q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 (global sales opportunity), adapted: on this corpus every
-    customer has SOME order, so 'idle' means no orders in the data's final
-    year — above-average positive balance, recently inactive, grouped by
-    nation. The NOT EXISTS is a left-anti join on o_custkey; the global
-    average and the max-year scalar are broadcast 1-row cross joins.
-    Anti-join build side is the DISTINCT custkey projection of the
-    final-year orders — at scale that aggregation shrinks the shuffle to
-    unique keys before the join."""
-    t = Tables(spark, sf_dir)
-    thr = t.customer.filter(F.col("c_acctbal") > 0.0).agg(
-        F.avg("c_acctbal").alias("threshold")
-    )
-    rich = t.customer.crossJoin(F.broadcast(thr)).filter(
-        F.col("c_acctbal") > F.col("threshold")
-    )
-    last_yr = t.orders.agg(F.max(F.year("o_orderdate")).alias("yr"))
-    with_orders = (
-        t.orders.crossJoin(F.broadcast(last_yr))
-        .filter(F.year("o_orderdate") == F.col("yr"))
-        .select(F.col("o_custkey").alias("c_custkey"))
-        .distinct()
-    )
-    return (
-        rich.join(with_orders, "c_custkey", "left_anti")
-        .groupBy(F.col("c_nationkey").alias("nationkey"))
-        .agg(
-            F.count(F.lit(1)).alias("numcust"),
-            F.round(F.sum(F.col("c_acctbal").cast("decimal(38,6)")), 2)
-            .cast("double")
-            .alias("totacctbal"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# §2.P.2 analytics: growth, baskets, deciles, aging
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "sales_yoy_growth",
-    oracle=f"""
-WITH yearly AS (
-  SELECT year(o_orderdate) AS o_year,
-         sum(CAST(o_totalprice AS DECIMAL(38,6))) AS revenue
-  FROM orders GROUP BY year(o_orderdate)
-)
-SELECT o_year,
-       CAST(round(revenue, 2) AS DOUBLE) AS revenue,
-       round(CAST(revenue AS DOUBLE)
-             / CAST(lag(revenue) OVER (ORDER BY o_year) AS DOUBLE) - 1.0,
-             6) AS yoy_growth
-FROM yearly
-""",
-)
-def sales_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Year-over-year revenue growth: yearly aggregate then a lag window.
-    The window partition is the whole (7-row) year relation — a single-task
-    window over an already-aggregated input, the correct shape at any
-    corpus size (aggregate first, window over the small result)."""
-    t = Tables(spark, sf_dir)
-    yearly = t.orders.groupBy(F.year("o_orderdate").alias("o_year")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(38,6)")).alias("revenue")
-    )
-    # asc_nulls_last: the NULL-date year sequences last (oracle default)
-    w = Window.orderBy(F.asc_nulls_last("o_year"))
-    return yearly.select(
-        "o_year",
-        F.round("revenue", 2).cast("double").alias("revenue"),
-        F.round(
-            F.col("revenue").cast("double")
-            / F.lag(F.col("revenue")).over(w).cast("double")
-            - 1.0,
-            6,
-        ).alias("yoy_growth"),
-    )
-
-
-@register(
-    "market_basket_pairs",
-    oracle="""
-WITH order_parts AS (
-  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-),
-pair_counts AS (
-  SELECT a.l_partkey AS part1, b.l_partkey AS part2, count(*) AS n_orders
-  FROM order_parts a JOIN order_parts b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY a.l_partkey, b.l_partkey
-)
-SELECT part1, part2, n_orders FROM pair_counts
-WHERE n_orders >= 3
-""",
-)
-def market_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Market-basket co-occurrence: part pairs appearing together in >= 3
-    orders. Pair fan-out per order is C(parts_in_order, 2) — bounded by
-    the ~7-line order format, NOT by corpus size; the per-order
-    collect_set keeps repeated parts within an order from inflating
-    pairs. This is the a-priori candidate-pair kernel at 100 TB: one
-    partial-aggregable basket groupBy, quadratic only within an order.
-
-    Optimization r16 (guide §2.4, remove shuffles outright): the first
-    draft generated pairs with distinct + a corpus×corpus self-equi-join
-    on l_orderkey (an exchange for the distinct plus two join exchanges,
-    with sort-merge hint machinery against AQE's broadcast/SHJ
-    misestimation of the corpus-sized sides); scale.basket_pair_explode
-    reaches the identical pair multiset with ONE groupBy(l_orderkey)
-    collect_set and a JVM-side combination generator — no join, no
-    candidate-pair shuffle, and the misestimation hazard disappears with
-    the join itself."""
-    t = Tables(spark, sf_dir)
-    from ai_dataingestion_spark.scale import basket_pair_explode
-
-    return (
-        basket_pair_explode(
-            t.lineitem.select("l_orderkey", "l_partkey"),
-            "l_orderkey", "l_partkey", out=("part1", "part2"),
-        )
-        .groupBy("part1", "part2")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-        .filter(F.col("n_orders") >= 3)
-    )
-
-
-@register(
-    "customer_value_deciles",
-    oracle="""
-WITH clv AS (
-  SELECT o_custkey, sum(CAST(o_totalprice AS DECIMAL(38,6))) AS lifetime
-  FROM orders GROUP BY o_custkey
-),
-bucketed AS (
-  SELECT o_custkey, lifetime,
-         ntile(10) OVER (ORDER BY lifetime DESC, o_custkey ASC) AS decile
-  FROM clv
-)
-SELECT decile, count(*) AS n_customers,
-       CAST(round(sum(lifetime), 2) AS DOUBLE) AS total_value,
-       CAST(round(min(lifetime), 2) AS DOUBLE) AS floor_value
-FROM bucketed GROUP BY decile
-""",
-)
-def customer_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customer lifetime-value deciles: per-customer revenue, ntile(10)
-    ranking (o_custkey tie-break makes bucket edges deterministic), decile
-    rollup. The global ntile is a single-partition window over the ALREADY
-    AGGREGATED per-customer relation — at 100 TB per-customer rows are
-    ~1e9 which still needs a distributed sort; the decile cut would then
-    move to approx percentile boundaries (agg_percentile's sketch) — noted
-    here because ntile's exact global ordering is the documented non-scale
-    piece of this query."""
-    t = Tables(spark, sf_dir)
-    clv = t.orders.groupBy("o_custkey").agg(
-        F.sum(F.col("o_totalprice").cast("decimal(38,6)")).alias("lifetime")
-    )
-    w = Window.orderBy(F.desc("lifetime"), F.asc("o_custkey"))
-    return (
-        clv.withColumn("decile", F.ntile(10).over(w))
-        .groupBy("decile")
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            F.round(F.sum("lifetime"), 2).cast("double").alias("total_value"),
-            F.round(F.min("lifetime"), 2).cast("double").alias("floor_value"),
-        )
-    )
-
-
-@register(
-    "orders_priority_aging",
-    oracle="""
-WITH anchor AS (SELECT max(o_orderdate) AS maxd FROM orders),
-aged AS (
-  SELECT o_orderpriority,
-         CASE
-           WHEN datediff('day', o_orderdate, maxd) <= 180 THEN '0-180'
-           WHEN datediff('day', o_orderdate, maxd) <= 365 THEN '181-365'
-           WHEN datediff('day', o_orderdate, maxd) <= 730 THEN '366-730'
-           ELSE '731+'
-         END AS age_bucket
-  FROM orders, anchor
-)
-SELECT o_orderpriority, age_bucket, count(*) AS n_orders
-FROM aged GROUP BY o_orderpriority, age_bucket
-""",
-)
-def orders_priority_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order aging report: orders bucketed by age relative to the newest
-    order, split by priority — the AR-aging-style backlog matrix. The max-date
-    anchor is a 1-row broadcast; bucketing is pure expression work and the
-    aggregate output is bounded by 5 priorities x 4 buckets."""
-    t = Tables(spark, sf_dir)
-    anchor = t.orders.agg(F.max("o_orderdate").alias("maxd"))
-    age = F.datediff(F.col("maxd"), F.col("o_orderdate"))
-    bucket = (
-        F.when(age <= 180, "0-180")
-        .when(age <= 365, "181-365")
-        .when(age <= 730, "366-730")
-        .otherwise("731+")
-    )
-    return (
-        t.orders.crossJoin(F.broadcast(anchor))
-        .groupBy("o_orderpriority", bucket.alias("age_bucket"))
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-    )
-
-
-@register(
-    "part_brand_share",
-    oracle=f"""
-WITH brand_rev AS (
-  SELECT p_type, p_brand,
-         sum(CAST({_NET} AS DECIMAL(38,6))) AS revenue
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-  GROUP BY p_type, p_brand
-)
-SELECT p_type, p_brand,
-       CAST(round(revenue, 2) AS DOUBLE) AS revenue,
-       round(CAST(revenue AS DOUBLE) /
-             CAST(sum(revenue) OVER (PARTITION BY p_type) AS DOUBLE), 6)
-         AS type_share
-FROM brand_rev
-""",
-)
-def part_brand_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brand revenue share within part type: aggregate once, then a
-    windowed ratio-to-report over the small (type, brand) result — the
-    share window never touches lineitem-sized data."""
-    t = Tables(spark, sf_dir)
-    rev = (
-        t.lineitem.join(
-            broadcast_if_small(t.part.select("p_partkey", "p_type", "p_brand"), sf_dir, "part"),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-        .groupBy("p_type", "p_brand")
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                    "decimal(38,6)"
-                )
-            ).alias("revenue")
-        )
-    )
-    w = Window.partitionBy("p_type")
-    return rev.select(
-        "p_type",
-        "p_brand",
-        F.round("revenue", 2).cast("double").alias("revenue"),
-        F.round(
-            F.col("revenue").cast("double") / F.sum("revenue").over(w).cast("double"),
-            6,
-        ).alias("type_share"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1114,145 +591,8 @@ def pipeline_reconcile_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# §2.P.5 window-filling five: cumulative share, delay stats, Gini,
-# norm percentiles, higher moments
+# §2.P.5 norm percentiles, higher moments
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "orders_cumulative_share_monthly",
-    oracle="""
-WITH monthly AS (
-  -- o_orderdate IS NOT NULL: a cumulative monthly curve has no seat for
-  -- "no month" — and the oracle engine's window ordering over a NULL
-  -- month from a GROUP BY date_trunc is broken even under an explicit
-  -- NULLS LAST (it seats the NULL first; verified on this corpus)
-  SELECT CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month,
-         sum(CAST(o_totalprice AS DECIMAL(38,6))) AS revenue
-  FROM orders WHERE o_orderdate IS NOT NULL
-  GROUP BY date_trunc('month', o_orderdate)
-)
-SELECT month,
-       CAST(round(revenue, 2) AS DOUBLE) AS revenue,
-       round(CAST(sum(revenue) OVER (ORDER BY month
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-             / CAST(sum(revenue) OVER () AS DOUBLE), 6) AS cumulative_share
-FROM monthly
-""",
-)
-def orders_cumulative_share_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cumulative revenue share by month — the 'what fraction of the year
-    is booked by June' curve. Aggregate-first: both windows (running sum,
-    grand total) run over the months-sized relation, decimal until the
-    final ratio."""
-    t = Tables(spark, sf_dir)
-    monthly = (
-        t.orders.where(F.col("o_orderdate").isNotNull())  # oracle mirrors
-        .groupBy(F.date_trunc("month", "o_orderdate").alias("month"))
-        .agg(F.sum(F.col("o_totalprice").cast("decimal(38,6)")).alias("revenue"))
-    )
-    # asc_nulls_last: the NULL-date month accrues at the END of the
-    # cumulative curve, as in the oracle's ORDER BY month default
-    w_run = Window.orderBy(F.asc_nulls_last("month")).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    w_all = Window.partitionBy()
-    return monthly.select(
-        F.col("month").cast("timestamp_ntz").alias("month"),
-        F.round("revenue", 2).cast("double").alias("revenue"),
-        F.round(
-            F.sum("revenue").over(w_run).cast("double")
-            / F.sum("revenue").over(w_all).cast("double"),
-            6,
-        ).alias("cumulative_share"),
-    )
-
-
-@register(
-    "lineitem_shipping_delay_stats",
-    oracle="""
-SELECT o_orderpriority,
-       count(*) AS n_lines,
-       round(avg(datediff('day', o_orderdate, l_shipdate)), 6) AS avg_delay,
-       min(datediff('day', o_orderdate, l_shipdate)) AS min_delay,
-       max(datediff('day', o_orderdate, l_shipdate)) AS max_delay,
-       round(stddev_samp(datediff('day', o_orderdate, l_shipdate)), 6)
-         AS sd_delay
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-GROUP BY o_orderpriority
-""",
-)
-def lineitem_shipping_delay_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shipping-delay distribution per order priority: integer day deltas
-    through count/avg/min/max/stddev. One shuffle join on orderkey, one
-    partial-aggregable groupBy; 5-row output at any scale."""
-    t = Tables(spark, sf_dir)
-    delay = F.datediff(F.col("l_shipdate"), F.col("o_orderdate"))
-    return (
-        t.lineitem.join(t.orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n_lines"),
-            F.round(F.avg(delay), 6).alias("avg_delay"),
-            F.min(delay).alias("min_delay"),
-            F.max(delay).alias("max_delay"),
-            F.round(F.stddev_samp(delay), 6).alias("sd_delay"),
-        )
-    )
-
-
-@register(
-    "supplier_revenue_gini",
-    oracle=f"""
-WITH srev AS (
-  SELECT l_suppkey, sum(CAST({_NET} AS DECIMAL(38,6))) AS revenue
-  FROM lineitem GROUP BY l_suppkey
-),
-ranked AS (
-  SELECT revenue,
-         row_number() OVER (ORDER BY revenue ASC, l_suppkey ASC) AS rn,
-         count(*) OVER () AS n
-  FROM srev
-)
-SELECT CAST(max(n) AS BIGINT) AS n_suppliers,
-       round(2.0 * CAST(sum(CAST(rn AS DECIMAL(38,6)) * revenue) AS DOUBLE)
-             / (max(n) * CAST(sum(revenue) AS DOUBLE))
-             - (max(n) + 1.0) / max(n), 6) AS gini
-FROM ranked
-""",
-)
-def supplier_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gini coefficient of supplier revenue concentration via the sorted
-    formula G = 2·Σ(i·x_i)/(n·Σx) − (n+1)/n — the inequality number next
-    to lineitem_abc_pareto. Rank runs over the aggregated per-supplier
-    relation (suppliers-sized); Σ(i·x) stays in DECIMAL so both engines
-    sum exactly."""
-    t = Tables(spark, sf_dir)
-    srev = t.lineitem.groupBy("l_suppkey").agg(
-        F.sum(
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                "decimal(38,6)"
-            )
-        ).alias("revenue")
-    )
-    w = Window.orderBy(F.asc("revenue"), F.asc("l_suppkey"))
-    ranked = srev.select(
-        "revenue",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy()).alias("n"),
-    )
-    return ranked.agg(
-        F.max("n").cast("bigint").alias("n_suppliers"),
-        F.round(
-            2.0
-            * F.sum(F.col("rn").cast("decimal(38,6)") * F.col("revenue")).cast(
-                "double"
-            )
-            / (F.max("n") * F.sum("revenue").cast("double"))
-            - (F.max("n") + 1.0) / F.max("n"),
-            6,
-        ).alias("gini"),
-    )
 
 
 @register(

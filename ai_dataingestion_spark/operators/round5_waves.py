@@ -7,7 +7,7 @@ indices are unchanged). Each section keeps its original wave docstring.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
-from ai_dataingestion_spark.catalog import register, sql_op
+from ai_dataingestion_spark.catalog import register
 from ai_dataingestion_spark.functions.portable import (
     pround,
     stable_rounded_sum,
@@ -31,288 +31,14 @@ import os
 
 # ===========================================================================
 # wave module round5b (formerly operators/round5b.py)
-# Round-5 second wave (SURVEY.md §2.Q): the last two classic TPC-H shapes
-# (Q2 min-cost argmin subquery, Q21 single-late-supplier multi-condition
-# exists), customer purchase-cadence analytics, corpus-divergence /
+# Round-5 second wave (SURVEY.md §2.Q): corpus-divergence /
 # lexical-richness text statistics, blocked edit-distance dedup, alternative
 # means, a per-column data-quality matrix, and a per-dimension
 # label-separability (eta-squared) profile over the embedding corpus.
 #
-# Float discipline follows SURVEY.md §5.4: money-product sums in
-# DECIMAL(38,6) rounded in the decimal domain; ratios/doubles rounded at
-# 6 dp on BOTH sides; counts, keys, and day deltas exact.
+# Float discipline follows SURVEY.md §5.4: ratios/doubles rounded at 6 dp
+# on BOTH sides; counts, keys, and day deltas exact.
 # ===========================================================================
-
-_NET = "(l_extendedprice * (1 - l_discount))"
-
-
-# ---------------------------------------------------------------------------
-# §2.Q.1 remaining TPC-H shapes
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "tpch_q2_min_cost_supplier",
-    oracle="""
-WITH cost AS (
-  SELECT l_partkey, l_suppkey,
-         floor(CAST(sum(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE)
-               / CAST(sum(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE)
-               * 1000000 + 0.5) / 1000000
-           AS unit_cost
-  FROM lineitem
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation   ON s_nationkey = n_nationkey
-  JOIN region   ON n_regionkey = r_regionkey
-  WHERE r_name = 'EUROPE'
-  GROUP BY l_partkey, l_suppkey
-),
-best AS (
-  SELECT l_partkey, l_suppkey, unit_cost,
-         row_number() OVER (PARTITION BY l_partkey
-                            ORDER BY unit_cost ASC, l_suppkey ASC) AS rn
-  FROM cost
-)
-SELECT p_partkey, p_name, s_name AS supplier, unit_cost
-FROM best
-JOIN part     ON l_partkey = p_partkey
-JOIN supplier ON l_suppkey = s_suppkey
-WHERE rn = 1 AND p_size < 15
-""",
-)
-def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2 (minimum-cost supplier), adapted to this corpus (no
-    partsupp: unit cost is the supplier's observed avg extendedprice per
-    quantity from lineitem, restricted to EUROPE suppliers). The
-    correlated MIN subquery becomes a per-part window argmin — one
-    groupBy shuffle on (part, supp) then a part-partitioned row_number,
-    dims broadcast. Unit cost is total spend / total quantity via EXACT
-    decimal sums cast to double for one deterministic IEEE division,
-    then rounded with the PORTABLE formula floor(x·1e6 + 0.5)/1e6 —
-    pure IEEE ops, bit-identical on both engines. Built-in round() is
-    NOT portable on exact decimal ties: sf0.1 hit quotient 8290.71/32 =
-    259.0846875, where Spark rounds the shortest-decimal BigDecimal
-    HALF_UP to …688 while DuckDB rounds the binary double (…87499…) to
-    …687. Suppkey breaks argmin ties deterministically."""
-    t = Tables(spark, sf_dir)
-    europe_supp = (
-        t.supplier.join(
-            F.broadcast(t.nation), F.col("s_nationkey") == F.col("n_nationkey")
-        )
-        .join(
-            F.broadcast(t.region.filter(F.col("r_name") == "EUROPE")),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
-        .select("s_suppkey")
-    )
-    cost = (
-        t.lineitem.join(
-            broadcast_if_small(europe_supp, sf_dir, "supplier"),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-        )
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(
-            (
-                # try_divide: a supplier observed only at zero quantity
-                # has no unit cost (NULL; loses the nulls-last argmin)
-                F.floor(
-                    F.try_divide(
-                        F.sum(
-                            F.col("l_extendedprice").cast("decimal(38,6)")
-                        ).cast("double"),
-                        F.sum(
-                            F.col("l_quantity").cast("decimal(38,6)")
-                        ).cast("double"),
-                    )
-                    * 1_000_000
-                    + 0.5
-                )
-                / 1_000_000
-            ).alias("unit_cost")
-        )
-    )
-    # asc_nulls_last: a supplier whose observed quantities are all NULL has
-    # NULL unit cost — it must never WIN the argmin (oracle ASC default)
-    w = Window.partitionBy("l_partkey").orderBy(
-        F.asc_nulls_last("unit_cost"), F.asc("l_suppkey")
-    )
-    best = cost.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
-    return (
-        best.join(
-            broadcast_if_small(t.part.filter(F.col("p_size") < 15), sf_dir, "part"),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-        .join(
-            broadcast_if_small(t.supplier.select("s_suppkey", "s_name"), sf_dir, "supplier"),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-        )
-        .select(
-            "p_partkey", "p_name", F.col("s_name").alias("supplier"), "unit_cost"
-        )
-    )
-
-
-@register(
-    "tpch_q21_single_late_supplier",
-    oracle="""
-WITH flagged AS (
-  SELECT l_orderkey, l_suppkey,
-         max(CASE WHEN l_shipdate > o_orderdate + INTERVAL 90 DAY
-                  THEN 1 ELSE 0 END) AS is_late
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  GROUP BY l_orderkey, l_suppkey
-),
-culprit AS (
-  SELECT l_orderkey,
-         max(CASE WHEN is_late = 1 THEN l_suppkey END) AS late_supp
-  FROM flagged
-  GROUP BY l_orderkey
-  HAVING count(*) >= 2 AND sum(is_late) = 1
-)
-SELECT s_name, count(*) AS numwait
-FROM culprit JOIN supplier ON late_supp = s_suppkey
-GROUP BY s_name
-""",
-)
-def tpch_q21_single_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q21 (suppliers who kept orders waiting), adapted: per
-    multi-supplier order, the UNIQUE supplier whose line shipped > 90
-    days after the order date (ship delay proxies the missing
-    commit/receipt dates). The reference EXISTS / NOT EXISTS pair over
-    lineitem collapses into one (orderkey, suppkey) aggregation plus one
-    orderkey aggregation — two partial-aggregable shuffles, no
-    self-join, which is the shape that survives a 100 TB lineitem."""
-    t = Tables(spark, sf_dir)
-    flagged = (
-        t.lineitem.join(t.orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("l_orderkey", "l_suppkey")
-        .agg(
-            F.max(
-                F.when(
-                    F.col("l_shipdate") > F.date_add(F.col("o_orderdate"), 90), 1
-                ).otherwise(0)
-            ).alias("is_late")
-        )
-    )
-    culprit = (
-        flagged.groupBy("l_orderkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_supp"),
-            F.sum("is_late").alias("n_late"),
-            F.max(F.when(F.col("is_late") == 1, F.col("l_suppkey"))).alias(
-                "late_supp"
-            ),
-        )
-        .filter((F.col("n_supp") >= 2) & (F.col("n_late") == 1))
-    )
-    return (
-        culprit.join(
-            broadcast_if_small(t.supplier.select("s_suppkey", "s_name"), sf_dir, "supplier"),
-            F.col("late_supp") == F.col("s_suppkey"),
-        )
-        .groupBy("s_name")
-        .agg(F.count(F.lit(1)).alias("numwait"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# §2.Q.2 purchase-cadence analytics
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "orders_repeat_customer_rate",
-    oracle="""
-WITH seq AS (
-  SELECT CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month,
-         row_number() OVER (PARTITION BY o_custkey
-                            ORDER BY o_orderdate, o_orderkey) AS nth
-  FROM orders
-)
-SELECT month, count(*) AS n_orders,
-       count(CASE WHEN nth > 1 THEN 1 END) AS n_repeat,
-       round(CAST(count(CASE WHEN nth > 1 THEN 1 END) AS DOUBLE)
-             / count(*), 6) AS repeat_rate
-FROM seq GROUP BY month
-""",
-)
-def orders_repeat_customer_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Monthly repeat-purchase rate: the share of each month's orders
-    placed by a customer with at least one EARLIER order. One
-    custkey-partitioned row_number (shuffles orderkey+date pairs only),
-    then a months-sized groupBy — no self-join against order history."""
-    t = Tables(spark, sf_dir)
-    # asc_nulls_last: NULL-date orders must sequence LAST per customer as
-    # in the oracle — at the front they shift every real order's nth up
-    # and miscount first purchases as repeats
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.asc_nulls_last("o_orderdate"), "o_orderkey"
-    )
-    seq = t.orders.select(
-        F.date_trunc("month", "o_orderdate").alias("month"),
-        F.row_number().over(w).alias("nth"),
-    )
-    return seq.groupBy("month").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.count(F.when(F.col("nth") > 1, 1)).alias("n_repeat"),
-        F.round(
-            F.count(F.when(F.col("nth") > 1, 1)).cast("double")
-            / F.count(F.lit(1)),
-            6,
-        ).alias("repeat_rate"),
-    )
-
-
-@register(
-    "customer_order_gap_stats",
-    oracle="""
-WITH gaps AS (
-  SELECT c_mktsegment,
-         datediff('day',
-                  lag(o_orderdate) OVER (PARTITION BY o_custkey
-                                         ORDER BY o_orderdate, o_orderkey),
-                  o_orderdate) AS gap_days
-  FROM orders JOIN customer ON o_custkey = c_custkey
-)
-SELECT c_mktsegment, count(gap_days) AS n_gaps,
-       round(avg(gap_days), 6) AS avg_gap,
-       min(gap_days) AS min_gap, max(gap_days) AS max_gap
-FROM gaps WHERE gap_days IS NOT NULL
-GROUP BY c_mktsegment
-""",
-)
-def customer_order_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inter-order cadence per market segment: day gaps between a
-    customer's consecutive orders (lag over the customer's order
-    timeline), rolled up to count/avg/min/max. The customer dim is
-    broadcast; the window shuffles (custkey, date, orderkey) triples;
-    output is segments-sized at any corpus scale."""
-    t = Tables(spark, sf_dir)
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    gaps = (
-        t.orders.join(
-            broadcast_if_small(t.customer.select("c_custkey", "c_mktsegment"), sf_dir, "customer"),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .select(
-            "c_mktsegment",
-            F.datediff(
-                F.col("o_orderdate"), F.lag("o_orderdate").over(w)
-            ).alias("gap_days"),
-        )
-        .filter(F.col("gap_days").isNotNull())
-    )
-    return gaps.groupBy("c_mktsegment").agg(
-        F.count("gap_days").alias("n_gaps"),
-        F.round(F.avg("gap_days"), 6).alias("avg_gap"),
-        F.min("gap_days").alias("min_gap"),
-        F.max("gap_days").alias("max_gap"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# §2.Q.3 event attribution + co-occurrence
-# ---------------------------------------------------------------------------
 
 
 # ---------------------------------------------------------------------------
@@ -749,9 +475,8 @@ def embed_label_eta_squared(spark: SparkSession, sf_dir: str) -> DataFrame:
 # wave module round5c (formerly operators/round5c.py)
 # Round-5 third wave (SURVEY.md §2.Q, continued): the two partition-
 # pruning scan paths every 100 TB lake lives on (static partition pruning
-# and dynamic partition pruning through a join), cohort lifetime value,
-# brand co-purchase lift, bigram conditional entropy, and binary-codec
-# function parity.
+# and dynamic partition pruning through a join), bigram conditional
+# entropy, and binary-codec function parity.
 # ===========================================================================
 
 # ---------------------------------------------------------------------------
@@ -845,172 +570,6 @@ def join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
             stable_rounded_sum("value", 2).alias("total_value"),
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# §2.Q.8 cohort LTV + basket analytics
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "customer_cohort_ltv",
-    oracle="""
-WITH seq AS (
-  SELECT o_custkey, o_totalprice,
-         CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month,
-         CAST(date_trunc('month', min(o_orderdate) OVER (PARTITION BY o_custkey))
-              AS TIMESTAMP) AS cohort
-  FROM orders
-)
-SELECT cohort,
-       datediff('month', cohort, month) AS month_index,
-       count(DISTINCT o_custkey) AS n_customers,
-       CAST(round(sum(CAST(o_totalprice AS DECIMAL(38,6))), 2) AS DOUBLE)
-         AS revenue
-FROM seq
-GROUP BY cohort, datediff('month', cohort, month)
-""",
-)
-def customer_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort lifetime-value matrix: customers grouped by first-order
-    month, revenue tracked per months-since-acquisition — the orders-side
-    twin of events_cohort_retention. One custkey-partitioned window
-    (min first order), one (cohort, month_index) rollup; output is
-    months² at any corpus size."""
-    t = Tables(spark, sf_dir)
-    w = Window.partitionBy("o_custkey")
-    seq = t.orders.select(
-        "o_custkey",
-        "o_totalprice",
-        F.date_trunc("month", "o_orderdate").alias("month"),
-        F.date_trunc("month", F.min("o_orderdate").over(w)).alias("cohort"),
-    )
-    month_index = (
-        F.months_between(F.col("month"), F.col("cohort")).cast("bigint")
-    )
-    return seq.groupBy("cohort", month_index.alias("month_index")).agg(
-        F.count_distinct("o_custkey").alias("n_customers"),
-        F.round(F.sum(F.col("o_totalprice").cast("decimal(38,6)")), 2)
-        .cast("double")
-        .alias("revenue"),
-    )
-
-
-@register(
-    "orders_basket_size_histogram",
-    oracle="""
-WITH sizes AS (
-  SELECT l_orderkey, count(*) AS basket_size FROM lineitem GROUP BY l_orderkey
-)
-SELECT basket_size, count(*) AS n_orders,
-       round(CAST(count(*) AS DOUBLE)
-             / (sum(count(*)) OVER ()), 6) AS share
-FROM sizes GROUP BY basket_size
-""",
-)
-def orders_basket_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Basket-size distribution: line count per order, rolled into a
-    histogram with shares. Two chained partial-aggregable groupBys; the
-    share window runs over the ≤ max-basket-size histogram rows."""
-    t = Tables(spark, sf_dir)
-    sizes = t.lineitem.groupBy("l_orderkey").agg(
-        F.count(F.lit(1)).alias("basket_size")
-    )
-    hist = sizes.groupBy("basket_size").agg(F.count(F.lit(1)).alias("n_orders"))
-    return hist.select(
-        "basket_size",
-        "n_orders",
-        F.round(
-            F.col("n_orders").cast("double")
-            / F.sum("n_orders").over(Window.partitionBy()),
-            6,
-        ).alias("share"),
-    )
-
-
-@register(
-    "brand_copurchase_lift",
-    oracle="""
-WITH ob AS (
-  SELECT DISTINCT l_orderkey, p_brand
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-),
-n_orders AS (SELECT count(DISTINCT l_orderkey) AS n FROM ob),
-brand_n AS (SELECT p_brand, count(*) AS cb FROM ob GROUP BY p_brand),
-pairs AS (
-  SELECT a.p_brand AS brand_a, b.p_brand AS brand_b, count(*) AS c_ab
-  FROM ob a JOIN ob b
-    ON a.l_orderkey = b.l_orderkey AND a.p_brand < b.p_brand
-  GROUP BY a.p_brand, b.p_brand
-)
-SELECT brand_a, brand_b, c_ab,
-       round(CAST(c_ab AS DOUBLE) * n.n / (ca.cb * cb.cb), 6) AS lift
-FROM pairs
-JOIN brand_n ca ON brand_a = ca.p_brand
-JOIN brand_n cb ON brand_b = cb.p_brand
-CROSS JOIN n_orders n
-WHERE c_ab >= 5
-""",
-)
-def brand_copurchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brand co-purchase lift: P(a,b)/(P(a)·P(b)) over orders — the
-    normalized version of market_basket_pairs that separates 'popular
-    pair' from 'associated pair'. The self-join is keyed on orderkey
-    (quadratic only within an order's ≤ brands-per-basket distinct
-    brands); the brand marginals and order count are brands-sized /
-    scalar broadcasts onto the pairs relation."""
-    t = Tables(spark, sf_dir)
-    ob = (
-        t.lineitem.join(
-            broadcast_if_small(t.part.select("p_partkey", "p_brand"), sf_dir, "part"),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-        .select("l_orderkey", "p_brand")
-        .distinct()
-    )
-    n_orders = ob.agg(F.count_distinct("l_orderkey").alias("n"))
-    brand_n = ob.groupBy("p_brand").agg(F.count(F.lit(1)).alias("cb"))
-    a = ob.alias("a")
-    b = ob.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.p_brand") < F.col("b.p_brand")),
-        )
-        .groupBy(
-            F.col("a.p_brand").alias("brand_a"),
-            F.col("b.p_brand").alias("brand_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("c_ab"))
-        .filter(F.col("c_ab") >= 5)
-    )
-    ca = brand_n.select(
-        F.col("p_brand").alias("ba"), F.col("cb").alias("ca_n")
-    )
-    cb = brand_n.select(
-        F.col("p_brand").alias("bb"), F.col("cb").alias("cb_n")
-    )
-    return (
-        pairs.join(F.broadcast(ca), F.col("brand_a") == F.col("ba"))
-        .join(F.broadcast(cb), F.col("brand_b") == F.col("bb"))
-        .crossJoin(F.broadcast(n_orders))
-        .select(
-            "brand_a",
-            "brand_b",
-            "c_ab",
-            F.round(
-                F.col("c_ab").cast("double") * F.col("n")
-                / (F.col("ca_n") * F.col("cb_n")),
-                6,
-            ).alias("lift"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# §2.Q.9 calendar gaps + survival
-# ---------------------------------------------------------------------------
 
 
 # ---------------------------------------------------------------------------
@@ -1123,8 +682,7 @@ def fn_string_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # wave module round5d (formerly operators/round5d.py)
 # Round-5 fourth wave (SURVEY.md §2.Q, continued): statistical screens —
-# chi-squared independence, Benford first-digit conformance, per-group OLS
-# regression, and multiplicative seasonal decomposition. Every formula is
+# chi-squared independence and Benford first-digit conformance. Every formula is
 # written as raw power sums / explicit ratios so Spark and DuckDB evaluate
 # the IDENTICAL expression (the agg_higher_moments rule: built-in
 # corr/stddev differ in bias correction across engines); 6-dp rounding
@@ -1263,201 +821,13 @@ def quality_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "lineitem_discount_quantity_regr",
-    oracle="""
-WITH obs AS (
-  SELECT p_brand, l_discount AS d, CAST(l_quantity AS DOUBLE) AS q
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-)
-SELECT p_brand, count(*) AS n,
-       round((avg(d * q) - avg(d) * avg(q))
-             / (avg(d * d) - avg(d) * avg(d)), 6) AS slope,
-       round(avg(q) - (avg(d * q) - avg(d) * avg(q))
-                      / (avg(d * d) - avg(d) * avg(d)) * avg(d), 6)
-         AS intercept,
-       round(pow(avg(d * q) - avg(d) * avg(q), 2)
-             / ((avg(d * d) - avg(d) * avg(d))
-                * (avg(q * q) - avg(q) * avg(q))), 6) AS r2
-FROM obs GROUP BY p_brand
-""",
-)
-def lineitem_discount_quantity_regr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-brand OLS regression of quantity on discount (slope,
-    intercept, R²) — the price-elasticity proxy, and the grouped
-    generalization of agg_corr_regression. One broadcast dim join, one
-    partial-aggregable groupBy carrying five power sums; brands-sized
-    output at any scale."""
-    t = Tables(spark, sf_dir)
-    obs = t.lineitem.join(
-        broadcast_if_small(t.part.select("p_partkey", "p_brand"), sf_dir, "part"),
-        F.col("l_partkey") == F.col("p_partkey"),
-    ).select(
-        "p_brand",
-        F.col("l_discount").alias("d"),
-        F.col("l_quantity").cast("double").alias("q"),
-    )
-    d, q = F.col("d"), F.col("q")
-    cov = F.avg(d * q) - F.avg(d) * F.avg(q)
-    var_d = F.avg(d * d) - F.avg(d) * F.avg(d)
-    var_q = F.avg(q * q) - F.avg(q) * F.avg(q)
-    return obs.groupBy("p_brand").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(cov / var_d, 6).alias("slope"),
-        F.round(F.avg(q) - cov / var_d * F.avg(d), 6).alias("intercept"),
-        F.round(F.pow(cov, 2) / (var_d * var_q), 6).alias("r2"),
-    )
-
-
-@register(
-    "orders_seasonal_index",
-    oracle="""
-WITH monthly AS (
-  SELECT CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month,
-         CAST(sum(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS rev
-  FROM orders GROUP BY date_trunc('month', o_orderdate)
-),
-idx AS (
-  SELECT month, rev,
-         CAST(datediff('month', min(month) OVER (), month) AS DOUBLE) AS tt
-  FROM monthly
-),
-fitted AS (
-  SELECT month, rev, tt,
-         (avg(tt * rev) OVER () - avg(tt) OVER () * avg(rev) OVER ())
-           / (avg(tt * tt) OVER () - avg(tt) OVER () * avg(tt) OVER ())
-           AS slope,
-         avg(rev) OVER () AS mrev, avg(tt) OVER () AS mtt
-  FROM idx
-)
-SELECT month(month) AS cal_month, count(*) AS n_months,
-       round(avg(rev / (mrev + slope * (tt - mtt))), 6) AS seasonal_index
-FROM fitted
-GROUP BY month(month)
-""",
-)
-def orders_seasonal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multiplicative seasonal decomposition of monthly revenue: OLS
-    trend fit over the month index, then the mean actual/trend ratio per
-    calendar month — the '12-number seasonality profile' of the order
-    book. Everything past the first groupBy runs on the months-sized
-    relation (windows over ~80 rows); the OLS uses raw power sums so
-    both engines fit the identical line."""
-    t = Tables(spark, sf_dir)
-    monthly = t.orders.groupBy(
-        F.date_trunc("month", "o_orderdate").alias("month")
-    ).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(38,6)"))
-        .cast("double")
-        .alias("rev")
-    )
-    w = Window.partitionBy()
-    idx = monthly.select(
-        "month",
-        "rev",
-        F.months_between(
-            F.col("month"), F.min("month").over(w)
-        ).cast("double").alias("tt"),
-    )
-    tt, rev = F.col("tt"), F.col("rev")
-    fitted = idx.select(
-        "month",
-        "rev",
-        "tt",
-        (
-            (F.avg(tt * rev).over(w) - F.avg(tt).over(w) * F.avg(rev).over(w))
-            / (F.avg(tt * tt).over(w) - F.avg(tt).over(w) * F.avg(tt).over(w))
-        ).alias("slope"),
-        F.avg(rev).over(w).alias("mrev"),
-        F.avg(tt).over(w).alias("mtt"),
-    )
-    trend = F.col("mrev") + F.col("slope") * (tt - F.col("mtt"))
-    return fitted.groupBy(F.month("month").alias("cal_month")).agg(
-        F.count(F.lit(1)).alias("n_months"),
-        F.round(F.avg(rev / trend), 6).alias("seasonal_index"),
-    )
-
-
 # ===========================================================================
 # wave module round5e (formerly operators/round5e.py)
-# Round-5 fifth wave (SURVEY.md §2.Q, continued): TPC-H Q20 — which
-# completes all 22 TPC-H query shapes, adapted to this corpus — a
-# catalog-level table-profiling operator, and the PCA flagship: dominant
+# Round-5 fifth wave (SURVEY.md §2.Q, continued): a catalog-level
+# table-profiling operator and the PCA flagship: dominant
 # principal component of the embedding corpus via a partial-Gram Arrow
 # kernel + five unrolled power iterations on the 64×64 covariance.
 # ===========================================================================
-
-@register(
-    "tpch_q20_excess_share_suppliers",
-    oracle="""
-WITH shipped AS (
-  SELECT l_partkey, l_suppkey, sum(l_quantity) AS supp_qty
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-  WHERE p_name LIKE '%bolt%'
-  GROUP BY l_partkey, l_suppkey
-),
-shared AS (
-  SELECT l_partkey, l_suppkey, supp_qty,
-         sum(supp_qty) OVER (PARTITION BY l_partkey) AS part_qty
-  FROM shipped
-),
-dominant AS (
-  SELECT DISTINCT l_suppkey FROM shared
-  WHERE supp_qty >= 0.15 * part_qty
-)
-SELECT s_name, n_name AS nation
-FROM dominant
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation   ON s_nationkey = n_nationkey
-""",
-)
-def tpch_q20_excess_share_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q20 (suppliers with excess stock), adapted: no partsupp
-    availability exists, so 'excess' becomes an OUTSIZED SHARE — suppliers who shipped >= 15%
-    of some bolt-part's total volume (~1.5x the fair share under this
-    corpus's ~10 suppliers/part; 0.5 yields zero rows at every SF on the
-    uniform synthetic volumes, making the check vacuous). The
-    reference's nested IN-subquery chain (part slice → per-(part,supp)
-    quantity → availability threshold → supplier filter) keeps its exact
-    shape: one (part, supp) aggregation, a per-part window total
-    replacing the correlated sum subquery, a distinct semi-reduction,
-    and broadcast supplier/nation name resolution. This closes the set:
-    all 22 TPC-H query shapes now have an adapted, oracle-verified
-    implementation (q1≈agg_groupby's plan family; q2-q22 explicit)."""
-    t = Tables(spark, sf_dir)
-    shipped = (
-        t.lineitem.join(
-            F.broadcast(
-                t.part.filter(F.col("p_name").like("%bolt%")).select("p_partkey")
-            ),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(F.sum("l_quantity").alias("supp_qty"))
-    )
-    shared = shipped.withColumn(
-        "part_qty", F.sum("supp_qty").over(Window.partitionBy("l_partkey"))
-    )
-    dominant = (
-        shared.filter(F.col("supp_qty") >= 0.15 * F.col("part_qty"))
-        .select("l_suppkey")
-        .distinct()
-    )
-    return (
-        dominant.join(
-            broadcast_if_small(
-                t.supplier.select("s_suppkey", "s_name", "s_nationkey"),
-                sf_dir,
-                "supplier",
-            ),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-        )
-        .join(
-            F.broadcast(t.nation),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .select("s_name", F.col("n_name").alias("nation"))
-    )
 
 
 @register(
@@ -1682,9 +1052,8 @@ def agg_hll_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # wave module round5f (formerly operators/round5f.py)
 # Round-5 sixth wave (SURVEY.md §2.Q, continued): ANSI error-safe
-# arithmetic (try_*), permissive malformed-CSV ingestion with corrupt-
-# record capture, and CUSUM changepoint detection on the daily shipment
-# series.
+# arithmetic (try_*) and permissive malformed-CSV ingestion with corrupt-
+# record capture.
 # ===========================================================================
 
 @register(
@@ -1762,76 +1131,6 @@ def scan_csv_malformed_permissive(spark: SparkSession, sf_dir: str) -> DataFrame
         F.sum(F.when(~corrupt, F.col("n_chars"))).cast("bigint").alias(
             "good_chars"
         ),
-    )
-
-
-@register(
-    "lineitem_quantity_cusum_shift",
-    oracle="""
-WITH daily AS (
-  -- l_shipdate IS NOT NULL: a daily control chart has no seat for
-  -- "no day" (and the oracle engine's window ordering over a NULL
-  -- grouped date is unreliable — see orders_cumulative_share_monthly)
-  SELECT l_shipdate AS day, CAST(sum(l_quantity) AS DOUBLE) AS x
-  FROM lineitem WHERE l_shipdate IS NOT NULL GROUP BY l_shipdate
-),
-stats AS (
-  SELECT day, x, avg(x) OVER () AS mu, count(*) OVER () AS n_days
-  FROM daily
-),
-cusum AS (
-  SELECT day, n_days,
-         sum(x - mu) OVER (ORDER BY day
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c
-  FROM stats
-),
-ranked AS (
-  SELECT day AS shift_day, CAST(n_days AS BIGINT) AS n_days,
-         round(c, 4) AS cusum_value,
-         row_number() OVER (ORDER BY abs(c) DESC, day ASC) AS rn
-  FROM cusum
-)
-SELECT shift_day, n_days, cusum_value FROM ranked WHERE rn = 1
-""",
-)
-def lineitem_quantity_cusum_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUSUM changepoint detection on the daily shipped-quantity series:
-    the day where the cumulative deviation from the series mean peaks in
-    magnitude — the classic level-shift locator of statistical process
-    control. Aggregate-first: every window (mean, running sum, argmax
-    rank) runs over the days-sized relation; output is exactly one row
-    with a deterministic tie-break."""
-    t = Tables(spark, sf_dir)
-    daily = (
-        t.lineitem.where(F.col("l_shipdate").isNotNull())  # oracle mirrors
-        .groupBy(F.col("l_shipdate").alias("day"))
-        .agg(F.sum("l_quantity").cast("double").alias("x"))
-    )
-    w_all = Window.partitionBy()
-    stats = daily.select(
-        "day",
-        "x",
-        F.avg("x").over(w_all).alias("mu"),
-        F.count(F.lit(1)).over(w_all).alias("n_days"),
-    )
-    w_run = Window.orderBy("day").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cusum = stats.select(
-        "day",
-        "n_days",
-        F.sum(F.col("x") - F.col("mu")).over(w_run).alias("c"),
-    )
-    w_rank = Window.orderBy(F.abs(F.col("c")).desc(), F.asc("day"))
-    return (
-        cusum.select(
-            F.col("day").alias("shift_day"),
-            F.col("n_days").cast("bigint").alias("n_days"),
-            F.round("c", 4).alias("cusum_value"),
-            F.row_number().over(w_rank).alias("rn"),
-        )
-        .filter(F.col("rn") == 1)
-        .drop("rn")
     )
 
 
@@ -2113,132 +1412,9 @@ def sim_cosine_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # wave module round5i (formerly operators/round5i.py)
-# Round-5 ninth wave (SURVEY.md §2.Q, continued): duplicate-invoice
-# detection against injected duplicates, ship-latency quantiles per
-# supplier nation, and the string-formatting parity family.
+# Round-5 ninth wave (SURVEY.md §2.Q, continued): the string-formatting
+# parity family.
 # ===========================================================================
-
-@register(
-    "orders_duplicate_invoice_detect",
-    oracle="""
-WITH feed AS (
-  SELECT o_orderkey, o_custkey, o_totalprice,
-         date_trunc('day', o_orderdate) AS order_day
-  FROM orders
-  UNION ALL
-  SELECT o_orderkey + 1000000000, o_custkey, o_totalprice,
-         date_trunc('day', o_orderdate)
-  FROM orders WHERE o_orderkey % 53 = 0
-)
-SELECT o_custkey, order_day, o_totalprice AS amount,
-       count(*) AS n_claims,
-       min(o_orderkey) AS first_key, max(o_orderkey) AS last_key
-FROM feed
-GROUP BY o_custkey, order_day, o_totalprice
-HAVING count(*) >= 2
-""",
-)
-def orders_duplicate_invoice_detect(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Duplicate-invoice / double-ingestion screen: invoices agreeing on
-    (customer, day, exact amount) under DIFFERENT keys — the signature of
-    a replayed ingest batch or a double-submitted claim. Duplicates are
-    deterministically injected (every 53rd orderkey re-enters with a
-    shifted key, the quality_referential_integrity injection idiom) so
-    the detector's recall is verifiable. One hash-aggregate on the
-    composite key — amount is part of the grouping key, so identical
-    doubles collide exactly; no float comparison tolerance is involved."""
-    o = Tables(spark, sf_dir).orders
-    base = o.select(
-        "o_orderkey",
-        "o_custkey",
-        "o_totalprice",
-        F.date_trunc("day", "o_orderdate").alias("order_day"),
-    )
-    injected = base.filter(F.col("o_orderkey") % 53 == 0).withColumn(
-        "o_orderkey", F.col("o_orderkey") + 1_000_000_000
-    )
-    return (
-        base.unionAll(injected)
-        .groupBy("o_custkey", "order_day", "o_totalprice")
-        .agg(
-            F.count(F.lit(1)).alias("n_claims"),
-            F.min("o_orderkey").alias("first_key"),
-            F.max("o_orderkey").alias("last_key"),
-        )
-        .filter(F.col("n_claims") >= 2)
-        .select(
-            "o_custkey",
-            "order_day",
-            F.col("o_totalprice").alias("amount"),
-            "n_claims",
-            "first_key",
-            "last_key",
-        )
-    )
-
-
-@register(
-    "lineitem_ship_latency_by_nation",
-    oracle="""
-SELECT n_name,
-       count(*) AS n,
-       floor(CAST(sum(d) AS DOUBLE) / count(*) * 1000000 + 0.5)
-         / 1000000 AS avg_days,
-       CAST(quantile_cont(d, 0.5) AS DOUBLE) AS p50_days,
-       CAST(quantile_cont(d, 0.9) AS DOUBLE) AS p90_days
-FROM (
-  SELECT n_name,
-         date_diff('day', CAST(o_orderdate AS DATE),
-                   CAST(l_shipdate AS DATE)) AS d
-  FROM lineitem
-  JOIN orders   ON l_orderkey = o_orderkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation   ON s_nationkey = n_nationkey
-)
-GROUP BY n_name
-""",
-)
-def lineitem_ship_latency_by_nation(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Order-to-ship latency profile per supplier nation: count, mean,
-    and p50/p90 of the day delta between order placement and line
-    shipment — the fulfilment-SLA view. The only big-big shuffle is
-    lineitem ⋈ orders on orderkey; supplier and nation broadcast. The
-    mean is spelled as an explicit exact-integer sum / count double
-    division (identical operation order in both engines) and day deltas
-    are integers, so quantile interpolation lands on exact binary
-    midpoints."""
-    t = Tables(spark, sf_dir)
-    d = F.datediff(F.to_date("l_shipdate"), F.to_date("o_orderdate"))
-    joined = (
-        t.lineitem.join(
-            t.orders, F.col("l_orderkey") == F.col("o_orderkey")
-        )
-        .join(
-            broadcast_if_small(t.supplier, sf_dir, "supplier"),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-        )
-        .join(
-            F.broadcast(t.nation),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .select("n_name", d.alias("d"))
-    )
-    return joined.groupBy("n_name").agg(
-        F.count(F.lit(1)).alias("n"),
-        pround(
-            F.sum("d").cast("double") / F.count(F.lit(1))
-        ).alias("avg_days"),
-        F.expr(
-            "percentile_cont(0.5) WITHIN GROUP (ORDER BY d)"
-        ).alias("p50_days"),
-        F.expr(
-            "percentile_cont(0.9) WITHIN GROUP (ORDER BY d)"
-        ).alias("p90_days"),
-    )
 
 
 @register(
@@ -2667,8 +1843,7 @@ def win_range_numeric_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # wave module round5l (formerly operators/round5l.py)
 # Round-5 twelfth wave (SURVEY.md §2.Q, continued): embedding
-# label-confusion matrix, per-brand Pareto coverage depth, and IANA
-# timezone conversion parity.
+# label-confusion matrix and IANA timezone conversion parity.
 # ===========================================================================
 
 @register(
@@ -2770,81 +1945,6 @@ def embed_label_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "brand_pareto_coverage",
-    oracle="""
-WITH rev AS (
-  SELECT p_brand, l_partkey,
-         sum(CAST(l_extendedprice AS DECIMAL(38, 2))) AS r
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-  GROUP BY p_brand, l_partkey
-),
-ranked AS (
-  SELECT p_brand, l_partkey, r,
-         row_number() OVER (PARTITION BY p_brand
-                            ORDER BY r DESC, l_partkey) AS rn,
-         sum(r) OVER (PARTITION BY p_brand
-                      ORDER BY r DESC, l_partkey
-                      ROWS UNBOUNDED PRECEDING) AS cum,
-         sum(r) OVER (PARTITION BY p_brand) AS tot
-  FROM rev
-)
-SELECT p_brand,
-       count(*) AS n_parts,
-       CAST(min(CASE WHEN cum * 5 >= tot * 4 THEN rn END) AS BIGINT)
-         AS parts_to_80pct,
-       floor(CAST(max(CASE WHEN rn = 1 THEN r END) AS DOUBLE)
-             / CAST(max(tot) AS DOUBLE) * 1000000 + 0.5) / 1000000
-         AS top_part_share
-FROM ranked GROUP BY p_brand
-""",
-)
-def brand_pareto_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-brand Pareto depth: how many parts cover 80% of each brand's
-    revenue, plus the top part's share — the grouped twin of the global
-    lineitem_abc_pareto, answering "is this brand's demand concentrated
-    or long-tail?" per brand. Revenue accumulates in DECIMAL, and the
-    80% cut is the EXACT integer-free comparison cum·5 ≥ tot·4 — no
-    decimal division crosses engines (division scale rules differ);
-    the only double division (top share) is portable-6dp-rounded.
-    Brand-partitioned windows over the (brand, part)-sized aggregate."""
-    t = Tables(spark, sf_dir)
-    rev = (
-        t.lineitem.join(
-            broadcast_if_small(t.part.select("p_partkey", "p_brand"), sf_dir, "part"),
-            F.col("l_partkey") == F.col("p_partkey"),
-        )
-        .groupBy("p_brand", "l_partkey")
-        .agg(
-            F.sum(F.col("l_extendedprice").cast("decimal(38,2)")).alias("r")
-        )
-    )
-    ws = Window.partitionBy("p_brand").orderBy(F.desc("r"), F.asc("l_partkey"))
-    ranked = rev.select(
-        "p_brand",
-        "l_partkey",
-        "r",
-        F.row_number().over(ws).alias("rn"),
-        F.sum("r")
-        .over(ws.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .alias("cum"),
-        F.sum("r").over(Window.partitionBy("p_brand")).alias("tot"),
-    )
-    return ranked.groupBy("p_brand").agg(
-        F.count(F.lit(1)).alias("n_parts"),
-        F.min(
-            F.when(F.col("cum") * 5 >= F.col("tot") * 4, F.col("rn"))
-        )
-        .cast("bigint")
-        .alias("parts_to_80pct"),
-        pround(
-            F.max(F.when(F.col("rn") == 1, F.col("r")))
-            .cast("double")
-            / F.max("tot").cast("double")
-        ).alias("top_part_share"),
-    )
-
-
 _TZ_ZONES = ["America/New_York", "Asia/Tokyo", "Europe/Berlin"]
 
 
@@ -2890,73 +1990,9 @@ def fn_timezone_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # wave module round5m (formerly operators/round5m.py)
-# Round-5 thirteenth wave (SURVEY.md §2.Q, continued): supplier
-# market-concentration HHI and binary-payload exact dedup over the
-# multimodal column.
+# Round-5 thirteenth wave (SURVEY.md §2.Q, continued): binary-payload
+# exact dedup over the multimodal column.
 # ===========================================================================
-
-@register(
-    "supplier_hhi_by_nation",
-    oracle="""
-WITH rev AS (
-  SELECT n_name, l_suppkey,
-         CAST(sum(CAST(l_extendedprice AS DECIMAL(38, 2)))
-              AS DECIMAL(38, 2)) AS r
-  FROM lineitem
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation   ON s_nationkey = n_nationkey
-  GROUP BY n_name, l_suppkey
-)
-SELECT n_name,
-       count(*) AS n_suppliers,
-       floor(CAST(sum(r * r) AS DOUBLE)
-             / CAST(CAST(sum(r) AS DECIMAL(38, 2))
-                    * CAST(sum(r) AS DECIMAL(38, 2)) AS DOUBLE)
-             * 1000000 + 0.5) / 1000000 AS hhi
-FROM rev GROUP BY n_name
-""",
-)
-def supplier_hhi_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Herfindahl-Hirschman market-concentration index per supplier
-    nation: Σᵢ(rᵢ/T)² over each nation's suppliers — 1/n for perfectly
-    split markets, →1 for monopoly; the antitrust-style twin of
-    supplier_revenue_gini. Float discipline: revenues and BOTH
-    quadratic forms (Σr², T²) accumulate in DECIMAL — exact, order-
-    independent — so the only IEEE operation is one final division,
-    portable-6dp-rounded. DECIMAL(38,2) is the portable width window:
-    at 18 digits DuckDB multiplies in int64 and OVERFLOWS on real
-    revenue totals (measured), while ≥19 digits are hugeint-backed;
-    on the Spark side the declared (39,4) product narrows to the
-    38-precision cap without touching these values' 24 significant
-    digits. One big join keyed on suppkey, dims broadcast,
-    nations-sized output."""
-    t = Tables(spark, sf_dir)
-    rev = (
-        t.lineitem.join(
-            broadcast_if_small(
-                t.supplier.select("s_suppkey", "s_nationkey"), sf_dir, "supplier"
-            ),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-        )
-        .join(
-            F.broadcast(t.nation),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .groupBy("n_name", "l_suppkey")
-        .agg(
-            F.sum(F.col("l_extendedprice").cast("decimal(38,2)"))
-            .cast("decimal(38,2)")
-            .alias("r")
-        )
-    )
-    tot = F.sum("r").cast("decimal(38,2)")
-    return rev.groupBy("n_name").agg(
-        F.count(F.lit(1)).alias("n_suppliers"),
-        pround(
-            F.sum(F.col("r") * F.col("r")).cast("double")
-            / (tot * tot).cast("double")
-        ).alias("hhi"),
-    )
 
 
 _PAYLOAD_PREFIX = 64
@@ -3022,8 +2058,8 @@ def multimodal_payload_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # wave module round5n (formerly operators/round5n.py)
 # Round-5 fourteenth wave (SURVEY.md §2.Q, continued): Arrow-optimized
-# Python UDF surface, write-mode semantics matrix, the NOT IN + NULL
-# three-valued-logic trap pinned, and a data-contract rule check.
+# Python UDF surface, write-mode semantics matrix, and a data-contract
+# rule check.
 # ===========================================================================
 
 @register(
@@ -3092,39 +2128,6 @@ def sink_write_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     except Exception:
         rows.append(("error_caught", 1))
     return spark.createDataFrame(rows, "step string, rows_after bigint")
-
-
-_NOT_IN_SQL = """
-WITH keys AS (
-  SELECT CASE WHEN c_custkey % 97 = 0 THEN NULL ELSE c_custkey END AS k
-  FROM customer
-)
-SELECT
-  (SELECT count(*) FROM orders WHERE o_custkey IN (SELECT k FROM keys))
-    AS n_in,
-  (SELECT count(*) FROM orders WHERE o_custkey NOT IN (SELECT k FROM keys))
-    AS n_not_in,
-  (SELECT count(*) FROM orders o
-   WHERE NOT EXISTS (SELECT 1 FROM keys WHERE k = o.o_custkey))
-    AS n_not_exists,
-  (SELECT count(*) FROM orders) AS n_total
-"""
-
-
-sql_op(
-    "subquery_not_in_null_trap",
-    spark_sql=_NOT_IN_SQL,
-    oracle=_NOT_IN_SQL,
-    doc="""The NOT IN + NULL three-valued-logic trap, pinned as executable
-    documentation: when the subquery list contains a single NULL,
-    `x NOT IN (...)` is never TRUE (x <> NULL is UNKNOWN), so n_not_in
-    collapses to 0 while the NOT EXISTS spelling counts real
-    non-members — the most common silent-wrong-answer rewrite in
-    analytics SQL. Both engines must agree on all four counts
-    (membership, the collapsed NOT IN, the anti-join truth, total).
-    Spark plans the NOT IN as a null-aware anti join — same SQL text on
-    both sides via the registered-view entry point (§3.2 EP2).""",
-)
 
 
 @register(
@@ -4497,111 +3500,10 @@ def multimodal_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # wave module round5v (formerly operators/round5v.py)
-# Round-5 twenty-second wave (SURVEY.md §2.Q, continued): ABC-XYZ
-# inventory classification, maximal-marginal-relevance diversified
-# selection, single-source supplier risk, and a partition-invariance
-# determinism proof.
+# Round-5 twenty-second wave (SURVEY.md §2.Q, continued):
+# maximal-marginal-relevance diversified selection and a
+# partition-invariance determinism proof.
 # ===========================================================================
-
-@register(
-    "lineitem_abc_xyz_matrix",
-    oracle="""
-WITH monthly AS (
-  SELECT l_partkey, date_trunc('month', l_shipdate) AS m,
-         CAST(sum(CAST(l_quantity AS DECIMAL(38, 2))) AS DOUBLE) AS q
-  FROM lineitem GROUP BY 1, 2
-),
-per_part AS (
-  SELECT l_partkey,
-         count(*) AS n_months,
-         CAST(sum(CAST(q AS DECIMAL(38, 2))) AS DOUBLE) AS sq,
-         CAST(sum(CAST(q AS DECIMAL(38, 2)) * CAST(q AS DECIMAL(38, 2)))
-              AS DOUBLE) AS sq2,
-         CAST(sum(CAST(q AS DECIMAL(38, 2))) AS DECIMAL(38, 2)) AS total_q
-  FROM monthly GROUP BY l_partkey
-),
-ranked AS (
-  SELECT l_partkey, n_months, sq, sq2, total_q,
-         sum(total_q) OVER (ORDER BY total_q DESC, l_partkey
-                            ROWS UNBOUNDED PRECEDING) AS cum,
-         sum(total_q) OVER () AS tot
-  FROM per_part
-),
-classed AS (
-  SELECT CASE WHEN cum * 5 <= tot * 4 THEN 'A'
-              WHEN cum * 20 <= tot * 19 THEN 'B'
-              ELSE 'C' END AS abc,
-         CASE WHEN n_months < 2 THEN 'Z'
-              WHEN sqrt((sq2 - sq * sq / n_months) / (n_months - 1))
-                   / (sq / n_months) < 0.25 THEN 'X'
-              WHEN sqrt((sq2 - sq * sq / n_months) / (n_months - 1))
-                   / (sq / n_months) < 0.5 THEN 'Y'
-              ELSE 'Z' END AS xyz
-  FROM ranked
-)
-SELECT abc, xyz, count(*) AS n_parts
-FROM classed GROUP BY abc, xyz
-""",
-)
-def lineitem_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ABC-XYZ inventory classification — the planner's 3×3 matrix:
-    ABC = cumulative-volume tiers (top 80% / next 15% / tail, cut by
-    EXACT decimal comparisons cum·5 ≤ tot·4 — no division), XYZ =
-    demand-variability tiers from the coefficient of variation of
-    monthly quantities (CV < 0.25 steady, < 0.5 seasonal, else
-    erratic; fewer than 2 observed months is Z by definition). CV is
-    derived from exact DECIMAL power sums with identical IEEE
-    operation order, and the classification thresholds are pure
-    comparisons, so no rounding surface exists. Windows run over the
-    parts-sized aggregate; output is ≤9 cells at any scale."""
-    t = Tables(spark, sf_dir)
-    monthly = (
-        t.lineitem.groupBy(
-            "l_partkey", F.date_trunc("month", "l_shipdate").alias("m")
-        )
-        .agg(
-            F.sum(F.col("l_quantity").cast("decimal(38,2)"))
-            .cast("double")
-            .alias("q")
-        )
-    )
-    qd = F.col("q").cast("decimal(38,2)")
-    per_part = monthly.groupBy("l_partkey").agg(
-        F.count(F.lit(1)).alias("n_months"),
-        F.sum(qd).cast("double").alias("sq"),
-        F.sum(qd * qd).cast("double").alias("sq2"),
-        F.sum(qd).cast("decimal(38,2)").alias("total_q"),
-    )
-    w_cum = Window.orderBy(F.desc("total_q"), F.asc("l_partkey")).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    ranked = per_part.select(
-        "*",
-        F.sum("total_q").over(w_cum).alias("cum"),
-        F.sum("total_q").over(
-            Window.partitionBy()
-        ).alias("tot"),
-    )
-    cv = F.sqrt(
-        (F.col("sq2") - F.col("sq") * F.col("sq") / F.col("n_months"))
-        / (F.col("n_months") - 1)
-    ) / (F.col("sq") / F.col("n_months"))
-    abc = (
-        F.when(F.col("cum") * 5 <= F.col("tot") * 4, "A")
-        .when(F.col("cum") * 20 <= F.col("tot") * 19, "B")
-        .otherwise("C")
-    )
-    xyz = (
-        F.when(F.col("n_months") < 2, "Z")
-        .when(cv < 0.25, "X")
-        .when(cv < 0.5, "Y")
-        .otherwise("Z")
-    )
-    return (
-        ranked.select(abc.alias("abc"), xyz.alias("xyz"))
-        .groupBy("abc", "xyz")
-        .agg(F.count(F.lit(1)).alias("n_parts"))
-    )
 
 
 _MMR_LAMBDA = 0.7
@@ -4761,50 +3663,6 @@ def embed_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "part_single_source_risk",
-    oracle="""
-WITH sourcing AS (
-  SELECT l_partkey, count(DISTINCT l_suppkey) AS n_suppliers
-  FROM lineitem GROUP BY l_partkey
-),
-tagged AS (
-  SELECT p.p_brand, s.n_suppliers
-  FROM sourcing s JOIN part p ON s.l_partkey = p.p_partkey
-)
-SELECT p_brand,
-       count(*) AS n_parts,
-       CAST(sum(CASE WHEN n_suppliers = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         AS single_sourced,
-       floor(CAST(sum(CASE WHEN n_suppliers = 1 THEN 1 ELSE 0 END)
-                  AS DOUBLE) / count(*) * 1000000 + 0.5) / 1000000
-         AS single_source_share
-FROM tagged GROUP BY p_brand
-""",
-)
-def part_single_source_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-source supply risk per brand: parts whose entire observed
-    volume came from ONE supplier — the supply-chain fragility screen
-    (one supplier outage stops the part). One distinct-count aggregate
-    keyed on partkey, brand dimension broadcast, brands-sized output."""
-    t = Tables(spark, sf_dir)
-    sourcing = t.lineitem.groupBy("l_partkey").agg(
-        F.countDistinct("l_suppkey").alias("n_suppliers")
-    )
-    tagged = sourcing.join(
-        broadcast_if_small(t.part.select("p_partkey", "p_brand"), sf_dir, "part"),
-        F.col("l_partkey") == F.col("p_partkey"),
-    )
-    single = F.sum(F.when(F.col("n_suppliers") == 1, 1).otherwise(0))
-    return tagged.groupBy("p_brand").agg(
-        F.count(F.lit(1)).alias("n_parts"),
-        single.cast("bigint").alias("single_sourced"),
-        pround(single.cast("double") / F.count(F.lit(1))).alias(
-            "single_source_share"
-        ),
-    )
-
-
-@register(
     "dedup_partition_invariance",
     oracle="""
 WITH hashed AS (SELECT doc_id, md5(text) AS h FROM documents),
@@ -4864,8 +3722,7 @@ def dedup_partition_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # wave module round5w (formerly operators/round5w.py)
 # Round-5 twenty-third wave (SURVEY.md §2.Q, continued): partial-
-# aggregation merge proof, training-shard manifest build, and median-split
-# quadrant classification.
+# aggregation merge proof and training-shard manifest build.
 # ===========================================================================
 
 @register(
@@ -5036,86 +3893,11 @@ def pipeline_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "supplier_quadrant_classification",
-    oracle="""
-WITH vol AS (
-  SELECT s_suppkey, s_acctbal,
-         CAST(sum(CAST(l_extendedprice AS DECIMAL(38, 2))) AS DOUBLE)
-           AS volume
-  FROM supplier JOIN lineitem ON s_suppkey = l_suppkey
-  GROUP BY s_suppkey, s_acctbal
-),
-cuts AS (
-  SELECT CAST(quantile_cont(s_acctbal, 0.5) AS DOUBLE) AS bal_med,
-         CAST(quantile_cont(volume, 0.5) AS DOUBLE) AS vol_med
-  FROM vol
-)
-SELECT CASE WHEN s_acctbal >= bal_med AND volume >= vol_med
-            THEN 'strong_partner'
-            WHEN s_acctbal >= bal_med THEN 'underutilized'
-            WHEN volume >= vol_med THEN 'exposure_risk'
-            ELSE 'marginal' END AS quadrant,
-       count(*) AS n_suppliers,
-       min(s_suppkey) AS example_supplier
-FROM vol CROSS JOIN cuts
-GROUP BY 1
-""",
-)
-def supplier_quadrant_classification(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Median-split quadrant classification of suppliers on (account
-    balance × traded volume): strong partners, underutilized capital,
-    volume-on-weak-balance exposure risk, and the marginal tail — the
-    2×2 a procurement review starts from. Both medians interpolate on
-    exact inputs and broadcast as one cut row; classification is pure
-    comparison. DECIMAL volume sums keep the median's input exact."""
-    t = Tables(spark, sf_dir)
-    vol = (
-        t.supplier.join(
-            t.lineitem, F.col("s_suppkey") == F.col("l_suppkey")
-        )
-        .groupBy("s_suppkey", "s_acctbal")
-        .agg(
-            F.sum(F.col("l_extendedprice").cast("decimal(38,2)"))
-            .cast("double")
-            .alias("volume")
-        )
-    )
-    cuts = vol.agg(
-        F.expr(
-            "percentile_cont(0.5) WITHIN GROUP (ORDER BY s_acctbal)"
-        ).alias("bal_med"),
-        F.expr(
-            "percentile_cont(0.5) WITHIN GROUP (ORDER BY volume)"
-        ).alias("vol_med"),
-    )
-    quadrant = (
-        F.when(
-            (F.col("s_acctbal") >= F.col("bal_med"))
-            & (F.col("volume") >= F.col("vol_med")),
-            "strong_partner",
-        )
-        .when(F.col("s_acctbal") >= F.col("bal_med"), "underutilized")
-        .when(F.col("volume") >= F.col("vol_med"), "exposure_risk")
-        .otherwise("marginal")
-    )
-    return (
-        vol.crossJoin(F.broadcast(cuts))
-        .groupBy(quadrant.alias("quadrant"))
-        .agg(
-            F.count(F.lit(1)).alias("n_suppliers"),
-            F.min("s_suppkey").alias("example_supplier"),
-        )
-    )
-
-
 # ===========================================================================
 # wave module round5x (formerly operators/round5x.py)
 # Round-5 twenty-fourth wave (SURVEY.md §2.Q, continued): vector-index
-# upsert refresh, two-sample Kolmogorov-Smirnov drift test, keyset
-# (seek) pagination, and fiscal-calendar rollups.
+# upsert refresh, two-sample Kolmogorov-Smirnov drift test, and keyset
+# (seek) pagination.
 # ===========================================================================
 
 @register(
@@ -5378,55 +4160,11 @@ def sort_keyset_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "orders_fiscal_calendar_rollup",
-    oracle="""
-WITH tagged AS (
-  -- fiscal year starts Feb 1: FY(x) = calendar year of (date - 1 month)
-  SELECT year(o_orderdate - INTERVAL 1 MONTH) AS fiscal_year,
-         CAST((month(o_orderdate - INTERVAL 1 MONTH) - 1) // 3 + 1 AS INT)
-           AS fiscal_quarter,
-         CAST(o_totalprice AS DECIMAL(38, 2)) AS p
-  FROM orders
-)
-SELECT fiscal_year, fiscal_quarter,
-       count(*) AS n_orders,
-       CAST(round(sum(p), 2) AS DOUBLE) AS revenue
-FROM tagged GROUP BY fiscal_year, fiscal_quarter
-""",
-)
-def orders_fiscal_calendar_rollup(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Fiscal-calendar rollup for a February-start fiscal year: FY and
-    fiscal quarter derived by the shift-then-extract rule (subtract one
-    month, then use calendar year/quarter arithmetic) — the offset-
-    calendar family every finance rollup needs, where naive year() per
-    row silently books January into the wrong FY. Pure expressions +
-    one aggregate; DECIMAL revenue."""
-    o = Tables(spark, sf_dir).orders
-    shifted = F.col("o_orderdate") - F.expr("INTERVAL 1 MONTH")
-    return (
-        o.select(
-            F.year(shifted).alias("fiscal_year"),
-            (((F.month(shifted) - 1) / 3).cast("int") + 1).alias(
-                "fiscal_quarter"
-            ),
-            F.col("o_totalprice").cast("decimal(38,2)").alias("p"),
-        )
-        .groupBy("fiscal_year", "fiscal_quarter")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum("p"), 2).cast("double").alias("revenue"),
-        )
-    )
-
-
 # ===========================================================================
 # wave module round5y (formerly operators/round5y.py)
 # Round-5 twenty-fifth wave (SURVEY.md §2.Q, continued): business-day
-# latency arithmetic, min-max feature scaling with invariant checks,
-# readability scoring, and YTD-vs-prior-year alignment.
+# latency arithmetic, min-max feature scaling with invariant checks, and
+# readability scoring.
 # ===========================================================================
 
 @register(
@@ -5636,82 +4374,6 @@ def text_readability_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         pround(
             F.sum(F.col("grade").cast("decimal(38,6)")).cast("double") / n
         ).alias("mean_grade"),
-    )
-
-
-@register(
-    "orders_ytd_vs_prior_year",
-    oracle="""
-WITH daily AS (
-  SELECT year(o_orderdate) AS y, dayofyear(o_orderdate) AS doy,
-         sum(CAST(o_totalprice AS DECIMAL(38, 2))) AS rev
-  FROM orders GROUP BY 1, 2
-),
-ytd AS (
-  SELECT y, doy,
-         sum(rev) OVER (PARTITION BY y ORDER BY doy
-                        ROWS UNBOUNDED PRECEDING) AS ytd_rev
-  FROM daily
-),
-paired AS (
-  SELECT c.y, c.doy,
-         CAST(round(c.ytd_rev, 2) AS DOUBLE) AS ytd_rev,
-         CAST(round(p.ytd_rev, 2) AS DOUBLE) AS prior_ytd_rev
-  FROM ytd c LEFT JOIN ytd p ON p.y = c.y - 1 AND p.doy = c.doy
-)
-SELECT y, doy, ytd_rev, prior_ytd_rev,
-       CASE WHEN prior_ytd_rev IS NOT NULL THEN
-         floor((ytd_rev - prior_ytd_rev) / prior_ytd_rev * 1000000 + 0.5)
-           / 1000000
-       END AS yoy_ytd_growth
-FROM paired
-WHERE doy <= 28 AND y >= 1996
-""",
-)
-def orders_ytd_vs_prior_year(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Year-to-date revenue aligned against the SAME day-of-year of the
-    prior year — the finance dashboard's "are we ahead of last year"
-    curve, which a plain cumulative sum can't answer without the
-    day-of-year self-join alignment. Cumulative windows run over the
-    years×days aggregate (broadcast-sized); the prior-year pairing is
-    a keyed self-join on (y−1, doy); DECIMAL accumulations, one
-    rounded growth division. Clamped to the first 28 days × full
-    prior years so leap-day and partial-first-year artifacts stay out
-    of the comparison."""
-    o = Tables(spark, sf_dir).orders
-    daily = o.groupBy(
-        F.year("o_orderdate").alias("y"),
-        F.dayofyear("o_orderdate").alias("doy"),
-    ).agg(F.sum(F.col("o_totalprice").cast("decimal(38,2)")).alias("rev"))
-    w = Window.partitionBy("y").orderBy("doy").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    ytd = daily.select(
-        "y", "doy", F.sum("rev").over(w).alias("ytd_rev_d")
-    )
-    cur = ytd.select(
-        "y", "doy", F.round("ytd_rev_d", 2).cast("double").alias("ytd_rev")
-    )
-    prior = ytd.select(
-        (F.col("y") + 1).alias("y"),
-        "doy",
-        F.round("ytd_rev_d", 2).cast("double").alias("prior_ytd_rev"),
-    )
-    growth = pround(
-        (F.col("ytd_rev") - F.col("prior_ytd_rev")) / F.col("prior_ytd_rev")
-    )
-    return (
-        cur.join(prior, ["y", "doy"], "left")
-        .filter((F.col("doy") <= 28) & (F.col("y") >= 1996))
-        .select(
-            "y",
-            "doy",
-            "ytd_rev",
-            "prior_ytd_rev",
-            F.when(F.col("prior_ytd_rev").isNotNull(), growth).alias(
-                "yoy_ytd_growth"
-            ),
-        )
     )
 
 

@@ -27,83 +27,9 @@ import glob
 
 # ===========================================================================
 # wave module round6a (formerly operators/round6a.py)
-# Round-5 twenty-seventh wave (SURVEY.md §2.Q, continued): a Laspeyres
-# price index, sink file-layout auditing, and incremental batch novelty.
+# Round-5 twenty-seventh wave (SURVEY.md §2.Q, continued): sink
+# file-layout auditing and incremental batch novelty.
 # ===========================================================================
-
-@register(
-    "lineitem_price_index",
-    oracle="""
-WITH yearly AS (
-  SELECT l_partkey, year(l_shipdate) AS y,
-         sum(CAST(l_quantity AS DECIMAL(38, 2))) AS q,
-         sum(CAST(l_extendedprice AS DECIMAL(38, 2))) AS spend
-  FROM lineitem WHERE year(l_shipdate) IN (1995, 1996)
-  GROUP BY 1, 2
-),
-paired AS (
-  SELECT b.l_partkey,
-         CAST(b.spend AS DOUBLE) / CAST(b.q AS DOUBLE) AS p0,
-         CAST(c.spend AS DOUBLE) / CAST(c.q AS DOUBLE) AS p1,
-         CAST(b.q AS DOUBLE) AS q0
-  FROM yearly b JOIN yearly c
-    ON b.l_partkey = c.l_partkey AND b.y = 1995 AND c.y = 1996
-)
-SELECT count(*) AS n_parts_priced,
-       floor(CAST(sum(CAST(floor(p1 * q0 * 1000000 + 0.5) / 1000000
-                           AS DECIMAL(38, 6))) AS DOUBLE)
-             / CAST(sum(CAST(floor(p0 * q0 * 1000000 + 0.5) / 1000000
-                             AS DECIMAL(38, 6))) AS DOUBLE)
-             * 1000000 + 0.5) / 1000000 AS laspeyres_index
-FROM paired
-""",
-)
-def lineitem_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Laspeyres price index 1995→1996: Σp₁q₀ / Σp₀q₀ over parts traded
-    in BOTH years, with base-year quantities as the fixed basket — the
-    inflation-style unit-price drift measure a procurement or pricing
-    team tracks. Unit prices are spend/quantity from exact DECIMAL
-    sums; each p·q₀ term is portable-rounded to 6dp and accumulated in
-    DECIMAL (the order-independent-sum idiom), leaving ONE final
-    division. The year self-join is parts-keyed."""
-    li = Tables(spark, sf_dir).lineitem
-    yearly = (
-        li.filter(F.year("l_shipdate").isin(1995, 1996))
-        .groupBy("l_partkey", F.year("l_shipdate").alias("y"))
-        .agg(
-            F.sum(F.col("l_quantity").cast("decimal(38,2)")).alias("q"),
-            F.sum(F.col("l_extendedprice").cast("decimal(38,2)")).alias(
-                "spend"
-            ),
-        )
-    )
-    # try_divide: an all-zero-quantity (part, year) cell has no unit
-    # price — NULL propagates through the index exactly like the
-    # oracle's x/0 -> NULL
-    base = yearly.filter(F.col("y") == 1995).select(
-        "l_partkey",
-        F.try_divide(
-            F.col("spend").cast("double"), F.col("q").cast("double")
-        ).alias("p0"),
-        F.col("q").cast("double").alias("q0"),
-    )
-    cur = yearly.filter(F.col("y") == 1996).select(
-        "l_partkey",
-        F.try_divide(
-            F.col("spend").cast("double"), F.col("q").cast("double")
-        ).alias("p1"),
-    )
-    paired = base.join(cur, "l_partkey")
-    num = F.sum(
-        pround(F.col("p1") * F.col("q0")).cast("decimal(38,6)")
-    ).cast("double")
-    den = F.sum(
-        pround(F.col("p0") * F.col("q0")).cast("decimal(38,6)")
-    ).cast("double")
-    return paired.agg(
-        F.count(F.lit(1)).alias("n_parts_priced"),
-        pround(num / den).alias("laspeyres_index"),
-    )
 
 
 @register(
@@ -221,8 +147,8 @@ def text_batch_novelty_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # wave module round6b (formerly operators/round6b.py)
-# Round-5 twenty-eighth wave (SURVEY.md §2.Q, continued): log2
-# heavy-tail histogram and a composite supplier scorecard.
+# Round-5 twenty-eighth wave (SURVEY.md §2.Q, continued): a log2
+# heavy-tail histogram.
 # ===========================================================================
 
 @register(
@@ -254,96 +180,6 @@ def agg_log2_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.round(F.min("o_totalprice"), 2).cast("double").alias("bin_min"),
         F.round(F.max("o_totalprice"), 2).cast("double").alias("bin_max"),
-    )
-
-
-@register(
-    "supplier_scorecard_composite",
-    oracle="""
-WITH metrics AS (
-  SELECT l_suppkey,
-         CAST(sum(CAST(l_extendedprice AS DECIMAL(38, 2))) AS DOUBLE)
-           AS volume,
-         CAST(sum(date_diff('day', CAST(o_orderdate AS DATE),
-                            CAST(l_shipdate AS DATE))) AS DOUBLE)
-           / count(*) AS mean_latency
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-  GROUP BY l_suppkey
-),
-cuts AS (
-  SELECT min(volume) AS vlo, max(volume) AS vhi,
-         min(mean_latency) AS llo, max(mean_latency) AS lhi
-  FROM metrics
-),
-scored AS (
-  SELECT l_suppkey,
-         floor((0.6 * ((volume - vlo) / (vhi - vlo))
-                + 0.4 * (1 - (mean_latency - llo) / (lhi - llo)))
-               * 1000000 + 0.5) / 1000000 AS score
-  FROM metrics CROSS JOIN cuts
-)
-SELECT l_suppkey, score, CAST(rn AS BIGINT) AS rank FROM (
-  SELECT l_suppkey, score,
-         row_number() OVER (ORDER BY score DESC, l_suppkey) AS rn
-  FROM scored)
-WHERE rn <= 10
-""",
-)
-def supplier_scorecard_composite(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Composite supplier scorecard: min-max-normalized volume (higher
-    better, weight 0.6) blended with normalized mean ship latency
-    (lower better, weight 0.4), top-10 ranked — the weighted-KPI
-    scorecard pattern every vendor/partner review runs, built from
-    the fn_minmax_scale_check normalization and the rounded-before-
-    rank determinism rule. One orderkey join, suppliers-sized metric
-    relation, broadcast cuts."""
-    t = Tables(spark, sf_dir)
-    metrics = (
-        t.lineitem.join(
-            t.orders, F.col("l_orderkey") == F.col("o_orderkey")
-        )
-        .groupBy("l_suppkey")
-        .agg(
-            F.sum(F.col("l_extendedprice").cast("decimal(38,2)"))
-            .cast("double")
-            .alias("volume"),
-            (
-                F.sum(
-                    F.datediff(
-                        F.to_date("l_shipdate"), F.to_date("o_orderdate")
-                    )
-                ).cast("double")
-                / F.count(F.lit(1))
-            ).alias("mean_latency"),
-        )
-    )
-    cuts = metrics.agg(
-        F.min("volume").alias("vlo"),
-        F.max("volume").alias("vhi"),
-        F.min("mean_latency").alias("llo"),
-        F.max("mean_latency").alias("lhi"),
-    )
-    score = pround(
-        0.6 * ((F.col("volume") - F.col("vlo")) / (F.col("vhi") - F.col("vlo")))
-        + 0.4
-        * (
-            1
-            - (F.col("mean_latency") - F.col("llo"))
-            / (F.col("lhi") - F.col("llo"))
-        )
-    )
-    scored = metrics.crossJoin(F.broadcast(cuts)).select(
-        "l_suppkey", score.alias("score")
-    )
-    w = Window.orderBy(F.desc("score"), F.asc("l_suppkey"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 10)
-        .select(
-            "l_suppkey", "score", F.col("rn").cast("bigint").alias("rank")
-        )
     )
 
 
@@ -663,66 +499,9 @@ def dedup_representative_selection(
 
 # ===========================================================================
 # wave module round6d (formerly operators/round6d.py)
-# Round-5 thirtieth wave (SURVEY.md §2.Q, continued): moving annual
-# total and token-length histograms.
+# Round-5 thirtieth wave (SURVEY.md §2.Q, continued): token-length
+# histograms.
 # ===========================================================================
-
-@register(
-    "orders_moving_annual_total",
-    oracle="""
-WITH monthly AS (
-  -- o_orderdate IS NOT NULL: a NULL month has no seat in a trailing
-  -- 12-month frame (see orders_cumulative_share_monthly)
-  SELECT date_trunc('month', o_orderdate) AS m,
-         sum(CAST(o_totalprice AS DECIMAL(38, 2))) AS rev,
-         count(*) AS n
-  FROM orders WHERE o_orderdate IS NOT NULL GROUP BY 1
-),
-indexed AS (
-  SELECT m, rev, n,
-         row_number() OVER (ORDER BY m) AS idx
-  FROM monthly
-)
-SELECT m,
-       CAST(round(sum(rev) OVER (ORDER BY idx
-              ROWS BETWEEN 11 PRECEDING AND CURRENT ROW), 2) AS DOUBLE)
-         AS mat_revenue,
-       CAST(sum(n) OVER (ORDER BY idx
-              ROWS BETWEEN 11 PRECEDING AND CURRENT ROW) AS BIGINT)
-         AS mat_orders,
-       CAST(count(*) OVER (ORDER BY idx
-              ROWS BETWEEN 11 PRECEDING AND CURRENT ROW) AS INT)
-         AS months_in_window
-FROM indexed
-""",
-)
-def orders_moving_annual_total(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Moving Annual Total — trailing-12-month revenue per month, the
-    de-seasonalized trend line commercial reporting defaults to (each
-    point contains every season exactly once, so seasonality cancels
-    without decomposition). A months-indexed ROWS frame over the
-    monthly aggregate (contiguous months in this corpus make the
-    row frame ≡ a month-range frame); months_in_window exposes the
-    warm-up period where the window is still partial. DECIMAL sums,
-    broadcast-sized relation at any order volume."""
-    o = Tables(spark, sf_dir).orders.where(F.col("o_orderdate").isNotNull())
-    monthly = o.groupBy(
-        F.date_trunc("month", "o_orderdate").alias("m")
-    ).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(38,2)")).alias("rev"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    w_idx = Window.orderBy("m")
-    indexed = monthly.withColumn("idx", F.row_number().over(w_idx))
-    w_mat = Window.orderBy("idx").rowsBetween(-11, Window.currentRow)
-    return indexed.select(
-        "m",
-        F.round(F.sum("rev").over(w_mat), 2)
-        .cast("double")
-        .alias("mat_revenue"),
-        F.sum("n").over(w_mat).cast("bigint").alias("mat_orders"),
-        F.count(F.lit(1)).over(w_mat).cast("int").alias("months_in_window"),
-    )
 
 
 @register(
@@ -982,68 +761,9 @@ def scan_csv_column_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # wave module round6f (formerly operators/round6f.py)
-# Round-5 thirty-second wave (SURVEY.md §2.Q, continued): the nation
-# trade-flow matrix, NULL ordering semantics, and the contiguous-prefix
-# resume watermark.
+# Round-5 thirty-second wave (SURVEY.md §2.Q, continued): NULL ordering
+# semantics and the contiguous-prefix resume watermark.
 # ===========================================================================
-
-@register(
-    "trade_flow_nation_matrix",
-    oracle="""
-SELECT sn.n_name AS supplier_nation, cn.n_name AS customer_nation,
-       count(*) AS n_lines,
-       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(38, 2))), 2)
-            AS DOUBLE) AS flow_value
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation sn ON s_nationkey = sn.n_nationkey
-JOIN nation cn ON c_nationkey = cn.n_nationkey
-GROUP BY sn.n_name, cn.n_name
-""",
-)
-def trade_flow_nation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full supplier-nation × customer-nation trade-flow matrix —
-    the generalization of TPC-H Q7's two-nation volume query to all
-    n² flows at once, feeding gravity models and trade-balance
-    reports. One big-big join (lineitem ⋈ orders on orderkey); every
-    dimension — supplier, customer, and BOTH nation roles (aliased
-    separately, the self-joined-dimension pattern) — broadcasts.
-    Output bounded by nations² at any volume; DECIMAL flow sums."""
-    t = Tables(spark, sf_dir)
-    sn = t.nation.select(
-        F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supplier_nation")
-    )
-    cn = t.nation.select(
-        F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("customer_nation")
-    )
-    return (
-        t.lineitem.join(t.orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(
-            broadcast_if_small(
-                t.supplier.select("s_suppkey", "s_nationkey"), sf_dir, "supplier"
-            ),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-        )
-        .join(
-            broadcast_if_small(
-                t.customer.select("c_custkey", "c_nationkey"), sf_dir, "customer"
-            ),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("sn_key"))
-        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn_key"))
-        .groupBy("supplier_nation", "customer_nation")
-        .agg(
-            F.count(F.lit(1)).alias("n_lines"),
-            F.round(
-                F.sum(F.col("l_extendedprice").cast("decimal(38,2)")), 2
-            )
-            .cast("double")
-            .alias("flow_value"),
-        )
-    )
 
 
 @register(
@@ -1343,85 +1063,9 @@ def text_topk_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # wave module round6h (formerly operators/round6h.py)
-# Round-5 thirty-fourth wave (SURVEY.md §2.Q, continued): sweep-line
-# open-order backlog, weighted PageRank over the nation trade graph,
-# categorical mix-shift drift, and contingency-cell residuals.
+# Round-5 thirty-fourth wave (SURVEY.md §2.Q, continued): weighted
+# PageRank over the nation trade graph and contingency-cell residuals.
 # ===========================================================================
-
-@register(
-    "orders_open_backlog_sweepline",
-    oracle="""
-WITH comp AS (
-  SELECT l_orderkey AS ok, date_trunc('month', max(l_shipdate)) AS done_m
-  FROM lineitem GROUP BY l_orderkey
-),
-od AS (
-  -- both months NOT NULL: an order with an unknown start or completion
-  -- month cannot be swept onto the calendar line
-  SELECT date_trunc('month', o_orderdate) AS start_m, done_m,
-         CAST(o_totalprice AS DECIMAL(38,2)) AS v
-  FROM orders JOIN comp ON o_orderkey = ok
-  WHERE o_orderdate IS NOT NULL AND done_m IS NOT NULL
-),
-deltas AS (
-  SELECT start_m AS m, 1 AS d, v FROM od
-  UNION ALL
-  SELECT done_m AS m, -1 AS d, -v AS v FROM od
-),
-agg AS (SELECT m, sum(d) AS dn, sum(v) AS dv FROM deltas GROUP BY m)
-SELECT CAST(m AS TIMESTAMP) AS month,
-       CAST(sum(dn) OVER w AS BIGINT) AS open_orders,
-       CAST(round(sum(dv) OVER w, 2) AS DOUBLE) AS open_value
-FROM agg
-WINDOW w AS (ORDER BY m ROWS UNBOUNDED PRECEDING)
-""",
-)
-def orders_open_backlog_sweepline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-of-month open-order backlog (count + value) via the
-    SWEEP-LINE trick: each order emits a +1 delta in its order month
-    and a -1 delta in its completion month (last shipment), and the
-    running sum over the months-sized delta relation IS the backlog.
-    The naive form — join every order against every month it spans —
-    is an interval×calendar blow-up that grows with span length; the
-    sweep-line shuffles exactly 2 rows per order regardless of how
-    long orders stay open, then runs both cumulative windows over the
-    ~80-row month relation. Backlog value accumulates in DECIMAL so
-    the +v/-v pairs cancel exactly."""
-    t = Tables(spark, sf_dir)
-    comp = t.lineitem.groupBy(F.col("l_orderkey").alias("ok")).agg(
-        F.date_trunc("month", F.max("l_shipdate")).alias("done_m")
-    )
-    price = F.col("o_totalprice").cast("decimal(38,2)")
-    od = (
-        t.orders.join(comp, F.col("o_orderkey") == F.col("ok"))
-        .select(
-            F.date_trunc("month", "o_orderdate").alias("start_m"),
-            "done_m",
-            price.alias("v"),
-        )
-        # oracle mirrors: unknown start/completion months can't be swept
-        .where(F.col("start_m").isNotNull() & F.col("done_m").isNotNull())
-    )
-    deltas = od.select(
-        F.col("start_m").alias("m"), F.lit(1).alias("d"), F.col("v")
-    ).unionAll(
-        od.select(
-            F.col("done_m").alias("m"),
-            F.lit(-1).alias("d"),
-            (-F.col("v")).alias("v"),
-        )
-    )
-    agg = deltas.groupBy("m").agg(
-        F.sum("d").alias("dn"), F.sum("v").alias("dv")
-    )
-    w = Window.orderBy("m").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return agg.select(
-        F.col("m").cast("timestamp_ntz").alias("month"),
-        F.sum("dn").over(w).cast("bigint").alias("open_orders"),
-        F.round(F.sum("dv").over(w), 2).cast("double").alias("open_value"),
-    )
 
 
 _PR_DAMP = 0.85
@@ -1568,107 +1212,6 @@ def graph_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "orders_priority_mix_shift",
-    oracle=f"""
-WITH cnt AS (
-  SELECT date_trunc('month', o_orderdate) AS m, o_orderpriority AS p,
-         count(*) AS c
-  FROM orders
-  WHERE o_orderdate IS NOT NULL AND o_orderpriority IS NOT NULL
-  GROUP BY 1, 2
-),
-grid AS (
-  SELECT months.m, prios.p, coalesce(cnt.c, 0) AS c
-  FROM (SELECT DISTINCT m FROM cnt) months
-  CROSS JOIN (SELECT DISTINCT p FROM cnt) prios
-  LEFT JOIN cnt ON cnt.m = months.m AND cnt.p = prios.p
-),
-sh AS (
-  SELECT m, p,
-         CAST(c AS DOUBLE)
-           / CAST(sum(c) OVER (PARTITION BY m) AS DOUBLE) AS s
-  FROM grid
-),
-d AS (
-  SELECT m, p, s - lag(s) OVER (PARTITION BY p ORDER BY m) AS ds FROM sh
-)
-SELECT CAST(m AS TIMESTAMP) AS month,
-       {grid_sum_sql("abs(ds)")} / 2.0 AS tvd,
-       round(max(abs(ds)), 6) AS max_abs_shift,
-       CAST(sum(CASE WHEN ds > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_up
-FROM d WHERE ds IS NOT NULL
-GROUP BY m
-""",
-)
-def orders_priority_mix_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Month-over-month categorical drift of the order-priority MIX:
-    total-variation distance 0.5·Σ|Δshare| between consecutive months,
-    the max single-priority shift, and how many priorities moved up —
-    the categorical sibling of quality_psi_drift's numeric PSI. Shares
-    must be compared on a DENSE month×priority grid (a priority absent
-    one month is a 0-share cell, not a missing row), built as
-    months × priorities (both aggregate-sized) left-joined with counts;
-    lag/TVD windows then run over the grid, never the raw orders.
-    Shares stay unrounded doubles through the diff (c/total division is
-    IEEE-exact on both engines); only the final statistics round."""
-    t = Tables(spark, sf_dir)
-    # Null months/priorities are excluded EXPLICITLY on both sides: a mix
-    # shift over an unknown month is meaningless, NULL grid keys never
-    # match the null-unsafe grid join anyway, and (found on the null tier)
-    # DISTINCT-then-dense-grid over a NULL timestamp month is nondeterminate
-    # in the oracle engine — the contract must not stand on that construct.
-    cnt = (
-        t.orders.where(
-            F.col("o_orderdate").isNotNull()
-            & F.col("o_orderpriority").isNotNull()
-        )
-        .groupBy(
-            F.date_trunc("month", "o_orderdate").alias("m"),
-            F.col("o_orderpriority").alias("p"),
-        )
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    months = cnt.select("m").distinct()
-    prios = cnt.select("p").distinct()
-    grid = (
-        months.crossJoin(F.broadcast(prios))
-        .join(cnt, ["m", "p"], "left")
-        .select("m", "p", F.coalesce("c", F.lit(0)).alias("c"))
-    )
-    # try_divide: a NULL-month group never matches the null-unsafe grid
-    # join, leaving an all-zero partition whose total is 0 — DuckDB's /0
-    # yields NULL (then drops at ds IS NOT NULL); ANSI division would crash.
-    sh = grid.select(
-        "m",
-        "p",
-        F.try_divide(
-            F.col("c").cast("double"),
-            F.sum("c").over(Window.partitionBy("m")).cast("double"),
-        ).alias("s"),
-    )
-    d = sh.select(
-        "m",
-        "p",
-        (
-            F.col("s")
-            - F.lag("s").over(Window.partitionBy("p").orderBy("m"))
-        ).alias("ds"),
-    ).where(F.col("ds").isNotNull())
-    return d.groupBy(F.col("m").cast("timestamp_ntz").alias("month")).agg(
-        # the ~5 per-month |Δshare| terms sum on the exact 1e-6 integer
-        # grid (portable.py:grid_sum — null-tier catch: share ratios land
-        # exactly on decimal-cast midpoints, where the engines' cast
-        # rounding disagrees); /2.0 is one identical IEEE op, so the
-        # emission is bit-deterministic with no further round
-        (grid_sum(F.abs("ds")) / F.lit(2.0)).alias("tvd"),
-        F.round(F.max(F.abs("ds")), 6).alias("max_abs_shift"),
-        F.sum(F.when(F.col("ds") > 0, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_up"),
-    )
-
-
-@register(
     "quality_contingency_residuals",
     oracle="""
 WITH obs AS (
@@ -1724,71 +1267,9 @@ def quality_contingency_residuals(spark: SparkSession, sf_dir: str) -> DataFrame
 
 # ===========================================================================
 # wave module round6i (formerly operators/round6i.py)
-# Round-5 thirty-fifth wave (SURVEY.md §2.Q, continued): skyline
-# (Pareto-optimal set) via sort + running max and Theil
+# Round-5 thirty-fifth wave (SURVEY.md §2.Q, continued): Theil
 # inequality-index decomposition.
 # ===========================================================================
-
-@register(
-    "part_skyline_price_size",
-    oracle="""
-WITH pts AS (
-  -- a point with an unknown coordinate cannot be dominance-compared:
-  -- NULL comparisons make the NOT-EXISTS vacuously keep it
-  SELECT p_retailprice AS price, p_size AS sz, count(*) AS n_parts
-  FROM part
-  WHERE p_retailprice IS NOT NULL AND p_size IS NOT NULL
-  GROUP BY 1, 2
-)
-SELECT price AS p_retailprice, sz AS p_size,
-       CAST(n_parts AS BIGINT) AS n_parts
-FROM pts p
-WHERE NOT EXISTS (
-  SELECT 1 FROM pts q
-  WHERE q.price <= p.price AND q.sz >= p.sz
-    AND (q.price < p.price OR q.sz > p.sz)
-)
-""",
-)
-def part_skyline_price_size(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SKYLINE / Pareto-optimal set over (minimize retailprice, maximize
-    size): the parts no other part beats on both axes — the classic
-    multi-objective shortlist operator. The oracle states the O(n²)
-    NOT-EXISTS dominance DEFINITION; the engine computes it as
-    sort + running max: keep only the max size at each price (window
-    over price), then a point survives iff its size strictly exceeds
-    the running max over all strictly-cheaper prices. One shuffle on
-    price (the partition window and the per-price groupBy reuse the
-    same exchange) + one window over the distinct-price relation —
-    O(n log n), no self-join, no candidate blow-up at any corpus size.
-    Equal-price ties keep only the largest size; duplicate (price,
-    size) points collapse to one row with their part count."""
-    t = Tables(spark, sf_dir)
-    wp = Window.partitionBy("p_retailprice")
-    p2 = t.part.where(  # oracle mirrors: no NULL coordinates in a skyline
-        F.col("p_retailprice").isNotNull() & F.col("p_size").isNotNull()
-    ).select(
-        "p_retailprice",
-        "p_size",
-        F.max("p_size").over(wp).alias("pmax"),
-    )
-    per_price = (
-        p2.where(F.col("p_size") == F.col("pmax"))
-        .groupBy("p_retailprice", "p_size")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_parts"))
-    )
-    w_prev = Window.orderBy("p_retailprice").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    sky = per_price.select(
-        "p_retailprice",
-        "p_size",
-        "n_parts",
-        F.max("p_size").over(w_prev).alias("s1"),
-    )
-    return sky.where(
-        F.col("s1").isNull() | (F.col("p_size") > F.col("s1"))
-    ).select("p_retailprice", "p_size", "n_parts")
 
 
 @register(
@@ -2106,86 +1587,9 @@ def quality_column_entropy_profile(
 
 # ===========================================================================
 # wave module round6k (formerly operators/round6k.py)
-# Round-5 thirty-seventh wave (SURVEY.md §2.Q, continued): customer
-# segment migration and a deterministic Poisson-bootstrap confidence
-# interval.
+# Round-5 thirty-seventh wave (SURVEY.md §2.Q, continued): a
+# deterministic Poisson-bootstrap confidence interval.
 # ===========================================================================
-
-_SPLIT_DATE = "1998-01-01"
-
-
-@register(
-    "customer_segment_migration",
-    oracle=f"""
-WITH rev AS (
-  SELECT o_custkey AS ck,
-         CASE WHEN o_orderdate < DATE '{_SPLIT_DATE}' THEN 'A' ELSE 'B' END
-           AS period,
-         sum(CAST(o_totalprice AS DECIMAL(38,2))) AS r
-  FROM orders GROUP BY 1, 2
-),
-seg AS (
-  SELECT ck, period,
-         ntile(3) OVER (PARTITION BY period ORDER BY r DESC, ck) AS tercile
-  FROM rev
-),
-a AS (SELECT ck, tercile FROM seg WHERE period = 'A'),
-b AS (SELECT ck, tercile FROM seg WHERE period = 'B')
-SELECT coalesce(CAST(a.tercile AS VARCHAR), 'absent') AS seg_early,
-       coalesce(CAST(b.tercile AS VARCHAR), 'absent') AS seg_late,
-       count(*) AS n_customers
-FROM a FULL OUTER JOIN b ON a.ck = b.ck
-GROUP BY 1, 2
-""",
-)
-def customer_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customer revenue-tercile migration matrix between the early
-    (pre-1998) and late order eras: who moved up, who churned out
-    ('absent'), who appeared — the segment-churn view behind retention
-    planning, generalizing customer_rfm_segments to a transition
-    matrix. Terciles come from ntile(3) over each period's
-    customer-revenue aggregate with (revenue DESC, custkey) ordering —
-    the unique tie-break key that makes rank assignment deterministic
-    across engines — and revenues accumulate in DECIMAL before any
-    ordering. Two customer-sized windows + one full-outer join on
-    custkey; output ≤ 4×4 rows at any scale."""
-    o = Tables(spark, sf_dir).orders
-    rev = o.groupBy(
-        F.col("o_custkey").alias("ck"),
-        F.when(
-            F.col("o_orderdate") < F.lit(_SPLIT_DATE).cast("timestamp_ntz"),
-            "A",
-        )
-        .otherwise("B")
-        .alias("period"),
-    ).agg(F.sum(F.col("o_totalprice").cast("decimal(38,2)")).alias("r"))
-    seg = rev.select(
-        "ck",
-        "period",
-        F.ntile(3)
-        .over(
-            Window.partitionBy("period").orderBy(F.desc("r"), F.asc("ck"))
-        )
-        .alias("tercile"),
-    )
-    a = seg.where(F.col("period") == "A").select(
-        F.col("ck").alias("ck_a"), F.col("tercile").alias("t_a")
-    )
-    b = seg.where(F.col("period") == "B").select(
-        F.col("ck").alias("ck_b"), F.col("tercile").alias("t_b")
-    )
-    return (
-        a.join(b, F.col("ck_a") == F.col("ck_b"), "full_outer")
-        .groupBy(
-            F.coalesce(F.col("t_a").cast("string"), F.lit("absent")).alias(
-                "seg_early"
-            ),
-            F.coalesce(F.col("t_b").cast("string"), F.lit("absent")).alias(
-                "seg_late"
-            ),
-        )
-        .agg(F.count(F.lit(1)).alias("n_customers"))
-    )
 
 
 # Truncated-Poisson(1) weight thresholds: P(0)=e⁻¹, P(1)=e⁻¹, P(2)=e⁻¹/2,
@@ -2314,8 +1718,8 @@ def agg_bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # wave module round6l (formerly operators/round6l.py)
 # Round-5 thirty-eighth wave (SURVEY.md §2.Q, continued): embedding
-# prefix-energy (Matryoshka truncation) analysis, Wilson proportion CIs,
-# and a three-strategy join-equivalence proof.
+# prefix-energy (Matryoshka truncation) analysis and a three-strategy
+# join-equivalence proof.
 # ===========================================================================
 
 _PREFIX_KS = (8, 16, 32, 64)
@@ -2387,82 +1791,6 @@ def embed_prefix_energy_fraction(
         F.round(F.avg("f"), 6).alias("mean_energy"),
         F.round(F.min("f"), 6).alias("min_energy"),
         F.round(F.max("f"), 6).alias("max_energy"),
-    )
-
-
-_Z95 = "1.959963984540054"
-
-
-@register(
-    "lineitem_wilson_ci_return_rate",
-    oracle=f"""
-WITH cnt AS (
-  SELECT n_name,
-         count(*) AS n,
-         count(CASE WHEN l_returnflag = 'R' THEN 1 END) AS r
-  FROM lineitem
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation   ON s_nationkey = n_nationkey
-  GROUP BY n_name
-),
-wil AS (
-  SELECT n_name, n, r,
-         CAST(r AS DOUBLE) / n AS p,
-         {_Z95} AS z
-  FROM cnt
-)
-SELECT n_name AS nation,
-       CAST(n AS BIGINT) AS n_lines,
-       CAST(r AS BIGINT) AS n_returned,
-       round(p, 6) AS rate,
-       round((p + z*z/(2*n) - z * sqrt(p*(1-p)/n + z*z/(4.0*n*n)))
-             / (1 + z*z/n), 6) AS wilson_lo,
-       round((p + z*z/(2*n) + z * sqrt(p*(1-p)/n + z*z/(4.0*n*n)))
-             / (1 + z*z/n), 6) AS wilson_hi
-FROM wil
-""",
-)
-def lineitem_wilson_ci_return_rate(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """95% Wilson score interval for the return rate per supplier
-    nation — the proportion CI that stays inside [0,1] and behaves at
-    small n where the normal ('Wald') interval collapses; the
-    closed-form sibling of agg_bootstrap_mean_ci. Every input to the
-    formula is an exact integer count (one broadcast-dim join + one
-    nations-sized groupBy), so both engines evaluate the identical
-    float expression — no accumulation-order exposure anywhere."""
-    t = Tables(spark, sf_dir)
-    cnt = (
-        t.lineitem.join(
-            broadcast_if_small(
-                t.supplier.select("s_suppkey", "s_nationkey"), sf_dir, "supplier"
-            ),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-        )
-        .join(
-            F.broadcast(t.nation.select("n_nationkey", "n_name")),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .groupBy("n_name")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count(F.when(F.col("l_returnflag") == "R", 1)).alias("r"),
-        )
-    )
-    z = F.lit(float(_Z95))
-    n = F.col("n").cast("double")
-    p = F.col("r").cast("double") / n
-    half = z * F.sqrt(p * (1 - p) / n + z * z / (4.0 * n * n))
-    center = p + z * z / (2 * n)
-    denom = 1 + z * z / n
-    return cnt.select(
-        F.col("n_name").alias("nation"),
-        F.col("n").cast("bigint").alias("n_lines"),
-        F.col("r").cast("bigint").alias("n_returned"),
-        F.round(p, 6).alias("rate"),
-        F.round((center - half) / denom, 6).alias("wilson_lo"),
-        F.round((center + half) / denom, 6).alias("wilson_hi"),
     )
 
 
@@ -2930,8 +2258,7 @@ def agg_stratified_estimator_variance(
 # ===========================================================================
 # wave module round6o (formerly operators/round6o.py)
 # Round-5 forty-first wave (SURVEY.md §2.Q, continued): closed-form
-# sign-binarized Hamming separation and hierarchical share-of-parent
-# rollups.
+# sign-binarized Hamming separation.
 # ===========================================================================
 
 @register(
@@ -2999,129 +2326,6 @@ def embed_sign_hamming_separation(
                 + (1 - F.col("pa")) * F.col("pb")
             ).alias("mean_hamming")
         )
-    )
-
-
-@register(
-    "orders_hierarchy_share_of_parent",
-    oracle="""
-WITH base AS (
-  SELECT r_name, n_name, c_mktsegment AS seg,
-         sum(CAST(o_totalprice AS DECIMAL(38,2))) AS rev
-  FROM orders
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation   ON c_nationkey = n_nationkey
-  JOIN region   ON n_regionkey = r_regionkey
-  GROUP BY 1, 2, 3
-),
-seg_lvl AS (
-  SELECT 'segment' AS level, n_name || '/' || seg AS key, n_name AS parent,
-         rev,
-         sum(rev) OVER (PARTITION BY n_name) AS parent_rev
-  FROM base
-),
-nat_lvl AS (
-  SELECT 'nation' AS level, n_name AS key, r_name AS parent,
-         sum(rev) AS rev
-  FROM base GROUP BY n_name, r_name
-),
-nat_w AS (
-  SELECT level, key, parent, rev,
-         sum(rev) OVER (PARTITION BY parent) AS parent_rev
-  FROM nat_lvl
-),
-reg_lvl AS (
-  SELECT 'region' AS level, r_name AS key, 'ALL' AS parent,
-         sum(rev) AS rev
-  FROM base GROUP BY r_name
-),
-reg_w AS (
-  SELECT level, key, parent, rev, sum(rev) OVER () AS parent_rev
-  FROM reg_lvl
-),
-u AS (
-  SELECT * FROM seg_lvl UNION ALL
-  SELECT * FROM nat_w UNION ALL
-  SELECT * FROM reg_w
-)
-SELECT level, key, parent,
-       CAST(round(rev, 2) AS DOUBLE) AS revenue,
-       round(CAST(rev AS DOUBLE) / CAST(parent_rev AS DOUBLE), 6)
-         AS share_of_parent
-FROM u
-""",
-)
-def orders_hierarchy_share_of_parent(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Hierarchical share-of-parent report over region → nation →
-    market segment: every node's revenue as a fraction of its PARENT's
-    total — the drill-down ratio agg_rollup's grand-margin rows don't
-    give you (a rollup shares against the grand total; planners want
-    'this segment is 40% of its nation'). One corpus-sized groupBy to
-    the (region, nation, segment) base relation; every level and every
-    parent total is then a window or re-aggregate over those ≤ 125
-    rows, DECIMAL until the final ratio."""
-    t = Tables(spark, sf_dir)
-    base = (
-        t.orders.join(
-            broadcast_if_small(
-                t.customer.select("c_custkey", "c_nationkey", "c_mktsegment"),
-                sf_dir,
-                "customer",
-            ),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .join(
-            F.broadcast(t.nation),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .join(
-            F.broadcast(t.region),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
-        .groupBy("r_name", "n_name", F.col("c_mktsegment").alias("seg"))
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(38,2)")).alias("rev")
-        )
-    )
-    seg_lvl = base.select(
-        F.lit("segment").alias("level"),
-        # null-propagating concat (oracle ||): a NULL nation or segment
-        # nulls the composite key instead of collapsing to a bare name
-        F.concat(F.col("n_name"), F.lit("/"), F.col("seg")).alias("key"),
-        F.col("n_name").alias("parent"),
-        "rev",
-        F.sum("rev").over(Window.partitionBy("n_name")).alias("parent_rev"),
-    )
-    nat_lvl = base.groupBy("n_name", "r_name").agg(
-        F.sum("rev").alias("rev")
-    )
-    nat_w = nat_lvl.select(
-        F.lit("nation").alias("level"),
-        F.col("n_name").alias("key"),
-        F.col("r_name").alias("parent"),
-        "rev",
-        F.sum("rev").over(Window.partitionBy("r_name")).alias("parent_rev"),
-    )
-    reg_lvl = base.groupBy("r_name").agg(F.sum("rev").alias("rev"))
-    reg_w = reg_lvl.select(
-        F.lit("region").alias("level"),
-        F.col("r_name").alias("key"),
-        F.lit("ALL").alias("parent"),
-        "rev",
-        F.sum("rev").over(Window.partitionBy()).alias("parent_rev"),
-    )
-    u = seg_lvl.unionByName(nat_w).unionByName(reg_w)
-    return u.select(
-        "level",
-        "key",
-        "parent",
-        F.round("rev", 2).cast("double").alias("revenue"),
-        F.round(
-            F.col("rev").cast("double") / F.col("parent_rev").cast("double"),
-            6,
-        ).alias("share_of_parent"),
     )
 
 
@@ -3316,8 +2520,8 @@ def sink_csv_gzip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # wave module round6q (formerly operators/round6q.py)
 # Round-5 forty-third wave (SURVEY.md §2.Q, continued): a trained
-# Naive-Bayes source classifier evaluated on a held-out split, classical
-# additive seasonal decomposition, and nested-JSON round-trip parity.
+# Naive-Bayes source classifier evaluated on a held-out split and
+# nested-JSON round-trip parity.
 # ===========================================================================
 
 # Train/test assignment: first md5 hex nibble of the salted doc id
@@ -3477,110 +2681,6 @@ def text_naive_bayes_source_classifier(
 
 
 @register(
-    "orders_seasonal_decomposition_additive",
-    oracle="""
-WITH monthly AS (
-  -- o_orderdate IS NOT NULL: a NULL month has no seat in a centered
-  -- 12-month moving window (see orders_cumulative_share_monthly)
-  SELECT date_trunc('month', o_orderdate) AS m,
-         CAST(sum(CAST(o_totalprice AS DECIMAL(38,2))) AS DOUBLE) AS rev
-  FROM orders WHERE o_orderdate IS NOT NULL GROUP BY 1
-),
-tr AS (
-  SELECT m, rev,
-         sum(rev) OVER w / 12 AS trend,
-         count(*) OVER w AS wn
-  FROM monthly
-  WINDOW w AS (ORDER BY m ROWS BETWEEN 5 PRECEDING AND 6 FOLLOWING)
-),
-det AS (
-  SELECT CAST(month(m) AS INTEGER) AS month_num, rev - trend AS d
-  FROM tr WHERE wn = 12
-),
-seas AS (
-  SELECT month_num, count(*) AS n_obs, avg(d) AS s
-  FROM det GROUP BY month_num
-)
-, rem AS (
-  SELECT seas.month_num, seas.n_obs, seas.s,
-         (SELECT avg(abs(det.d - seas.s)) FROM det
-          WHERE det.month_num = seas.month_num) AS mar
-  FROM seas
-)
-SELECT month_num,
-       CAST(n_obs AS BIGINT) AS n_obs,
-       CASE WHEN s = 0 THEN 0.0
-            ELSE round(s / pow(10, floor(log10(abs(s)))), 6)
-       END AS seasonal_mant,
-       CAST(CASE WHEN s = 0 THEN 0
-                 ELSE floor(log10(abs(s))) END AS INT) AS seasonal_exp10,
-       CASE WHEN mar = 0 THEN 0.0
-            ELSE round(mar / pow(10, floor(log10(abs(mar)))), 6)
-       END AS remainder_mant,
-       CAST(CASE WHEN mar = 0 THEN 0
-                 ELSE floor(log10(abs(mar))) END AS INT) AS remainder_exp10
-FROM rem
-""",
-)
-def orders_seasonal_decomposition_additive(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Classical additive seasonal decomposition of monthly revenue:
-    trend = 12-month moving average (full windows only), seasonal
-    index = mean detrended value per calendar month, remainder = what
-    neither explains — the decomposition behind 'is December really
-    bigger or is it just trend'. orders_seasonal_index ratios against
-    the global mean; this one removes a MOVING trend first, so a
-    growing business doesn't masquerade as seasonality. Monthly sums
-    in DECIMAL → identical doubles; trend divides a window sum by the
-    exact count; all windows run over the ~80-row months relation."""
-    o = Tables(spark, sf_dir).orders.where(F.col("o_orderdate").isNotNull())
-    monthly = o.groupBy(
-        F.date_trunc("month", "o_orderdate").alias("m")
-    ).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(38,2)"))
-        .cast("double")
-        .alias("rev")
-    )
-    w = Window.orderBy("m").rowsBetween(-5, 6)
-    tr = monthly.select(
-        "m",
-        "rev",
-        (F.sum("rev").over(w) / 12).alias("trend"),
-        F.count(F.lit(1)).over(w).alias("wn"),
-    )
-    det = tr.where(F.col("wn") == 12).select(
-        F.month("m").cast("int").alias("month_num"),
-        (F.col("rev") - F.col("trend")).alias("d"),
-    )
-    seas = det.groupBy("month_num").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_obs"),
-        F.avg("d").alias("s"),
-    )
-    rem = (
-        det.join(seas.select("month_num", "s"), "month_num")
-        .groupBy("month_num")
-        .agg(
-            F.avg(F.abs(F.col("d") - F.col("s"))).alias("mar")
-        )
-    )
-
-    # relative (mantissa/exponent) emission — revenue magnitudes scale with
-    # the corpus, and at sfx1.0 the ~1e8 remainder average sits within
-    # double's summation-order noise of a fixed 6-dp rounding boundary
-    # (measured at the round-8 sweep); zero-guarded because the seasonal
-    # index is zero-centered. See functions/portable.py.
-    from ai_dataingestion_spark.functions.portable import mant_exp_cols
-
-    return seas.join(rem, "month_num").select(
-        "month_num",
-        "n_obs",
-        *mant_exp_cols(F.col("s"), "seasonal"),
-        *mant_exp_cols(F.col("mar"), "remainder"),
-    )
-
-
-@register(
     "fn_json_nested_roundtrip",
     oracle="""
 WITH built AS (
@@ -3687,79 +2787,9 @@ def fn_json_nested_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # wave module round6r (formerly operators/round6r.py)
-# Round-5 forty-fourth wave (SURVEY.md §2.Q, continued): cohort
-# fulfillment vintage curves and higher-order array reduction
-# (Horner).
+# Round-5 forty-fourth wave (SURVEY.md §2.Q, continued): higher-order
+# array reduction (Horner).
 # ===========================================================================
-
-@register(
-    "orders_fulfillment_vintage_curves",
-    oracle="""
-WITH li AS (
-  SELECT CAST(year(o_orderdate) AS INTEGER) AS cohort_year,
-         least(greatest(CAST(floor(datediff('day', o_orderdate, l_shipdate)
-                                   / 30.0) AS INTEGER), 0), 5) AS mbucket
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-),
-cells AS (
-  SELECT cohort_year, mbucket, count(*) AS c
-  FROM li GROUP BY cohort_year, mbucket
-)
-SELECT cohort_year, mbucket AS months_since_order,
-       CAST(c AS BIGINT) AS n_lines,
-       round(CAST(sum(c) OVER (PARTITION BY cohort_year ORDER BY mbucket
-                               ROWS UNBOUNDED PRECEDING) AS DOUBLE)
-             / sum(c) OVER (PARTITION BY cohort_year), 6)
-         AS cum_fulfilled_share
-FROM cells
-""",
-)
-def orders_fulfillment_vintage_curves(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Vintage (cohort-maturity) fulfillment curves: for each order-year
-    cohort, the cumulative share of lineitems shipped within 0,1,…,5+
-    months of ordering — the credit-risk 'vintage triangle' shape
-    applied to operations, which answers 'is this year's backlog
-    clearing slower than last year's at the same age' (a question the
-    global delay histogram can't see because it mixes cohort ages).
-    Day deltas are exact integers clamped to [0, 5+] — the lower clamp
-    absorbs this synthetic corpus's order-independent ship dates AND
-    sidesteps the §5.4 negative-division trap — and both windows run
-    over the ≤ years×6 cell aggregate; one corpus-sized join+groupBy,
-    everything after is bounded."""
-    t = Tables(spark, sf_dir)
-    li = t.lineitem.join(
-        t.orders, F.col("l_orderkey") == F.col("o_orderkey")
-    ).select(
-        F.year("o_orderdate").cast("int").alias("cohort_year"),
-        F.least(
-            F.greatest(
-                F.floor(
-                    F.datediff(F.col("l_shipdate"), F.col("o_orderdate"))
-                    / 30.0
-                ).cast("int"),
-                F.lit(0),
-            ),
-            F.lit(5),
-        ).alias("mbucket"),
-    )
-    cells = li.groupBy("cohort_year", "mbucket").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    w_cum = Window.partitionBy("cohort_year").orderBy("mbucket").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    w_coh = Window.partitionBy("cohort_year")
-    return cells.select(
-        "cohort_year",
-        F.col("mbucket").alias("months_since_order"),
-        F.col("c").cast("bigint").alias("n_lines"),
-        F.round(
-            F.sum("c").over(w_cum).cast("double") / F.sum("c").over(w_coh),
-            6,
-        ).alias("cum_fulfilled_share"),
-    )
 
 
 @register(
@@ -4085,112 +3115,9 @@ def catalog_temporal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # wave module round6u (formerly operators/round6u.py)
-# Round-5 forty-seventh wave (SURVEY.md §2.Q, continued): Simpson's
-# paradox reversal detection and column-level change-data-capture
-# breakdown.
+# Round-5 forty-seventh wave (SURVEY.md §2.Q, continued): column-level
+# change-data-capture breakdown.
 # ===========================================================================
-
-_SEG_A = "BUILDING"
-_SEG_B = "MACHINERY"
-
-
-@register(
-    "orders_simpsons_reversal_check",
-    oracle=f"""
-WITH base AS (
-  SELECT c_nationkey AS nk, c_mktsegment AS seg,
-         CAST(o_totalprice AS DECIMAL(38,2)) AS v
-  FROM orders JOIN customer ON o_custkey = c_custkey
-  WHERE c_mktsegment IN ('{_SEG_A}', '{_SEG_B}')
-),
-strata AS (
-  SELECT nk,
-         CAST(sum(CASE WHEN seg = '{_SEG_A}' THEN v END) AS DOUBLE)
-           / count(CASE WHEN seg = '{_SEG_A}' THEN 1 END)
-         - CAST(sum(CASE WHEN seg = '{_SEG_B}' THEN v END) AS DOUBLE)
-           / count(CASE WHEN seg = '{_SEG_B}' THEN 1 END) AS diff
-  FROM base GROUP BY nk
-  HAVING count(CASE WHEN seg = '{_SEG_A}' THEN 1 END) > 0
-     AND count(CASE WHEN seg = '{_SEG_B}' THEN 1 END) > 0
-),
-overall AS (
-  SELECT CAST(sum(CASE WHEN seg = '{_SEG_A}' THEN v END) AS DOUBLE)
-           / count(CASE WHEN seg = '{_SEG_A}' THEN 1 END)
-         - CAST(sum(CASE WHEN seg = '{_SEG_B}' THEN v END) AS DOUBLE)
-           / count(CASE WHEN seg = '{_SEG_B}' THEN 1 END) AS odiff
-  FROM base
-)
-SELECT round((SELECT odiff FROM overall), 6) AS overall_diff,
-       count(*) AS n_strata,
-       CAST(sum(CASE WHEN sign(diff) <> sign((SELECT odiff FROM overall))
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_reversed,
-       round(CAST(sum(CASE WHEN sign(diff)
-                                <> sign((SELECT odiff FROM overall))
-                           THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6)
-         AS reversal_share
-FROM strata
-""",
-)
-def orders_simpsons_reversal_check(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Simpson's-paradox screen: the BUILDING−MACHINERY mean-order-value
-    gap computed overall AND within every customer-nation stratum, with
-    the count of strata whose gap has the OPPOSITE sign — a high
-    reversal share means the aggregate comparison is confounded by the
-    nation mix and any segment-level conclusion must be stratified
-    (the audit behind every 'segment X spends more' claim). Means are
-    exact-DECIMAL-sum / integer-count on both engines, sign() compares
-    identical doubles, and the stratum relation is nations-sized after
-    one broadcast-dim join + groupBy."""
-    t = Tables(spark, sf_dir)
-    v = F.col("o_totalprice").cast("decimal(38,2)")
-    base = (
-        t.orders.join(
-            broadcast_if_small(
-                t.customer.select("c_custkey", "c_nationkey", "c_mktsegment"),
-                sf_dir,
-                "customer",
-            ),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .where(F.col("c_mktsegment").isin(_SEG_A, _SEG_B))
-        .select(
-            F.col("c_nationkey").alias("nk"),
-            F.col("c_mktsegment").alias("seg"),
-            v.alias("v"),
-        )
-    )
-
-    def seg_mean(seg: str):
-        return F.sum(F.when(F.col("seg") == seg, F.col("v"))).cast(
-            "double"
-        ) / F.count(F.when(F.col("seg") == seg, 1))
-
-    strata = (
-        base.groupBy("nk")
-        .agg(
-            (seg_mean(_SEG_A) - seg_mean(_SEG_B)).alias("diff"),
-            F.count(F.when(F.col("seg") == _SEG_A, 1)).alias("ca"),
-            F.count(F.when(F.col("seg") == _SEG_B, 1)).alias("cb"),
-        )
-        .where((F.col("ca") > 0) & (F.col("cb") > 0))
-    )
-    overall = base.agg(
-        (seg_mean(_SEG_A) - seg_mean(_SEG_B)).alias("odiff")
-    )
-    joined = strata.crossJoin(F.broadcast(overall))
-    reversed_ = F.when(
-        F.signum(F.col("diff")) != F.signum(F.col("odiff")), 1
-    ).otherwise(0)
-    return joined.agg(
-        F.round(F.max("odiff"), 6).alias("overall_diff"),
-        F.count(F.lit(1)).alias("n_strata"),
-        F.sum(reversed_).cast("bigint").alias("n_reversed"),
-        F.round(
-            F.sum(reversed_).cast("double") / F.count(F.lit(1)), 6
-        ).alias("reversal_share"),
-    )
 
 
 @register(
@@ -5182,8 +4109,6 @@ def agg_approx_percentile_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 
 # -*- coding: utf-8 -*-
-
-
 
 
 # Synthesized crawl URLs: deterministic host/page from doc_id plus the

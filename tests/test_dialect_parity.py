@@ -20,6 +20,7 @@ DOUBLES = st.floats(
     min_value=-1e6, max_value=1e6, allow_nan=False, allow_infinity=False
 )
 DATES = st.dates()
+CENTS = st.integers(min_value=0, max_value=10_000_000)
 
 
 def _spark_one_col(spark, rows, ddl):
@@ -60,10 +61,20 @@ def test_regex_replace_and_extract_parity(spark, data):
 def test_rounded_aggregate_parity(spark, data):
     """round(sum(x), 4) / round(avg(x), 6) over generated doubles must agree
     despite different summation orders — the engine's aggregate-rounding
-    discipline in miniature."""
+    discipline in miniature. The money pair, ``money_sum(net_price())`` and
+    ``money_sum_sql(NET_PRICE_SQL)``, must agree group for group over 2-dp
+    prices and discounts with NULLs, discounts above 1 (negative net), an
+    all-NULL group and two exact half-cent rows."""
     xs = data.draw(st.lists(DOUBLES, min_size=50, max_size=50))
     df = _spark_one_col(spark, xs, "x double")
     from pyspark.sql import functions as F
+
+    from ai_dataingestion_spark.functions.portable import (
+        NET_PRICE_SQL,
+        money_sum,
+        money_sum_sql,
+        net_price,
+    )
 
     row = df.agg(
         F.round(F.sum("x"), 4).alias("s"), F.round(F.avg("x"), 6).alias("a")
@@ -74,6 +85,30 @@ def test_rounded_aggregate_parity(spark, data):
         [xs],
     ).fetchone()
     assert (row.s, row.a) == want
+
+    lines = data.draw(st.lists(st.tuples(
+        st.integers(0, 3), CENTS.map(lambda c: c / 100) | st.none(),
+        st.integers(0, 150).map(lambda c: c / 100) | st.none(),
+    ), min_size=40, max_size=40))
+    lines += [(4, 0.10, 0.05), (5, 2.0, 0.9975), (6, None, 0.05), (6, None, None)]
+    got = [
+        tuple(r)
+        for r in spark.createDataFrame(
+            lines, "g int, l_extendedprice double, l_discount double"
+        )
+        .groupBy("g")
+        .agg(money_sum(net_price()).alias("m"))
+        .orderBy("g")
+        .collect()
+    ]
+    want = con.execute(
+        f"SELECT g, {money_sum_sql(NET_PRICE_SQL)} FROM (SELECT unnest(?) AS g,"
+        " unnest(?) AS l_extendedprice, unnest(?) AS l_discount)"
+        " GROUP BY g ORDER BY g",
+        [list(c) for c in zip(*lines)],
+    ).fetchall()
+    assert got == want
+    assert dict(got)[6] is None
 
 
 @settings(max_examples=10, deadline=None)

@@ -1,10 +1,8 @@
 """Events domain: the shared session rule and per-user calendar give the same
-answer on both engines at their boundaries, and every events operator lives
-in operators/events.py."""
+answer on both engines at their boundaries."""
 
 from __future__ import annotations
 
-import ast
 import os
 from datetime import datetime, timedelta
 
@@ -98,19 +96,3 @@ def test_session_rule_matches_session_window_at_exactly_the_gap(
     )
     assert [r.n_events for r in windows[:2]] == [2, 2]
 
-
-def test_every_events_operator_registers_from_the_events_module():
-    """events_time_of_day_rollup stays with the TIME-type functions it
-    shares helpers with."""
-    tree = ast.parse(open(events.__file__).read())
-    here = {
-        c.args[0].value
-        for c in ast.walk(tree)
-        if isinstance(c, ast.Call)
-        and getattr(c.func, "id", "") in ("register", "sql_op")
-        and c.args
-        and isinstance(c.args[0], ast.Constant)
-    }
-    assert here == {n for n in SPECS if n.startswith("events_")} - {
-        "events_time_of_day_rollup"
-    }

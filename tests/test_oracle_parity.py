@@ -4,9 +4,12 @@ sf0.01. Operators without oracle SQL get a rows-runnable smoke test."""
 
 from __future__ import annotations
 
+import ast
+
 import pytest
 
 from ai_dataingestion_spark.catalog import all_specs
+from ai_dataingestion_spark.operators import analytics, events
 from tests.parity import compare, duckdb_connect, run_with_spawn_retry
 
 SPECS = all_specs()
@@ -143,3 +146,38 @@ def test_readme_headline_counts_match_registry():
     assert int(m.group(2)) == with_oracle, (
         f"README claims {m.group(2)} oracle-verified, registry has {with_oracle}"
     )
+
+
+RELATIONAL_PREFIXES = (
+    "tpch_", "lineitem_", "orders_", "customer_", "supplier_", "part_",
+    "brand_", "market_", "sales_", "trade_", "subquery_",
+)
+
+
+def _registered_in(module) -> set[str]:
+    """IDs of the `register` / `sql_op` calls written in ``module``."""
+    tree = ast.parse(open(module.__file__).read())
+    return {
+        c.args[0].value
+        for c in ast.walk(tree)
+        if isinstance(c, ast.Call)
+        and getattr(c.func, "id", "") in ("register", "sql_op")
+        and c.args
+        and isinstance(c.args[0], ast.Constant)
+    }
+
+
+@pytest.mark.parametrize(
+    "module, owned",
+    [
+        # events_time_of_day_rollup stays with the TIME-type functions it
+        # shares helpers with
+        (events, {n for n in SPECS if n.startswith("events_")}
+         - {"events_time_of_day_rollup"}),
+        (analytics, {n for n in SPECS if n.startswith(RELATIONAL_PREFIXES)}),
+    ],
+    ids=["events", "relational"],
+)
+def test_domain_module_owns_its_ids(module, owned):
+    """A domain's operators register from its module and nowhere else."""
+    assert _registered_in(module) == owned

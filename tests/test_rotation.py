@@ -14,7 +14,7 @@ import pytest
 
 from ai_dataingestion_spark import catalog, registry, tmpdirs
 from ai_dataingestion_spark.ai import dedup
-from ai_dataingestion_spark.operators import events
+from ai_dataingestion_spark.operators import analytics, events
 
 REPO = Path(__file__).resolve().parent.parent
 SPECS = catalog.all_specs()
@@ -68,12 +68,26 @@ def test_unchanged_code_ranks_behind_everything(certified):
          "events_top_session_paths"),
         (events, "_user_day_calendar", lambda daily: daily,
          "events_gap_fill_locf events_gap_fill_linear"),
+        (analytics, "net_price", lambda: None,
+         "tpch_q3_shipping_priority tpch_q5_local_volume "
+         "tpch_q7_volume_shipping tpch_q8_market_share "
+         "tpch_q9_profit_by_nation_year tpch_q10_returned_items "
+         "tpch_q11_part_value_concentration tpch_q14_promo_revenue "
+         "tpch_q15_top_supplier tpch_q19_disjunctive lineitem_abc_pareto "
+         "part_brand_share supplier_revenue_gini"),
+        (analytics, "money_sum", lambda col: col,
+         "tpch_q3_shipping_priority tpch_q5_local_volume "
+         "tpch_q6_forecast_revenue tpch_q7_volume_shipping "
+         "tpch_q9_profit_by_nation_year tpch_q10_returned_items "
+         "tpch_q15_top_supplier tpch_q19_disjunctive tpch_q22_idle_customers "
+         "customer_rfm_segments customer_cohort_ltv lineitem_abc_pareto"),
         # run-time state: a global op_tmpdir rebinds, and a cache dict
         (tmpdirs, "_ROOT", "/elsewhere", ""),
         (registry, "_events_ts_unit", {("a",): "ns"}, ""),
     ],
     ids=["helper", "helper-local-import", "module-sql-constant",
-         "sessions-helper", "calendar-helper", "rebound-global", "cache-dict"],
+         "sessions-helper", "calendar-helper", "net-price-helper",
+         "money-sum-helper", "rebound-global", "cache-dict"],
 )
 def test_changed_dependency_moves_exactly_its_operators(
     certified, monkeypatch, module, name, value, moved
