@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ai_dataingestion_spark.catalog import register
-from ai_dataingestion_spark.functions.portable import pround
+from ai_dataingestion_spark.functions.portable import pround, tokens, tokens_sql
 from ai_dataingestion_spark.opcache import op_cache
 from ai_dataingestion_spark.registry import Tables
 from ai_dataingestion_spark.scale import (
@@ -57,7 +57,7 @@ def _near_copies(d: DataFrame, offset: int = _DUP_OFFSET) -> DataFrame:
     by ``offset``, last token dropped — Jaccard vs the original ≈ (n-3)/n
     on 3-token shingles, well above any near-dup threshold for realistic
     lengths."""
-    toks = F.split("text", " ")
+    toks = tokens()
     # The >= 2 guard pins the degenerate case: dropping a single-token
     # document's only token leaves NO text — Spark's array_join([]) is ''
     # but the oracles' array_to_string([]) is NULL, so without the guard
@@ -80,10 +80,10 @@ def _corpus_with_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # DuckDB twin of _corpus_with_near_dups, as (doc_id, toks).
 _NEAR_CORPUS_CTE = f"""corpus AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
+  SELECT doc_id, {tokens_sql()} AS toks FROM documents
   UNION ALL
   SELECT doc_id + {_DUP_OFFSET},
-         list_slice(string_split(text, ' '), 1, len(string_split(text, ' ')) - 1)
+         list_slice({tokens_sql()}, 1, len({tokens_sql()}) - 1)
   FROM documents WHERE doc_id % 5 = 0
 )"""
 
@@ -123,14 +123,14 @@ def _shingled_docs(corpus: DataFrame) -> DataFrame:
     pathologically (60+ s/pass vs 0.3 s from cache on the extremes tier's
     100k-char documents)."""
     return (
-        corpus.withColumn("toks", F.split("text", " "))
+        corpus.withColumn("toks", tokens())
         .selectExpr("doc_id", f"{_SHINGLES_EXPR} AS shingles")
         .transform(op_cache)
     )
 
 
 # (doc_id, toks) of the documents table, a _shingled_cte source.
-_DOCS_TOKS_SQL = "(SELECT doc_id, string_split(text, ' ') AS toks FROM documents)"
+_DOCS_TOKS_SQL = f"(SELECT doc_id, {tokens_sql()} AS toks FROM documents)"
 
 
 def _shingled_cte(source: str = "corpus") -> str:
@@ -217,23 +217,26 @@ def _small_corpus(sf_dir: str, table: str = "documents") -> bool:
     return table_bytes_under(sf_dir, table, _SMALL_CORPUS_BYTES)
 
 
-def _rare_shingle_index(
-    inv: DataFrame, cap: int = 50, small_corpus: bool = False
-) -> DataFrame:
+# A shingle in more documents than this is boilerplate, not evidence of a
+# near-duplicate: the near-dup index keeps only shingles at or under it.
+DF_CAP = 50
+
+
+def _rare_shingle_index(inv: DataFrame, small_corpus: bool = False) -> DataFrame:
     """(doc_id, h) rows of shingles whose STRING-level document frequency
-    is <= cap, computed from 8-byte hash keys: hash-count <= cap implies
-    every underlying string is rare (hash count >= string DF), so those
-    rows enter with no string work; only HOT hashes (count > cap — the
-    Zipf head) are re-counted at string level, and strings that prove rare
-    are rescued, so a 64-bit collision can never silently drop a rare
+    is <= DF_CAP, computed from 8-byte hash keys: hash-count <= DF_CAP
+    implies every underlying string is rare (hash count >= string DF), so
+    those rows enter with no string work; only HOT hashes (count > DF_CAP,
+    the Zipf head) are re-counted at string level, and strings that prove
+    rare are rescued, so a 64-bit collision can never silently drop a rare
     shingle. `inv` must have (doc_id, sh, h) columns. Shared by
     dedup_ngram_jaccard and text_containment_pairs; its equivalence to a
     pure string-level DF cap is proven on the real corpus in
     tests/test_plans.py::test_rescue_path_matches_string_level_cap.
 
-    Join strategy (ADVICE r4): hot_h/rescued cardinality is bounded by
-    total_rows / cap — small at bench scale but LINEAR in the corpus
-    (~2e10 entries at 1e12 shingle rows), so an UNCONDITIONAL F.broadcast
+    Join strategy: hot_h/rescued cardinality is bounded by total_rows /
+    DF_CAP — small at bench scale but LINEAR in the corpus (~2e10
+    entries at 1e12 shingle rows), so an UNCONDITIONAL F.broadcast
     hint is not scale-safe. Instead the caller passes ``small_corpus``
     (the O(1) parquet-bytes gate in _small_corpus): when the corpus is
     provably tiny the hint is applied — without it, the tuned bench
@@ -253,15 +256,15 @@ def _rare_shingle_index(
     shingle sets (p ~ 2^-64 per pair; zero observed, would surface as a
     driver hash mismatch)."""
     hash_df = inv.groupBy("h").agg(F.count(F.lit(1)).alias("hcnt"))
-    rare_h = hash_df.filter(F.col("hcnt") <= cap).select("h")
-    hot_h = hash_df.filter(F.col("hcnt") > cap).select("h")
+    rare_h = hash_df.filter(F.col("hcnt") <= DF_CAP).select("h")
+    hot_h = hash_df.filter(F.col("hcnt") > DF_CAP).select("h")
     if small_corpus:
         hot_h = F.broadcast(hot_h)
     rescued = (
         inv.join(hot_h, "h")
         .groupBy("sh", "h")
         .agg(F.count(F.lit(1)).alias("scnt"))
-        .filter(F.col("scnt") <= cap)
+        .filter(F.col("scnt") <= DF_CAP)
         .select("sh", "h")
     )
     if small_corpus:
@@ -512,7 +515,7 @@ WITH corpus AS (
   UNION ALL
   SELECT doc_id + {_DUP_OFFSET}, text FROM documents WHERE doc_id % 2 = 0
 ),
-tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM corpus),
+tok AS (SELECT doc_id, unnest({tokens_sql()}) AS tok FROM corpus),
 th AS (
   SELECT doc_id,
          {", ".join("CAST('0x'||substring(md5(tok), %d, 4) AS BIGINT) AS hc%d" % (c * 4 + 1, c) for c in range(4))}
@@ -560,14 +563,14 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 digest per token (chunk c = hex chars [4c+1, 4c+4] parsed as a
     16-bit int — one digest, four cheap substring parses), so DuckDB
     reproduces the signatures exactly and the operator is oracle-verified
-    end-to-end (rows-only until round 4).
+    end-to-end.
     """
     corpus = _corpus_with_exact_dups(spark, sf_dir)
     # (doc, chunk-hash) rows, then 64 conditional sums — all whole-stage
     # codegen, one shuffle on doc_id. (A first cut folded 64-wide arrays with
     # aggregate(zip_with(...)) per row; that was ~20x slower.)
     tok_hash = corpus.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("tok")
+        "doc_id", F.explode(tokens()).alias("tok")
     ).select(
         "doc_id",
         *[
@@ -622,7 +625,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH {_NEAR_CORPUS_CTE},
 {_shingled_cte()},
 inv AS (SELECT doc_id, unnest(shingles) AS shingle FROM shingled),
-df AS (SELECT shingle FROM inv GROUP BY shingle HAVING count(*) <= 50),
+df AS (SELECT shingle FROM inv GROUP BY shingle HAVING count(*) <= {DF_CAP}),
 rare AS (SELECT inv.doc_id, inv.shingle FROM inv JOIN df USING (shingle)),
 cand AS (
   SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_common
@@ -669,22 +672,22 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The index/self-join phase runs on xxhash64(shingle) — 8-byte shuffle
     # keys instead of ~30-byte shingle strings through the widest joins.
     # DF-cap semantics must match the oracle's STRING-level cap, but a
-    # string-keyed groupBy over every shingle row was the measured r3
-    # regression (+21%). Observation: hash_count(h) >= string_DF(s) for
-    # every s hashing to h, so a hash whose TOTAL count is <= 50 can only
-    # contain truly-rare strings — those rows enter the index with no
-    # string work at all. Only HOT hashes (count > 50, a handful of
-    # distinct values) can hide a rare string behind a collision with a
-    # hot string (ADVICE r2), so only their rows — a broadcast-pruned
-    # sliver of the corpus — are re-counted at string level, and strings
-    # that prove rare are rescued into the index. Net: the wide shuffles
-    # all carry 8-byte keys; the string aggregate runs on the hot sliver
-    # only (empty of rescues unless a 64-bit collision actually lands).
+    # string-keyed groupBy over every shingle row measured +21% wall.
+    # Observation: hash_count(h) >= string_DF(s) for every s hashing to
+    # h, so a hash whose TOTAL count is <= DF_CAP can only contain
+    # truly-rare strings — those rows enter the index with no string work
+    # at all. Only HOT hashes (count > DF_CAP, a handful of distinct
+    # values) can hide a rare string behind a collision with a hot string,
+    # so only their rows — a broadcast-pruned sliver of the corpus — are
+    # re-counted at string level, and strings that prove rare are rescued
+    # into the index. Net: the wide shuffles all carry 8-byte keys; the
+    # string aggregate runs on the hot sliver only (empty of rescues unless
+    # a 64-bit collision actually lands).
     shingle_rows = docs.select("doc_id", F.explode("shingles").alias("sh"))
     inv = shingle_rows.select(
         "doc_id", "sh", F.xxhash64("sh").alias("h")
     )
-    rare = _rare_shingle_index(inv, cap=50, small_corpus=_small_corpus(sf_dir))
+    rare = _rare_shingle_index(inv, small_corpus=_small_corpus(sf_dir))
     # count common rare shingles per pair; 3*I >= |A|+|B| is EXACTLY
     # J >= 0.5 when the DF cap doesn't bite, so almost all of the ~1.6M raw
     # candidate pairs die on integer counts before any array work
@@ -759,7 +762,7 @@ def dedup_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     key here; an md5 collision merging two windows' counts is ~2^-60 and
     the oracle applies the identical hash-level cap, so parity is exact)."""
     corpus = _corpus_with_near_dups(spark, sf_dir).withColumn(
-        "toks", F.split("text", " ")
+        "toks", tokens()
     )
     window_hashes = F.expr(
         f"""
@@ -770,7 +773,7 @@ def dedup_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         """
     )
     # op_cache: exploding the fingerprint transform over the corpus union
-    # re-tokenizes pathologically on giant docs (extremes tier, round 10)
+    # re-tokenizes pathologically on giant docs (extremes tier)
     fp = corpus.select(
         "doc_id",
         F.slice(
@@ -792,16 +795,16 @@ def dedup_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _CONTAINMENT_ORACLE = f"""
 WITH corpus AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
+  SELECT doc_id, {tokens_sql()} AS toks FROM documents
   UNION ALL
   SELECT doc_id + {_DUP_OFFSET},
-         list_slice(string_split(text, ' '),
-                    1, greatest(len(string_split(text, ' ')) // 2, {SHINGLE_K}))
+         list_slice({tokens_sql()},
+                    1, greatest(len({tokens_sql()}) // 2, {SHINGLE_K}))
   FROM documents WHERE doc_id % 7 = 0
 ),
 {_shingled_cte()},
 inv AS (SELECT doc_id, unnest(shingles) AS shingle FROM shingled),
-df AS (SELECT shingle FROM inv GROUP BY shingle HAVING count(*) <= 50),
+df AS (SELECT shingle FROM inv GROUP BY shingle HAVING count(*) <= {DF_CAP}),
 rare AS (SELECT inv.doc_id, inv.shingle FROM inv JOIN df USING (shingle)),
 cand AS (
   SELECT a.doc_id AS small_id, b.doc_id AS big_id, count(*) AS n_common
@@ -835,7 +838,7 @@ def text_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 10x-replicated sfx1.0 corpus); run exact dedup first — the cap
     stays absolute because candidates per shingle are O(DF**2)."""
     d = Tables(spark, sf_dir).documents.select("doc_id", "text")
-    toks = F.split("text", " ")
+    toks = tokens()
     truncated = d.filter(F.col("doc_id") % 7 == 0).select(
         (F.col("doc_id") + _DUP_OFFSET).alias("doc_id"),
         F.array_join(
@@ -852,7 +855,7 @@ def text_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _shingled_docs(d.unionByName(truncated))
     shingle_rows = docs.select("doc_id", F.explode("shingles").alias("sh"))
     inv = shingle_rows.select("doc_id", "sh", F.xxhash64("sh").alias("h"))
-    rare = _rare_shingle_index(inv, cap=50, small_corpus=_small_corpus(sf_dir))
+    rare = _rare_shingle_index(inv, small_corpus=_small_corpus(sf_dir))
     # ordered=False: containment roles are asymmetric (small-in-big), so
     # both pair directions are emitted and the containment filter decides
     cand = (
@@ -1041,8 +1044,6 @@ def dedup_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-
 _REMOVAL_CORPUS_SQL = f"""
 corpus AS (
   SELECT doc_id, text FROM documents
@@ -1050,8 +1051,8 @@ corpus AS (
   SELECT doc_id + {_DUP_OFFSET}, text FROM documents WHERE doc_id % 2 = 0
   UNION ALL
   SELECT doc_id + {_NEAR_OFFSET},
-         array_to_string(list_slice(string_split(text, ' '), 1,
-           len(string_split(text, ' ')) - 1), ' ')
+         array_to_string(list_slice({tokens_sql()}, 1,
+           len({tokens_sql()}) - 1), ' ')
   FROM documents WHERE doc_id % 5 = 0
 )
 """
@@ -1069,7 +1070,7 @@ exact_removed AS (
     FROM corpus)
   WHERE rn > 1
 ),
-toksed AS (SELECT doc_id, string_split(text, ' ') AS toks FROM corpus),
+toksed AS (SELECT doc_id, {tokens_sql()} AS toks FROM corpus),
 {_shingled_cte("toksed")},
 {_SIG_CTE},
 {_LSH_CAND_CTES},
@@ -1206,4 +1207,172 @@ def dedup_eval_precision_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         pround(prec).alias("precision_vs_truth"),
         pround(rec).alias("recall"),
         pround(2.0 * prec * rec / (prec + rec)).alias("f1"),
+    )
+
+
+@register(
+    "text_shingle_df_spectrum",
+    oracle=f"""
+WITH {_shingled_cte(_DOCS_TOKS_SQL)},
+df AS (
+  SELECT shingle, count(*) AS doc_freq
+  FROM (SELECT doc_id, unnest(shingles) AS shingle FROM shingled)
+  GROUP BY shingle
+)
+SELECT doc_freq, count(*) AS n_shingles
+FROM df GROUP BY doc_freq
+""",
+)
+def text_shingle_df_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Document-frequency spectrum of 3-token shingles: how many
+    distinct shingles appear in exactly k documents — the measurement
+    that justifies (or refutes) the DF_CAP the near-dup index rests on:
+    a heavy tail above the cap means the hot-hash rescue path actually
+    carries load. Two chained
+    partial-aggregable groupBys; the spectrum is ≤ max-df rows."""
+    docs = _shingled_docs(Tables(spark, sf_dir).documents)
+    df = (
+        docs.select("doc_id", F.explode("shingles").alias("shingle"))
+        .groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("doc_freq"))
+    )
+    return df.groupBy("doc_freq").agg(F.count(F.lit(1)).alias("n_shingles"))
+
+
+_FACTORS = (1, 2, 5, 10, 25, 50)
+
+
+@register(
+    "text_shingle_df_cap_loss",
+    oracle=f"""
+WITH {_shingled_cte(_DOCS_TOKS_SQL)},
+inst AS MATERIALIZED (SELECT doc_id, unnest(shingles) AS sh FROM shingled),
+df AS MATERIALIZED (SELECT sh, count(*) AS d FROM inst GROUP BY sh),
+spectrum AS MATERIALIZED (SELECT d, count(*) AS n_sh FROM df GROUP BY d),
+per_doc AS (
+  SELECT i.doc_id, min(f.d) AS min_df FROM inst i JOIN df f USING (sh)
+  GROUP BY i.doc_id
+),
+mind AS MATERIALIZED (
+  SELECT min_df AS d, count(*) AS n_docs FROM per_doc GROUP BY min_df
+),
+factors AS (SELECT unnest([{", ".join(str(f) for f in _FACTORS)}]) AS k),
+sh_curve AS (
+  SELECT f.k,
+         sum(s.n_sh) AS n_shingles,
+         sum(CASE WHEN s.d * f.k > {DF_CAP} THEN s.n_sh ELSE 0 END) AS n_capped,
+         sum(s.d * s.n_sh) AS inst_total,
+         sum(CASE WHEN s.d * f.k > {DF_CAP} THEN s.d * s.n_sh ELSE 0 END)
+           AS inst_capped
+  FROM factors f CROSS JOIN spectrum s GROUP BY f.k
+),
+doc_curve AS (
+  SELECT f.k,
+         sum(m.n_docs) AS n_docs,
+         sum(CASE WHEN m.d * f.k > {DF_CAP} THEN m.n_docs ELSE 0 END)
+           AS n_docs_blind
+  FROM factors f CROSS JOIN mind m GROUP BY f.k
+)
+SELECT CAST(s.k AS BIGINT) AS dup_factor,
+       CAST(s.n_shingles AS BIGINT) AS n_shingles,
+       CAST(s.n_capped AS BIGINT) AS n_capped,
+       round(CAST(s.n_capped AS DOUBLE) / CAST(s.n_shingles AS DOUBLE), 6)
+         AS capped_frac,
+       CAST(s.inst_total AS BIGINT) AS inst_total,
+       CAST(s.inst_capped AS BIGINT) AS inst_capped,
+       round(CAST(s.inst_capped AS DOUBLE) / CAST(s.inst_total AS DOUBLE), 6)
+         AS inst_loss_frac,
+       CAST(d.n_docs AS BIGINT) AS n_docs,
+       CAST(d.n_docs_blind AS BIGINT) AS n_docs_blind,
+       round(CAST(d.n_docs_blind AS DOUBLE) / CAST(d.n_docs AS DOUBLE), 6)
+         AS docs_blind_frac
+FROM sh_curve s JOIN doc_curve d USING (k)
+""",
+)
+def text_shingle_df_cap_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The recall boundary DF_CAP puts on the rare-shingle near-dup index
+    (dedup_ngram_jaccard / text_containment_pairs), measured in-band
+    rather than discovered at scale: under uniform ×k corpus duplication
+    every shingle's document frequency multiplies by exactly k, so the
+    loss the cap would inflict on a ×k-duplicated corpus is computable
+    from THIS corpus's DF spectrum — no ×k corpus is materialized. Per duplication factor k ∈ {1,2,5,10,
+    25,50}: the fraction of the shingle vocabulary the cap discards
+    (capped_frac), the fraction of doc-shingle candidate mass lost
+    (inst_loss_frac), and the fraction of documents left with NO indexed
+    shingle at all (docs_blind_frac — those documents are invisible to
+    the near-dup pass and MUST be caught by the staged exact-dedup stage
+    in front, the dedup_removal_plan contract). The curve's shape is the
+    deploy gate: at docs_blind_frac ≈ 1 the near-dup pass sees no
+    document at all. Everything reduces to the DF spectrum and the per-doc
+    min-DF spectrum — two bounded relations crossed with a 6-row factor
+    table — so the op costs one shingle pass + two small aggregations at
+    any corpus size; fractions are single divisions of exact integer
+    counts (no float-sum surface; the denominators are > 0 whenever a
+    row exists — a shingle-free corpus emits ZERO rows on both engines,
+    never a 0/0)."""
+    docs = _shingled_docs(Tables(spark, sf_dir).documents)
+    inst = docs.select("doc_id", F.explode("shingles").alias("sh"))
+    # op_cache: df feeds BOTH the spectrum aggregate and the per-doc
+    # min-DF join — uncached, the whole inst→groupBy(sh) shuffle runs
+    # twice (measured: 11 exchanges, two full sh-partitioned passes)
+    df = (
+        inst.groupBy("sh")
+        .agg(F.count(F.lit(1)).alias("d"))
+        .transform(op_cache)
+    )
+    spectrum = df.groupBy("d").agg(F.count(F.lit(1)).alias("n_sh"))
+    per_doc = (
+        inst.join(df, "sh").groupBy("doc_id").agg(F.min("d").alias("min_df"))
+    )
+    mind = per_doc.groupBy(F.col("min_df").alias("d")).agg(
+        F.count(F.lit(1)).alias("n_docs")
+    )
+    factors = spark.range(1).select(
+        F.explode(F.array(*[F.lit(k) for k in _FACTORS])).alias("k")
+    )
+
+    def _curve(rel: DataFrame, weights: dict[str, tuple]) -> DataFrame:
+        """Cross the (tiny) spectrum relation with the 6-row factor table
+        and sum each weight total + its capped share per factor."""
+        joined = factors.crossJoin(rel)
+        aggs = []
+        for total_name, (weight, capped_name) in weights.items():
+            capped = F.when(
+                F.col("d") * F.col("k") > DF_CAP, weight
+            ).otherwise(F.lit(0))
+            aggs.append(F.sum(weight).cast("bigint").alias(total_name))
+            aggs.append(F.sum(capped).cast("bigint").alias(capped_name))
+        return joined.groupBy("k").agg(*aggs)
+
+    def _frac(capped_name: str, total_name: str):
+        return F.round(
+            F.col(capped_name).cast("double")
+            / F.col(total_name).cast("double"),
+            6,
+        )
+
+    sh_curve = _curve(
+        spectrum,
+        {
+            "n_shingles": (F.col("n_sh"), "n_capped"),
+            "inst_total": (F.col("d") * F.col("n_sh"), "inst_capped"),
+        },
+    )
+    doc_curve = _curve(mind, {"n_docs": (F.col("n_docs"), "n_docs_blind")})
+    # factor-table joins: 6 rows a side; denominators > 0 on every
+    # emitted row (an empty spectrum crosses to zero rows, not to 0/0)
+    return (
+        sh_curve.join(doc_curve, "k")
+        .select(
+            F.col("k").cast("bigint").alias("dup_factor"),
+            "n_shingles",
+            "n_capped",
+            _frac("n_capped", "n_shingles").alias("capped_frac"),
+            "inst_total",
+            "inst_capped",
+            _frac("inst_capped", "inst_total").alias("inst_loss_frac"),
+            "n_docs",
+            "n_docs_blind",
+            _frac("n_docs_blind", "n_docs").alias("docs_blind_frac"),
+        )
     )

@@ -7,6 +7,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from ai_dataingestion_spark.catalog import register
+from ai_dataingestion_spark.functions.portable import tokens, tokens_sql
 from ai_dataingestion_spark.lexicons import SENTIMENT_LEXICON, sentiment_sql_values
 from ai_dataingestion_spark.registry import Tables
 
@@ -16,8 +17,8 @@ from ai_dataingestion_spark.registry import Tables
     oracle=f"""
 WITH lexicon(term, score) AS (VALUES {sentiment_sql_values()}),
 toks AS (
-  SELECT doc_id, lang, source, len(string_split(text, ' ')) AS n_tokens,
-         unnest(string_split(text, ' ')) AS token
+  SELECT doc_id, lang, source, len({tokens_sql()}) AS n_tokens,
+         unnest({tokens_sql()}) AS token
   FROM documents
 ),
 doc_scores AS (
@@ -56,8 +57,8 @@ def sentiment_lexicon(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         "source",
-        F.size(F.split("text", " ")).alias("n_tokens"),
-        F.explode(F.split("text", " ")).alias("token"),
+        F.size(tokens()).alias("n_tokens"),
+        F.explode(tokens()).alias("token"),
     )
     doc_scores = (
         toks.join(F.broadcast(lex), toks.token == lex.term)

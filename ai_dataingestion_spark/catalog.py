@@ -101,9 +101,11 @@ def sql_op(name: str, spark_sql: str | tuple[str, ...], oracle: str, doc: str):
 #   1  green, oracle-backed, and its code fingerprint differs from the one
 #      recorded when that green row was folded in
 #   2  no green driver row yet, rows-only
-#   4  the rest: oracle-backed before rows-only (a rows-only check buys the
-#      least evidence), then oldest latest-green round first
-# Registration order breaks ties within a rank.
+#   4  the rest
+# Within a rank, oracle-backed comes before rows-only (a rows-only check buys
+# the least evidence), then the oldest latest-green round, so an operator
+# that has waited longest for fresh evidence is not pushed out of the window
+# by newer edits; registration order breaks the remaining ties.
 # ---------------------------------------------------------------------------
 
 _PKG = __name__.partition(".")[0]
@@ -245,9 +247,7 @@ def all_specs() -> dict[str, QuerySpec]:
     def key(t: tuple[int, QuerySpec]):
         idx, spec = t
         rank = _rotation_rank(spec, latest, certified)
-        if rank == 4:
-            return (4, spec.oracle is None, latest[spec.name], idx)
-        return (rank, False, 0, idx)
+        return (rank, spec.oracle is None, latest.get(spec.name, 0), idx)
 
     ordered = sorted(enumerate(_REGISTRY.values()), key=key)
     return {spec.name: spec for _, spec in ordered}

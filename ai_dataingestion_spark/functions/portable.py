@@ -105,6 +105,18 @@ def net_price() -> Column:
     return F.col("l_extendedprice") * (1 - F.col("l_discount"))
 
 
+def tokens(col: Column | str = "text") -> Column:
+    """A document's tokens: ``col`` split on single spaces. Leading,
+    trailing and doubled spaces yield empty tokens, which are kept; NULL
+    text gives NULL tokens. Oracle twin: ``tokens_sql``."""
+    return F.split(col, " ")
+
+
+def tokens_sql(expr: str = "text") -> str:
+    """DuckDB twin of ``tokens`` over SQL expression ``expr``."""
+    return f"string_split({expr}, ' ')"
+
+
 def sql_quote(s: str) -> str:
     """``s`` as a single-quoted SQL string literal, read identically by
     Spark SQL and DuckDB."""

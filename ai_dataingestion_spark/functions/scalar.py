@@ -15,12 +15,14 @@ dialect notes are measured against DuckDB 1.0.0 (probe in SURVEY.md §2.H):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import IntegerType, MapType, StringType
+from pyspark.sql.types import MapType, StringType
 
 from ai_dataingestion_spark.catalog import register
 from ai_dataingestion_spark.functions.portable import (
     stable_rounded_sum,
     stable_rounded_sum_sql,
+    tokens,
+    tokens_sql,
 )
 from ai_dataingestion_spark.registry import Tables
 
@@ -258,21 +260,21 @@ def fn_cond(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "fn_array",
-    oracle="""
+    oracle=f"""
 SELECT doc_id,
-       len(string_split(text, ' '))                         AS n_tokens,
-       len(list_distinct(string_split(text, ' ')))          AS n_distinct,
-       array_to_string(list_slice(string_split(text, ' '), 1, 3), ' ') AS first3,
-       coalesce(list_contains(string_split(text, ' '), 'data'),
+       len({tokens_sql()})                         AS n_tokens,
+       len(list_distinct({tokens_sql()}))          AS n_distinct,
+       array_to_string(list_slice({tokens_sql()}, 1, 3), ' ') AS first3,
+       coalesce(list_contains({tokens_sql()}, 'data'),
                 false)                                       AS has_data,
-       list_sort(string_split(text, ' '))[1]                AS first_alpha
+       list_sort({tokens_sql()})[1]                AS first_alpha
 FROM documents
 """,
 )
 def fn_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array battery over tokenized document text (size/slice/distinct/
     contains/sort + element access)."""
-    d = Tables(spark, sf_dir).documents.withColumn("toks", F.split("text", " "))
+    d = Tables(spark, sf_dir).documents.withColumn("toks", tokens())
     return d.select(
         "doc_id",
         F.size("toks").cast("bigint").alias("n_tokens"),

@@ -1,7 +1,7 @@
 """Round-2 surface extensions (SURVEY.md §2.N): robust statistics (median /
 IQR outliers / weighted means), fuzzy string matching, per-label embedding
-centroids, SCD2 interval building, per-doc keyword extraction, and
-cross-source exact-dup (leakage) detection.
+centroids, SCD2 interval building, and cross-source exact-dup (leakage)
+detection.
 
 Float discipline follows SURVEY.md §5.4: sums of money PRODUCTS go through
 DECIMAL(38,6); quotients (averages, ratios) round at 6 dp; counts and keys
@@ -13,7 +13,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ai_dataingestion_spark.catalog import register
-from ai_dataingestion_spark.functions.portable import stable_sum, stable_sum_sql
+from ai_dataingestion_spark.functions.portable import (
+    stable_sum,
+    stable_sum_sql,
+    tokens,
+    tokens_sql,
+)
 from ai_dataingestion_spark.scale import broadcast_if_small
 from ai_dataingestion_spark.registry import Tables
 
@@ -219,38 +224,6 @@ def pipeline_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(F.col("ts").cast("timestamp")).alias("valid_from_us"),
         F.unix_micros(nxt.cast("timestamp")).alias("valid_to_us"),
         nxt.isNull().alias("is_current"),
-    )
-
-
-@register(
-    "text_keyword_extract",
-    oracle="""
-SELECT doc_id, token, tf, rn FROM (
-  SELECT doc_id, token, count(*) AS tf,
-         row_number() OVER (PARTITION BY doc_id
-                            ORDER BY count(*) DESC, token ASC) AS rn
-  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents)
-  GROUP BY doc_id, token
-) WHERE rn <= 3
-""",
-)
-def text_keyword_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 tokens per document by term frequency (deterministic tie-break
-    on the token): the per-doc keyword kernel. One explode + one
-    (doc, token) shuffle; the window partitions by doc_id — bounded
-    partitions (a document's vocabulary), no hot-key risk, unlike a
-    corpus-wide token window."""
-    d = Tables(spark, sf_dir).documents
-    tf = (
-        d.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
-        .groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("tf"), F.asc("token"))
-    return (
-        tf.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("doc_id", "token", "tf", "rn")
     )
 
 
@@ -567,151 +540,6 @@ def agg_histogram_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EMAIL_RE = r"[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}"
-# Spark-side twin with a run-initial guard: Java's backtracking regex
-# re-scans the local-part run from EVERY start position inside it — O(n²)
-# on a 100k-char single-token document (measured 617 s on the extremes
-# tier; DuckDB's RE2 is linear and takes 0.0 s). The negative lookbehind
-# makes every mid-run start fail in O(1). Match-set equivalence: '@' is
-# not in the local-part class, so a match's local part is always a full
-# maximal class-run (greedy backtracking can only see '@' after the run
-# end) — every match therefore begins at a run-initial position, which is
-# exactly what the lookbehind admits. RE2 has no lookbehind, so the
-# oracle keeps the plain pattern; tests/test_edges.py pins the
-# equivalence on adversarial strings.
-_EMAIL_RE_SPARK = r"(?<![a-zA-Z0-9._%+-])" + _EMAIL_RE
-# Oracle-side twin of the lookbehind: RE2 has no lookbehind, so the oracle
-# anchors run-initial starts with a consuming prefix group instead —
-# `(^|[^class])(EMAIL)` extracting/keeping group 2. This is match-set
-# equivalent to the Java lookbehind INCLUDING at restart-after-match
-# positions (ADVICE r10 #1: 'a@b.cc+x@d.ee' — the plain pattern resumes
-# mid-run after match 1 and finds a second email the lookbehind rejects;
-# the consuming prefix rejects it identically because the prefix char '+'
-# is in the local-part class). No overlap hazard for the 'g' replace: a
-# match's last char (TLD letter) is always a class char, so it can never
-# serve as the next match's (non-class) prefix char. Equivalence pinned in
-# tests/test_edges.py on adversarial strings and verified against DuckDB.
-_EMAIL_RE_ORACLE = r"(^|[^a-zA-Z0-9._%+-])(" + _EMAIL_RE + ")"
-_PHONE_RE = r"[0-9]{3}-[0-9]{3}-[0-9]{4}"
-
-
-@register(
-    "text_pii_scrub",
-    oracle=f"""
-WITH seeded AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 4 = 0
-              THEN text || ' contact user' || CAST(doc_id AS VARCHAR)
-                   || '@example.com or 555-867-' ||
-                   lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-              ELSE text END AS text
-  FROM documents
-)
-SELECT doc_id,
-       regexp_replace(regexp_replace(text, '{_EMAIL_RE_ORACLE}',
-                                     '\\1<EMAIL>', 'g'),
-                      '{_PHONE_RE}', '<PHONE>', 'g') AS scrubbed,
-       len(regexp_extract_all(text, '{_EMAIL_RE_ORACLE}', 2)) AS n_emails,
-       len(regexp_extract_all(text, '{_PHONE_RE}'))  AS n_phones
-FROM seeded
-""",
-)
-def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII redaction (a training-corpus compliance gate): regex scrubbing of
-    emails and phone numbers with per-doc redaction counts. The fixture
-    seeds deterministic PII into every 4th document so both the hit and
-    no-hit paths are exercised. All JVM-side regex — a 100 TB corpus never
-    crosses into Python for scrubbing; at scale the count columns feed the
-    quality dashboard, the scrubbed column feeds the sink."""
-    d = Tables(spark, sf_dir).documents
-    seeded = d.select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 4 == 0,
-            F.concat(
-                F.col("text"),
-                F.lit(" contact user"),
-                F.col("doc_id").cast("string"),
-                F.lit("@example.com or 555-867-"),
-                F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-            ),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    return seeded.select(
-        "doc_id",
-        F.regexp_replace(
-            F.regexp_replace("text", _EMAIL_RE_SPARK, "<EMAIL>"),
-            _PHONE_RE,
-            "<PHONE>",
-        ).alias("scrubbed"),
-        F.size(F.regexp_extract_all("text", F.lit(_EMAIL_RE_SPARK), 0))
-        .cast("bigint")
-        .alias("n_emails"),
-        F.size(F.regexp_extract_all("text", F.lit(_PHONE_RE), 0))
-        .cast("bigint")
-        .alias("n_phones"),
-    )
-
-
-_CHUNK_LEN = 32    # tokens per chunk
-_CHUNK_STRIDE = 24 # tokens between chunk starts (8-token overlap)
-
-
-@register(
-    "text_chunk_overlap",
-    oracle=f"""
-SELECT doc_id, i AS chunk_idx,
-       array_to_string(list_slice(toks, i * {_CHUNK_STRIDE} + 1,
-                                  i * {_CHUNK_STRIDE} + {_CHUNK_LEN}), ' ')
-         AS chunk_text_arr,
-       len(list_slice(toks, i * {_CHUNK_STRIDE} + 1,
-                      i * {_CHUNK_STRIDE} + {_CHUNK_LEN})) AS n_tokens
-FROM (
-  SELECT doc_id, string_split(text, ' ') AS toks,
-         unnest(range(0, CAST(floor((len(string_split(text, ' ')) - 1)
-                                    / {_CHUNK_STRIDE}) AS BIGINT) + 1)) AS i
-  FROM documents
-)
-""",
-)
-def text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlapping document chunking (context-window prep for training /
-    RAG): 32-token chunks every 24 tokens, one row per (doc, chunk) with
-    its token count. Pure expression work — sequence + slice + explode, no
-    Python; the fan-out is bounded by ceil(len/stride) and each output row
-    carries only its own slice, so shuffle volume ≈ corpus size × (1 +
-    overlap fraction)."""
-    d = Tables(spark, sf_dir).documents.withColumn("toks", F.split("text", " "))
-    chunk_ids = F.sequence(
-        F.lit(0),
-        F.floor((F.size("toks") - 1) / _CHUNK_STRIDE).cast("bigint"),
-    )
-    return (
-        d.select("doc_id", "toks", F.explode(chunk_ids).alias("chunk_idx"))
-        .select(
-            "doc_id",
-            "chunk_idx",
-            F.array_join(
-                F.slice(
-                    "toks",
-                    (F.col("chunk_idx") * _CHUNK_STRIDE + 1).cast("int"),
-                    _CHUNK_LEN,
-                ),
-                " ",
-            ).alias("chunk_text_arr"),
-            F.size(
-                F.slice(
-                    "toks",
-                    (F.col("chunk_idx") * _CHUNK_STRIDE + 1).cast("int"),
-                    _CHUNK_LEN,
-                )
-            ).cast("bigint").alias("n_tokens"),
-        )
-    )
-
-
 @register(
     "split_train_eval",
     oracle="""
@@ -876,198 +704,6 @@ def embed_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "text_perplexity_proxy",
-    oracle="""
-WITH toks AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
-),
-vocab AS (SELECT token, count(*) AS c FROM toks GROUP BY token),
-total AS (SELECT count(*) AS t FROM toks)
-SELECT doc_id,
-       round(avg(-ln(CAST(v.c AS DOUBLE) / total.t)), 6) AS avg_neg_logprob,
-       count(*) AS n_tokens
-FROM toks JOIN vocab v USING (token) CROSS JOIN total
-GROUP BY doc_id
-""",
-)
-def text_perplexity_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unigram surprisal score per document (a perplexity proxy — the
-    cheap corpus-fit signal quality filters use before any model scoring):
-    avg over the doc's tokens of -ln(corpus unigram probability). One
-    explode; the vocabulary aggregate is map-side combined and joined back
-    broadcast (vocabulary ≪ corpus at every scale); per-doc aggregation is
-    the only wide shuffle."""
-    d = Tables(spark, sf_dir).documents
-    toks = d.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
-    vocab = toks.groupBy("token").agg(F.count(F.lit(1)).alias("c"))
-    total = toks.agg(F.count(F.lit(1)).alias("t"))
-    return (
-        toks.join(F.broadcast(vocab), "token")
-        .crossJoin(F.broadcast(total))
-        .groupBy("doc_id")
-        .agg(
-            F.round(
-                F.avg(-F.log(F.col("c").cast("double") / F.col("t"))), 6
-            ).alias("avg_neg_logprob"),
-            F.count(F.lit(1)).alias("n_tokens"),
-        )
-    )
-
-
-@register(
-    "text_contamination_ngram",
-    oracle="""
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS t,
-         substring(md5('doc' || CAST(doc_id AS VARCHAR)), 1, 1) AS b
-  FROM documents
-),
-grams AS (
-  SELECT doc_id, b,
-         unnest(list_transform(range(1, len(t) - 5 + 2),
-                i -> array_to_string(t[i:i+4], ' '))) AS g
-  FROM toks WHERE len(t) >= 5
-),
-ev AS (SELECT DISTINCT g FROM grams WHERE b >= 'e'),
-tr AS (SELECT DISTINCT doc_id, g FROM grams WHERE b < 'e')
-SELECT tr.doc_id, count(*) AS n_hit_grams
-FROM tr JOIN ev USING (g)
-GROUP BY tr.doc_id
-ORDER BY n_hit_grams DESC, tr.doc_id
-""",
-)
-def text_contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination (the screen every training corpus runs
-    before an eval release): 5-gram overlap between the train split and the
-    held-out split (same deterministic md5-nibble split as
-    `split_train_eval`). The eval gram set is distinct-deduped and — being
-    orders of magnitude smaller than the corpus at every scale — broadcast
-    into the probe join; train docs are scored by how many of their
-    distinct 5-grams appear verbatim in eval. Expression-only gram
-    generation (sequence + slice + array_join), no Python."""
-    d = Tables(spark, sf_dir).documents
-    t = F.split("text", " ")
-    # project the token array to an ATTRIBUTE before the indexed lambda
-    # (capturing the split() expression re-tokenizes per gram — the
-    # text_repetition_stats pathology, round 10)
-    tk = F.col("toks")
-    grams = (
-        # filter BEFORE sequence(): Spark's sequence(1, n) with n < 1 is a
-        # DESCENDING sequence, not empty — short docs must never reach it
-        d.select("doc_id", t.alias("toks"))
-        .filter(F.size(tk) >= 5)
-        .select(
-            "doc_id",
-            F.substring(
-                F.md5(F.concat(F.lit("doc"), F.col("doc_id").cast("string"))),
-                1,
-                1,
-            ).alias("b"),
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size(tk) - 4),
-                    lambda i: F.array_join(F.slice(tk, i, 5), " "),
-                )
-            ).alias("g"),
-        )
-    )
-    ev = grams.filter(F.col("b") >= "e").select("g").distinct()
-    tr = grams.filter(F.col("b") < "e").select("doc_id", "g").distinct()
-    return (
-        tr.join(F.broadcast(ev), "g")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_hit_grams"))
-    )
-
-
-@register(
-    "text_repetition_stats",
-    oracle="""
-WITH toks AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-),
-tok_stats AS (
-  SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
-         count(*) AS n_distinct,
-         max(c) AS top_tok
-  FROM (SELECT doc_id, tok, count(*) AS c FROM toks GROUP BY doc_id, tok)
-  GROUP BY doc_id
-),
-bi AS (
-  -- split hoisted OUT of the lambda: inlined, DuckDB re-splits the text
-  -- per bigram — O(tokens x chars), 46 s on 100k-char docs (round 10)
-  SELECT doc_id,
-         unnest(list_transform(range(1, len(toks)),
-            i -> toks[i] || ' ' || toks[i + 1])) AS bg
-  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-  WHERE len(toks) >= 2
-),
-bi_stats AS (
-  SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_bigrams, max(c) AS top_bigram
-  FROM (SELECT doc_id, bg, count(*) AS c FROM bi GROUP BY doc_id, bg)
-  GROUP BY doc_id
-)
-SELECT t.doc_id, n_tokens,
-       round(CAST(n_distinct AS DOUBLE) / n_tokens, 6) AS distinct_ratio,
-       round(CAST(top_tok AS DOUBLE) / n_tokens, 6) AS top_token_share,
-       round(CAST(top_bigram AS DOUBLE) / n_bigrams, 6) AS top_bigram_share
-FROM tok_stats t JOIN bi_stats USING (doc_id)
-""",
-)
-def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition screens: per-doc distinct-token ratio, most-
-    frequent-token share, and most-frequent-bigram share — the cheap
-    signals that catch boilerplate/spam before any model-based scoring.
-    Two explode→two-level-aggregate passes (token, bigram), joined on
-    doc_id; every ratio is a quotient (engine-safe at any rounding)."""
-    d = Tables(spark, sf_dir).documents
-    t = F.split("text", " ")
-    toks = d.select("doc_id", F.explode(t).alias("tok"))
-    tok_counts = toks.groupBy("doc_id", "tok").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    tok_stats = tok_counts.groupBy("doc_id").agg(
-        F.sum("c").alias("n_tokens"),
-        F.count(F.lit(1)).alias("n_distinct"),
-        F.max("c").alias("top_tok"),
-    )
-    # project the token array to an ATTRIBUTE before the indexed lambda:
-    # capturing the split() EXPRESSION inside the lambda re-tokenizes the
-    # document per element — O(tokens × chars), 78 s vs 0.3 s on the
-    # extremes tier's 100k-char docs (measured round 10)
-    toks_col = F.col("toks")
-    bi = (
-        d.select("doc_id", t.alias("toks"))
-        .filter(F.size(toks_col) >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size(toks_col) - 1),
-                    lambda i: F.concat_ws(
-                        " ",
-                        F.element_at(toks_col, i),
-                        F.element_at(toks_col, i + 1),
-                    ),
-                )
-            ).alias("bg"),
-        )
-    )
-    bi_counts = bi.groupBy("doc_id", "bg").agg(F.count(F.lit(1)).alias("c"))
-    bi_stats = bi_counts.groupBy("doc_id").agg(
-        F.sum("c").alias("n_bigrams"), F.max("c").alias("top_bigram")
-    )
-    x = lambda c: F.col(c).cast("double")  # noqa: E731
-    return tok_stats.join(bi_stats, "doc_id").select(
-        "doc_id",
-        "n_tokens",
-        F.round(x("n_distinct") / x("n_tokens"), 6).alias("distinct_ratio"),
-        F.round(x("top_tok") / x("n_tokens"), 6).alias("top_token_share"),
-        F.round(x("top_bigram") / x("n_bigrams"), 6).alias("top_bigram_share"),
-    )
-
-
-@register(
     "dedup_normalized_text",
     oracle="""
 WITH corpus AS (
@@ -1187,9 +823,9 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pack_context_windows",
-    oracle="""
+    oracle=f"""
 WITH sized AS (
-  SELECT source, doc_id, len(string_split(text, ' ')) AS n_tokens
+  SELECT source, doc_id, len({tokens_sql()}) AS n_tokens
   FROM documents
 ),
 packed AS (
@@ -1216,7 +852,7 @@ def pack_context_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     independently, so the partition key IS the parallelism."""
     d = Tables(spark, sf_dir).documents
     sized = d.select(
-        "source", "doc_id", F.size(F.split("text", " ")).alias("n_tokens")
+        "source", "doc_id", F.size(tokens()).alias("n_tokens")
     )
     w = (
         Window.partitionBy("source")
@@ -1398,47 +1034,6 @@ def quality_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source", "doc_id", "n_chars", F.row_number().over(w).alias("rnk")
         )
         .filter(F.col("rnk") <= 10)
-    )
-
-
-@register(
-    "text_vocab_growth",
-    oracle="""
-WITH toks AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-),
-firsts AS (SELECT tok, min(doc_id) AS first_doc FROM toks GROUP BY tok),
-per_doc AS (
-  SELECT first_doc AS doc_id, count(*) AS n_new
-  FROM firsts GROUP BY first_doc
-)
-SELECT doc_id, n_new,
-       CAST(sum(n_new) OVER (ORDER BY doc_id
-            ROWS UNBOUNDED PRECEDING) AS BIGINT) AS vocab_size
-FROM per_doc
-ORDER BY doc_id
-""",
-)
-def text_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary growth curve (Heaps-law diagnostic — how fast the corpus
-    stops yielding new tokens, a saturation signal for data collection):
-    each token is attributed to the first doc that introduces it
-    (min(doc_id) per token — a uniform-key aggregate), then a running sum
-    over doc order. The cumsum's single-partition window runs over the
-    ALREADY-AGGREGATED per-doc relation (≤ one row per doc introducing
-    anything new — vanishingly small next to the token relation), so the
-    narrow final window is not the bottleneck at any scale."""
-    d = Tables(spark, sf_dir).documents
-    toks = d.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
-    firsts = toks.groupBy("tok").agg(F.min("doc_id").alias("first_doc"))
-    per_doc = firsts.groupBy(F.col("first_doc").alias("doc_id")).agg(
-        F.count(F.lit(1)).alias("n_new")
-    )
-    w = Window.orderBy("doc_id").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return per_doc.select(
-        "doc_id", "n_new", F.sum("n_new").over(w).alias("vocab_size")
     )
 
 

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ai_dataingestion_spark.catalog import register
+from ai_dataingestion_spark.functions.portable import tokens, tokens_sql
 from ai_dataingestion_spark.registry import Tables
 
 
@@ -101,10 +102,10 @@ def fn_inline_struct_array(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "fn_posexplode_outer_preserving",
-    oracle="""
+    oracle=f"""
 WITH toks AS (
   SELECT lang,
-         list_filter(string_split(coalesce(text, ''), ' '),
+         list_filter({tokens_sql("coalesce(text, '')")},
                      x -> length(x) >= 8) AS long_words
   FROM documents
 )
@@ -136,7 +137,7 @@ def fn_posexplode_outer_preserving(
     preserved row on both engines)."""
     t = Tables(spark, sf_dir)
     words = F.filter(
-        F.split(F.coalesce(F.col("text"), F.lit("")), " "),
+        tokens(F.coalesce(F.col("text"), F.lit(""))),
         lambda w: F.length(w) >= 8,
     )
     exploded = t.documents.select(

@@ -1,8 +1,7 @@
-"""Round-16 block part 1 — Spark 4.1 TIME-type surface (§2.AL), the
-remaining scalar-function gaps (§2.AM), and the DF-cap recall
-introspection op VERDICT-r15 item 3 asked for (§2.AN).
+"""Round-16 block part 1 — Spark 4.1 TIME-type surface (§2.AL) and the
+remaining scalar-function gaps (§2.AM).
 
-Nine operators in three families:
+Eight operators in two families:
 
 - **§2.AL TIME type (3 ops)**: Spark 4.1 ships an ANSI TIME data type
   behind ``spark.sql.timeType.enabled`` — construction (``make_time`` /
@@ -23,33 +22,22 @@ Nine operators in three families:
   lacks the spelling (elt ≡ 1-based list indexing, equal_null ≡ IS NOT
   DISTINCT FROM, getbit ≡ shift-and-mask, AES ≡ roundtrip identity +
   PKCS#5 length arithmetic).
-- **§2.AN DF-cap loss introspection (1 op)**: the measurable in-band
-  answer to the sfx1.0 finding that corpus-wide duplication empties the
-  rare-shingle index (VERDICT-r15 "Performance" caveat) — a duplication-
-  factor curve of how much of the shingle vocabulary, candidate mass,
-  and document population the DF≤50 cap would discard at ×k copies.
 
 Scale posture: every op is a scan → narrow projection → partial-
-aggregable groupBy over a bounded key space (hours-of-day, buckets,
-factors × spectrum); no op shuffles more than once, none collects, and
-the TIME expressions are pure codegen riding the scan.
+aggregable groupBy over a bounded key space (hours-of-day, buckets); no
+op shuffles more than once, none collects, and the TIME expressions are
+pure codegen riding the scan.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ai_dataingestion_spark.ai.dedup import (
-    _DOCS_TOKS_SQL,
-    _shingled_cte,
-    _shingled_docs,
-)
 from ai_dataingestion_spark.catalog import register
 from ai_dataingestion_spark.functions.portable import (
     stable_rounded_sum,
     stable_rounded_sum_sql,
 )
-from ai_dataingestion_spark.opcache import op_cache
 from ai_dataingestion_spark.registry import Tables
 
 
@@ -617,147 +605,3 @@ def fn_aes_roundtrip_property(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("n_gcm_wrongkey_null"),
     )
 
-
-# ---------------------------------------------------------------------------
-# text_shingle_df_cap_loss — the DF-cap recall boundary, measured in-band
-# ---------------------------------------------------------------------------
-
-_CAP = 50  # must equal ai/dedup.py's rare-shingle cap
-_FACTORS = (1, 2, 5, 10, 25, 50)
-
-
-@register(
-    "text_shingle_df_cap_loss",
-    oracle=f"""
-WITH {_shingled_cte(_DOCS_TOKS_SQL)},
-inst AS MATERIALIZED (SELECT doc_id, unnest(shingles) AS sh FROM shingled),
-df AS MATERIALIZED (SELECT sh, count(*) AS d FROM inst GROUP BY sh),
-spectrum AS MATERIALIZED (SELECT d, count(*) AS n_sh FROM df GROUP BY d),
-per_doc AS (
-  SELECT i.doc_id, min(f.d) AS min_df FROM inst i JOIN df f USING (sh)
-  GROUP BY i.doc_id
-),
-mind AS MATERIALIZED (
-  SELECT min_df AS d, count(*) AS n_docs FROM per_doc GROUP BY min_df
-),
-factors AS (SELECT unnest([{", ".join(str(f) for f in _FACTORS)}]) AS k),
-sh_curve AS (
-  SELECT f.k,
-         sum(s.n_sh) AS n_shingles,
-         sum(CASE WHEN s.d * f.k > {_CAP} THEN s.n_sh ELSE 0 END) AS n_capped,
-         sum(s.d * s.n_sh) AS inst_total,
-         sum(CASE WHEN s.d * f.k > {_CAP} THEN s.d * s.n_sh ELSE 0 END)
-           AS inst_capped
-  FROM factors f CROSS JOIN spectrum s GROUP BY f.k
-),
-doc_curve AS (
-  SELECT f.k,
-         sum(m.n_docs) AS n_docs,
-         sum(CASE WHEN m.d * f.k > {_CAP} THEN m.n_docs ELSE 0 END)
-           AS n_docs_blind
-  FROM factors f CROSS JOIN mind m GROUP BY f.k
-)
-SELECT CAST(s.k AS BIGINT) AS dup_factor,
-       CAST(s.n_shingles AS BIGINT) AS n_shingles,
-       CAST(s.n_capped AS BIGINT) AS n_capped,
-       round(CAST(s.n_capped AS DOUBLE) / CAST(s.n_shingles AS DOUBLE), 6)
-         AS capped_frac,
-       CAST(s.inst_total AS BIGINT) AS inst_total,
-       CAST(s.inst_capped AS BIGINT) AS inst_capped,
-       round(CAST(s.inst_capped AS DOUBLE) / CAST(s.inst_total AS DOUBLE), 6)
-         AS inst_loss_frac,
-       CAST(d.n_docs AS BIGINT) AS n_docs,
-       CAST(d.n_docs_blind AS BIGINT) AS n_docs_blind,
-       round(CAST(d.n_docs_blind AS DOUBLE) / CAST(d.n_docs AS DOUBLE), 6)
-         AS docs_blind_frac
-FROM sh_curve s JOIN doc_curve d USING (k)
-""",
-)
-def text_shingle_df_cap_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The DF-cap recall boundary of the rare-shingle near-dup index
-    (ai/dedup.py: dedup_ngram_jaccard / text_containment_pairs), measured
-    in-band instead of discovered at scale (VERDICT-r15 item 3): under
-    uniform ×k corpus duplication every shingle's document frequency
-    multiplies by exactly k, so the loss the DF≤50 cap would inflict on
-    a ×k-duplicated corpus is computable from THIS corpus's DF spectrum —
-    no ×k corpus is materialized. Per duplication factor k ∈ {1,2,5,10,
-    25,50}: the fraction of the shingle vocabulary the cap discards
-    (capped_frac), the fraction of doc-shingle candidate mass lost
-    (inst_loss_frac), and the fraction of documents left with NO indexed
-    shingle at all (docs_blind_frac — those documents are invisible to
-    the near-dup pass and MUST be caught by the staged exact-dedup stage
-    in front, the dedup_removal_plan contract). The curve's shape is the
-    deploy gate: docs_blind_frac ≈ 1 at k=10 reproduces the sfx1.0
-    finding. Everything reduces to the DF spectrum and the per-doc
-    min-DF spectrum — two bounded relations crossed with a 6-row factor
-    table — so the op costs one shingle pass + two small aggregations at
-    any corpus size; fractions are single divisions of exact integer
-    counts (no float-sum surface; the denominators are > 0 whenever a
-    row exists — a shingle-free corpus emits ZERO rows on both engines,
-    never a 0/0)."""
-    docs = _shingled_docs(Tables(spark, sf_dir).documents)
-    inst = docs.select("doc_id", F.explode("shingles").alias("sh"))
-    # op_cache: df feeds BOTH the spectrum aggregate and the per-doc
-    # min-DF join — uncached, the whole inst→groupBy(sh) shuffle runs
-    # twice (measured: 11 exchanges, two full sh-partitioned passes)
-    df = (
-        inst.groupBy("sh")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .transform(op_cache)
-    )
-    spectrum = df.groupBy("d").agg(F.count(F.lit(1)).alias("n_sh"))
-    per_doc = (
-        inst.join(df, "sh").groupBy("doc_id").agg(F.min("d").alias("min_df"))
-    )
-    mind = per_doc.groupBy(F.col("min_df").alias("d")).agg(
-        F.count(F.lit(1)).alias("n_docs")
-    )
-    factors = spark.range(1).select(
-        F.explode(F.array(*[F.lit(k) for k in _FACTORS])).alias("k")
-    )
-
-    def _curve(rel: DataFrame, weights: dict[str, tuple]) -> DataFrame:
-        """Cross the (tiny) spectrum relation with the 6-row factor table
-        and sum each weight total + its capped share per factor."""
-        joined = factors.crossJoin(rel)
-        aggs = []
-        for total_name, (weight, capped_name) in weights.items():
-            capped = F.when(
-                F.col("d") * F.col("k") > _CAP, weight
-            ).otherwise(F.lit(0))
-            aggs.append(F.sum(weight).cast("bigint").alias(total_name))
-            aggs.append(F.sum(capped).cast("bigint").alias(capped_name))
-        return joined.groupBy("k").agg(*aggs)
-
-    def _frac(capped_name: str, total_name: str):
-        return F.round(
-            F.col(capped_name).cast("double")
-            / F.col(total_name).cast("double"),
-            6,
-        )
-
-    sh_curve = _curve(
-        spectrum,
-        {
-            "n_shingles": (F.col("n_sh"), "n_capped"),
-            "inst_total": (F.col("d") * F.col("n_sh"), "inst_capped"),
-        },
-    )
-    doc_curve = _curve(mind, {"n_docs": (F.col("n_docs"), "n_docs_blind")})
-    # factor-table joins: 6 rows a side; denominators > 0 on every
-    # emitted row (an empty spectrum crosses to zero rows, not to 0/0)
-    return (
-        sh_curve.join(doc_curve, "k")
-        .select(
-            F.col("k").cast("bigint").alias("dup_factor"),
-            "n_shingles",
-            "n_capped",
-            _frac("n_capped", "n_shingles").alias("capped_frac"),
-            "inst_total",
-            "inst_capped",
-            _frac("inst_capped", "inst_total").alias("inst_loss_frac"),
-            "n_docs",
-            "n_docs_blind",
-            _frac("n_docs_blind", "n_docs").alias("docs_blind_frac"),
-        )
-    )

@@ -1,6 +1,6 @@
-"""Round-5 surface extensions (SURVEY.md §2.P): corpus-mixture / Zipf /
-charset text statistics, duplicate-family accounting, and cross-table
-reconciliation quality checks.
+"""Round-5 surface extensions (SURVEY.md §2.P): duplicate-family
+accounting, corpus source statistics, and cross-table reconciliation
+quality checks.
 
 Float discipline follows SURVEY.md §5.4: sums of money PRODUCTS go through
 DECIMAL(38,6) and are rounded in the decimal domain before the double
@@ -9,210 +9,16 @@ cast; quotients round at 6 dp on both sides; counts and keys are exact.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ai_dataingestion_spark.catalog import register
+from ai_dataingestion_spark.functions.portable import tokens, tokens_sql
 from ai_dataingestion_spark.registry import Tables
 
 
 # ---------------------------------------------------------------------------
-# §2.P.3 text / training-data pipeline statistics
+# §2.P.3 training-data pipeline statistics
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "text_mixture_weights",
-    oracle="""
-WITH per_lang AS (
-  SELECT lang, count(*) AS n_docs,
-         CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-  FROM documents GROUP BY lang
-),
-tot AS (SELECT sum(n_tokens) AS total_tokens, count(*) AS n_langs FROM per_lang)
-SELECT lang, n_docs, n_tokens,
-       round(CAST(n_tokens AS DOUBLE) / total_tokens, 6) AS actual_share,
-       round((1.0 / n_langs) / (CAST(n_tokens AS DOUBLE) / total_tokens), 6)
-         AS sampling_weight
-FROM per_lang, tot
-""",
-)
-def text_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-mixture reweighting for pretraining: per-language token counts
-    and the per-doc sampling weight that moves the corpus to a uniform
-    language target (weight = target_share / actual_share). Token counting
-    is a map-side expression; the per-lang relation is vocabulary-of-langs
-    sized, so the scalar totals are a broadcast cross join."""
-    t = Tables(spark, sf_dir)
-    per_lang = t.documents.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(F.split("text", " "))).alias("n_tokens"),
-    )
-    tot = per_lang.agg(
-        F.sum("n_tokens").alias("total_tokens"),
-        F.count(F.lit(1)).alias("n_langs"),
-    )
-    share = F.col("n_tokens").cast("double") / F.col("total_tokens")
-    return per_lang.crossJoin(F.broadcast(tot)).select(
-        "lang",
-        "n_docs",
-        "n_tokens",
-        F.round(share, 6).alias("actual_share"),
-        F.round((1.0 / F.col("n_langs")) / share, 6).alias("sampling_weight"),
-    )
-
-
-@register(
-    "text_zipf_slope",
-    oracle="""
-WITH freqs AS (
-  SELECT token, count(*) AS freq
-  FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents)
-  GROUP BY token
-),
-ranked AS (
-  SELECT freq,
-         row_number() OVER (ORDER BY freq DESC, token ASC) AS rank
-  FROM freqs
-)
-SELECT count(*) AS n_tokens_used,
-       round(regr_slope(ln(freq), ln(rank)), 6) AS zipf_slope
-FROM ranked WHERE rank <= 1000
-""",
-)
-def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zipf's-law fit over the top-1000 token frequencies: OLS slope of
-    ln(freq) on ln(rank) — a natural-text corpus sits near -1, and a big
-    deviation flags TEMPLATED or machine-generated data (the quality
-    signal). Spark has no regr_slope; covar_pop/var_pop compute the same
-    estimator. The rank window runs over the already-aggregated vocabulary
-    relation, and the fit itself is a 2-pass-free single aggregate."""
-    t = Tables(spark, sf_dir)
-    freqs = (
-        t.documents.select(F.explode(F.split("text", " ")).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-    w = Window.orderBy(F.desc("freq"), F.asc("token"))
-    ranked = freqs.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= 1000
-    )
-    x = F.log(F.col("rank").cast("double"))
-    y = F.log(F.col("freq").cast("double"))
-    return ranked.agg(
-        F.count(F.lit(1)).alias("n_tokens_used"),
-        F.round(F.covar_pop(x, y) / F.var_pop(x), 6).alias("zipf_slope"),
-    )
-
-
-@register(
-    "text_charset_stats",
-    oracle="""
-SELECT doc_id,
-       round(CAST(len(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE)
-             / len(text), 6) AS frac_alpha,
-       round(CAST(len(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE)
-             / len(text), 6) AS frac_digit,
-       round(CAST(len(regexp_replace(text, '[^ ]', '', 'g')) AS DOUBLE)
-             / len(text), 6) AS frac_space,
-       coalesce(CAST(len(text) <> octet_length(encode(text)) AS BOOLEAN),
-                false) AS has_non_ascii
-FROM documents
-""",
-)
-def text_charset_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document character-class profile: alpha / digit / whitespace
-    fractions plus a non-ASCII flag (character length vs UTF-8 byte length
-    disagreeing) — the cheap first-pass filters of a web-scale text
-    pipeline, all JVM-side expressions. DuckDB needs the 'g' regex flag
-    (its regexp_replace is first-match by default; Spark's is global)."""
-    t = Tables(spark, sf_dir)
-    n = F.length("text")
-    def frac(pattern):
-        # try_divide: an EMPTY text has n = 0 and DuckDB's x/0 is NULL;
-        # ANSI division would crash the whole scan on one degenerate row
-        return F.round(
-            F.try_divide(
-                F.length(F.regexp_replace("text", pattern, "")).cast("double"),
-                n,
-            ),
-            6,
-        )
-    return t.documents.select(
-        "doc_id",
-        frac("[^a-zA-Z]").alias("frac_alpha"),
-        frac("[^0-9]").alias("frac_digit"),
-        frac("[^ ]").alias("frac_space"),
-        # coalesce(false) both sides: a NULL boolean crosses the comparison
-        # harness asymmetrically (None vs NaN), and "no evidence of
-        # non-ASCII" is the honest answer for a missing document
-        F.coalesce(
-            F.length("text") != F.octet_length("text"), F.lit(False)
-        ).alias("has_non_ascii"),
-    )
-
-
-@register(
-    "text_length_band_filter",
-    oracle="""
-WITH cuts AS (
-  SELECT quantile_cont(n_chars, 0.05) AS p05,
-         quantile_cont(n_chars, 0.95) AS p95
-  FROM documents
-)
-SELECT doc_id, n_chars FROM documents, cuts
-WHERE n_chars >= p05 AND n_chars <= p95
-""",
-)
-def text_length_band_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Length-band quality filter: keep documents between the corpus's 5th
-    and 95th length percentiles — the standard truncation/boilerplate
-    guard. Spark percentile() and DuckDB quantile_cont share the linear
-    interpolation definition, so the cutoffs agree exactly; they land as a
-    1-row broadcast against the scan."""
-    t = Tables(spark, sf_dir)
-    cuts = t.documents.agg(
-        F.percentile("n_chars", 0.05).alias("p05"),
-        F.percentile("n_chars", 0.95).alias("p95"),
-    )
-    return (
-        t.documents.crossJoin(F.broadcast(cuts))
-        .filter((F.col("n_chars") >= F.col("p05")) & (F.col("n_chars") <= F.col("p95")))
-        .select("doc_id", "n_chars")
-    )
-
-
-@register(
-    "text_sentence_stats",
-    oracle="""
-WITH sent AS (
-  SELECT doc_id, n_chars,
-         len(list_filter(string_split_regex(text, '[.!?]'),
-                         s -> len(trim(s)) > 0)) AS n_sentences
-  FROM documents
-)
-SELECT doc_id, n_sentences,
-       round(CAST(n_chars AS DOUBLE) / greatest(n_sentences, 1), 6)
-         AS chars_per_sentence
-FROM sent
-""",
-)
-def text_sentence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sentence segmentation statistics: sentence count ([.!?] split,
-    empty segments dropped) and mean sentence length per document —
-    expression-only (split + filter + size), no Python."""
-    t = Tables(spark, sf_dir)
-    n_sent = F.size(
-        F.filter(
-            F.split("text", r"[.!?]"), lambda s: F.length(F.trim(s)) > 0
-        )
-    )
-    return t.documents.select(
-        "doc_id",
-        n_sent.alias("n_sentences"),
-        F.round(
-            F.col("n_chars").cast("double") / F.greatest(n_sent, F.lit(1)), 6
-        ).alias("chars_per_sentence"),
-    )
 
 
 @register(
@@ -253,9 +59,9 @@ def dedup_family_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "corpus_source_entropy",
-    oracle="""
+    oracle=f"""
 WITH per_source AS (
-  SELECT source, sum(len(string_split(text, ' '))) AS n_tokens
+  SELECT source, sum(len({tokens_sql()})) AS n_tokens
   FROM documents GROUP BY source
 ),
 tot AS (SELECT sum(n_tokens) AS total FROM per_source)
@@ -276,7 +82,7 @@ def corpus_source_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two tiny aggregates over the per-source relation; one row out."""
     t = Tables(spark, sf_dir)
     per_source = t.documents.groupBy("source").agg(
-        F.sum(F.size(F.split("text", " "))).alias("n_tokens")
+        F.sum(F.size(tokens())).alias("n_tokens")
     )
     tot = per_source.agg(F.sum("n_tokens").alias("total"))
     p = F.col("n_tokens").cast("double") / F.col("total")
@@ -293,10 +99,10 @@ def corpus_source_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_affix_prefix",
-    oracle="""
+    oracle=f"""
 WITH keyed AS (
   SELECT doc_id,
-         array_to_string(list_slice(string_split(text, ' '), 1, 5), ' ')
+         array_to_string(list_slice({tokens_sql()}, 1, 5), ' ')
            AS prefix,
          md5(text) AS full_hash
   FROM documents
@@ -316,7 +122,7 @@ def dedup_affix_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     keyed = t.documents.select(
         "doc_id",
-        F.array_join(F.slice(F.split("text", " "), 1, 5), " ").alias("prefix"),
+        F.array_join(F.slice(tokens(), 1, 5), " ").alias("prefix"),
         F.md5("text").alias("full_hash"),
     )
     return (

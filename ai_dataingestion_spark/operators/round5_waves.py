@@ -14,16 +14,12 @@ from ai_dataingestion_spark.functions.portable import (
     stable_rounded_sum_sql,
     stable_sum,
     stable_sum_sql,
+    tokens,
+    tokens_sql,
 )
 from ai_dataingestion_spark.opcache import op_cache
 from ai_dataingestion_spark.scale import broadcast_if_small
 from ai_dataingestion_spark.tmpdirs import op_tmpdir
-from ai_dataingestion_spark.ai.dedup import (
-    _DOCS_TOKS_SQL,
-    _DUP_OFFSET,
-    _shingled_cte,
-    _shingled_docs,
-)
 from pyspark.sql.types import StringType
 from ai_dataingestion_spark.registry import Tables
 import os
@@ -31,140 +27,13 @@ import os
 
 # ===========================================================================
 # wave module round5b (formerly operators/round5b.py)
-# Round-5 second wave (SURVEY.md §2.Q): corpus-divergence /
-# lexical-richness text statistics, blocked edit-distance dedup, alternative
-# means, a per-column data-quality matrix, and a per-dimension
+# Round-5 second wave (SURVEY.md §2.Q): blocked edit-distance dedup,
+# alternative means, a per-column data-quality matrix, and a per-dimension
 # label-separability (eta-squared) profile over the embedding corpus.
 #
 # Float discipline follows SURVEY.md §5.4: ratios/doubles rounded at 6 dp
 # on BOTH sides; counts, keys, and day deltas exact.
 # ===========================================================================
-
-
-# ---------------------------------------------------------------------------
-# §2.Q.4 corpus divergence + lexical richness
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "text_kl_divergence_sources",
-    oracle="""
-WITH src AS (
-  SELECT source, token, count(*) AS c
-  FROM (SELECT source, unnest(string_split(text, ' ')) AS token
-        FROM documents)
-  GROUP BY source, token
-),
-marged AS (
-  SELECT source, c,
-         sum(c) OVER (PARTITION BY token) AS cc
-  FROM src
-),
-per_source AS (
-  SELECT source,
-         CAST(sum(c) AS BIGINT) AS n_tokens,
-         count(*) AS vocab,
-         sum(CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE) / cc)) AS sum_term
-  FROM marged GROUP BY source
-)
-SELECT source, n_tokens, vocab,
-       round(sum_term / n_tokens
-             + ln(CAST(sum(n_tokens) OVER () AS DOUBLE) / n_tokens), 6)
-         AS kl_vs_corpus
-FROM per_source
-""",
-)
-def text_kl_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source KL divergence KL(P_source ‖ P_corpus) over token
-    unigram distributions — the mixture-drift detector that tells you
-    which source's language least resembles the blend it feeds. Every
-    source token also appears in the corpus distribution, so the log
-    ratio is always finite.
-
-    Single-scan shape: the raw corpus is exploded and aggregated ONCE to
-    the (source, token) relation; the ONLY window is the corpus marginal
-    sum over (token) — rows per token partition are bounded by |sources|,
-    so no hot-token skew — because both normalizers factor out of the
-    sum: KL = (1/n)·Σ c·ln(c/cc) + ln(nn/n), with n available from the
-    final per-source groupBy itself and nn from a window over the
-    sources-sized tail. (Spark recomputes branching subplans, so the
-    naive aggregate-and-rejoin formulation scans the corpus 4x —
-    measured 7.2 s vs 2.0 s at sf0.1.) Oracle computes the IDENTICAL
-    decomposition."""
-    t = Tables(spark, sf_dir)
-    src = (
-        t.documents.select(
-            "source", F.explode(F.split("text", " ")).alias("token")
-        )
-        .groupBy("source", "token")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    marged = src.select(
-        "source",
-        "c",
-        F.sum("c").over(Window.partitionBy("token")).alias("cc"),
-    )
-    c_d = F.col("c").cast("double")
-    per_source = marged.groupBy("source").agg(
-        F.sum("c").cast("bigint").alias("n_tokens"),
-        F.count(F.lit(1)).alias("vocab"),
-        F.sum(c_d * F.log(c_d / F.col("cc"))).alias("sum_term"),
-    )
-    nn = F.sum("n_tokens").over(Window.partitionBy())
-    return per_source.select(
-        "source",
-        "n_tokens",
-        "vocab",
-        F.round(
-            F.col("sum_term") / F.col("n_tokens")
-            + F.log(nn.cast("double") / F.col("n_tokens")),
-            6,
-        ).alias("kl_vs_corpus"),
-    )
-
-
-@register(
-    "text_hapax_ratio",
-    oracle="""
-WITH tok AS (
-  SELECT source, unnest(string_split(text, ' ')) AS token FROM documents
-),
-freq AS (
-  SELECT source, token, count(*) AS c FROM tok GROUP BY source, token
-)
-SELECT source,
-       CAST(sum(c) AS BIGINT) AS n_tokens,
-       count(*) AS n_types,
-       count(CASE WHEN c = 1 THEN 1 END) AS n_hapax,
-       round(CAST(count(CASE WHEN c = 1 THEN 1 END) AS DOUBLE)
-             / count(*), 6) AS hapax_ratio,
-       round(CAST(count(*) AS DOUBLE) / sum(c), 6) AS type_token_ratio
-FROM freq GROUP BY source
-""",
-)
-def text_hapax_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lexical-richness profile per source: hapax legomena (tokens seen
-    exactly once in the source) and type/token ratio — low richness
-    flags templated or machine-generated feeds. Same (source, token)
-    aggregation backbone as the KL query; output is sources-sized."""
-    t = Tables(spark, sf_dir)
-    freq = (
-        t.documents.select(
-            "source", F.explode(F.split("text", " ")).alias("token")
-        )
-        .groupBy("source", "token")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    hapax = F.count(F.when(F.col("c") == 1, 1))
-    return freq.groupBy("source").agg(
-        F.sum("c").cast("bigint").alias("n_tokens"),
-        F.count(F.lit(1)).alias("n_types"),
-        hapax.alias("n_hapax"),
-        F.round(hapax.cast("double") / F.count(F.lit(1)), 6).alias("hapax_ratio"),
-        F.round(F.count(F.lit(1)).cast("double") / F.sum("c"), 6).alias(
-            "type_token_ratio"
-        ),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -174,11 +43,11 @@ def text_hapax_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_edit_distance_blocked",
-    oracle="""
+    oracle=f"""
 WITH blocked AS (
   SELECT doc_id, text,
          n_chars // 32 AS len_bucket,
-         array_to_string(list_slice(string_split(text, ' '), 1, 5), ' ')
+         array_to_string(list_slice({tokens_sql()}, 1, 5), ' ')
            AS prefix5
   FROM documents
 ),
@@ -240,7 +109,7 @@ def dedup_edit_distance_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_ngram_jaccard (bag-of-shingles) with an ORDER-sensitive edit
     measure.
 
-    DP cost contract (VERDICT-r9 item 6, mirrored in the oracle): when
+    DP cost contract (mirrored in the oracle): when
     BOTH operands exceed 4,000 chars the distance is computed over their
     first 4,000 chars (an O(cap²) bound — near-dup triage on book-length
     docs is a prefix decision, and the extremes tier's identical 100k-char
@@ -248,8 +117,8 @@ def dedup_edit_distance_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-equal operands short-circuit to 0 before any DP on either engine
     (the oracle's CASE guards DuckDB, which has no equality fast path).
     The capped branch additionally requires full-length agreement —
-    abs(len_a - len_b) <= 0.2 * max(len_a, len_b) on the FULL texts
-    (ADVICE r10 #2): a necessary condition of the uncapped metric (edit
+    abs(len_a - len_b) <= 0.2 * max(len_a, len_b) on the FULL texts:
+    a necessary condition of the uncapped metric (edit
     distance >= length delta) that the prefix cap was blind to, so two
     book-length docs sharing a 4,000-char preamble but wildly different
     tails no longer report edit_dist 0. Mirrored on both engines;
@@ -259,7 +128,7 @@ def dedup_edit_distance_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "text",
         (F.col("n_chars") / F.lit(32)).cast("bigint").alias("len_bucket"),
-        F.array_join(F.slice(F.split("text", " "), 1, 5), " ").alias("prefix5"),
+        F.array_join(F.slice(tokens(), 1, 5), " ").alias("prefix5"),
     )
     sized = blocked.withColumn(
         "block_n", F.count(F.lit(1)).over(Window.partitionBy("len_bucket", "prefix5"))
@@ -281,7 +150,7 @@ def dedup_edit_distance_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     # threshold drop BEFORE any O(n*m) work, and byte-equal pairs
     # short-circuit to 0. Measured: 101 s -> 17.5 s on the 10x sweep.
     len_delta = F.abs(F.length(ta) - F.length(tb))
-    # full-length agreement guard (ADVICE r10 #2): necessary condition of
+    # full-length agreement guard: necessary condition of
     # the UNCAPPED metric on the full texts; only bites the capped branch
     la_full, lb_full = F.length(F.col("a.text")), F.length(F.col("b.text"))
     full_len_ok = F.abs(la_full - lb_full) <= 0.2 * F.greatest(la_full, lb_full)
@@ -475,8 +344,8 @@ def embed_label_eta_squared(spark: SparkSession, sf_dir: str) -> DataFrame:
 # wave module round5c (formerly operators/round5c.py)
 # Round-5 third wave (SURVEY.md §2.Q, continued): the two partition-
 # pruning scan paths every 100 TB lake lives on (static partition pruning
-# and dynamic partition pruning through a join), bigram conditional
-# entropy, and binary-codec function parity.
+# and dynamic partition pruning through a join) and binary-codec function
+# parity.
 # ===========================================================================
 
 # ---------------------------------------------------------------------------
@@ -573,72 +442,8 @@ def join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# §2.Q.10 bigram conditional entropy + codec parity
+# §2.Q.10 codec parity
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "text_bigram_cond_entropy",
-    oracle=f"""
-WITH big AS (
-  SELECT source, t[i] AS prev, t[i + 1] AS nxt, count(*) AS c
-  FROM (SELECT source, string_split(text, ' ') AS t FROM documents),
-       unnest(generate_series(1, len(t) - 1)) g(i)
-  GROUP BY source, t[i], t[i + 1]
-),
-marged AS (
-  SELECT source, c, sum(c) OVER (PARTITION BY source, prev) AS cu
-  FROM big
-)
-SELECT source,
-       CAST(sum(c) AS BIGINT) AS n_bigrams,
-       count(*) AS vocab_bigrams,
-       round(-{stable_sum_sql(
-           "CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE) / cu)")}
-             / sum(c), 6) AS cond_entropy
-FROM marged GROUP BY source
-""",
-)
-def text_bigram_cond_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bigram conditional entropy H(next|prev) per source — near-zero
-    means deterministic continuations (templated/boilerplate text), high
-    means diverse language; the sequence-aware sibling of
-    corpus_source_entropy. Bigrams come from zip_with over the token
-    array (map-side, no shuffle before aggregation); the only window is
-    the (source, prev) marginal — partition sizes bounded by the
-    per-prefix continuation vocabulary — because the normalizer N
-    factors out: H = -(1/N)·Σ c·ln(c/cu), with N from the final groupBy
-    itself (the text_kl_divergence_sources trick). Oracle computes the
-    IDENTICAL decomposition; the Σ c·ln(c/cu) numerator accumulates in
-    DECIMAL(38,6) (portable.py:stable_sum — each term is an identical
-    double on both engines; the 1e-6 per-term quantization lands ~8
-    orders below the 6dp entropy boundary after /N)."""
-    t = Tables(spark, sf_dir)
-    toks = F.split("text", " ")
-    pair = F.zip_with(
-        F.slice(toks, 1, F.size(toks) - 1),
-        F.slice(toks, 2, F.size(toks) - 1),
-        lambda x, y: F.struct(x.alias("prev"), y.alias("nxt")),
-    )
-    big = (
-        t.documents.select("source", F.explode(pair).alias("p"))
-        .select("source", F.col("p.prev").alias("prev"), F.col("p.nxt").alias("nxt"))
-        .groupBy("source", "prev", "nxt")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    marged = big.select(
-        "source",
-        "c",
-        F.sum("c").over(Window.partitionBy("source", "prev")).alias("cu"),
-    )
-    c_d = F.col("c").cast("double")
-    return marged.groupBy("source").agg(
-        F.sum("c").cast("bigint").alias("n_bigrams"),
-        F.count(F.lit(1)).alias("vocab_bigrams"),
-        F.round(
-            -stable_sum(c_d * F.log(c_d / F.col("cu"))) / F.sum("c"), 6
-        ).alias("cond_entropy"),
-    )
 
 
 @register(
@@ -1249,9 +1054,7 @@ def quality_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame
 # ===========================================================================
 # wave module round5h (formerly operators/round5h.py)
 # Round-5 eighth wave (SURVEY.md §2.Q, continued): discrete-vs-continuous
-# percentile parity, the shingle document-frequency spectrum (the
-# introspection that justifies the rare-shingle DF cap), and a per-type
-# ingestion freshness report.
+# percentile parity and a per-type ingestion freshness report.
 # ===========================================================================
 
 @register(
@@ -1288,35 +1091,6 @@ def win_percentile_disc_vs_cont(spark: SparkSession, sf_dir: str) -> DataFrame:
             "percentile_cont(0.9) WITHIN GROUP (ORDER BY l_quantity)"
         ).alias("p90_cont"),
     )
-
-
-@register(
-    "text_shingle_df_spectrum",
-    oracle=f"""
-WITH {_shingled_cte(_DOCS_TOKS_SQL)},
-df AS (
-  SELECT shingle, count(*) AS doc_freq
-  FROM (SELECT doc_id, unnest(shingles) AS shingle FROM shingled)
-  GROUP BY shingle
-)
-SELECT doc_freq, count(*) AS n_shingles
-FROM df GROUP BY doc_freq
-""",
-)
-def text_shingle_df_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document-frequency spectrum of 3-token shingles: how many
-    distinct shingles appear in exactly k documents — the measurement
-    that justifies (or refutes) the rare-shingle DF≤50 cap the near-dup
-    index rests on (ai/dedup.py): a heavy tail above the cap means the
-    hot-hash rescue path actually carries load. Two chained
-    partial-aggregable groupBys; the spectrum is ≤ max-df rows."""
-    docs = _shingled_docs(Tables(spark, sf_dir).documents)
-    df = (
-        docs.select("doc_id", F.explode("shingles").alias("shingle"))
-        .groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("doc_freq"))
-    )
-    return df.groupBy("doc_freq").agg(F.count(F.lit(1)).alias("n_shingles"))
 
 
 @register(
@@ -1475,202 +1249,9 @@ def fn_string_format(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # wave module round5j (formerly operators/round5j.py)
-# Round-5 tenth wave (SURVEY.md §2.Q, continued): bigram-PMI collocation
-# extraction, chunk-granularity inter-document duplication ratio
-# (MassiveText-style filter), a schema-evolution mergeSchema scan, and a
-# parquet compression-codec round-trip sink.
+# Round-5 tenth wave (SURVEY.md §2.Q, continued): a schema-evolution
+# mergeSchema scan and a parquet compression-codec round-trip sink.
 # ===========================================================================
-
-@register(
-    "text_collocation_pmi",
-    oracle="""
-WITH toks AS (
-  SELECT t[i] AS w FROM
-    (SELECT string_split(text, ' ') AS t FROM documents),
-    unnest(generate_series(1, len(t))) g(i)
-),
-uni AS (SELECT w, count(*) AS c FROM toks GROUP BY w),
-n_uni AS (SELECT CAST(sum(c) AS DOUBLE) AS nu FROM uni),
-big AS (
-  SELECT t[i] AS w1, t[i + 1] AS w2, count(*) AS c
-  FROM (SELECT string_split(text, ' ') AS t FROM documents),
-       unnest(generate_series(1, len(t) - 1)) g(i)
-  GROUP BY t[i], t[i + 1]
-),
-n_big AS (SELECT CAST(sum(c) AS DOUBLE) AS nb FROM big),
-scored AS (
-  SELECT w1, w2, b.c AS n_pair,
-         floor(ln((CAST(b.c AS DOUBLE) / nb)
-                  / ((CAST(u1.c AS DOUBLE) / nu)
-                     * (CAST(u2.c AS DOUBLE) / nu)))
-               * 1000000 + 0.5) / 1000000 AS pmi
-  FROM big b
-  JOIN uni u1 ON b.w1 = u1.w
-  JOIN uni u2 ON b.w2 = u2.w
-  CROSS JOIN n_uni CROSS JOIN n_big
-  WHERE b.c >= 5
-)
-SELECT w1, w2, n_pair, pmi
-FROM (SELECT *, row_number() OVER (ORDER BY pmi DESC, w1, w2) AS rn
-      FROM scored)
-WHERE rn <= 50
-""",
-)
-def text_collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Collocation extraction: top-50 adjacent-token pairs by pointwise
-    mutual information ln(p(ab)/(p(a)p(b))) with a ≥5 occurrence floor —
-    the classic multiword-expression detector (Church & Hanks 1990) that
-    feeds tokenizer-vocabulary and stop-phrase decisions. Bigrams come
-    from zip_with (map-side); unigram marginals join on token (vocab-
-    sized, partial-aggregated before the shuffle); the two corpus
-    totals are single-row broadcasts. PMI is portable-6dp-rounded
-    BEFORE ranking with a (w1, w2) tiebreak, so the top-50 cut is
-    deterministic cross-engine (the Q2 argmin-stability rule)."""
-    d = Tables(spark, sf_dir).documents
-    toks = F.split("text", " ")
-    uni = (
-        d.select(F.explode(toks).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    pair = F.zip_with(
-        F.slice(toks, 1, F.size(toks) - 1),
-        F.slice(toks, 2, F.size(toks) - 1),
-        lambda x, y: F.struct(x.alias("w1"), y.alias("w2")),
-    )
-    big = (
-        d.select(F.explode(pair).alias("p"))
-        .select(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-        .groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") >= 5)
-    )
-    n_uni = uni.agg(F.sum("c").cast("double").alias("nu"))
-    n_big_all = (
-        d.select(F.explode(pair).alias("p"))
-        .agg(F.count(F.lit(1)).cast("double").alias("nb"))
-    )
-    pmi = F.log(
-        (F.col("c").cast("double") / F.col("nb"))
-        / (
-            (F.col("u1c").cast("double") / F.col("nu"))
-            * (F.col("u2c").cast("double") / F.col("nu"))
-        )
-    )
-    scored = (
-        big.join(
-            uni.select(F.col("w").alias("w1"), F.col("c").alias("u1c")), "w1"
-        )
-        .join(
-            uni.select(F.col("w").alias("w2"), F.col("c").alias("u2c")), "w2"
-        )
-        .crossJoin(F.broadcast(n_uni))
-        .crossJoin(F.broadcast(n_big_all))
-        .select("w1", "w2", F.col("c").alias("n_pair"), pround(pmi).alias("pmi"))
-    )
-    w = Window.orderBy(F.desc("pmi"), F.asc("w1"), F.asc("w2"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 50)
-        .select("w1", "w2", "n_pair", "pmi")
-    )
-
-
-_CHUNK_W = 20
-
-
-@register(
-    "text_chunk_dup_ratio",
-    oracle=f"""
-WITH corpus AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-  UNION ALL
-  SELECT doc_id + {_DUP_OFFSET}, string_split(text, ' ')
-  FROM documents WHERE doc_id % 2 = 0
-),
-chunks AS (
-  SELECT doc_id,
-         md5(array_to_string(
-           list_slice(toks, (i - 1) * {_CHUNK_W} + 1, i * {_CHUNK_W}), ' '
-         )) AS chash
-  FROM corpus,
-       unnest(generate_series(
-         1, CAST(ceil(len(toks) / {_CHUNK_W}.0) AS BIGINT))) g(i)
-),
-freq AS (
-  SELECT chash, count(DISTINCT doc_id) AS ndocs FROM chunks GROUP BY chash
-),
-per_doc AS (
-  SELECT c.doc_id,
-         count(*) AS n_chunks,
-         CAST(sum(CASE WHEN f.ndocs > 1 THEN 1 ELSE 0 END) AS BIGINT)
-           AS dup_chunks
-  FROM chunks c JOIN freq f ON c.chash = f.chash
-  GROUP BY c.doc_id
-)
-SELECT doc_id, n_chunks, dup_chunks,
-       floor(CAST(dup_chunks AS DOUBLE) / n_chunks * 1000000 + 0.5)
-         / 1000000 AS dup_ratio,
-       CAST(CASE WHEN CAST(dup_chunks AS DOUBLE) / n_chunks >= 0.5
-                 THEN 1 ELSE 0 END AS INT) AS is_mostly_duplicate
-FROM per_doc
-""",
-)
-def text_chunk_dup_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chunk-granularity inter-document duplication (the MassiveText /
-    Gopher "duplicate content fraction" filter, Rae 2021 §A1.2): split
-    each doc into non-overlapping {W}-token chunks, hash each chunk, and
-    score every doc by the fraction of its chunks that also appear in
-    ANOTHER doc — catching partial-copy docs that document-level exact
-    dedup misses and near-dup shingling prices quadratically. Exact
-    copies of even-id docs are injected (the _corpus_with_exact_dups
-    idiom) so recall is verifiable: injected copies score 1.0. Chunks
-    shuffle as md5 hashes (never text); the chunk-frequency relation is
-    hash-keyed and partial-aggregable — two shuffles total at any
-    corpus size.""".replace("{W}", str(_CHUNK_W))
-    d = Tables(spark, sf_dir).documents.select("doc_id", "text")
-    dups = d.filter(F.col("doc_id") % 2 == 0).select(
-        (F.col("doc_id") + _DUP_OFFSET).alias("doc_id"), "text"
-    )
-    corpus = d.unionByName(dups).withColumn("toks", F.split("text", " "))
-    chunk_arr = F.expr(
-        f"""transform(
-              sequence(1, cast(ceil(size(toks) / {_CHUNK_W}.0) as bigint)),
-              i -> md5(concat_ws(' ',
-                     slice(toks, (i - 1) * {_CHUNK_W} + 1, {_CHUNK_W})))
-            )"""
-    )
-    # chunks feeds both the frequency aggregate and the per-doc join.
-    # Deliberately NOT cached: the relation is corpus-linear, and the 10x
-    # sweep measured caching SLOWER (2.5 s vs 1.8 s) — materialization
-    # costs more than re-running the cheap columnar scan+hash, and pinning
-    # a corpus-sized relation is the wrong memory posture at lake scale.
-    chunks = corpus.select(
-        "doc_id", F.explode(chunk_arr).alias("chash")
-    )
-    freq = chunks.groupBy("chash").agg(
-        F.countDistinct("doc_id").alias("ndocs")
-    )
-    per_doc = (
-        chunks.join(freq, "chash")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_chunks"),
-            F.sum(F.when(F.col("ndocs") > 1, 1).otherwise(0))
-            .cast("bigint")
-            .alias("dup_chunks"),
-        )
-    )
-    ratio = F.col("dup_chunks").cast("double") / F.col("n_chunks")
-    return per_doc.select(
-        "doc_id",
-        "n_chunks",
-        "dup_chunks",
-        pround(ratio).alias("dup_ratio"),
-        F.when(ratio >= 0.5, 1).otherwise(0).cast("int").alias(
-            "is_mostly_duplicate"
-        ),
-    )
 
 
 @register(
@@ -2866,14 +2447,14 @@ def pipeline_compaction_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "fn_array_set_ops",
-    oracle="""
+    oracle=f"""
 WITH halves AS (
   SELECT doc_id,
-         list_slice(string_split(text, ' '), 1,
-                    len(string_split(text, ' ')) // 2) AS a,
-         list_slice(string_split(text, ' '),
-                    len(string_split(text, ' ')) // 2 + 1,
-                    len(string_split(text, ' '))) AS b
+         list_slice({tokens_sql()}, 1,
+                    len({tokens_sql()}) // 2) AS a,
+         list_slice({tokens_sql()},
+                    len({tokens_sql()}) // 2 + 1,
+                    len({tokens_sql()})) AS b
   FROM documents
 )
 SELECT doc_id,
@@ -2898,7 +2479,7 @@ def fn_array_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's list_distinct/list_filter/list_contains spellings;
     outputs are scalar cardinalities, so no array ordering ever
     crosses the compare harness."""
-    d = Tables(spark, sf_dir).documents.withColumn("toks", F.split("text", " "))
+    d = Tables(spark, sf_dir).documents.withColumn("toks", tokens())
     half = (F.size("toks") / 2).cast("int")
     halved = d.select(
         "doc_id",
@@ -3067,8 +2648,7 @@ def agg_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # wave module round5t (formerly operators/round5t.py)
 # Round-5 twentieth wave (SURVEY.md §2.Q, continued): empty-relation
-# aggregate semantics, the default-window-frame ties pin, and pairwise
-# Jensen-Shannon source drift.
+# aggregate semantics and the default-window-frame ties pin.
 # ===========================================================================
 
 @register(
@@ -3174,209 +2754,18 @@ def win_default_frame_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "text_js_divergence_pairwise",
-    oracle="""
-WITH src AS (
-  SELECT source, token, count(*) AS c
-  FROM (SELECT source, unnest(string_split(text, ' ')) AS token
-        FROM documents)
-  GROUP BY source, token
-),
-tot AS (SELECT source, CAST(sum(c) AS DOUBLE) AS n FROM src GROUP BY source),
-p AS (
-  SELECT s.source, s.token, CAST(s.c AS DOUBLE) / t.n AS p
-  FROM src s JOIN tot t ON s.source = t.source
-),
-pairs AS (
-  SELECT a.source AS src1, b.source AS src2, a.token,
-         a.p AS pa, b.p AS pb, (a.p + b.p) / 2 AS m
-  FROM p a JOIN p b ON a.token = b.token AND a.source < b.source
-)
-SELECT src1, src2,
-       count(*) AS n_shared_tokens,
-       floor((0.5 * sum(pa * ln(pa / m)) + 0.5 * sum(pb * ln(pb / m)))
-             * 1000000 + 0.5) / 1000000 AS js_divergence
-FROM pairs GROUP BY src1, src2
-""",
-)
-def text_js_divergence_pairwise(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Pairwise Jensen-Shannon divergence between sources' token
-    unigram distributions — the SYMMETRIC, bounded drift metric
-    (0..ln 2) corpus monitoring actually dashboards, complementing the
-    asymmetric text_kl_divergence_sources. Token probabilities come
-    from exact integer counts with one double division each; the
-    token-keyed self-join is bounded by |sources| per token partition
-    (the KL op's no-hot-token argument), and each pair's sum spans the
-    shared vocabulary, 6dp-rounded per the float-aggregate rule.
-    Tokens absent from one source contribute their finite half-terms
-    only when shared — absent-token mass needs smoothing, documented
-    as out of scope (this corpus shares its full vocabulary)."""
-    t = Tables(spark, sf_dir)
-    src = (
-        t.documents.select(
-            "source", F.explode(F.split("text", " ")).alias("token")
-        )
-        .groupBy("source", "token")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    tot = src.groupBy("source").agg(F.sum("c").cast("double").alias("n"))
-    p = src.join(F.broadcast(tot), "source").select(
-        "source", "token", (F.col("c").cast("double") / F.col("n")).alias("p")
-    )
-    a = p.select(
-        F.col("source").alias("src1"),
-        "token",
-        F.col("p").alias("pa"),
-    )
-    b = p.select(
-        F.col("source").alias("src2"),
-        "token",
-        F.col("p").alias("pb"),
-    )
-    pairs = (
-        a.join(b, "token")
-        .filter(F.col("src1") < F.col("src2"))
-        .withColumn("m", (F.col("pa") + F.col("pb")) / 2)
-    )
-    js = 0.5 * F.sum(
-        F.col("pa") * F.log(F.col("pa") / F.col("m"))
-    ) + 0.5 * F.sum(F.col("pb") * F.log(F.col("pb") / F.col("m")))
-    return pairs.groupBy("src1", "src2").agg(
-        F.count(F.lit(1)).alias("n_shared_tokens"),
-        pround(js).alias("js_divergence"),
-    )
-
-
 # ===========================================================================
 # wave module round5u (formerly operators/round5u.py)
-# Round-5 twenty-first wave (SURVEY.md §2.Q, continued): BM25 lexical
-# ranking, inverted-index boolean search, and doc⇄embedding coverage
-# audit.
+# Round-5 twenty-first wave (SURVEY.md §2.Q, continued): inverted-index
+# boolean search and doc⇄embedding coverage audit.
 # ===========================================================================
-
-_BM25_TERMS = ["hash", "join", "filter"]
-_K1, _B = 1.2, 0.75
-
-
-def _bm25_term_sql(term: str) -> str:
-    """One term's BM25 contribution (DuckDB dialect), 0 when absent."""
-    return f"""
-coalesce(max(CASE WHEN term = '{term}' THEN
-  ln((nd - df + 0.5) / (df + 0.5) + 1)
-  * (tf * ({_K1} + 1))
-  / (tf + {_K1} * (1 - {_B} + {_B} * dl / avgdl))
-END), 0.0)"""
-
-
-@register(
-    "text_bm25_topk",
-    oracle=f"""
-WITH toks AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
-),
-dl_rel AS (
-  SELECT doc_id, CAST(count(*) AS DOUBLE) AS dl FROM toks GROUP BY doc_id
-),
-stats AS (
-  SELECT CAST(count(*) AS DOUBLE) AS nd,
-         CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl
-  FROM dl_rel
-),
-tf_rel AS (
-  SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf
-  FROM toks WHERE term IN ({", ".join(f"'{t}'" for t in _BM25_TERMS)})
-  GROUP BY doc_id, term
-),
-df_rel AS (
-  SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf_rel GROUP BY term
-),
-scored AS (
-  SELECT t.doc_id,
-         {" + ".join("(" + _bm25_term_sql(t) + ")" for t in _BM25_TERMS)}
-           AS score
-  FROM tf_rel t
-  JOIN df_rel USING (term)
-  JOIN dl_rel USING (doc_id)
-  CROSS JOIN stats
-  GROUP BY t.doc_id
-)
-SELECT doc_id, score FROM (
-  SELECT doc_id,
-         floor(score * 1000000 + 0.5) / 1000000 AS score,
-         row_number() OVER (
-           ORDER BY floor(score * 1000000 + 0.5) / 1000000 DESC, doc_id
-         ) AS rn
-  FROM scored)
-WHERE rn <= 20
-""",
-)
-def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 lexical ranking (Robertson-Walker, k1=1.2 b=0.75) for the
-    fixed query {{hash, join, filter}}: THE retrieval scorer behind
-    every keyword-search and hybrid-RAG pipeline, built relationally —
-    tf/df/doclen from exact integer counts, idf the +1-smoothed form,
-    per-term contributions assembled via conditional aggregation so the
-    three-term sum has a FIXED evaluation order (a GROUP BY over terms
-    would sum in nondeterministic order), then 6dp-rounded BEFORE the
-    deterministic top-20 cut. Scale shape: one token explode, (doc,
-    term) and (term) aggregates, df/stats broadcast — the inverted-
-    index build cost, paid once."""
-    d = Tables(spark, sf_dir).documents
-    toks = d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
-    dl_rel = toks.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("double").alias("dl")
-    )
-    stats = dl_rel.agg(
-        F.count(F.lit(1)).cast("double").alias("nd"),
-        (F.sum("dl") / F.count(F.lit(1))).alias("avgdl"),
-    )
-    tf_rel = (
-        toks.filter(F.col("term").isin(_BM25_TERMS))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-    )
-    df_rel = tf_rel.groupBy("term").agg(
-        F.count(F.lit(1)).cast("double").alias("df")
-    )
-    joined = (
-        tf_rel.join(F.broadcast(df_rel), "term")
-        .join(dl_rel, "doc_id")
-        .crossJoin(F.broadcast(stats))
-    )
-    contrib = (
-        F.log(
-            (F.col("nd") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1
-        )
-        * (F.col("tf") * (_K1 + 1))
-        / (
-            F.col("tf")
-            + _K1 * (1 - _B + _B * F.col("dl") / F.col("avgdl"))
-        )
-    )
-    per_term = [
-        F.coalesce(
-            F.max(F.when(F.col("term") == t, contrib)), F.lit(0.0)
-        )
-        for t in _BM25_TERMS
-    ]
-    score = per_term[0] + per_term[1] + per_term[2]
-    scored = joined.groupBy("doc_id").agg(pround(score).alias("score"))
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 20)
-        .select("doc_id", "score")
-    )
 
 
 @register(
     "search_inverted_index_and_query",
-    oracle="""
+    oracle=f"""
 WITH idx AS (
-  SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS term
+  SELECT DISTINCT doc_id, unnest({tokens_sql()}) AS term
   FROM documents
 )
 SELECT 'hash AND join' AS query, count(*) AS n_matches,
@@ -3408,7 +2797,7 @@ def search_inverted_index_and_query(
     queries."""
     d = Tables(spark, sf_dir).documents
     idx = (
-        d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
+        d.select("doc_id", F.explode(tokens()).alias("term"))
         .distinct()
         .transform(op_cache)
     )
@@ -3841,7 +3230,7 @@ _SHARD_DOCS = 500
     oracle=f"""
 WITH assigned AS (
   SELECT doc_id, n_chars,
-         len(string_split(text, ' ')) AS n_tokens,
+         len({tokens_sql()}) AS n_tokens,
          CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15)
               AS BIGINT) % 8 AS shard_id
   FROM documents
@@ -3877,7 +3266,7 @@ def pipeline_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = d.select(
         "doc_id",
         "n_chars",
-        F.size(F.split("text", " ")).alias("n_tokens"),
+        F.size(tokens()).alias("n_tokens"),
         shard.alias("shard_id"),
     )
     return assigned.groupBy("shard_id").agg(
@@ -4163,8 +3552,7 @@ def sort_keyset_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # wave module round5y (formerly operators/round5y.py)
 # Round-5 twenty-fifth wave (SURVEY.md §2.Q, continued): business-day
-# latency arithmetic, min-max feature scaling with invariant checks, and
-# readability scoring.
+# latency arithmetic and min-max feature scaling with invariant checks.
 # ===========================================================================
 
 @register(
@@ -4314,116 +3702,12 @@ def fn_minmax_scale_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "text_readability_score",
-    oracle="""
-WITH scored AS (
-  SELECT source,
-         len(string_split(text, ' ')) AS n_words,
-         greatest(len(regexp_split_to_array(text, '[.!?]+')) - 1, 1)
-           AS n_sentences,
-         len(regexp_extract_all(text, '[aeiouy]+')) AS n_syllables
-  FROM documents
-),
-fk AS (
-  SELECT source,
-         floor((0.39 * (CAST(n_words AS DOUBLE) / n_sentences)
-                + 11.8 * (CAST(n_syllables AS DOUBLE) / n_words) - 15.59)
-               * 1000000 + 0.5) / 1000000 AS grade
-  FROM scored
-)
-SELECT source,
-       count(*) AS n_docs,
-       CAST(quantile_cont(grade, 0.5) AS DOUBLE) AS p50_grade,
-       floor(CAST(sum(CAST(grade AS DECIMAL(38, 6))) AS DOUBLE) / count(*)
-             * 1000000 + 0.5) / 1000000 AS mean_grade
-FROM fk GROUP BY source
-""",
-)
-def text_readability_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flesch-Kincaid grade-level readability per source, with the
-    standard syllable proxy (vowel-run count — the deterministic
-    heuristic used when no pronunciation dictionary ships): grade =
-    0.39·(words/sentences) + 11.8·(syllables/words) − 15.59. The
-    text-difficulty signal that routes corpora toward child-safe,
-    simplified, or technical training mixes. Per-doc grades are
-    portable-rounded once, then the per-source mean accumulates the
-    ROUNDED values in DECIMAL (order-independent) and the median
-    interpolates on them. Expression-only until the sources-sized
-    rollup."""
-    d = Tables(spark, sf_dir).documents
-    n_words = F.size(F.split("text", " "))
-    n_sentences = F.greatest(
-        F.size(F.split("text", r"[.!?]+")) - 1, F.lit(1)
-    )
-    n_syll = F.size(
-        F.regexp_extract_all(F.col("text"), F.lit("[aeiouy]+"), F.lit(0))
-    )
-    grade = pround(
-        0.39 * (n_words.cast("double") / n_sentences)
-        + 11.8 * (n_syll.cast("double") / n_words)
-        - 15.59
-    )
-    fk = d.select("source", grade.alias("grade"))
-    n = F.count(F.lit(1))
-    return fk.groupBy("source").agg(
-        n.alias("n_docs"),
-        F.expr("percentile_cont(0.5) WITHIN GROUP (ORDER BY grade)").alias(
-            "p50_grade"
-        ),
-        pround(
-            F.sum(F.col("grade").cast("decimal(38,6)")).cast("double") / n
-        ).alias("mean_grade"),
-    )
-
-
 # ===========================================================================
 # wave module round5z (formerly operators/round5z.py)
-# Round-5 twenty-sixth wave (SURVEY.md §2.Q, continued): tokenizer
-# vocabulary coverage, as-of join direction variants, key-sequence gap
-# auditing via the two-level decomposition, and a snapshot-retention GC
-# planner.
+# Round-5 twenty-sixth wave (SURVEY.md §2.Q, continued): as-of join
+# direction variants, key-sequence gap auditing via the two-level
+# decomposition, and a snapshot-retention GC planner.
 # ===========================================================================
-
-_VOCAB = [
-    "join", "hash", "row", "batch", "scan", "filter", "merge", "order",
-    "column", "index", "sort", "cache", "spill", "page", "key", "block",
-]
-
-
-@register(
-    "text_vocab_oov_rate",
-    oracle=f"""
-WITH toks AS (
-  SELECT source, unnest(string_split(text, ' ')) AS w FROM documents
-)
-SELECT source,
-       CAST(count(*) AS BIGINT) AS n_tokens,
-       CAST(sum(CASE WHEN w IN ({", ".join(f"'{w}'" for w in _VOCAB)})
-                     THEN 0 ELSE 1 END) AS BIGINT) AS n_oov,
-       floor(CAST(sum(CASE WHEN w IN ({", ".join(f"'{w}'" for w in _VOCAB)})
-                           THEN 0 ELSE 1 END) AS DOUBLE) / count(*)
-             * 1000000 + 0.5) / 1000000 AS oov_rate
-FROM toks GROUP BY source
-""",
-)
-def text_vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer-vocabulary coverage: per source, the share of corpus
-    tokens OUTSIDE a fixed 16-entry vocabulary — the out-of-vocabulary
-    rate that decides whether a tokenizer (or its replacement) fits a
-    data source before a single training step is paid. The vocab is a
-    literal shared verbatim with the oracle (the sentiment-lexicon
-    fixture idiom); one token explode + conditional counts,
-    partial-aggregable, sources-sized output."""
-    d = Tables(spark, sf_dir).documents
-    toks = d.select("source", F.explode(F.split("text", " ")).alias("w"))
-    oov = F.sum(F.when(F.col("w").isin(_VOCAB), 0).otherwise(1))
-    n = F.count(F.lit(1))
-    return toks.groupBy("source").agg(
-        n.cast("bigint").alias("n_tokens"),
-        oov.cast("bigint").alias("n_oov"),
-        pround(oov.cast("double") / n).alias("oov_rate"),
-    )
 
 
 @register(

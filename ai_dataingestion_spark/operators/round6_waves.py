@@ -10,16 +10,13 @@ from ai_dataingestion_spark.functions.portable import (
     grid_sum,
     grid_sum_sql,
     pround,
+    tokens,
+    tokens_sql,
 )
 from ai_dataingestion_spark.opcache import op_cache
 from ai_dataingestion_spark.tmpdirs import op_tmpdir
 from ai_dataingestion_spark.scale import broadcast_if_small, table_bytes
-from ai_dataingestion_spark.ai.dedup import (
-    _DUCK_SHINGLE,
-    _duck_h,
-    _shingles_sql,
-    _spark_h,
-)
+from ai_dataingestion_spark.ai.dedup import _duck_h, _spark_h
 import os
 from ai_dataingestion_spark.registry import Tables
 import glob
@@ -28,7 +25,7 @@ import glob
 # ===========================================================================
 # wave module round6a (formerly operators/round6a.py)
 # Round-5 twenty-seventh wave (SURVEY.md §2.Q, continued): sink
-# file-layout auditing and incremental batch novelty.
+# file-layout auditing.
 # ===========================================================================
 
 
@@ -68,80 +65,6 @@ def sink_file_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("fname").cast("int").alias("n_files"),
         F.count(F.lit(1)).alias("n_rows"),
         F.sum("l_orderkey").cast("bigint").alias("key_sum"),
-    )
-
-
-@register(
-    "text_batch_novelty_rate",
-    oracle=f"""
-WITH tokenized AS MATERIALIZED (
-  -- split hoisted OUT of the lateral: inlined, DuckDB re-splits the text
-  -- per (row, i) — O(tokens x chars) on 100k-char docs (round 10)
-  SELECT doc_id, string_split(text, ' ') AS toks
-  FROM documents
-  -- text IS NOT NULL: a NULL doc yields no shingles (it would otherwise
-  -- contribute a DISTINCT NULL digest on this side only)
-  WHERE text IS NOT NULL
-),
-lake_grams AS (
-  SELECT DISTINCT md5({_DUCK_SHINGLE}) AS g
-  FROM tokenized,
-       unnest(generate_series(1, greatest(len(toks) - 2, 1))) s(i)
-  WHERE doc_id % 3 <> 0
-),
-batch_grams AS (
-  SELECT DISTINCT md5({_DUCK_SHINGLE}) AS g
-  FROM tokenized,
-       unnest(generate_series(1, greatest(len(toks) - 2, 1))) s(i)
-  WHERE doc_id % 3 = 0
-)
-SELECT (SELECT count(*) FROM batch_grams) AS batch_distinct_grams,
-       (SELECT count(*) FROM batch_grams b
-        WHERE NOT EXISTS (SELECT 1 FROM lake_grams l WHERE l.g = b.g))
-         AS novel_grams,
-       floor((SELECT CAST(count(*) AS DOUBLE) FROM batch_grams b
-              WHERE NOT EXISTS (SELECT 1 FROM lake_grams l WHERE l.g = b.g))
-             / (SELECT count(*) FROM batch_grams) * 1000000 + 0.5)
-         / 1000000 AS novelty_rate
-""",
-)
-def text_batch_novelty_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental information gain of an ingest batch: the share of
-    the batch's distinct 3-gram shingles NEVER seen in the lake — near
-    0 means the batch is re-hashed content not worth paying training
-    compute for, complementing dedup_incremental_batch (which asks
-    about whole documents; this measures partial novelty). Both sides
-    reduce to DISTINCT md5 shingle digests before the anti-join, so
-    text never shuffles and the join keys are 16 bytes — the lake-side
-    relation is the same digest index the incremental dedup keeps."""
-    d = Tables(spark, sf_dir).documents
-    toks = F.split("text", " ")
-    grams = F.expr(_shingles_sql("md5({})", distinct=False))
-
-    def gram_set(df: DataFrame) -> DataFrame:
-        return (
-            df.withColumn("toks", toks)
-            .select(F.explode(grams).alias("g"))
-            .distinct()
-        )
-
-    lake = gram_set(d.filter(F.col("doc_id") % 3 != 0))
-    batch = gram_set(d.filter(F.col("doc_id") % 3 == 0))
-    novel = batch.join(lake, "g", "left_anti")
-    n_batch = batch.agg(
-        F.count(F.lit(1)).alias("batch_distinct_grams")
-    )
-    n_novel = novel.agg(F.count(F.lit(1)).alias("novel_grams"))
-    return (
-        n_batch.crossJoin(F.broadcast(n_novel))
-        .select(
-            "batch_distinct_grams",
-            "novel_grams",
-            pround(
-                F.col("novel_grams").cast("double")
-                / F.col("batch_distinct_grams")
-            ).alias("novelty_rate"),
-        )
     )
 
 
@@ -407,7 +330,7 @@ def agg_median_of_means(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_representative_selection",
-    oracle="""
+    oracle=f"""
 WITH corpus AS (
   -- text IS NOT NULL on both sides: a doc with no text has no family
   -- key, and Spark's size(NULL) = -1 vs len(NULL) = NULL would rank
@@ -416,16 +339,16 @@ WITH corpus AS (
   UNION ALL
   -- truncated inferior copies of every 4th doc under offset ids
   SELECT doc_id + 3000000,
-         array_to_string(list_slice(string_split(text, ' '), 1,
-           greatest(len(string_split(text, ' ')) - 5, 1)), ' ')
+         array_to_string(list_slice({tokens_sql()}, 1,
+           greatest(len({tokens_sql()}) - 5, 1)), ' ')
   FROM documents WHERE doc_id % 4 = 0 AND text IS NOT NULL
 ),
 keyed AS (
   -- family key: first 5 tokens (the prefix-template family rule)
   SELECT doc_id, text,
-         md5(array_to_string(list_slice(string_split(text, ' '), 1, 5), ' '))
+         md5(array_to_string(list_slice({tokens_sql()}, 1, 5), ' '))
            AS family,
-         len(string_split(text, ' ')) AS n_tokens
+         len({tokens_sql()}) AS n_tokens
   FROM corpus
 ),
 ranked AS (
@@ -460,7 +383,7 @@ def dedup_representative_selection(
         .documents.where(F.col("text").isNotNull())  # oracle mirrors
         .select("doc_id", "text")
     )
-    toks = F.split("text", " ")
+    toks = tokens()
     inferior = d.filter(F.col("doc_id") % 4 == 0).select(
         (F.col("doc_id") + 3_000_000).alias("doc_id"),
         F.array_join(
@@ -470,10 +393,10 @@ def dedup_representative_selection(
     corpus = d.unionByName(inferior)
     keyed = corpus.select(
         "doc_id",
-        F.md5(F.concat_ws(" ", F.slice(F.split("text", " "), 1, 5))).alias(
+        F.md5(F.concat_ws(" ", F.slice(tokens(), 1, 5))).alias(
             "family"
         ),
-        F.size(F.split("text", " ")).alias("n_tokens"),
+        F.size(tokens()).alias("n_tokens"),
     )
     w = Window.partitionBy("family").orderBy(
         F.desc("n_tokens"), F.asc("doc_id")
@@ -498,119 +421,10 @@ def dedup_representative_selection(
 
 
 # ===========================================================================
-# wave module round6d (formerly operators/round6d.py)
-# Round-5 thirtieth wave (SURVEY.md §2.Q, continued): token-length
-# histograms.
-# ===========================================================================
-
-
-@register(
-    "text_token_length_histogram",
-    oracle="""
-WITH toks AS (
-  SELECT len(unnest(string_split(text, ' '))) AS tok_len FROM documents
-)
-SELECT CAST(least(tok_len, 15) AS BIGINT) AS len_band,
-       count(*) AS n_tokens
-FROM toks WHERE tok_len > 0
-GROUP BY 1
-""",
-)
-def text_token_length_histogram(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Token-length histogram (15+ capped): the tokenizer diagnostic
-    that predicts subword fertility — a corpus heavy in long tokens
-    fragments into more subwords per word, inflating effective token
-    budgets (text_token_count measures totals; this explains them).
-    One explode + bounded-band aggregate; output ≤15 rows at any
-    scale."""
-    d = Tables(spark, sf_dir).documents
-    toks = (
-        d.select(F.explode(F.split("text", " ")).alias("tok"))
-        .select(F.length("tok").alias("tok_len"))
-        .filter(F.col("tok_len") > 0)
-    )
-    return toks.groupBy(
-        F.least(F.col("tok_len"), F.lit(15)).cast("bigint").alias("len_band")
-    ).agg(F.count(F.lit(1)).alias("n_tokens"))
-
-
-# ===========================================================================
 # wave module round6e (formerly operators/round6e.py)
-# Round-5 thirty-first wave (SURVEY.md §2.Q, continued): Spearman vocabulary
-# rank stability, embedding dimension correlation pairs, and header-driven
-# CSV column reconciliation.
+# Round-5 thirty-first wave (SURVEY.md §2.Q, continued): embedding
+# dimension correlation pairs and header-driven CSV column reconciliation.
 # ===========================================================================
-
-@register(
-    "text_rank_stability_spearman",
-    oracle="""
-WITH h1 AS (
-  SELECT w, count(*) AS c FROM (
-    SELECT unnest(string_split(text, ' ')) AS w
-    FROM documents WHERE doc_id % 2 = 0) GROUP BY w
-),
-h2 AS (
-  SELECT w, count(*) AS c FROM (
-    SELECT unnest(string_split(text, ' ')) AS w
-    FROM documents WHERE doc_id % 2 = 1) GROUP BY w
-),
-r1 AS (SELECT w, row_number() OVER (ORDER BY c DESC, w) AS r FROM h1),
-r2 AS (SELECT w, row_number() OVER (ORDER BY c DESC, w) AS r FROM h2),
-paired AS (
-  SELECT r1.r AS ra, r2.r AS rb
-  FROM r1 JOIN r2 ON r1.w = r2.w
-)
-SELECT count(*) AS n_shared_tokens,
-       floor((1 - 6.0 * sum(CAST((ra - rb) * (ra - rb) AS DOUBLE))
-                  / (count(*) * (CAST(count(*) AS DOUBLE) * count(*) - 1)))
-             * 1000000 + 0.5) / 1000000 AS spearman_rho,
-       CAST(max(abs(ra - rb)) AS BIGINT) AS max_rank_shift
-FROM paired
-""",
-)
-def text_rank_stability_spearman(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Vocabulary rank stability between corpus halves: Spearman's ρ
-    over token frequency RANKS (1 − 6Σd²/(n(n²−1))) plus the largest
-    single rank shift — the rank-based drift lens that ignores scale
-    and sees only reordering, complementing the mass-based KL/JS
-    divergences (a vocabulary can keep its distribution's shape while
-    its head reorders — only ranks notice). Ranks break frequency
-    ties lexicographically (deterministic cross-engine); d² sums are
-    exact integers; one final rounded expression."""
-    d = Tables(spark, sf_dir).documents
-
-    def ranks(df: DataFrame, alias: str) -> DataFrame:
-        counts = (
-            df.select(F.explode(F.split("text", " ")).alias("w"))
-            .groupBy("w")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        w = Window.orderBy(F.desc("c"), F.asc("w"))
-        return counts.select(
-            "w", F.row_number().over(w).alias(alias)
-        )
-
-    r1 = ranks(d.filter(F.col("doc_id") % 2 == 0), "ra")
-    r2 = ranks(d.filter(F.col("doc_id") % 2 == 1), "rb")
-    paired = r1.join(r2, "w")
-    n = F.count(F.lit(1))
-    d2 = F.sum(
-        ((F.col("ra") - F.col("rb")) * (F.col("ra") - F.col("rb"))).cast(
-            "double"
-        )
-    )
-    rho = 1 - 6.0 * d2 / (n * (n.cast("double") * n - 1))
-    return paired.agg(
-        n.alias("n_shared_tokens"),
-        pround(rho).alias("spearman_rho"),
-        F.max(F.abs(F.col("ra") - F.col("rb")))
-        .cast("bigint")
-        .alias("max_rank_shift"),
-    )
 
 
 @register(
@@ -922,7 +736,7 @@ def pipeline_resume_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # wave module round6g (formerly operators/round6g.py)
 # Round-5 thirty-third wave (SURVEY.md §2.Q, continued): weighted
-# medians and the top-k vocabulary coverage curve.
+# medians.
 # ===========================================================================
 
 @register(
@@ -979,85 +793,6 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("weighted_median_price"),
         F.round(F.max("tw"), 2).cast("double").alias("total_weight"),
-    )
-
-
-_COVERAGE_KS = [1, 2, 4, 8, 16, 32]
-
-
-@register(
-    "text_topk_coverage_curve",
-    oracle=f"""
-WITH vocab AS (
-  SELECT w, count(*) AS c FROM (
-    SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-  GROUP BY w
-),
-ranked AS (
-  SELECT c,
-         row_number() OVER (ORDER BY c DESC, w) AS r,
-         sum(c) OVER (ORDER BY c DESC, w ROWS UNBOUNDED PRECEDING) AS cum,
-         sum(c) OVER () AS tot
-  FROM vocab
-)
-SELECT k,
-       floor(CAST(cum_k AS DOUBLE) / tot_k * 1000000 + 0.5) / 1000000
-         AS coverage
-FROM (
-  SELECT g.k,
-         max(CASE WHEN r <= g.k THEN cum END) AS cum_k,
-         max(tot) AS tot_k
-  FROM (SELECT unnest([{", ".join(str(k) for k in _COVERAGE_KS)}]) AS k) g
-  CROSS JOIN ranked
-  GROUP BY g.k
-)
-""",
-)
-def text_topk_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-k vocabulary coverage curve: the share of ALL corpus tokens
-    covered by the k most frequent types, k ∈ {{1,2,4,8,16,32}} — the
-    Zipf-coverage view that sizes stopword lists and vocabulary
-    truncations (where the curve flattens is where extra vocab stops
-    paying). Rank/cumulative windows run over the vocab-sized
-    aggregate with deterministic count-then-word ordering; the k spine
-    reads the max cumulative at each cut. Exact integer token counts,
-    one rounded division per k."""
-    d = Tables(spark, sf_dir).documents
-    vocab = (
-        d.select(F.explode(F.split("text", " ")).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    w_rank = Window.orderBy(F.desc("c"), F.asc("w"))
-    ranked = vocab.select(
-        "c",
-        F.row_number().over(w_rank).alias("r"),
-        F.sum("c")
-        .over(
-            w_rank.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        .alias("cum"),
-        F.sum("c").over(Window.partitionBy()).alias("tot"),
-    )
-    spine = spark.createDataFrame(
-        [(k,) for k in _COVERAGE_KS], "k int"
-    )
-    per_k = (
-        F.broadcast(spine)
-        .crossJoin(ranked)
-        .groupBy("k")
-        .agg(
-            F.max(
-                F.when(F.col("r") <= F.col("k"), F.col("cum"))
-            ).alias("cum_k"),
-            F.max("tot").alias("tot_k"),
-        )
-    )
-    return per_k.select(
-        "k",
-        pround(F.col("cum_k").cast("double") / F.col("tot_k")).alias(
-            "coverage"
-        ),
     )
 
 
@@ -1396,8 +1131,8 @@ _CDC_MOD = 8
     oracle=f"""
 WITH toks AS (
   SELECT doc_id, source,
-         unnest(string_split(text, ' ')) AS w,
-         generate_subscripts(string_split(text, ' '), 1) AS pos
+         unnest({tokens_sql()}) AS w,
+         generate_subscripts({tokens_sql()}, 1) AS pos
   FROM documents
 ),
 marked AS (
@@ -1447,7 +1182,7 @@ def dedup_cdc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.select(
         "doc_id",
         "source",
-        F.posexplode(F.split("text", " ")).alias("pos", "w"),
+        F.posexplode(tokens()).alias("pos", "w"),
     )
     dw = Window.partitionBy("doc_id").orderBy("pos")
     prev = toks.select(
@@ -2519,165 +2254,9 @@ def sink_csv_gzip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # wave module round6q (formerly operators/round6q.py)
-# Round-5 forty-third wave (SURVEY.md §2.Q, continued): a trained
-# Naive-Bayes source classifier evaluated on a held-out split and
-# nested-JSON round-trip parity.
+# Round-5 forty-third wave (SURVEY.md §2.Q, continued): nested-JSON
+# round-trip parity.
 # ===========================================================================
-
-# Train/test assignment: first md5 hex nibble of the salted doc id
-# (split_train_eval's content-free rule) — nibbles 0..b train (75%),
-# c..f test (25%). Identical hex on both engines.
-_SPLIT = "substring(md5(concat('nb', CAST(doc_id AS {s}))), 1, 1)"
-
-
-@register(
-    "text_naive_bayes_source_classifier",
-    oracle=f"""
-WITH split AS (
-  SELECT doc_id, source, text,
-         CASE WHEN {_SPLIT.format(s="VARCHAR")} <= 'b'
-              THEN 'train' ELSE 'test' END AS split
-  FROM documents
-),
-train_tok AS (
-  SELECT source, unnest(string_split(text, ' ')) AS w
-  FROM split WHERE split = 'train'
-),
-counts AS (
-  SELECT source, w, count(*) AS c FROM train_tok GROUP BY source, w
-),
-vocab AS (SELECT DISTINCT w FROM train_tok),
-totals AS (
-  SELECT source, sum(c) AS t FROM counts GROUP BY source
-),
-vsize AS (SELECT count(*) AS v FROM vocab),
-grid AS (
-  SELECT t.source, vb.w,
-         ln((coalesce(c.c, 0) + 1.0)
-            / (t.t + (SELECT v FROM vsize))) AS ll
-  FROM totals t
-  CROSS JOIN vocab vb
-  LEFT JOIN counts c ON c.source = t.source AND c.w = vb.w
-),
-priors AS (
-  SELECT source, ln(CAST(count(*) AS DOUBLE)
-                    / (SELECT count(*) FROM split WHERE split = 'train'))
-           AS lp
-  FROM split WHERE split = 'train' GROUP BY source
-),
-test_tok AS (
-  SELECT doc_id, source AS true_source,
-         unnest(string_split(text, ' ')) AS w
-  FROM split WHERE split = 'test'
-),
-scores AS (
-  SELECT tt.doc_id, tt.true_source, g.source AS cand,
-         max(p.lp) + sum(g.ll) AS score
-  FROM test_tok tt
-  JOIN grid g ON g.w = tt.w
-  JOIN priors p ON p.source = g.source
-  GROUP BY tt.doc_id, tt.true_source, g.source
-),
-pred AS (
-  SELECT doc_id, true_source, cand AS predicted_source,
-         row_number() OVER (
-           PARTITION BY doc_id
-           ORDER BY floor(score * 1e9 + 0.5) DESC, cand) AS rn
-  FROM scores
-)
-SELECT true_source, predicted_source, count(*) AS n_docs
-FROM pred WHERE rn = 1
-GROUP BY true_source, predicted_source
-""",
-)
-def text_naive_bayes_source_classifier(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """A TRAINED model inside the engine: multinomial Naive Bayes with
-    add-one smoothing learns P(token|source) on the md5-split 75%
-    train fold and classifies the held-out 25% by argmax of
-    prior + Σ log-likelihood; output is the test confusion matrix.
-    Every probability is a ratio of exact integer counts, so both
-    engines build identical log-likelihood tables; per-doc score sums
-    are rounded to 9 dp BEFORE the argmax with a source-name tie-break
-    (the round-before-rank rule) so accumulation order can never flip
-    a prediction. The scale shape: training is one (source, token)
-    aggregate; the dense vocab×sources likelihood grid is
-    vocabulary-bounded; scoring is one equality join on token — no
-    per-class scan, no Python. Tokens unseen in training drop out of
-    scoring identically on both sides (inner join to the vocab grid)."""
-    d = Tables(spark, sf_dir).documents
-    nib = F.substring(
-        F.md5(F.concat(F.lit("nb"), F.col("doc_id").cast("string"))), 1, 1
-    )
-    split = d.select(
-        "doc_id",
-        "source",
-        "text",
-        F.when(nib <= "b", "train").otherwise("test").alias("split"),
-    )
-    train = split.where(F.col("split") == "train")
-    train_tok = train.select(
-        "source", F.explode(F.split("text", " ")).alias("w")
-    )
-    counts = train_tok.groupBy("source", "w").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    vocab = train_tok.select("w").distinct()
-    totals = counts.groupBy("source").agg(F.sum("c").alias("t"))
-    vsize = vocab.agg(F.count(F.lit(1)).alias("v"))
-    grid = (
-        F.broadcast(totals)
-        .crossJoin(vocab)
-        .join(counts, ["source", "w"], "left")
-        .crossJoin(F.broadcast(vsize))
-        .select(
-            "source",
-            "w",
-            F.log(
-                (F.coalesce(F.col("c"), F.lit(0)) + 1.0)
-                / (F.col("t") + F.col("v"))
-            ).alias("ll"),
-        )
-    )
-    priors = (
-        train.groupBy("source")
-        .agg(F.count(F.lit(1)).alias("nc"))
-        .select(
-            "source",
-            F.log(
-                F.col("nc").cast("double")
-                / F.sum("nc").over(Window.partitionBy())
-            ).alias("lp"),
-        )
-    )
-    test_tok = split.where(F.col("split") == "test").select(
-        "doc_id",
-        F.col("source").alias("true_source"),
-        F.explode(F.split("text", " ")).alias("w"),
-    )
-    scores = (
-        test_tok.join(
-            grid.select(F.col("source").alias("cand"), "w", "ll"), "w"
-        )
-        .join(
-            F.broadcast(priors.select(F.col("source").alias("cand"), "lp")),
-            "cand",
-        )
-        .groupBy("doc_id", "true_source", "cand")
-        .agg((F.max("lp") + F.sum("ll")).alias("score"))
-    )
-    w_doc = Window.partitionBy("doc_id").orderBy(
-        F.desc(F.floor(F.col("score") * 1e9 + 0.5)), F.asc("cand")
-    )
-    pred = scores.select(
-        "true_source",
-        F.col("cand").alias("predicted_source"),
-        F.row_number().over(w_doc).alias("rn"),
-    ).where(F.col("rn") == 1)
-    return pred.groupBy("true_source", "predicted_source").agg(
-        F.count(F.lit(1)).alias("n_docs")
-    )
 
 
 @register(
@@ -3887,62 +3466,10 @@ def fn_xpath_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # wave module round6y (formerly operators/round6y.py)
-# Round-6 fifty-first wave (SURVEY.md §2.R): tokenizer-training and
-# spatial primitives — BPE first-merge pair statistics, grid-blocked
-# spatial joins, and the approx-percentile sketch accuracy contract.
+# Round-6 fifty-first wave (SURVEY.md §2.R): spatial primitives —
+# grid-blocked spatial joins — and the approx-percentile sketch accuracy
+# contract.
 # ===========================================================================
-
-# Pair extraction is capped at the first 50 chars of a word on BOTH sides
-# (deterministic, engine-identical); real corpora tokenize far below that.
-_BPE_CAP = 49
-
-
-@register(
-    "text_bpe_pair_merge",
-    oracle=rf"""
-WITH words AS (
-  SELECT unnest(string_split_regex(lower(text), '\s+')) AS w FROM documents),
-ww AS (SELECT w FROM words WHERE length(w) >= 2),
-pairs AS (
-  SELECT substr(w, CAST(i AS INTEGER), 2) AS pair
-  FROM ww CROSS JOIN generate_series(1, {_BPE_CAP}) AS g(i)
-  WHERE i <= length(w) - 1)
-SELECT pair, count(*) AS n FROM pairs
-GROUP BY 1 ORDER BY n DESC, pair LIMIT 20
-""",
-)
-def text_bpe_pair_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE tokenizer training, iteration one: the top-20 adjacent
-    character pairs by corpus frequency — the pair a byte-pair-encoding
-    trainer (Sennrich 2016, "Neural Machine Translation of Rare Words
-    with Subword Units") would merge first. Words come from one
-    whitespace split + explode; pairs are substr slices over a
-    per-word index sequence (JVM-side, no UDF), so total work is linear
-    in corpus characters — the same single-shuffle explode+count shape as
-    text_tfidf, and the candidate-counting kernel you would iterate for a
-    full merge loop. The top-20 cut is n-DESC with a pair tie-break so
-    the boundary is deterministic cross-engine. Oracle: DuckDB spells the
-    index sequence as a bounded generate_series cross join."""
-    t = Tables(spark, sf_dir)
-    return (
-        t.documents.select(
-            F.explode(F.split(F.lower("text"), r"\s+")).alias("w")
-        )
-        .filter(F.length("w") >= 2)
-        .select(
-            F.explode(
-                F.sequence(
-                    F.lit(1), F.least(F.length("w") - 1, F.lit(_BPE_CAP))
-                )
-            ).alias("i"),
-            "w",
-        )
-        .select(F.expr("substr(w, i, 2)").alias("pair"))
-        .groupBy("pair")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), "pair")
-        .limit(20)
-    )
 
 
 _SPATIAL_ORACLE = """
@@ -4104,71 +3631,9 @@ def agg_approx_percentile_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # wave module round6z (formerly operators/round6z.py)
 # Round-6 fifty-second wave (SURVEY.md §2.R): ingestion hardening —
-# web-crawl URL canonicalization, heterogeneous timestamp parsing, UTF-8
-# char-vs-byte semantics, GROUP BY ALL, and INTERVAL-literal window frames.
+# heterogeneous timestamp parsing, UTF-8 char-vs-byte semantics, GROUP BY
+# ALL, and INTERVAL-literal window frames.
 # ===========================================================================
-
-# -*- coding: utf-8 -*-
-
-
-# Synthesized crawl URLs: deterministic host/page from doc_id plus the
-# three classic canonicalization hazards — uppercase scheme/host, tracking
-# query params (utm_*, ref=), and fragments.
-_URL_SYN_SPARK = """
-SELECT concat('HTTPS://Ex', CAST(doc_id % 50 AS STRING), '.ORG/Page/',
-  CAST(doc_id % 200 AS STRING),
-  CASE WHEN doc_id % 3 = 0 THEN '?utm_source=x&utm_campaign=y'
-       WHEN doc_id % 3 = 1 THEN '?ref=abc' ELSE '' END,
-  CASE WHEN doc_id % 2 = 0 THEN '#frag' ELSE '' END) AS url FROM documents"""
-
-_URL_CANON_TEMPLATE = """
-SELECT count(*) AS n_urls, count(DISTINCT url) AS n_raw_distinct,
-       count(DISTINCT canon) AS n_canon_distinct,
-       CAST(round(1.0 - count(DISTINCT canon) * 1.0 / count(DISTINCT url), 4)
-            AS DOUBLE) AS dup_rate
-FROM (
-  SELECT url,
-    concat(lower(regexp_extract(url, '^[Hh][Tt][Tt][Pp][Ss]?://([^/]+)', 1)),
-           regexp_extract(regexp_replace(url, '#.*$', ''),
-                          '^[^:]+://[^/]+([^?#]*)', 1),
-           CASE WHEN {STRIP} <> ''
-                THEN concat('?', {STRIP})
-                ELSE '' END) AS canon
-  FROM ({SYN}) u) t"""
-
-_STRIP_SPARK = (
-    "regexp_replace(regexp_replace(regexp_extract(url, '\\\\?([^#]*)', 1), "
-    "'(^|&)(utm_[^&]*|ref=[^&]*)', ''), '^&', '')"
-)
-# DuckDB regexp_replace replaces only the FIRST match without the 'g'
-# flag (Spark replaces all) — the round-6 prototype caught 367 vs 200
-# canonical URLs before the flag was added.
-_STRIP_DUCK = (
-    "regexp_replace(regexp_replace(regexp_extract(url, '\\?([^#]*)', 1), "
-    "'(^|&)(utm_[^&]*|ref=[^&]*)', '', 'g'), '^&', '')"
-)
-
-
-sql_op(
-    "text_url_canonicalize_dedup",
-    spark_sql=_URL_CANON_TEMPLATE.replace("{STRIP}", _STRIP_SPARK).replace(
-            "{SYN}", _URL_SYN_SPARK
-        ),
-    oracle=_URL_CANON_TEMPLATE.replace("{STRIP}", _STRIP_DUCK).replace(
-        "{SYN}", _URL_SYN_SPARK.replace("AS STRING", "AS VARCHAR")
-    ),
-    doc="""Web-crawl URL canonicalization — the first dedup stage of a crawl
-    ingestion pipeline (CommonCrawl-style): lowercase the scheme+host,
-    drop fragments, strip tracking params (utm_*, ref=) while preserving
-    meaningful query strings, then report raw-vs-canonical distinct
-    counts and the implied URL-level dup rate. All regexp expressions are
-    JVM-side codegen; the aggregate is one pass. The synthesized URLs (no
-    URL column in the corpus) embed the three classic hazards with known
-    cardinality: 500 raw variants collapse to exactly 200 canonical
-    (host x page residues). Dialect trap pinned by the oracle: DuckDB's
-    regexp_replace needs the 'g' flag to match Spark's replace-all
-    default — without it the canonical count read 367, not 200.""",
-)
 
 
 @register(

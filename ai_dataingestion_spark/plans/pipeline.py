@@ -16,6 +16,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ai_dataingestion_spark.catalog import register
+from ai_dataingestion_spark.functions.portable import tokens, tokens_sql
 from ai_dataingestion_spark.lexicons import STOPWORDS
 from ai_dataingestion_spark.registry import load_table
 
@@ -68,7 +69,7 @@ def _clean_text(df: DataFrame) -> DataFrame:
 def _quality_gate(
     df: DataFrame, min_tokens: int = 20, max_tokens: int = 800
 ) -> DataFrame:
-    n_tokens = F.size(F.split("text", " "))
+    n_tokens = F.size(tokens())
     return df.filter(n_tokens.between(min_tokens, max_tokens))
 
 
@@ -80,7 +81,7 @@ def _lang_whitelist(df: DataFrame, langs: tuple = ("en", "es", "fr", "de")) -> D
 @transform("drop_stopword_heavy")
 def _drop_stopword_heavy(df: DataFrame, max_ratio: float = 0.5) -> DataFrame:
     stop = F.array(*[F.lit(w) for w in STOPWORDS])
-    toks = F.split("text", " ")
+    toks = tokens()
     ratio = F.size(F.filter(toks, lambda t: F.array_contains(stop, t))).cast(
         "double"
     ) / F.size(toks)
@@ -130,11 +131,11 @@ WITH cleaned AS (
 ),
 gated AS (
   SELECT * FROM cleaned
-  WHERE len(string_split(text, ' ')) BETWEEN 20 AND 800
+  WHERE len({tokens_sql()}) BETWEEN 20 AND 800
     AND lang IN ('en', 'es', 'fr', 'de')
-    AND CAST(len(list_filter(string_split(text, ' '),
+    AND CAST(len(list_filter({tokens_sql()},
           t -> list_contains(['{"','".join(STOPWORDS)}'], t))) AS DOUBLE)
-        / len(string_split(text, ' ')) <= 0.5
+        / len({tokens_sql()}) <= 0.5
 ),
 deduped AS (
   SELECT * FROM (
@@ -144,7 +145,7 @@ deduped AS (
 )
 SELECT lang, count(*) AS n_docs,
        count(DISTINCT sha256(text)) AS n_unique,
-       CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS total_tokens
+       CAST(sum(len({tokens_sql()})) AS BIGINT) AS total_tokens
 FROM deduped
 GROUP BY lang
 """,
@@ -158,5 +159,5 @@ def pipeline_e2e_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curated.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.countDistinct("text_sha").alias("n_unique"),
-        F.sum(F.size(F.split("text", " ")).cast("bigint")).alias("total_tokens"),
+        F.sum(F.size(tokens()).cast("bigint")).alias("total_tokens"),
     )

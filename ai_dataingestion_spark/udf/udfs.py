@@ -18,6 +18,7 @@ from pyspark.sql.functions import pandas_udf, udtf
 from pyspark.sql.types import DoubleType, StringType
 
 from ai_dataingestion_spark.catalog import register
+from ai_dataingestion_spark.functions.portable import tokens_sql
 from ai_dataingestion_spark.registry import Tables
 
 
@@ -184,12 +185,12 @@ def udf_map_in_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "udtf_python",
-    oracle="""
+    oracle=f"""
 SELECT doc_id, token, CAST(pos AS BIGINT) AS pos
 FROM (
   SELECT doc_id,
-         unnest(string_split(text, ' ')) AS token,
-         generate_subscripts(string_split(text, ' '), 1) AS pos
+         unnest({tokens_sql()}) AS token,
+         generate_subscripts({tokens_sql()}, 1) AS pos
   FROM documents
 )
 WHERE doc_id < 50

@@ -46,16 +46,17 @@ from pyspark.sql.types import (
 from pyspark.sql.udtf import AnalyzeArgument, AnalyzeResult, PartitioningColumn
 
 from ai_dataingestion_spark.catalog import register
+from ai_dataingestion_spark.functions.portable import tokens_sql
 from ai_dataingestion_spark.registry import register_views
 
 
 @register(
     "udtf_analyze_word_cols",
-    oracle="""
+    oracle=f"""
 SELECT doc_id,
-       string_split(text, ' ')[1] AS w1,
-       string_split(text, ' ')[2] AS w2,
-       string_split(text, ' ')[3] AS w3
+       {tokens_sql()}[1] AS w1,
+       {tokens_sql()}[2] AS w2,
+       {tokens_sql()}[3] AS w3
 FROM documents
 WHERE doc_id < 50
 """,

@@ -31,16 +31,24 @@ def _spark_one_col(spark, rows, ddl):
 @given(data=st.data())
 def test_regex_replace_and_extract_parity(spark, data):
     """regexp_replace (global) and regexp_extract over the same generated
-    strings: Java regex vs DuckDB RE2 must agree on these class patterns."""
+    strings: Java regex vs DuckDB RE2 must agree on these class patterns.
+    The tokenizer pair, ``tokens`` and ``tokens_sql``, must agree on them
+    too, and on fixed edge rows: empty and blank text, leading, trailing
+    and doubled spaces (empty tokens kept), a tab and a no-break space
+    (not separators), and NULL."""
     strings = data.draw(st.lists(TEXTS, min_size=30, max_size=30))
+    strings += ["", " ", " a", "a ", "a  b", "a\tb", "a\xa0b", None]
     df = _spark_one_col(spark, strings, "s string")
     from pyspark.sql import functions as F
 
+    from ai_dataingestion_spark.functions.portable import tokens, tokens_sql
+
     got = [
-        (r.repl, r.ext)
+        (r.repl, r.ext, r.toks)
         for r in df.select(
             F.regexp_replace("s", r"[0-9]+", "#").alias("repl"),
             F.regexp_extract("s", r"([A-Z]+)", 1).alias("ext"),
+            tokens("s").alias("toks"),
         ).collect()
     ]
     con = duckdb.connect()
@@ -48,7 +56,8 @@ def test_regex_replace_and_extract_parity(spark, data):
         tuple(row)
         for row in con.execute(
             "SELECT regexp_replace(s, '[0-9]+', '#', 'g'),"
-            "       regexp_extract(s, '([A-Z]+)', 1) "
+            "       regexp_extract(s, '([A-Z]+)', 1), "
+            f"      {tokens_sql('s')} "
             "FROM (SELECT unnest(?) AS s)",
             [strings],
         ).fetchall()

@@ -292,10 +292,7 @@ def test_pii_email_guard_pattern_is_match_equivalent():
 
     import duckdb
 
-    from ai_dataingestion_spark.operators.advanced import (
-        _EMAIL_RE_ORACLE,
-        _EMAIL_RE_SPARK,
-    )
+    from ai_dataingestion_spark.ai.text import _EMAIL_RE_ORACLE, _EMAIL_RE_SPARK
 
     cases = [
         "a@b.io", "..a@b.io x y", "ab@cd@ef.com", "a@@b.com",
@@ -408,10 +405,7 @@ def test_pii_email_anchoring_property():
     import duckdb
     from hypothesis import given, settings, strategies as st
 
-    from ai_dataingestion_spark.operators.advanced import (
-        _EMAIL_RE_ORACLE,
-        _EMAIL_RE_SPARK,
-    )
+    from ai_dataingestion_spark.ai.text import _EMAIL_RE_ORACLE, _EMAIL_RE_SPARK
 
     alphabet = st.sampled_from(list("ab1._%+-@. cd") + ["cc", "io", "@@"])
     strings = st.lists(alphabet, min_size=0, max_size=24).map("".join)

@@ -8,6 +8,7 @@ import ast
 
 import pytest
 
+from ai_dataingestion_spark.ai import dedup, text
 from ai_dataingestion_spark.catalog import all_specs
 from ai_dataingestion_spark.operators import analytics, events
 from tests.parity import compare, duckdb_connect, run_with_spawn_retry
@@ -148,6 +149,12 @@ def test_readme_headline_counts_match_registry():
     )
 
 
+# The DF spectrum and cap-loss operators measure the near-dup index's
+# DF_CAP and containment runs on that index, so they live in ai/dedup.py.
+NEAR_DUP_TEXT_IDS = {
+    "text_containment_pairs", "text_shingle_df_spectrum",
+    "text_shingle_df_cap_loss",
+}
 RELATIONAL_PREFIXES = (
     "tpch_", "lineitem_", "orders_", "customer_", "supplier_", "part_",
     "brand_", "market_", "sales_", "trade_", "subquery_",
@@ -175,9 +182,16 @@ def _registered_in(module) -> set[str]:
         (events, {n for n in SPECS if n.startswith("events_")}
          - {"events_time_of_day_rollup"}),
         (analytics, {n for n in SPECS if n.startswith(RELATIONAL_PREFIXES)}),
+        # the count-min top-k sketch counts tokens and registers here too
+        (text, {n for n in SPECS if n.startswith("text_")}
+         - NEAR_DUP_TEXT_IDS | {"agg_count_min_topk"}),
     ],
-    ids=["events", "relational"],
+    ids=["events", "relational", "text"],
 )
 def test_domain_module_owns_its_ids(module, owned):
     """A domain's operators register from its module and nowhere else."""
     assert _registered_in(module) == owned
+
+
+def test_near_dup_text_ids_register_with_the_index():
+    assert NEAR_DUP_TEXT_IDS <= _registered_in(dedup)

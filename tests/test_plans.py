@@ -298,13 +298,14 @@ def test_transition_matrix_normalizer_after_aggregate(spark, sf_small):
 def test_rescue_path_matches_string_level_cap(spark, sf_small):
     """The SHARED hash-keyed DF-cap + hot-hash rescue helper (used by
     dedup_ngram_jaccard and text_containment_pairs) must select EXACTLY
-    the shingle occurrences a pure string-level DF <= 50 cap selects (the
+    the shingle occurrences a pure string-level DF <= DF_CAP selects (the
     oracle's definition) — the collision-safety argument made checkable:
     on any corpus, (rare-by-hash ∪ rescued) == rare-by-string. Exercises
     the production helper itself so the operators cannot drift from it."""
     from pyspark.sql import functions as F
 
     from ai_dataingestion_spark.ai.dedup import (
+        DF_CAP,
         _SHINGLES_EXPR,
         _corpus_with_near_dups,
         _rare_shingle_index,
@@ -317,11 +318,13 @@ def test_rescue_path_matches_string_level_cap(spark, sf_small):
     rows = docs.select("doc_id", F.explode("shingles").alias("sh"))
     inv = rows.select("doc_id", "sh", F.xxhash64("sh").alias("h"))
 
-    engine = _rare_shingle_index(inv, cap=50)  # (doc_id, h)
+    engine = _rare_shingle_index(inv)  # (doc_id, h)
 
     # oracle definition: string-level DF cap, projected to the same
     # (doc_id, h) shape the operators join on
-    rare_sh = rows.groupBy("sh").count().filter(F.col("count") <= 50).select("sh")
+    rare_sh = (
+        rows.groupBy("sh").count().filter(F.col("count") <= DF_CAP).select("sh")
+    )
     oracle = rows.join(rare_sh, "sh").select(
         "doc_id", F.xxhash64("sh").alias("h")
     )

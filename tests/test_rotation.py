@@ -13,7 +13,7 @@ from pathlib import Path
 import pytest
 
 from ai_dataingestion_spark import catalog, registry, tmpdirs
-from ai_dataingestion_spark.ai import dedup
+from ai_dataingestion_spark.ai import dedup, text
 from ai_dataingestion_spark.operators import analytics, events
 
 REPO = Path(__file__).resolve().parent.parent
@@ -55,7 +55,7 @@ def test_unchanged_code_ranks_behind_everything(certified):
         (dedup, "_corpus_with_exact_dups", lambda spark, sf_dir: None,
          "dedup_exact dedup_simhash dedup_removal_plan text_paragraph_dedup "
          "dedup_family_sizes"),
-        # reached through _shingled_docs, also from round5_waves/round16_fns
+        # reached through _shingled_docs
         (dedup, "_SHINGLES_EXPR", "array()",
          "dedup_eval_precision_recall dedup_lsh_band_tuning "
          "dedup_minhash_estimate_error dedup_near_minhash dedup_ngram_jaccard "
@@ -81,19 +81,38 @@ def test_unchanged_code_ranks_behind_everything(certified):
          "tpch_q9_profit_by_nation_year tpch_q10_returned_items "
          "tpch_q15_top_supplier tpch_q19_disjunctive tpch_q22_idle_customers "
          "customer_rfm_segments customer_cohort_ltv lineitem_abc_pareto"),
+        (text, "source_token_counts", lambda documents: documents,
+         "text_kl_divergence_sources text_hapax_ratio "
+         "text_js_divergence_pairwise"),
+        (dedup, "DF_CAP", 49,
+         "dedup_ngram_jaccard text_containment_pairs text_shingle_df_cap_loss"),
         # run-time state: a global op_tmpdir rebinds, and a cache dict
         (tmpdirs, "_ROOT", "/elsewhere", ""),
         (registry, "_events_ts_unit", {("a",): "ns"}, ""),
     ],
     ids=["helper", "helper-local-import", "module-sql-constant",
          "sessions-helper", "calendar-helper", "net-price-helper",
-         "money-sum-helper", "rebound-global", "cache-dict"],
+         "money-sum-helper", "source-token-counts-helper", "df-cap-constant",
+         "rebound-global", "cache-dict"],
 )
 def test_changed_dependency_moves_exactly_its_operators(
     certified, monkeypatch, module, name, value, moved
 ):
     monkeypatch.setattr(module, name, value)
     assert _ranks(certified) == {n: 1 if n in moved.split() else 4 for n in SPECS}
+
+
+def test_rank_one_orders_oldest_green_round_first(certified, monkeypatch):
+    """Among operators whose code changed since green, the one that has
+    waited longest for fresh evidence leads, whatever its registration
+    index: otherwise a large edit to early-registering operators pushes
+    older re-checks out of the driver window."""
+    with_oracle = [n for n, s in catalog._REGISTRY.items() if s.oracle]
+    early, late = with_oracle[0], with_oracle[-1]
+    latest = dict.fromkeys(SPECS, 12) | {early: 10, late: 3}
+    stale = dict(certified) | {early: "stale", late: "stale"}
+    monkeypatch.setattr(catalog, "_recert_table", lambda: (latest, stale))
+    assert list(catalog.all_specs())[:2] == [late, early]
 
 
 def test_changed_factory_closure_sql_moves_one_operator(certified, monkeypatch):

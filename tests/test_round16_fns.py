@@ -3,8 +3,8 @@ round16_catalog.py) — properties the per-op oracle hash can't state:
 TIME arithmetic is internally consistent (bands partition the corpus,
 truncation lands on its grid), width_bucket agrees with independent
 floor arithmetic, the try_* constructors only ever admit genuinely valid
-components, the DF-cap loss curve is monotone in the duplication factor,
-and the catalog round-trips preserve row mass."""
+components, the DF-cap loss curve (ai/dedup.py) is monotone in the
+duplication factor, and the catalog round-trips preserve row mass."""
 
 from __future__ import annotations
 
