@@ -52,6 +52,14 @@ def _corpus_with_exact_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.unionByName(dups)
 
 
+# DuckDB twin of _corpus_with_exact_dups, as the ``corpus`` CTE.
+_EXACT_CORPUS_CTE = f"""corpus AS (
+  SELECT doc_id, text FROM documents
+  UNION ALL
+  SELECT doc_id + {_DUP_OFFSET}, text FROM documents WHERE doc_id % 2 = 0
+)"""
+
+
 def _near_copies(d: DataFrame, offset: int = _DUP_OFFSET) -> DataFrame:
     """Near-copies of every 5th doc of a (doc_id, text) frame, ids shifted
     by ``offset``, last token dropped — Jaccard vs the original ≈ (n-3)/n
@@ -200,89 +208,48 @@ def _duck_h(s: str) -> str:
     return f"CAST('0x'||substring(md5({s}),1,15) AS BIGINT)"
 
 
-_SMALL_CORPUS_BYTES = 256 * 1024 * 1024
-
-
-def _small_corpus(sf_dir: str, table: str = "documents") -> bool:
-    """O(1) driver-side size gate: True iff the table's parquet bytes on a
-    LOCAL path are provably under _SMALL_CORPUS_BYTES (delegates to the
-    shared scale.table_bytes_under; non-local paths and stat failures fail
-    closed). Used to decide whether the hot-hash/rescued relations
-    (cardinality <= shingle_rows / cap, i.e. linear in the corpus) may be
-    statically broadcast: at 256 MiB of documents that bound is ~1M hashes /
-    ~8 MB — comfortably broadcastable — while at lake scale the gate fails
-    closed and AQE's runtime size check decides (ADVICE r4)."""
-    from ai_dataingestion_spark.scale import table_bytes_under
-
-    return table_bytes_under(sf_dir, table, _SMALL_CORPUS_BYTES)
-
-
 # A shingle in more documents than this is boilerplate, not evidence of a
 # near-duplicate: the near-dup index keeps only shingles at or under it.
 DF_CAP = 50
 
 
-def _rare_shingle_index(inv: DataFrame, small_corpus: bool = False) -> DataFrame:
-    """(doc_id, h) rows of shingles whose STRING-level document frequency
-    is <= DF_CAP, computed from 8-byte hash keys: hash-count <= DF_CAP
-    implies every underlying string is rare (hash count >= string DF), so
-    those rows enter with no string work; only HOT hashes (count > DF_CAP,
-    the Zipf head) are re-counted at string level, and strings that prove
-    rare are rescued, so a 64-bit collision can never silently drop a rare
-    shingle. `inv` must have (doc_id, sh, h) columns. Shared by
-    dedup_ngram_jaccard and text_containment_pairs; its equivalence to a
-    pure string-level DF cap is proven on the real corpus in
-    tests/test_plans.py::test_rescue_path_matches_string_level_cap.
+def _rare_shingle_index(docs: DataFrame) -> DataFrame:
+    """(doc_id, sz, h) rows of the shingled docs: one row per (document,
+    shingle) whose shingle has STRING-level document frequency <= DF_CAP
+    (the oracles' cap), with sz = the document's shingle count and h =
+    xxhash64(shingle), built in ONE exchange on h. The DF window partitions by (h, sh), which the h
+    partitioning already satisfies, and a self-join on h reuses that same
+    exchange on both sides. Shared by dedup_ngram_jaccard and
+    text_containment_pairs; pinned against a pure string-level cap in
+    tests/test_plans.py::test_rare_shingle_index_matches_string_level_cap.
 
-    Join strategy: hot_h/rescued cardinality is bounded by total_rows /
-    DF_CAP — small at bench scale but LINEAR in the corpus (~2e10
-    entries at 1e12 shingle rows), so an UNCONDITIONAL F.broadcast
-    hint is not scale-safe. Instead the caller passes ``small_corpus``
-    (the O(1) parquet-bytes gate in _small_corpus): when the corpus is
-    provably tiny the hint is applied — without it, the tuned bench
-    config (AQE off) sort-merges these joins and dedup_ngram_jaccard
-    regressed 2.79 s -> 5.89 s at sf0.1 — and at lake scale the gate
-    fails closed, leaving the production config (AQE on, session.py) to
-    measure the built side at runtime and broadcast iff actually small.
-
-    Residual collision semantics: a rescued-index JOIN on h can count two
-    DIFFERENT strings sharing a 64-bit hash as one common shingle, so the
-    hash-level n_common a caller derives is >= the string-level count —
-    candidate prefilters built on it ADMIT extra pairs (caught by the
-    callers' exact string-level verify) and never drop; the one divergence
-    vs a string-level oracle is a pair the oracle's prefilter blocks but a
-    collision-inflated count admits AND that then passes exact verify —
-    requiring a same-hash different-string collision between two docs'
-    shingle sets (p ~ 2^-64 per pair; zero observed, would surface as a
-    driver hash mismatch)."""
-    hash_df = inv.groupBy("h").agg(F.count(F.lit(1)).alias("hcnt"))
-    rare_h = hash_df.filter(F.col("hcnt") <= DF_CAP).select("h")
-    hot_h = hash_df.filter(F.col("hcnt") > DF_CAP).select("h")
-    if small_corpus:
-        hot_h = F.broadcast(hot_h)
-    rescued = (
-        inv.join(hot_h, "h")
-        .groupBy("sh", "h")
-        .agg(F.count(F.lit(1)).alias("scnt"))
-        .filter(F.col("scnt") <= DF_CAP)
-        .select("sh", "h")
+    The self-join runs on h, so two DIFFERENT strings sharing a 64-bit hash
+    count as one common shingle: the n_common a caller derives is >= the
+    string-level count, which only ADMITS extra pairs to the callers' exact
+    string-level verify. The one possible divergence from the oracle is a
+    pair whose prefilter only a collision-inflated count passes AND that
+    then passes exact verify (p ~ 2^-64 per shingle pair)."""
+    rows = (
+        docs.select(
+            "doc_id",
+            F.size("shingles").alias("sz"),
+            F.explode("shingles").alias("sh"),
+        )
+        .withColumn("h", F.xxhash64("sh"))
+        .repartition("h")
     )
-    if small_corpus:
-        rescued = F.broadcast(rescued)
-    # rare_h is ~all distinct shingles — never broadcast it
-    return inv.join(rare_h, "h").select("doc_id", "h").unionByName(
-        inv.join(rescued, ["sh", "h"]).select("doc_id", "h")
+    df = F.count(F.lit(1)).over(Window.partitionBy("h", "sh"))
+    return (
+        rows.withColumn("df", df)
+        .filter(F.col("df") <= DF_CAP)
+        .select("doc_id", "sz", "h")
     )
 
 
 @register(
     "dedup_exact",
     oracle=f"""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + {_DUP_OFFSET}, text FROM documents WHERE doc_id % 2 = 0
-),
+WITH {_EXACT_CORPUS_CTE},
 hashed AS (SELECT doc_id, sha256(text) AS text_sha FROM corpus),
 ranked AS (
   SELECT doc_id, text_sha,
@@ -510,11 +477,7 @@ def _simhash_chunk_duck(c: int) -> str:
 
 
 _SIMHASH_ORACLE = f"""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + {_DUP_OFFSET}, text FROM documents WHERE doc_id % 2 = 0
-),
+WITH {_EXACT_CORPUS_CTE},
 tok AS (SELECT doc_id, unnest({tokens_sql()}) AS tok FROM corpus),
 th AS (
   SELECT doc_id,
@@ -669,43 +632,16 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical copies and restores shingle rarity before this op runs.
     """
     docs = _shingled_docs(_corpus_with_near_dups(spark, sf_dir))
-    # The index/self-join phase runs on xxhash64(shingle) — 8-byte shuffle
-    # keys instead of ~30-byte shingle strings through the widest joins.
-    # DF-cap semantics must match the oracle's STRING-level cap, but a
-    # string-keyed groupBy over every shingle row measured +21% wall.
-    # Observation: hash_count(h) >= string_DF(s) for every s hashing to
-    # h, so a hash whose TOTAL count is <= DF_CAP can only contain
-    # truly-rare strings — those rows enter the index with no string work
-    # at all. Only HOT hashes (count > DF_CAP, a handful of distinct
-    # values) can hide a rare string behind a collision with a hot string,
-    # so only their rows — a broadcast-pruned sliver of the corpus — are
-    # re-counted at string level, and strings that prove rare are rescued
-    # into the index. Net: the wide shuffles all carry 8-byte keys; the
-    # string aggregate runs on the hot sliver only (empty of rescues unless
-    # a 64-bit collision actually lands).
-    shingle_rows = docs.select("doc_id", F.explode("shingles").alias("sh"))
-    inv = shingle_rows.select(
-        "doc_id", "sh", F.xxhash64("sh").alias("h")
-    )
-    rare = _rare_shingle_index(inv, small_corpus=_small_corpus(sf_dir))
     # count common rare shingles per pair; 3*I >= |A|+|B| is EXACTLY
-    # J >= 0.5 when the DF cap doesn't bite, so almost all of the ~1.6M raw
-    # candidate pairs die on integer counts before any array work
-    cand = (
-        bounded_self_join(
-            rare, ["h"], "doc_id", sf_dir, "documents", gate=_ARRAY_GATE
-        )
-        .groupBy("id1", "id2")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    # prefilter on per-doc shingle COUNTS (ints) first; full shingle arrays
-    # are attached only to the surviving ~0.1% of candidate pairs
-    sizes = docs.select("doc_id", F.size("shingles").alias("sz"))
+    # J >= 0.5 when the DF cap doesn't bite, so almost all raw candidate
+    # pairs die on integer counts before any shingle array is attached
     prefiltered = (
-        cand.join(sizes.select(F.col("doc_id").alias("id1"),
-                               F.col("sz").alias("sz1")), "id1")
-        .join(sizes.select(F.col("doc_id").alias("id2"),
-                           F.col("sz").alias("sz2")), "id2")
+        bounded_self_join(
+            _rare_shingle_index(docs), ["h"], "doc_id", sf_dir, "documents",
+            gate=_ARRAY_GATE, per_side=["sz"],
+        )
+        .groupBy("id1", "id2", "sz1", "sz2")
+        .agg(F.count(F.lit(1)).alias("n_common"))
         .filter(3 * F.col("n_common") >= F.col("sz1") + F.col("sz2"))
         .select("id1", "id2")
     )
@@ -780,9 +716,16 @@ def dedup_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_sort(F.array_distinct(window_hashes)), 1, _FP_KEEP
         ).alias("fingerprint"),
     ).transform(op_cache)
-    inv = fp.select("doc_id", F.explode("fingerprint").alias("h"))
-    rare_h = inv.groupBy("h").count().filter(F.col("count") <= _FP_DF_CAP).select("h")
-    rare = inv.join(rare_h, "h")
+    # the DF window runs within the one exchange on h that both self-join
+    # sides reuse
+    df = F.count(F.lit(1)).over(Window.partitionBy("h"))
+    rare = (
+        fp.select("doc_id", F.explode("fingerprint").alias("h"))
+        .repartition("h")
+        .withColumn("df", df)
+        .filter(F.col("df") <= _FP_DF_CAP)
+        .select("doc_id", "h")
+    )
     return (
         bounded_self_join(
             rare, ["h"], "doc_id", sf_dir, "documents", gate=_ARRAY_GATE
@@ -853,24 +796,22 @@ def text_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
     )
     docs = _shingled_docs(d.unionByName(truncated))
-    shingle_rows = docs.select("doc_id", F.explode("shingles").alias("sh"))
-    inv = shingle_rows.select("doc_id", "sh", F.xxhash64("sh").alias("h"))
-    rare = _rare_shingle_index(inv, small_corpus=_small_corpus(sf_dir))
     # ordered=False: containment roles are asymmetric (small-in-big), so
-    # both pair directions are emitted and the containment filter decides
-    cand = (
+    # both pair directions are emitted and the containment filter decides.
+    # The pair keys name sz2 too, although only sz1 is tested: both join
+    # sides must select the same columns for the index exchange to be
+    # reused.
+    prefiltered = (
         bounded_self_join(
-            rare, ["h"], "doc_id", sf_dir, "documents",
+            _rare_shingle_index(docs), ["h"], "doc_id", sf_dir, "documents",
             gate=_ARRAY_GATE, out=("small_id", "big_id"), ordered=False,
+            per_side=["sz"],
         )
-        .groupBy("small_id", "big_id")
+        .groupBy("small_id", "big_id", "sz1", "sz2")
         .agg(F.count(F.lit(1)).alias("n_common"))
+        .filter(10 * F.col("n_common") >= 8 * F.col("sz1"))
+        .select("small_id", "big_id")
     )
-    sizes = docs.select("doc_id", F.size("shingles").alias("sz"))
-    prefiltered = cand.join(
-        sizes.select(F.col("doc_id").alias("small_id"), F.col("sz").alias("sz1")),
-        "small_id",
-    ).filter(10 * F.col("n_common") >= 8 * F.col("sz1")).select("small_id", "big_id")
     containment = _n_common().cast("double") / F.size("sh1")
     return (
         _with_shingle_sets(prefiltered, docs, sf_dir, ("small_id", "big_id"))
@@ -1227,9 +1168,8 @@ def text_shingle_df_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document-frequency spectrum of 3-token shingles: how many
     distinct shingles appear in exactly k documents — the measurement
     that justifies (or refutes) the DF_CAP the near-dup index rests on:
-    a heavy tail above the cap means the hot-hash rescue path actually
-    carries load. Two chained
-    partial-aggregable groupBys; the spectrum is ≤ max-df rows."""
+    the tail above the cap is the shingle mass the index drops. Two
+    chained partial-aggregable groupBys; the spectrum is ≤ max-df rows."""
     docs = _shingled_docs(Tables(spark, sf_dir).documents)
     df = (
         docs.select("doc_id", F.explode("shingles").alias("shingle"))

@@ -22,7 +22,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ai_dataingestion_spark.ai.dedup import _DUCK_SHINGLE, _DUP_OFFSET, _shingles_sql
+from ai_dataingestion_spark.ai.dedup import (
+    _DUCK_SHINGLE,
+    _DUP_OFFSET,
+    _EXACT_CORPUS_CTE,
+    _shingles_sql,
+)
 from ai_dataingestion_spark.catalog import register, sql_op
 from ai_dataingestion_spark.functions.portable import (
     pround,
@@ -409,11 +414,7 @@ def text_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_paragraph_dedup",
     oracle=f"""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + {_DUP_OFFSET}, text FROM documents WHERE doc_id % 2 = 0
-),
+WITH {_EXACT_CORPUS_CTE},
 paras AS (
   SELECT doc_id, trim(p) AS para
   FROM (SELECT doc_id, unnest(string_split(text, '. ')) AS p FROM corpus)

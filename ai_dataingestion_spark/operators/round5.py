@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ai_dataingestion_spark.ai.dedup import _EXACT_CORPUS_CTE
 from ai_dataingestion_spark.catalog import register
 from ai_dataingestion_spark.functions.portable import tokens, tokens_sql
 from ai_dataingestion_spark.registry import Tables
@@ -24,11 +25,7 @@ from ai_dataingestion_spark.registry import Tables
 @register(
     "dedup_family_sizes",
     oracle=f"""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 2 = 0
-),
+WITH {_EXACT_CORPUS_CTE},
 families AS (
   SELECT md5(text) AS h, count(*) AS family_size FROM corpus GROUP BY md5(text)
 )

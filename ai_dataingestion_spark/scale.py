@@ -131,6 +131,7 @@ def bounded_self_join(
     ordered: bool = True,
     spark=None,
     carry: list[str] | None = None,
+    per_side: list[str] | None = None,
 ) -> DataFrame:
     """The engine's ONE candidate-pair generator: self-equi-join ``block``
     (one row per (id, blocking-key) assignment) on ``keys`` and emit
@@ -161,6 +162,9 @@ def bounded_self_join(
     output — key columns are equal on both sides, so this adds no
     semantics, and lets a caller that fused several configurations into
     one blocked relation recover the configuration id per pair.
+    ``per_side`` projects each named non-key column ``c`` of both sides,
+    as ``c1`` (the out[0] side) and ``c2`` (the out[1] side), so a caller
+    can prefilter on per-document values without joining them back.
     """
     a = block.alias("a")
     b = hint_merge_if_large(block.alias("b"), sf_dir, table, gate)
@@ -176,6 +180,11 @@ def bounded_self_join(
             F.col(f"a.{id_col}").alias(out[0]),
             F.col(f"b.{id_col}").alias(out[1]),
             *[F.col(f"a.{c}").alias(c) for c in (carry or ())],
+            *[
+                F.col(f"{side}.{c}").alias(f"{c}{n}")
+                for c in (per_side or ())
+                for side, n in (("a", 1), ("b", 2))
+            ],
         )
     )
     if spark is not None:

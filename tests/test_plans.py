@@ -275,6 +275,59 @@ def test_round4_dedup_ops_never_cartesian(spark, sf_small):
         assert "BroadcastNestedLoopJoin" not in plan, qid
 
 
+def _executed_plan_aqe_off(df) -> str:
+    """The executed plan as the bench runs it (AQE off), where exchange
+    reuse is applied at planning time and so visible in the plan text."""
+    spark = df.sparkSession
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        return df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+
+
+@pytest.mark.parametrize(
+    "qid",
+    ["dedup_ngram_jaccard", "text_containment_pairs", "dedup_fingerprint_pairs"],
+)
+def test_rare_key_kernels_explode_once(spark, sf_small, qid):
+    """The rare-key near-dup kernels build their DF-capped index in one
+    exchange on the key that both self-join sides reuse: one explode of
+    the cached shingle / fingerprint sets, and no broadcast beyond the
+    self-join's own build side."""
+    plan = _executed_plan_aqe_off(SPECS[qid].fn(spark, sf_small))
+    assert plan.count("Generate explode") == 1, plan
+    assert plan.count("BroadcastExchange") <= 1, plan
+    assert "ReusedExchange" in plan, plan
+
+
+def test_rare_shingle_self_join_merge_path_reuses_index_exchange(
+    spark, sf_small
+):
+    """Above the size gate (forced here with gate=1) the self-join on h
+    sort-merges on the index's own h partitioning and (h, sh) sort: the
+    plan's only exchange is the index's, once and reused."""
+    from ai_dataingestion_spark.ai.dedup import (
+        _corpus_with_near_dups,
+        _rare_shingle_index,
+        _shingled_docs,
+    )
+    from ai_dataingestion_spark.scale import bounded_self_join
+
+    docs = _shingled_docs(_corpus_with_near_dups(spark, sf_small))
+    pairs = bounded_self_join(
+        _rare_shingle_index(docs), ["h"], "doc_id", sf_small, "documents",
+        gate=1, per_side=["sz"],
+    )
+    plan = _executed_plan_aqe_off(pairs)
+    assert "SortMergeJoin" in plan, plan
+    exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
+    assert len(exchanges) == 2, plan
+    assert all("Exchange hashpartitioning(h#" in ln for ln in exchanges), plan
+    assert sum("ReusedExchange" in ln for ln in exchanges) == 1, plan
+
+
 def test_embed_dim_stats_partial_aggregates(spark, sf_small):
     """embed_dim_stats must ride partial->final HashAggregate so the
     shuffle carries 64 rows per task, not the exploded element stream."""
@@ -295,38 +348,34 @@ def test_transition_matrix_normalizer_after_aggregate(spark, sf_small):
     assert "CartesianProduct" not in plan
 
 
-def test_rescue_path_matches_string_level_cap(spark, sf_small):
-    """The SHARED hash-keyed DF-cap + hot-hash rescue helper (used by
-    dedup_ngram_jaccard and text_containment_pairs) must select EXACTLY
-    the shingle occurrences a pure string-level DF <= DF_CAP selects (the
-    oracle's definition) — the collision-safety argument made checkable:
-    on any corpus, (rare-by-hash ∪ rescued) == rare-by-string. Exercises
-    the production helper itself so the operators cannot drift from it."""
+def test_rare_shingle_index_matches_string_level_cap(spark, sf_small):
+    """The shared rare-shingle index (dedup_ngram_jaccard and
+    text_containment_pairs) selects EXACTLY the shingle occurrences a pure
+    string-level DF <= DF_CAP selects — the oracles' definition — each
+    with its document's shingle count. Exercises the production helper
+    itself so the operators cannot drift from it."""
     from pyspark.sql import functions as F
 
     from ai_dataingestion_spark.ai.dedup import (
         DF_CAP,
-        _SHINGLES_EXPR,
         _corpus_with_near_dups,
         _rare_shingle_index,
+        _shingled_docs,
     )
 
-    corpus = _corpus_with_near_dups(spark, sf_small).withColumn(
-        "toks", F.split("text", " ")
-    )
-    docs = corpus.select("doc_id", F.expr(_SHINGLES_EXPR).alias("shingles"))
-    rows = docs.select("doc_id", F.explode("shingles").alias("sh"))
-    inv = rows.select("doc_id", "sh", F.xxhash64("sh").alias("h"))
-
-    engine = _rare_shingle_index(inv)  # (doc_id, h)
+    docs = _shingled_docs(_corpus_with_near_dups(spark, sf_small))
+    engine = _rare_shingle_index(docs)
 
     # oracle definition: string-level DF cap, projected to the same
-    # (doc_id, h) shape the operators join on
+    # (doc_id, sz, h) shape the operators join on
+    rows = docs.select(
+        "doc_id", F.size("shingles").alias("sz"), F.explode("shingles").alias("sh")
+    )
     rare_sh = (
         rows.groupBy("sh").count().filter(F.col("count") <= DF_CAP).select("sh")
     )
     oracle = rows.join(rare_sh, "sh").select(
-        "doc_id", F.xxhash64("sh").alias("h")
+        "doc_id", "sz", F.xxhash64("sh").alias("h")
     )
 
     assert engine.exceptAll(oracle).count() == 0
@@ -1254,6 +1303,30 @@ def test_bounded_self_join_matches_naive_pairs(spark, sf_small):
     )
     assert "RoundRobin" not in widened._jdf.queryExecution().toString()
     assert {tuple(r) for r in widened.collect()} == expected
+
+
+@pytest.mark.parametrize("ordered", [True, False])
+def test_bounded_self_join_per_side_projects_both_sides(spark, ordered):
+    """``per_side`` projects each named column of both join sides, as
+    <c>1 for the out[0] id and <c>2 for the out[1] id, without changing
+    the pair set."""
+    from ai_dataingestion_spark.scale import bounded_self_join
+
+    df = spark.createDataFrame(
+        [(1, 10, 100), (1, 20, 200), (1, 30, 300), (2, 40, 400), (2, 10, 100)],
+        "k bigint, id bigint, v bigint",
+    )
+    got = bounded_self_join(
+        df, ["k"], "id", "/nonexistent", "none",
+        out=("x", "y"), ordered=ordered, per_side=["v"],
+    )
+    assert got.columns == ["x", "y", "v1", "v2"]
+    expected = {(10, 20), (10, 30), (20, 30), (10, 40)}
+    if not ordered:
+        expected |= {(b, a) for a, b in expected}
+    assert {tuple(r) for r in got.collect()} == {
+        (x, y, 10 * x, 10 * y) for x, y in expected
+    }
 
 
 def test_bounded_self_join_strategy_tiers_with_gate(spark, sf_small):
