@@ -24,21 +24,20 @@ from pyspark.sql.types import (
 )
 
 from ai_dataingestion_spark.catalog import register
+from ai_dataingestion_spark.functions.portable import dims, dims_sql, pround
 from ai_dataingestion_spark.registry import Tables
 
 
 @register(
     "multimodal_join",
-    oracle="""
+    oracle=f"""
 WITH joined AS (
   SELECT d.lang, e.embedding
   FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
 ),
 exploded AS (
-  SELECT lang,
-         CAST(unnest(embedding) AS DOUBLE) AS val,
-         generate_subscripts(embedding, 1) AS pos
-  FROM joined
+  SELECT lang, CAST(x AS DOUBLE) AS val, pos + 1 AS pos
+  FROM (SELECT lang, {dims_sql()} FROM joined)
 )
 SELECT lang, CAST(pos AS BIGINT) AS pos,
        round(avg(val), 6) AS centroid_val,
@@ -55,12 +54,10 @@ def multimodal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = t.documents.join(
         t.embeddings, F.col("doc_id") == F.col("vec_id")
     ).select("lang", "embedding")
-    exploded = joined.select(
-        "lang", F.posexplode("embedding").alias("pos0", "val")
-    ).select(
+    exploded = joined.select("lang", dims()).select(
         "lang",
-        (F.col("pos0") + 1).cast("bigint").alias("pos"),
-        F.col("val").cast("double").alias("val"),
+        (F.col("pos") + 1).cast("bigint").alias("pos"),
+        F.col("x").cast("double").alias("val"),
     )
     return exploded.groupBy("lang", "pos").agg(
         F.round(F.avg("val"), 6).alias("centroid_val"),
@@ -301,3 +298,186 @@ def multimodal_image_resize_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     return with_payload.mapInPandas(_pool_batches, _POOL_SCHEMA)
+
+
+_FRAME_LEN = 64       # bytes per sampled frame
+_FRAME_STRIDE = 256   # byte offset between samples
+_N_FRAMES = 3
+
+
+@register(
+    "multimodal_frame_sample",
+    oracle=f"""
+SELECT d.doc_id, f.frame_idx,
+       f.frame_idx * {_FRAME_STRIDE} AS frame_off,
+       lower(substring(hex(encode(d.text)),
+                       f.frame_idx * {_FRAME_STRIDE} * 2 + 1,
+                       {_FRAME_LEN} * 2)) AS frame_hex
+FROM documents d
+CROSS JOIN (VALUES (0), (1), (2)) f(frame_idx)
+WHERE octet_length(encode(d.text)) >= f.frame_idx * {_FRAME_STRIDE} + {_FRAME_LEN}
+""",
+)
+def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Frame sampling over an opaque binary payload (the video-modality
+    plumbing shape): every document's payload is sampled at fixed byte
+    strides, emitting 0..3 fixed-length frames per row — a mapInPandas
+    stage whose output cardinality differs from its input, exactly like a
+    real frame extractor. Payload bytes stand in for codec frames (no
+    codecs in this container — see _decode_payload in ai/multimodal.py);
+    the byte plumbing, schema, and variable fan-out are real and
+    oracle-checked against hex slices of the same bytes."""
+    import pandas as pd
+
+    from pyspark.sql.types import BinaryType
+
+    d = Tables(spark, sf_dir).documents
+    binary = d.select(
+        "doc_id", F.encode("text", "UTF-8").cast(BinaryType()).alias("payload")
+    )
+
+    def sample(batches):
+        for pdf in batches:
+            out_id, out_idx, out_off, out_hex = [], [], [], []
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+                if payload is None:  # no payload, no frames (oracle's
+                    continue         # NULL octet_length never passes >=)
+                buf = bytes(payload)
+                for i in range(_N_FRAMES):
+                    off = i * _FRAME_STRIDE
+                    if len(buf) >= off + _FRAME_LEN:
+                        out_id.append(doc_id)
+                        out_idx.append(i)
+                        out_off.append(off)
+                        out_hex.append(buf[off : off + _FRAME_LEN].hex())
+            yield pd.DataFrame(
+                {
+                    "doc_id": pd.Series(out_id, dtype="int64"),
+                    "frame_idx": pd.Series(out_idx, dtype="int32"),
+                    "frame_off": pd.Series(out_off, dtype="int32"),
+                    "frame_hex": pd.Series(out_hex, dtype="object"),
+                }
+            )
+
+    return binary.mapInPandas(
+        sample, "doc_id bigint, frame_idx int, frame_off int, frame_hex string"
+    )
+
+
+_PAYLOAD_PREFIX = 64
+_REPLAY_OFFSET = 5_000_000
+
+
+@register(
+    "multimodal_payload_dedup",
+    oracle=f"""
+WITH assets AS (
+  SELECT doc_id, substring(text, 1, {_PAYLOAD_PREFIX}) AS payload_str
+  FROM documents
+  UNION ALL
+  SELECT doc_id + {_REPLAY_OFFSET}, substring(text, 1, {_PAYLOAD_PREFIX})
+  FROM documents WHERE doc_id % 11 = 0
+)
+SELECT md5(payload_str) AS payload_md5,
+       count(*) AS n_copies,
+       min(doc_id) AS first_id,
+       max(doc_id) AS last_id,
+       CAST(octet_length(encode(payload_str)) AS BIGINT) AS payload_bytes
+FROM assets
+GROUP BY payload_str
+HAVING count(*) >= 2
+""",
+)
+def multimodal_payload_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact dedup over the BINARY payload column — the asset-level
+    twin of dedup_exact for image/audio blobs, where byte-identical
+    payloads recur under different asset ids (re-uploads, replayed
+    ingest batches). Payloads are the deterministic UTF-8 stub bytes
+    (multimodal.py's documented codec posture); a replayed batch is
+    injected (every 11th asset re-enters under a shifted id) so the
+    detector provably catches it. Spark hashes the BINARY column
+    directly — md5(bytes) ≡ DuckDB md5(varchar) on UTF-8 — and groups
+    by the digest: payload bytes never shuffle, only 16-byte hashes
+    do. The grouping key at scale is the digest of a multi-MB blob —
+    the only workable equality key for binary assets."""
+    d = Tables(spark, sf_dir).documents.select("doc_id", "text")
+    replays = d.filter(F.col("doc_id") % 11 == 0).select(
+        (F.col("doc_id") + _REPLAY_OFFSET).alias("doc_id"), "text"
+    )
+    assets = d.unionByName(replays).select(
+        "doc_id",
+        F.encode(F.substring("text", 1, _PAYLOAD_PREFIX), "UTF-8").alias(
+            "payload"
+        ),
+    )
+    return (
+        assets.groupBy(F.md5("payload").alias("payload_md5"))
+        .agg(
+            F.count(F.lit(1)).alias("n_copies"),
+            F.min("doc_id").alias("first_id"),
+            F.max("doc_id").alias("last_id"),
+            F.max(F.octet_length("payload")).cast("bigint").alias(
+                "payload_bytes"
+            ),
+        )
+        .filter(F.col("n_copies") >= 2)
+    )
+
+
+@register(
+    "multimodal_coverage_audit",
+    oracle="""
+WITH avail AS (SELECT vec_id FROM embeddings WHERE vec_id % 7 <> 0)
+SELECT
+  (SELECT count(*) FROM documents) AS n_docs,
+  (SELECT count(*) FROM avail) AS n_vectors,
+  (SELECT count(*) FROM documents d
+   WHERE NOT EXISTS (SELECT 1 FROM avail a WHERE a.vec_id = d.doc_id))
+    AS docs_missing_vector,
+  (SELECT count(*) FROM avail a
+   WHERE NOT EXISTS (SELECT 1 FROM documents d WHERE d.doc_id = a.vec_id))
+    AS dangling_vectors,
+  floor((SELECT CAST(count(*) AS DOUBLE) FROM documents d
+         WHERE EXISTS (SELECT 1 FROM avail a WHERE a.vec_id = d.doc_id))
+        / (SELECT count(*) FROM documents) * 1000000 + 0.5) / 1000000
+    AS coverage_ratio
+""",
+)
+def multimodal_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cross-modal referential coverage: how many documents lack an
+    embedding, how many embeddings dangle without a document, and the
+    coverage ratio — the audit run before any multimodal join is
+    trusted (a silent inner join would just drop the uncovered rows).
+    The corpus ships with PERFECT 1:1 coverage [measured], so gaps are
+    injected (vectors with vec_id % 7 = 0 withheld — the simulated
+    failed-embedding-job slice) to keep the audit non-degenerate. Two
+    anti-join counts + one semi count over key-only projections."""
+    t = Tables(spark, sf_dir)
+    docs = t.documents.select("doc_id")
+    avail = t.embeddings.filter(F.col("vec_id") % 7 != 0).select("vec_id")
+    n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
+    n_vec = avail.agg(F.count(F.lit(1)).alias("n_vectors"))
+    missing = docs.join(
+        avail, docs.doc_id == avail.vec_id, "left_anti"
+    ).agg(F.count(F.lit(1)).alias("docs_missing_vector"))
+    dangling = avail.join(
+        docs, docs.doc_id == avail.vec_id, "left_anti"
+    ).agg(F.count(F.lit(1)).alias("dangling_vectors"))
+    covered = docs.join(
+        avail, docs.doc_id == avail.vec_id, "left_semi"
+    ).agg(F.count(F.lit(1)).cast("double").alias("n_cov"))
+    return (
+        n_docs.crossJoin(F.broadcast(n_vec))
+        .crossJoin(F.broadcast(missing))
+        .crossJoin(F.broadcast(dangling))
+        .crossJoin(F.broadcast(covered))
+        .select(
+            "n_docs",
+            "n_vectors",
+            "docs_missing_vector",
+            "dangling_vectors",
+            pround(F.col("n_cov") / F.col("n_docs")).alias(
+                "coverage_ratio"
+            ),
+        )
+    )

@@ -30,6 +30,8 @@ from ai_dataingestion_spark.ai.dedup import (
 )
 from ai_dataingestion_spark.catalog import register, sql_op
 from ai_dataingestion_spark.functions.portable import (
+    hash60_expr,
+    hash60_sql,
     pround,
     stable_sum,
     stable_sum_sql,
@@ -274,9 +276,7 @@ SELECT doc_id,
        array_to_string(list_transform(
          list_slice(list_sort(list_transform(
            range(1, greatest(len(toks) - 2, 2)),
-           i -> CAST('0x'||substring(
-                  md5(array_to_string(list_slice(toks, i, i + 3), ' ')),
-                  1, 15) AS BIGINT)
+           i -> {hash60_sql("array_to_string(list_slice(toks, i, i + 3), ' ')")}
          )), 1, 4),
          h -> CAST(h AS VARCHAR)
        ), ',') AS fingerprint
@@ -298,11 +298,11 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is '', so a NULL document would otherwise fingerprint as md5('') — a
     # shared fake identity for every null doc (the _SHINGLES_EXPR rule)
     window_hashes = F.expr(
-        """
+        f"""
         CASE WHEN toks IS NULL THEN NULL
              ELSE transform(
                sequence(1, greatest(size(toks) - 3, 1)),
-               i -> CAST(conv(substring(md5(concat_ws(' ', slice(toks, i, 4))),1,15),16,10) AS BIGINT)
+               i -> {hash60_expr("concat_ws(' ', slice(toks, i, 4))")}
              )
         END
         """
@@ -615,7 +615,7 @@ _CMS_P = (1 << 31) - 1
 def _cms_row_duck(r: int) -> str:
     """DuckDB bucket index for sketch row r over column `token`."""
     return (
-        f"((({2 * r + 3} * (CAST('0x'||substring(md5(token),1,15) AS BIGINT)"
+        f"((({2 * r + 3} * ({hash60_sql('token')}"
         f" % {_CMS_P}) + {1000003 * r + 12345}) % {_CMS_P}) % {_CMS_W})"
     )
 
@@ -668,9 +668,7 @@ def agg_count_min_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     each time)."""
     d = Tables(spark, sf_dir).documents
     toks = d.select(F.explode(tokens()).alias("token"))
-    base = F.expr(
-        f"CAST(conv(substring(md5(token),1,15),16,10) AS BIGINT) % {_CMS_P}"
-    )
+    base = F.expr(f"{hash60_expr('token')} % {_CMS_P}")
     assigned = toks.select(
         "token",
         *[
@@ -2504,4 +2502,44 @@ def text_sentence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             F.col("n_chars").cast("double") / F.greatest(n_sent, F.lit(1)), 6
         ).alias("chars_per_sentence"),
+    )
+
+
+@register(
+    "corpus_source_entropy",
+    oracle=f"""
+WITH per_source AS (
+  SELECT source, sum(len({tokens_sql()})) AS n_tokens
+  FROM documents GROUP BY source
+),
+tot AS (SELECT sum(n_tokens) AS total FROM per_source)
+SELECT count(*) AS n_sources,
+       round(-sum((CAST(n_tokens AS DOUBLE) / total)
+                  * log2(CAST(n_tokens AS DOUBLE) / total)), 6)
+         AS source_entropy_bits,
+       round(pow(2.0, -sum((CAST(n_tokens AS DOUBLE) / total)
+                           * log2(CAST(n_tokens AS DOUBLE) / total))), 6)
+         AS effective_sources
+FROM per_source, tot
+""",
+)
+def corpus_source_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Source-diversity entropy: token-weighted Shannon entropy over the
+    corpus's source distribution and its exponential (effective source
+    count) — the mixture-health number next to text_mixture_weights.
+    Two tiny aggregates over the per-source relation; one row out."""
+    t = Tables(spark, sf_dir)
+    per_source = t.documents.groupBy("source").agg(
+        F.sum(F.size(tokens())).alias("n_tokens")
+    )
+    tot = per_source.agg(F.sum("n_tokens").alias("total"))
+    p = F.col("n_tokens").cast("double") / F.col("total")
+    ent = -F.sum(p * F.log2(p))
+    return (
+        per_source.crossJoin(F.broadcast(tot))
+        .agg(
+            F.count(F.lit(1)).alias("n_sources"),
+            F.round(ent, 6).alias("source_entropy_bits"),
+            F.round(F.pow(F.lit(2.0), ent), 6).alias("effective_sources"),
+        )
     )

@@ -21,6 +21,12 @@ guard. Known residual: a value within ~1 ulp of an exact power of ten can
 flip floor(log10) between engines, shifting the pair by a decade; inputs
 are data-fixed so this is a per-corpus constant, not a flake, and the
 probability per emitted value is ~1e-15.
+
+Vector geometry has one spelling per engine, in the finite-domain section
+below: a vector kernel sees only vectors that pass ``finite_vec`` /
+``VEC_FINITE_SQL``, and a zero-norm vector has no direction, so its cosine
+and its unit components are NULL on every engine (``cosine_expr`` /
+``cosine_sql``, ``unit_rows``).
 """
 
 from __future__ import annotations
@@ -117,6 +123,19 @@ def tokens_sql(expr: str = "text") -> str:
     return f"string_split({expr}, ' ')"
 
 
+def hash60_expr(s: str) -> str:
+    """Engine-portable 60-bit hash of the Spark SQL string expression ``s``:
+    the first 15 hex digits of its md5, read as a BIGINT. md5 is
+    bit-identical across the engines (unicode included), so signatures
+    built on it are oracle-checkable. Oracle twin: ``hash60_sql``."""
+    return f"CAST(conv(substring(md5({s}),1,15),16,10) AS BIGINT)"
+
+
+def hash60_sql(s: str) -> str:
+    """DuckDB twin of ``hash60_expr`` over SQL string expression ``s``."""
+    return f"CAST('0x'||substring(md5({s}),1,15) AS BIGINT)"
+
+
 def sql_quote(s: str) -> str:
     """``s`` as a single-quoted SQL string literal, read identically by
     Spark SQL and DuckDB."""
@@ -170,6 +189,87 @@ VEC_FINITE_SQL = (
     "({v} IS NOT NULL AND "
     "len(list_filter({v}, x -> x IS NULL OR NOT isfinite(x))) = 0)"
 )
+
+
+def dims(col: str = "embedding") -> Column:
+    """A vector's components as rows: ``(pos, x)`` with the 0-based
+    position, one row per component (a NULL vector yields none). Oracle
+    twin: ``dims_sql``."""
+    return F.posexplode(col).alias("pos", "x")
+
+
+def dims_sql(v: str = "embedding") -> str:
+    """DuckDB twin of ``dims``: the two select items ``pos, x``."""
+    return f"generate_subscripts({v}, 1) - 1 AS pos, unnest({v}) AS x"
+
+
+# Dot product, squared norm and cosine, widened to DOUBLE before any
+# multiply and reduced left to right (Spark ``aggregate`` ≙ DuckDB
+# ``list_sum``), so both engines return bit-identical doubles. The Spark
+# builders return SQL text for one ``F.expr``; the ``*_sql`` twins are
+# DuckDB. A zero-norm vector has no direction: its cosine is NULL on both
+# engines (``try_divide`` here, DuckDB's NULL for ``x / 0.0`` there). The
+# vectors must be non-empty and of equal length (the corpus's one
+# dimension): an empty sum is 0.0 here and NULL in DuckDB, and past the
+# shorter vector Spark's ``zip_with`` pads NULL and nulls the sum, while
+# ``list_sum`` skips DuckDB's NULL products.
+
+
+def dot_expr(a: str, b: str) -> str:
+    """Σ a_i · b_i over array expressions ``a`` and ``b``."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * "
+        "CAST(y AS DOUBLE)), 0.0D, (acc, v) -> acc + v)"
+    )
+
+
+def dot_sql(a: str, b: str) -> str:
+    """DuckDB twin of ``dot_expr``."""
+    return (
+        f"list_sum(list_transform({a}, (x, i) -> CAST(x AS DOUBLE) * "
+        f"CAST({b}[i] AS DOUBLE)))"
+    )
+
+
+def sq_norm_expr(v: str) -> str:
+    """Σ v_i² over array expression ``v``."""
+    return (
+        f"aggregate({v}, 0.0D, "
+        "(acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
+    )
+
+
+def sq_norm_sql(v: str) -> str:
+    """DuckDB twin of ``sq_norm_expr``."""
+    return f"list_sum(list_transform({v}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
+
+
+def cosine_expr(a: str, b: str) -> str:
+    """Cosine of array expressions ``a`` and ``b``; NULL when either has
+    zero norm."""
+    return (
+        f"try_divide({dot_expr(a, b)}, "
+        f"sqrt({sq_norm_expr(a)}) * sqrt({sq_norm_expr(b)}))"
+    )
+
+
+def cosine_sql(a: str, b: str) -> str:
+    """DuckDB twin of ``cosine_expr``."""
+    return (
+        f"({dot_sql(a, b)} / (sqrt({sq_norm_sql(a)}) * sqrt({sq_norm_sql(b)})))"
+    )
+
+
+def unit_rows(m):
+    """numpy twin of the zero-norm rule: the rows of the float64 matrix
+    ``m`` scaled to unit L2 norm, with a zero-norm row all NaN (which
+    crosses Arrow back as NULL). A NaN cosine is then no neighbour:
+    ``C >= t`` is False for it."""
+    import numpy as np
+
+    norm = np.sqrt((m * m).sum(axis=1, keepdims=True))
+    with np.errstate(invalid="ignore"):
+        return m / np.where(norm == 0, np.nan, norm)
 
 
 def component_complete(col: Column | str = "embedding") -> Column:

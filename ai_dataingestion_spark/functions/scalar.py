@@ -626,3 +626,33 @@ def fn_string_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.left(F.col("text"), F.lit(5)).alias("head5"),
         F.right(F.col("text"), F.lit(5)).alias("tail5"),
     )
+
+
+@register(
+    "fn_interval_arith",
+    oracle="""
+SELECT o_orderkey,
+       CAST(o_orderdate + INTERVAL 3 MONTH AS TIMESTAMP) AS plus_3m,
+       CAST(date_trunc('quarter', o_orderdate) AS TIMESTAMP) AS qtr_start,
+       CAST(last_day(o_orderdate) AS TIMESTAMP) AS month_end,
+       CAST(quarter(o_orderdate) AS INT) AS qtr,
+       CAST(dayofyear(o_orderdate) AS INT) AS doy
+FROM orders
+""",
+)
+def fn_interval_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Date/interval arithmetic parity surface: add_months, quarter
+    truncation, month-end, quarter and day-of-year extraction — all
+    whole-stage-codegen expressions. Spark's add_months and DuckDB's
+    + INTERVAL MONTH share end-of-month clamping semantics."""
+    t = Tables(spark, sf_dir)
+    return t.orders.select(
+        "o_orderkey",
+        F.add_months("o_orderdate", 3).cast("timestamp_ntz").alias("plus_3m"),
+        F.date_trunc("quarter", "o_orderdate")
+        .cast("timestamp_ntz")
+        .alias("qtr_start"),
+        F.last_day("o_orderdate").cast("timestamp_ntz").alias("month_end"),
+        F.quarter("o_orderdate").cast("int").alias("qtr"),
+        F.dayofyear("o_orderdate").cast("int").alias("doy"),
+    )

@@ -20,7 +20,6 @@ from ai_dataingestion_spark import pipeline  # noqa: F401
 from ai_dataingestion_spark import streaming  # noqa: F401
 from ai_dataingestion_spark import plans  # noqa: F401
 from ai_dataingestion_spark.operators import advanced  # noqa: F401
-from ai_dataingestion_spark.operators import round5  # noqa: F401
 from ai_dataingestion_spark.operators import round5_waves  # noqa: F401
 from ai_dataingestion_spark.operators import round6_waves  # noqa: F401
 from ai_dataingestion_spark.operators import round7_waves  # noqa: F401

@@ -1,7 +1,6 @@
 """Round-2 surface extensions (SURVEY.md §2.N): robust statistics (median /
-IQR outliers / weighted means), fuzzy string matching, per-label embedding
-centroids, SCD2 interval building, and cross-source exact-dup (leakage)
-detection.
+IQR outliers / weighted means), fuzzy string matching, SCD2 interval
+building, splits, salted and interval joins, and context packing.
 
 Float discipline follows SURVEY.md §5.4: sums of money PRODUCTS go through
 DECIMAL(38,6); quotients (averages, ratios) round at 6 dp; counts and keys
@@ -14,6 +13,8 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ai_dataingestion_spark.catalog import register
 from ai_dataingestion_spark.functions.portable import (
+    hash60_expr,
+    hash60_sql,
     stable_sum,
     stable_sum_sql,
     tokens,
@@ -175,30 +176,6 @@ def fn_levenshtein_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "embed_label_centroid",
-    oracle="""
-SELECT label, i AS dim, round(avg(x), 6) AS centroid FROM (
-  SELECT label, CAST(unnest(embedding) AS DOUBLE) AS x,
-         generate_subscripts(embedding, 1) AS i
-  FROM embeddings
-) GROUP BY label, i
-""",
-)
-def embed_label_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label centroid, one row per (label, dimension): posexplode the
-    vector and average per component — fully partial-aggregable, no vector
-    UDF, the natural k-means-update / class-prototype kernel. (The exploded
-    relation is rows×dim, but each shuffle record is one double — at 100 TB
-    this is the map-side-combined plan, not a per-row array fold.)"""
-    e = Tables(spark, sf_dir).embeddings
-    return (
-        e.select("label", F.posexplode("embedding").alias("pos", "x"))
-        .groupBy("label", (F.col("pos") + 1).alias("dim"))
-        .agg(F.round(F.avg(F.col("x").cast("double")), 6).alias("centroid"))
-    )
-
-
-@register(
     "pipeline_scd2_intervals",
     oracle="""
 SELECT user_id, event_id,
@@ -224,227 +201,6 @@ def pipeline_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros(F.col("ts").cast("timestamp")).alias("valid_from_us"),
         F.unix_micros(nxt.cast("timestamp")).alias("valid_to_us"),
         nxt.isNull().alias("is_current"),
-    )
-
-
-_XSRC_OFFSET = 700_000
-
-
-@register(
-    "dedup_cross_source",
-    oracle=f"""
-WITH corpus AS (
-  SELECT doc_id, text, source FROM documents
-  UNION ALL
-  SELECT doc_id + {_XSRC_OFFSET}, text, 'mirror' FROM documents
-  WHERE doc_id % 3 = 0
-),
-hashed AS (SELECT doc_id, source, sha256(text) AS text_sha FROM corpus)
-SELECT text_sha,
-       min(doc_id) AS keep_id,
-       count(*) AS n_copies,
-       count(DISTINCT source) AS n_sources
-FROM hashed
-GROUP BY text_sha
-HAVING count(DISTINCT source) >= 2
-""",
-)
-def dedup_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-source exact-dup detection (train/eval leakage screen): hash
-    groups spanning ≥2 distinct sources (fixture: every 3rd doc mirrored
-    under a second source). Same uniform-digest shuffle as dedup_exact;
-    the distinct-source count is over a tiny per-group set. At 100 TB this
-    is the standard benchmark-contamination sweep over corpus snapshots."""
-    d = Tables(spark, sf_dir).documents
-    corpus = d.select("doc_id", "text", "source").unionByName(
-        d.filter(F.col("doc_id") % 3 == 0).select(
-            (F.col("doc_id") + _XSRC_OFFSET).alias("doc_id"),
-            "text",
-            F.lit("mirror").alias("source"),
-        )
-    )
-    return (
-        corpus.select("doc_id", "source", F.sha2("text", 256).alias("text_sha"))
-        .groupBy("text_sha")
-        .agg(
-            F.min("doc_id").alias("keep_id"),
-            F.count(F.lit(1)).alias("n_copies"),
-            F.countDistinct("source").alias("n_sources"),
-        )
-        .filter(F.col("n_sources") >= 2)
-    )
-
-
-@register(
-    "dedup_cluster_components",
-    oracle="""
-WITH RECURSIVE nodes AS (SELECT doc_id AS node FROM documents),
-cand AS (
-  SELECT doc_id AS src, doc_id + 1 AS dst FROM documents WHERE doc_id % 5 = 0
-  UNION ALL
-  SELECT doc_id + 1, doc_id + 2 FROM documents WHERE doc_id % 5 = 0
-),
-dir AS (SELECT src, dst FROM cand
-        WHERE src IN (SELECT node FROM nodes)
-          AND dst IN (SELECT node FROM nodes)),
-edges AS (SELECT src, dst FROM dir UNION SELECT dst, src FROM dir),
-walk AS (
-  SELECT node, node AS comp FROM nodes
-  UNION
-  SELECT e.dst AS node, w.comp FROM walk w JOIN edges e ON e.src = w.node
-),
-comps AS (SELECT node, min(comp) AS component FROM walk GROUP BY node)
-SELECT node AS doc_id, component,
-       count(*) OVER (PARTITION BY component) AS component_size
-FROM comps
-""",
-)
-def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate-cluster assignment: connected components over a pair graph
-    (every near-dup pipeline ends here — pair lists must become cluster ids
-    before a keep-one policy can run). Deterministic edge fixture: chains
-    d—(d+1)—(d+2) for d % 5 == 0, so components need MULTI-HOP propagation
-    (d and d+2 share no edge).
-
-    Iterative min-label propagation (the Pregel kernel): each round joins
-    labels to edges and takes the min over (self, neighbors), materialized
-    per round to cut lineage, until a fixpoint. Rounds = graph diameter —
-    2 here; at 100 TB the same loop runs with the alternating large-star/
-    small-star optimization and checkpointed iterations. The driver-side
-    loop is bounded and each round is one shuffle — no per-row Python.
-
-    DuckDB twin: WITH RECURSIVE reachability closure + min per node.
-    """
-    d = Tables(spark, sf_dir).documents.select("doc_id")
-    nodes = d.select(F.col("doc_id").alias("node"))
-    fives = d.filter(F.col("doc_id") % 5 == 0)
-    cand = fives.select(
-        F.col("doc_id").alias("src"), (F.col("doc_id") + 1).alias("dst")
-    ).unionByName(
-        fives.select(
-            (F.col("doc_id") + 1).alias("src"), (F.col("doc_id") + 2).alias("dst")
-        )
-    )
-    directed = cand.join(
-        nodes.select(F.col("node").alias("src")), "src", "left_semi"
-    ).join(nodes.select(F.col("node").alias("dst")), "dst", "left_semi")
-
-    labels = connected_components(nodes, directed)
-    sizes = labels.groupBy("comp").agg(F.count(F.lit(1)).alias("component_size"))
-    return labels.join(F.broadcast(sizes), "comp").select(
-        F.col("node").alias("doc_id"),
-        F.col("comp").alias("component"),
-        "component_size",
-    )
-
-
-def connected_components(
-    nodes: DataFrame, directed_edges: DataFrame, max_iters: int = 32
-) -> DataFrame:
-    """Reusable min-label-propagation kernel: (node) × (src, dst) →
-    (node, comp) where comp is the smallest node id reachable in the
-    undirected closure. Each round is one shuffle (edges ⋈ labels → min);
-    exits at the fixpoint, whose round count is the graph diameter.
-    ``max_iters`` is a runaway bound for adversarial inputs — a path graph
-    of n nodes needs n-1 rounds, so callers with deep graphs must raise it
-    (or switch to large-star/small-star, which converges in O(log n)
-    rounds).
-
-    Each round's labels are localCheckpoint'ed: an iterative DataFrame that
-    references its previous state twice per round grows its logical plan
-    EXPONENTIALLY (2^rounds nodes — measured as a Catalyst OOM near round
-    29 on a 30-node path); checkpointing truncates the lineage so every
-    round plans against a materialized leaf. On a cluster prefer
-    ``checkpoint()`` to a reliable directory — localCheckpoint blocks die
-    with their executor."""
-    edges = directed_edges.select("src", "dst").unionByName(
-        directed_edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    labels = nodes.select("node", F.col("node").alias("comp")).localCheckpoint()
-    for _ in range(max_iters):
-        prop = edges.join(labels, F.col("src") == F.col("node")).select(
-            F.col("dst").alias("node"), "comp"
-        )
-        new_labels = (
-            labels.unionByName(prop)
-            .groupBy("node")
-            .agg(F.min("comp").alias("comp"))
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.join(
-                labels.select("node", F.col("comp").alias("old")), "node"
-            )
-            .filter(F.col("comp") != F.col("old"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
-
-
-_FRAME_LEN = 64       # bytes per sampled frame
-_FRAME_STRIDE = 256   # byte offset between samples
-_N_FRAMES = 3
-
-
-@register(
-    "multimodal_frame_sample",
-    oracle=f"""
-SELECT d.doc_id, f.frame_idx,
-       f.frame_idx * {_FRAME_STRIDE} AS frame_off,
-       lower(substring(hex(encode(d.text)),
-                       f.frame_idx * {_FRAME_STRIDE} * 2 + 1,
-                       {_FRAME_LEN} * 2)) AS frame_hex
-FROM documents d
-CROSS JOIN (VALUES (0), (1), (2)) f(frame_idx)
-WHERE octet_length(encode(d.text)) >= f.frame_idx * {_FRAME_STRIDE} + {_FRAME_LEN}
-""",
-)
-def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame sampling over an opaque binary payload (the video-modality
-    plumbing shape): every document's payload is sampled at fixed byte
-    strides, emitting 0..3 fixed-length frames per row — a mapInPandas
-    stage whose output cardinality differs from its input, exactly like a
-    real frame extractor. Payload bytes stand in for codec frames (no
-    codecs in this container — see _decode_payload in ai/multimodal.py);
-    the byte plumbing, schema, and variable fan-out are real and
-    oracle-checked against hex slices of the same bytes."""
-    import pandas as pd
-
-    from pyspark.sql.types import BinaryType
-
-    d = Tables(spark, sf_dir).documents
-    binary = d.select(
-        "doc_id", F.encode("text", "UTF-8").cast(BinaryType()).alias("payload")
-    )
-
-    def sample(batches):
-        for pdf in batches:
-            out_id, out_idx, out_off, out_hex = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None:  # no payload, no frames (oracle's
-                    continue         # NULL octet_length never passes >=)
-                buf = bytes(payload)
-                for i in range(_N_FRAMES):
-                    off = i * _FRAME_STRIDE
-                    if len(buf) >= off + _FRAME_LEN:
-                        out_id.append(doc_id)
-                        out_idx.append(i)
-                        out_off.append(off)
-                        out_hex.append(buf[off : off + _FRAME_LEN].hex())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_id, dtype="int64"),
-                    "frame_idx": pd.Series(out_idx, dtype="int32"),
-                    "frame_off": pd.Series(out_off, dtype="int32"),
-                    "frame_hex": pd.Series(out_hex, dtype="object"),
-                }
-            )
-
-    return binary.mapInPandas(
-        sample, "doc_id bigint, frame_idx int, frame_off int, frame_hex string"
     )
 
 
@@ -618,160 +374,6 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             F.round(F.avg("value"), 6).alias("avg_value"),
         )
-    )
-
-
-@register(
-    "embed_quantize_int8",
-    oracle="""
-SELECT vec_id,
-       round(max_abs, 9) AS max_abs,
-       q_head, q_sum,
-       round(rmse, 6) AS rmse
-FROM (
-  SELECT vec_id, max_abs,
-         CAST(round(CAST(embedding[1] AS DOUBLE) * 127.0 / max_abs) AS BIGINT)
-           AS q_head,
-         CAST(list_sum(list_transform(embedding,
-              x -> CAST(round(CAST(x AS DOUBLE) * 127.0 / max_abs) AS BIGINT)))
-           AS BIGINT) AS q_sum,
-         sqrt(list_sum(list_transform(embedding,
-              x -> (CAST(x AS DOUBLE)
-                    - round(CAST(x AS DOUBLE) * 127.0 / max_abs)
-                      * max_abs / 127.0)
-                   * (CAST(x AS DOUBLE)
-                      - round(CAST(x AS DOUBLE) * 127.0 / max_abs)
-                        * max_abs / 127.0))) / len(embedding)) AS rmse
-  FROM (
-    SELECT vec_id, embedding,
-           nullif(list_max(list_transform(embedding,
-                x -> abs(CAST(x AS DOUBLE)))), 0) AS max_abs
-    FROM embeddings
-    WHERE embedding IS NOT NULL
-      AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0
-  )
-)
-""",
-)
-def embed_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Symmetric int8 quantization of embeddings (the vector-storage
-    compression every 100 TB ANN index does — 4x smaller than float32):
-    per-vector absmax scale, q = round(x·127/absmax), summarized as exact
-    integer checksums (q_head, q_sum — engine-exact) plus the
-    reconstruction RMSE. Expression-only; at corpus scale the same math
-    runs as one numpy pass per Arrow batch, but the semantics — and the
-    oracle — are these. Quantizes VALID vectors only (nan-tier contract,
-    mirrored in the oracle): round(NaN) cast to BIGINT is a runtime
-    CAST_OVERFLOW under ANSI mode here and a conversion error in the
-    oracle — an int8 index cannot encode a non-finite component at all."""
-    from ai_dataingestion_spark.functions.portable import finite_vec
-
-    e = Tables(spark, sf_dir).embeddings.where(finite_vec("embedding"))
-    x = lambda c: c.cast("double")  # noqa: E731
-    max_abs = F.nullif(
-        F.array_max(F.transform("embedding", lambda v: F.abs(x(v)))),
-        F.lit(0.0),
-    )
-    d = e.select("vec_id", "embedding", max_abs.alias("max_abs"))
-    q = lambda v: F.round(x(v) * 127.0 / F.col("max_abs"), 0)  # noqa: E731
-    return d.select(
-        "vec_id",
-        F.round("max_abs", 9).alias("max_abs"),
-        q(F.element_at("embedding", 1)).cast("bigint").alias("q_head"),
-        F.aggregate(
-            F.transform("embedding", lambda v: q(v).cast("bigint")),
-            F.lit(0).cast("bigint"),
-            lambda acc, v: acc + v,
-        ).alias("q_sum"),
-        F.round(
-            F.sqrt(
-                F.aggregate(
-                    F.transform(
-                        "embedding",
-                        # square by self-multiplication, NOT pow(r, 2):
-                        # libm pow introduces 1-ulp drift between engines
-                        lambda v: (x(v) - q(v) * F.col("max_abs") / 127.0)
-                        * (x(v) - q(v) * F.col("max_abs") / 127.0),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-                / F.size("embedding")
-            ),
-            6,
-        ).alias("rmse"),
-    )
-
-
-@register(
-    "dedup_normalized_text",
-    oracle="""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  -- translate, not upper(): unicode case mapping is library-defined
-  -- (Java's full mapping uppercases sharp-s to SS, utf8proc to capital
-  -- sharp-s) so both the noising and the canonicalizer fold ASCII case
-  -- ONLY; non-ASCII is stripped by the [^a-z0-9 ] class regardless
-  SELECT doc_id + 10000000,
-         translate(replace(text, ' ', '  '),
-                   'abcdefghijklmnopqrstuvwxyz', 'ABCDEFGHIJKLMNOPQRSTUVWXYZ') || ' !!'
-  FROM documents WHERE doc_id % 4 = 0
-),
-norm AS (
-  SELECT doc_id,
-         md5(trim(regexp_replace(regexp_replace(
-              translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'),
-              '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g'))) AS norm_digest
-  FROM corpus
-)
-SELECT norm_digest, count(*) AS n_docs, min(doc_id) AS keeper_doc_id
-FROM norm
-GROUP BY norm_digest
-HAVING count(*) > 1
-ORDER BY n_docs DESC, norm_digest
-""",
-)
-def dedup_normalized_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Normalized exact dedup (the 'fuzzy-exact' stage between byte-exact
-    and MinHash in every corpus pipeline): lowercase → strip non-
-    alphanumerics → collapse whitespace → trim, then group by the md5 of
-    the canonical form. The fixture unions in noised copies of every 4th
-    doc (upper-case, doubled spaces, trailing punctuation) that byte-exact
-    dedup would MISS — each must land in its original's group. Uniform
-    digest keys shuffle evenly at any scale; the keeper is the minimum
-    doc_id, deterministically."""
-    d = Tables(spark, sf_dir).documents.select("doc_id", "text")
-    noised = d.filter(F.col("doc_id") % 4 == 0).select(
-        (F.col("doc_id") + 10_000_000).alias("doc_id"),
-        # translate = portable ASCII-only case fold (see oracle comment)
-        F.concat(
-            F.translate(
-                F.regexp_replace("text", " ", "  "), "abcdefghijklmnopqrstuvwxyz", "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
-            ),
-            F.lit(" !!"),
-        ).alias("text"),
-    )
-    corpus = d.unionByName(noised)
-    canon = F.trim(
-        F.regexp_replace(
-            F.regexp_replace(
-                F.translate(F.col("text"), "ABCDEFGHIJKLMNOPQRSTUVWXYZ", "abcdefghijklmnopqrstuvwxyz"),
-                "[^a-z0-9 ]",
-                "",
-            ),
-            " +",
-            " ",
-        )
-    )
-    return (
-        corpus.select("doc_id", F.md5(canon).alias("norm_digest"))
-        .groupBy("norm_digest")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min("doc_id").alias("keeper_doc_id"),
-        )
-        .filter(F.col("n_docs") > 1)
     )
 
 
@@ -1104,77 +706,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "embed_centroid_outliers",
-    oracle="""
-WITH dims AS (
-  SELECT vec_id, label, generate_subscripts(embedding, 1) AS dim,
-         CAST(unnest(embedding) AS DOUBLE) AS v
-  FROM embeddings
-),
-cent AS (
-  SELECT label, dim, avg(v) AS c FROM dims GROUP BY label, dim
-),
-dist AS (
-  SELECT d.vec_id, d.label,
-         round(sqrt(sum((d.v - c.c) * (d.v - c.c))), 6) AS dist
-  FROM dims d JOIN cent c ON d.label = c.label AND d.dim = c.dim
-  GROUP BY d.vec_id, d.label
-)
-SELECT label, vec_id, dist
-FROM (
-  SELECT label, vec_id, dist,
-         row_number() OVER (PARTITION BY label
-                            ORDER BY dist DESC, vec_id) AS rn
-  FROM dist
-)
-WHERE rn <= 5
-ORDER BY label, rn
-""",
-)
-def embed_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-space outlier screen (mislabeled/corrupt vector detection):
-    distance of every vector from its label centroid, top-5 per label.
-    Fully relational — posexplode to (vec, label, dim, value), centroid by
-    (label, dim), squared-diff re-aggregate by vec — so both engines run
-    the identical plan shape and no array math crosses the oracle
-    boundary. The (label, dim) centroid relation is tiny and broadcasts;
-    the top-5 is a WindowGroupLimit at scale.
-
-    DuckDB's avg() and Spark's partial-agg avg differ by summation order
-    only in the last ulp; distances are rounded at 6 dp (random
-    boundaries, engine-safe per SURVEY §5.4) and ranked by the ROUNDED
-    value with a vec_id tie-break, so rank flips cannot occur."""
-    e = Tables(spark, sf_dir).embeddings
-    dims = e.select(
-        "vec_id",
-        "label",
-        F.posexplode("embedding").alias("dim0", "v_raw"),
-    ).select(
-        "vec_id",
-        "label",
-        (F.col("dim0") + 1).alias("dim"),
-        F.col("v_raw").cast("double").alias("v"),
-    )
-    cent = dims.groupBy("label", "dim").agg(F.avg("v").alias("c"))
-    dist = (
-        dims.join(F.broadcast(cent), ["label", "dim"])
-        .groupBy("vec_id", "label")
-        .agg(
-            F.round(
-                F.sqrt(F.sum((F.col("v") - F.col("c")) * (F.col("v") - F.col("c")))),
-                6,
-            ).alias("dist")
-        )
-    )
-    w = Window.partitionBy("label").orderBy(F.col("dist").desc(), F.col("vec_id"))
-    return (
-        dist.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("label", "vec_id", "dist")
-    )
-
-
-@register(
     "agg_corr_regression",
     oracle="""
 SELECT l_returnflag,
@@ -1220,15 +751,9 @@ def _bloom_parts_sql(key_expr: str, dialect: str) -> dict[str, str]:
     blooms (A AND B membership == k=2 bloom): identical integer paths in
     both dialects from one md5 base hash."""
     if dialect == "spark":
-        base = (
-            f"CAST(conv(substring(md5(CAST({key_expr} AS STRING)),1,15),16,10)"
-            f" AS BIGINT) % {_BLOOM_P}"
-        )
+        base = f"{hash60_expr(f'CAST({key_expr} AS STRING)')} % {_BLOOM_P}"
     else:
-        base = (
-            f"CAST('0x'||substring(md5(CAST({key_expr} AS VARCHAR)),1,15)"
-            f" AS BIGINT) % {_BLOOM_P}"
-        )
+        base = f"{hash60_sql(f'CAST({key_expr} AS VARCHAR)')} % {_BLOOM_P}"
     return {
         "word_a": f"((3 * ({base}) + 17) % {_BLOOM_P}) % {_BLOOM_WORDS}",
         "bit_a": f"((5 * ({base}) + 29) % {_BLOOM_P}) % 63",

@@ -522,3 +522,56 @@ def agg_bool(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.bool_or(F.col("c_acctbal") < 0).alias("any_negative"),
         F.bool_and(F.col("c_custkey") >= 0).alias("all_valid_keys"),
     )
+
+
+@register(
+    "agg_higher_moments",
+    oracle="""
+WITH powers AS (
+  SELECT l_returnflag,
+         avg(l_quantity) AS m1,
+         avg(l_quantity * l_quantity) AS e2,
+         avg(l_quantity * l_quantity * l_quantity) AS e3,
+         avg(l_quantity * l_quantity * l_quantity * l_quantity) AS e4,
+         count(*) AS n
+  FROM lineitem GROUP BY l_returnflag
+)
+SELECT l_returnflag, n,
+       round((e3 - 3 * m1 * e2 + 2 * m1 * m1 * m1)
+             / pow(e2 - m1 * m1, 1.5), 6) AS skewness,
+       round((e4 - 4 * m1 * e3 + 6 * m1 * m1 * e2 - 3 * m1 * m1 * m1 * m1)
+             / pow(e2 - m1 * m1, 2.0) - 3.0, 6) AS excess_kurtosis
+FROM powers
+""",
+)
+def agg_higher_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Population skewness and excess kurtosis per return flag, computed
+    from raw power sums (E[x],E[x²],E[x³],E[x⁴] → central moments) so both
+    engines evaluate the IDENTICAL formula — Spark's built-in skewness()
+    and DuckDB's use different bias corrections, which is exactly the
+    cross-engine trap this query pins down. Single partial-aggregable
+    pass; 6-dp rounding absorbs summation-order noise."""
+    t = Tables(spark, sf_dir)
+    q = F.col("l_quantity")
+    powers = t.lineitem.groupBy("l_returnflag").agg(
+        F.avg(q).alias("m1"),
+        F.avg(q * q).alias("e2"),
+        F.avg(q * q * q).alias("e3"),
+        F.avg(q * q * q * q).alias("e4"),
+        F.count(F.lit(1)).alias("n"),
+    )
+    m1, e2, e3, e4 = (F.col(c) for c in ("m1", "e2", "e3", "e4"))
+    var = e2 - m1 * m1
+    return powers.select(
+        "l_returnflag",
+        "n",
+        F.round((e3 - 3 * m1 * e2 + 2 * m1 * m1 * m1) / F.pow(var, 1.5), 6).alias(
+            "skewness"
+        ),
+        F.round(
+            (e4 - 4 * m1 * e3 + 6 * m1 * m1 * e2 - 3 * m1 * m1 * m1 * m1)
+            / F.pow(var, 2.0)
+            - 3.0,
+            6,
+        ).alias("excess_kurtosis"),
+    )

@@ -349,3 +349,50 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.join(b, F.col("seg").eqNullSafe(F.col("b_seg")))
         .agg(F.count(F.lit(1)).alias("n_matched"))
     )
+
+
+@register(
+    "join_existence_flags",
+    oracle="""
+WITH last_year AS (SELECT max(year(o_orderdate)) AS yr FROM orders),
+flags AS (
+  SELECT o_custkey,
+         max(CASE WHEN year(o_orderdate) = yr THEN 1 ELSE 0 END) AS recent,
+         max(CASE WHEN o_totalprice > 200000 THEN 1 ELSE 0 END) AS big
+  FROM orders, last_year GROUP BY o_custkey
+)
+SELECT c_custkey,
+       coalesce(recent = 1, FALSE) AS has_recent_order,
+       coalesce(big = 1, FALSE) AS has_big_order
+FROM customer LEFT JOIN flags ON c_custkey = o_custkey
+""",
+)
+def join_existence_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Existence flags without N semi-joins: ONE aggregation over orders
+    computes every EXISTS predicate as a max(CASE), then a single left
+    join attaches them — the decorrelated multi-EXISTS pattern (N
+    correlated subqueries would be N shuffles; this is always two)."""
+    t = Tables(spark, sf_dir)
+    last_yr = t.orders.agg(F.max(F.year("o_orderdate")).alias("yr"))
+    flags = (
+        t.orders.crossJoin(F.broadcast(last_yr))
+        .groupBy("o_custkey")
+        .agg(
+            F.max(
+                F.when(F.year("o_orderdate") == F.col("yr"), 1).otherwise(0)
+            ).alias("recent"),
+            F.max(
+                F.when(F.col("o_totalprice") > 200000, 1).otherwise(0)
+            ).alias("big"),
+        )
+    )
+    return (
+        t.customer.join(flags, F.col("c_custkey") == F.col("o_custkey"), "left")
+        .select(
+            "c_custkey",
+            F.coalesce(F.col("recent") == 1, F.lit(False)).alias(
+                "has_recent_order"
+            ),
+            F.coalesce(F.col("big") == 1, F.lit(False)).alias("has_big_order"),
+        )
+    )

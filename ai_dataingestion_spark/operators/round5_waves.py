@@ -9,6 +9,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ai_dataingestion_spark.catalog import register
 from ai_dataingestion_spark.functions.portable import (
+    hash60_expr,
+    hash60_sql,
     pround,
     stable_rounded_sum,
     stable_rounded_sum_sql,
@@ -34,149 +36,6 @@ import os
 # Float discipline follows SURVEY.md §5.4: ratios/doubles rounded at 6 dp
 # on BOTH sides; counts, keys, and day deltas exact.
 # ===========================================================================
-
-
-# ---------------------------------------------------------------------------
-# §2.Q.5 blocked edit-distance dedup
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "dedup_edit_distance_blocked",
-    oracle=f"""
-WITH blocked AS (
-  SELECT doc_id, text,
-         n_chars // 32 AS len_bucket,
-         array_to_string(list_slice({tokens_sql()}, 1, 5), ' ')
-           AS prefix5
-  FROM documents
-),
-sized AS (
-  SELECT *, count(*) OVER (PARTITION BY len_bucket, prefix5) AS block_n
-  FROM blocked
-),
-cand AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         -- DP length cap (VERDICT-r9 item 6): when BOTH texts exceed
-         -- 4,000 chars, compare their first 4,000 chars — identical
-         -- contract on the Spark side
-         CASE WHEN len(a.text) > 4000 AND len(b.text) > 4000
-              THEN a.text[1:4000] ELSE a.text END AS ta,
-         CASE WHEN len(a.text) > 4000 AND len(b.text) > 4000
-              THEN b.text[1:4000] ELSE b.text END AS tb,
-         len(a.text) AS la_full, len(b.text) AS lb_full
-  FROM sized a JOIN sized b
-    ON a.len_bucket = b.len_bucket AND a.prefix5 = b.prefix5
-   AND a.doc_id < b.doc_id
-  WHERE a.block_n <= 100
-    -- ASCII operands only: edit distance is an ENCODING-UNIT metric and
-    -- the engines count different units outside printable ASCII (bytes
-    -- here, UTF-16 units there) — real pipelines transliterate before
-    -- edit distance
-    AND NOT regexp_matches(a.text, '[^ -~]')
-    AND NOT regexp_matches(b.text, '[^ -~]')
-),
-scored AS (
-  -- equality short-circuit BEFORE the DP: identical operands (the
-  -- dominant candidate class once a corpus accumulates exact copies)
-  -- cost a string compare, never O(n*m) cells
-  SELECT doc_a, doc_b, la_full, lb_full,
-         CASE WHEN ta = tb THEN 0 ELSE levenshtein(ta, tb) END AS edit_dist,
-         greatest(len(ta), len(tb)) AS cap_len
-  FROM cand
-)
-SELECT doc_a, doc_b, edit_dist
-FROM scored
-WHERE edit_dist <= 0.2 * cap_len
-  -- full-length agreement guard (ADVICE r10 #2): the prefix cap makes the
-  -- DP blind past 4,000 chars, so two book-length docs sharing a 4,000-char
-  -- preamble scored 0 no matter how different their tails; edit distance
-  -- over the FULL texts is >= their length delta, so requiring the delta
-  -- within threshold of the FULL max length is a sound necessary condition
-  -- the cap was discarding (implied by the main predicate for uncapped
-  -- pairs, so it only bites the capped branch)
-  AND abs(la_full - lb_full) <= 0.2 * greatest(la_full, lb_full)
-""",
-)
-def dedup_edit_distance_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded edit-distance near-dup pairs: candidates are generated by
-    a (length-bucket, 5-token-prefix) equality block — two docs whose
-    lengths differ by more than the bucket width or whose openings
-    differ can't be small-edit variants — then verified with exact
-    Levenshtein ≤ 20% of the longer text. Blocks over 100 docs are
-    dropped (deterministic skew cap, mirrored in the oracle): quadratic
-    work is bounded by 100² per block, never corpus². Complements
-    dedup_ngram_jaccard (bag-of-shingles) with an ORDER-sensitive edit
-    measure.
-
-    DP cost contract (mirrored in the oracle): when
-    BOTH operands exceed 4,000 chars the distance is computed over their
-    first 4,000 chars (an O(cap²) bound — near-dup triage on book-length
-    docs is a prefix decision, and the extremes tier's identical 100k-char
-    docs cost ~1e10 DP cells per pair per engine without it), and
-    byte-equal operands short-circuit to 0 before any DP on either engine
-    (the oracle's CASE guards DuckDB, which has no equality fast path).
-    The capped branch additionally requires full-length agreement —
-    abs(len_a - len_b) <= 0.2 * max(len_a, len_b) on the FULL texts:
-    a necessary condition of the uncapped metric (edit
-    distance >= length delta) that the prefix cap was blind to, so two
-    book-length docs sharing a 4,000-char preamble but wildly different
-    tails no longer report edit_dist 0. Mirrored on both engines;
-    implied-by-threshold (hence a no-op) for uncapped pairs."""
-    t = Tables(spark, sf_dir)
-    blocked = t.documents.select(
-        "doc_id",
-        "text",
-        (F.col("n_chars") / F.lit(32)).cast("bigint").alias("len_bucket"),
-        F.array_join(F.slice(tokens(), 1, 5), " ").alias("prefix5"),
-    )
-    sized = blocked.withColumn(
-        "block_n", F.count(F.lit(1)).over(Window.partitionBy("len_bucket", "prefix5"))
-    ).filter(F.col("block_n") <= 100)
-    a = sized.alias("a")
-    b = sized.alias("b")
-    both_long = (F.length(F.col("a.text")) > 4000) & (
-        F.length(F.col("b.text")) > 4000
-    )
-    ta = F.when(both_long, F.substring(F.col("a.text"), 1, 4000)).otherwise(
-        F.col("a.text")
-    )
-    tb = F.when(both_long, F.substring(F.col("b.text"), 1, 4000)).otherwise(
-        F.col("b.text")
-    )
-    cap_len = F.greatest(F.length(ta), F.length(tb))
-    # Semantics-preserving cost cuts (mirrored contract): edit distance is
-    # >= |len(a)-len(b)|, so pairs whose length delta already exceeds the
-    # threshold drop BEFORE any O(n*m) work, and byte-equal pairs
-    # short-circuit to 0. Measured: 101 s -> 17.5 s on the 10x sweep.
-    len_delta = F.abs(F.length(ta) - F.length(tb))
-    # full-length agreement guard: necessary condition of
-    # the UNCAPPED metric on the full texts; only bites the capped branch
-    la_full, lb_full = F.length(F.col("a.text")), F.length(F.col("b.text"))
-    full_len_ok = F.abs(la_full - lb_full) <= 0.2 * F.greatest(la_full, lb_full)
-    dist = F.when(ta == tb, F.lit(0)).otherwise(F.levenshtein(ta, tb))
-    return (
-        a.join(
-            b,
-            (F.col("a.len_bucket") == F.col("b.len_bucket"))
-            & (F.col("a.prefix5") == F.col("b.prefix5"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        # ASCII operands only (oracle mirrors): engines count different
-        # encoding units outside ASCII — bytes vs UTF-16 code units
-        .filter(
-            ~F.col("a.text").rlike("[^ -~]")
-            & ~F.col("b.text").rlike("[^ -~]")
-        )
-        .filter(full_len_ok)
-        .filter(len_delta <= 0.2 * cap_len)
-        .filter(dist <= 0.2 * cap_len)
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            dist.alias("edit_dist"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -267,76 +126,6 @@ def quality_null_blank_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"stack(3, {stack_expr}) AS "
             "(column_name, n_rows, n_null, n_blank, n_distinct)"
         )
-    )
-
-
-@register(
-    "embed_label_eta_squared",
-    oracle="""
-WITH dims AS (
-  SELECT label,
-         generate_subscripts(embedding, 1) - 1 AS dim,
-         CAST(unnest(embedding) AS DOUBLE) AS val
-  FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0
-),
-per_label AS (
-  SELECT dim, label, count(*) AS n_l, avg(val) AS mu_l
-  FROM dims GROUP BY dim, label
-),
-overall AS (
-  SELECT dim, avg(val) AS mu, var_pop(val) AS var_total, count(*) AS n
-  FROM dims GROUP BY dim
-)
-SELECT o.dim,
-       round(o.var_total, 6) AS var_total,
-       round(sum(p.n_l * (p.mu_l - o.mu) * (p.mu_l - o.mu)) / o.n
-             / o.var_total, 6) AS eta_squared
-FROM per_label p JOIN overall o ON p.dim = o.dim
-GROUP BY o.dim, o.var_total, o.n
-""",
-)
-def embed_label_eta_squared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-dimension label separability: eta² = between-label variance /
-    total variance for each of the 64 embedding dimensions — the ANOVA
-    screen for which dimensions actually encode the label structure
-    (feature selection before clustering). posexplode fans out to
-    n×64 rows once; both aggregations are partial-aggregable and the
-    output is 64 rows at ANY corpus size. 6-dp rounding absorbs
-    summation-order noise in the double sums. ANOVA runs over VALID
-    vectors only (nan-tier contract, mirrored in the oracle): one NaN
-    component turns a dimension's var_pop into NaN here and an Out of
-    Range ERROR in the oracle's kernel."""
-    from ai_dataingestion_spark.functions.portable import finite_vec
-
-    t = Tables(spark, sf_dir)
-    dims = t.embeddings.where(finite_vec("embedding")).select(
-        "label", F.posexplode("embedding").alias("dim", "raw")
-    ).select("label", "dim", F.col("raw").cast("double").alias("val"))
-    per_label = dims.groupBy("dim", "label").agg(
-        F.count(F.lit(1)).alias("n_l"), F.avg("val").alias("mu_l")
-    )
-    overall = dims.groupBy("dim").agg(
-        F.avg("val").alias("mu"),
-        F.var_pop("val").alias("var_total"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    return (
-        per_label.join(overall, "dim")
-        .groupBy("dim", "var_total", "n")
-        .agg(
-            F.round(
-                F.sum(
-                    F.col("n_l") * (F.col("mu_l") - F.col("mu"))
-                    * (F.col("mu_l") - F.col("mu"))
-                )
-                / F.col("n")
-                / F.col("var_total"),
-                6,
-            ).alias("eta_squared")
-        )
-        .select("dim", F.round("var_total", 6).alias("var_total"), "eta_squared")
     )
 
 
@@ -687,133 +476,6 @@ def catalog_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-_GRAM_SCHEMA = "i int, j int, s double"
-
-
-def _partial_gram_kernel(it):
-    """Per-Arrow-batch partial sufficient statistics for PCA: the upper
-    triangle of Σ x·xᵀ as (i, j, s) rows, per-dimension sums as
-    (i, -1, Σx_i), and the row count as (-1, -1, n). Each vector crosses
-    into Python exactly once and each batch ships ≤ 64·65/2 + 65 rows
-    regardless of batch size — the partial-aggregable Gram shape that
-    tree-reduces on a cluster."""
-    import numpy as np
-    import pandas as pd
-
-    for pdf in it:
-        if len(pdf) == 0:
-            continue
-        X = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-        d = X.shape[1]
-        G = X.T @ X
-        iu, ju = np.triu_indices(d)
-        sums = X.sum(axis=0)
-        yield pd.DataFrame(
-            {
-                "i": np.concatenate([iu, np.arange(d), [-1]]).astype("int32"),
-                "j": np.concatenate([ju, np.full(d, -1), [-1]]).astype("int32"),
-                "s": np.concatenate([G[iu, ju], sums, [float(len(pdf))]]),
-            }
-        )
-
-
-@register(
-    "embed_pca_top_component",
-    oracle="""
-WITH ex AS (
-  SELECT vec_id,
-         generate_subscripts(embedding, 1) - 1 AS i,
-         CAST(unnest(embedding) AS DOUBLE) AS x
-  FROM embeddings WHERE embedding IS NOT NULL
-),
-mu AS (SELECT i, avg(x) AS m FROM ex GROUP BY i),
-cov AS (
-  SELECT a.i AS i, b.i AS j,
-         avg(a.x * b.x) - ma.m * mb.m AS c
-  FROM ex a JOIN ex b ON a.vec_id = b.vec_id
-  JOIN mu ma ON a.i = ma.i
-  JOIN mu mb ON b.i = mb.i
-  GROUP BY a.i, b.i, ma.m, mb.m
-),
-v0 AS (SELECT i, 0.125 AS v FROM mu),
-w1 AS (SELECT c.i, sum(c.c * v0.v) AS w FROM cov c JOIN v0 ON c.j = v0.i GROUP BY c.i),
-v1 AS (SELECT i, w / sqrt(sum(w * w) OVER ()) AS v FROM w1),
-w2 AS (SELECT c.i, sum(c.c * v1.v) AS w FROM cov c JOIN v1 ON c.j = v1.i GROUP BY c.i),
-v2 AS (SELECT i, w / sqrt(sum(w * w) OVER ()) AS v FROM w2),
-w3 AS (SELECT c.i, sum(c.c * v2.v) AS w FROM cov c JOIN v2 ON c.j = v2.i GROUP BY c.i),
-v3 AS (SELECT i, w / sqrt(sum(w * w) OVER ()) AS v FROM w3),
-w4 AS (SELECT c.i, sum(c.c * v3.v) AS w FROM cov c JOIN v3 ON c.j = v3.i GROUP BY c.i),
-v4 AS (SELECT i, w / sqrt(sum(w * w) OVER ()) AS v FROM w4),
-w5 AS (SELECT c.i, sum(c.c * v4.v) AS w FROM cov c JOIN v4 ON c.j = v4.i GROUP BY c.i)
-SELECT i AS dim,
-       round(w / sqrt(sum(w * w) OVER ()), 6) AS loading,
-       round(sqrt(sum(w * w) OVER ()), 6) AS eigenvalue
-FROM w5
-""",
-)
-def embed_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dominant principal component of the embedding corpus: covariance
-    via sufficient statistics, then five unrolled power iterations from
-    the uniform start vector (1/8 per dim, ‖v₀‖=1 for d=64).
-
-    Scale shape: the ONLY pass over the corpus is an Arrow mapInPandas
-    kernel emitting per-batch partial Gram statistics (≤ 2145 rows per
-    batch, independent of batch size) that a single groupBy(i, j)
-    tree-reduces — never the 4096·n explode-self-join the SQL oracle
-    spells (that is the semantic spec, quadratic in d·n and fine at
-    oracle scale only). The reduced statistics are d²-bounded (2,145
-    doubles regardless of corpus size — the same bounded-collect class
-    as sim_ann_ivf's 16 centroids), so the 64×64 eigen-iteration runs
-    driver-side in numpy: a first cut that expressed the five
-    iterations as chained DataFrame joins paid ~50 tiny-stage
-    schedulings (28 s at sf0.01 vs 1.5 s this way) to move 4-KB
-    relations around. Power iteration from a positive start converges
-    to the dominant eigenvector with deterministic sign; 6-dp rounding
-    absorbs the engines' summation-order noise."""
-    import numpy as np
-
-    t = Tables(spark, sf_dir)
-    # NULL embeddings have no geometry (oracle mirrors the exclusion);
-    # np.stack over an Arrow batch containing None is a hard crash.
-    partial = (
-        t.embeddings.where(F.col("embedding").isNotNull())
-        .select("embedding")
-        .mapInPandas(_partial_gram_kernel, schema=_GRAM_SCHEMA)
-    )
-    stats = partial.groupBy("i", "j").agg(F.sum("s").alias("s"))
-    rows = stats.collect()  # d*(d+1)/2 + d + 1 rows — dimension-bounded
-    schema = "dim int, loading double, eigenvalue double"
-    if not rows:  # empty corpus: no statistics, no component
-        return spark.createDataFrame([], schema)
-    d = max(r["i"] for r in rows) + 1
-    S = np.zeros((d, d))
-    sums = np.zeros(d)
-    n = 0.0
-    for r in rows:
-        if r["i"] == -1:
-            n = r["s"]
-        elif r["j"] == -1:
-            sums[r["i"]] = r["s"]
-        else:
-            S[r["i"], r["j"]] = r["s"]
-            S[r["j"], r["i"]] = r["s"]
-    mu = sums / n
-    cov = S / n - np.outer(mu, mu)
-    v = np.full(d, 0.125)
-    for _ in range(5):
-        w = cov @ v
-        norm = float(np.sqrt((w * w).sum()))
-        v = w / norm
-    out = [(int(i), float(v[i]), float(norm)) for i in range(d)]
-    # round via F.round (HALF_UP, the DuckDB round semantics) — Python's
-    # built-in round is banker's and could diverge on exact .5e-6 ties
-    return spark.createDataFrame(out, schema).select(
-        "dim",
-        F.round("loading", 6).alias("loading"),
-        F.round("eigenvalue", 6).alias("eigenvalue"),
-    )
-
-
 @register(
     "agg_hll_sketch_merge",
     oracle=None,  # output carries the HLL estimate, which no portable SQL
@@ -1133,57 +795,6 @@ def pipeline_watermark_lag_report(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-def _range_search_oracle() -> str:
-    from ai_dataingestion_spark.ai.similarity import _COSINE_PAIRS_SQL
-
-    return f"""
-WITH {_COSINE_PAIRS_SQL}
-SELECT probe_id, neighbor_id, round(cos, 9) AS cos
-FROM pairs WHERE round(cos, 9) >= 0.3
-"""
-
-
-@register("sim_cosine_range_search", oracle=_range_search_oracle())
-def sim_cosine_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Range similarity search: EVERY neighbor with cosine ≥ 0.3 of each
-    probe — the epsilon-ball companion to sim_cosine_topk's kNN (a range
-    query returns all sufficiently-similar items, however many; top-k
-    returns k, however dissimilar — retrieval pipelines need both). Same
-    one-Arrow-crossing matmul kernel and 9-dp parity rounding; the
-    threshold filter replaces the rank window, so no per-probe sort at
-    all — at scale this is strictly cheaper than top-k."""
-    import numpy as np
-    import pandas as pd
-
-    from ai_dataingestion_spark.ai.similarity import _probe_matrix, _vectors
-
-    e = _vectors(Tables(spark, sf_dir).embeddings)
-    pids, Pn = _probe_matrix(spark, sf_dir)
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf) or not len(pids):
-                continue
-            B = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            Bn = B / np.sqrt((B * B).sum(axis=1, keepdims=True))
-            C = np.round(Bn @ Pn.T, 9)  # (n_batch, n_probes)
-            ni, pi = np.nonzero(C >= 0.3)  # kernel-side threshold: only
-            # qualifying pairs cross back out of the Python worker
-            yield pd.DataFrame(
-                {
-                    "probe_id": np.asarray(pids)[pi],
-                    "neighbor_id": pdf["vec_id"].to_numpy()[ni],
-                    "cos": C[ni, pi],
-                }
-            )
-
-    return (
-        e.select("vec_id", "embedding")
-        .mapInPandas(score, "probe_id bigint, neighbor_id bigint, cos double")
-        .filter(F.col("neighbor_id") != F.col("probe_id"))
-    )
-
-
 # ===========================================================================
 # wave module round5i (formerly operators/round5i.py)
 # Round-5 ninth wave (SURVEY.md §2.Q, continued): the string-formatting
@@ -1427,104 +1038,6 @@ def win_range_numeric_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 # label-confusion matrix and IANA timezone conversion parity.
 # ===========================================================================
 
-@register(
-    "embed_label_confusion",
-    oracle="""
-WITH cent AS (
-  SELECT label, list(c ORDER BY dim) AS cvec FROM (
-    SELECT label, i AS dim, round(avg(x), 6) AS c FROM (
-      SELECT label, CAST(unnest(embedding) AS DOUBLE) AS x,
-             generate_subscripts(embedding, 1) AS i
-      FROM embeddings
-      WHERE embedding IS NOT NULL
-        AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0
-    ) GROUP BY label, i
-  ) GROUP BY label
-),
-dists AS (
-  SELECT e.vec_id, e.label AS true_label, c.label AS other_label,
-         floor(list_sum(list_transform(e.embedding,
-                 (x, i) -> (CAST(x AS DOUBLE) - c.cvec[i])
-                           * (CAST(x AS DOUBLE) - c.cvec[i])))
-               * 1000000 + 0.5) / 1000000 AS d2
-  FROM embeddings e JOIN cent c ON e.label <> c.label
-  WHERE e.embedding IS NOT NULL
-    AND len(list_filter(e.embedding, x -> x IS NULL OR NOT isfinite(x))) = 0
-),
-nearest AS (
-  SELECT vec_id, true_label, other_label,
-         row_number() OVER (PARTITION BY vec_id
-                            ORDER BY d2, other_label) AS rn
-  FROM dists
-)
-SELECT true_label, other_label AS nearest_other_label, count(*) AS n
-FROM nearest WHERE rn = 1
-GROUP BY true_label, other_label
-""",
-)
-def embed_label_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Label-confusion matrix for the embedding space: each vector is
-    assigned the nearest OTHER label's centroid, and the (true label →
-    nearest other label) counts expose which classes blur together —
-    the prototype-based confusability screen run before spending on a
-    classifier. Centroids are rounded to 6dp on BOTH sides before any
-    distance (the rounded-before-compare rule), distances are
-    left-to-right folds (Spark aggregate ≡ DuckDB list_sum — the
-    similarity.py float discipline) rounded before the argmin with an
-    other-label tiebreak. Scale shape: the labels-sized centroid
-    relation broadcasts; distances are map-side n×(k−1); output is
-    bounded by labels² at any corpus size. Runs over VALID vectors only
-    (nan-tier contract, mirrored twice in the oracle — centroid build and
-    scoring): one NaN component poisons a centroid AND makes the argmin
-    rank NaN distances differently across engines."""
-    from ai_dataingestion_spark.functions.portable import finite_vec
-
-    e = Tables(spark, sf_dir).embeddings.where(finite_vec("embedding"))
-    cent = (
-        e.select("label", F.posexplode("embedding").alias("pos", "x"))
-        .groupBy("label", (F.col("pos") + 1).alias("dim"))
-        .agg(F.round(F.avg(F.col("x").cast("double")), 6).alias("c"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "c"))),
-                lambda s: s.getField("c"),
-            ).alias("cvec")
-        )
-    )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("embedding"),
-            F.col("cvec"),
-            lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    dists = (
-        e.crossJoin(
-            F.broadcast(
-                cent.select(
-                    F.col("label").alias("other_label"), "cvec"
-                )
-            )
-        )
-        .filter(F.col("label") != F.col("other_label"))
-        .select(
-            "vec_id",
-            F.col("label").alias("true_label"),
-            "other_label",
-            pround(d2).alias("d2"),
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy("d2", "other_label")
-    return (
-        dists.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .groupBy("true_label", F.col("other_label").alias("nearest_other_label"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
 
 _TZ_ZONES = ["America/New_York", "Asia/Tokyo", "Europe/Berlin"]
 
@@ -1566,73 +1079,6 @@ def fn_timezone_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = part if out is None else out.unionByName(part)
     return out.groupBy("zone", "local_hour").agg(
         F.count(F.lit(1)).alias("n")
-    )
-
-
-# ===========================================================================
-# wave module round5m (formerly operators/round5m.py)
-# Round-5 thirteenth wave (SURVEY.md §2.Q, continued): binary-payload
-# exact dedup over the multimodal column.
-# ===========================================================================
-
-
-_PAYLOAD_PREFIX = 64
-_REPLAY_OFFSET = 5_000_000
-
-
-@register(
-    "multimodal_payload_dedup",
-    oracle=f"""
-WITH assets AS (
-  SELECT doc_id, substring(text, 1, {_PAYLOAD_PREFIX}) AS payload_str
-  FROM documents
-  UNION ALL
-  SELECT doc_id + {_REPLAY_OFFSET}, substring(text, 1, {_PAYLOAD_PREFIX})
-  FROM documents WHERE doc_id % 11 = 0
-)
-SELECT md5(payload_str) AS payload_md5,
-       count(*) AS n_copies,
-       min(doc_id) AS first_id,
-       max(doc_id) AS last_id,
-       CAST(octet_length(encode(payload_str)) AS BIGINT) AS payload_bytes
-FROM assets
-GROUP BY payload_str
-HAVING count(*) >= 2
-""",
-)
-def multimodal_payload_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup over the BINARY payload column — the asset-level
-    twin of dedup_exact for image/audio blobs, where byte-identical
-    payloads recur under different asset ids (re-uploads, replayed
-    ingest batches). Payloads are the deterministic UTF-8 stub bytes
-    (multimodal.py's documented codec posture); a replayed batch is
-    injected (every 11th asset re-enters under a shifted id) so the
-    detector provably catches it. Spark hashes the BINARY column
-    directly — md5(bytes) ≡ DuckDB md5(varchar) on UTF-8 — and groups
-    by the digest: payload bytes never shuffle, only 16-byte hashes
-    do. The grouping key at scale is the digest of a multi-MB blob —
-    the only workable equality key for binary assets."""
-    d = Tables(spark, sf_dir).documents.select("doc_id", "text")
-    replays = d.filter(F.col("doc_id") % 11 == 0).select(
-        (F.col("doc_id") + _REPLAY_OFFSET).alias("doc_id"), "text"
-    )
-    assets = d.unionByName(replays).select(
-        "doc_id",
-        F.encode(F.substring("text", 1, _PAYLOAD_PREFIX), "UTF-8").alias(
-            "payload"
-        ),
-    )
-    return (
-        assets.groupBy(F.md5("payload").alias("payload_md5"))
-        .agg(
-            F.count(F.lit(1)).alias("n_copies"),
-            F.min("doc_id").alias("first_id"),
-            F.max("doc_id").alias("last_id"),
-            F.max(F.octet_length("payload")).cast("bigint").alias(
-                "payload_bytes"
-            ),
-        )
-        .filter(F.col("n_copies") >= 2)
     )
 
 
@@ -1920,64 +1366,6 @@ def win_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("first_seen").over(w_run).cast("bigint").alias(
             "n_distinct_types_so_far"
         ),
-    )
-
-
-_RESUBMIT_OFFSET = 7_000_000
-
-
-@register(
-    "dedup_incremental_batch",
-    oracle=f"""
-WITH lake AS (
-  SELECT doc_id, md5(text) AS h FROM documents WHERE doc_id % 3 <> 0
-),
-batch AS (
-  SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0
-  UNION ALL
-  SELECT doc_id + {_RESUBMIT_OFFSET}, text
-  FROM documents WHERE doc_id % 3 <> 0 AND doc_id % 4 = 0
-),
-hashed AS (SELECT doc_id, md5(text) AS h FROM batch),
-batch_deduped AS (
-  SELECT doc_id, h FROM (
-    SELECT doc_id, h,
-           row_number() OVER (PARTITION BY h ORDER BY doc_id) AS rn
-    FROM hashed)
-  WHERE rn = 1
-)
-SELECT b.doc_id, b.h AS content_md5
-FROM batch_deduped b
-WHERE NOT EXISTS (SELECT 1 FROM lake l WHERE l.h = b.h)
-""",
-)
-def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INCREMENTAL dedup — the production shape where a new ingest batch
-    is deduplicated against the already-accepted lake without
-    re-deduplicating the lake itself: (1) dedup within the batch (keep
-    the smallest id per digest), (2) anti-join the survivors against
-    the lake's digest index. Resubmissions of lake content are injected
-    (every 4th lake doc re-enters under a shifted id) and must all be
-    rejected by stage 2. At 100 TB the lake side is exactly the digest
-    column — 16 bytes/doc, the index a lakehouse keeps materialized —
-    and both stages shuffle digests only; full text never moves."""
-    d = Tables(spark, sf_dir).documents.select("doc_id", "text")
-    lake = d.filter(F.col("doc_id") % 3 != 0).select(
-        F.md5("text").alias("h")
-    )
-    batch = d.filter(F.col("doc_id") % 3 == 0).unionByName(
-        d.filter((F.col("doc_id") % 3 != 0) & (F.col("doc_id") % 4 == 0))
-        .select((F.col("doc_id") + _RESUBMIT_OFFSET).alias("doc_id"), "text")
-    )
-    hashed = batch.select("doc_id", F.md5("text").alias("h"))
-    w = Window.partitionBy("h").orderBy("doc_id")
-    batch_deduped = (
-        hashed.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "h")
-    )
-    return batch_deduped.join(lake, "h", "left_anti").select(
-        "doc_id", F.col("h").alias("content_md5")
     )
 
 
@@ -2828,286 +2216,6 @@ def search_inverted_index_and_query(
     )
 
 
-@register(
-    "multimodal_coverage_audit",
-    oracle="""
-WITH avail AS (SELECT vec_id FROM embeddings WHERE vec_id % 7 <> 0)
-SELECT
-  (SELECT count(*) FROM documents) AS n_docs,
-  (SELECT count(*) FROM avail) AS n_vectors,
-  (SELECT count(*) FROM documents d
-   WHERE NOT EXISTS (SELECT 1 FROM avail a WHERE a.vec_id = d.doc_id))
-    AS docs_missing_vector,
-  (SELECT count(*) FROM avail a
-   WHERE NOT EXISTS (SELECT 1 FROM documents d WHERE d.doc_id = a.vec_id))
-    AS dangling_vectors,
-  floor((SELECT CAST(count(*) AS DOUBLE) FROM documents d
-         WHERE EXISTS (SELECT 1 FROM avail a WHERE a.vec_id = d.doc_id))
-        / (SELECT count(*) FROM documents) * 1000000 + 0.5) / 1000000
-    AS coverage_ratio
-""",
-)
-def multimodal_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-modal referential coverage: how many documents lack an
-    embedding, how many embeddings dangle without a document, and the
-    coverage ratio — the audit run before any multimodal join is
-    trusted (a silent inner join would just drop the uncovered rows).
-    The corpus ships with PERFECT 1:1 coverage [measured], so gaps are
-    injected (vectors with vec_id % 7 = 0 withheld — the simulated
-    failed-embedding-job slice) to keep the audit non-degenerate. Two
-    anti-join counts + one semi count over key-only projections."""
-    t = Tables(spark, sf_dir)
-    docs = t.documents.select("doc_id")
-    avail = t.embeddings.filter(F.col("vec_id") % 7 != 0).select("vec_id")
-    n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    n_vec = avail.agg(F.count(F.lit(1)).alias("n_vectors"))
-    missing = docs.join(
-        avail, docs.doc_id == avail.vec_id, "left_anti"
-    ).agg(F.count(F.lit(1)).alias("docs_missing_vector"))
-    dangling = avail.join(
-        docs, docs.doc_id == avail.vec_id, "left_anti"
-    ).agg(F.count(F.lit(1)).alias("dangling_vectors"))
-    covered = docs.join(
-        avail, docs.doc_id == avail.vec_id, "left_semi"
-    ).agg(F.count(F.lit(1)).cast("double").alias("n_cov"))
-    return (
-        n_docs.crossJoin(F.broadcast(n_vec))
-        .crossJoin(F.broadcast(missing))
-        .crossJoin(F.broadcast(dangling))
-        .crossJoin(F.broadcast(covered))
-        .select(
-            "n_docs",
-            "n_vectors",
-            "docs_missing_vector",
-            "dangling_vectors",
-            pround(F.col("n_cov") / F.col("n_docs")).alias(
-                "coverage_ratio"
-            ),
-        )
-    )
-
-
-# ===========================================================================
-# wave module round5v (formerly operators/round5v.py)
-# Round-5 twenty-second wave (SURVEY.md §2.Q, continued):
-# maximal-marginal-relevance diversified selection and a
-# partition-invariance determinism proof.
-# ===========================================================================
-
-
-_MMR_LAMBDA = 0.7
-_MMR_K = 4
-
-_DUCK_COS = (
-    "floor((list_sum(list_transform({a}, (x, i) -> CAST(x AS DOUBLE)"
-    " * CAST({b}[i] AS DOUBLE)))"
-    " / (sqrt(list_sum(list_transform({a}, x -> CAST(x AS DOUBLE)"
-    " * CAST(x AS DOUBLE))))"
-    " * sqrt(list_sum(list_transform({b}, x -> CAST(x AS DOUBLE)"
-    " * CAST(x AS DOUBLE)))))) * 1000000000 + 0.5) / 1000000000"
-)
-
-
-def _mmr_oracle() -> str:
-    """Unrolled k-step MMR selection as chained CTEs (the kmeans
-    unrolled-oracle precedent). Every stage reads the `emb` CTE — the
-    valid-vector quarantine (nan-tier contract, the engine side's
-    finite_vec): a NaN component would poison the greedy chain's very
-    first argmax and every penalty after it."""
-    cos_qd = _DUCK_COS.format(a="q.embedding", b="e.embedding")
-    parts = [
-        f"""
-emb AS (
-  SELECT vec_id, embedding FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0
-),
-qv AS (SELECT embedding FROM emb
-       WHERE vec_id = (SELECT min(vec_id) FROM emb)),
-scored AS (
-  SELECT e.vec_id, {cos_qd} AS sim
-  FROM emb e CROSS JOIN qv q
-  WHERE e.vec_id <> (SELECT min(vec_id) FROM emb)
-),
-sel1 AS (SELECT vec_id, sim FROM scored ORDER BY sim DESC, vec_id LIMIT 1)
-"""
-    ]
-    prev_sel = "sel1"
-    sel_union = "SELECT vec_id FROM sel1"
-    for step in range(2, _MMR_K + 1):
-        cos_ds = _DUCK_COS.format(a="d.embedding", b="s.embedding")
-        parts.append(
-            f"""
-pen{step} AS (
-  SELECT d.vec_id, max({cos_ds}) AS max_sel_sim
-  FROM emb d
-  JOIN emb s ON s.vec_id IN ({sel_union})
-  WHERE d.vec_id NOT IN ({sel_union})
-    AND d.vec_id <> (SELECT min(vec_id) FROM emb)
-  GROUP BY d.vec_id
-),
-sel{step} AS (
-  SELECT sc.vec_id, sc.sim
-  FROM scored sc JOIN pen{step} p ON sc.vec_id = p.vec_id
-  ORDER BY {_MMR_LAMBDA} * sc.sim - {1 - _MMR_LAMBDA} * p.max_sel_sim DESC,
-           sc.vec_id
-  LIMIT 1
-)"""
-        )
-        sel_union += f" UNION ALL SELECT vec_id FROM sel{step}"
-        prev_sel = f"sel{step}"
-    selects = " UNION ALL ".join(
-        f"SELECT {i + 1} AS pick_order, vec_id, sim FROM sel{i + 1}"
-        for i in range(_MMR_K)
-    )
-    return "WITH " + ",".join(parts) + "\n" + selects
-
-
-@register("embed_mmr_select", oracle=_mmr_oracle())
-def embed_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maximal Marginal Relevance (Carbonell-Goldstein 1998) diversified
-    top-k: greedily pick the candidate maximizing
-    λ·sim(query, d) − (1−λ)·max_sim(d, already-selected) — the
-    diversification step RAG retrieval runs after ANN so the k passages
-    aren't five copies of the same paragraph. λ=0.7, k=4, query = the
-    lowest-id vector. The greedy loop is inherently sequential, so each
-    of the k−1 penalty rounds is one distributed pass (map-side cosines
-    vs the ≤k-row broadcast selected set, argmax with vec_id tiebreak);
-    the driver collects ONE row per round — the bounded-collect budget
-    the kmeans/centroid ops established. Cosines are left-to-right
-    folds rounded to 9dp before every argmax; the oracle unrolls the
-    identical greedy chain as CTEs over the same valid-vector quarantine
-    (nan-tier contract: a NaN component would poison the first argmax
-    and every penalty round after it)."""
-    from ai_dataingestion_spark.functions.portable import finite_vec
-
-    e = Tables(spark, sf_dir).embeddings.where(finite_vec("embedding"))
-    qrow = e.orderBy("vec_id").select("vec_id", "embedding").first()
-    if qrow is None:  # empty corpus: no query vector, empty result
-        return spark.createDataFrame(
-            [], "pick_order int, vec_id bigint, sim double"
-        )
-    q_id, q_vec = qrow["vec_id"], qrow["embedding"]
-
-    def cos(col_name: str, lit_vec: list) -> F.Column:
-        # r17 driver-build rewrite (guide §5, the _cw_sig_agg_exprs
-        # technique): ONE parsed expression per cosine. The Column form
-        # issued ~64 py4j lit() calls per literal vector plus lambda
-        # plumbing, re-paid every round of the greedy loop. repr() floats
-        # with the D suffix round-trip the exact IEEE doubles; 0.0D/0.5D
-        # keep every literal DOUBLE (a bare SQL decimal is DECIMAL).
-        # Pinned term-for-term against the Column form by
-        # tests/test_r17_optimizations.py::test_mmr_cos_string_expr...
-        arr = "array({})".format(
-            ", ".join(f"CAST({float(x)!r} AS DOUBLE)" for x in lit_vec)
-        )
-        dot = (
-            f"aggregate(zip_with({col_name}, {arr},"
-            " (x, y) -> CAST(x AS DOUBLE) * y),"
-            " 0.0D, (acc, v) -> acc + v)"
-        )
-        na = (
-            f"sqrt(aggregate({col_name}, 0.0D,"
-            " (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-        )
-        nb = f"sqrt(aggregate({arr}, 0.0D, (acc, x) -> acc + x * x))"
-        return F.expr(
-            f"floor({dot} / ({na} * {nb}) * 1000000000 + 0.5D) / 1000000000"
-        )
-
-    cand = e.filter(F.col("vec_id") != q_id).select(
-        "vec_id", "embedding", cos("embedding", q_vec).alias("sim")
-    ).transform(op_cache)
-
-    selected: list = []  # (vec_id, sim, embedding)
-    for _ in range(_MMR_K):
-        if not selected:
-            pick = cand.orderBy(F.desc("sim"), F.asc("vec_id")).first()
-        else:
-            sel_ids = [s[0] for s in selected]
-            pen = None
-            for _sid, _ssim, svec in selected:
-                p = cos("embedding", svec)
-                pen = p if pen is None else F.greatest(pen, p)
-            pick = (
-                cand.filter(~F.col("vec_id").isin(sel_ids))
-                .withColumn(
-                    "mmr",
-                    _MMR_LAMBDA * F.col("sim") - (1 - _MMR_LAMBDA) * pen,
-                )
-                .orderBy(F.desc("mmr"), F.asc("vec_id"))
-                .first()
-            )
-        if pick is None:  # fewer than k candidates exist: stop early
-            break
-        selected.append((pick["vec_id"], pick["sim"], pick["embedding"]))
-
-    rows = [
-        (i + 1, int(vid), float(sim))
-        for i, (vid, sim, _vec) in enumerate(selected)
-    ]
-    return spark.createDataFrame(
-        rows, "pick_order int, vec_id bigint, sim double"
-    )
-
-
-@register(
-    "dedup_partition_invariance",
-    oracle="""
-WITH hashed AS (SELECT doc_id, md5(text) AS h FROM documents),
-survivors AS (
-  SELECT doc_id FROM (
-    SELECT doc_id, row_number() OVER (PARTITION BY h ORDER BY doc_id) AS rn
-    FROM hashed)
-  WHERE rn = 1
-)
-SELECT count(*) AS n_survivors,
-       CAST(sum(doc_id) AS BIGINT) AS survivor_id_sum,
-       0 AS layouts_disagree
-FROM survivors
-""",
-)
-def dedup_partition_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partition-layout invariance proof for dedup: the SAME keep-min
-    exact dedup is executed under two adversarial physical layouts —
-    repartition(7, by text) and repartition(13, by doc_id) — and the
-    emitted layouts_disagree is the size of the symmetric difference
-    between their survivor sets, pinned to 0 by the oracle. This is
-    the determinism contract that makes dedup results reproducible
-    across cluster sizes, AQE decisions, and re-runs — asserted as a
-    hash-checked output every round (the topk_per_group_strategies
-    proof pattern applied to data layout)."""
-    d = Tables(spark, sf_dir).documents.select("doc_id", "text")
-
-    def survivors(df: DataFrame) -> DataFrame:
-        w = Window.partitionBy(F.md5("text")).orderBy("doc_id")
-        return (
-            df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("doc_id")
-        )
-
-    s1 = survivors(d.repartition(7, "text"))
-    s2 = survivors(d.repartition(13, "doc_id"))
-    diff = (
-        s1.exceptAll(s2)
-        .unionAll(s2.exceptAll(s1))
-        .agg(F.count(F.lit(1)).alias("n_diff"))
-    )
-    return (
-        s1.agg(
-            F.count(F.lit(1)).alias("n_survivors"),
-            F.sum("doc_id").cast("bigint").alias("survivor_id_sum"),
-        )
-        .crossJoin(F.broadcast(diff))
-        .select(
-            "n_survivors",
-            "survivor_id_sum",
-            F.col("n_diff").cast("int").alias("layouts_disagree"),
-        )
-    )
-
-
 # ===========================================================================
 # wave module round5w (formerly operators/round5w.py)
 # Round-5 twenty-third wave (SURVEY.md §2.Q, continued): partial-
@@ -3231,8 +2339,7 @@ _SHARD_DOCS = 500
 WITH assigned AS (
   SELECT doc_id, n_chars,
          len({tokens_sql()}) AS n_tokens,
-         CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15)
-              AS BIGINT) % 8 AS shard_id
+         {hash60_sql("CAST(doc_id AS VARCHAR)")} % 8 AS shard_id
   FROM documents
 )
 SELECT shard_id,
@@ -3256,13 +2363,7 @@ def pipeline_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     One partial-aggregable pass; hash assignment means shard sizes
     stay balanced at any corpus size without a shuffle-by-range."""
     d = Tables(spark, sf_dir).documents
-    shard = (
-        F.expr(
-            "CAST(conv(substring(md5(cast(doc_id as string)), 1, 15), 16, 10)"
-            " AS BIGINT)"
-        )
-        % 8
-    )
+    shard = F.expr(hash60_expr("cast(doc_id as string)")) % 8
     assigned = d.select(
         "doc_id",
         "n_chars",
@@ -3288,96 +2389,6 @@ def pipeline_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # upsert refresh, two-sample Kolmogorov-Smirnov drift test, and keyset
 # (seek) pagination.
 # ===========================================================================
-
-@register(
-    "embed_index_upsert_refresh",
-    oracle="""
-WITH emb AS (
-  -- valid-vector quarantine (nan-tier contract): an index never admits a
-  -- vector with NaN/Inf components, so neither lake nor batch sees one
-  SELECT vec_id, embedding, label FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0
-),
-lake AS (
-  SELECT vec_id, embedding, label FROM emb WHERE vec_id % 5 <> 0
-),
-batch AS (
-  -- new vectors (the %5 slice) + re-embeddings of every 10th lake vector
-  -- (negated -> provably different), which must REPLACE their lake rows
-  SELECT vec_id, embedding, label FROM emb WHERE vec_id % 5 = 0
-  UNION ALL
-  SELECT vec_id, list_transform(embedding, x -> -x), label
-  FROM emb WHERE vec_id % 5 <> 0 AND vec_id % 10 = 0
-),
-merged AS (
-  SELECT vec_id, embedding, label FROM batch
-  UNION ALL
-  SELECT l.vec_id, l.embedding, l.label FROM lake l
-  WHERE NOT EXISTS (SELECT 1 FROM batch b WHERE b.vec_id = l.vec_id)
-)
-SELECT label,
-       count(*) AS n_vectors,
-       CAST(sum(CASE WHEN vec_id % 5 = 0 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_inserted,
-       CAST(sum(CASE WHEN vec_id % 5 <> 0 AND vec_id % 10 = 0
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_replaced,
-       floor(sum(list_sum(list_transform(embedding,
-               x -> CAST(x AS DOUBLE)))) * 1000000 + 0.5) / 1000000
-         AS component_sum
-FROM merged GROUP BY label
-""",
-)
-def embed_index_upsert_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vector-index upsert: a batch of NEW vectors plus RE-EMBEDDINGS of
-    existing ids (model-version bump — injected as negations so
-    replacement is provable) merges into the vector lake with
-    last-writer-wins on vec_id — the refresh cycle every embedding
-    store runs when the encoder changes. The merge is the anti-join
-    upsert (batch ∪ lake-not-in-batch), keyed on vec_id; the per-label
-    report checksums the post-merge state via each vector's component
-    sum (left-to-right fold), which flips sign for replaced vectors —
-    so a botched merge (duplicate id, missed replacement) breaks the
-    hash, not just the count. The index admits VALID vectors only
-    (nan-tier contract, mirrored in the oracle's emb CTE): a NaN
-    component would poison the per-label checksum."""
-    from ai_dataingestion_spark.functions.portable import finite_vec
-
-    e = Tables(spark, sf_dir).embeddings.where(finite_vec("embedding"))
-    lake = e.filter(F.col("vec_id") % 5 != 0)
-    re_embedded = (
-        e.filter((F.col("vec_id") % 5 != 0) & (F.col("vec_id") % 10 == 0))
-        .select(
-            "vec_id",
-            F.transform(F.col("embedding"), lambda x: -x).alias("embedding"),
-            "label",
-        )
-    )
-    batch = e.filter(F.col("vec_id") % 5 == 0).select(
-        "vec_id", "embedding", "label"
-    ).unionByName(re_embedded)
-    merged = batch.unionByName(
-        lake.join(batch.select("vec_id"), "vec_id", "left_anti").select(
-            "vec_id", "embedding", "label"
-        )
-    )
-    comp_sum = F.aggregate(
-        F.col("embedding"), F.lit(0.0), lambda acc, x: acc + x.cast("double")
-    )
-    return merged.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n_vectors"),
-        F.sum(F.when(F.col("vec_id") % 5 == 0, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_inserted"),
-        F.sum(
-            F.when(
-                (F.col("vec_id") % 5 != 0) & (F.col("vec_id") % 10 == 0), 1
-            ).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("n_replaced"),
-        pround(F.sum(comp_sum)).alias("component_sum"),
-    )
 
 
 _KS_CUT = "2024-01-15"

@@ -7,16 +7,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ai_dataingestion_spark.catalog import register, sql_op
 from ai_dataingestion_spark.functions.portable import (
-    grid_sum,
-    grid_sum_sql,
+    dims_sql,
+    hash60_expr,
+    hash60_sql,
     pround,
-    tokens,
-    tokens_sql,
 )
 from ai_dataingestion_spark.opcache import op_cache
 from ai_dataingestion_spark.tmpdirs import op_tmpdir
 from ai_dataingestion_spark.scale import broadcast_if_small, table_bytes
-from ai_dataingestion_spark.ai.dedup import _duck_h, _spark_h
 import os
 from ai_dataingestion_spark.registry import Tables
 import glob
@@ -262,8 +260,7 @@ _MOM_BUCKETS = 10
     "agg_median_of_means",
     oracle=f"""
 WITH bucketed AS (
-  SELECT CAST('0x' || substring(md5(CAST(o_orderkey AS VARCHAR)), 1, 15)
-              AS BIGINT) % {_MOM_BUCKETS} AS bkt,
+  SELECT {hash60_sql("CAST(o_orderkey AS VARCHAR)")} % {_MOM_BUCKETS} AS bkt,
          CAST(o_totalprice AS DECIMAL(38, 2)) AS v
   FROM orders
 ),
@@ -296,13 +293,7 @@ def agg_median_of_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean emitted alongside for the comparison the estimator exists to
     win."""
     o = Tables(spark, sf_dir).orders
-    bkt = (
-        F.expr(
-            "CAST(conv(substring(md5(cast(o_orderkey as string)), 1, 15),"
-            " 16, 10) AS BIGINT)"
-        )
-        % _MOM_BUCKETS
-    )
+    bkt = F.expr(hash60_expr("cast(o_orderkey as string)")) % _MOM_BUCKETS
     dec = F.col("o_totalprice").cast("decimal(38,2)")
     bucketed = o.select(bkt.alias("bkt"), dec.alias("v"))
     bucket_means = bucketed.groupBy("bkt").agg(
@@ -328,196 +319,11 @@ def agg_median_of_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "dedup_representative_selection",
-    oracle=f"""
-WITH corpus AS (
-  -- text IS NOT NULL on both sides: a doc with no text has no family
-  -- key, and Spark's size(NULL) = -1 vs len(NULL) = NULL would rank
-  -- NULL-family members differently
-  SELECT doc_id, text FROM documents WHERE text IS NOT NULL
-  UNION ALL
-  -- truncated inferior copies of every 4th doc under offset ids
-  SELECT doc_id + 3000000,
-         array_to_string(list_slice({tokens_sql()}, 1,
-           greatest(len({tokens_sql()}) - 5, 1)), ' ')
-  FROM documents WHERE doc_id % 4 = 0 AND text IS NOT NULL
-),
-keyed AS (
-  -- family key: first 5 tokens (the prefix-template family rule)
-  SELECT doc_id, text,
-         md5(array_to_string(list_slice({tokens_sql()}, 1, 5), ' '))
-           AS family,
-         len({tokens_sql()}) AS n_tokens
-  FROM corpus
-),
-ranked AS (
-  SELECT doc_id, family, n_tokens,
-         row_number() OVER (PARTITION BY family
-                            ORDER BY n_tokens DESC, doc_id) AS rn,
-         count(*) OVER (PARTITION BY family) AS family_size
-  FROM keyed
-)
-SELECT doc_id AS representative_id, family,
-       CAST(n_tokens AS BIGINT) AS n_tokens,
-       CAST(family_size AS BIGINT) AS family_size
-FROM ranked
-WHERE rn = 1 AND family_size >= 2
-""",
-)
-def dedup_representative_selection(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """QUALITY-AWARE canonical selection for dedup families: within each
-    family (shared-5-token-prefix key — the template rule), keep the
-    RICHEST copy (most tokens, id tiebreak) instead of the arbitrary
-    smallest id that plain keep-min dedup retains — the policy layer
-    that decides WHICH duplicate survives, which matters when copies
-    are truncated or stripped versions of each other (injected here:
-    every 4th doc re-enters minus its last 5 tokens and must LOSE to
-    its fuller original). One family-partitioned window over
-    (family-hash, token-count) — text leaves the scan only as its
-    hash and length."""
-    d = (
-        Tables(spark, sf_dir)
-        .documents.where(F.col("text").isNotNull())  # oracle mirrors
-        .select("doc_id", "text")
-    )
-    toks = tokens()
-    inferior = d.filter(F.col("doc_id") % 4 == 0).select(
-        (F.col("doc_id") + 3_000_000).alias("doc_id"),
-        F.array_join(
-            F.slice(toks, 1, F.greatest(F.size(toks) - 5, F.lit(1))), " "
-        ).alias("text"),
-    )
-    corpus = d.unionByName(inferior)
-    keyed = corpus.select(
-        "doc_id",
-        F.md5(F.concat_ws(" ", F.slice(tokens(), 1, 5))).alias(
-            "family"
-        ),
-        F.size(tokens()).alias("n_tokens"),
-    )
-    w = Window.partitionBy("family").orderBy(
-        F.desc("n_tokens"), F.asc("doc_id")
-    )
-    ranked = keyed.select(
-        "doc_id",
-        "family",
-        "n_tokens",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy("family")).alias(
-            "family_size"
-        ),
-    )
-    return ranked.filter(
-        (F.col("rn") == 1) & (F.col("family_size") >= 2)
-    ).select(
-        F.col("doc_id").alias("representative_id"),
-        "family",
-        F.col("n_tokens").cast("bigint").alias("n_tokens"),
-        F.col("family_size").cast("bigint").alias("family_size"),
-    )
-
-
 # ===========================================================================
 # wave module round6e (formerly operators/round6e.py)
 # Round-5 thirty-first wave (SURVEY.md §2.Q, continued): embedding
 # dimension correlation pairs and header-driven CSV column reconciliation.
 # ===========================================================================
-
-
-@register(
-    "embed_dim_corr_pairs",
-    oracle="""
-WITH comp AS (
-  SELECT vec_id, generate_subscripts(embedding, 1) AS dim,
-         CAST(unnest(embedding) AS DOUBLE) AS x
-  FROM embeddings WHERE vec_id % 4 = 0
-    AND embedding IS NOT NULL
-    AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0
-),
-pairs AS (
-  SELECT a.dim AS d1, b.dim AS d2,
-         count(*) AS n,
-         sum(a.x) AS sx, sum(b.x) AS sy,
-         sum(a.x * b.x) AS sxy,
-         sum(a.x * a.x) AS sxx, sum(b.x * b.x) AS syy
-  FROM comp a JOIN comp b
-    ON a.vec_id = b.vec_id AND a.dim < b.dim AND b.dim <= a.dim + 8
-  GROUP BY a.dim, b.dim
-),
-scored AS (
-  SELECT d1, d2,
-         floor((sxy - sx * sy / n)
-               / sqrt((sxx - sx * sx / n) * (syy - sy * sy / n))
-               * 1000000 + 0.5) / 1000000 AS r
-  FROM pairs
-)
-SELECT d1, d2, r FROM (
-  SELECT d1, d2, r,
-         row_number() OVER (ORDER BY abs(r) DESC, d1, d2) AS rn
-  FROM scored)
-WHERE rn <= 15
-""",
-)
-def embed_dim_corr_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-dimension redundancy screen: Pearson correlation for
-    every dimension pair within a lag-8 band (d·8 pairs, not d²/2 —
-    the banded screen used before paying for full PCA), top-15 by
-    |r| — highly correlated dimensions mean the encoder wastes width
-    and downstream quantization can fold them. Sampled corpus slice
-    (every 4th vector), exploded once; the pair join is keyed on
-    vec_id with the band predicate bounding fan-out at 8 per
-    component row. Moment sums feed one rounded correlation per pair
-    (float sums stabilized by the 6dp round — the §5.4 rule);
-    rank cut is deterministic. Correlations run over VALID vectors only
-    (nan-tier contract, mirrored in the oracle): one NaN component turns
-    8 band pairs' moment sums into NaN, and |NaN| ranks differently
-    across the engines' top-15 windows."""
-    from ai_dataingestion_spark.functions.portable import finite_vec
-
-    e = Tables(spark, sf_dir).embeddings.filter(
-        (F.col("vec_id") % 4 == 0) & finite_vec("embedding")
-    )
-    comp = e.select(
-        "vec_id", F.posexplode("embedding").alias("pos0", "xf")
-    ).select(
-        "vec_id",
-        (F.col("pos0") + 1).alias("dim"),
-        F.col("xf").cast("double").alias("x"),
-    )
-    a = comp.select("vec_id", F.col("dim").alias("d1"), F.col("x").alias("xa"))
-    b = comp.select("vec_id", F.col("dim").alias("d2"), F.col("x").alias("xb"))
-    pairs = (
-        a.join(b, "vec_id")
-        .filter(
-            (F.col("d1") < F.col("d2")) & (F.col("d2") <= F.col("d1") + 8)
-        )
-        .groupBy("d1", "d2")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("xa").alias("sx"),
-            F.sum("xb").alias("sy"),
-            F.sum(F.col("xa") * F.col("xb")).alias("sxy"),
-            F.sum(F.col("xa") * F.col("xa")).alias("sxx"),
-            F.sum(F.col("xb") * F.col("xb")).alias("syy"),
-        )
-    )
-    r = pround(
-        (F.col("sxy") - F.col("sx") * F.col("sy") / F.col("n"))
-        / F.sqrt(
-            (F.col("sxx") - F.col("sx") * F.col("sx") / F.col("n"))
-            * (F.col("syy") - F.col("sy") * F.col("sy") / F.col("n"))
-        )
-    )
-    scored = pairs.select("d1", "d2", r.alias("r"))
-    w = Window.orderBy(F.desc(F.abs(F.col("r"))), F.asc("d1"), F.asc("d2"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 15)
-        .select("d1", "d2", "r")
-    )
 
 
 @register(
@@ -1119,123 +925,6 @@ def agg_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 # profiling.
 # ===========================================================================
 
-# Expected chunk length = modulus tokens; 8 keeps chunks long enough to
-# carry content but short enough that shared passages align (CDC's whole
-# point: an insertion resynchronizes at the next content boundary, which
-# fixed-width chunking never does).
-_CDC_MOD = 8
-
-
-@register(
-    "dedup_cdc_chunking",
-    oracle=f"""
-WITH toks AS (
-  SELECT doc_id, source,
-         unnest({tokens_sql()}) AS w,
-         generate_subscripts({tokens_sql()}, 1) AS pos
-  FROM documents
-),
-marked AS (
-  SELECT doc_id, source, w, pos,
-         CASE WHEN lag(w) OVER dw IS NOT NULL
-               AND {_duck_h("lag(w) OVER dw || ' ' || w")} % {_CDC_MOD} = 0
-              THEN 1 ELSE 0 END AS b
-  FROM toks
-  WINDOW dw AS (PARTITION BY doc_id ORDER BY pos)
-),
-chunked AS (
-  SELECT doc_id, source, w, pos,
-         sum(b) OVER (PARTITION BY doc_id ORDER BY pos
-                      ROWS UNBOUNDED PRECEDING) AS cid
-  FROM marked
-),
-chunks AS (
-  SELECT doc_id, source, cid,
-         md5(string_agg(w, ' ' ORDER BY pos)) AS ch,
-         count(*) AS n_toks
-  FROM chunked GROUP BY 1, 2, 3
-)
-SELECT source,
-       count(*) AS n_chunks,
-       count(DISTINCT ch) AS n_distinct_chunks,
-       round(1.0 - CAST(count(DISTINCT ch) AS DOUBLE) / count(*), 6)
-         AS dup_chunk_ratio,
-       round(CAST(sum(n_toks) AS DOUBLE) / count(*), 6)
-         AS avg_chunk_tokens
-FROM chunks GROUP BY source
-""",
-)
-def dedup_cdc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content-defined chunking (CDC) dedup profile per source: chunk
-    boundaries fall where the rolling 2-token hash ≡ 0 (mod 8), so an
-    insertion or deletion re-synchronizes at the next content boundary
-    and shared passages still hash to identical chunks — the property
-    fixed-width chunking lacks and the reason CDC underlies
-    storage-level dedup (LBFS, Muthitacharoen 2001). Pipeline: one
-    posexplode, boundary lag + chunk-id cumsum + the (doc, chunk)
-    re-assembly all partitioned by doc_id (one corpus shuffle, the
-    exchange reused across both windows and the groupBy), then a
-    sources-sized distinct-count rollup. Chunk identity is md5 of the
-    order-reassembled text; the boundary hash is the repo's portable
-    md5-prefix bigint so both engines cut identically."""
-    d = Tables(spark, sf_dir).documents
-    toks = d.select(
-        "doc_id",
-        "source",
-        F.posexplode(tokens()).alias("pos", "w"),
-    )
-    dw = Window.partitionBy("doc_id").orderBy("pos")
-    prev = toks.select(
-        "doc_id", "source", "w", "pos", F.lag("w").over(dw).alias("pw")
-    )
-    marked = prev.select(
-        "doc_id",
-        "source",
-        "w",
-        "pos",
-        F.when(
-            F.col("pw").isNotNull()
-            & (
-                F.expr(_spark_h("concat(pw, ' ', w)")) % _CDC_MOD == 0
-            ),
-            1,
-        )
-        .otherwise(0)
-        .alias("b"),
-    )
-    chunked = marked.select(
-        "doc_id",
-        "source",
-        "w",
-        "pos",
-        F.sum("b")
-        .over(dw.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .alias("cid"),
-    )
-    chunks = chunked.groupBy("doc_id", "source", "cid").agg(
-        F.md5(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "w"))),
-                    lambda s: s["w"],
-                ),
-                " ",
-            )
-        ).alias("ch"),
-        F.count(F.lit(1)).alias("n_toks"),
-    )
-    return chunks.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_chunks"),
-        F.countDistinct("ch").alias("n_distinct_chunks"),
-        F.round(
-            1.0 - F.countDistinct("ch").cast("double") / F.count(F.lit(1)),
-            6,
-        ).alias("dup_chunk_ratio"),
-        F.round(
-            F.sum("n_toks").cast("double") / F.count(F.lit(1)), 6
-        ).alias("avg_chunk_tokens"),
-    )
-
 
 @register(
     "quality_column_entropy_profile",
@@ -1352,7 +1041,7 @@ wts AS (
          END AS w
   FROM (
     SELECT b, o_totalprice,
-           CAST({_duck_h("CAST(o_orderkey AS VARCHAR) || '-' || CAST(b AS VARCHAR)")}
+           CAST({hash60_sql("CAST(o_orderkey AS VARCHAR) || '-' || CAST(b AS VARCHAR)")}
                 AS DOUBLE) / {_HASH_SCALE} AS u
     FROM orders CROSS JOIN reps
   )
@@ -1398,7 +1087,7 @@ def agg_bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     u = (
         F.expr(
-            _spark_h(
+            hash60_expr(
                 "concat(CAST(o_orderkey AS STRING), '-', CAST(b AS STRING))"
             )
         ).cast("double")
@@ -1456,77 +1145,6 @@ def agg_bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 # prefix-energy (Matryoshka truncation) analysis and a three-strategy
 # join-equivalence proof.
 # ===========================================================================
-
-_PREFIX_KS = (8, 16, 32, 64)
-
-
-def _prefix_oracle() -> str:
-    per = ",\n".join(
-        f"         sum(CASE WHEN i <= {k} THEN CAST(x AS DOUBLE) * x END)"
-        f" AS e{k}"
-        for k in _PREFIX_KS
-    )
-    rows = "\nUNION ALL\n".join(
-        f"SELECT {k} AS k, round(avg(e{k} / e64), 6) AS mean_energy,"
-        f" round(min(e{k} / e64), 6) AS min_energy,"
-        f" round(max(e{k} / e64), 6) AS max_energy FROM per"
-        for k in _PREFIX_KS
-    )
-    return f"""
-WITH ex AS (
-  SELECT vec_id, unnest(embedding) AS x,
-         generate_subscripts(embedding, 1) AS i
-  FROM embeddings
-),
-per AS (
-  SELECT vec_id,
-{per}
-  FROM ex GROUP BY vec_id
-)
-{rows}
-"""
-
-
-@register("embed_prefix_energy_fraction", oracle=_prefix_oracle())
-def embed_prefix_energy_fraction(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Matryoshka-style prefix-energy curve: what fraction of each
-    embedding's L2 energy lives in its first k dimensions
-    (k ∈ 8/16/32/64) — the measurement behind truncating stored vectors
-    to a prefix (Kusupati 2022): if mean energy at k=16 is already
-    ~0.95 the index can ship quarter-width vectors. One posexplode +
-    one vec_id-partitioned aggregate computing all four conditional
-    energy sums in a single pass (no per-k re-scan), then a 4-row
-    rollup; ratios are per-vector so corpus-level float accumulation
-    never mixes vectors."""
-    e = Tables(spark, sf_dir).embeddings
-    ex = e.select(
-        "vec_id", F.posexplode("embedding").alias("pos", "x")
-    ).select(
-        "vec_id",
-        (F.col("pos") + 1).alias("i"),
-        F.col("x").cast("double").alias("x"),
-    )
-    aggs = [
-        F.sum(
-            F.when(F.col("i") <= k, F.col("x") * F.col("x"))
-        ).alias(f"e{k}")
-        for k in _PREFIX_KS
-    ]
-    per = ex.groupBy("vec_id").agg(*aggs)
-    # stack() unpivots the four ratios from ONE pass over `per` — a
-    # union of four selects would re-run the explode+aggregate per k
-    # (measured: 4 Generate nodes in the physical plan).
-    stack_args = ", ".join(f"{k}, e{k} / e64" for k in _PREFIX_KS)
-    stacked = per.select(
-        F.expr(f"stack({len(_PREFIX_KS)}, {stack_args}) AS (k, f)")
-    )
-    return stacked.groupBy("k").agg(
-        F.round(F.avg("f"), 6).alias("mean_energy"),
-        F.round(F.min("f"), 6).alias("min_energy"),
-        F.round(F.max("f"), 6).alias("max_energy"),
-    )
 
 
 _JOIN_STRATEGIES = ("broadcast", "shuffle_hash", "merge")
@@ -1991,218 +1609,11 @@ def agg_stratified_estimator_variance(
 
 
 # ===========================================================================
-# wave module round6o (formerly operators/round6o.py)
-# Round-5 forty-first wave (SURVEY.md §2.Q, continued): closed-form
-# sign-binarized Hamming separation.
-# ===========================================================================
-
-@register(
-    "embed_sign_hamming_separation",
-    oracle=f"""
-WITH bits AS (
-  SELECT label, generate_subscripts(embedding, 1) AS dim,
-         CASE WHEN unnest(embedding) > 0 THEN 1.0 ELSE 0.0 END AS b
-  FROM embeddings
-),
-marg AS (
-  SELECT label, dim, avg(b) AS p FROM bits GROUP BY label, dim
-)
-SELECT a.label AS label_a, b.label AS label_b,
-       {grid_sum_sql("a.p * (1 - b.p) + (1 - a.p) * b.p")} AS mean_hamming
-FROM marg a JOIN marg b ON a.dim = b.dim
-GROUP BY a.label, b.label
-""",
-)
-def embed_sign_hamming_separation(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Sign-binarized (1-bit-per-dim) Hamming separation between label
-    groups — does the 64× compression of sign-LSH codes (Charikar
-    2002) preserve label structure? The key identity: the EXACT mean
-    pairwise Hamming distance between groups A and B is
-    Σ_d [p_A(1−p_B) + (1−p_A)p_B] where p is each group's per-dim
-    1-bit rate — so the all-pairs O(n²) comparison collapses to an
-    O(labels × dims) join over bit marginals. That closed form IS the
-    100 TB plan: one explode + one (label, dim) aggregate, then a
-    640-row self-join; within-label diagonal (self-pairs included)
-    low vs off-diagonal high = codes separate the labels."""
-    e = Tables(spark, sf_dir).embeddings
-    bits = e.select(
-        "label", F.posexplode("embedding").alias("pos", "x")
-    ).select(
-        "label",
-        (F.col("pos") + 1).alias("dim"),
-        F.when(F.col("x") > 0, 1.0).otherwise(0.0).alias("b"),
-    )
-    # cache the labels×dims marginal (≤640 rows): the self-join would
-    # otherwise re-run the corpus explode+aggregate once per side
-    # (measured: 2 Generate posexplode nodes without it)
-    marg = bits.groupBy("label", "dim").agg(F.avg("b").alias("p")).transform(op_cache)
-    a = marg.select(
-        F.col("label").alias("label_a"),
-        F.col("dim").alias("dim_a"),
-        F.col("p").alias("pa"),
-    )
-    b = marg.select(
-        F.col("label").alias("label_b"),
-        F.col("dim").alias("dim_b"),
-        F.col("p").alias("pb"),
-    )
-    return (
-        a.join(F.broadcast(b), F.col("dim_a") == F.col("dim_b"))
-        .groupBy("label_a", "label_b")
-        .agg(
-            # the 64 per-dim terms sum on the exact 1e-6 integer grid
-            # (portable.py:grid_sum — count-ratio products can land
-            # exactly on decimal-cast midpoints, the null-tier class),
-            # so the emission is bit-deterministic with no further round
-            grid_sum(
-                F.col("pa") * (1 - F.col("pb"))
-                + (1 - F.col("pa")) * F.col("pb")
-            ).alias("mean_hamming")
-        )
-    )
-
-
-# ===========================================================================
 # wave module round6p (formerly operators/round6p.py)
 # Round-5 forty-second wave (SURVEY.md §2.Q, continued):
 # product-quantization reconstruction error and compressed-CSV
 # round-trip interop.
 # ===========================================================================
-
-_PQ_BLOCKS = 4
-_PQ_SUBDIM = 16
-_PQ_K = 4  # codebook entries per block: sub-vectors of vec_ids 0..3
-
-
-@register(
-    "embed_pq_reconstruction_error",
-    oracle=f"""
-WITH ex AS (
-  SELECT vec_id, label, generate_subscripts(embedding, 1) - 1 AS i,
-         CAST(unnest(embedding) AS DOUBLE) AS x
-  FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0
-),
-sub AS (
-  SELECT vec_id, CAST(floor(i / {_PQ_SUBDIM}) AS INTEGER) AS blk,
-         i % {_PQ_SUBDIM} AS j, x
-  FROM ex
-),
-cb AS (
-  SELECT blk, j, vec_id AS cid, x AS cx FROM sub WHERE vec_id < {_PQ_K}
-),
-dist AS (
-  SELECT s.vec_id, s.blk, c.cid,
-         floor(sum((s.x - c.cx) * (s.x - c.cx)) * 1e9 + 0.5) / 1e9 AS d
-  FROM sub s JOIN cb c ON s.blk = c.blk AND s.j = c.j
-  GROUP BY s.vec_id, s.blk, c.cid
-),
-assign AS (
-  SELECT vec_id, blk, min(d) AS best_d
-  FROM (SELECT vec_id, blk, cid, d,
-               row_number() OVER (PARTITION BY vec_id, blk
-                                  ORDER BY d, cid) AS rn
-        FROM dist)
-  WHERE rn = 1 GROUP BY vec_id, blk
-),
-norms AS (
-  SELECT vec_id, sum(x * x) AS e FROM sub GROUP BY vec_id
-),
-per_vec AS (
-  SELECT a.vec_id, sum(a.best_d) AS sq_err, max(n.e) AS e
-  FROM assign a JOIN norms n ON a.vec_id = n.vec_id
-  GROUP BY a.vec_id
-)
-SELECT CAST(count(*) AS BIGINT) AS n_vectors,
-       round(avg(sq_err / e), 6) AS mean_err_ratio,
-       round(max(sq_err / e), 6) AS max_err_ratio,
-       round(avg(sq_err), 6) AS mean_sq_err
-FROM per_vec
-""",
-)
-def embed_pq_reconstruction_error(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Product-quantization (Jégou 2011) reconstruction error: split
-    each 64-dim vector into 4 sub-vectors of 16, snap each to its
-    nearest entry in a 4-entry per-block codebook (deterministically
-    the sub-vectors of vec_ids 0-3 — a fixed 'trained' codebook both
-    engines share), and report how much energy the 2-bit-per-block
-    code loses. PQ is the memory side of ANN serving (sim_ann_ivf
-    prunes candidates; PQ shrinks residents 128×). The plan: one
-    explode to (vec, block, j) cells, the tiny codebook joins
-    BROADCAST, per-(vec, block, centroid) distances aggregate in one
-    pass, argmin by (9-dp-rounded distance, cid) — the
-    tpch_q2_min_cost_supplier round-before-rank rule — then a
-    corpus-sized ratio rollup. Quantizes VALID vectors only (nan-tier
-    contract, mirrored in the oracle): a NaN component makes every
-    block distance NaN, so the argmin degenerates to the cid tiebreak
-    and the error ratios go NaN — quarantine, don't encode."""
-    from ai_dataingestion_spark.functions.portable import finite_vec
-
-    e = Tables(spark, sf_dir).embeddings.where(finite_vec("embedding"))
-    ex = e.select(
-        "vec_id", F.posexplode("embedding").alias("i", "xf")
-    ).select(
-        "vec_id",
-        (F.col("i") / _PQ_SUBDIM).cast("int").alias("blk"),
-        (F.col("i") % _PQ_SUBDIM).alias("j"),
-        F.col("xf").cast("double").alias("x"),
-    )
-    cb = ex.where(F.col("vec_id") < _PQ_K).select(
-        F.col("blk").alias("c_blk"),
-        F.col("j").alias("c_j"),
-        F.col("vec_id").alias("cid"),
-        F.col("x").alias("cx"),
-    )
-    dist = (
-        ex.join(
-            F.broadcast(cb),
-            (F.col("blk") == F.col("c_blk")) & (F.col("j") == F.col("c_j")),
-        )
-        .groupBy("vec_id", "blk", "cid")
-        .agg(
-            (
-                F.floor(
-                    F.sum(
-                        (F.col("x") - F.col("cx"))
-                        * (F.col("x") - F.col("cx"))
-                    )
-                    * 1e9
-                    + 0.5
-                )
-                / 1e9
-            ).alias("d")
-        )
-    )
-    w = Window.partitionBy("vec_id", "blk").orderBy("d", "cid")
-    assign = (
-        dist.select("vec_id", "blk", "d", F.row_number().over(w).alias("rn"))
-        .where(F.col("rn") == 1)
-        .groupBy("vec_id", "blk")
-        .agg(F.min("d").alias("best_d"))
-    )
-    norms = ex.groupBy("vec_id").agg(
-        F.sum(F.col("x") * F.col("x")).alias("e")
-    )
-    per_vec = (
-        assign.groupBy("vec_id")
-        .agg(F.sum("best_d").alias("sq_err"))
-        .join(norms, "vec_id")
-    )
-    return per_vec.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
-        F.round(F.avg(F.col("sq_err") / F.col("e")), 6).alias(
-            "mean_err_ratio"
-        ),
-        F.round(F.max(F.col("sq_err") / F.col("e")), 6).alias(
-            "max_err_ratio"
-        ),
-        F.round(F.avg("sq_err"), 6).alias("mean_sq_err"),
-    )
 
 
 @register(
@@ -2373,11 +1784,11 @@ def fn_json_nested_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "fn_array_reduce_horner",
-    oracle="""
+    oracle=f"""
 WITH ex AS (
-  SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS c,
-         generate_subscripts(embedding, 1) - 1 AS i
-  FROM embeddings WHERE embedding IS NOT NULL
+  SELECT vec_id, CAST(x AS DOUBLE) AS c, pos AS i
+  FROM (SELECT vec_id, {dims_sql()} FROM embeddings
+        WHERE embedding IS NOT NULL)
 ),
 vals AS (
   SELECT vec_id, sum(c * power(0.5, i)) AS h FROM ex GROUP BY vec_id
@@ -2814,12 +2225,12 @@ _CUSTOMER_CANON_SQL = (
     "quality_table_fingerprint",
     oracle=f"""
 SELECT 'orders' AS table_name, count(*) AS n_rows,
-       CAST(sum(CAST({_duck_h(f"({_ORDERS_CANON_SQL})")} AS DECIMAL(38,0)))
+       CAST(sum(CAST({hash60_sql(f"({_ORDERS_CANON_SQL})")} AS DECIMAL(38,0)))
             AS VARCHAR) AS content_fingerprint
 FROM orders
 UNION ALL
 SELECT 'customer', count(*),
-       CAST(sum(CAST({_duck_h(f"({_CUSTOMER_CANON_SQL})")} AS DECIMAL(38,0)))
+       CAST(sum(CAST({hash60_sql(f"({_CUSTOMER_CANON_SQL})")} AS DECIMAL(38,0)))
             AS VARCHAR)
 FROM customer
 """,
@@ -2854,7 +2265,7 @@ def quality_table_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def fp(name: str, df: DataFrame, canon: str) -> DataFrame:
-        h = F.expr(_spark_h(f"({canon})")).cast("decimal(38,0)")
+        h = F.expr(hash60_expr(f"({canon})")).cast("decimal(38,0)")
         return df.agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.sum(h).cast("string").alias("content_fingerprint"),

@@ -7,11 +7,11 @@ from __future__ import annotations
 import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from ai_dataingestion_spark.catalog import register, sql_op
+from ai_dataingestion_spark.functions.portable import hash60_expr, hash60_sql
 from ai_dataingestion_spark.scale import hint_merge_if_large
 from ai_dataingestion_spark.opcache import op_cache
 from ai_dataingestion_spark.registry import Tables
 from ai_dataingestion_spark.tmpdirs import op_tmpdir
-from ai_dataingestion_spark.ai.dedup import _duck_h, _spark_h
 import glob
 from ai_dataingestion_spark.registry import Tables
 import shutil
@@ -251,140 +251,6 @@ def scan_csv_multichar_delim(spark: SparkSession, sf_dir: str) -> DataFrame:
 # partition-grain content fingerprints, and hash-shard balance audits.
 # ===========================================================================
 
-_LOGREG_ORACLE = """
-WITH e AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v,
-         CASE WHEN label = 0 THEN 1.0 ELSE 0.0 END AS y
-  FROM embeddings),
-g1 AS (
-  SELECT i AS dim, round(avg((0.5 - y) * x), 4) AS g
-  FROM (SELECT y, unnest(v) AS x, generate_subscripts(v, 1) AS i FROM e) ex
-  GROUP BY i),
-w1 AS (SELECT list(round(-g, 4) ORDER BY dim) AS wv FROM g1),
-z2 AS (
-  SELECT e.vec_id, e.y, e.v,
-         round(1.0 / (1.0 + exp(-round(list_sum(
-           list_transform(e.v, (x, i) -> x * w1.wv[i])), 4))), 4) AS sig
-  FROM e CROSS JOIN w1),
-g2 AS (
-  SELECT i AS dim, round(avg((sig - y) * x), 4) AS g
-  FROM (SELECT sig, y, unnest(v) AS x, generate_subscripts(v, 1) AS i
-        FROM z2) ex
-  GROUP BY i),
-w2 AS (
-  SELECT g2.dim, round(-g1.g - g2.g, 4) AS w
-  FROM g2 JOIN g1 USING (dim)),
-w2l AS (SELECT list(w ORDER BY dim) AS wv FROM w2),
-acc AS (
-  SELECT 0 AS dim,
-         round(avg(CASE WHEN (round(list_sum(
-                 list_transform(e.v, (x, i) -> x * w2l.wv[i])), 4) >= 0)
-                 = (e.y = 1.0)
-               THEN 1.0 ELSE 0.0 END), 4) AS w
-  FROM e CROSS JOIN w2l)
-SELECT dim, w FROM w2 UNION ALL SELECT dim, w FROM acc
-"""
-
-
-@register("embed_logistic_regression_step", oracle=_LOGREG_ORACLE)
-def embed_logistic_regression_step(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Two unrolled iterations of full-batch logistic-regression gradient
-    descent (binary task: label==0), expressed relationally — the
-    distributed-training kernel as pure DataFrame ops, following
-    embed_kmeans_iterations' determinism recipe. Per iteration: one
-    map-side dot product per vector against the broadcast weight array
-    (left-to-right zip_with fold), a sigmoid, and a partial-aggregable
-    per-dimension gradient mean via posexplode — the exact shape of a
-    parameter-server step where only d gradient scalars shuffle, never
-    vectors. Cross-engine determinism: w0 = 0 makes sigma exactly 0.5 in
-    step 1; thereafter dots, sigmoids, gradient means, and weights are
-    each rounded to 4 dp BEFORE feeding the next stage, so both engines
-    iterate from bit-equal state (the kmeans 4-dp flake-insurance
-    analysis applies). Weight collection between iterations is 64
-    bounded scalars (the documented bounded-collect exception, like the
-    16 IVF centroids). Output: 64 (dim, weight) rows + a dim=0 row with
-    the training-set sign-prediction accuracy at the final weights
-    (0.604 at sf0.001 vs ~0.5 chance — the step demonstrably learns).
-    Oracle: the same two iterations unrolled as DuckDB CTEs."""
-    e = Tables(spark, sf_dir).embeddings.select(
-        "vec_id",
-        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
-        F.expr("CASE WHEN label = 0 THEN 1.0 ELSE 0.0 END").alias("y"),
-    )
-    ex = e.select("y", F.posexplode("v").alias("j0", "x")).select(
-        (F.col("j0") + 1).alias("dim"), "y", "x"
-    )
-    # r17: g1 feeds both the w1 collect and the w2 join — op_cache runs
-    # the first gradient pass once (64 rows cached); the literal weight
-    # arrays are ONE parsed expression instead of 64 py4j lit() calls
-    # (guide §5, the _cw_sig_agg_exprs driver-build technique).
-    g1 = ex.groupBy("dim").agg(
-        F.round(F.avg((F.lit(0.5) - F.col("y")) * F.col("x")), 4).alias("g")
-    ).transform(op_cache)
-    w1 = [round(-r["g"], 4) for r in g1.orderBy("dim").collect()]  # 64 scalars
-    if not w1:  # empty corpus: no dims, no weights — return empty frame
-        return g1.select("dim", F.col("g").alias("w"))
-
-    def lit_arr(vals):
-        # repr() round-trips the exact IEEE double; D keeps it DOUBLE.
-        # NaN/inf (possible at the nan tier: gradients average raw
-        # embedding components) have no SQL literal — cast the Java
-        # tokens, which Spark's string->double cast accepts.
-        def one(x):
-            x = float(x)
-            if x != x:
-                return "CAST('NaN' AS DOUBLE)"
-            if x == float("inf") or x == float("-inf"):
-                return f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)"
-            return f"{x!r}D"
-
-        return F.expr("array({})".format(", ".join(one(x) for x in vals)))
-
-    w1arr = lit_arr(w1)
-
-    def dot(varr):
-        return F.round(
-            F.aggregate(
-                F.zip_with("v", varr, lambda x, w: x * w),
-                F.lit(0.0),
-                lambda a, b: a + b,
-            ),
-            4,
-        )
-
-    z2 = e.select(
-        "y", "v", F.round(1.0 / (1.0 + F.exp(-dot(w1arr))), 4).alias("sig")
-    )
-    ex2 = z2.select("sig", "y", F.posexplode("v").alias("j0", "x")).select(
-        (F.col("j0") + 1).alias("dim"), "sig", "y", "x"
-    )
-    g2 = ex2.groupBy("dim").agg(
-        F.round(F.avg((F.col("sig") - F.col("y")) * F.col("x")), 4).alias("g2")
-    )
-    # r17: w2df feeds both the w2 collect and the returned union —
-    # uncached, the second corpus gradient pass re-executed when the
-    # output was consumed.
-    w2df = g2.join(g1, "dim").select(
-        "dim", F.round(-F.col("g") - F.col("g2"), 4).alias("w")
-    ).transform(op_cache)
-    w2 = [r["w"] for r in w2df.orderBy("dim").collect()]  # 64 scalars
-    w2arr = lit_arr(w2)
-    acc = (
-        e.select(
-            (dot(w2arr) >= 0).alias("pred"), (F.col("y") == 1.0).alias("pos")
-        )
-        .agg(
-            F.round(
-                F.avg(F.when(F.col("pred") == F.col("pos"), 1.0).otherwise(0.0)),
-                4,
-            ).alias("w")
-        )
-        .select(F.lit(0).alias("dim"), "w")
-    )
-    return w2df.unionByName(acc)
-
 
 _PF_CANON_SPARK = (
     "CAST(o_orderkey AS STRING) || '|' || CAST(o_custkey AS STRING)"
@@ -402,7 +268,7 @@ _PF_CANON_DUCK = (
     "quality_partition_fingerprint_diff",
     oracle=f"""
 SELECT strftime(o_orderdate, '%Y-%m') AS month, count(*) AS n_rows,
-       CAST(sum(CAST({_duck_h(f"({_PF_CANON_DUCK})")} AS DECIMAL(38,0)))
+       CAST(sum(CAST({hash60_sql(f"({_PF_CANON_DUCK})")} AS DECIMAL(38,0)))
             AS VARCHAR) AS fingerprint
 FROM orders GROUP BY 1
 """,
@@ -421,7 +287,7 @@ def quality_partition_fingerprint_diff(
     decimal per (partition, month) pair). One scan, months-sized
     output."""
     t = Tables(spark, sf_dir)
-    h = F.expr(_spark_h(f"({_PF_CANON_SPARK})")).cast("decimal(38,0)")
+    h = F.expr(hash60_expr(f"({_PF_CANON_SPARK})")).cast("decimal(38,0)")
     return t.orders.groupBy(
         F.date_format("o_orderdate", "yyyy-MM").alias("month")
     ).agg(
@@ -437,7 +303,7 @@ _N_SHARDS = 64
     "pipeline_shard_skew_audit",
     oracle=f"""
 WITH sharded AS (
-  SELECT {_duck_h("CAST(doc_id AS VARCHAR)")} % {_N_SHARDS} AS shard
+  SELECT {hash60_sql("CAST(doc_id AS VARCHAR)")} % {_N_SHARDS} AS shard
   FROM documents),
 sizes AS (SELECT shard, count(*) AS n FROM sharded GROUP BY 1)
 SELECT count(*) AS n_shards, CAST(min(n) AS BIGINT) AS min_docs,
@@ -458,7 +324,7 @@ def pipeline_shard_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size. Oracle: DuckDB computes the identical assignment."""
     t = Tables(spark, sf_dir)
     sharded = t.documents.select(
-        (F.expr(_spark_h("CAST(doc_id AS STRING)")) % _N_SHARDS).alias("shard")
+        (F.expr(hash60_expr("CAST(doc_id AS STRING)")) % _N_SHARDS).alias("shard")
     )
     sizes = sharded.groupBy("shard").agg(F.count(F.lit(1)).alias("n"))
     return sizes.agg(

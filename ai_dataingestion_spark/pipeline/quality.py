@@ -345,3 +345,104 @@ def pipeline_cdc_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return changes.unionByName(unchanged)
+
+
+@register(
+    "pipeline_dead_letter",
+    oracle="""
+WITH corpus AS (
+  SELECT o_orderkey, o_totalprice, o_orderpriority FROM orders
+  UNION ALL
+  SELECT o_orderkey + 10000000, -o_totalprice, 'UNKNOWN'
+  FROM orders WHERE o_orderkey % 100 = 0
+)
+SELECT o_orderkey,
+       concat_ws(';',
+         CASE WHEN o_totalprice <= 0 THEN 'nonpositive_total' END,
+         CASE WHEN o_orderpriority NOT IN
+              ('1-URGENT','2-HIGH','3-MEDIUM','4-NOT SPECIFIED','5-LOW')
+              THEN 'unknown_priority' END) AS reasons
+FROM corpus
+WHERE o_totalprice <= 0
+   OR o_orderpriority NOT IN
+      ('1-URGENT','2-HIGH','3-MEDIUM','4-NOT SPECIFIED','5-LOW')
+""",
+)
+def pipeline_dead_letter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dead-letter routing: rows failing validation leave the pipeline
+    with machine-readable reasons (semicolon-joined — scalar output per
+    the oracle-schema rule) instead of killing the job. Violations are
+    injected deterministically (every 100th order: negated total, unknown
+    priority) since the corpus itself is clean; the checks are pure
+    expressions evaluated in one pass, no per-check scans."""
+    t = Tables(spark, sf_dir)
+    base = t.orders.select("o_orderkey", "o_totalprice", "o_orderpriority")
+    bad = t.orders.filter(F.col("o_orderkey") % 100 == 0).select(
+        (F.col("o_orderkey") + 10_000_000).alias("o_orderkey"),
+        (-F.col("o_totalprice")).alias("o_totalprice"),
+        F.lit("UNKNOWN").alias("o_orderpriority"),
+    )
+    corpus = base.unionByName(bad)
+    known = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
+    r1 = F.when(F.col("o_totalprice") <= 0, F.lit("nonpositive_total"))
+    r2 = F.when(
+        ~F.col("o_orderpriority").isin(known), F.lit("unknown_priority")
+    )
+    return corpus.filter(
+        (F.col("o_totalprice") <= 0) | ~F.col("o_orderpriority").isin(known)
+    ).select("o_orderkey", F.concat_ws(";", r1, r2).alias("reasons"))
+
+
+@register(
+    "pipeline_reconcile_totals",
+    oracle="""
+WITH line_sums AS (
+  SELECT l_orderkey,
+         sum(CAST(l_extendedprice * (1 + l_tax) * (1 - l_discount)
+                  AS DECIMAL(38,6))) AS computed_total
+  FROM lineitem GROUP BY l_orderkey
+),
+joined AS (
+  SELECT o_orderstatus,
+         abs(CAST(computed_total AS DOUBLE) - o_totalprice)
+           / o_totalprice AS rel_diff
+  FROM orders JOIN line_sums ON o_orderkey = l_orderkey
+)
+SELECT o_orderstatus,
+       count(*) AS n_orders,
+       count(*) FILTER (rel_diff > 0.01) AS n_mismatched,
+       round(avg(rel_diff), 6) AS avg_rel_diff
+FROM joined GROUP BY o_orderstatus
+""",
+)
+def pipeline_reconcile_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cross-table reconciliation: order header totals vs the recomputed
+    sum of their line items (gross = extendedprice x (1+tax) x
+    (1-discount)), reported as mismatch counts and mean relative error
+    per order status — the ledger-integrity check of an ingest pipeline.
+    Both sides aggregate lineitem BEFORE the join, so the join carries
+    one row per order; the money sum stays in DECIMAL until the ratio."""
+    t = Tables(spark, sf_dir)
+    line_sums = t.lineitem.groupBy("l_orderkey").agg(
+        F.sum(
+            (
+                F.col("l_extendedprice")
+                * (1 + F.col("l_tax"))
+                * (1 - F.col("l_discount"))
+            ).cast("decimal(38,6)")
+        ).alias("computed_total")
+    )
+    joined = t.orders.join(
+        line_sums, F.col("o_orderkey") == F.col("l_orderkey")
+    ).select(
+        "o_orderstatus",
+        (
+            F.abs(F.col("computed_total").cast("double") - F.col("o_totalprice"))
+            / F.col("o_totalprice")
+        ).alias("rel_diff"),
+    )
+    return joined.groupBy("o_orderstatus").agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        F.count(F.when(F.col("rel_diff") > 0.01, 1)).alias("n_mismatched"),
+        F.round(F.avg("rel_diff"), 6).alias("avg_rel_diff"),
+    )

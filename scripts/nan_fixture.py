@@ -8,7 +8,10 @@ streams and EMBEDDING vectors — and nowhere else:
   divide-by-zero rates, overflowed counters, corrupt agent payloads).
 - embeddings.embedding: ~1% of vectors get one NaN component, ~0.5% get one
   +Inf component (fp16 training overflow, bad normalization upstream —
-  the single most common real-world embedding-corpus defect).
+  the single most common real-world embedding-corpus defect), ~0.5% get
+  one NULL component, and ~0.5% are all-zero (a failed encoder call padded
+  with zeros: finite, but with no direction, so every cosine and unit
+  vector of it is NULL on both engines).
 
 Money/quantity columns stay finite ON PURPOSE: Spark 4 runs ANSI mode, so
 CAST(NaN AS DECIMAL) — the r8 DECIMAL(38) money spine — is a runtime error,
@@ -74,6 +77,7 @@ def inject(table: str, tbl: pa.Table) -> pa.Table:
         # NULL-dropping diverge — inject it so the finite_vec/VEC_FINITE_SQL
         # twins are exercised, not just whole-vector NULLs (null tier).
         m_null = row_mask("embeddings.vec#nullcomp", n, 0.005) & ~m_nan & ~m_inf
+        m_zero = row_mask("embeddings.vec#zero", n, 0.005) & ~m_nan & ~m_inf & ~m_null
         for i in np.flatnonzero(m_nan):
             v = vecs[i]
             if v:
@@ -86,6 +90,9 @@ def inject(table: str, tbl: pa.Table) -> pa.Table:
             v = vecs[i]
             if v:
                 v[int(i) % len(v)] = None
+        for i in np.flatnonzero(m_zero):
+            if vecs[i]:
+                vecs[i] = [0.0] * len(vecs[i])
         cols["embedding"] = pa.array(
             vecs, type=tbl.schema.field("embedding").type
         )

@@ -3,6 +3,7 @@ oracle can't express (SURVEY.md §5.3 tier 1/3)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ai_dataingestion_spark.catalog import all_specs
@@ -192,3 +193,55 @@ def test_adaptive_multiprobe_keeps_depth_2_on_uniform_corpus(spark, sf_small):
     from ai_dataingestion_spark.ai.similarity import _adaptive_multiprobe_dist
 
     assert _adaptive_multiprobe_dist(spark, sf_small) == 2
+
+
+# Every oracle-backed vector operator, over a small crafted corpus with one
+# all-zero vector: 40 vectors of 64 dims, label = vec_id % 3, vec_id 4 (a
+# probe) all zero. A zero-norm vector has no direction, so its cosine and
+# unit components are NULL on both engines (portable.cosine_expr /
+# cosine_sql / unit_rows); without that rule Spark's ANSI division raised
+# DIVIDE_BY_ZERO where DuckDB returns NULL, and numpy binned a NaN cosine.
+VECTOR_ORACLE_IDS = sorted(
+    n for n, s in SPECS.items()
+    if n.startswith(("embed_", "sim_")) and s.oracle is not None
+)
+_ZERO_VEC_ID = 4
+
+
+@pytest.fixture(scope="module")
+def zero_vec_dir(sf_small, tmp_path_factory):
+    import numpy as np
+    import pyarrow as pa
+
+    from scripts.fixture_common import write_tier
+
+    def build(name, tbl):
+        if name != "embeddings":
+            return tbl
+        rng = np.random.default_rng(20240)
+        vecs = rng.normal(size=(40, 64)).astype("float32")
+        vecs[_ZERO_VEC_ID] = 0.0
+        return pa.table(
+            {
+                "vec_id": pa.array(range(40), pa.int64()),
+                "embedding": pa.array(vecs.tolist(), pa.list_(pa.float32())),
+                "label": pa.array([i % 3 for i in range(40)], pa.int32()),
+            },
+            schema=tbl.schema,
+        )
+
+    out = str(tmp_path_factory.mktemp("zero_vec"))
+    write_tier(sf_small, out, build)
+    return out
+
+
+@pytest.mark.parametrize("qid", VECTOR_ORACLE_IDS)
+def test_zero_norm_vector_parity(qid, spark, zero_vec_dir):
+    from tests.parity import compare, duckdb_connect
+
+    con = duckdb_connect(zero_vec_dir)
+    try:
+        report = compare(SPECS[qid].fn(spark, zero_vec_dir), con, SPECS[qid].oracle)
+    finally:
+        con.close()
+    assert report["ok"], f"{qid}: {report}"

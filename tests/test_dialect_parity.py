@@ -217,7 +217,7 @@ def test_connected_components_vs_union_find(spark):
     chains)."""
     import random
 
-    from ai_dataingestion_spark.operators.advanced import connected_components
+    from ai_dataingestion_spark.ai.dedup import connected_components
 
     rng = random.Random(20260813)
     cases = []
@@ -268,25 +268,95 @@ def test_portable_hash_parity(spark, data):
     texts = data.draw(st.lists(UNICODE_TEXTS, min_size=20, max_size=20))
     from pyspark.sql import functions as F
 
+    from ai_dataingestion_spark.functions.portable import hash60_expr, hash60_sql
+
     df = _spark_one_col(spark, texts, "s string")
-    got = [
-        r.h
-        for r in df.select(
-            F.expr(
-                "CAST(conv(substring(md5(s),1,15),16,10) AS BIGINT)"
-            ).alias("h")
-        ).collect()
-    ]
+    got = [r.h for r in df.select(F.expr(hash60_expr("s")).alias("h")).collect()]
     con = duckdb.connect()
     want = [
         row[0]
         for row in con.execute(
-            "SELECT CAST('0x'||substring(md5(s),1,15) AS BIGINT) "
-            "FROM (SELECT unnest(?) AS s)",
-            [texts],
+            f"SELECT {hash60_sql('s')} FROM (SELECT unnest(?) AS s)", [texts]
         ).fetchall()
     ]
     assert got == want
+
+
+# (a, b) vector pairs for the vector-math twins: zero, mixed-sign,
+# large-magnitude and NULL vectors. Every value is exact in float32.
+VECTOR_PAIRS = [
+    ([0.0] * 8, [1.0, -2.0, 3.0, -4.0, 5.0, -6.0, 7.0, -8.0]),
+    ([0.0] * 8, [0.0] * 8),
+    ([1.5, -2.25, 0.125, -7.0], [-3.0, 0.5, 2.0, 1.25]),
+    ([2.0**60, -(2.0**61), 3.0 * 2.0**59], [2.0**-20, 2.0**62, -(2.0**40)]),
+    (None, [1.0, 2.0]),
+]
+
+
+def test_vector_math_twin_parity(spark):
+    """``dot_expr`` / ``sq_norm_expr`` / ``cosine_expr`` and their DuckDB
+    twins return identical doubles (left-to-right sums on both engines);
+    a zero-norm vector's cosine is NULL on both; ``unit_rows`` agrees with
+    the SQL cosine and gives a zero row NaN where the engines give NULL."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from ai_dataingestion_spark.functions.portable import (
+        cosine_expr, cosine_sql, dot_expr, dot_sql, sq_norm_expr, sq_norm_sql,
+        unit_rows,
+    )
+
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(VECTOR_PAIRS)],
+        "i int, a array<float>, b array<float>",
+    )
+    got = [
+        tuple(r)
+        for r in df.select(
+            "i",
+            F.expr(dot_expr("a", "b")),
+            F.expr(sq_norm_expr("a")),
+            F.expr(cosine_expr("a", "b")),
+        ).orderBy("i").collect()
+    ]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE v (i INT, a FLOAT[], b FLOAT[])")
+    con.executemany(
+        "INSERT INTO v VALUES (?, ?, ?)",
+        [(i, a, b) for i, (a, b) in enumerate(VECTOR_PAIRS)],
+    )
+    want = [
+        tuple(r)
+        for r in con.execute(
+            f"SELECT i, {dot_sql('a', 'b')}, {sq_norm_sql('a')}, "
+            f"{cosine_sql('a', 'b')} FROM v ORDER BY i"
+        ).fetchall()
+    ]
+    assert got == want
+    assert got[0][3] is None and got[1][3] is None  # zero norm: no cosine
+
+    a, b = VECTOR_PAIRS[2]
+    u = unit_rows(np.array([a, [0.0] * len(a)], dtype="float64"))
+    assert np.isnan(u[1]).all()
+    assert np.isclose(u[0] @ unit_rows(np.array([b], dtype="float64"))[0], want[2][3])
+
+
+def test_dims_twin_parity(spark):
+    """``dims`` and ``dims_sql`` explode a vector into the same 0-based
+    (pos, x) rows; NULL and empty vectors yield none on both engines."""
+    from ai_dataingestion_spark.functions.portable import dims, dims_sql
+
+    vecs = [[0.0, -1.5, 2.0**60], [], None, [3.25]]
+    df = spark.createDataFrame(list(enumerate(vecs)), "i int, v array<float>")
+    got = sorted(tuple(r) for r in df.select("i", dims("v")).collect())
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (i INT, v FLOAT[])")
+    con.executemany("INSERT INTO t VALUES (?, ?)", list(enumerate(vecs)))
+    want = sorted(
+        tuple(r) for r in con.execute(f"SELECT i, {dims_sql('v')} FROM t").fetchall()
+    )
+    assert got == want
+    assert (0, 2, 2.0**60) in got
 
 
 @settings(max_examples=10, deadline=None)

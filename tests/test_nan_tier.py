@@ -14,7 +14,9 @@ the full sweep surfaced 27 cross-engine divergences in three classes:
   codebook it touches
 
 The contracts: vector kernels quarantine non-finite vectors
-(similarity._vectors == portable.finite_vec == VEC_FINITE_SQL), metric
+(portable.finite_vec == VEC_FINITE_SQL) and give a zero-norm vector a NULL
+cosine and NULL unit components (portable.cosine_expr == cosine_sql ==
+unit_rows), metric
 statistics compute over the FINITE value domain (portable.finite ==
 FINITE_SQL), and featurizers NULL a feature outside its domain rather
 than dropping the row. This module rebuilds a small nan corpus from

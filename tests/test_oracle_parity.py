@@ -8,7 +8,7 @@ import ast
 
 import pytest
 
-from ai_dataingestion_spark.ai import dedup, text
+from ai_dataingestion_spark.ai import dedup, multimodal, similarity, text
 from ai_dataingestion_spark.catalog import all_specs
 from ai_dataingestion_spark.operators import analytics, events
 from tests.parity import compare, duckdb_connect, run_with_spawn_retry
@@ -184,9 +184,12 @@ def _registered_in(module) -> set[str]:
         (analytics, {n for n in SPECS if n.startswith(RELATIONAL_PREFIXES)}),
         # the count-min top-k sketch counts tokens and registers here too
         (text, {n for n in SPECS if n.startswith("text_")}
-         - NEAR_DUP_TEXT_IDS | {"agg_count_min_topk"}),
+         - NEAR_DUP_TEXT_IDS | {"agg_count_min_topk", "corpus_source_entropy"}),
+        (similarity, {n for n in SPECS if n.startswith(("embed_", "sim_"))}),
+        (multimodal, {n for n in SPECS if n.startswith("multimodal_")}),
+        (dedup, {n for n in SPECS if n.startswith("dedup_")} | NEAR_DUP_TEXT_IDS),
     ],
-    ids=["events", "relational", "text"],
+    ids=["events", "relational", "text", "similarity", "multimodal", "dedup"],
 )
 def test_domain_module_owns_its_ids(module, owned):
     """A domain's operators register from its module and nowhere else."""

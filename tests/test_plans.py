@@ -620,7 +620,7 @@ def test_pca_kernel_bounded_emission(spark):
     import numpy as np
     import pandas as pd
 
-    from ai_dataingestion_spark.operators.round5_waves import _partial_gram_kernel
+    from ai_dataingestion_spark.ai.similarity import _partial_gram_kernel
 
     for n in (3, 500):
         pdf = pd.DataFrame(

@@ -144,9 +144,9 @@ def test_cw_sig_string_exprs_match_column_arithmetic(spark, sf_small):
         _SHINGLES_EXPR,
         _corpus_with_near_dups,
         _cw_sig_agg_exprs,
-        _spark_h,
         N_HASHES,
     )
+    from ai_dataingestion_spark.functions.portable import hash60_expr
 
     corpus = _corpus_with_near_dups(spark, sf_small).withColumn(
         "toks", F.split("text", " ")
@@ -154,7 +154,7 @@ def test_cw_sig_string_exprs_match_column_arithmetic(spark, sf_small):
     hm = (
         corpus.selectExpr("doc_id", f"{_SHINGLES_EXPR} AS shingles")
         .selectExpr("doc_id", "explode(shingles) AS shingle")
-        .selectExpr("doc_id", f"{_spark_h('shingle')} % {_MERSENNE_P} AS hm")
+        .selectExpr("doc_id", f"{hash60_expr('shingle')} % {_MERSENNE_P} AS hm")
     )
     new = hm.groupBy("doc_id").agg(*_cw_sig_agg_exprs())
     old = hm.groupBy("doc_id").agg(

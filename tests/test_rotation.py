@@ -13,7 +13,7 @@ from pathlib import Path
 import pytest
 
 from ai_dataingestion_spark import catalog, registry, tmpdirs
-from ai_dataingestion_spark.ai import dedup, text
+from ai_dataingestion_spark.ai import dedup, similarity, text
 from ai_dataingestion_spark.operators import analytics, events
 
 REPO = Path(__file__).resolve().parent.parent
@@ -51,7 +51,8 @@ def test_unchanged_code_ranks_behind_everything(certified):
     [
         (dedup, "_minhash_near_pairs", lambda docs, sf_dir: docs,
          "dedup_near_minhash dedup_eval_precision_recall dedup_removal_plan"),
-        # reached through function-local imports in ai/text.py and round5.py
+        # reached through function-local imports in ai/text.py and its own
+        # module's dedup_family_sizes
         (dedup, "_corpus_with_exact_dups", lambda spark, sf_dir: None,
          "dedup_exact dedup_simhash dedup_removal_plan text_paragraph_dedup "
          "dedup_family_sizes"),
@@ -86,6 +87,8 @@ def test_unchanged_code_ranks_behind_everything(certified):
          "text_js_divergence_pairwise"),
         (dedup, "DF_CAP", 49,
          "dedup_ngram_jaccard text_containment_pairs text_shingle_df_cap_loss"),
+        # reached through a nested function: the MMR cosine builder
+        (similarity, "cosine_expr", lambda a, b: "0.0D", "embed_mmr_select"),
         # run-time state: a global op_tmpdir rebinds, and a cache dict
         (tmpdirs, "_ROOT", "/elsewhere", ""),
         (registry, "_events_ts_unit", {("a",): "ns"}, ""),
@@ -93,6 +96,7 @@ def test_unchanged_code_ranks_behind_everything(certified):
     ids=["helper", "helper-local-import", "module-sql-constant",
          "sessions-helper", "calendar-helper", "net-price-helper",
          "money-sum-helper", "source-token-counts-helper", "df-cap-constant",
+         "cosine-helper",
          "rebound-global", "cache-dict"],
 )
 def test_changed_dependency_moves_exactly_its_operators(
