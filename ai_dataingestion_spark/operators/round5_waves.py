@@ -29,9 +29,8 @@ import os
 
 # ===========================================================================
 # wave module round5b (formerly operators/round5b.py)
-# Round-5 second wave (SURVEY.md §2.Q): blocked edit-distance dedup,
-# alternative means, a per-column data-quality matrix, and a per-dimension
-# label-separability (eta-squared) profile over the embedding corpus.
+# Round-5 second wave (SURVEY.md §2.Q): alternative means and a
+# per-column data-quality matrix.
 #
 # Float discipline follows SURVEY.md §5.4: ratios/doubles rounded at 6 dp
 # on BOTH sides; counts, keys, and day deltas exact.
@@ -39,7 +38,7 @@ import os
 
 
 # ---------------------------------------------------------------------------
-# §2.Q.6 alternative means + quality matrix + label separability
+# §2.Q.6 alternative means + quality matrix
 # ---------------------------------------------------------------------------
 
 

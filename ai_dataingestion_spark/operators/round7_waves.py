@@ -246,9 +246,8 @@ def scan_csv_multichar_delim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # wave module round7b (formerly operators/round7b.py)
-# Round-6 fifty-fourth wave (SURVEY.md §2.R): distributed training and
-# sync primitives — a relational logistic-regression gradient-descent step,
-# partition-grain content fingerprints, and hash-shard balance audits.
+# Round-6 fifty-fourth wave (SURVEY.md §2.R): sync primitives —
+# partition-grain content fingerprints and hash-shard balance audits.
 # ===========================================================================
 
 

@@ -14,14 +14,25 @@ second (SURVEY.md §7.3):
   parquet TIMESTAMP(NANOS) column that Spark 4.x refuses to read natively
   (PARQUET_TYPE_ILLEGAL). The registry converts the raw nanos long to
   TIMESTAMP_NTZ at load (registry.py).
+- ``local[N]`` sessions run their Python workers under the engine's own
+  PySpark daemon (``worker_daemon.py``), which spares a reused worker the
+  per-task re-read of Spark's zip archives and the per-task scan of its
+  import-time heap. Only sessions built here get it: the daemon module is
+  read when the Python worker factory starts, so it cannot be set at
+  runtime, and a driver-provided session (``ensure_session_conf``,
+  ``scripts/driver_sim.py``) keeps PySpark's stock daemon. A cluster master
+  keeps it too, since its executors may not have the engine installed.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf
 from pyspark.sql import SparkSession
 
+# the directory holding the ai_dataingestion_spark package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _CGROUP_PATHS = (
     "/sys/fs/cgroup/memory.max",  # v2 unified hierarchy (cgroup namespace)
@@ -139,6 +150,8 @@ def session_builder(
     java_opts = os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS")
     if java_opts:
         b = b.config("spark.driver.extraJavaOptions", java_opts)
+    if master and master.startswith("local"):
+        b = _engine_worker_daemon(b)
     return (
         # local mode runs every task inside the driver JVM; the 1g default
         # heap OOMs on any broadcast build beyond toy scale (measured at
@@ -168,6 +181,21 @@ def session_builder(
     )
 
 
+def _engine_worker_daemon(b: SparkSession.Builder) -> SparkSession.Builder:
+    """Run Python workers under ``worker_daemon``. The daemon starts before
+    any task ships files to the worker, so the package root goes on the
+    workers' PYTHONPATH: whatever the driver's working directory, the
+    daemon imports. A value the running JVM's conf already holds (a gateway
+    started earlier in this process) is kept after it."""
+    key = "spark.executorEnv.PYTHONPATH"
+    paths = [_PACKAGE_ROOT] + [
+        p for p in SparkConf().get(key, "").split(os.pathsep) if p and p != _PACKAGE_ROOT
+    ]
+    return b.config("spark.python.daemon.module", "ai_dataingestion_spark.worker_daemon").config(
+        key, os.pathsep.join(paths)
+    )
+
+
 def get_spark(
     app_name: str = "ai_dataingestion_spark",
     master: str | None = None,
@@ -183,6 +211,8 @@ def ensure_session_conf(spark: SparkSession) -> SparkSession:
     The driver hands us an already-built SparkSession; most engine confs are
     runtime-settable and applied here. ``nanosAsLong`` is read at reader
     construction time, so it works as a runtime conf too.
+    The worker daemon (``worker_daemon.py``) is launch-time only, so such a
+    session keeps PySpark's stock daemon.
     """
     runtime = {
         "spark.sql.adaptive.enabled": "true",
