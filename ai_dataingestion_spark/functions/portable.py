@@ -142,6 +142,53 @@ def sql_quote(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
 
 
+def canon_row(*fields: str | tuple[str, str]) -> str:
+    """A row's text, one SQL spelling for both engines: the fields joined by
+    ``'|'``, a NULL field nulling the whole. A field is a string column or
+    ``(expr, type)``: ``expr`` cast to ``type``, then to STRING. Only types
+    with engine-identical text belong here (integers, DATE, DECIMAL(38,2)
+    of a double on the cent grid: Spark rounds 1234567.125 to .13, DuckDB
+    to .12); a raw double prints differently."""
+
+    def text(field: str | tuple[str, str]) -> str:
+        if isinstance(field, str):
+            return field
+        expr, typ = field
+        inner = expr if typ == "STRING" else f"CAST({expr} AS {typ})"
+        return f"CAST({inner} AS STRING)"
+
+    return " || '|' || ".join(text(f) for f in fields)
+
+
+def content_fingerprint(canon: str) -> Column:
+    """Order-independent content fingerprint, as text: the DECIMAL(38,0)
+    sum (partial-aggregable, duplicate-sensitive, no BIGINT overflow) of
+    every row's ``hash60_expr`` of ``canon`` (a ``canon_row`` text). A NULL
+    text adds nothing; no rows give NULL. Oracle twin:
+    ``content_fingerprint_sql``."""
+    h = F.expr(hash60_expr(f"({canon})")).cast("decimal(38,0)")
+    return F.sum(h).cast("string")
+
+
+def content_fingerprint_sql(canon: str) -> str:
+    """DuckDB twin of ``content_fingerprint``."""
+    return f"CAST(sum(CAST({hash60_sql(f'({canon})')} AS DECIMAL(38,0))) AS VARCHAR)"
+
+
+# The events corpus spans one month; its midpoint splits it into the pre
+# and post periods of the drift and A/B-test operators.
+CUTOVER_DATE = "2024-01-15"
+
+
+def pre_period() -> Column:
+    """True for an event before ``CUTOVER_DATE``, False from it on, NULL
+    for a NULL ``ts``. Oracle twin: ``PRE_PERIOD_SQL``."""
+    return F.col("ts") < F.lit(CUTOVER_DATE).cast("timestamp")
+
+
+PRE_PERIOD_SQL = f"ts < TIMESTAMP '{CUTOVER_DATE}'"
+
+
 # ---------------------------------------------------------------------------
 # Finite-domain contracts (round-9 NaN/Inf tier).
 #

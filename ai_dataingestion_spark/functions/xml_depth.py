@@ -1,7 +1,7 @@
 """§2.AE round-14 block: column-level XML functions (from_xml /
 schema_of_xml / to_xml — Spark 4.0's SPARK-44265 expression surface).
 
-scan_xml_roundtrip (round7_waves.py:720) covers XML as a FILE format;
+scan_xml_roundtrip (sources/scans.py) covers XML as a FILE format;
 these operators cover XML as a COLUMN — the shape a 100 TB ingest actually
 meets it in: a string field inside an otherwise-relational feed (EDI
 payloads in a Kafka value, legacy B2B order lines inside a CSV cell),

@@ -1,6 +1,6 @@
 """Round-2 surface extensions (SURVEY.md §2.N): robust statistics (median /
-IQR outliers / weighted means), fuzzy string matching, SCD2 interval
-building, splits, salted and interval joins, and context packing.
+weighted means), fuzzy string matching, splits, salted and interval joins,
+and context packing.
 
 Float discipline follows SURVEY.md §5.4: sums of money PRODUCTS go through
 DECIMAL(38,6); quotients (averages, ratios) round at 6 dp; counts and keys
@@ -76,51 +76,6 @@ def agg_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "quality_outlier_iqr",
-    oracle="""
-WITH fences AS (
-  SELECT o_orderstatus,
-         quantile_cont(o_totalprice, 0.25) AS q1,
-         quantile_cont(o_totalprice, 0.75) AS q3
-  FROM orders GROUP BY o_orderstatus
-)
-SELECT o.o_orderstatus,
-       round(any_value(f.q1), 4) AS q1,
-       round(any_value(f.q3), 4) AS q3,
-       count(CASE WHEN o.o_totalprice > f.q3 + 1.5 * (f.q3 - f.q1) THEN 1 END)
-         AS n_high,
-       count(CASE WHEN o.o_totalprice < f.q1 - 1.5 * (f.q3 - f.q1) THEN 1 END)
-         AS n_low
-FROM orders o JOIN fences f ON o.o_orderstatus = f.o_orderstatus
-GROUP BY o.o_orderstatus
-""",
-)
-def quality_outlier_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust outlier screen (Tukey fences): per-status quartiles, then
-    counts beyond q3+1.5·IQR / q1−1.5·IQR. The tiny fence table broadcasts
-    back onto the base — two passes, both partial-aggregable; the fence
-    arithmetic is the identical double expression on both engines, so the
-    count comparisons see identical thresholds."""
-    o = Tables(spark, sf_dir).orders
-    fences = o.groupBy("o_orderstatus").agg(
-        F.percentile("o_totalprice", 0.25).alias("q1"),
-        F.percentile("o_totalprice", 0.75).alias("q3"),
-    )
-    hi = F.col("q3") + 1.5 * (F.col("q3") - F.col("q1"))
-    lo = F.col("q1") - 1.5 * (F.col("q3") - F.col("q1"))
-    return (
-        o.join(F.broadcast(fences), "o_orderstatus")
-        .groupBy("o_orderstatus")
-        .agg(
-            F.round(F.any_value("q1"), 4).alias("q1"),
-            F.round(F.any_value("q3"), 4).alias("q3"),
-            F.count(F.when(F.col("o_totalprice") > hi, 1)).alias("n_high"),
-            F.count(F.when(F.col("o_totalprice") < lo, 1)).alias("n_low"),
-        )
-    )
-
-
-@register(
     "fn_levenshtein_match",
     oracle="""
 SELECT s_suppkey, s_name, n_name AS best_nation, dist FROM (
@@ -172,35 +127,6 @@ def fn_levenshtein_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("s_suppkey", "s_name", F.col("n_name").alias("best_nation"), "dist")
-    )
-
-
-@register(
-    "pipeline_scd2_intervals",
-    oracle="""
-SELECT user_id, event_id,
-       epoch_us(ts) AS valid_from_us,
-       epoch_us(lead(ts) OVER w) AS valid_to_us,
-       (lead(ts) OVER w IS NULL) AS is_current
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-""",
-)
-def pipeline_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCD Type-2 interval construction from a change log: each record's
-    validity spans until the key's next change (lead), open-ended for the
-    current row. Epoch-µs output (sub-second timestamp strings are not
-    engine-portable — SURVEY.md §5.4). One shuffle on the entity key; at
-    100 TB this is the dimension-history build over a CDC feed."""
-    e = Tables(spark, sf_dir).events
-    w = Window.partitionBy("user_id").orderBy(F.asc_nulls_last("ts"), F.asc("event_id"))
-    nxt = F.lead("ts").over(w)
-    return e.select(
-        "user_id",
-        "event_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("valid_from_us"),
-        F.unix_micros(nxt.cast("timestamp")).alias("valid_to_us"),
-        nxt.isNull().alias("is_current"),
     )
 
 
@@ -604,38 +530,6 @@ def win_gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     return islands.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_islands"),
         F.max("run_len").alias("longest_run"),
-    )
-
-
-@register(
-    "quality_domain_cap",
-    oracle="""
-SELECT source, doc_id, n_chars, rnk
-FROM (
-  SELECT source, doc_id, n_chars,
-         row_number() OVER (PARTITION BY source
-                            ORDER BY n_chars DESC, doc_id) AS rnk
-  FROM documents
-)
-WHERE rnk <= 10
-ORDER BY source, rnk
-""",
-)
-def quality_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-domain document cap (domain balancing — stops a single crawl
-    domain from dominating the training mix): keep the top 10 docs per
-    source by length with a deterministic tie-break. One shuffle on
-    source; at corpus scale the window is the standard top-k-per-group
-    plan (partial top-k map-side under AQE)."""
-    d = Tables(spark, sf_dir).documents
-    w = Window.partitionBy("source").orderBy(
-        F.col("n_chars").desc(), F.col("doc_id").asc()
-    )
-    return (
-        d.select(
-            "source", "doc_id", "n_chars", F.row_number().over(w).alias("rnk")
-        )
-        .filter(F.col("rnk") <= 10)
     )
 
 

@@ -24,6 +24,8 @@ from ai_dataingestion_spark.catalog import register, sql_op
 from ai_dataingestion_spark.functions.portable import (
     grid_sum,
     grid_sum_sql,
+    PRE_PERIOD_SQL,
+    pre_period,
     pround,
     stable_rounded_sum,
     stable_rounded_sum_sql,
@@ -3359,15 +3361,12 @@ def events_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CUTOVER = "2024-01-15"
-
-
 @register(
     "events_pre_post_welch_t",
     oracle=f"""
 WITH sides AS (
   SELECT event_type,
-         CASE WHEN ts < TIMESTAMP '{_CUTOVER}' THEN 'pre' ELSE 'post' END
+         CASE WHEN {PRE_PERIOD_SQL} THEN 'pre' ELSE 'post' END
            AS side,
          CAST(value AS DECIMAL(38, 2)) AS v
   FROM events
@@ -3418,9 +3417,7 @@ def events_pre_post_welch_t(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = F.col("value").cast("decimal(38,2)")
     sides = e.select(
         "event_type",
-        F.when(
-            F.col("ts") < F.lit(_CUTOVER).cast("timestamp"), "pre"
-        ).otherwise("post").alias("side"),
+        F.when(pre_period(), "pre").otherwise("post").alias("side"),
         v.alias("v"),
     )
     mo = sides.groupBy("event_type", "side").agg(
@@ -3456,9 +3453,6 @@ def events_pre_post_welch_t(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DID_CUT = "2024-01-15"
-
-
 @register(
     "events_diff_in_differences",
     oracle=f"""
@@ -3466,7 +3460,7 @@ WITH tagged AS (
   SELECT CASE WHEN CAST('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 1)
                         AS BIGINT) % 2 = 0
               THEN 'treated' ELSE 'control' END AS grp,
-         CASE WHEN ts < TIMESTAMP '{_DID_CUT}' THEN 'pre' ELSE 'post' END
+         CASE WHEN {PRE_PERIOD_SQL} THEN 'pre' ELSE 'post' END
            AS period,
          CAST(value AS DECIMAL(38, 2)) AS v
   FROM events
@@ -3518,9 +3512,7 @@ def events_diff_in_differences(spark: SparkSession, sf_dir: str) -> DataFrame:
         == 0,
         "treated",
     ).otherwise("control")
-    period = F.when(
-        F.col("ts") < F.lit(_DID_CUT).cast("timestamp"), "pre"
-    ).otherwise("post")
+    period = F.when(pre_period(), "pre").otherwise("post")
     cells = e.select(
         grp.alias("grp"),
         period.alias("period"),
@@ -3556,18 +3548,15 @@ def events_diff_in_differences(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CUPED_CUT = "2024-01-15"
-
-
 @register(
     "events_cuped_adjustment",
     oracle=f"""
 WITH per_user AS (
   SELECT user_id,
-         CAST(sum(CASE WHEN ts < TIMESTAMP '{_CUPED_CUT}'
+         CAST(sum(CASE WHEN {PRE_PERIOD_SQL}
                        THEN CAST(value AS DECIMAL(38, 2)) ELSE 0 END)
               AS DOUBLE) AS x,
-         CAST(sum(CASE WHEN ts >= TIMESTAMP '{_CUPED_CUT}'
+         CAST(sum(CASE WHEN NOT ({PRE_PERIOD_SQL})
                        THEN CAST(value AS DECIMAL(38, 2)) ELSE 0 END)
               AS DOUBLE) AS y
   FROM events
@@ -3639,7 +3628,7 @@ def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = Tables(spark, sf_dir).events.where(finite("value"))
     dec = F.col("value").cast("decimal(38,2)")
-    pre = F.col("ts") < F.lit(_CUPED_CUT).cast("timestamp")
+    pre = pre_period()
     per_user = e.groupBy("user_id").agg(
         F.sum(F.when(pre, dec).otherwise(F.lit(0))).cast("double").alias("x"),
         F.sum(F.when(~pre, dec).otherwise(F.lit(0)))

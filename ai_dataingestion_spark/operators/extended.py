@@ -1,20 +1,17 @@
 """Extended relational surface beyond the original SURVEY §2 inventory:
-pivot/unpivot reshaping, positional window values, bucketed co-located
-joins, and observed-write metrics. Registered like every other operator.
+pivot/unpivot reshaping, positional window values and bucketed co-located
+joins. Registered like every other operator.
 """
 
 from __future__ import annotations
 
-import uuid
-
-from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ai_dataingestion_spark.catalog import register
 from ai_dataingestion_spark.functions.portable import (
     stable_rounded_sum,
     stable_rounded_sum_sql,
 )
-from ai_dataingestion_spark.tmpdirs import op_tmpdir
 from ai_dataingestion_spark.registry import Tables
 
 _EVENT_TYPES = ("click", "purchase", "error", "signup", "view")
@@ -192,33 +189,4 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_lines"),
             stable_rounded_sum("l_extendedprice", 2).alias("total"),
         )
-    )
-
-
-@register(
-    "quality_observe",
-    oracle=f"""
-SELECT count(*)                          AS n_rows,
-       {stable_rounded_sum_sql("o_totalprice", 2)} AS total_price,
-       count(CASE WHEN o_totalprice < 0 THEN 1 END) AS n_negative
-FROM orders
-""",
-)
-def quality_observe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Write-path metrics via df.observe(): the observation rides the job
-    that writes the data (zero extra scans — at 100 TB a separate profiling
-    pass doubles ingest cost), then the collected metrics are returned."""
-    obs = Observation(f"ingest_metrics_{uuid.uuid4().hex[:8]}")
-    o = Tables(spark, sf_dir).orders.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_rows"),
-        stable_rounded_sum("o_totalprice", 2).alias("total_price"),
-        F.count(F.when(F.col("o_totalprice") < 0, 1)).alias("n_negative"),
-    )
-    out = op_tmpdir("observe_sink_")
-    o.write.mode("overwrite").parquet(out)  # the observed action
-    m = obs.get
-    return spark.createDataFrame(
-        [(m["n_rows"], m["total_price"], m["n_negative"])],
-        "n_rows bigint, total_price double, n_negative bigint",
     )

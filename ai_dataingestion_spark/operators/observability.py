@@ -1,13 +1,11 @@
 """§2.AB round-13 seventh block: pipeline observability — observed metrics
-(df.observe / Observation), the _metadata hidden file columns, and the
-approx_top_k frequency sketch.
+(df.observe / Observation) and the approx_top_k frequency sketch.
 
 The ops-side surface a production ingest runs CONTINUOUSLY: quality-gate
 metrics collected on the side of the real computation (one pass, no second
-scan), per-file lineage from the scan itself, and heavy-hitter inventories
-cheap enough to run on every batch. Scale notes per op; the common thread
-is that all three ride ON the existing pass — observability here never
-costs a second read of the data.
+scan) and heavy-hitter inventories cheap enough to run on every batch.
+Scale notes per op; the common thread is that both ride ON the existing
+pass — observability here never costs a second read of the data.
 """
 
 from __future__ import annotations
@@ -63,66 +61,6 @@ def fn_observe_metrics_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_rows bigint, n_qty_set bigint, price_cents bigint, "
         "min_disc double, max_disc double",
     )
-
-
-@register(
-    "scan_metadata_file_audit",
-    oracle="""
-SELECT * FROM (
-  SELECT 'events' AS tbl, CAST(count(*) AS BIGINT) AS n_rows,
-         true AS files_zero_based, true AS coverage_exact
-  FROM events
-  UNION ALL
-  SELECT 'lineitem', CAST(count(*) AS BIGINT), true, true FROM lineitem
-)
-""",
-)
-def scan_metadata_file_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The _metadata hidden columns (SPARK-37273): per-file lineage straight
-    from the scan — basename, per-file row count, and each file's row_index
-    range — folded into the manifest-reconciliation invariants a 100 TB
-    landing-zone audit checks: (a) the per-file counts sum to the table's
-    row count, (b) every file's row_index starts at 0, and (c) every
-    file's index range exactly covers its row count (no gaps/overlaps —
-    the property that makes file_name+row_index a stable global row
-    address for incremental re-processing). The columns are populated by
-    the reader DURING the scan (no pyarrow footer pass), per-file groups
-    parallelize across files, and the layout tier (multi-part directory
-    tables) exercises the genuinely-multi-file case. The oracle pins the
-    row totals via the registered views and the invariants as literal
-    true — DuckDB cannot see Spark's scan metadata, but it CAN falsify a
-    count that the metadata path got wrong."""
-    out = None
-    for tbl in ("events", "lineitem"):
-        raw = spark.read.parquet(f"{sf_dir.rstrip('/')}/{tbl}.parquet")
-        per_file = (
-            raw.select(
-                F.col("_metadata.file_name").alias("file_name"),
-                F.col("_metadata.row_index").alias("ri"),
-            )
-            .groupBy("file_name")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.min("ri").alias("lo"),
-                F.max("ri").alias("hi"),
-            )
-        )
-        part = per_file.agg(
-            F.sum("n").cast("bigint").alias("n_rows"),
-            F.coalesce(F.bool_and(F.col("lo") == 0), F.lit(True)).alias(
-                "files_zero_based"
-            ),
-            F.coalesce(
-                F.bool_and(F.col("hi") - F.col("lo") + 1 == F.col("n")),
-                F.lit(True),
-            ).alias("coverage_exact"),
-        ).select(
-            F.lit(tbl).alias("tbl"),
-            F.coalesce("n_rows", F.lit(0)).alias("n_rows"),
-            "files_zero_based", "coverage_exact",
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
 
 
 @register(

@@ -9,8 +9,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ai_dataingestion_spark.catalog import register
 from ai_dataingestion_spark.functions.portable import (
-    hash60_expr,
-    hash60_sql,
     pround,
     stable_rounded_sum,
     stable_rounded_sum_sql,
@@ -24,13 +22,11 @@ from ai_dataingestion_spark.scale import broadcast_if_small
 from ai_dataingestion_spark.tmpdirs import op_tmpdir
 from pyspark.sql.types import StringType
 from ai_dataingestion_spark.registry import Tables
-import os
 
 
 # ===========================================================================
 # wave module round5b (formerly operators/round5b.py)
-# Round-5 second wave (SURVEY.md §2.Q): alternative means and a
-# per-column data-quality matrix.
+# Round-5 second wave (SURVEY.md §2.Q): alternative means.
 #
 # Float discipline follows SURVEY.md §5.4: ratios/doubles rounded at 6 dp
 # on BOTH sides; counts, keys, and day deltas exact.
@@ -38,7 +34,7 @@ import os
 
 
 # ---------------------------------------------------------------------------
-# §2.Q.6 alternative means + quality matrix
+# §2.Q.6 alternative means
 # ---------------------------------------------------------------------------
 
 
@@ -77,107 +73,15 @@ def agg_geo_harmonic_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "quality_null_blank_matrix",
-    oracle="""
-SELECT 'text' AS column_name, count(*) AS n_rows,
-       count(CASE WHEN text IS NULL THEN 1 END) AS n_null,
-       count(CASE WHEN trim(text) = '' THEN 1 END) AS n_blank,
-       count(DISTINCT text) AS n_distinct
-FROM documents
-UNION ALL
-SELECT 'lang', count(*),
-       count(CASE WHEN lang IS NULL THEN 1 END),
-       count(CASE WHEN trim(lang) = '' THEN 1 END),
-       count(DISTINCT lang)
-FROM documents
-UNION ALL
-SELECT 'source', count(*),
-       count(CASE WHEN source IS NULL THEN 1 END),
-       count(CASE WHEN trim(source) = '' THEN 1 END),
-       count(DISTINCT source)
-FROM documents
-""",
-)
-def quality_null_blank_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-column completeness matrix over the documents table: null /
-    blank / distinct counts for each string column, emitted as one ROW
-    PER COLUMN (the profiling shape downstream dashboards join on).
-    Spark computes all twelve aggregates in a SINGLE pass and unpivots
-    the 1-row result with stack() — the oracle's UNION ALL of three
-    scans is the semantic spec, not the plan."""
-    t = Tables(spark, sf_dir)
-    aggs = []
-    for c in ("text", "lang", "source"):
-        aggs += [
-            F.count(F.lit(1)).alias(f"{c}_rows"),
-            F.count(F.when(F.col(c).isNull(), 1)).alias(f"{c}_null"),
-            F.count(F.when(F.trim(F.col(c)) == "", 1)).alias(f"{c}_blank"),
-            F.count_distinct(F.col(c)).alias(f"{c}_distinct"),
-        ]
-    one = t.documents.agg(*aggs)
-    stack_expr = ", ".join(
-        f"'{c}', {c}_rows, {c}_null, {c}_blank, {c}_distinct"
-        for c in ("text", "lang", "source")
-    )
-    return one.select(
-        F.expr(
-            f"stack(3, {stack_expr}) AS "
-            "(column_name, n_rows, n_null, n_blank, n_distinct)"
-        )
-    )
-
-
 # ===========================================================================
 # wave module round5c (formerly operators/round5c.py)
-# Round-5 third wave (SURVEY.md §2.Q, continued): the two partition-
-# pruning scan paths every 100 TB lake lives on (static partition pruning
-# and dynamic partition pruning through a join) and binary-codec function
-# parity.
+# Round-5 third wave (SURVEY.md §2.Q, continued): dynamic partition
+# pruning through a join and binary-codec function parity.
 # ===========================================================================
 
 # ---------------------------------------------------------------------------
 # §2.Q.7 partition-pruning scan paths
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "scan_partition_pruned",
-    oracle="""
-SELECT o_orderstatus, count(*) AS n_orders,
-       CAST(round(sum(CAST(o_totalprice AS DECIMAL(38,6))), 2) AS DOUBLE)
-         AS revenue
-FROM orders
-WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')
-GROUP BY o_orderstatus
-""",
-)
-def scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Static partition pruning: orders written partitionBy(priority) to
-    a scratch lake, read back with a priority predicate — the scan must
-    touch ONLY the two matching partition directories (PartitionFilters
-    in the formatted plan, pinned by tests/test_plans.py). At 100 TB
-    this is the difference between reading 2/5 of the table and all of
-    it; the oracle is the equivalent filter on the logical relation."""
-    out = op_tmpdir("scan_part_prune_")
-    o = Tables(spark, sf_dir).orders
-    (
-        o.repartition("o_orderpriority")
-        .write.mode("overwrite")
-        .partitionBy("o_orderpriority")
-        .parquet(out)
-    )
-    back = spark.read.schema(o.schema).parquet(out)
-    return (
-        back.filter(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
-        .groupBy("o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(38,6)")), 2)
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
 
 
 @register(
@@ -274,8 +178,8 @@ def fn_string_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # wave module round5d (formerly operators/round5d.py)
-# Round-5 fourth wave (SURVEY.md §2.Q, continued): statistical screens —
-# chi-squared independence and Benford first-digit conformance. Every formula is
+# Round-5 fourth wave (SURVEY.md §2.Q, continued): the chi-squared
+# independence screen. Every formula is
 # written as raw power sums / explicit ratios so Spark and DuckDB evaluate
 # the IDENTICAL expression (the agg_higher_moments rule: built-in
 # corr/stddev differ in bias correction across engines); 6-dp rounding
@@ -361,56 +265,6 @@ def agg_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             6,
         ).alias("cramers_v"),
-    )
-
-
-@register(
-    "quality_benford_first_digit",
-    oracle="""
-WITH digits AS (
-  SELECT substring(CAST(CAST(floor(o_totalprice) AS BIGINT) AS VARCHAR), 1, 1)
-           AS digit,
-         count(*) AS n_orders
-  FROM orders WHERE o_totalprice >= 1
-  GROUP BY 1
-)
-SELECT digit, n_orders,
-       round(CAST(n_orders AS DOUBLE) / sum(n_orders) OVER (), 6) AS share,
-       round(ln(1.0 + 1.0 / CAST(digit AS DOUBLE)) / ln(10.0), 6)
-         AS benford_expected,
-       round(CAST(n_orders AS DOUBLE) / sum(n_orders) OVER ()
-             - ln(1.0 + 1.0 / CAST(digit AS DOUBLE)) / ln(10.0), 6)
-         AS deviation
-FROM digits
-""",
-)
-def quality_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benford's-law first-digit conformance of order totals — the
-    classic fabricated-data / unit-mixing screen. One groupBy to the
-    9-row digit histogram; expected shares via ln(1+1/d)/ln(10) written
-    identically on both sides (synthetic uniform-ish prices will deviate
-    — the DEVIATION column is the signal, not an error)."""
-    t = Tables(spark, sf_dir)
-    digit = F.substring(
-        F.floor("o_totalprice").cast("bigint").cast("string"), 1, 1
-    )
-    digits = (
-        t.orders.filter(F.col("o_totalprice") >= 1)
-        .groupBy(digit.alias("digit"))
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-    )
-    share = F.col("n_orders").cast("double") / F.sum("n_orders").over(
-        Window.partitionBy()
-    )
-    expected = F.log(1.0 + 1.0 / F.col("digit").cast("double")) / F.log(
-        F.lit(10.0)
-    )
-    return digits.select(
-        "digit",
-        "n_orders",
-        F.round(share, 6).alias("share"),
-        F.round(expected, 6).alias("benford_expected"),
-        F.round(share - expected, 6).alias("deviation"),
     )
 
 
@@ -518,8 +372,7 @@ def agg_hll_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # wave module round5f (formerly operators/round5f.py)
 # Round-5 sixth wave (SURVEY.md §2.Q, continued): ANSI error-safe
-# arithmetic (try_*) and permissive malformed-CSV ingestion with corrupt-
-# record capture.
+# arithmetic (try_*).
 # ===========================================================================
 
 @register(
@@ -555,167 +408,10 @@ def fn_try_safe_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "scan_csv_malformed_permissive",
-    oracle="""
-SELECT count(*) AS n_rows,
-       count(CASE WHEN doc_id % 17 = 0 THEN 1 END) AS n_corrupt,
-       count(CASE WHEN doc_id % 17 <> 0 THEN 1 END) AS n_good,
-       CAST(sum(CASE WHEN doc_id % 17 <> 0 THEN n_chars END) AS BIGINT)
-         AS good_chars
-FROM documents
-""",
-)
-def scan_csv_malformed_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Permissive CSV ingestion with corrupt-record capture: a CSV lake
-    is written with every 17th row type-corrupted (its numeric column
-    replaced by a word), then re-read under PERMISSIVE mode with an
-    explicit schema + columnNameOfCorruptRecord — bad rows surface as
-    NULL fields with the raw line preserved in the corrupt column
-    instead of failing the scan. The dead-letter counts reconcile
-    exactly with the corruption rule, which is what the oracle states.
-    The r5 ingest-robustness check next to pipeline_dead_letter (which
-    validates semantic rules; this one validates PARSE failures)."""
-    out = op_tmpdir("csv_malformed_")
-    d = Tables(spark, sf_dir).documents
-    line = F.when(
-        F.col("doc_id") % 17 == 0,
-        F.concat_ws(",", F.col("doc_id"), F.lit("notanumber")),
-    ).otherwise(F.concat_ws(",", F.col("doc_id"), F.col("n_chars")))
-    d.select(line.alias("value")).write.mode("overwrite").text(out)
-    back = (
-        spark.read.schema("doc_id long, n_chars long, _corrupt_record string")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .csv(out)
-    )
-    corrupt = F.col("_corrupt_record").isNotNull()
-    return back.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count(F.when(corrupt, 1)).alias("n_corrupt"),
-        F.count(F.when(~corrupt, 1)).alias("n_good"),
-        F.sum(F.when(~corrupt, F.col("n_chars"))).cast("bigint").alias(
-            "good_chars"
-        ),
-    )
-
-
-# ===========================================================================
-# wave module round5g (formerly operators/round5g.py)
-# Round-5 seventh wave (SURVEY.md §2.Q, continued): a cross-table
-# referential-integrity audit with injected violations.
-# ===========================================================================
-
-_RI_OFFSET = 900_000_000
-
-
-@register(
-    "quality_referential_integrity",
-    oracle=f"""
-WITH bad_orders AS (
-  SELECT o_orderkey,
-         CASE WHEN o_orderkey % 97 = 0 THEN o_custkey + {_RI_OFFSET}
-              ELSE o_custkey END AS o_custkey
-  FROM orders
-),
-bad_lineitem AS (
-  SELECT l_orderkey,
-         CASE WHEN (l_orderkey * 8 + l_linenumber) % 101 = 0
-              THEN l_partkey + {_RI_OFFSET} ELSE l_partkey END AS l_partkey,
-         CASE WHEN (l_orderkey * 8 + l_linenumber) % 103 = 0
-              THEN l_suppkey + {_RI_OFFSET} ELSE l_suppkey END AS l_suppkey
-  FROM lineitem
-)
-SELECT 'orders.custkey->customer' AS fk, count(*) AS n_rows,
-       count(CASE WHEN c_custkey IS NULL THEN 1 END) AS n_orphans
-FROM bad_orders LEFT JOIN customer ON o_custkey = c_custkey
-UNION ALL
-SELECT 'lineitem.partkey->part', count(*),
-       count(CASE WHEN p_partkey IS NULL THEN 1 END)
-FROM bad_lineitem LEFT JOIN part ON l_partkey = p_partkey
-UNION ALL
-SELECT 'lineitem.suppkey->supplier', count(*),
-       count(CASE WHEN s_suppkey IS NULL THEN 1 END)
-FROM bad_lineitem LEFT JOIN supplier ON l_suppkey = s_suppkey
-""",
-)
-def quality_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-table referential-integrity audit: orphan counts for three
-    foreign keys, against a corpus with deterministically injected FK
-    violations (every 97th order's custkey, every 101st/103rd line's
-    part/supp key pushed out of range — the corpus itself is FK-clean,
-    so an un-mutated audit proves nothing). Each check is one left join
-    + conditional count; the dimension sides broadcast. The cross-table
-    sibling of quality_constraints (single-table rules) and
-    pipeline_reconcile_totals (value-level reconciliation)."""
-    t = Tables(spark, sf_dir)
-    bad_orders = t.orders.select(
-        "o_orderkey",
-        F.when(
-            F.col("o_orderkey") % 97 == 0, F.col("o_custkey") + _RI_OFFSET
-        )
-        .otherwise(F.col("o_custkey"))
-        .alias("o_custkey"),
-    )
-    lk = F.col("l_orderkey") * 8 + F.col("l_linenumber")
-    bad_lineitem = t.lineitem.select(
-        "l_orderkey",
-        F.when(lk % 101 == 0, F.col("l_partkey") + _RI_OFFSET)
-        .otherwise(F.col("l_partkey"))
-        .alias("l_partkey"),
-        F.when(lk % 103 == 0, F.col("l_suppkey") + _RI_OFFSET)
-        .otherwise(F.col("l_suppkey"))
-        .alias("l_suppkey"),
-    )
-
-    def audit(name, child, child_key, dim, dim_key, dim_table):
-        joined = child.join(
-            broadcast_if_small(dim, sf_dir, dim_table),
-            F.col(child_key) == F.col(dim_key),
-            "left",
-        )
-        return joined.agg(
-            F.lit(name).alias("fk"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.count(F.when(F.col(dim_key).isNull(), 1)).alias("n_orphans"),
-        ).select("fk", "n_rows", "n_orphans")
-
-    return (
-        audit(
-            "orders.custkey->customer",
-            bad_orders,
-            "o_custkey",
-            t.customer.select("c_custkey"),
-            "c_custkey",
-                "customer",
-        )
-        .unionByName(
-            audit(
-                "lineitem.partkey->part",
-                bad_lineitem,
-                "l_partkey",
-                t.part.select("p_partkey"),
-                "p_partkey",
-                "part",
-            )
-        )
-        .unionByName(
-            audit(
-                "lineitem.suppkey->supplier",
-                bad_lineitem,
-                "l_suppkey",
-                t.supplier.select("s_suppkey"),
-                "s_suppkey",
-                "supplier",
-            )
-        )
-    )
-
-
 # ===========================================================================
 # wave module round5h (formerly operators/round5h.py)
 # Round-5 eighth wave (SURVEY.md §2.Q, continued): discrete-vs-continuous
-# percentile parity and a per-type ingestion freshness report.
+# percentile parity.
 # ===========================================================================
 
 @register(
@@ -751,46 +447,6 @@ def win_percentile_disc_vs_cont(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "percentile_cont(0.9) WITHIN GROUP (ORDER BY l_quantity)"
         ).alias("p90_cont"),
-    )
-
-
-@register(
-    "pipeline_watermark_lag_report",
-    oracle="""
-WITH per_type AS (
-  SELECT event_type, max(ts) AS last_seen, count(*) AS n_events
-  FROM events GROUP BY event_type
-)
-SELECT event_type, last_seen, n_events,
-       CAST(floor((epoch(max(last_seen) OVER ()) - epoch(last_seen)) / 60)
-            AS BIGINT) AS minutes_behind,
-       floor((epoch(max(last_seen) OVER ()) - epoch(last_seen)) / 60) >= 60
-         AS is_stale
-FROM per_type
-""",
-)
-def pipeline_watermark_lag_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ingestion freshness report: per event type, the last event seen
-    and how many whole minutes it trails the freshest type — the
-    watermark-lag table an ingest pipeline publishes so a stalled
-    upstream (≥ 60 min behind) pages someone. Aggregate-first: the
-    global anchor is a window over the types-sized relation; lag is
-    integer minutes (floor of an epoch-second difference — exact
-    arithmetic, no float parity surface)."""
-    t = Tables(spark, sf_dir)
-    per_type = t.events.groupBy("event_type").agg(
-        F.max("ts").alias("last_seen"), F.count(F.lit(1)).alias("n_events")
-    )
-    anchor = F.max("last_seen").over(Window.partitionBy())
-    behind = F.floor(
-        (F.unix_timestamp(anchor) - F.unix_timestamp("last_seen")) / 60
-    ).cast("bigint")
-    return per_type.select(
-        "event_type",
-        "last_seen",
-        "n_events",
-        behind.alias("minutes_behind"),
-        (behind >= 60).alias("is_stale"),
     )
 
 
@@ -858,134 +514,10 @@ def fn_string_format(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# wave module round5j (formerly operators/round5j.py)
-# Round-5 tenth wave (SURVEY.md §2.Q, continued): a schema-evolution
-# mergeSchema scan and a parquet compression-codec round-trip sink.
-# ===========================================================================
-
-
-@register(
-    "scan_parquet_schema_merge",
-    oracle="""
-SELECT 'v1' AS src, count(*) AS n,
-       CAST(count(*) AS BIGINT) AS n_null_acctbal,
-       CAST(NULL AS DOUBLE) AS acctbal_sum
-FROM customer WHERE c_custkey % 2 = 0
-UNION ALL
--- v2 null count is the SOURCE's own null acctbals (not a pinned 0): the
--- evolved file carries the column, nullable like any other
-SELECT 'v2', count(*), CAST(count(*) - count(c_acctbal) AS BIGINT),
-       CAST(round(sum(CAST(c_acctbal AS DECIMAL(38, 2))), 2) AS DOUBLE)
-FROM customer WHERE c_custkey % 2 = 1
-""",
-)
-def scan_parquet_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema-evolution lake read: a v1 writer emitted (custkey, name)
-    and a v2 writer later added acctbal — written to src=v1/ and src=v2/
-    under one root. One mergeSchema parquet read reconstructs the union
-    schema (src resolves as a partition column from the directory
-    names); v1 rows surface NULL acctbal, exactly as a schema-evolved
-    lake should, and the aggregate proves both the merged schema and the
-    per-version null semantics. The acctbal sum runs in DECIMAL so the
-    v2 checksum is order-independent. Complements schema_evolve (which
-    evolves the DataFrame); this evolves the FILES."""
-    c = Tables(spark, sf_dir).customer
-    root = op_tmpdir("schema_merge_")
-    v1 = c.filter(F.col("c_custkey") % 2 == 0).select("c_custkey", "c_name")
-    v2 = c.filter(F.col("c_custkey") % 2 == 1).select(
-        "c_custkey", "c_name", "c_acctbal"
-    )
-    v1.write.mode("overwrite").parquet(f"{root}/src=v1")
-    v2.write.mode("overwrite").parquet(f"{root}/src=v2")
-    merged = spark.read.option("mergeSchema", "true").parquet(root)
-    return merged.groupBy("src").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("c_acctbal").isNull(), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_null_acctbal"),
-        F.round(
-            F.sum(F.col("c_acctbal").cast("decimal(38,2)")), 2
-        )
-        .cast("double")
-        .alias("acctbal_sum"),
-    )
-
-
-@register(
-    "sink_parquet_codecs",
-    oracle="""
-SELECT 'gzip' AS codec, count(*) AS n,
-       CAST(sum(o_orderkey) AS BIGINT) AS key_sum FROM orders
-UNION ALL
-SELECT 'snappy', count(*), CAST(sum(o_orderkey) AS BIGINT) FROM orders
-UNION ALL
-SELECT 'zstd', count(*), CAST(sum(o_orderkey) AS BIGINT) FROM orders
-""",
-)
-def sink_parquet_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Parquet compression-codec round-trip: the same relation written
-    under snappy (the splittable default), gzip (cold storage), and zstd
-    (the modern ratio/speed frontier — the lake default at 100 TB), each
-    re-read and checksummed. Proves codec interop end to end; codec
-    choice is a table-level storage policy an ingestion engine must
-    support per sink."""
-    o = Tables(spark, sf_dir).orders.select("o_orderkey", "o_orderstatus")
-    out = None
-    for codec in ["gzip", "snappy", "zstd"]:
-        path = op_tmpdir(f"sink_codec_{codec}_")
-        o.write.mode("overwrite").option("compression", codec).parquet(path)
-        back = (
-            spark.read.schema("o_orderkey bigint, o_orderstatus string")
-            .parquet(path)
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("o_orderkey").cast("bigint").alias("key_sum"),
-            )
-            .select(F.lit(codec).alias("codec"), "n", "key_sum")
-        )
-        out = back if out is None else out.unionByName(back)
-    return out
-
-
-# ===========================================================================
 # wave module round5k (formerly operators/round5k.py)
-# Round-5 eleventh wave (SURVEY.md §2.Q, continued): JSONL schema
-# inference and numeric RANGE window frames.
+# Round-5 eleventh wave (SURVEY.md §2.Q, continued): numeric RANGE window
+# frames.
 # ===========================================================================
-
-@register(
-    "scan_json_schema_infer",
-    oracle="""
-SELECT 'o_orderdate' AS col_name, 'timestamp' AS inferred_type
-UNION ALL SELECT 'o_orderkey', 'bigint'
-UNION ALL SELECT 'o_orderpriority', 'string'
-UNION ALL SELECT 'o_totalprice', 'double'
-""",
-)
-def scan_json_schema_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema-on-read inference for JSONL: a typed slice of orders is
-    exported to JSON lines and re-read WITHOUT a declared schema — the
-    reader must sample the files and infer (bigint, double, string,
-    timestamp). The emitted relation is the inferred schema itself, so
-    the oracle pins exactly what inference must produce; a regression
-    to string-everything (the classic inference failure) or a type
-    widening change breaks the hash. Inference is a sampling scan —
-    the one scan an ingestion engine pays once per discovery, never per
-    query."""
-    o = Tables(spark, sf_dir).orders.select(
-        "o_orderkey", "o_totalprice", "o_orderpriority", "o_orderdate"
-    )
-    out = op_tmpdir("scan_json_infer_")
-    o.write.mode("overwrite").json(out)
-    inferred = spark.read.option(
-        "inferTimestamp", "true"
-    ).json(out)
-    rows = sorted(
-        (f.name, f.dataType.simpleString()) for f in inferred.schema.fields
-    )
-    return spark.createDataFrame(
-        rows, "col_name string, inferred_type string"
-    )
 
 
 @register(
@@ -1033,8 +565,8 @@ def win_range_numeric_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # wave module round5l (formerly operators/round5l.py)
-# Round-5 twelfth wave (SURVEY.md §2.Q, continued): embedding
-# label-confusion matrix and IANA timezone conversion parity.
+# Round-5 twelfth wave (SURVEY.md §2.Q, continued): IANA timezone
+# conversion parity.
 # ===========================================================================
 
 
@@ -1084,8 +616,7 @@ def fn_timezone_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # wave module round5n (formerly operators/round5n.py)
 # Round-5 fourteenth wave (SURVEY.md §2.Q, continued): Arrow-optimized
-# Python UDF surface, write-mode semantics matrix, and a data-contract
-# rule check.
+# Python UDF surface.
 # ===========================================================================
 
 @register(
@@ -1115,204 +646,11 @@ def udf_python_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     return o.select("o_orderkey", slug("o_orderpriority").alias("priority_slug"))
 
 
-@register(
-    "sink_write_modes",
-    oracle="""
-WITH n AS (SELECT count(*) AS c FROM orders WHERE o_orderkey % 10 = 0)
-SELECT 'overwrite' AS step, c AS rows_after FROM n
-UNION ALL SELECT 'append', 2 * c FROM n
-UNION ALL SELECT 'ignore', 2 * c FROM n
-UNION ALL SELECT 'error_caught', 1
-""",
-)
-def sink_write_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Write-mode semantics matrix against one parquet target: overwrite
-    establishes n rows, append doubles them, ignore against the existing
-    target is a silent no-op (still 2n), and errorifexists raises — the
-    four-mode contract every idempotent-ingestion design builds on
-    (re-run safety = ignore or overwrite; at-least-once landing =
-    append + downstream dedup). Each step re-reads and counts the
-    target; the raised error is caught and reported as its own row."""
-    o = Tables(spark, sf_dir).orders.filter(F.col("o_orderkey") % 10 == 0)
-    target = op_tmpdir("sink_modes_")
-    schema = "o_orderkey bigint, o_orderstatus string"
-    slim = o.select("o_orderkey", "o_orderstatus")
-
-    def count_target() -> int:
-        return spark.read.schema(schema).parquet(target).count()
-
-    rows = []
-    slim.write.mode("overwrite").parquet(target)
-    rows.append(("overwrite", count_target()))
-    slim.write.mode("append").parquet(target)
-    rows.append(("append", count_target()))
-    slim.write.mode("ignore").parquet(target)
-    rows.append(("ignore", count_target()))
-    try:
-        slim.write.mode("errorifexists").parquet(target)
-        rows.append(("error_caught", 0))
-    except Exception:
-        rows.append(("error_caught", 1))
-    return spark.createDataFrame(rows, "step string, rows_after bigint")
-
-
-@register(
-    "quality_schema_contract",
-    oracle="""
-SELECT 'orderkey_unique' AS rule,
-       CAST(count(*) - count(DISTINCT o_orderkey) AS BIGINT) AS violations
-FROM orders
-UNION ALL
-SELECT 'orderkey_not_null',
-       CAST(sum(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-FROM orders
-UNION ALL
-SELECT 'status_in_domain',
-       CAST(sum(CASE WHEN o_orderstatus NOT IN ('F', 'O', 'P')
-                     THEN 1 ELSE 0 END) AS BIGINT)
-FROM orders
-UNION ALL
-SELECT 'totalprice_positive',
-       CAST(sum(CASE WHEN o_totalprice <= 0 THEN 1 ELSE 0 END) AS BIGINT)
-FROM orders
-UNION ALL
-SELECT 'orderdate_in_range',
-       CAST(sum(CASE WHEN o_orderdate < TIMESTAMP '1990-01-01'
-                       OR o_orderdate >= TIMESTAMP '2010-01-01'
-                     THEN 1 ELSE 0 END) AS BIGINT)
-FROM orders
-UNION ALL
-SELECT 'priority_pattern',
-       CAST(sum(CASE WHEN NOT regexp_matches(o_orderpriority, '^[1-5]-')
-                     THEN 1 ELSE 0 END) AS BIGINT)
-FROM orders
-""",
-)
-def quality_schema_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-contract enforcement report: six declarative rules (key
-    uniqueness, non-null key, enum domain, positivity, date range,
-    format pattern) evaluated in ONE pass over orders — violations per
-    rule, zero meaning the contract holds. This is the producer-side
-    gate of a data-mesh handoff: the consumer pins the contract, the
-    pipeline ships the report. Spark computes all six aggregates in a
-    single scan and unpivots with stack() (the quality_null_blank_matrix
-    idiom); the oracle spells the per-rule UNION ALL contract."""
-    o = Tables(spark, sf_dir).orders
-    agg = o.agg(
-        (F.count(F.lit(1)) - F.countDistinct("o_orderkey"))
-        .cast("bigint")
-        .alias("orderkey_unique"),
-        F.sum(F.when(F.col("o_orderkey").isNull(), 1).otherwise(0))
-        .cast("bigint")
-        .alias("orderkey_not_null"),
-        F.sum(
-            F.when(~F.col("o_orderstatus").isin("F", "O", "P"), 1).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("status_in_domain"),
-        F.sum(F.when(F.col("o_totalprice") <= 0, 1).otherwise(0))
-        .cast("bigint")
-        .alias("totalprice_positive"),
-        F.sum(
-            F.when(
-                (F.col("o_orderdate") < F.lit("1990-01-01").cast("timestamp"))
-                | (
-                    F.col("o_orderdate")
-                    >= F.lit("2010-01-01").cast("timestamp")
-                ),
-                1,
-            ).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("orderdate_in_range"),
-        F.sum(
-            F.when(~F.col("o_orderpriority").rlike("^[1-5]-"), 1).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("priority_pattern"),
-    )
-    return agg.select(
-        F.expr(
-            "stack(6, "
-            "'orderkey_unique', orderkey_unique, "
-            "'orderkey_not_null', orderkey_not_null, "
-            "'status_in_domain', status_in_domain, "
-            "'totalprice_positive', totalprice_positive, "
-            "'orderdate_in_range', orderdate_in_range, "
-            "'priority_pattern', priority_pattern) AS (rule, violations)"
-        )
-    )
-
-
 # ===========================================================================
 # wave module round5o (formerly operators/round5o.py)
-# Round-5 fifteenth wave (SURVEY.md §2.Q, continued): CSV quoting round-trip
-# with embedded delimiters/newlines, running-distinct-count windows, and
-# incremental batch dedup against an existing lake.
+# Round-5 fifteenth wave (SURVEY.md §2.Q, continued): running-distinct-count
+# windows.
 # ===========================================================================
-
-@register(
-    "sink_csv_quoted_roundtrip",
-    oracle="""
-WITH src AS (
-  SELECT o_orderkey,
-         o_orderstatus || ',"x' || chr(10) || o_orderpriority AS tricky
-  FROM orders
-)
-SELECT count(*) AS n_rows,
-       CAST(sum(CASE WHEN contains(tricky, ',') THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_with_comma,
-       CAST(sum(CASE WHEN contains(tricky, chr(10)) THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_with_newline,
-       count(DISTINCT tricky) AS n_distinct_tricky,
-       CAST(sum(o_orderkey) AS BIGINT) AS key_sum
-FROM src
-""",
-)
-def sink_csv_quoted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CSV quoting torture round-trip: a field carrying an embedded
-    delimiter, a double-quote, AND a newline is written to CSV with
-    standard RFC-4180 quote doubling (escape='\"') and re-read with
-    multiLine=true — the three classic CSV-corruption vectors in one
-    value. The checksummed aggregate comes from the RE-READ relation,
-    so any quoting/escaping asymmetry between writer and reader breaks
-    row count, distinct count, or the key checksum against the oracle's
-    file-free recomputation. multiLine honesty note: quoted-newline CSV
-    is NOT splittable — at 100 TB this path is for moderate-size
-    interchange files; columnar formats carry the bulk (scan/sink
-    parquet ops)."""
-    o = Tables(spark, sf_dir).orders
-    tricky = F.concat(
-        F.col("o_orderstatus"),
-        F.lit(',"x\n'),
-        F.col("o_orderpriority"),
-    )
-    src = o.select("o_orderkey", tricky.alias("tricky"))
-    out = op_tmpdir("sink_csv_quoted_")
-    (
-        src.write.mode("overwrite")
-        .option("header", True)
-        .option("escape", '"')
-        .csv(out)
-    )
-    back = (
-        spark.read.schema("o_orderkey bigint, tricky string")
-        .option("header", True)
-        .option("multiLine", True)
-        .option("escape", '"')
-        .csv(out)
-    )
-    return back.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.when(F.col("tricky").contains(","), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_with_comma"),
-        F.sum(F.when(F.col("tricky").contains("\n"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_with_newline"),
-        F.countDistinct("tricky").alias("n_distinct_tricky"),
-        F.sum("o_orderkey").cast("bigint").alias("key_sum"),
-    )
 
 
 @register(
@@ -1370,84 +708,9 @@ def win_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # wave module round5p (formerly operators/round5p.py)
-# Round-5 sixteenth wave (SURVEY.md §2.Q, continued): exactly-once
-# batch ledger semantics, stable k-per-group sampling, and deterministic
-# content-UUID minting.
+# Round-5 sixteenth wave (SURVEY.md §2.Q, continued): stable
+# k-per-group sampling and deterministic content-UUID minting.
 # ===========================================================================
-
-@register(
-    "pipeline_idempotent_ledger",
-    oracle="""
-WITH feed AS (
-  -- at-least-once delivery: batches 0-4 once, batches 1 and 3 replayed
-  SELECT o_orderkey % 5 AS batch_id, o_orderkey, o_totalprice FROM orders
-  UNION ALL
-  SELECT o_orderkey % 5, o_orderkey, o_totalprice FROM orders
-  WHERE o_orderkey % 5 IN (1, 3)
-),
-delivery AS (
-  SELECT batch_id, o_orderkey, o_totalprice,
-         row_number() OVER (PARTITION BY batch_id, o_orderkey
-                            ORDER BY o_orderkey) AS attempt
-  FROM feed
-),
-applied AS (SELECT * FROM delivery WHERE attempt = 1)
-SELECT batch_id,
-       count(*) AS n_applied,
-       CAST((SELECT count(*) FROM delivery d
-             WHERE d.batch_id = a.batch_id AND d.attempt > 1) AS BIGINT)
-         AS n_deduped_replays,
-       CAST(round(sum(CAST(o_totalprice AS DECIMAL(38, 2))), 2) AS DOUBLE)
-         AS applied_total
-FROM applied a
-GROUP BY batch_id
-""",
-)
-def pipeline_idempotent_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exactly-once semantics over an at-least-once feed: batches land
-    once, two of them are replayed (the crash-retry reality of every
-    delivery system), and the ledger — first-attempt-wins per
-    (batch, key) — makes application idempotent: per-batch applied
-    counts and totals must equal the single-delivery truth, with the
-    replayed rows accounted as deduped. This is the keystone pipeline
-    guarantee the write-mode matrix (sink_write_modes) builds toward:
-    append-landing + ledger = effective exactly-once. One window over
-    the delivery log keyed (batch, key); totals in DECIMAL."""
-    o = Tables(spark, sf_dir).orders
-    base = o.select(
-        (F.col("o_orderkey") % 5).alias("batch_id"),
-        "o_orderkey",
-        "o_totalprice",
-    )
-    feed = base.unionByName(base.filter(F.col("batch_id").isin(1, 3)))
-    w = Window.partitionBy("batch_id", "o_orderkey").orderBy("o_orderkey")
-    delivery = feed.withColumn("attempt", F.row_number().over(w))
-    applied = delivery.filter(F.col("attempt") == 1)
-    replays = (
-        delivery.filter(F.col("attempt") > 1)
-        .groupBy("batch_id")
-        .agg(F.count(F.lit(1)).alias("n_deduped_replays"))
-    )
-    return (
-        applied.groupBy("batch_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_applied"),
-            F.round(
-                F.sum(F.col("o_totalprice").cast("decimal(38,2)")), 2
-            )
-            .cast("double")
-            .alias("applied_total"),
-        )
-        .join(F.broadcast(replays), "batch_id", "left")
-        .select(
-            "batch_id",
-            "n_applied",
-            F.coalesce("n_deduped_replays", F.lit(0))
-            .cast("bigint")
-            .alias("n_deduped_replays"),
-            "applied_total",
-        )
-    )
 
 
 @register(
@@ -1528,8 +791,7 @@ def fn_content_uuid(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # wave module round5q (formerly operators/round5q.py)
 # Round-5 seventeenth wave (SURVEY.md §2.Q, continued): co-purchase
-# graph triangle census, whole-file text ingestion, and a
-# top-k-per-group strategy-equivalence proof.
+# graph triangle census and a top-k-per-group strategy-equivalence proof.
 # ===========================================================================
 
 @register(
@@ -1631,50 +893,6 @@ def graph_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "scan_text_wholefile",
-    oracle="""
-WITH content AS (
-  -- r_name IS NOT NULL (explicit; string_agg would skip it anyway): a
-  -- NULL has no line representation in the text format
-  SELECT string_agg(r_name, chr(10) ORDER BY r_name) || chr(10) AS body
-  FROM region WHERE r_name IS NOT NULL
-)
-SELECT 1 AS n_files,
-       CAST(length(body) AS BIGINT) AS content_chars,
-       md5(body) AS content_md5
-FROM content
-""",
-)
-def scan_text_wholefile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whole-file text ingestion (`wholetext=true`): each FILE becomes
-    one row — the scan mode for document formats where line splitting
-    destroys the record (a contract per file, a log dump per file).
-    One sorted single-partition text export (sortWithinPartitions makes
-    the file bytes deterministic), re-read as a whole file and
-    checksummed against the oracle's reconstruction of the exact byte
-    stream (ordered lines + trailing newline). The non-splittability is
-    the point: one file = one task, so at scale this pairs with
-    many-small-files layouts, never one giant blob."""
-    r = Tables(spark, sf_dir).region.where(F.col("r_name").isNotNull())
-    out = op_tmpdir("scan_wholefile_")
-    (
-        r.select("r_name")
-        .coalesce(1)
-        .sortWithinPartitions("r_name")
-        .write.mode("overwrite")
-        .text(out)
-    )
-    # NB: wholetext must be the text() PARAMETER — the .option() spelling
-    # is silently ignored by this reader and degrades to line mode
-    whole = spark.read.text(out, wholetext=True)
-    return whole.agg(
-        F.count(F.lit(1)).alias("n_files"),
-        F.sum(F.length("value")).cast("bigint").alias("content_chars"),
-        F.max(F.md5("value")).alias("content_md5"),
-    )
-
-
-@register(
     "topk_per_group_strategies",
     oracle="""
 WITH rev AS (
@@ -1764,72 +982,10 @@ def topk_per_group_strategies(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# wave module round5r (formerly operators/round5r.py)
-# Round-5 eighteenth wave (SURVEY.md §2.Q, continued): a small-files
-# compaction planner.
-# ===========================================================================
-
-_TARGET_FILE_BYTES = 4 * 1024 * 1024  # 4 MiB scratch-scale stand-in
-
-
-@register(
-    "pipeline_compaction_planner",
-    oracle=f"""
-WITH sized AS (
-  SELECT date_trunc('day', o_orderdate) AS day,
-         -- serialized-width proxy: fixed numeric widths + string bytes
-         8 + 8 + 8 + octet_length(encode(o_orderstatus))
-           + octet_length(encode(o_orderpriority)) AS row_bytes
-  FROM orders
-)
-SELECT day,
-       count(*) AS n_rows,
-       CAST(sum(row_bytes) AS BIGINT) AS est_bytes,
-       CAST(greatest(1, ceil(CAST(sum(row_bytes) AS DOUBLE)
-                             / {_TARGET_FILE_BYTES})) AS BIGINT)
-         AS planned_files
-FROM sized GROUP BY day
-""",
-)
-def pipeline_compaction_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Small-files compaction planner: per day-partition, estimate the
-    serialized byte weight (fixed numeric widths + measured string
-    bytes) and emit the target file count ceil(bytes/target) — the
-    work-list a nightly OPTIMIZE/compaction job executes, and the
-    repartition(n) argument pipeline_compact_latest would consume. The
-    byte model is a proxy (parquet encodes/compresses), but it is the
-    SAME deterministic proxy in both engines, and proxy-driven planning
-    is exactly how real compactors size output without a dry-run write.
-    One partial-aggregable pass; output is days-sized."""
-    o = Tables(spark, sf_dir).orders
-    row_bytes = (
-        F.lit(8 + 8 + 8)
-        + F.octet_length(F.encode("o_orderstatus", "UTF-8"))
-        + F.octet_length(F.encode("o_orderpriority", "UTF-8"))
-    )
-    sized = o.select(
-        F.date_trunc("day", "o_orderdate").alias("day"),
-        row_bytes.alias("row_bytes"),
-    )
-    return sized.groupBy("day").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum("row_bytes").cast("bigint").alias("est_bytes"),
-        F.greatest(
-            F.lit(1),
-            F.ceil(
-                F.sum("row_bytes").cast("double") / _TARGET_FILE_BYTES
-            ),
-        )
-        .cast("bigint")
-        .alias("planned_files"),
-    )
-
-
-# ===========================================================================
 # wave module round5s (formerly operators/round5s.py)
 # Round-5 nineteenth wave (SURVEY.md §2.Q, continued): array set
-# operations, binaryFile ingestion, ISO week/year calendar parity, and
-# an equi-depth (quantile-binned) histogram.
+# operations, ISO week/year calendar parity, and an equi-depth
+# (quantile-binned) histogram.
 # ===========================================================================
 
 @register(
@@ -1884,54 +1040,6 @@ def fn_array_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.array_position("a", "data"), F.lit(0))
         .cast("bigint")
         .alias("pos_data"),
-    )
-
-
-@register(
-    "scan_binary_files",
-    oracle="""
-WITH payloads AS (
-  -- r_name IS NOT NULL: an asset without a name cannot be staged as a
-  -- file (and || NULL would null the body on this side only)
-  SELECT r_name, 'ASSET:' || r_name || ':' || CAST(r_regionkey AS VARCHAR)
-           AS body
-  FROM region WHERE r_name IS NOT NULL
-)
-SELECT count(*) AS n_files,
-       CAST(sum(octet_length(encode(body))) AS BIGINT) AS total_bytes,
-       md5(string_agg(md5(body), '|' ORDER BY md5(body))) AS digest_of_digests
-FROM payloads
-""",
-)
-def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """binaryFile ingestion — the REAL entry point for multimodal
-    assets: each file lands as (path, modificationTime, length,
-    content: binary) with no decoding. Five deterministic payload
-    files are staged and read back through the binaryFile source; the
-    comparison covers file count, total byte length, and an
-    order-canonicalized digest-of-digests over the CONTENT bytes —
-    path and mtime (host-dependent) are deliberately excluded from the
-    compared schema. Pairs with multimodal_payload_dedup (dedup after
-    this ingest) and the mapInPandas featurizers (decode after this
-    ingest)."""
-    r = (
-        Tables(spark, sf_dir)
-        .region.where(F.col("r_name").isNotNull())  # oracle mirrors
-        .select("r_name", "r_regionkey")
-        .collect()
-    )
-    out = op_tmpdir("scan_binary_")
-    for row in r:  # 5 rows — bounded driver-side staging
-        body = f"ASSET:{row['r_name']}:{row['r_regionkey']}".encode()
-        with open(os.path.join(out, f"{row['r_name']}.bin"), "wb") as f:
-            f.write(body)
-    files = spark.read.format("binaryFile").load(out)
-    return files.agg(
-        F.count(F.lit(1)).alias("n_files"),
-        F.sum(F.octet_length("content")).cast("bigint").alias("total_bytes"),
-        F.md5(
-            F.array_join(F.array_sort(F.collect_list(F.md5("content"))), "|")
-        ).alias("digest_of_digests"),
     )
 
 
@@ -2144,7 +1252,7 @@ def win_default_frame_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # wave module round5u (formerly operators/round5u.py)
 # Round-5 twenty-first wave (SURVEY.md §2.Q, continued): inverted-index
-# boolean search and doc⇄embedding coverage audit.
+# boolean search.
 # ===========================================================================
 
 
@@ -2218,7 +1326,7 @@ def search_inverted_index_and_query(
 # ===========================================================================
 # wave module round5w (formerly operators/round5w.py)
 # Round-5 twenty-third wave (SURVEY.md §2.Q, continued): partial-
-# aggregation merge proof and training-shard manifest build.
+# aggregation merge proof.
 # ===========================================================================
 
 @register(
@@ -2329,168 +1437,11 @@ def agg_partial_merge_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SHARD_DOCS = 500
-
-
-@register(
-    "pipeline_shard_manifest",
-    oracle=f"""
-WITH assigned AS (
-  SELECT doc_id, n_chars,
-         len({tokens_sql()}) AS n_tokens,
-         {hash60_sql("CAST(doc_id AS VARCHAR)")} % 8 AS shard_id
-  FROM documents
-)
-SELECT shard_id,
-       count(*) AS n_docs,
-       CAST(sum(n_tokens) AS BIGINT) AS token_sum,
-       CAST(sum(n_chars) AS BIGINT) AS char_sum,
-       min(doc_id) AS first_doc,
-       max(doc_id) AS last_doc,
-       CAST(CASE WHEN count(*) > {_SHARD_DOCS} THEN 1 ELSE 0 END AS INT)
-         AS needs_split
-FROM assigned GROUP BY shard_id
-""",
-)
-def pipeline_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-shard manifest build (the WebDataset/tar-shard prep
-    step): docs are hash-assigned to 8 shards (md5 of the id — stable
-    under re-runs and appends, the split_train_eval idiom), and the
-    manifest reports per-shard doc/token/char budgets plus a
-    needs_split flag against the {_SHARD_DOCS}-doc target — exactly
-    what a dataloader needs to plan balanced, reproducible epochs.
-    One partial-aggregable pass; hash assignment means shard sizes
-    stay balanced at any corpus size without a shuffle-by-range."""
-    d = Tables(spark, sf_dir).documents
-    shard = F.expr(hash60_expr("cast(doc_id as string)")) % 8
-    assigned = d.select(
-        "doc_id",
-        "n_chars",
-        F.size(tokens()).alias("n_tokens"),
-        shard.alias("shard_id"),
-    )
-    return assigned.groupBy("shard_id").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").cast("bigint").alias("token_sum"),
-        F.sum("n_chars").cast("bigint").alias("char_sum"),
-        F.min("doc_id").alias("first_doc"),
-        F.max("doc_id").alias("last_doc"),
-        F.when(F.count(F.lit(1)) > _SHARD_DOCS, 1)
-        .otherwise(0)
-        .cast("int")
-        .alias("needs_split"),
-    )
-
-
 # ===========================================================================
 # wave module round5x (formerly operators/round5x.py)
-# Round-5 twenty-fourth wave (SURVEY.md §2.Q, continued): vector-index
-# upsert refresh, two-sample Kolmogorov-Smirnov drift test, and keyset
-# (seek) pagination.
+# Round-5 twenty-fourth wave (SURVEY.md §2.Q, continued): keyset (seek)
+# pagination.
 # ===========================================================================
-
-
-_KS_CUT = "2024-01-15"
-
-
-@register(
-    "quality_ks_two_sample",
-    oracle=f"""
-WITH tagged AS (
-  -- value IS NOT NULL: an ECDF is over OBSERVED values; a NULL value is
-  -- not an observation and its group has no seat in the ordered walk
-  SELECT value,
-         CASE WHEN ts < TIMESTAMP '{_KS_CUT}' THEN 1 ELSE 0 END AS pre
-  FROM events WHERE value IS NOT NULL
-),
-counts AS (
-  SELECT value,
-         CAST(sum(pre) AS BIGINT) AS c1,
-         CAST(sum(1 - pre) AS BIGINT) AS c2
-  FROM tagged GROUP BY value
-),
-tot AS (
-  SELECT CAST(sum(c1) AS DOUBLE) AS n1, CAST(sum(c2) AS DOUBLE) AS n2
-  FROM counts
-),
-ecdf AS (
-  SELECT value,
-         sum(c1) OVER (ORDER BY value ROWS UNBOUNDED PRECEDING) AS r1,
-         sum(c2) OVER (ORDER BY value ROWS UNBOUNDED PRECEDING) AS r2
-  FROM counts
-),
-gaps AS (
-  SELECT value,
-         abs(CAST(r1 AS DOUBLE) / n1 - CAST(r2 AS DOUBLE) / n2) AS gap
-  FROM ecdf CROSS JOIN tot
-)
-SELECT floor((SELECT max(gap) FROM gaps) * 1000000 + 0.5) / 1000000
-         AS ks_statistic,
-       (SELECT value FROM gaps ORDER BY gap DESC, value LIMIT 1)
-         AS ks_location,
-       (SELECT CAST(n1 AS BIGINT) FROM tot) AS n_pre,
-       (SELECT CAST(n2 AS BIGINT) FROM tot) AS n_post
-""",
-)
-def quality_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-sample Kolmogorov-Smirnov drift test on the value column
-    around a cutover: D = max |ECDF_pre − ECDF_post| plus the value
-    where the gap peaks — the distribution-shape drift detector that
-    mean/variance screens (Welch t) are blind to. Scale shape: raw
-    rows first collapse to per-DISTINCT-VALUE counts (the 2-decimal
-    domain bounds this relation regardless of event volume), and the
-    ECDFs are running sums over that bounded relation — the global
-    ordered window never sees raw events. Exact integer ranks, two
-    divisions per distinct value, deterministic argmax with a value
-    tiebreak."""
-    e = Tables(spark, sf_dir).events.where(
-        F.col("value").isNotNull()  # oracle mirrors: ECDF over observations
-    )
-    tagged = e.select(
-        "value",
-        F.when(F.col("ts") < F.lit(_KS_CUT).cast("timestamp"), 1)
-        .otherwise(0)
-        .alias("pre"),
-    )
-    counts = tagged.groupBy("value").agg(
-        F.sum("pre").cast("bigint").alias("c1"),
-        F.sum(1 - F.col("pre")).cast("bigint").alias("c2"),
-    )
-    tot = counts.agg(
-        F.sum("c1").cast("double").alias("n1"),
-        F.sum("c2").cast("double").alias("n2"),
-    )
-    w = Window.orderBy("value").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    ecdf = counts.select(
-        "value",
-        F.sum("c1").over(w).alias("r1"),
-        F.sum("c2").over(w).alias("r2"),
-    )
-    gaps = ecdf.crossJoin(F.broadcast(tot)).select(
-        "value",
-        F.abs(
-            F.col("r1").cast("double") / F.col("n1")
-            - F.col("r2").cast("double") / F.col("n2")
-        ).alias("gap"),
-    )
-    top = (
-        gaps.orderBy(F.desc("gap"), F.asc("value"))
-        .limit(1)
-        .select(
-            pround(F.col("gap")).alias("ks_statistic"),
-            F.col("value").alias("ks_location"),
-        )
-    )
-    return top.crossJoin(
-        F.broadcast(
-            tot.select(
-                F.col("n1").cast("bigint").alias("n_pre"),
-                F.col("n2").cast("bigint").alias("n_post"),
-            )
-        )
-    )
 
 
 _PAGE_SIZE = 50
@@ -2715,8 +1666,7 @@ def fn_minmax_scale_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # wave module round5z (formerly operators/round5z.py)
 # Round-5 twenty-sixth wave (SURVEY.md §2.Q, continued): as-of join
-# direction variants, key-sequence gap auditing via the two-level
-# decomposition, and a snapshot-retention GC planner.
+# direction variants.
 # ===========================================================================
 
 
@@ -2818,150 +1768,4 @@ def join_asof_directions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("min_us_to_next_error"),
         F.sum(nearest_back).cast("bigint").alias("n_nearest_is_backward"),
-    )
-
-
-_GAP_BUCKET = 4096
-
-
-@register(
-    "quality_key_sequence_gaps",
-    oracle=f"""
-WITH keys AS (SELECT DISTINCT o_orderkey AS k FROM orders),
-buckets AS (
-  SELECT k // {_GAP_BUCKET} AS b, min(k) AS kmin, max(k) AS kmax,
-         count(*) AS n
-  FROM keys GROUP BY b
-),
-intra AS (
-  -- gap mass inside each bucket: span+1 minus present keys
-  SELECT CAST(sum(kmax - kmin + 1 - n) AS BIGINT) AS intra_missing
-  FROM buckets
-),
-inter AS (
-  -- gap mass between consecutive buckets' boundary keys
-  SELECT CAST(sum(kmin - prev_kmax - 1) AS BIGINT) AS inter_missing,
-         CAST(max(kmin - prev_kmax - 1) AS BIGINT) AS largest_boundary_gap
-  FROM (SELECT kmin, lag(kmax) OVER (ORDER BY b) AS prev_kmax FROM buckets)
-  WHERE prev_kmax IS NOT NULL
-),
-bounds AS (
-  SELECT min(k) AS k_lo, max(k) AS k_hi, count(*) AS n_keys FROM keys
-)
-SELECT n_keys,
-       k_hi - k_lo + 1 AS span,
-       CAST(k_hi - k_lo + 1 - n_keys AS BIGINT) AS total_missing,
-       intra_missing,
-       inter_missing,
-       largest_boundary_gap
-FROM bounds CROSS JOIN intra CROSS JOIN inter
-""",
-)
-def quality_key_sequence_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Key-sequence gap audit — lost-data detection for a should-be-
-    dense key space: total missing keys in the observed span,
-    decomposed into intra-bucket and bucket-boundary gap mass (the two
-    must sum to the total — an internal consistency check the oracle
-    hashes). Scale shape: keys aggregate into {_GAP_BUCKET}-wide
-    buckets FIRST, so the only ordered window runs over the
-    buckets-sized relation — the two-level decomposition
-    (events_peak_concurrency's prefix-sum argument) applied to gap
-    detection; a naive lag over raw sorted keys would serialize the
-    whole key space through one partition."""
-    o = Tables(spark, sf_dir).orders
-    keys = o.select(F.col("o_orderkey").alias("k")).distinct()
-    buckets = keys.groupBy(
-        (F.col("k") / _GAP_BUCKET).cast("bigint").alias("b")
-    ).agg(
-        F.min("k").alias("kmin"),
-        F.max("k").alias("kmax"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    intra = buckets.agg(
-        F.sum(F.col("kmax") - F.col("kmin") + 1 - F.col("n"))
-        .cast("bigint")
-        .alias("intra_missing")
-    )
-    w = Window.orderBy("b")
-    inter = (
-        buckets.select(
-            "kmin", F.lag("kmax").over(w).alias("prev_kmax")
-        )
-        .filter(F.col("prev_kmax").isNotNull())
-        .agg(
-            F.sum(F.col("kmin") - F.col("prev_kmax") - 1)
-            .cast("bigint")
-            .alias("inter_missing"),
-            F.max(F.col("kmin") - F.col("prev_kmax") - 1)
-            .cast("bigint")
-            .alias("largest_boundary_gap"),
-        )
-    )
-    bounds = keys.agg(
-        F.min("k").alias("k_lo"),
-        F.max("k").alias("k_hi"),
-        F.count(F.lit(1)).alias("n_keys"),
-    )
-    return (
-        bounds.crossJoin(F.broadcast(intra))
-        .crossJoin(F.broadcast(inter))
-        .select(
-            "n_keys",
-            (F.col("k_hi") - F.col("k_lo") + 1).alias("span"),
-            (F.col("k_hi") - F.col("k_lo") + 1 - F.col("n_keys"))
-            .cast("bigint")
-            .alias("total_missing"),
-            "intra_missing",
-            "inter_missing",
-            "largest_boundary_gap",
-        )
-    )
-
-
-@register(
-    "pipeline_retention_gc_plan",
-    oracle="""
-WITH snapshots AS (
-  -- o_orderdate IS NOT NULL: a snapshot without a date has no age (and
-  -- the oracle engine's window ranking over a NULL grouped date is
-  -- unreliable — see orders_cumulative_share_monthly)
-  SELECT DISTINCT date_trunc('month', o_orderdate) AS snap
-  FROM orders WHERE o_orderdate IS NOT NULL
-),
-ranked AS (
-  SELECT snap,
-         row_number() OVER (ORDER BY snap DESC) AS age_rank
-  FROM snapshots
-)
-SELECT snap,
-       CAST(age_rank AS BIGINT) AS age_rank,
-       CASE WHEN age_rank <= 3 THEN 'keep_recent'
-            WHEN (age_rank - 4) % 3 = 0 THEN 'keep_thinned'
-            ELSE 'delete' END AS action
-FROM ranked
-""",
-)
-def pipeline_retention_gc_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot-retention GC planner (the VACUUM work-list): monthly
-    snapshots ranked newest-first, the 3 most recent kept outright,
-    every 3rd older snapshot kept as the thinned history, the rest
-    marked delete — the keep-recent + exponential/periodic-thinning
-    policy every lakehouse table ages under. Rank arithmetic only, over
-    the snapshots-sized relation; the emitted plan is the input a GC
-    executor consumes (and what retention audits diff against)."""
-    o = Tables(spark, sf_dir).orders.where(F.col("o_orderdate").isNotNull())
-    snaps = o.select(
-        F.date_trunc("month", "o_orderdate").alias("snap")
-    ).distinct()
-    w = Window.orderBy(F.desc("snap"))
-    ranked = snaps.withColumn("age_rank", F.row_number().over(w))
-    action = (
-        F.when(F.col("age_rank") <= 3, "keep_recent")
-        .when((F.col("age_rank") - 4) % 3 == 0, "keep_thinned")
-        .otherwise("delete")
-    )
-    return ranked.select(
-        "snap",
-        F.col("age_rank").cast("bigint").alias("age_rank"),
-        action.alias("action"),
     )

@@ -14,56 +14,9 @@ from ai_dataingestion_spark.functions.portable import (
 )
 from ai_dataingestion_spark.opcache import op_cache
 from ai_dataingestion_spark.tmpdirs import op_tmpdir
-from ai_dataingestion_spark.scale import broadcast_if_small, table_bytes
+from ai_dataingestion_spark.scale import broadcast_if_small
 import os
 from ai_dataingestion_spark.registry import Tables
-import glob
-
-
-# ===========================================================================
-# wave module round6a (formerly operators/round6a.py)
-# Round-5 twenty-seventh wave (SURVEY.md §2.Q, continued): sink
-# file-layout auditing.
-# ===========================================================================
-
-
-@register(
-    "sink_file_layout_audit",
-    oracle="""
-SELECT l_returnflag, 1 AS n_files, count(*) AS n_rows,
-       CAST(sum(l_orderkey) AS BIGINT) AS key_sum
-FROM lineitem GROUP BY l_returnflag
-""",
-)
-def sink_file_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-layout audit for a partitioned sink: lineitem is written
-    partitionBy(returnflag) with one task per flag (the
-    repartition-by-partition-column compaction rule), then the audit
-    re-reads and counts DISTINCT physical files per partition via
-    input_file_name() — pinning n_files = 1 per flag, the layout the
-    compaction planner promises (pipeline_compaction_planner plans it;
-    this verifies it happened). A layout regression (skew split,
-    missing repartition → 32 small files per flag) breaks the hash,
-    not just a log line."""
-    li = Tables(spark, sf_dir).lineitem.select("l_orderkey", "l_returnflag")
-    out = op_tmpdir("sink_layout_")
-    (
-        li.repartition("l_returnflag")
-        .write.mode("overwrite")
-        .partitionBy("l_returnflag")
-        .parquet(out)
-    )
-    back = spark.read.schema("l_orderkey bigint, l_returnflag string").parquet(
-        out
-    )
-    # input_file_name() is non-deterministic to the analyzer: project it
-    # into a column first, THEN aggregate over the materialized value
-    tagged = back.withColumn("fname", F.input_file_name())
-    return tagged.groupBy("l_returnflag").agg(
-        F.countDistinct("fname").cast("int").alias("n_files"),
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum("l_orderkey").cast("bigint").alias("key_sum"),
-    )
 
 
 # ===========================================================================
@@ -106,151 +59,9 @@ def agg_log2_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # wave module round6c (formerly operators/round6c.py)
-# Round-5 twenty-ninth wave (SURVEY.md §2.Q, continued): Population
-# Stability Index drift, the median-of-means robust estimator, and
-# quality-aware dedup representative selection.
+# Round-5 twenty-ninth wave (SURVEY.md §2.Q, continued): the
+# median-of-means robust estimator.
 # ===========================================================================
-
-_PSI_CUT = "2024-01-15"
-
-
-@register(
-    "quality_psi_drift",
-    oracle=f"""
-WITH pre AS (
-  SELECT value FROM events
-  WHERE ts < TIMESTAMP '{_PSI_CUT}'
-    AND (value IS NULL OR isfinite(value))
-),
-cuts AS (
-  SELECT CAST(quantile_cont(value, 0.1) AS DOUBLE) AS q1,
-         CAST(quantile_cont(value, 0.2) AS DOUBLE) AS q2,
-         CAST(quantile_cont(value, 0.3) AS DOUBLE) AS q3,
-         CAST(quantile_cont(value, 0.4) AS DOUBLE) AS q4,
-         CAST(quantile_cont(value, 0.5) AS DOUBLE) AS q5,
-         CAST(quantile_cont(value, 0.6) AS DOUBLE) AS q6,
-         CAST(quantile_cont(value, 0.7) AS DOUBLE) AS q7,
-         CAST(quantile_cont(value, 0.8) AS DOUBLE) AS q8,
-         CAST(quantile_cont(value, 0.9) AS DOUBLE) AS q9
-  FROM pre
-),
-binned AS (
-  SELECT CASE WHEN ts < TIMESTAMP '{_PSI_CUT}' THEN 'pre' ELSE 'post' END
-           AS period,
-         (CASE WHEN value > q1 THEN 1 ELSE 0 END) +
-         (CASE WHEN value > q2 THEN 1 ELSE 0 END) +
-         (CASE WHEN value > q3 THEN 1 ELSE 0 END) +
-         (CASE WHEN value > q4 THEN 1 ELSE 0 END) +
-         (CASE WHEN value > q5 THEN 1 ELSE 0 END) +
-         (CASE WHEN value > q6 THEN 1 ELSE 0 END) +
-         (CASE WHEN value > q7 THEN 1 ELSE 0 END) +
-         (CASE WHEN value > q8 THEN 1 ELSE 0 END) +
-         (CASE WHEN value > q9 THEN 1 ELSE 0 END) AS bin
-  FROM events CROSS JOIN cuts
-  WHERE (value IS NULL OR isfinite(value))
-),
-shares AS (
-  SELECT bin,
-         CAST(sum(CASE WHEN period = 'pre' THEN 1 ELSE 0 END) AS DOUBLE)
-           / (SELECT count(*) FROM binned WHERE period = 'pre') AS p,
-         CAST(sum(CASE WHEN period = 'post' THEN 1 ELSE 0 END) AS DOUBLE)
-           / (SELECT count(*) FROM binned WHERE period = 'post') AS q
-  FROM binned GROUP BY bin
-),
-terms AS (
-  SELECT bin,
-         CAST(floor((p - q) * ln(p / q) * 1000000000 + 0.5) / 1000000000
-              AS DECIMAL(38, 9)) AS term
-  FROM shares
-)
-SELECT count(*) AS n_bins,
-       floor(CAST(sum(term) AS DOUBLE) * 1000000 + 0.5) / 1000000 AS psi,
-       CAST(CASE WHEN CAST(sum(term) AS DOUBLE) >= 0.2 THEN 1 ELSE 0 END
-            AS INT) AS drift_alarm
-FROM terms
-""",
-)
-def quality_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Population Stability Index between pre- and post-cutover value
-    distributions: decile bins fitted on the PRE period (the expected
-    distribution), PSI = Σ(pᵢ−qᵢ)·ln(pᵢ/qᵢ), with the standard
-    ≥0.2 drift alarm — the binned drift score risk/model monitoring
-    standardizes on, complementing quality_ks_two_sample's sup-gap.
-    Bin edges are bit-identical interpolated quantiles broadcast once;
-    per-bin terms are 9dp-rounded then DECIMAL-summed (order-
-    independent); the alarm fires on the UNROUNDED sum in both
-    engines. The metric is gated to the FINITE domain on both sides
-    (nan-tier contract): a NaN poisons the fitted decile edges — the
-    engines' quantile kernels disagree on NaN placement — and an Inf
-    would sit in the top bin while corrupting nothing visibly, which is
-    exactly the silent-drift failure PSI exists to catch; quarantine
-    and let quality_constraints count the non-finite rows."""
-    from ai_dataingestion_spark.functions.portable import finite
-
-    e = Tables(spark, sf_dir).events.where(finite("value"))
-    pre_pred = F.col("ts") < F.lit(_PSI_CUT).cast("timestamp")
-    cuts = e.filter(pre_pred).agg(
-        *[
-            F.expr(
-                f"percentile_cont({q / 10}) WITHIN GROUP (ORDER BY value)"
-            ).alias(f"q{q}")
-            for q in range(1, 10)
-        ]
-    )
-    bin_ = sum(
-        F.when(F.col("value") > F.col(f"q{q}"), 1).otherwise(0)
-        for q in range(1, 10)
-    )
-    binned = e.crossJoin(F.broadcast(cuts)).select(
-        F.when(pre_pred, "pre").otherwise("post").alias("period"),
-        bin_.alias("bin"),
-    )
-    # r17: period totals derive from the ≤10-row per-bin counts via an
-    # unpartitioned window instead of a second full pass over binned
-    # (the old pivot-count ran the scan + crossJoin chain twice — guide
-    # §2.4; an op_cache + re-aggregate variant was prototyped and
-    # measured SLOWER locally than the extra pass, so the single-chain
-    # window form ships). The >0 guard keeps the pivot's
-    # NULL-when-period-absent semantics: Σ c_pre = 0 exactly when no
-    # pre rows exist, where pivot count yielded NULL (and p/q must stay
-    # NULL, not NaN-from-0/0, on that edge).
-    w_all = Window.partitionBy()
-    counts = binned.groupBy("bin").agg(
-        F.sum(F.when(F.col("period") == "pre", 1).otherwise(0)).alias(
-            "c_pre"
-        ),
-        F.sum(F.when(F.col("period") == "post", 1).otherwise(0)).alias(
-            "c_post"
-        ),
-    )
-    tot_pre = F.sum("c_pre").over(w_all)
-    tot_post = F.sum("c_post").over(w_all)
-    shares = counts.select(
-        "bin",
-        (
-            F.col("c_pre").cast("double")
-            / F.when(tot_pre > 0, tot_pre)
-        ).alias("p"),
-        (
-            F.col("c_post").cast("double")
-            / F.when(tot_post > 0, tot_post)
-        ).alias("q"),
-    )
-    term = pround(
-        (F.col("p") - F.col("q")) * F.log(F.col("p") / F.col("q")), 9
-    ).cast("decimal(38,9)")
-    agg = shares.agg(
-        F.count(F.lit(1)).alias("n_bins"),
-        F.sum(term).cast("double").alias("psi_raw"),
-    )
-    return agg.select(
-        "n_bins",
-        pround(F.col("psi_raw")).alias("psi"),
-        F.when(F.col("psi_raw") >= 0.2, 1)
-        .otherwise(0)
-        .cast("int")
-        .alias("drift_alarm"),
-    )
 
 
 _MOM_BUCKETS = 10
@@ -320,69 +131,9 @@ def agg_median_of_means(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# wave module round6e (formerly operators/round6e.py)
-# Round-5 thirty-first wave (SURVEY.md §2.Q, continued): embedding
-# dimension correlation pairs and header-driven CSV column reconciliation.
-# ===========================================================================
-
-
-@register(
-    "scan_csv_column_reorder",
-    oracle="""
-SELECT count(*) AS n_rows,
-       CAST(sum(o_orderkey) AS BIGINT) AS key_sum,
-       CAST(round(sum(CAST(o_totalprice AS DECIMAL(38, 2))), 2) AS DOUBLE)
-         AS price_sum
-FROM orders
-""",
-)
-def scan_csv_column_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Header-driven CSV reconciliation: the same relation exported by
-    two producers with DIFFERENT column orders (key-first vs
-    price-first — the reality of multi-team CSV feeds), read back
-    per-directory with header-based name mapping and unioned BY NAME —
-    a positional read would silently transpose keys into prices; the
-    checksums prove the name-mapped path didn't. unionByName is the
-    reconciliation contract; the oracle recomputes from the source
-    relation, so any transposition breaks the hash."""
-    o = Tables(spark, sf_dir).orders.select(
-        "o_orderkey", "o_totalprice", "o_orderstatus"
-    )
-    half1 = o.filter(F.col("o_orderkey") % 2 == 0)
-    half2 = o.filter(F.col("o_orderkey") % 2 == 1).select(
-        "o_totalprice", "o_orderstatus", "o_orderkey"  # reordered producer
-    )
-    d1, d2 = op_tmpdir("csv_reorder_a_"), op_tmpdir("csv_reorder_b_")
-    half1.write.mode("overwrite").option("header", True).csv(d1)
-    half2.write.mode("overwrite").option("header", True).csv(d2)
-    r1 = (
-        spark.read.option("header", True)
-        .schema("o_orderkey bigint, o_totalprice double, o_orderstatus string")
-        .csv(d1)
-    )
-    r2 = (
-        spark.read.option("header", True)
-        .schema(
-            "o_totalprice double, o_orderstatus string, o_orderkey bigint"
-        )
-        .csv(d2)
-    )
-    merged = r1.unionByName(r2)
-    return merged.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum("o_orderkey").cast("bigint").alias("key_sum"),
-        F.round(
-            F.sum(F.col("o_totalprice").cast("decimal(38,2)")), 2
-        )
-        .cast("double")
-        .alias("price_sum"),
-    )
-
-
-# ===========================================================================
 # wave module round6f (formerly operators/round6f.py)
 # Round-5 thirty-second wave (SURVEY.md §2.Q, continued): NULL ordering
-# semantics and the contiguous-prefix resume watermark.
+# semantics.
 # ===========================================================================
 
 
@@ -456,89 +207,6 @@ def sort_null_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "pipeline_resume_watermark",
-    oracle="""
-WITH applied AS (
-  -- batch ledger with an injected failure: every batch id whose
-  -- residue is 3 mod 7 never landed
-  SELECT DISTINCT o_orderkey % 500 AS batch_id FROM orders
-  WHERE (o_orderkey % 500) % 7 <> 3
-),
-bounds AS (
-  SELECT max(batch_id) AS max_applied, count(*) AS n_applied FROM applied
-),
-first_gap AS (
-  SELECT min(batch_id + 1) AS gap_start
-  FROM applied a
-  WHERE NOT EXISTS (SELECT 1 FROM applied b WHERE b.batch_id = a.batch_id + 1)
-)
-SELECT n_applied,
-       CAST(max_applied AS BIGINT) AS max_applied,
-       CAST(CASE WHEN EXISTS (SELECT 1 FROM applied WHERE batch_id = 0)
-                 THEN coalesce((SELECT gap_start - 1 FROM first_gap),
-                               max_applied)
-                 ELSE -1 END AS BIGINT) AS resume_watermark,
-       CAST(max_applied - CASE WHEN EXISTS
-              (SELECT 1 FROM applied WHERE batch_id = 0)
-              THEN coalesce((SELECT gap_start - 1 FROM first_gap),
-                            max_applied)
-              ELSE -1 END AS BIGINT) AS batches_beyond_watermark
-FROM bounds
-""",
-)
-def pipeline_resume_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contiguous-prefix resume watermark: from a batch ledger with
-    gaps (injected: every id ≡ 3 mod 7 failed to land), compute the
-    HIGH watermark — the largest n such that batches 0..n ALL applied —
-    which is where a safe reprocessing resumes; max_applied alone
-    over-promises because completed batches beyond the first gap still
-    need their predecessors replayed (the Kafka/offset-commit
-    distinction between max seen and max contiguous). First gap found
-    via the successor anti-join over the DISTINCT batch relation —
-    bounded by batch count, no ordered window at all."""
-    o = Tables(spark, sf_dir).orders
-    applied = (
-        o.select((F.col("o_orderkey") % 500).alias("batch_id"))
-        .filter((F.col("batch_id") % 7) != 3)
-        .distinct()
-        .transform(op_cache)  # feeds bounds, successor anti-join, and the zero probe
-    )
-    succ = applied.select((F.col("batch_id") + 1).alias("batch_id"))
-    first_gap = (
-        applied.select((F.col("batch_id") + 1).alias("cand"))
-        .join(
-            applied.select(F.col("batch_id").alias("cand")),
-            "cand",
-            "left_anti",
-        )
-        .agg(F.min("cand").alias("gap_start"))
-    )
-    bounds = applied.agg(
-        F.max("batch_id").alias("max_applied"),
-        F.count(F.lit(1)).alias("n_applied"),
-    )
-    has_zero = applied.filter(F.col("batch_id") == 0).agg(
-        F.count(F.lit(1)).alias("z")
-    )
-    j = (
-        bounds.crossJoin(F.broadcast(first_gap))
-        .crossJoin(F.broadcast(has_zero))
-    )
-    watermark = F.when(
-        F.col("z") > 0,
-        F.coalesce(F.col("gap_start") - 1, F.col("max_applied")),
-    ).otherwise(F.lit(-1))
-    return j.select(
-        "n_applied",
-        F.col("max_applied").cast("bigint").alias("max_applied"),
-        watermark.cast("bigint").alias("resume_watermark"),
-        (F.col("max_applied") - watermark)
-        .cast("bigint")
-        .alias("batches_beyond_watermark"),
-    )
-
-
 # ===========================================================================
 # wave module round6g (formerly operators/round6g.py)
 # Round-5 thirty-third wave (SURVEY.md §2.Q, continued): weighted
@@ -605,7 +273,7 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # wave module round6h (formerly operators/round6h.py)
 # Round-5 thirty-fourth wave (SURVEY.md §2.Q, continued): weighted
-# PageRank over the nation trade graph and contingency-cell residuals.
+# PageRank over the nation trade graph.
 # ===========================================================================
 
 
@@ -752,60 +420,6 @@ def graph_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "quality_contingency_residuals",
-    oracle="""
-WITH obs AS (
-  SELECT o_orderstatus AS st, o_orderpriority AS pr,
-         CAST(count(*) AS DOUBLE) AS o
-  FROM orders GROUP BY 1, 2
-),
-m AS (
-  SELECT st, pr, o,
-         sum(o) OVER (PARTITION BY st) AS rt,
-         sum(o) OVER (PARTITION BY pr) AS ct,
-         sum(o) OVER () AS n
-  FROM obs
-)
-SELECT st AS orderstatus, pr AS orderpriority,
-       CAST(o AS BIGINT) AS observed,
-       round(rt * ct / n, 6) AS expected,
-       round((o - rt * ct / n) / sqrt(rt * ct / n), 6) AS std_residual
-FROM m
-""",
-)
-def quality_contingency_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-cell standardized Pearson residuals (O−E)/√E of the
-    status × priority contingency table — the drill-down companion to
-    agg_chi_square_independence's single statistic: WHICH cells are
-    over/under-represented, not just whether independence fails.
-    |residual| > 2 flags a cell. All margins are window sums over the
-    statuses×priorities-sized aggregate (counts are integers, so the
-    double margin sums are exact in any order); cells with zero
-    observed count are omitted identically on both sides."""
-    t = Tables(spark, sf_dir)
-    obs = t.orders.groupBy(
-        F.col("o_orderstatus").alias("st"),
-        F.col("o_orderpriority").alias("pr"),
-    ).agg(F.count(F.lit(1)).cast("double").alias("o"))
-    m = obs.select(
-        "st",
-        "pr",
-        "o",
-        F.sum("o").over(Window.partitionBy("st")).alias("rt"),
-        F.sum("o").over(Window.partitionBy("pr")).alias("ct"),
-        F.sum("o").over(Window.partitionBy()).alias("n"),
-    )
-    e = F.col("rt") * F.col("ct") / F.col("n")
-    return m.select(
-        F.col("st").alias("orderstatus"),
-        F.col("pr").alias("orderpriority"),
-        F.col("o").cast("bigint").alias("observed"),
-        F.round(e, 6).alias("expected"),
-        F.round((F.col("o") - e) / F.sqrt(e), 6).alias("std_residual"),
-    )
-
-
 # ===========================================================================
 # wave module round6i (formerly operators/round6i.py)
 # Round-5 thirty-fifth wave (SURVEY.md §2.Q, continued): Theil
@@ -915,97 +529,6 @@ def agg_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             "contrib_within"
         ),
         F.round("between_term", 6).alias("between_term"),
-    )
-
-
-# ===========================================================================
-# wave module round6j (formerly operators/round6j.py)
-# Round-5 thirty-sixth wave (SURVEY.md §2.Q, continued):
-# content-defined chunking dedup and categorical-column entropy
-# profiling.
-# ===========================================================================
-
-
-@register(
-    "quality_column_entropy_profile",
-    oracle="""
-WITH vals AS (
-  SELECT 'o_orderstatus' AS column_name, o_orderstatus AS v FROM orders
-  UNION ALL
-  SELECT 'o_orderpriority', o_orderpriority FROM orders
-  UNION ALL
-  SELECT 'order_month', CAST(date_trunc('month', o_orderdate) AS VARCHAR)
-  FROM orders
-),
-cnt AS (
-  SELECT column_name, v, count(*) AS c FROM vals GROUP BY 1, 2
-),
-prob AS (
-  SELECT column_name, c,
-         CAST(c AS DOUBLE)
-           / CAST(sum(c) OVER (PARTITION BY column_name) AS DOUBLE) AS p
-  FROM cnt
-)
-SELECT column_name,
-       CAST(count(*) AS BIGINT) AS n_distinct,
-       round(-sum(p * ln(p)), 6) AS entropy,
-       CASE WHEN count(*) = 1 THEN NULL
-            ELSE round(-sum(p * ln(p)) / ln(count(*)), 6)
-       END AS norm_entropy
-FROM prob GROUP BY column_name
-""",
-)
-def quality_column_entropy_profile(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Categorical-column entropy profile of orders: Shannon entropy
-    and its ln(k)-normalized form for status, priority, and order
-    month — the 'how identifier-like vs how constant is this column'
-    signal that quality_profile's null/distinct counts miss (norm ≈ 1:
-    uniform/high-cardinality; ≈ 0: near-constant). One stacked pass
-    (three unpivoted value relations union'd before a single groupBy),
-    probabilities as exact integer-count ratios over the
-    values-per-column-sized aggregate, entropy summed over ≤ k terms."""
-    o = Tables(spark, sf_dir).orders
-    vals = (
-        o.select(
-            F.lit("o_orderstatus").alias("column_name"),
-            F.col("o_orderstatus").alias("v"),
-        )
-        .unionAll(
-            o.select(
-                F.lit("o_orderpriority").alias("column_name"),
-                F.col("o_orderpriority").alias("v"),
-            )
-        )
-        .unionAll(
-            o.select(
-                F.lit("order_month").alias("column_name"),
-                F.date_trunc("month", "o_orderdate")
-                .cast("string")
-                .alias("v"),
-            )
-        )
-    )
-    cnt = vals.groupBy("column_name", "v").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    prob = cnt.select(
-        "column_name",
-        (
-            F.col("c").cast("double")
-            / F.sum("c")
-            .over(Window.partitionBy("column_name"))
-            .cast("double")
-        ).alias("p"),
-    )
-    ent = -F.sum(F.col("p") * F.log(F.col("p")))
-    return prob.groupBy("column_name").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_distinct"),
-        F.round(ent, 6).alias("entropy"),
-        F.when(F.count(F.lit(1)) == 1, F.lit(None).cast("double"))
-        .otherwise(F.round(ent / F.log(F.count(F.lit(1)).cast("double")), 6))
-        .alias("norm_entropy"),
     )
 
 
@@ -1141,9 +664,8 @@ def agg_bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # wave module round6l (formerly operators/round6l.py)
-# Round-5 thirty-eighth wave (SURVEY.md §2.Q, continued): embedding
-# prefix-energy (Matryoshka truncation) analysis and a three-strategy
-# join-equivalence proof.
+# Round-5 thirty-eighth wave (SURVEY.md §2.Q, continued): a
+# three-strategy join-equivalence proof.
 # ===========================================================================
 
 
@@ -1201,8 +723,7 @@ def join_strategy_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # wave module round6m (formerly operators/round6m.py)
 # Round-5 thirty-ninth wave (SURVEY.md §2.Q, continued): epsilon
-# similarity join on scalars without a cartesian and dynamic partition
-# overwrite semantics.
+# similarity join on scalars without a cartesian.
 # ===========================================================================
 
 _EPS = 5.0
@@ -1256,130 +777,6 @@ def join_epsilon_float(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy(F.col("n_name").alias("nation"))
         .agg(F.count(F.lit(1)).alias("n_pairs"))
-    )
-
-
-@register(
-    "sink_dynamic_partition_overwrite",
-    oracle="""
-WITH d AS (
-  SELECT CAST(ts AS DATE) AS day, event_type FROM events
-),
-incoming_days AS (
-  -- dynamic overwrite replaces ONLY partitions PRESENT in the incoming
-  -- frame: a pre-cutoff day with zero clicks sends no incoming rows, so
-  -- its partition — non-clicks and all — SURVIVES. The epoch tier's
-  -- sparse 1920s days made this matter (the old formula assumed every
-  -- pre-cutoff day contains a click, which the dense clean corpus
-  -- happened to satisfy).
-  SELECT DISTINCT day FROM d
-  WHERE day <= DATE '2024-01-05' AND event_type = 'click'
-    AND day IS NOT NULL
-),
-replaced AS (
-  SELECT count(*) AS c FROM d
-  WHERE day IN (SELECT day FROM incoming_days) AND event_type = 'click'
-),
-pre_survivor AS (
-  -- pre-cutoff partitions absent from the incoming frame keep ALL rows
-  SELECT count(*) AS c FROM d
-  WHERE day <= DATE '2024-01-05'
-    AND day NOT IN (SELECT day FROM incoming_days)
-),
-untouched AS (
-  -- the NULL-day partition (hive default dir) is a real partition the
-  -- dynamic overwrite leaves untouched — it survives in the target
-  SELECT count(*) AS c FROM d
-  WHERE day > DATE '2024-01-05' OR day IS NULL
-)
-SELECT 'rows_after' AS metric,
-       (SELECT c FROM replaced) + (SELECT c FROM pre_survivor)
-         + (SELECT c FROM untouched) AS value
-UNION ALL
-SELECT 'days_present', (SELECT count(DISTINCT day) FROM d)
-UNION ALL
-SELECT 'touched_day_rows',
-       (SELECT c FROM replaced) + (SELECT c FROM pre_survivor)
-UNION ALL
-SELECT 'untouched_day_rows', (SELECT c FROM untouched)
-""",
-)
-def sink_dynamic_partition_overwrite(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """DYNAMIC partition-overwrite semantics, the incremental-reload
-    contract sink_write_modes's whole-table modes can't express:
-    overwrite mode with partitionOverwriteMode=dynamic replaces ONLY
-    the partitions present in the incoming frame (here: days ≤ Jan 5,
-    clicks only) and leaves every other day's files untouched — under
-    the default static mode the same write would TRUNCATE the table to
-    5 days. The op lands the full day-partitioned table, re-writes the
-    filtered slice, then audits the target: total rows, surviving day
-    partitions, rows inside vs outside the touched days. The session
-    conf is restored in a finally block; expectations on the oracle
-    side derive from the same events relation."""
-    e = Tables(spark, sf_dir).events
-    day = F.col("ts").cast("date").alias("day")
-    base = e.select("event_id", "event_type", day)
-    # Cluster rows by day before each partitionBy("day") write (guide §6):
-    # unclustered, EVERY shuffle task writes a file into every day dir it
-    # holds rows for (tasks x days small files; measured 480 files for 30
-    # days at sf0.1), and the audit scan then pays the per-file open cost
-    # over all of them. A deterministic salt (xxhash64, not rand - retried
-    # map tasks must re-draw the same value, guide §2.5) bounds how many
-    # tasks share one day so a giant day cannot serialize into a single
-    # writer at scale: ~one writer per 512 MiB of table bytes, 1 locally.
-    _wpd = 1 + table_bytes(
-        sf_dir, "events", cap=1024 * 512 * 2**20
-    ) // (512 * 2**20)
-    writers = int(min(1024, _wpd))
-    cluster = lambda df: df.repartition(  # noqa: E731
-        F.col("day"), F.pmod(F.xxhash64("event_id"), F.lit(writers))
-    )
-    target = op_tmpdir("sink_dpo_")
-    cluster(base).write.mode("overwrite").partitionBy("day").parquet(
-        target
-    )
-    prev = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    try:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        cluster(
-            base.where(
-                (F.col("day") <= F.lit("2024-01-05").cast("date"))
-                & (F.col("event_type") == "click")
-            )
-        ).write.mode("overwrite").partitionBy("day").parquet(target)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    # explicit schema: an empty corpus writes zero partition dirs and
-    # schema inference has nothing to read (the ingest_incremental rule)
-    got = spark.read.schema(
-        "event_id bigint, event_type string, day date"
-    ).parquet(target)
-    cutoff = F.lit("2024-01-05").cast("date")
-    audit = got.agg(
-        F.count(F.lit(1)).alias("rows_after"),
-        F.countDistinct("day").alias("days_present"),
-        F.count(F.when(F.col("day") <= cutoff, 1)).alias(
-            "touched_day_rows"
-        ),
-        # the NULL-day partition is untouched by the overwrite (the
-        # incoming slice has no NULL day) — count it on that side
-        F.count(
-            F.when((F.col("day") > cutoff) | F.col("day").isNull(), 1)
-        ).alias("untouched_day_rows"),
-    )
-    return audit.select(
-        F.expr(
-            "stack(4, 'rows_after', rows_after,"
-            " 'days_present', CAST(days_present AS BIGINT),"
-            " 'touched_day_rows', touched_day_rows,"
-            " 'untouched_day_rows', untouched_day_rows) AS (metric, value)"
-        )
     )
 
 
@@ -1606,61 +1003,6 @@ def agg_stratified_estimator_variance(
         F.round(F.sqrt(var_srs), 6).alias("se_srs"),
         F.round(var_strat / var_srs, 6).alias("design_effect"),
     )
-
-
-# ===========================================================================
-# wave module round6p (formerly operators/round6p.py)
-# Round-5 forty-second wave (SURVEY.md §2.Q, continued):
-# product-quantization reconstruction error and compressed-CSV
-# round-trip interop.
-# ===========================================================================
-
-
-@register(
-    "sink_csv_gzip_roundtrip",
-    oracle="""
-SELECT 'gzip' AS codec, count(*) AS n,
-       CAST(sum(o_orderkey) AS BIGINT) AS key_sum FROM orders
-UNION ALL
-SELECT 'bzip2', count(*), CAST(sum(o_orderkey) AS BIGINT) FROM orders
-UNION ALL
-SELECT 'uncompressed', count(*), CAST(sum(o_orderkey) AS BIGINT)
-FROM orders
-""",
-)
-def sink_csv_gzip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compressed-TEXT sink interop (the CSV sibling of
-    sink_parquet_codecs): the same relation written as gzip'd,
-    bzip2'd, and plain CSV, each re-read with an explicit schema and
-    checksummed. The operational point at scale: gzip CSV files are
-    NOT splittable — one file is one task on read, so landing
-    compressed text must control file count at write time (bzip2 IS
-    block-splittable, the reason it survives in ingest paths despite
-    its CPU cost). Exchange-format round-trips stay part of the sink
-    contract because upstream producers ship compressed text, not
-    parquet."""
-    o = Tables(spark, sf_dir).orders.select("o_orderkey", "o_orderstatus")
-    out = None
-    for codec in ["gzip", "bzip2", "uncompressed"]:
-        path = op_tmpdir(f"sink_csv_{codec}_")
-        (
-            o.write.mode("overwrite")
-            .option("compression", codec)
-            .option("header", "true")
-            .csv(path)
-        )
-        back = (
-            spark.read.schema("o_orderkey bigint, o_orderstatus string")
-            .option("header", "true")
-            .csv(path)
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("o_orderkey").cast("bigint").alias("key_sum"),
-            )
-            .select(F.lit(codec).alias("codec"), "n", "key_sum")
-        )
-        out = back if out is None else out.unionByName(back)
-    return out
 
 
 # ===========================================================================
@@ -1963,87 +1305,9 @@ def agg_cube_margin_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # wave module round6t (formerly operators/round6t.py)
-# Round-5 forty-sixth wave (SURVEY.md §2.Q, continued):
-# functional-dependency discovery and a temporal coverage inventory.
+# Round-5 forty-sixth wave (SURVEY.md §2.Q, continued): a temporal
+# coverage inventory.
 # ===========================================================================
-
-@register(
-    "quality_fd_discovery",
-    oracle="""
-WITH pairs AS (
-  SELECT 'l_returnflag->l_linestatus' AS candidate,
-         l_returnflag AS det, l_linestatus AS dep
-  FROM lineitem
-  UNION ALL
-  SELECT 'o_orderstatus->o_orderpriority',
-         o_orderstatus, o_orderpriority
-  FROM orders
-  UNION ALL
-  SELECT 'c_mktsegment->c_nationkey',
-         c_mktsegment, CAST(c_nationkey AS VARCHAR)
-  FROM customer
-),
-cells AS (
-  SELECT candidate, det, dep, count(*) AS c
-  FROM pairs GROUP BY candidate, det, dep
-),
-per_det AS (
-  SELECT candidate, det, sum(c) AS total, max(c) AS maxc
-  FROM cells GROUP BY candidate, det
-)
-SELECT candidate,
-       count(*) AS n_determinant_values,
-       CAST(sum(total - maxc) AS BIGINT) AS violation_rows,
-       sum(total - maxc) = 0 AS fd_holds
-FROM per_det GROUP BY candidate
-""",
-)
-def quality_fd_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Functional-dependency discovery (the TANE-style g₃ error
-    measure, Huhtala 1999): for each candidate A→B, the minimum number
-    of rows to delete for the dependency to hold — Σ over A-groups of
-    (group size − modal B count). Zero = the FD holds exactly;
-    large = the columns are independent — the profiling signal that
-    finds hidden keys and denormalization-safe column pairs, which
-    quality_profile's per-column stats cannot see (it is a PAIR
-    property). Three stacked candidates in one pass; both aggregates
-    are partial-aggregable and the per-determinant relation is
-    value-bounded."""
-    t = Tables(spark, sf_dir)
-    pairs = (
-        t.lineitem.select(
-            F.lit("l_returnflag->l_linestatus").alias("candidate"),
-            F.col("l_returnflag").alias("det"),
-            F.col("l_linestatus").alias("dep"),
-        )
-        .unionAll(
-            t.orders.select(
-                F.lit("o_orderstatus->o_orderpriority").alias("candidate"),
-                F.col("o_orderstatus").alias("det"),
-                F.col("o_orderpriority").alias("dep"),
-            )
-        )
-        .unionAll(
-            t.customer.select(
-                F.lit("c_mktsegment->c_nationkey").alias("candidate"),
-                F.col("c_mktsegment").alias("det"),
-                F.col("c_nationkey").cast("string").alias("dep"),
-            )
-        )
-    )
-    cells = pairs.groupBy("candidate", "det", "dep").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    per_det = cells.groupBy("candidate", "det").agg(
-        F.sum("c").alias("total"), F.max("c").alias("maxc")
-    )
-    return per_det.groupBy("candidate").agg(
-        F.count(F.lit(1)).alias("n_determinant_values"),
-        F.sum(F.col("total") - F.col("maxc"))
-        .cast("bigint")
-        .alias("violation_rows"),
-        (F.sum(F.col("total") - F.col("maxc")) == 0).alias("fd_holds"),
-    )
 
 
 @register(
@@ -2100,183 +1364,6 @@ def catalog_temporal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         one("orders", t.orders, "o_orderdate")
         .unionByName(one("lineitem", t.lineitem, "l_shipdate"))
         .unionByName(one("events", t.events, "ts"))
-    )
-
-
-# ===========================================================================
-# wave module round6u (formerly operators/round6u.py)
-# Round-5 forty-seventh wave (SURVEY.md §2.Q, continued): column-level
-# change-data-capture breakdown.
-# ===========================================================================
-
-
-@register(
-    "pipeline_cdc_column_breakdown",
-    oracle="""
-WITH v2 AS (
-  SELECT o_orderkey,
-         CASE WHEN o_orderkey % 7 = 0
-              THEN round(o_totalprice * 1.1, 2) ELSE o_totalprice END
-           AS o_totalprice,
-         CASE WHEN o_orderkey % 11 = 0
-              THEN '1-URGENT' ELSE o_orderpriority END AS o_orderpriority,
-         o_orderstatus
-  FROM orders
-),
-diff AS (
-  SELECT CASE WHEN v2.o_totalprice <> o.o_totalprice THEN 1 ELSE 0 END
-           AS price_chg,
-         CASE WHEN v2.o_orderpriority <> o.o_orderpriority THEN 1 ELSE 0 END
-           AS prio_chg,
-         CASE WHEN v2.o_orderstatus <> o.o_orderstatus THEN 1 ELSE 0 END
-           AS status_chg
-  FROM orders o JOIN v2 ON o.o_orderkey = v2.o_orderkey
-)
-SELECT col AS column_name, CAST(n AS BIGINT) AS n_rows_changed
-FROM (
-  SELECT 'o_totalprice' AS col, sum(price_chg) AS n FROM diff
-  UNION ALL
-  SELECT 'o_orderpriority', sum(prio_chg) FROM diff
-  UNION ALL
-  SELECT 'o_orderstatus', sum(status_chg) FROM diff
-)
-""",
-)
-def pipeline_cdc_column_breakdown(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """COLUMN-level CDC drill-down: which columns actually changed
-    between two snapshot versions, counted per column — the question
-    pipeline_cdc_diff's row-level insert/update/delete classes leave
-    open (an 'update' that only touched a derived price column is
-    handled very differently from one that flipped priority). The v2
-    snapshot derives deterministically from orders (every 7th key's
-    price bumped, every 11th's priority forced urgent); the diff is
-    one keyed self-join and all three per-column counts come from one
-    conditional-aggregate pass — adding a column adds an expression,
-    never a scan."""
-    o = Tables(spark, sf_dir).orders
-    v2 = o.select(
-        F.col("o_orderkey").alias("k2"),
-        F.when(
-            F.col("o_orderkey") % 7 == 0,
-            F.round(F.col("o_totalprice") * 1.1, 2),
-        )
-        .otherwise(F.col("o_totalprice"))
-        .alias("p2"),
-        F.when(F.col("o_orderkey") % 11 == 0, "1-URGENT")
-        .otherwise(F.col("o_orderpriority"))
-        .alias("pr2"),
-        F.col("o_orderstatus").alias("st2"),
-    )
-    diff = o.join(v2, F.col("o_orderkey") == F.col("k2")).select(
-        F.when(F.col("p2") != F.col("o_totalprice"), 1)
-        .otherwise(0)
-        .alias("price_chg"),
-        F.when(F.col("pr2") != F.col("o_orderpriority"), 1)
-        .otherwise(0)
-        .alias("prio_chg"),
-        F.when(F.col("st2") != F.col("o_orderstatus"), 1)
-        .otherwise(0)
-        .alias("status_chg"),
-    )
-    agg = diff.agg(
-        F.sum("price_chg").alias("o_totalprice"),
-        F.sum("prio_chg").alias("o_orderpriority"),
-        F.sum("status_chg").alias("o_orderstatus"),
-    )
-    return agg.select(
-        F.expr(
-            "stack(3, 'o_totalprice', o_totalprice,"
-            " 'o_orderpriority', o_orderpriority,"
-            " 'o_orderstatus', o_orderstatus) AS (column_name, n)"
-        )
-    ).select(
-        "column_name", F.col("n").cast("bigint").alias("n_rows_changed")
-    )
-
-
-# ===========================================================================
-# wave module round6v (formerly operators/round6v.py)
-# Round-5 forty-eighth wave (SURVEY.md §2.Q, continued): portable
-# order-independent table-content fingerprints.
-# ===========================================================================
-
-# Canonical row text per table: every column rendered through a type
-# whose string form is engine-identical (ints, strings, DECIMAL(38,2),
-# DATE) — raw doubles are excluded because CAST(double AS STRING)
-# formatting diverges across engines.
-_ORDERS_CANON_SQL = (
-    "CAST(o_orderkey AS VARCHAR) || '|' || CAST(o_custkey AS VARCHAR)"
-    " || '|' || o_orderstatus || '|' ||"
-    " CAST(CAST(o_totalprice AS DECIMAL(38,2)) AS VARCHAR) || '|' ||"
-    " CAST(CAST(o_orderdate AS DATE) AS VARCHAR) || '|' ||"
-    " o_orderpriority"
-)
-_CUSTOMER_CANON_SQL = (
-    "CAST(c_custkey AS VARCHAR) || '|' || c_name || '|' ||"
-    " CAST(c_nationkey AS VARCHAR) || '|' ||"
-    " CAST(CAST(c_acctbal AS DECIMAL(38,2)) AS VARCHAR) || '|' ||"
-    " c_mktsegment"
-)
-
-
-@register(
-    "quality_table_fingerprint",
-    oracle=f"""
-SELECT 'orders' AS table_name, count(*) AS n_rows,
-       CAST(sum(CAST({hash60_sql(f"({_ORDERS_CANON_SQL})")} AS DECIMAL(38,0)))
-            AS VARCHAR) AS content_fingerprint
-FROM orders
-UNION ALL
-SELECT 'customer', count(*),
-       CAST(sum(CAST({hash60_sql(f"({_CUSTOMER_CANON_SQL})")} AS DECIMAL(38,0)))
-            AS VARCHAR)
-FROM customer
-""",
-)
-def quality_table_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order-independent table-CONTENT fingerprint: md5-derived 60-bit
-    row hashes over a canonical column rendering, summed in
-    DECIMAL(38,0) — two replicas of a table match iff their
-    fingerprints match, regardless of row order, partitioning, or file
-    layout (the replication/migration audit that row counts alone
-    can't give; pipeline_shard_manifest fingerprints FILES, this
-    fingerprints CONTENT). The canonical rendering casts every column
-    through engine-identical string forms — ints, DECIMAL(38,2), DATE
-    — because raw double formatting diverges across engines. Sum (not
-    xor) keeps the aggregate partial-aggregable AND sensitive to
-    duplicate-row multiplicity; DECIMAL(38,0) absorbs the 60-bit ×
-    corpus-count growth that overflows BIGINT. One scan per table,
-    1-row output each."""
-    t = Tables(spark, sf_dir)
-    spark_orders_canon = (
-        "CAST(o_orderkey AS STRING) || '|' || CAST(o_custkey AS STRING)"
-        " || '|' || o_orderstatus || '|' ||"
-        " CAST(CAST(o_totalprice AS DECIMAL(38,2)) AS STRING) || '|' ||"
-        " CAST(CAST(o_orderdate AS DATE) AS STRING) || '|' ||"
-        " o_orderpriority"
-    )
-    spark_customer_canon = (
-        "CAST(c_custkey AS STRING) || '|' || c_name || '|' ||"
-        " CAST(c_nationkey AS STRING) || '|' ||"
-        " CAST(CAST(c_acctbal AS DECIMAL(38,2)) AS STRING) || '|' ||"
-        " c_mktsegment"
-    )
-
-    def fp(name: str, df: DataFrame, canon: str) -> DataFrame:
-        h = F.expr(hash60_expr(f"({canon})")).cast("decimal(38,0)")
-        return df.agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(h).cast("string").alias("content_fingerprint"),
-        ).select(
-            F.lit(name).alias("table_name"),
-            "n_rows",
-            "content_fingerprint",
-        )
-
-    return fp("orders", t.orders, spark_orders_canon).unionByName(
-        fp("customer", t.customer, spark_customer_canon)
     )
 
 
@@ -2558,180 +1645,9 @@ def fn_aes_encrypt_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # wave module round6x (formerly operators/round6x.py)
-# Round-6 fiftieth wave (SURVEY.md §2.R): lakehouse file-layout and
-# semi-structured-URL/XML surface — distributed parquet footer audits,
-# Morton (z-order) layout planning, co-purchase degree distributions, and
-# the parse_url / xpath scalar families.
+# Round-6 fiftieth wave (SURVEY.md §2.R): co-purchase degree
+# distributions and the parse_url / xpath scalar families.
 # ===========================================================================
-
-@register(
-    "scan_parquet_footer_audit",
-    oracle="""
-SELECT o_orderpriority AS priority, 1 AS n_files, 1 AS n_row_groups,
-       count(*) AS footer_rows, count(*) AS source_rows
-FROM orders GROUP BY 1
-""",
-)
-def scan_parquet_footer_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed parquet FOOTER audit of a written lake: orders are
-    sunk partitionBy(priority) (one file per partition at test SF), then
-    the audit ships the file LIST — not file contents — to executors and
-    each mapInPandas batch opens only the ~KB footer via pyarrow
-    (`pq.ParquetFile(path).metadata`), emitting per-file row-group count
-    and footer row totals. Footer totals are then reconciled against the
-    source relation per partition (footer_rows must equal source_rows —
-    the invariant a migration/compaction job checks before swapping a
-    table pointer). At 100 TB the file list is what the planner already
-    holds; footer reads are O(files) tiny range requests fanned across
-    executors instead of a driver loop. Oracle: expected layout (1 file /
-    1 row group per partition at test SF — orders are far under the 128 MB
-    row-group default) + source counts."""
-    t = Tables(spark, sf_dir)
-    out = op_tmpdir("footer_audit_")
-    (
-        t.orders.repartition("o_orderpriority")
-        .write.mode("overwrite")
-        .partitionBy("o_orderpriority")
-        .parquet(out)
-    )
-    # NULL priorities land in the hive default-partition directory; decode
-    # it back to NULL so the audit reconciles against the source's NULL
-    # group instead of silently dropping that partition
-    _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
-    files = [
-        (None if raw == _HIVE_NULL else raw, p)
-        for p in glob.glob(os.path.join(out, "o_orderpriority=*", "*.parquet"))
-        for raw in [p.split("o_orderpriority=")[1].split("/")[0]]
-    ]
-    paths = spark.createDataFrame(files, "priority string, path string").repartition(
-        8, "path"
-    )
-
-    def audit_footers(batches):
-        import pandas as pd
-        import pyarrow.parquet as pq
-
-        for b in batches:
-            rows = []
-            for prio, p in zip(b["priority"], b["path"]):
-                md = pq.ParquetFile(p).metadata  # footer-only read
-                rows.append((prio, md.num_row_groups, md.num_rows))
-            yield pd.DataFrame(
-                rows, columns=["priority", "n_row_groups", "footer_rows"]
-            )
-
-    footer = paths.mapInPandas(
-        audit_footers, "priority string, n_row_groups int, footer_rows long"
-    )
-    per_part = footer.groupBy("priority").agg(
-        F.count(F.lit(1)).cast("int").alias("n_files"),
-        F.sum("n_row_groups").cast("int").alias("n_row_groups"),
-        F.sum("footer_rows").alias("footer_rows"),
-    )
-    source = t.orders.groupBy(F.col("o_orderpriority").alias("priority")).agg(
-        F.count(F.lit(1)).alias("source_rows")
-    )
-    # eqNullSafe: the NULL-priority partition must reconcile, not vanish
-    return per_part.join(
-        source, per_part["priority"].eqNullSafe(source["priority"])
-    ).select(
-        per_part["priority"],
-        "n_files",
-        "n_row_groups",
-        "footer_rows",
-        "source_rows",
-    )
-
-
-def _morton_sql(x: str, y: str, bits: int, dialect: str) -> str:
-    """Bit-interleaved Morton code spelled in portable integer arithmetic
-    (bit i of v == (v div 2^i) mod 2), identical on both engines."""
-    parts = []
-    for i in range(bits):
-        if dialect == "duck":
-            parts.append(f"((({x} // {2 ** i}) % 2) * {2 ** (2 * i)})")
-            parts.append(f"((({y} // {2 ** i}) % 2) * {2 ** (2 * i + 1)})")
-        else:
-            parts.append(
-                f"(CAST(({x} div {2 ** i}) % 2 AS BIGINT) * {2 ** (2 * i)})"
-            )
-            parts.append(
-                f"(CAST(({y} div {2 ** i}) % 2 AS BIGINT) * {2 ** (2 * i + 1)})"
-            )
-    return " + ".join(parts)
-
-
-def _zorder_sql(dialect: str) -> str:
-    m = _morton_sql("xd", "yd", 6, dialect)
-    doy = (
-        "CAST(strftime(o_orderdate, '%j') AS INTEGER)"
-        if dialect == "duck"
-        else "CAST(date_format(o_orderdate, 'D') AS INT)"
-    )
-    div = "//" if dialect == "duck" else "div"
-    return f"""
-WITH base AS (
-  SELECT o_orderkey, CAST(o_custkey % 64 AS BIGINT) AS xd,
-         CAST({doy} % 64 AS BIGINT) AS yd
-  FROM orders),
-keyed AS (
-  SELECT xd, yd,
-         ({m}) {div} 128 AS zbkt,
-         yd {div} 2 AS lbkt
-  FROM base),
-zstats AS (SELECT zbkt AS bkt, min(xd) AS xmin, max(xd) AS xmax,
-                  min(yd) AS ymin, max(yd) AS ymax FROM keyed GROUP BY 1),
-lstats AS (SELECT lbkt AS bkt, min(xd) AS xmin, max(xd) AS xmax,
-                  min(yd) AS ymin, max(yd) AS ymax FROM keyed GROUP BY 1),
-probes AS (SELECT DISTINCT xd AS v FROM base),
-probesy AS (SELECT DISTINCT yd AS v FROM base)
-SELECT 'zorder' AS layout, 'x' AS probe_dim,
-       CAST(round(avg(CASE WHEN p.v < s.xmin OR p.v > s.xmax
-                      THEN 1.0 ELSE 0.0 END), 4) AS DOUBLE) AS prunable_frac
-FROM probes p CROSS JOIN zstats s
-UNION ALL
-SELECT 'zorder', 'y',
-       CAST(round(avg(CASE WHEN p.v < s.ymin OR p.v > s.ymax
-                      THEN 1.0 ELSE 0.0 END), 4) AS DOUBLE)
-FROM probesy p CROSS JOIN zstats s
-UNION ALL
-SELECT 'linear_y', 'x',
-       CAST(round(avg(CASE WHEN p.v < s.xmin OR p.v > s.xmax
-                      THEN 1.0 ELSE 0.0 END), 4) AS DOUBLE)
-FROM probes p CROSS JOIN lstats s
-UNION ALL
-SELECT 'linear_y', 'y',
-       CAST(round(avg(CASE WHEN p.v < s.ymin OR p.v > s.ymax
-                      THEN 1.0 ELSE 0.0 END), 4) AS DOUBLE)
-FROM probesy p CROSS JOIN lstats s
-"""
-
-
-sql_op(
-    "pipeline_zorder_layout_plan",
-    spark_sql=_zorder_sql("spark"),
-    oracle=_zorder_sql("duck"),
-    doc="""Z-order layout planning: quantifies min/max data-skipping
-    effectiveness of a Morton-interleaved sort vs a linear sort BEFORE
-    rewriting a 100 TB table. Rows get a 12-bit Morton code over
-    (custkey%64, dayofyear%64) — spelled in portable div/mod arithmetic,
-    JVM-side — then FIXED morton-value ranges (morton div 128 -> 32
-    quadtree blocks; yd div 2 for the linear candidate) simulate the
-    files of each layout. Value-range bucketing deliberately replaces the
-    first draft's ntile(32): an equal-count ntile needs a GLOBAL
-    single-partition window sort — the scale defect this planner exists
-    to avoid — while value ranges make the whole query two
-    partial-aggregable groupBys + bounded cross joins (32 zone-map rows x
-    <=64 probe values); the real writer gets equal file sizes from
-    repartitionByRange over the same morton key. Per-file min/max zone
-    maps are evaluated against every probe value per dimension = fraction
-    of files a point predicate prunes. Measured at sf0.1: linear-by-day
-    prunes 97% for day probes but ~0% for customer probes; z-order prunes
-    75% / 87.5% for x / y — the multi-dimension justification for a
-    z-order rewrite, at the cost of an aggregation instead of a table
-    rewrite. Oracle: DuckDB runs the same statement modulo dialect
-    (// vs div, strftime vs date_format).""",
-)
 
 
 @register(

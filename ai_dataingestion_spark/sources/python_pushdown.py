@@ -1,8 +1,8 @@
 """§2.AD round-14 block: Python data source filter pushdown (Spark 4.1,
 `DataSourceReader.pushFilters`).
 
-round7_waves.py's `source_python_datasource` proved the Python Data Source
-API's partitioned read path; these operators prove its OPTIMIZER
+`source_python_datasource` (below) proves the Python Data Source API's
+partitioned read path; these operators prove its OPTIMIZER
 integration — the Spark 4.1 pushFilters hook that lets a pure-Python
 connector receive the query's predicates during planning, absorb the ones
 its backing system can evaluate natively, and hand the rest back to Spark:
@@ -204,3 +204,76 @@ def source_pyds_pushdown_residual(spark: SparkSession, sf_dir: str) -> DataFrame
             F.max("k").alias("max_k"),
         ).collect()
     return spark.createDataFrame(rows, "n bigint, sum_sq bigint, max_k bigint")
+
+
+_PYDS_N = 10_000
+
+
+_PYDS_PARTS = 8
+
+
+@register(
+    "source_python_datasource",
+    oracle=f"""
+WITH g AS (SELECT unnest(generate_series(0, {_PYDS_N - 1})) AS k)
+SELECT count(*) AS n, CAST(sum(k * k) AS BIGINT) AS sum_sq,
+       count(DISTINCT k % {_PYDS_PARTS}) AS n_partitions_touched
+FROM g
+""",
+)
+def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A custom connector through Spark 4's Python Data Source API
+    (SPARK-44076): a DataSource subclass registered by name, whose
+    reader declares 8 InputPartitions and yields rows per partition —
+    the extensibility path for ingesting from systems Spark has no
+    built-in connector for, WITHOUT touching the JVM. Partition planning
+    happens on the driver (the partitions() list); row generation runs
+    in executor Python workers in parallel, one task per InputPartition,
+    so a real connector shards its remote scan exactly like this. The
+    deterministic synthetic payload (k, k²) strided across partitions
+    lets the oracle recompute content arithmetically and the
+    partition-residue count prove every shard contributed. Registration
+    is idempotent per session (re-register overwrites)."""
+    from pyspark.sql.datasource import (
+        DataSource,
+        DataSourceReader,
+        InputPartition,
+    )
+
+    class RangeSquares(DataSource):
+        @classmethod
+        def name(cls) -> str:
+            return "range_squares"
+
+        def schema(self) -> str:
+            return "k bigint, sq bigint"
+
+        def reader(self, schema):
+            return _SquareReader(self.options)
+
+    class _SquareReader(DataSourceReader):
+        def __init__(self, options):
+            self.n = int(options.get("n", 100))
+            self.parts = int(options.get("parts", 4))
+
+        def partitions(self):
+            return [InputPartition(i) for i in range(self.parts)]
+
+        def read(self, part):
+            for k in range(part.value, self.n, self.parts):
+                yield (k, k * k)
+
+    spark.dataSource.register(RangeSquares)
+    df = (
+        spark.read.format("range_squares")
+        .option("n", str(_PYDS_N))
+        .option("parts", str(_PYDS_PARTS))
+        .load()
+    )
+    return df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("sq").cast("bigint").alias("sum_sq"),
+        F.count_distinct(F.col("k") % _PYDS_PARTS).alias(
+            "n_partitions_touched"
+        ),
+    )

@@ -359,6 +359,117 @@ def test_dims_twin_parity(spark):
     assert (0, 2, 2.0**60) in got
 
 
+# (group, key, text, 2-dp price, timestamp text) rows for the fingerprint
+# twins: NULL in each field, negative and sub-unit prices, the 2-dp grid's
+# edges and trailing zeros, a price past 2^53 cents, non-ASCII text, the
+# '|' separator inside a field, and timestamps at and around midnight.
+FINGERPRINT_ROWS = [
+    (0, 1, "F", 0.01, "2024-01-15 00:00:00"),
+    (0, -7, "ünïcödé ✓ 字", -0.01, "2024-01-14 23:59:59.999999"),
+    (0, 2**40, "a|b", 123456789.99, "1992-01-01 00:00:00"),
+    (0, 3, "", -42.5, "2024-02-29 12:00:00"),
+    (1, 4, "O", 0.1, "1998-12-31 23:59:59"),
+    (1, 5, "P", 0.0, "2024-01-15 00:00:00.000001"),
+    (1, 6, None, 9.99, "2000-01-01 00:00:00"),
+    (1, None, "F", -1234.56, "1970-01-01 00:00:00"),
+    (2, 8, "F", None, "2010-06-30 00:00:00"),
+    (2, 9, "F", 99999999999999.98, None),
+    (3, None, None, None, None),
+]
+
+
+def test_content_fingerprint_twin_parity(spark):
+    """``canon_row`` is one SQL text for both engines: it renders every
+    row to the same string (NULL when any field is NULL), and
+    ``content_fingerprint`` / ``content_fingerprint_sql`` agree per group,
+    an all-NULL group included (NULL on both)."""
+    from pyspark.sql import functions as F
+
+    from ai_dataingestion_spark.functions.portable import (
+        canon_row,
+        content_fingerprint,
+        content_fingerprint_sql,
+    )
+
+    canon = canon_row(
+        ("k", "STRING"), "s", ("p", "DECIMAL(38,2)"), ("ts", "DATE"),
+        ("ts", "STRING"),
+    )
+    rows = [(i, *r) for i, r in enumerate(FINGERPRINT_ROWS)]
+    df = spark.createDataFrame(
+        rows, "i int, g int, k bigint, s string, p double, ts_s string"
+    ).withColumn("ts", F.col("ts_s").cast("timestamp"))
+    got_rows = sorted(
+        tuple(r) for r in df.select("i", F.expr(canon)).collect()
+    )
+    got_fp = sorted(
+        tuple(r)
+        for r in df.groupBy("g").agg(content_fingerprint(canon).alias("fp")).collect()
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE t AS SELECT i, g, k, s, p, CAST(ts_s AS TIMESTAMP) AS ts "
+        "FROM (SELECT unnest(?) AS i, unnest(?) AS g, unnest(?) AS k, "
+        "unnest(?) AS s, unnest(?::DOUBLE[]) AS p, unnest(?) AS ts_s)",
+        [list(c) for c in zip(*rows)],
+    )
+    want_rows = sorted(
+        tuple(r) for r in con.execute(f"SELECT i, {canon} FROM t").fetchall()
+    )
+    want_fp = sorted(
+        tuple(r)
+        for r in con.execute(
+            f"SELECT g, {content_fingerprint_sql(canon)} FROM t GROUP BY g"
+        ).fetchall()
+    )
+    assert got_rows == want_rows
+    assert got_fp == want_fp
+    assert (4, "4|O|0.10|1998-12-31|1998-12-31 23:59:59") in got_rows
+    assert dict(got_fp)[3] is None
+
+
+def test_pre_period_twin_parity(spark):
+    """``pre_period`` and ``PRE_PERIOD_SQL`` split the same timestamps:
+    before ``CUTOVER_DATE`` is pre, the cutover instant itself and
+    everything after is not, and a NULL ts is NULL on both engines."""
+    from pyspark.sql import functions as F
+
+    from ai_dataingestion_spark.functions.portable import (
+        CUTOVER_DATE,
+        PRE_PERIOD_SQL,
+        pre_period,
+    )
+
+    stamps = [
+        f"{CUTOVER_DATE} 00:00:00",
+        f"{CUTOVER_DATE} 00:00:00.000001",
+        "2024-01-14 23:59:59.999999",
+        "2024-01-01 00:00:00",
+        "2024-01-31 23:59:59",
+        "1970-01-01 00:00:00",
+        None,
+    ]
+    df = spark.createDataFrame(list(enumerate(stamps)), "i int, ts_s string")
+    got = sorted(
+        tuple(r)
+        for r in df.select(
+            "i", F.col("ts_s").cast("timestamp").alias("ts")
+        ).select("i", pre_period().alias("pre")).collect()
+    )
+    con = duckdb.connect()
+    want = sorted(
+        tuple(r)
+        for r in con.execute(
+            f"SELECT i, {PRE_PERIOD_SQL} FROM (SELECT i, "
+            "CAST(ts_s AS TIMESTAMP) AS ts FROM (SELECT unnest(?) AS i, "
+            "unnest(?) AS ts_s))",
+            [list(range(len(stamps))), stamps],
+        ).fetchall()
+    )
+    assert got == want
+    assert [p for _, p in got] == [False, False, True, True, False, True, None]
+
+
 @settings(max_examples=10, deadline=None)
 @given(data=st.data())
 def test_carter_wegman_transform_parity(spark, data):

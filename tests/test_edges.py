@@ -4,6 +4,7 @@ null-free, well-populated) never exercises."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Window, functions as F
 
 
@@ -235,6 +236,31 @@ def test_idempotent_ledger_matches_single_delivery_truth(spark, sf_small):
     for b, n in truth.items():
         assert rows[b]["n_applied"] == n
         assert rows[b]["n_deduped_replays"] == (n if b in (1, 3) else 0)
+
+
+def test_sink_write_modes_propagates_other_write_errors(spark, sf_small, monkeypatch):
+    """sink_write_modes reports only the errorifexists refusal
+    (PATH_ALREADY_EXISTS) as its caught row: any other failure of that
+    write, here a RuntimeError, must reach the caller instead."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from ai_dataingestion_spark.catalog import all_specs
+
+    mode, parquet = DataFrameWriter.mode, DataFrameWriter.parquet
+
+    def tracking_mode(self, save_mode):
+        self._save_mode = save_mode
+        return mode(self, save_mode)
+
+    def failing_parquet(self, path, *args, **kwargs):
+        if getattr(self, "_save_mode", None) == "errorifexists":
+            raise RuntimeError("injected write failure")
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "mode", tracking_mode)
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+    with pytest.raises(RuntimeError, match="injected write failure"):
+        all_specs()["sink_write_modes"].fn(spark, sf_small)
 
 
 def test_weighted_systematic_closed_form_properties():

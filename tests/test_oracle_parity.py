@@ -11,6 +11,8 @@ import pytest
 from ai_dataingestion_spark.ai import dedup, multimodal, similarity, text
 from ai_dataingestion_spark.catalog import all_specs
 from ai_dataingestion_spark.operators import analytics, events
+from ai_dataingestion_spark.pipeline import quality
+from ai_dataingestion_spark.sources import python_pushdown, scans
 from tests.parity import compare, duckdb_connect, run_with_spawn_retry
 
 SPECS = all_specs()
@@ -155,6 +157,8 @@ NEAR_DUP_TEXT_IDS = {
     "text_containment_pairs", "text_shingle_df_spectrum",
     "text_shingle_df_cap_loss",
 }
+# Streaming sources register with the streaming engine that drives them.
+STREAMING_SOURCE_IDS = {"source_stream_file", "source_python_datasource_stream"}
 RELATIONAL_PREFIXES = (
     "tpch_", "lineitem_", "orders_", "customer_", "supplier_", "part_",
     "brand_", "market_", "sales_", "trade_", "subquery_",
@@ -188,8 +192,15 @@ def _registered_in(module) -> set[str]:
         (similarity, {n for n in SPECS if n.startswith(("embed_", "sim_"))}),
         (multimodal, {n for n in SPECS if n.startswith("multimodal_")}),
         (dedup, {n for n in SPECS if n.startswith("dedup_")} | NEAR_DUP_TEXT_IDS),
+        (scans, {n for n in SPECS if n.startswith(("scan_", "sink_"))}),
+        # pipeline_e2e_text is the composed DAG of plans/pipeline.py
+        (quality, {n for n in SPECS if n.startswith(("quality_", "pipeline_"))}
+         - {"pipeline_e2e_text"} | {"schema_evolve"}),
+        (python_pushdown, {n for n in SPECS if n.startswith("source_")}
+         - STREAMING_SOURCE_IDS),
     ],
-    ids=["events", "relational", "text", "similarity", "multimodal", "dedup"],
+    ids=["events", "relational", "text", "similarity", "multimodal", "dedup",
+         "scan-sink", "quality-pipeline", "sources"],
 )
 def test_domain_module_owns_its_ids(module, owned):
     """A domain's operators register from its module and nowhere else."""

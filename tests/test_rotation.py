@@ -14,7 +14,10 @@ import pytest
 
 from ai_dataingestion_spark import catalog, registry, tmpdirs
 from ai_dataingestion_spark.ai import dedup, similarity, text
+from ai_dataingestion_spark.functions import portable
 from ai_dataingestion_spark.operators import analytics, events
+from ai_dataingestion_spark.pipeline import quality
+from ai_dataingestion_spark.sources import scans
 
 REPO = Path(__file__).resolve().parent.parent
 SPECS = catalog.all_specs()
@@ -89,6 +92,14 @@ def test_unchanged_code_ranks_behind_everything(certified):
          "dedup_ngram_jaccard text_containment_pairs text_shingle_df_cap_loss"),
         # reached through a nested function: the MMR cosine builder
         (similarity, "cosine_expr", lambda a, b: "0.0D", "embed_mmr_select"),
+        (quality, "content_fingerprint", lambda canon: None,
+         "quality_table_fingerprint quality_partition_fingerprint_diff"),
+        (scans, "_parquet_footers", lambda paths: paths,
+         "scan_parquet_footer_audit sink_max_records_per_file"),
+        # a constant of another module, reached through the pre_period twin
+        (portable, "CUTOVER_DATE", "2024-01-16",
+         "quality_psi_drift quality_ks_two_sample events_pre_post_welch_t "
+         "events_diff_in_differences events_cuped_adjustment"),
         # run-time state: a global op_tmpdir rebinds, and a cache dict
         (tmpdirs, "_ROOT", "/elsewhere", ""),
         (registry, "_events_ts_unit", {("a",): "ns"}, ""),
@@ -96,8 +107,8 @@ def test_unchanged_code_ranks_behind_everything(certified):
     ids=["helper", "helper-local-import", "module-sql-constant",
          "sessions-helper", "calendar-helper", "net-price-helper",
          "money-sum-helper", "source-token-counts-helper", "df-cap-constant",
-         "cosine-helper",
-         "rebound-global", "cache-dict"],
+         "cosine-helper", "fingerprint-helper", "footer-reader",
+         "cutover-constant", "rebound-global", "cache-dict"],
 )
 def test_changed_dependency_moves_exactly_its_operators(
     certified, monkeypatch, module, name, value, moved
