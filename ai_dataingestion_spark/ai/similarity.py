@@ -43,6 +43,8 @@ from ai_dataingestion_spark.functions.portable import (
     finite_vec,
     grid_sum,
     grid_sum_sql,
+    percentile,
+    percentile_sql,
     pround,
     sq_norm_expr,
     sq_norm_sql,
@@ -1246,9 +1248,9 @@ WITH norms AS (
   WHERE {_VEC_OK}
 )
 SELECT count(*) AS n_vectors,
-       round(quantile_cont(l2, 0.10), 6) AS p10,
-       round(quantile_cont(l2, 0.50), 6) AS p50,
-       round(quantile_cont(l2, 0.90), 6) AS p90
+       round({percentile_sql("l2", 0.1)}, 6) AS p10,
+       round({percentile_sql("l2", 0.5)}, 6) AS p50,
+       round({percentile_sql("l2", 0.9)}, 6) AS p90
 FROM norms
 """,
 )
@@ -1265,9 +1267,9 @@ def embed_norm_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     norms = e.select(F.expr(f"sqrt({sq_norm_expr('embedding')})").alias("l2"))
     return norms.agg(
         F.count(F.lit(1)).alias("n_vectors"),
-        F.round(F.percentile("l2", 0.10), 6).alias("p10"),
-        F.round(F.percentile("l2", 0.50), 6).alias("p50"),
-        F.round(F.percentile("l2", 0.90), 6).alias("p90"),
+        F.round(percentile("l2", 0.1), 6).alias("p10"),
+        F.round(percentile("l2", 0.5), 6).alias("p50"),
+        F.round(percentile("l2", 0.9), 6).alias("p90"),
     )
 
 

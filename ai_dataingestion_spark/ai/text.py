@@ -32,6 +32,8 @@ from ai_dataingestion_spark.catalog import register, sql_op
 from ai_dataingestion_spark.functions.portable import (
     hash60_expr,
     hash60_sql,
+    percentile,
+    percentile_sql,
     pround,
     stable_sum,
     stable_sum_sql,
@@ -193,12 +195,12 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_lang_stats",
-    oracle="""
+    oracle=f"""
 SELECT lang, source,
        count(*)                                   AS n_docs,
        CAST(sum(n_chars) AS BIGINT)               AS total_chars,
        round(avg(n_chars), 4)                     AS avg_chars,
-       round(quantile_cont(n_chars, 0.5), 4)      AS median_chars
+       round({percentile_sql("n_chars", 0.5)}, 4) AS median_chars
 FROM documents
 GROUP BY lang, source
 """,
@@ -211,7 +213,7 @@ def text_lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").alias("total_chars"),
         F.round(F.avg("n_chars"), 4).alias("avg_chars"),
-        F.round(F.percentile("n_chars", 0.5), 4).alias("median_chars"),
+        F.round(percentile("n_chars", 0.5), 4).alias("median_chars"),
     )
 
 
@@ -1293,7 +1295,7 @@ fk AS (
 )
 SELECT source,
        count(*) AS n_docs,
-       CAST(quantile_cont(grade, 0.5) AS DOUBLE) AS p50_grade,
+       {percentile_sql("grade", 0.5)} AS p50_grade,
        floor(CAST(sum(CAST(grade AS DECIMAL(38, 6))) AS DOUBLE) / count(*)
              * 1000000 + 0.5) / 1000000 AS mean_grade
 FROM fk GROUP BY source
@@ -1327,9 +1329,7 @@ def text_readability_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = F.count(F.lit(1))
     return fk.groupBy("source").agg(
         n.alias("n_docs"),
-        F.expr("percentile_cont(0.5) WITHIN GROUP (ORDER BY grade)").alias(
-            "p50_grade"
-        ),
+        percentile("grade", 0.5).alias("p50_grade"),
         pround(
             F.sum(F.col("grade").cast("decimal(38,6)")).cast("double") / n
         ).alias("mean_grade"),
@@ -2443,10 +2443,10 @@ def text_charset_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_length_band_filter",
-    oracle="""
+    oracle=f"""
 WITH cuts AS (
-  SELECT quantile_cont(n_chars, 0.05) AS p05,
-         quantile_cont(n_chars, 0.95) AS p95
+  SELECT {percentile_sql("n_chars", 0.05)} AS p05,
+         {percentile_sql("n_chars", 0.95)} AS p95
   FROM documents
 )
 SELECT doc_id, n_chars FROM documents, cuts
@@ -2456,13 +2456,13 @@ WHERE n_chars >= p05 AND n_chars <= p95
 def text_length_band_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length-band quality filter: keep documents between the corpus's 5th
     and 95th length percentiles — the standard truncation/boilerplate
-    guard. Spark percentile() and DuckDB quantile_cont share the linear
-    interpolation definition, so the cutoffs agree exactly; they land as a
-    1-row broadcast against the scan."""
+    guard. Both cutoffs are ``percentile`` (one linear interpolation
+    in the double domain on both engines), so they agree exactly; they
+    land as a 1-row broadcast against the scan."""
     t = Tables(spark, sf_dir)
     cuts = t.documents.agg(
-        F.percentile("n_chars", 0.05).alias("p05"),
-        F.percentile("n_chars", 0.95).alias("p95"),
+        percentile("n_chars", 0.05).alias("p05"),
+        percentile("n_chars", 0.95).alias("p95"),
     )
     return (
         t.documents.crossJoin(F.broadcast(cuts))

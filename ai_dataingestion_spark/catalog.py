@@ -172,7 +172,8 @@ def fingerprint(spec: QuerySpec) -> str:
     str/number constant reached by name from there, transitively (module
     globals, closure cells, function-local imports). Globals that a reached
     function rebinds are run-time state, not code, and are left out, as are
-    module names, so moving unchanged code to another module keeps the
+    module names and dunder globals (a class body reads its module's
+    ``__name__``), so moving unchanged code to another module keeps the
     digest."""
     items = [("oracle", spec.oracle or "")]
     seen: set[int] = set()
@@ -210,6 +211,8 @@ def fingerprint(spec: QuerySpec) -> str:
         scopes += [vars(sys.modules[n]) for n in names if n.startswith(_PKG) and n in sys.modules]
         for scope in scopes:
             for n in names:
+                if n.startswith("__") and n.endswith("__"):
+                    continue
                 v = scope.get(n)
                 if not isinstance(v, types.ModuleType):
                     todo.append((n, v))

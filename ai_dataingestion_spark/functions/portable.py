@@ -6,9 +6,10 @@ emitted float must round identically on both engines. Two layers exist:
 - ``pround`` below, ``floor(x * 10^dp + 0.5) / 10^dp`` — ABSOLUTE decimal
   rounding, right for values whose magnitude is bounded
   by the domain (ratios, probabilities, per-row prices).
-- ``mant_exp_cols`` below — RELATIVE (significant-digit) emission as a
-  (mantissa, power-of-ten exponent) column pair, required for values whose
-  magnitude GROWS with the corpus (revenue sums, variances of sums): at
+- ``mant_exp_cols`` / ``mant_exp_sql`` below — RELATIVE (significant-digit)
+  emission as a (mantissa, power-of-ten exponent) column pair, required for
+  values whose magnitude GROWS with the corpus (revenue sums, variances of
+  sums): at
   sfx1.0 a ~2e10 variance carries legitimate ~1e-5 absolute cross-engine
   noise from int128->double decimal casts, so 6 absolute decimals asserts
   precision the double format does not hold at that magnitude. Measured at
@@ -22,6 +23,10 @@ flip floor(log10) between engines, shifting the pair by a decade; inputs
 are data-fixed so this is a per-corpus constant, not a flake, and the
 probability per emitted value is ~1e-15.
 
+A continuous percentile has one spelling per engine, ``percentile`` /
+``percentile_sql``, interpolated in the DOUBLE domain on both; the
+equi-depth bins ``decile_cuts`` / ``decile_bin`` are built on it.
+
 Vector geometry has one spelling per engine, in the finite-domain section
 below: a vector kernel sees only vectors that pass ``finite_vec`` /
 ``VEC_FINITE_SQL``, and a zero-norm vector has no direction, so its cosine
@@ -34,26 +39,32 @@ from __future__ import annotations
 from pyspark.sql import Column, functions as F
 
 
-def mant_exp_cols(col: Column, name: str, dp: int = 6) -> list[Column]:
-    """``[<name>_mant, <name>_exp10]`` — value as a ``dp``-decimal mantissa
+def mant_exp_cols(col: Column, name: str) -> list[Column]:
+    """``[<name>_mant, <name>_exp10]`` — value as a 6-decimal mantissa
     in [1, 10) (sign carried by the mantissa) plus an int power-of-ten
-    exponent. The DuckDB oracle side must emit the same shape:
-
-        CASE WHEN x = 0 THEN 0.0
-             ELSE round(x / pow(10, floor(log10(abs(x)))), {dp}) END
-          AS {name}_mant,
-        CAST(CASE WHEN x = 0 THEN 0
-                  ELSE floor(log10(abs(x))) END AS INT) AS {name}_exp10
-    """
+    exponent; a NULL value gives NULL in both. Oracle twin:
+    ``mant_exp_sql``."""
     mag = F.floor(F.log10(F.abs(col)))
     return [
         F.when(col == 0, F.lit(0.0))
-        .otherwise(F.round(col / F.pow(F.lit(10.0), mag), dp))
+        .otherwise(F.round(col / F.pow(F.lit(10.0), mag), 6))
         .alias(f"{name}_mant"),
         F.when(col == 0, F.lit(0))
         .otherwise(mag.cast("int"))
         .alias(f"{name}_exp10"),
     ]
+
+
+def mant_exp_sql(expr: str, name: str) -> str:
+    """DuckDB twin of ``mant_exp_cols`` over SQL expression ``expr``: the
+    two select items ``<name>_mant, <name>_exp10``."""
+    mag = f"floor(log10(abs({expr})))"
+    return (
+        f"CASE WHEN {expr} = 0 THEN 0.0 "
+        f"ELSE round({expr} / pow(10, {mag}), 6) END AS {name}_mant, "
+        f"CAST(CASE WHEN {expr} = 0 THEN 0 ELSE {mag} END AS INT) "
+        f"AS {name}_exp10"
+    )
 
 
 def pround(col: Column, dp: int = 6) -> Column:
@@ -98,6 +109,53 @@ def money_sum(col: Column) -> Column:
 def money_sum_sql(expr: str) -> str:
     """DuckDB twin of ``money_sum`` over SQL expression ``expr``."""
     return f"CAST(round({dec_sum_sql(expr)}, 2) AS DOUBLE)"
+
+
+def percentile(col: Column | str, q: float) -> Column:
+    """Continuous percentile ``q`` of ``col``, interpolated between the two
+    nearest ranks in the DOUBLE domain; NULLs are skipped and no rows give
+    NULL. Oracle twin: ``percentile_sql``."""
+    return F.percentile(col, q)
+
+
+def percentile_sql(expr: str, q: float) -> str:
+    """DuckDB twin of ``percentile``. The DOUBLE cast comes first because
+    DuckDB interpolates a DECIMAL input in its own type: over DECIMAL(38,2)
+    {1.25, 2.50, 2.55} at q = 0.25 it returns 1.87 where Spark returns
+    1.875."""
+    return f"quantile_cont(CAST({expr} AS DOUBLE), {q})"
+
+
+def decile_cuts(col: str) -> list[Column]:
+    """The 9 decile cuts of ``col`` (``percentile`` at 0.1 … 0.9) as the
+    aggregate columns ``q1`` … ``q9``. Oracle twin: ``decile_cuts_sql``."""
+    return [percentile(col, q / 10).alias(f"q{q}") for q in range(1, 10)]
+
+
+def decile_cuts_sql(expr: str) -> str:
+    """DuckDB twin of ``decile_cuts``: the 9 select items ``q1`` … ``q9``."""
+    return ", ".join(f"{percentile_sql(expr, q / 10)} AS q{q}" for q in range(1, 10))
+
+
+def decile_bin(col: str) -> Column:
+    """A value's decile bin, 0 … 9: the number of cuts ``q1`` … ``q9``
+    (``decile_cuts``, joined beside it) that ``col`` exceeds. Against NULL
+    cuts (an empty fit) every value falls in bin 0. An int; oracle twin:
+    ``decile_bin_sql``.
+
+    Known defect, current behaviour rather than the rule: a NULL value
+    exceeds no cut, so it is counted in bin 0 beside the lowest decile
+    (the ``decile_bin`` FOUND line in CHANGES.md)."""
+    return sum(
+        F.when(F.col(col) > F.col(f"q{q}"), 1).otherwise(0) for q in range(1, 10)
+    )
+
+
+def decile_bin_sql(expr: str) -> str:
+    """DuckDB twin of ``decile_bin`` over SQL expression ``expr``."""
+    return " + ".join(
+        f"(CASE WHEN {expr} > q{q} THEN 1 ELSE 0 END)" for q in range(1, 10)
+    )
 
 
 NET_PRICE_SQL = "(l_extendedprice * (1 - l_discount))"

@@ -15,7 +15,8 @@ parsed per row with an explicit schema, never via a second scan.
   hand-assembled XML (attributes are where real feeds keep their keys);
 - schema_of_xml pins the INFERENCE contract on representative payload
   shapes (repeated elements → array, attributes → _-prefixed fields,
-  nesting → struct) as literal one-row relations.
+  nesting → struct) as literal one-row relations;
+- the xpath family reads single nodes and node aggregates without a schema.
 
 Scale posture: all three are JVM expressions inside whole-stage codegen —
 per-row parse cost, zero shuffle, zero Python. The synthesis side
@@ -166,3 +167,44 @@ def fn_schema_of_xml_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = one if out is None else out.unionByName(one)
     return out
+
+
+@register(
+    "fn_xpath_extract",
+    oracle="""
+SELECT o_orderstatus AS status_from_xml,
+       -- a NULL status makes the whole synthesized XML doc NULL on the
+       -- engine side, so nothing is extractable from those rows: the
+       -- reproduced arithmetic must go NULL with it
+       CAST(sum(CASE WHEN o_orderstatus IS NULL THEN NULL
+                     ELSE o_orderkey % 5 + 2 END) AS BIGINT) AS sum_b,
+       count(*) AS n
+FROM orders GROUP BY 1
+""",
+)
+def fn_xpath_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """XML field extraction via Spark's xpath family (xpath_string for a
+    scalar node, xpath_long for an XPath aggregate over repeated nodes)
+    on per-row XML documents synthesized from order columns — the
+    legacy-feed ingestion shape (the corpus has no XML column; the
+    operators under test are the XPath evaluators). Extraction stays
+    JVM-side; the rollup is a plain partial-aggregable groupBy. Oracle:
+    DuckDB reproduces the extracted values arithmetically from the same
+    source columns (status text node; sum(/r/b) = (key%5) + literal 2)."""
+    t = Tables(spark, sf_dir)
+    xml = F.concat(
+        F.lit("<r><a>"),
+        F.col("o_orderstatus"),
+        F.lit("</a><b>"),
+        (F.col("o_orderkey") % 5).cast("string"),
+        F.lit("</b><b>2</b></r>"),
+    )
+    return (
+        t.orders.select(xml.alias("x"))
+        .select(
+            F.expr("xpath_string(x, '/r/a')").alias("status_from_xml"),
+            F.expr("xpath_long(x, 'sum(/r/b)')").alias("b_sum"),
+        )
+        .groupBy("status_from_xml")
+        .agg(F.sum("b_sum").alias("sum_b"), F.count(F.lit(1)).alias("n"))
+    )

@@ -31,7 +31,6 @@ from ai_dataingestion_spark.operators import sql_scripting  # noqa: F401
 from ai_dataingestion_spark.streaming import statestore_reader  # noqa: F401
 from ai_dataingestion_spark.operators import catalog_meta  # noqa: F401
 from ai_dataingestion_spark.operators import sql_udf  # noqa: F401
-from ai_dataingestion_spark.operators import round13_fns  # noqa: F401
 from ai_dataingestion_spark.operators import collation_depth  # noqa: F401
 from ai_dataingestion_spark.operators import observability  # noqa: F401
 from ai_dataingestion_spark.udf import arrow_native  # noqa: F401
@@ -47,6 +46,4 @@ from ai_dataingestion_spark.functions import ingest_hygiene  # noqa: F401
 from ai_dataingestion_spark.functions import regex_depth  # noqa: F401
 from ai_dataingestion_spark.streaming import statestore_options  # noqa: F401
 from ai_dataingestion_spark.streaming import observe_stream  # noqa: F401
-from ai_dataingestion_spark.operators import round15_fns  # noqa: F401
-from ai_dataingestion_spark.operators import round16_fns  # noqa: F401
 from ai_dataingestion_spark.operators import round16_catalog  # noqa: F401

@@ -1,6 +1,6 @@
-"""Round-2 surface extensions (SURVEY.md §2.N): robust statistics (median /
-weighted means), fuzzy string matching, splits, salted and interval joins,
-and context packing.
+"""Round-2 surface extensions (SURVEY.md §2.N): stream joins, splits,
+stratified sampling, salted, interval and bloom-prefiltered joins,
+gaps-and-islands windows, and context packing.
 
 Float discipline follows SURVEY.md §5.4: sums of money PRODUCTS go through
 DECIMAL(38,6); quotients (averages, ratios) round at 6 dp; counts and keys
@@ -15,119 +15,11 @@ from ai_dataingestion_spark.catalog import register
 from ai_dataingestion_spark.functions.portable import (
     hash60_expr,
     hash60_sql,
-    stable_sum,
-    stable_sum_sql,
     tokens,
     tokens_sql,
 )
 from ai_dataingestion_spark.scale import broadcast_if_small
 from ai_dataingestion_spark.registry import Tables
-
-
-@register(
-    "agg_median",
-    oracle="""
-SELECT c_mktsegment, round(median(c_acctbal), 4) AS med_bal, count(*) AS n
-FROM customer GROUP BY c_mktsegment
-""",
-)
-def agg_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact median account balance per market segment (both engines
-    interpolate the even-count midpoint with the same (a+b)/2 on identical
-    inputs, so the doubles agree before rounding)."""
-    return (
-        Tables(spark, sf_dir)
-        .customer.groupBy("c_mktsegment")
-        .agg(
-            F.round(F.median("c_acctbal"), 4).alias("med_bal"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
-
-
-@register(
-    "agg_weighted_avg",
-    oracle=f"""
-SELECT l_returnflag,
-       round({stable_sum_sql("l_extendedprice * l_quantity")}
-             / sum(l_quantity), 6)
-         AS wavg_price,
-       round(sum(l_quantity), 2) AS total_qty
-FROM lineitem GROUP BY l_returnflag
-""",
-)
-def agg_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantity-weighted mean price per return flag: Σ(w·x)/Σ(w) as one
-    partial-aggregable pass (the ratio-of-sums form — never avg-of-avgs,
-    which is wrong under grouping and does not map-side combine). The
-    numerator accumulates in DECIMAL(38,6) (portable.py:stable_sum); the
-    denominator Σ(quantity) is integer-valued so double summation is
-    already exact — the ratio is then draw-deterministic on both
-    engines."""
-    li = Tables(spark, sf_dir).lineitem
-    return li.groupBy("l_returnflag").agg(
-        F.round(
-            stable_sum(F.col("l_extendedprice") * F.col("l_quantity"))
-            / F.sum("l_quantity"),
-            6,
-        ).alias("wavg_price"),
-        F.round(F.sum("l_quantity"), 2).alias("total_qty"),
-    )
-
-
-@register(
-    "fn_levenshtein_match",
-    oracle="""
-SELECT s_suppkey, s_name, n_name AS best_nation, dist FROM (
-  SELECT s.s_suppkey, s.s_name, n.n_name,
-         -- ASCII operands only: edit distance is an encoding-unit metric
-         -- and the engines count different units outside ASCII
-         CASE WHEN NOT regexp_matches(s.s_name, '[^ -~]')
-               AND NOT regexp_matches(n.n_name, '[^ -~]')
-              THEN levenshtein(s.s_name, n.n_name) END AS dist,
-         row_number() OVER (
-           PARTITION BY s.s_suppkey
-           ORDER BY CASE WHEN NOT regexp_matches(s.s_name, '[^ -~]')
-                          AND NOT regexp_matches(n.n_name, '[^ -~]')
-                         THEN levenshtein(s.s_name, n.n_name) END ASC,
-                    n.n_name ASC) AS rn
-  FROM supplier s CROSS JOIN nation n
-) WHERE rn = 1
-""",
-)
-def fn_levenshtein_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fuzzy nearest-name match (entity-resolution kernel): every supplier
-    against the broadcast nation list by edit distance, deterministic
-    tie-break on name. At scale the small side is always the broadcast
-    reference list and the cross product is bounded by its size."""
-    t = Tables(spark, sf_dir)
-    pairs = t.supplier.select("s_suppkey", "s_name").crossJoin(
-        F.broadcast(t.nation.select("n_name"))
-    )
-    # asc_nulls_last on both keys: a NULL name has NULL distance to
-    # everything and must never win the argmin (oracle ASC default);
-    # NULL reference names lose the tie-break the same way
-    w = Window.partitionBy("s_suppkey").orderBy(
-        F.asc_nulls_last("dist"), F.asc_nulls_last("n_name")
-    )
-    ascii_pair = ~F.col("s_name").rlike("[^ -~]") & ~F.col(
-        "n_name"
-    ).rlike("[^ -~]")
-    return (
-        pairs.select(
-            "s_suppkey",
-            "s_name",
-            "n_name",
-            # NULL outside the ASCII domain (oracle mirrors): non-ASCII
-            # names never win the argmin under nulls-last ordering
-            F.when(ascii_pair, F.levenshtein("s_name", "n_name")).alias(
-                "dist"
-            ),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("s_suppkey", "s_name", F.col("n_name").alias("best_nation"), "dist")
-    )
 
 
 @register(
@@ -194,32 +86,6 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.join(
         exact, agg["event_type"].eqNullSafe(exact["event_type"])
     ).select(agg["event_type"], "n", "n_users")
-
-
-@register(
-    "agg_histogram_bins",
-    oracle="""
-SELECT CAST(floor(o_totalprice / 50000.0) AS BIGINT) AS bin,
-       count(*) AS n,
-       round(min(o_totalprice), 2) AS lo,
-       round(max(o_totalprice), 2) AS hi
-FROM orders
-GROUP BY 1
-""",
-)
-def agg_histogram_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-width histogram (the profiling/monitoring kernel): bin id via
-    floor division — a pure map-side expression, so the aggregate is one
-    partial-combined shuffle of (bin, partials); no sort, no percentile
-    state. Bin membership is exact integer math on both engines."""
-    o = Tables(spark, sf_dir).orders
-    return o.groupBy(
-        F.floor(F.col("o_totalprice") / 50000.0).cast("bigint").alias("bin")
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.min("o_totalprice"), 2).alias("lo"),
-        F.round(F.max("o_totalprice"), 2).alias("hi"),
-    )
 
 
 @register(
@@ -400,46 +266,6 @@ def pack_context_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "agg_mode_per_group",
-    oracle="""
-SELECT user_id, event_type AS mode_type, c AS mode_count
-FROM (
-  SELECT user_id, event_type, c,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY c DESC, event_type ASC) AS rn
-  FROM (
-    SELECT user_id, event_type, count(*) AS c
-    FROM events GROUP BY user_id, event_type
-  )
-)
-WHERE rn = 1
-ORDER BY user_id
-""",
-)
-def agg_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Statistical mode per group with a deterministic tie-break (count
-    desc, then value asc): two-level aggregate then a 1-row-per-group
-    window — the shuffle on user_id is reused by both steps, and the
-    count pre-aggregation map-side-combines before anything wide."""
-    e = Tables(spark, sf_dir).events
-    counts = e.groupBy("user_id", "event_type").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("c").desc(), F.col("event_type").asc()
-    )
-    return (
-        counts.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "user_id",
-            F.col("event_type").alias("mode_type"),
-            F.col("c").alias("mode_count"),
-        )
-    )
-
-
-@register(
     "join_interval_overlap",
     oracle="""
 WITH win AS (
@@ -596,42 +422,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.unix_micros("purchase_ts") - F.unix_micros("click_ts")).alias(
             "lag_us"
         ),
-    )
-
-
-@register(
-    "agg_corr_regression",
-    oracle="""
-SELECT l_returnflag,
-       round(corr(l_quantity, l_extendedprice), 6)        AS corr_qty_price,
-       round(covar_samp(l_quantity, l_extendedprice), 4)  AS covar_qty_price,
-       round(regr_slope(l_extendedprice, l_quantity), 4)  AS slope,
-       round(regr_intercept(l_extendedprice, l_quantity), 4) AS intercept,
-       CAST(regr_count(l_extendedprice, l_quantity) AS BIGINT) AS n
-FROM lineitem
-GROUP BY l_returnflag
-ORDER BY l_returnflag
-""",
-)
-def agg_corr_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bivariate statistical aggregates (corr / covar / OLS slope+intercept
-    — the profiling pass before any feature is trusted): all are
-    partial-aggregable moment sketches (sum, sum², sum·xy) that map-side
-    combine; corr and the regression terms are RATIOS of centered moments,
-    so cross-engine rounding is safe at the chosen precisions."""
-    li = Tables(spark, sf_dir).lineitem
-    return li.groupBy("l_returnflag").agg(
-        F.round(F.corr("l_quantity", "l_extendedprice"), 6).alias(
-            "corr_qty_price"
-        ),
-        F.round(F.covar_samp("l_quantity", "l_extendedprice"), 4).alias(
-            "covar_qty_price"
-        ),
-        F.round(F.regr_slope("l_extendedprice", "l_quantity"), 4).alias("slope"),
-        F.round(F.regr_intercept("l_extendedprice", "l_quantity"), 4).alias(
-            "intercept"
-        ),
-        F.regr_count("l_extendedprice", "l_quantity").alias("n"),
     )
 
 

@@ -28,9 +28,13 @@ from ai_dataingestion_spark.functions.portable import (
     dec_sum_sql,
     grid_sum,
     grid_sum_sql,
+    mant_exp_cols,
+    mant_exp_sql,
     money_sum,
     money_sum_sql,
     net_price,
+    percentile,
+    percentile_sql,
     pround,
     stable_sum,
     stable_sum_sql,
@@ -2164,7 +2168,7 @@ def orders_hierarchy_share_of_parent(
 
 @register(
     "orders_seasonal_decomposition_additive",
-    oracle="""
+    oracle=f"""
 WITH monthly AS (
   -- o_orderdate IS NOT NULL: a NULL month has no seat in a centered
   -- 12-month moving window (see orders_cumulative_share_monthly)
@@ -2195,16 +2199,8 @@ seas AS (
 )
 SELECT month_num,
        CAST(n_obs AS BIGINT) AS n_obs,
-       CASE WHEN s = 0 THEN 0.0
-            ELSE round(s / pow(10, floor(log10(abs(s)))), 6)
-       END AS seasonal_mant,
-       CAST(CASE WHEN s = 0 THEN 0
-                 ELSE floor(log10(abs(s))) END AS INT) AS seasonal_exp10,
-       CASE WHEN mar = 0 THEN 0.0
-            ELSE round(mar / pow(10, floor(log10(abs(mar)))), 6)
-       END AS remainder_mant,
-       CAST(CASE WHEN mar = 0 THEN 0
-                 ELSE floor(log10(abs(mar))) END AS INT) AS remainder_exp10
+       {mant_exp_sql("s", "seasonal")},
+       {mant_exp_sql("mar", "remainder")}
 FROM rem
 """,
 )
@@ -2256,8 +2252,6 @@ def orders_seasonal_decomposition_additive(
     # double's summation-order noise of a fixed 6-dp rounding boundary
     # (measured at the round-8 sweep); zero-guarded because the seasonal
     # index is zero-centered. See functions/portable.py.
-    from ai_dataingestion_spark.functions.portable import mant_exp_cols
-
     return seas.join(rem, "month_num").select(
         "month_num",
         "n_obs",
@@ -2656,13 +2650,13 @@ def lineitem_quantity_cusum_shift(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "lineitem_ship_latency_by_nation",
-    oracle="""
+    oracle=f"""
 SELECT n_name,
        count(*) AS n,
        floor(CAST(sum(d) AS DOUBLE) / count(*) * 1000000 + 0.5)
          / 1000000 AS avg_days,
-       CAST(quantile_cont(d, 0.5) AS DOUBLE) AS p50_days,
-       CAST(quantile_cont(d, 0.9) AS DOUBLE) AS p90_days
+       {percentile_sql("d", 0.5)} AS p50_days,
+       {percentile_sql("d", 0.9)} AS p90_days
 FROM (
   SELECT n_name,
          date_diff('day', CAST(o_orderdate AS DATE),
@@ -2707,12 +2701,8 @@ def lineitem_ship_latency_by_nation(
         pround(
             F.sum("d").cast("double") / F.count(F.lit(1))
         ).alias("avg_days"),
-        F.expr(
-            "percentile_cont(0.5) WITHIN GROUP (ORDER BY d)"
-        ).alias("p50_days"),
-        F.expr(
-            "percentile_cont(0.9) WITHIN GROUP (ORDER BY d)"
-        ).alias("p90_days"),
+        percentile("d", 0.5).alias("p50_days"),
+        percentile("d", 0.9).alias("p90_days"),
     )
 
 
@@ -3324,7 +3314,7 @@ def part_single_source_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "supplier_quadrant_classification",
-    oracle="""
+    oracle=f"""
 WITH vol AS (
   SELECT s_suppkey, s_acctbal,
          CAST(sum(CAST(l_extendedprice AS DECIMAL(38, 2))) AS DOUBLE)
@@ -3333,8 +3323,8 @@ WITH vol AS (
   GROUP BY s_suppkey, s_acctbal
 ),
 cuts AS (
-  SELECT CAST(quantile_cont(s_acctbal, 0.5) AS DOUBLE) AS bal_med,
-         CAST(quantile_cont(volume, 0.5) AS DOUBLE) AS vol_med
+  SELECT {percentile_sql("s_acctbal", 0.5)} AS bal_med,
+         {percentile_sql("volume", 0.5)} AS vol_med
   FROM vol
 )
 SELECT CASE WHEN s_acctbal >= bal_med AND volume >= vol_med
@@ -3370,12 +3360,8 @@ def supplier_quadrant_classification(
         )
     )
     cuts = vol.agg(
-        F.expr(
-            "percentile_cont(0.5) WITHIN GROUP (ORDER BY s_acctbal)"
-        ).alias("bal_med"),
-        F.expr(
-            "percentile_cont(0.5) WITHIN GROUP (ORDER BY volume)"
-        ).alias("vol_med"),
+        percentile("s_acctbal", 0.5).alias("bal_med"),
+        percentile("volume", 0.5).alias("vol_med"),
     )
     quadrant = (
         F.when(

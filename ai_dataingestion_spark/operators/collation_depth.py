@@ -1,7 +1,7 @@
 """§2.AA round-13 sixth block: collation depth (SPARK-46830) — the
 UTF8_LCASE comparison surface beyond grouping.
 
-`fn_collation_lcase_group` (§2.R) pinned collated GROUP BY; these three
+`fn_collation_lcase_group` pins collated GROUP BY; the other three
 pin the rest of the places a comparison's collation changes semantics:
 equality JOIN keys, filter predicates (=, startswith, contains), and
 aggregate DISTINCT. The recurring engine story: collation is a property of
@@ -28,7 +28,10 @@ distinct.
 
 from __future__ import annotations
 
-from ai_dataingestion_spark.catalog import sql_op
+from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ai_dataingestion_spark.catalog import register, sql_op
+from ai_dataingestion_spark.registry import Tables
 
 # Deterministic mixed-case segment: even keys upper, odd keys lower —
 # the corpus stores segments uniformly upper, so the case variance the
@@ -166,3 +169,50 @@ FROM p
     (fn_collation_lcase_group) — the two dedup routes must never disagree
     on cardinality. Partial-aggregable; 1-row output at any scale.""",
 )
+
+
+# ---------------------------------------------------------------------------
+# fn_collation_lcase_group — collated GROUP BY
+# ---------------------------------------------------------------------------
+
+@register(
+    "fn_collation_lcase_group",
+    oracle="""
+SELECT lower(seg) AS seg_lc, count(*) AS n,
+       count(DISTINCT seg) AS n_case_variants
+FROM (SELECT CASE WHEN c_custkey % 2 = 0 THEN upper(c_mktsegment)
+             ELSE lower(c_mktsegment) END AS seg
+      FROM customer) t
+GROUP BY 1
+""",
+)
+def fn_collation_lcase_group(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Collation-aware grouping (Spark 4 collations, SPARK-46830): group
+    mixed-case segment labels under UTF8_LCASE so 'AUTOMOBILE' and
+    'automobile' are ONE group — the collation is a property of the
+    comparison, not a lower() rewrite of the data (binary-preserving:
+    n_case_variants proves both spellings reached the group). Mixed case
+    is synthesized deterministically from key parity because the corpus
+    stores segments uniformly upper. Collation comparisons stay JVM-side
+    (no UDF); grouping on a collated key shuffles exactly like any other
+    key. Oracle: DuckDB spells the same semantics with lower()
+    normalization."""
+    t = Tables(spark, sf_dir)
+    seg = F.when(
+        F.col("c_custkey") % 2 == 0, F.upper("c_mktsegment")
+    ).otherwise(F.lower("c_mktsegment"))
+    return (
+        t.customer.select(seg.alias("seg"))
+        .groupBy(F.expr("seg COLLATE UTF8_LCASE").alias("seg_ci"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count_distinct(F.expr("seg COLLATE UTF8_BINARY")).alias(
+                "n_case_variants"
+            ),
+        )
+        .select(
+            F.lower(F.col("seg_ci").cast("string")).alias("seg_lc"),
+            "n",
+            "n_case_variants",
+        )
+    )

@@ -24,6 +24,10 @@ from ai_dataingestion_spark.catalog import register, sql_op
 from ai_dataingestion_spark.functions.portable import (
     grid_sum,
     grid_sum_sql,
+    mant_exp_cols,
+    mant_exp_sql,
+    percentile,
+    percentile_sql,
     PRE_PERIOD_SQL,
     pre_period,
     pround,
@@ -239,7 +243,7 @@ def _gap_cfg_sql(gap: int) -> str:
         "SELECT "
         + str(gap)
         + " AS gap_minutes, count(*) AS n_sessions, "
-        + "CAST(quantile_cont(n_events, 0.5) AS DOUBLE) AS p50_events, "
+        + f"{percentile_sql('n_events', 0.5)} AS p50_events, "
         + "floor(CAST(sum(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) "
         + "AS DOUBLE) / count(*) * 1000000 + 0.5) / 1000000 AS bounce_rate "
         + "FROM lengths_"
@@ -285,9 +289,7 @@ def events_session_gap_sensitivity(
         bounce = F.sum(F.when(F.col("n_events") == 1, 1).otherwise(0))
         cfg = lengths.agg(
             F.count(F.lit(1)).alias("n_sessions"),
-            F.expr(
-                "percentile_cont(0.5) WITHIN GROUP (ORDER BY n_events)"
-            ).alias("p50_events"),
+            percentile("n_events", 0.5).alias("p50_events"),
             pround(bounce.cast("double") / F.count(F.lit(1))).alias(
                 "bounce_rate"
             ),
@@ -1776,20 +1778,20 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_anomaly_mad",
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   SELECT event_type, date_trunc('day', ts) AS day, count(*) AS n
   FROM events GROUP BY 1, 2
 ),
 med AS (
-  SELECT event_type, median(n) AS med FROM daily GROUP BY 1
+  SELECT event_type, {percentile_sql("n", 0.5)} AS med FROM daily GROUP BY 1
 ),
 dev AS (
   SELECT d.event_type, d.day, d.n, m.med, abs(d.n - m.med) AS adev
   FROM daily d JOIN med m ON d.event_type = m.event_type
 ),
 mad AS (
-  SELECT event_type, median(adev) AS mad FROM dev GROUP BY 1
+  SELECT event_type, {percentile_sql("adev", 0.5)} AS mad FROM dev GROUP BY 1
 )
 SELECT d.event_type, d.day, d.n,
        floor(0.6745 * (d.n - d.med) / nullif(m.mad, 0) * 1000000 + 0.5)
@@ -1812,7 +1814,7 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = t.events.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("day")
     ).agg(F.count(F.lit(1)).alias("n"))
-    med = daily.groupBy("event_type").agg(F.expr("median(n)").alias("med"))
+    med = daily.groupBy("event_type").agg(percentile("n", 0.5).alias("med"))
     # dev feeds BOTH the MAD aggregate and the final select: cache the
     # (types x days)-sized grid so events is scanned once, not per branch
     dev = (
@@ -1820,7 +1822,7 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("adev", F.abs(F.col("n") - F.col("med")))
         .transform(op_cache)
     )
-    mad = dev.groupBy("event_type").agg(F.expr("median(adev)").alias("mad"))
+    mad = dev.groupBy("event_type").agg(percentile("adev", 0.5).alias("mad"))
     z = (
         F.lit(0.6745)
         * (F.col("n") - F.col("med"))
@@ -1982,7 +1984,7 @@ def events_error_burst_5min(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_alert_rules",
-    oracle="""
+    oracle=f"""
 WITH totals AS (
   SELECT count(*) AS n,
          sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS n_err
@@ -2000,7 +2002,7 @@ p95v AS (
   -- finite gate (nan-tier contract): the engines' quantile kernels
   -- disagree on NaN placement, and an alert threshold compared to NaN
   -- never fires — rank the observable domain only
-  SELECT CAST(quantile_cont(value, 0.95) AS DOUBLE) AS p95 FROM events
+  SELECT {percentile_sql("value", 0.95)} AS p95 FROM events
   WHERE (value IS NULL OR isfinite(value))
 )
 SELECT 'error_rate_gt_19pct' AS rule,
@@ -2065,11 +2067,7 @@ def events_alert_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in the oracle's p95v CTE); the count-based rules keep every row
     from ai_dataingestion_spark.functions.portable import finite
 
-    p95 = e.where(finite("value")).agg(
-        F.expr("percentile_cont(0.95) WITHIN GROUP (ORDER BY value)").alias(
-            "p95"
-        )
-    )
+    p95 = e.where(finite("value")).agg(percentile("value", 0.95).alias("p95"))
     r3 = p95.select(
         F.lit("value_p95_gt_100").alias("rule"),
         pround(F.col("p95")).alias("metric"),
@@ -2318,7 +2316,7 @@ def events_funnel_time_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_time_to_convert_quantiles",
-    oracle="""
+    oracle=f"""
 WITH firsts AS (
   SELECT user_id,
          min(CASE WHEN event_type = 'view' THEN ts END) AS first_view,
@@ -2334,9 +2332,9 @@ lat AS (
     AND first_purchase >= first_view
 )
 SELECT count(*) AS n_converted,
-       floor(CAST(quantile_cont(minutes, 0.5) AS DOUBLE) * 1000000 + 0.5)
+       floor({percentile_sql("minutes", 0.5)} * 1000000 + 0.5)
          / 1000000 AS p50_minutes,
-       floor(CAST(quantile_cont(minutes, 0.9) AS DOUBLE) * 1000000 + 0.5)
+       floor({percentile_sql("minutes", 0.9)} * 1000000 + 0.5)
          / 1000000 AS p90_minutes,
        floor(CAST(max(minutes) AS DOUBLE) * 1000000 + 0.5) / 1000000
          AS max_minutes
@@ -2377,12 +2375,8 @@ def events_time_to_convert_quantiles(
     )
     return lat.agg(
         F.count(F.lit(1)).alias("n_converted"),
-        pround(
-            F.expr("percentile_cont(0.5) WITHIN GROUP (ORDER BY minutes)")
-        ).alias("p50_minutes"),
-        pround(
-            F.expr("percentile_cont(0.9) WITHIN GROUP (ORDER BY minutes)")
-        ).alias("p90_minutes"),
+        pround(percentile("minutes", 0.5)).alias("p50_minutes"),
+        pround(percentile("minutes", 0.9)).alias("p90_minutes"),
         pround(F.max("minutes")).alias("max_minutes"),
     )
 
@@ -2841,7 +2835,7 @@ def events_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_transition_dwell_stats",
-    oracle="""
+    oracle=f"""
 WITH seq AS (
   SELECT user_id, ts, event_id, event_type,
          lag(event_type) OVER w AS prev_type,
@@ -2854,7 +2848,7 @@ SELECT prev_type, event_type AS next_type,
        CAST(sum(dwell_us) AS BIGINT) AS dwell_us_sum,
        floor(CAST(sum(dwell_us) AS DOUBLE) / count(*) / 1000000
              * 1000000 + 0.5) / 1000000 AS mean_dwell_s,
-       CAST(quantile_cont(dwell_us, 0.5) AS DOUBLE) AS p50_dwell_us
+       {percentile_sql("dwell_us", 0.5)} AS p50_dwell_us
 FROM seq WHERE prev_type IS NOT NULL
 GROUP BY prev_type, event_type
 """,
@@ -2886,9 +2880,7 @@ def events_transition_dwell_stats(
         pround(F.sum("dwell_us").cast("double") / n / 1_000_000).alias(
             "mean_dwell_s"
         ),
-        F.expr(
-            "percentile_cont(0.5) WITHIN GROUP (ORDER BY dwell_us)"
-        ).alias("p50_dwell_us"),
+        percentile("dwell_us", 0.5).alias("p50_dwell_us"),
     )
 
 
@@ -3595,19 +3587,8 @@ derived AS (
 )
 SELECT n,
        floor(theta_raw * 1000000 + 0.5) / 1000000 AS theta,
-       CASE WHEN var_y_raw = 0 THEN 0.0
-            ELSE round(var_y_raw / pow(10, floor(log10(abs(var_y_raw)))), 6)
-       END AS var_y_mant,
-       CAST(CASE WHEN var_y_raw = 0 THEN 0
-                 ELSE floor(log10(abs(var_y_raw))) END AS INT)
-         AS var_y_exp10,
-       CASE WHEN var_cuped_raw = 0 THEN 0.0
-            ELSE round(var_cuped_raw
-                   / pow(10, floor(log10(abs(var_cuped_raw)))), 6)
-       END AS var_y_cuped_mant,
-       CAST(CASE WHEN var_cuped_raw = 0 THEN 0
-                 ELSE floor(log10(abs(var_cuped_raw))) END AS INT)
-         AS var_y_cuped_exp10,
+       {mant_exp_sql("var_y_raw", "var_y")},
+       {mant_exp_sql("var_cuped_raw", "var_y_cuped")},
        floor(vr_raw * 1000000 + 0.5) / 1000000 AS variance_reduction
 FROM derived
 """,
@@ -3639,8 +3620,6 @@ def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # grid is exact only below ~9e12; x*y reaches ~1e20 at lake
     # magnitudes); the scale-free ratios stay 6dp, the variances emit as
     # mantissa/exponent pairs (oracle mirrors both shapes)
-    from ai_dataingestion_spark.functions.portable import mant_exp_cols
-
     mo = per_user.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(pround(F.col("x")).cast("decimal(38,6)"))
@@ -3671,7 +3650,7 @@ def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_sample_size_calc",
-    oracle="""
+    oracle=f"""
 WITH per_user AS (
   SELECT user_id,
          CAST(sum(CAST(value AS DECIMAL(38, 2))) AS DOUBLE) AS y
@@ -3697,12 +3676,7 @@ derived AS (
   FROM mo
 )
 SELECT n AS n_users_observed,
-       CASE WHEN var_raw = 0 THEN 0.0
-            ELSE round(var_raw / pow(10, floor(log10(abs(var_raw)))), 6)
-       END AS metric_variance_mant,
-       CAST(CASE WHEN var_raw = 0 THEN 0
-                 ELSE floor(log10(abs(var_raw))) END AS INT)
-         AS metric_variance_exp10,
+       {mant_exp_sql("var_raw", "metric_variance")},
        CAST(n_req AS BIGINT) AS n_per_arm_required,
        CAST(CASE WHEN n >= 2 * n_req THEN 1 ELSE 0 END AS INT)
          AS currently_powered
@@ -3730,8 +3704,6 @@ def events_sample_size_calc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # syy raw double (the 6dp idiom's floor grid stops being exact at
     # lake magnitudes); variance emits as mantissa/exponent, n-per-arm
     # is scale-free (sigma^2/mean^2) — oracle mirrors both shapes
-    from ai_dataingestion_spark.functions.portable import mant_exp_cols
-
     mo = per_user.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(pround(F.col("y")).cast("decimal(38,6)"))

@@ -15,61 +15,6 @@ import shutil
 
 
 # ===========================================================================
-# wave module round7a (formerly operators/round7a.py)
-# Round-6 fifty-third wave (SURVEY.md §2.R): mergeable HLL sketch
-# hierarchy rollups.
-# ===========================================================================
-
-
-@register(
-    "agg_hll_union_rollup",
-    oracle="""
-SELECT strftime(ts, '%Y-%m') AS month,
-       count(DISTINCT user_id) AS exact_u,
-       CAST(count(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS n_days,
-       true AS within_5pct
--- ts IS NOT NULL: a NULL timestamp has no grain cell at any rollup level
-FROM events WHERE ts IS NOT NULL GROUP BY 1
-""",
-)
-def agg_hll_union_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeable-sketch hierarchy rollup with Spark 3.5's built-in
-    Apache DataSketches HLL functions: per-DAY hll_sketch_agg(user_id)
-    sketches union upward to months via hll_union_agg — distinct counts
-    DON'T roll up, sketches DO, which is why a 100 TB metrics store keeps
-    constant-size sketch columns per grain instead of recomputing
-    distincts from raw events at every level. lgConfigK=14 bounds the
-    standard error at ~0.8%, so the month-level estimate must land within
-    5% of the exact distinct (asserted per month). Unlike the
-    DataSketches-library agg_hll_sketch_merge (rows-only by design), the
-    contract form here is oracle-checkable: exact counts + the
-    within-bound boolean. Both aggregation levels are partial-aggregable;
-    the shuffle carries <=16 KB sketch blobs."""
-    t = Tables(spark, sf_dir)
-    ev = t.events.where(F.col("ts").isNotNull())  # oracle mirrors
-    daily = ev.groupBy(
-        F.to_date("ts").alias("day"),
-        F.date_format("ts", "yyyy-MM").alias("month"),
-    ).agg(F.expr("hll_sketch_agg(user_id, 14)").alias("sk"))
-    monthly = daily.groupBy("month").agg(
-        F.expr("hll_sketch_estimate(hll_union_agg(sk))").alias("est"),
-        F.count(F.lit(1)).alias("n_days"),
-    )
-    exact = ev.groupBy(
-        F.date_format("ts", "yyyy-MM").alias("month")
-    ).agg(F.count_distinct("user_id").alias("exact_u"))
-    return monthly.join(exact, "month").select(
-        "month",
-        "exact_u",
-        F.col("n_days").cast("bigint").alias("n_days"),
-        (
-            F.abs(F.col("est") - F.col("exact_u")) / F.col("exact_u")
-            <= 0.05
-        ).alias("within_5pct"),
-    )
-
-
-# ===========================================================================
 # wave module round7c (formerly operators/round7c.py)
 # Round-6 fifty-fifth wave (SURVEY.md §2.R): SQL ergonomics — the SQL
 # PIVOT clause and named WINDOW definitions.
@@ -321,146 +266,11 @@ def graph_link_prediction_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # ===========================================================================
-# wave module round7f (round-7 fifty-eighth wave, SURVEY.md §2.R): scalable
-# global row indexing without a single-task window and IP/CIDR
-# log-enrichment joins.
+# wave module round7f (round-7 fifty-eighth wave, SURVEY.md §2.R): weighted
+# systematic sampling.
 # ===========================================================================
 
 from pyspark.sql import Window
-
-
-@register(
-    "fn_global_row_index_scalable",
-    oracle="""
-SELECT o_orderkey, row_number() OVER (ORDER BY o_orderkey) AS global_idx
-FROM orders
-""",
-)
-def fn_global_row_index_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dense global 1-based row index ordered by a unique key WITHOUT the
-    single-task global window (``row_number() OVER (ORDER BY k)`` with no
-    PARTITION BY funnels 100 TB through ONE task — the canonical scale
-    killer, banned here by a plan test asserting no SinglePartition
-    exchange). The scalable shape: range-repartition on the key (order
-    ACROSS partitions), stamp the physical partition id, count rows per
-    partition (collect is bounded by the partition count, 32 rows — not
-    the corpus), turn counts into per-partition starting offsets on the
-    driver, then add a PARTITION-LOCAL row_number to the broadcast
-    offset. The ranged relation is persisted so the sampled range
-    boundaries are computed once and both passes (counts, final index)
-    see identical partition assignment. Oracle: the single-window
-    row_number DuckDB can afford at sf0.01."""
-    t = Tables(spark, sf_dir)
-    n_parts = 32
-    ranged = (
-        t.orders.select("o_orderkey")
-        .repartitionByRange(n_parts, "o_orderkey")
-        .withColumn("pid", F.spark_partition_id())
-        .transform(op_cache)
-    )
-    # bounded driver collect: <= n_parts rows regardless of corpus size
-    counts = sorted(
-        (r["pid"], r["cnt"])
-        for r in ranged.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    )
-    offsets, acc = [], 0
-    for pid, cnt in counts:
-        offsets.append((pid, acc))
-        acc += cnt
-    off_df = spark.createDataFrame(offsets or [(0, 0)], "pid int, off long")
-    w = Window.partitionBy("pid").orderBy("o_orderkey")
-    return (
-        ranged.withColumn("local_idx", F.row_number().over(w))
-        .join(F.broadcast(off_df), "pid")  # n_parts rows: dimension-bounded
-        .select(
-            "o_orderkey",
-            (F.col("off") + F.col("local_idx")).alias("global_idx"),
-        )
-    )
-
-
-# 10.0.0.0/9 + 10.128.0.0/9 partition the /8; 10.42.0.0/16 nests inside
-# corp-a so longest-prefix matching is actually exercised. (label, lo, hi,
-# prefix_len) with lo/hi precomputed as ints — same literals in the oracle.
-_CIDR_BLOCKS = [
-    ("corp-a", 167772160, 176160767, 9),
-    ("corp-b", 176160768, 184549375, 9),
-    ("lab", 170524672, 170590207, 16),
-]
-
-
-@register(
-    "fn_ip_cidr_match",
-    oracle="""
-WITH ip AS (
-  SELECT event_id, user_id,
-         167772160 + (user_id % 200) * 65536
-         + ((user_id * 7) % 256) * 256 + ((user_id * 13) % 256) AS ip_int
-  FROM events),
-cidr AS (SELECT * FROM (VALUES
-    ('corp-a', 167772160, 176160767, 9),
-    ('corp-b', 176160768, 184549375, 9),
-    ('lab',    170524672, 170590207, 16)) t(label, lo, hi, plen)),
-m AS (
-  SELECT event_id, max(user_id) AS user_id,
-         arg_max(label, plen) AS label
-  FROM ip JOIN cidr ON ip_int BETWEEN lo AND hi
-  GROUP BY event_id)
-SELECT label, count(*) AS n_events,
-       count(DISTINCT user_id) AS n_users
-FROM m GROUP BY label
-""",
-)
-def fn_ip_cidr_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Log-ingestion IP enrichment: synthesize a deterministic dotted-quad
-    per event (octets are pure user_id arithmetic), PARSE it back to a
-    32-bit integer JVM-side (split + casts + place-value multiply — the
-    string round-trip is proven against an oracle that computes the int
-    directly), then longest-prefix-match against a CIDR block table via
-    an integer range join. Scale shapes: the block table is a bounded
-    literal dimension, so the BETWEEN join is a broadcast nested loop
-    that costs O(rows x blocks) with tiny blocks — linear, never
-    row x row; longest-prefix selection is a partial-aggregable
-    max_by(label, prefix_len) per event (no same-length overlaps exist
-    by construction, so max_by is deterministic), not a window. Oracle:
-    identical block literals + arg_max."""
-    t = Tables(spark, sf_dir)
-    uid = F.col("user_id")
-    # F.concat, not concat_ws: concat_ws SKIPS null args, so a NULL user_id
-    # would emit a short dotted-quad whose split()[3] is an ANSI
-    # out-of-bounds crash; concat propagates the NULL end-to-end, matching
-    # the oracle's null-propagating arithmetic (NULL ip joins nothing).
-    ip_str = F.concat(
-        F.lit("10."),
-        (uid % 200).cast("string"),
-        F.lit("."),
-        ((uid * 7) % 256).cast("string"),
-        F.lit("."),
-        ((uid * 13) % 256).cast("string"),
-    )
-    parts = F.split(ip_str, r"\.")
-    ip_int = (
-        parts.getItem(0).cast("long") * 16777216
-        + parts.getItem(1).cast("long") * 65536
-        + parts.getItem(2).cast("long") * 256
-        + parts.getItem(3).cast("long")
-    )
-    ip = t.events.select("event_id", "user_id", ip_int.alias("ip_int"))
-    cidr = spark.createDataFrame(
-        _CIDR_BLOCKS, "label string, lo long, hi long, plen int"
-    )
-    matched = ip.join(
-        F.broadcast(cidr),  # bounded literal dim: broadcast is always safe
-        (F.col("ip_int") >= F.col("lo")) & (F.col("ip_int") <= F.col("hi")),
-    )
-    per_event = matched.groupBy("event_id").agg(
-        F.max("user_id").alias("user_id"),
-        F.expr("max_by(label, plen)").alias("label"),
-    )
-    return per_event.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.countDistinct("user_id").alias("n_users"),
-    )
 
 
 _SYS_K = 100  # systematic sample size (thresholds at (2j+1)·W/2k, j<k)

@@ -1,5 +1,6 @@
 """§2.AG round-14 block: parameterized SQL — the Python-side
-`spark.sql(query, args=...)` binding API (SPARK-41666/44066).
+`spark.sql(query, args=...)` binding API (SPARK-41666/44066) and SQL
+session variables (DECLARE VARIABLE / SET VAR, SPARK-46908).
 
 sql_script_execute_immediate_params covered SQL-side binding (EXECUTE
 IMMEDIATE ... USING); these cover the API every PySpark application
@@ -14,7 +15,9 @@ The contract proven here is literal-equivalence: the bound query must
 plan and answer exactly as the same query with the values inlined — which
 is precisely what the DuckDB oracle runs. A binding that coerced a type
 (int → string), shifted a timestamp, or mis-ordered positional args
-breaks the hash.
+breaks the hash. Session variables resolve at analysis time too, so a
+variable-parameterized query plans exactly like its literal twin (the
+oracle inlines the variable's defining subquery verbatim).
 
 Scale posture: zero runtime cost — bound parameters are parse-time
 literals, so the filter they feed pushes to the scan exactly like a
@@ -28,7 +31,7 @@ import datetime
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401  (API symmetry)
 
-from ai_dataingestion_spark.catalog import register
+from ai_dataingestion_spark.catalog import register, sql_op
 from ai_dataingestion_spark.registry import register_views
 
 
@@ -103,3 +106,40 @@ def sql_positional_parameters(spark: SparkSession, sf_dir: str) -> DataFrame:
             1000.0,
         ],
     )
+
+
+sql_op(
+    "sql_session_variables",
+    spark_sql=(
+        "DECLARE OR REPLACE VARIABLE graft_z_tbl STRING DEFAULT 'customer'",
+        "DECLARE OR REPLACE VARIABLE graft_z_thresh DOUBLE",
+        "SET VAR graft_z_thresh = (SELECT avg(c_acctbal) FROM customer)",
+        """
+SELECT c_mktsegment,
+       count(*) AS n_above,
+       coalesce(CAST(round(sum(c_acctbal) * 100) AS BIGINT), 0)
+         AS bal_cents
+FROM IDENTIFIER(graft_z_tbl)
+WHERE c_acctbal > graft_z_thresh
+GROUP BY c_mktsegment
+""",
+    ),
+    oracle="""
+SELECT c_mktsegment,
+       count(*) AS n_above,
+       coalesce(CAST(round(sum(c_acctbal) * 100) AS BIGINT), 0)
+         AS bal_cents
+FROM customer
+WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer)
+GROUP BY c_mktsegment
+""",
+    doc="""SQL session variables (SPARK-46908): DECLARE VARIABLE holds a
+    session scalar, SET VAR binds it from a query (here the corpus-mean
+    balance), and the consuming statement uses BOTH value substitution
+    (the threshold predicate) and IDENTIFIER(variable) relation binding —
+    the parameterized-notebook pattern without any client-side string
+    splicing. Variables resolve at analysis time, so the plan equals the
+    literal twin's (the threshold is a foldable scalar subquery result;
+    the predicate still reaches the scan). Empty corpus: a NULL mean makes
+    the predicate NULL and both engines return zero rows.""",
+)

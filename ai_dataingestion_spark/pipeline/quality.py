@@ -26,8 +26,14 @@ from ai_dataingestion_spark.functions.portable import (
     content_fingerprint_sql,
     dec_sum,
     dec_sum_sql,
+    decile_bin,
+    decile_bin_sql,
+    decile_cuts,
+    decile_cuts_sql,
     hash60_expr,
     hash60_sql,
+    percentile,
+    percentile_sql,
     PRE_PERIOD_SQL,
     pre_period,
     pround,
@@ -1082,11 +1088,11 @@ def quality_key_sequence_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "quality_outlier_iqr",
-    oracle="""
+    oracle=f"""
 WITH fences AS (
   SELECT o_orderstatus,
-         quantile_cont(o_totalprice, 0.25) AS q1,
-         quantile_cont(o_totalprice, 0.75) AS q3
+         {percentile_sql("o_totalprice", 0.25)} AS q1,
+         {percentile_sql("o_totalprice", 0.75)} AS q3
   FROM orders GROUP BY o_orderstatus
 )
 SELECT o.o_orderstatus,
@@ -1108,8 +1114,8 @@ def quality_outlier_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
     count comparisons see identical thresholds."""
     o = Tables(spark, sf_dir).orders
     fences = o.groupBy("o_orderstatus").agg(
-        F.percentile("o_totalprice", 0.25).alias("q1"),
-        F.percentile("o_totalprice", 0.75).alias("q3"),
+        percentile("o_totalprice", 0.25).alias("q1"),
+        percentile("o_totalprice", 0.75).alias("q3"),
     )
     hi = F.col("q3") + 1.5 * (F.col("q3") - F.col("q1"))
     lo = F.col("q1") - 1.5 * (F.col("q3") - F.col("q1"))
@@ -1374,30 +1380,11 @@ WITH pre AS (
   WHERE {PRE_PERIOD_SQL}
     AND (value IS NULL OR isfinite(value))
 ),
-cuts AS (
-  SELECT CAST(quantile_cont(value, 0.1) AS DOUBLE) AS q1,
-         CAST(quantile_cont(value, 0.2) AS DOUBLE) AS q2,
-         CAST(quantile_cont(value, 0.3) AS DOUBLE) AS q3,
-         CAST(quantile_cont(value, 0.4) AS DOUBLE) AS q4,
-         CAST(quantile_cont(value, 0.5) AS DOUBLE) AS q5,
-         CAST(quantile_cont(value, 0.6) AS DOUBLE) AS q6,
-         CAST(quantile_cont(value, 0.7) AS DOUBLE) AS q7,
-         CAST(quantile_cont(value, 0.8) AS DOUBLE) AS q8,
-         CAST(quantile_cont(value, 0.9) AS DOUBLE) AS q9
-  FROM pre
-),
+cuts AS (SELECT {decile_cuts_sql("value")} FROM pre),
 binned AS (
   SELECT CASE WHEN {PRE_PERIOD_SQL} THEN 'pre' ELSE 'post' END
            AS period,
-         (CASE WHEN value > q1 THEN 1 ELSE 0 END) +
-         (CASE WHEN value > q2 THEN 1 ELSE 0 END) +
-         (CASE WHEN value > q3 THEN 1 ELSE 0 END) +
-         (CASE WHEN value > q4 THEN 1 ELSE 0 END) +
-         (CASE WHEN value > q5 THEN 1 ELSE 0 END) +
-         (CASE WHEN value > q6 THEN 1 ELSE 0 END) +
-         (CASE WHEN value > q7 THEN 1 ELSE 0 END) +
-         (CASE WHEN value > q8 THEN 1 ELSE 0 END) +
-         (CASE WHEN value > q9 THEN 1 ELSE 0 END) AS bin
+         {decile_bin_sql("value")} AS bin
   FROM events CROSS JOIN cuts
   WHERE (value IS NULL OR isfinite(value))
 ),
@@ -1441,21 +1428,10 @@ def quality_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = Tables(spark, sf_dir).events.where(finite("value"))
     pre_pred = pre_period()
-    cuts = e.filter(pre_pred).agg(
-        *[
-            F.expr(
-                f"percentile_cont({q / 10}) WITHIN GROUP (ORDER BY value)"
-            ).alias(f"q{q}")
-            for q in range(1, 10)
-        ]
-    )
-    bin_ = sum(
-        F.when(F.col("value") > F.col(f"q{q}"), 1).otherwise(0)
-        for q in range(1, 10)
-    )
+    cuts = e.filter(pre_pred).agg(*decile_cuts("value"))
     binned = e.crossJoin(F.broadcast(cuts)).select(
         F.when(pre_pred, "pre").otherwise("post").alias("period"),
-        bin_.alias("bin"),
+        decile_bin("value").alias("bin"),
     )
     # Period totals derive from the ≤10-row per-bin counts via an
     # unpartitioned window, so the scan + crossJoin chain runs once.

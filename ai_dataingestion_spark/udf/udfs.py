@@ -56,6 +56,33 @@ def udf_python(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
+    "udf_python_arrow",
+    oracle="""
+SELECT o_orderkey,
+       lower(replace(o_orderpriority, '-', '_')) AS priority_slug
+FROM orders
+""",
+)
+def udf_python_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Arrow-optimized Python UDF (`useArrow=True`, Spark 3.5+): same
+    row-wise signature as the classic pickled UDF but the executor⇄Python
+    transfer is Arrow-batched — the migration path for legacy UDF code
+    that can't be vectorized yet (§2.J surface completion next to
+    udf_python / udf_pandas_scalar). The logic (priority slugging) is
+    deliberately trivial; what's under test is the Arrow serialization
+    round-trip of the modern UDF flavor."""
+
+    @F.udf(StringType(), useArrow=True)
+    def slug(p: str) -> str:
+        if p is None:  # replace(NULL, ...) is NULL in the oracle
+            return None
+        return p.replace("-", "_").lower()
+
+    o = Tables(spark, sf_dir).orders
+    return o.select("o_orderkey", slug("o_orderpriority").alias("priority_slug"))
+
+
+@register(
     "udf_pandas_scalar",
     oracle="""
 SELECT l_orderkey, l_linenumber,

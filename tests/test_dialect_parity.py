@@ -197,17 +197,130 @@ def test_levenshtein_parity(spark, data):
 def test_median_interpolation_parity(spark, data):
     """median over generated doubles: both engines interpolate even-count
     midpoints as (a+b)/2 on identical inputs — the assumption agg_median's
-    oracle rests on."""
+    oracle rests on; the ``percentile`` / ``percentile_sql`` twins agree
+    at every quantile the operators use. A fixed DECIMAL(38,2) case shows
+    both twins interpolate in the double domain: the first quartile of
+    {1.25, 2.50, 2.55} is 1.875, where DuckDB's own DECIMAL interpolation
+    would give 1.87."""
     xs = data.draw(st.lists(DOUBLES, min_size=1, max_size=41))
     from pyspark.sql import functions as F
 
+    from ai_dataingestion_spark.functions.portable import (
+        percentile,
+        percentile_sql,
+    )
+
+    qs = (0.1, 0.25, 0.5, 0.9)
     df = _spark_one_col(spark, xs, "x double")
-    got = df.agg(F.round(F.median("x"), 6).alias("m")).collect()[0].m
+    row = df.agg(
+        F.round(F.median("x"), 6).alias("m"),
+        *[F.round(percentile("x", q), 6).alias(f"p{i}") for i, q in enumerate(qs)],
+    ).collect()[0]
     con = duckdb.connect()
     want = con.execute(
-        "SELECT round(median(x), 6) FROM (SELECT unnest(?) AS x)", [xs]
+        "SELECT round(median(x), 6), "
+        + ", ".join(f"round({percentile_sql('x', q)}, 6)" for q in qs)
+        + " FROM (SELECT unnest(?) AS x)",
+        [xs],
+    ).fetchone()
+    assert tuple(row) == want
+
+    decs = ["1.25", "2.50", "2.55"]
+    dec_df = spark.createDataFrame([(x,) for x in decs], "s string").selectExpr(
+        "CAST(s AS DECIMAL(38,2)) AS x"
+    )
+    got = dec_df.agg(percentile("x", 0.25).alias("p")).collect()[0].p
+    want = con.execute(
+        f"SELECT {percentile_sql('x', 0.25)} FROM "
+        "(SELECT CAST(unnest(?) AS DECIMAL(38,2)) AS x)",
+        [decs],
     ).fetchone()[0]
+    assert got == want == 1.875
+
+
+# 0, NULL, negatives, 1e-7, and values just below and at powers of ten
+MANT_EXP_VALUES = [
+    0.0, None, -0.0, 1e-7, -1e-7, 0.0999999, 0.1, 0.99999, 1.0, -1.0, 9.99999,
+    10.0, 999.99, 1000.0, -1000.0, 123456.789, -2.5e10, 1e15, 9.9999e14,
+]
+
+
+def test_mant_exp_twin_parity(spark):
+    """``mant_exp_cols`` and ``mant_exp_sql`` emit the same (mantissa,
+    exponent) pair: zero is (0.0, 0), NULL is (NULL, NULL), the sign rides
+    the mantissa, and a power of ten has mantissa 1.0."""
+    from pyspark.sql import functions as F
+
+    from ai_dataingestion_spark.functions.portable import (
+        mant_exp_cols,
+        mant_exp_sql,
+    )
+
+    rows = list(enumerate(MANT_EXP_VALUES))
+    df = spark.createDataFrame(rows, "i int, x double")
+    got = sorted(
+        tuple(r) for r in df.select("i", *mant_exp_cols(F.col("x"), "v")).collect()
+    )
+    want = sorted(
+        tuple(r)
+        for r in duckdb.connect().execute(
+            f"SELECT i, {mant_exp_sql('x', 'v')} FROM (SELECT unnest(?) AS i, "
+            "unnest(?::DOUBLE[]) AS x)",
+            [[i for i, _ in rows], [x for _, x in rows]],
+        ).fetchall()
+    )
     assert got == want
+    by_value = {MANT_EXP_VALUES[i]: (m, e) for i, m, e in got}
+    assert by_value[0.0] == (0.0, 0)
+    assert by_value[None] == (None, None)
+    assert by_value[1000.0] == (1.0, 3)
+    assert by_value[-1e-7] == (-1.0, -7)
+
+
+def test_decile_twin_parity(spark):
+    """``decile_cuts`` / ``decile_bin`` and their SQL twins fit the same
+    nine cuts and put every row in the same bin, 0 … 9; every value
+    against an empty fit (NULL cuts) falls in bin 0."""
+    from pyspark.sql import functions as F
+
+    from ai_dataingestion_spark.functions.portable import (
+        decile_bin,
+        decile_bin_sql,
+        decile_cuts,
+        decile_cuts_sql,
+    )
+
+    rows = list(enumerate(MANT_EXP_VALUES + [float(k) for k in range(-5, 15)]))
+    df = spark.createDataFrame(rows, "i int, x double")
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE t AS SELECT unnest(?) AS i, unnest(?::DOUBLE[]) AS x",
+        [[i for i, _ in rows], [x for _, x in rows]],
+    )
+    for fit, fit_sql in ((F.lit(True), "true"), (F.lit(False), "false")):
+        cuts = df.where(fit).agg(*decile_cuts("x"))
+        got_cuts = tuple(cuts.collect()[0])
+        got = sorted(
+            tuple(r)
+            for r in df.crossJoin(cuts).select("i", decile_bin("x")).collect()
+        )
+        want_cuts = con.execute(
+            f"SELECT {decile_cuts_sql('x')} FROM t WHERE {fit_sql}"
+        ).fetchone()
+        want = sorted(
+            con.execute(
+                f"WITH cuts AS (SELECT {decile_cuts_sql('x')} FROM t "
+                f"WHERE {fit_sql}) SELECT i, {decile_bin_sql('x')} "
+                "FROM t CROSS JOIN cuts"
+            ).fetchall()
+        )
+        assert got_cuts == want_cuts
+        assert got == want
+        bins = dict(got)
+        if fit_sql == "false":
+            assert set(bins.values()) == {0}
+        else:
+            assert set(bins.values()) == set(range(10))
 
 
 def test_connected_components_vs_union_find(spark):

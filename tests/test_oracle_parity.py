@@ -10,9 +10,26 @@ import pytest
 
 from ai_dataingestion_spark.ai import dedup, multimodal, similarity, text
 from ai_dataingestion_spark.catalog import all_specs
-from ai_dataingestion_spark.operators import analytics, events
+from ai_dataingestion_spark.functions import (
+    csv_depth,
+    ingest_hygiene,
+    map_hof,
+    regex_depth,
+    scalar,
+    xml_depth,
+)
+from ai_dataingestion_spark.operators import (
+    aggregates,
+    analytics,
+    collation_depth,
+    events,
+    generators,
+    observability,
+    variant_depth,
+)
 from ai_dataingestion_spark.pipeline import quality
 from ai_dataingestion_spark.sources import python_pushdown, scans
+from ai_dataingestion_spark.udf import arrow_native, udfs
 from tests.parity import compare, duckdb_connect, run_with_spawn_retry
 
 SPECS = all_specs()
@@ -178,6 +195,13 @@ def _registered_in(module) -> set[str]:
     }
 
 
+# modules that each own one family of scalar functions
+FN_FAMILY_MODULES = (
+    csv_depth, ingest_hygiene, map_hof, regex_depth, xml_depth,
+    collation_depth, generators, observability, variant_depth,
+)
+
+
 @pytest.mark.parametrize(
     "module, owned",
     [
@@ -198,9 +222,17 @@ def _registered_in(module) -> set[str]:
          - {"pipeline_e2e_text"} | {"schema_evolve"}),
         (python_pushdown, {n for n in SPECS if n.startswith("source_")}
          - STREAMING_SOURCE_IDS),
+        (aggregates, {n for n in SPECS if n.startswith("agg_")}
+         - {"agg_count_min_topk"}),
+        (scalar, {n for n in SPECS if n.startswith("fn_")}
+         - set().union(*map(_registered_in, FN_FAMILY_MODULES))
+         | {"events_time_of_day_rollup"}),
+        (udfs, {n for n in SPECS if n.startswith("udf_")}
+         - _registered_in(arrow_native) | {"udtf_python"}),
     ],
     ids=["events", "relational", "text", "similarity", "multimodal", "dedup",
-         "scan-sink", "quality-pipeline", "sources"],
+         "scan-sink", "quality-pipeline", "sources", "aggregates", "functions",
+         "udf"],
 )
 def test_domain_module_owns_its_ids(module, owned):
     """A domain's operators register from its module and nowhere else."""

@@ -100,6 +100,22 @@ def test_unchanged_code_ranks_behind_everything(certified):
         (portable, "CUTOVER_DATE", "2024-01-16",
          "quality_psi_drift quality_ks_two_sample events_pre_post_welch_t "
          "events_diff_in_differences events_cuped_adjustment"),
+        # a twin's code: every operator whose Spark side calls it moves
+        (portable.percentile, "__code__", (lambda col, q: None).__code__,
+         "agg_median agg_percentile agg_median_of_means agg_equidepth_histogram "
+         "win_percentile_disc_vs_cont text_lang_stats text_readability_score "
+         "text_length_band_filter embed_norm_percentiles "
+         "lineitem_ship_latency_by_nation supplier_quadrant_classification "
+         "events_session_gap_sensitivity events_anomaly_mad events_alert_rules "
+         "events_time_to_convert_quantiles events_transition_dwell_stats "
+         "quality_outlier_iqr quality_psi_drift"),
+        (portable.decile_bin, "__code__", (lambda col: None).__code__,
+         "agg_equidepth_histogram quality_psi_drift"),
+        (portable.mant_exp_cols, "__code__",
+         (lambda col, name, dp=6: []).__code__,
+         "agg_stats agg_partial_merge_proof "
+         "orders_seasonal_decomposition_additive events_cuped_adjustment "
+         "events_sample_size_calc"),
         # run-time state: a global op_tmpdir rebinds, and a cache dict
         (tmpdirs, "_ROOT", "/elsewhere", ""),
         (registry, "_events_ts_unit", {("a",): "ns"}, ""),
@@ -108,13 +124,24 @@ def test_unchanged_code_ranks_behind_everything(certified):
          "sessions-helper", "calendar-helper", "net-price-helper",
          "money-sum-helper", "source-token-counts-helper", "df-cap-constant",
          "cosine-helper", "fingerprint-helper", "footer-reader",
-         "cutover-constant", "rebound-global", "cache-dict"],
+         "cutover-constant", "percentile-twin", "decile-twin", "mant-exp-twin",
+         "rebound-global", "cache-dict"],
 )
 def test_changed_dependency_moves_exactly_its_operators(
     certified, monkeypatch, module, name, value, moved
 ):
     monkeypatch.setattr(module, name, value)
     assert _ranks(certified) == {n: 1 if n in moved.split() else 4 for n in SPECS}
+
+
+def test_module_names_stay_out_of_fingerprints(certified, monkeypatch):
+    """A class body reads its module's ``__name__``; renaming every package
+    module, as a move to another module would, leaves every digest as it
+    was."""
+    for mod in list(sys.modules.values()):
+        if getattr(mod, "__name__", "").startswith("ai_dataingestion_spark"):
+            monkeypatch.setattr(mod, "__name__", f"{mod.__name__}_moved")
+    assert _ranks(certified) == dict.fromkeys(SPECS, 4)
 
 
 def test_rank_one_orders_oldest_green_round_first(certified, monkeypatch):

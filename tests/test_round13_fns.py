@@ -1,6 +1,7 @@
-"""Semantic tests for the round-13 function-surface block
-(operators/round13_fns.py): ordering/tie-break inside listagg, variable
-resolution semantics, and the name-abbreviation contract."""
+"""Semantic tests for the round-13 function-surface block (now in
+functions/scalar.py and operators/sql_params.py): ordering/tie-break
+inside listagg, variable resolution semantics, and the name-abbreviation
+contract."""
 
 from __future__ import annotations
 

@@ -1,8 +1,9 @@
-"""Semantic tests for the round-15 §2.AK block (operators/round15_fns.py)
-— properties the per-op oracle hash can't state: theta set-algebra obeys
-inclusion-exclusion internally, the sketch estimates are EXACT (not
-merely close) in the pinned regime, and mask() preserves shape while
-changing only the classes it claims to."""
+"""Semantic tests for the round-15 §2.AK block (now in
+operators/aggregates.py and functions/scalar.py) — properties the per-op
+oracle hash can't state: theta set-algebra obeys inclusion-exclusion
+internally, the sketch estimates are EXACT (not merely close) in the
+pinned regime, and mask() preserves shape while changing only the classes
+it claims to."""
 
 from __future__ import annotations
 
