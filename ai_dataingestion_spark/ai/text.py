@@ -32,6 +32,8 @@ from ai_dataingestion_spark.catalog import register, sql_op
 from ai_dataingestion_spark.functions.portable import (
     hash60_expr,
     hash60_sql,
+    hash_bucket,
+    hash_bucket_sql,
     percentile,
     percentile_sql,
     pround,
@@ -1632,18 +1634,12 @@ def text_topk_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Train/test assignment: first md5 hex nibble of the salted doc id
-# (split_train_eval's content-free rule) — nibbles 0..b train (75%),
-# c..f test (25%). Identical hex on both engines.
-_SPLIT = "substring(md5(concat('nb', CAST(doc_id AS {s}))), 1, 1)"
-
-
 @register(
     "text_naive_bayes_source_classifier",
     oracle=f"""
 WITH split AS (
   SELECT doc_id, source, text,
-         CASE WHEN {_SPLIT.format(s="VARCHAR")} <= 'b'
+         CASE WHEN {hash_bucket_sql("doc_id", "nb")} <= 'b'
               THEN 'train' ELSE 'test' END AS split
   FROM documents
 ),
@@ -1702,8 +1698,9 @@ def text_naive_bayes_source_classifier(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """A TRAINED model inside the engine: multinomial Naive Bayes with
-    add-one smoothing learns P(token|source) on the md5-split 75%
-    train fold and classifies the held-out 25% by argmax of
+    add-one smoothing learns P(token|source) on a 75% train fold (salted
+    hash buckets 0 … b, ``hash_bucket``) and classifies the held-out 25%
+    (buckets c … f) by argmax of
     prior + Σ log-likelihood; output is the test confusion matrix.
     Every probability is a ratio of exact integer counts, so both
     engines build identical log-likelihood tables; per-doc score sums
@@ -1715,9 +1712,7 @@ def text_naive_bayes_source_classifier(
     per-class scan, no Python. Tokens unseen in training drop out of
     scoring identically on both sides (inner join to the vocab grid)."""
     d = Tables(spark, sf_dir).documents
-    nib = F.substring(
-        F.md5(F.concat(F.lit("nb"), F.col("doc_id").cast("string"))), 1, 1
-    )
+    nib = hash_bucket("doc_id", "nb")
     split = d.select(
         "doc_id",
         "source",
@@ -2121,7 +2116,7 @@ def text_perplexity_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH toks AS (
   SELECT doc_id, {tokens_sql()} AS t,
-         substring(md5('doc' || CAST(doc_id AS VARCHAR)), 1, 1) AS b
+         {hash_bucket_sql("doc_id", "doc")} AS b
   FROM documents
 ),
 grams AS (
@@ -2141,9 +2136,9 @@ ORDER BY n_hit_grams DESC, tr.doc_id
 def text_contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination (the screen every training corpus runs
     before an eval release): 5-gram overlap between the train split and the
-    held-out split (same deterministic md5-nibble split as
-    `split_train_eval`). The eval gram set is distinct-deduped and — being
-    orders of magnitude smaller than the corpus at every scale — broadcast
+    held-out split (the same salted hash buckets as `split_train_eval`;
+    buckets e and f are held out). The eval gram set is distinct-deduped
+    and — being orders of magnitude smaller than the corpus at every scale — broadcast
     into the probe join; train docs are scored by how many of their
     distinct 5-grams appear verbatim in eval. Expression-only gram
     generation (sequence + slice + array_join), no Python."""
@@ -2160,11 +2155,7 @@ def text_contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size(tk) >= 5)
         .select(
             "doc_id",
-            F.substring(
-                F.md5(F.concat(F.lit("doc"), F.col("doc_id").cast("string"))),
-                1,
-                1,
-            ).alias("b"),
+            hash_bucket("doc_id", "doc").alias("b"),
             F.explode(
                 F.transform(
                     F.sequence(F.lit(1), F.size(tk) - 4),
@@ -2542,4 +2533,121 @@ def corpus_source_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(ent, 6).alias("source_entropy_bits"),
             F.round(F.pow(F.lit(2.0), ent), 6).alias("effective_sources"),
         )
+    )
+
+
+@register(
+    "search_inverted_index_and_query",
+    oracle=f"""
+WITH idx AS (
+  SELECT DISTINCT doc_id, unnest({tokens_sql()}) AS term
+  FROM documents
+)
+SELECT 'hash AND join' AS query, count(*) AS n_matches,
+       min(a.doc_id) AS first_doc, max(a.doc_id) AS last_doc
+FROM idx a JOIN idx b ON a.doc_id = b.doc_id
+WHERE a.term = 'hash' AND b.term = 'join'
+UNION ALL
+SELECT 'filter AND merge', count(*), min(a.doc_id), max(a.doc_id)
+FROM idx a JOIN idx b ON a.doc_id = b.doc_id
+WHERE a.term = 'filter' AND b.term = 'merge'
+UNION ALL
+SELECT 'scan AND NOT batch', count(*), min(a.doc_id), max(a.doc_id)
+FROM idx a
+WHERE a.term = 'scan'
+  AND NOT EXISTS (SELECT 1 FROM idx b
+                  WHERE b.doc_id = a.doc_id AND b.term = 'batch')
+""",
+)
+def search_inverted_index_and_query(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Inverted-index boolean retrieval: the postings relation
+    (term → doc) built once, then three query shapes answered from it —
+    conjunction (postings self-join on doc), and negation (anti join) —
+    the boolean-search core of every lexical engine, and the same
+    candidate-generation shape the rare-shingle dedup index uses.
+    Postings are distinct (term, doc) pairs; each query touches only
+    its terms' postings lists. The index is cached across the three
+    queries."""
+    d = Tables(spark, sf_dir).documents
+    idx = (
+        d.select("doc_id", F.explode(tokens()).alias("term"))
+        .distinct()
+        .transform(op_cache)
+    )
+
+    def postings(term: str) -> DataFrame:
+        return idx.filter(F.col("term") == term).select("doc_id")
+
+    def q_and(name: str, t1: str, t2: str) -> DataFrame:
+        m = postings(t1).join(postings(t2), "doc_id")
+        return m.agg(
+            F.count(F.lit(1)).alias("n_matches"),
+            F.min("doc_id").alias("first_doc"),
+            F.max("doc_id").alias("last_doc"),
+        ).select(F.lit(name).alias("query"), "n_matches", "first_doc", "last_doc")
+
+    def q_and_not(name: str, t1: str, t2: str) -> DataFrame:
+        m = postings(t1).join(postings(t2), "doc_id", "left_anti")
+        return m.agg(
+            F.count(F.lit(1)).alias("n_matches"),
+            F.min("doc_id").alias("first_doc"),
+            F.max("doc_id").alias("last_doc"),
+        ).select(F.lit(name).alias("query"), "n_matches", "first_doc", "last_doc")
+
+    return (
+        q_and("hash AND join", "hash", "join")
+        .unionByName(q_and("filter AND merge", "filter", "merge"))
+        .unionByName(q_and_not("scan AND NOT batch", "scan", "batch"))
+    )
+
+
+@register(
+    "pack_context_windows",
+    oracle=f"""
+WITH sized AS (
+  SELECT source, doc_id, len({tokens_sql()}) AS n_tokens
+  FROM documents
+),
+packed AS (
+  SELECT source, doc_id, n_tokens,
+         CAST(floor((sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
+                ROWS UNBOUNDED PRECEDING) - n_tokens) / 512.0) AS BIGINT)
+           AS window_id
+  FROM sized
+)
+SELECT source, window_id, count(*) AS n_docs,
+       CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
+       min(doc_id) AS first_doc, max(doc_id) AS last_doc
+FROM packed
+GROUP BY source, window_id
+ORDER BY source, window_id
+""",
+)
+def pack_context_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Context-window packing (greedy sequential fill used to batch docs
+    into fixed token budgets for training): within each source, docs in
+    doc_id order are assigned to a window by the running token count
+    before the doc, quantized at 512 tokens. One window cumsum per
+    source partition — at corpus scale each source shard packs
+    independently, so the partition key IS the parallelism."""
+    d = Tables(spark, sf_dir).documents
+    sized = d.select(
+        "source", "doc_id", F.size(tokens()).alias("n_tokens")
+    )
+    w = (
+        Window.partitionBy("source")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    packed = sized.withColumn(
+        "window_id",
+        F.floor((F.sum("n_tokens").over(w) - F.col("n_tokens")) / 512.0),
+    )
+    return packed.groupBy("source", "window_id").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_tokens").alias("sum_tokens"),
+        F.min("doc_id").alias("first_doc"),
+        F.max("doc_id").alias("last_doc"),
     )

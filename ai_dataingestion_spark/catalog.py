@@ -206,9 +206,15 @@ def fingerprint(spec: QuerySpec) -> str:
         for var, cell in zip(obj.__code__.co_freevars, obj.__closure__ or ()):
             todo.append((f"{key}.{var}", cell.cell_contents))
         # module globals, then package modules reached by name (module
-        # imports and function-local `from ... import`)
+        # imports and function-local `from ... import`), each scope once: a
+        # function importing from its own module must not count a constant
+        # twice, or moving it next to the names it imports moves its digest
         scopes = [obj.__globals__]
-        scopes += [vars(sys.modules[n]) for n in names if n.startswith(_PKG) and n in sys.modules]
+        for n in names:
+            if n.startswith(_PKG) and n in sys.modules:
+                scope = vars(sys.modules[n])
+                if not any(scope is s for s in scopes):
+                    scopes.append(scope)
         for scope in scopes:
             for n in names:
                 if n.startswith("__") and n.endswith("__"):

@@ -140,22 +140,21 @@ def decile_cuts_sql(expr: str) -> str:
 def decile_bin(col: str) -> Column:
     """A value's decile bin, 0 … 9: the number of cuts ``q1`` … ``q9``
     (``decile_cuts``, joined beside it) that ``col`` exceeds. Against NULL
-    cuts (an empty fit) every value falls in bin 0. An int; oracle twin:
-    ``decile_bin_sql``.
-
-    Known defect, current behaviour rather than the rule: a NULL value
-    exceeds no cut, so it is counted in bin 0 beside the lowest decile
-    (the ``decile_bin`` FOUND line in CHANGES.md)."""
-    return sum(
+    cuts (an empty fit) every value falls in bin 0; a NULL value has no bin
+    (NULL), so it is counted apart from the lowest decile. An int; oracle
+    twin: ``decile_bin_sql``."""
+    bins = sum(
         F.when(F.col(col) > F.col(f"q{q}"), 1).otherwise(0) for q in range(1, 10)
     )
+    return F.when(F.col(col).isNotNull(), bins)
 
 
 def decile_bin_sql(expr: str) -> str:
     """DuckDB twin of ``decile_bin`` over SQL expression ``expr``."""
-    return " + ".join(
+    bins = " + ".join(
         f"(CASE WHEN {expr} > q{q} THEN 1 ELSE 0 END)" for q in range(1, 10)
     )
+    return f"(CASE WHEN {expr} IS NOT NULL THEN {bins} END)"
 
 
 NET_PRICE_SQL = "(l_extendedprice * (1 - l_discount))"
@@ -192,6 +191,28 @@ def hash60_expr(s: str) -> str:
 def hash60_sql(s: str) -> str:
     """DuckDB twin of ``hash60_expr`` over SQL string expression ``s``."""
     return f"CAST('0x'||substring(md5({s}),1,15) AS BIGINT)"
+
+
+def hash_bucket(key: str, salt: str = "") -> Column:
+    """The salted hash bucket of column ``key``: the first hex digit of
+    ``md5(salt || CAST(key AS STRING))``, a one-character string ``'0'`` …
+    ``'f'``. Seedless, so a row's bucket is the same under re-runs,
+    repartitioning and either engine, and a different salt gives an
+    independent assignment; a NULL key has no bucket (NULL). Only keys whose
+    text is engine-identical belong here (integers, strings). Oracle twin:
+    ``hash_bucket_sql``."""
+    text = F.col(key).cast("string")
+    if salt:
+        text = F.concat(F.lit(salt), text)
+    return F.substring(F.md5(text), 1, 1)
+
+
+def hash_bucket_sql(expr: str, salt: str = "") -> str:
+    """DuckDB twin of ``hash_bucket`` over SQL expression ``expr``."""
+    text = f"CAST({expr} AS VARCHAR)"
+    if salt:
+        text = f"{sql_quote(salt)} || {text}"
+    return f"substring(md5({text}), 1, 1)"
 
 
 def sql_quote(s: str) -> str:

@@ -5,11 +5,12 @@ from ai_dataingestion_spark.operators import (  # noqa: F401
     aggregates,
     analytics,
     events,
-    extended,
+    graph,
     joins,
     projections,
     sets,
     sorts,
+    sql_clauses,
     windows,
 )
 from ai_dataingestion_spark import functions  # noqa: F401
@@ -19,10 +20,6 @@ from ai_dataingestion_spark import sources  # noqa: F401
 from ai_dataingestion_spark import pipeline  # noqa: F401
 from ai_dataingestion_spark import streaming  # noqa: F401
 from ai_dataingestion_spark import plans  # noqa: F401
-from ai_dataingestion_spark.operators import advanced  # noqa: F401
-from ai_dataingestion_spark.operators import round5_waves  # noqa: F401
-from ai_dataingestion_spark.operators import round6_waves  # noqa: F401
-from ai_dataingestion_spark.operators import round7_waves  # noqa: F401
 from ai_dataingestion_spark.streaming import state_v2  # noqa: F401
 from ai_dataingestion_spark.operators import pipe_syntax  # noqa: F401
 from ai_dataingestion_spark.udf import udtf_depth  # noqa: F401
@@ -46,4 +43,3 @@ from ai_dataingestion_spark.functions import ingest_hygiene  # noqa: F401
 from ai_dataingestion_spark.functions import regex_depth  # noqa: F401
 from ai_dataingestion_spark.streaming import statestore_options  # noqa: F401
 from ai_dataingestion_spark.streaming import observe_stream  # noqa: F401
-from ai_dataingestion_spark.operators import round16_catalog  # noqa: F401

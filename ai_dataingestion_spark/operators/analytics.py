@@ -39,6 +39,7 @@ from ai_dataingestion_spark.functions.portable import (
     stable_sum,
     stable_sum_sql,
 )
+from ai_dataingestion_spark.operators.graph import copurchase_pairs, copurchase_pairs_sql
 from ai_dataingestion_spark.scale import broadcast_if_small
 from ai_dataingestion_spark.registry import Tables
 
@@ -3581,49 +3582,21 @@ def sales_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "market_basket_pairs",
-    oracle="""
-WITH order_parts AS (
-  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-),
-pair_counts AS (
-  SELECT a.l_partkey AS part1, b.l_partkey AS part2, count(*) AS n_orders
-  FROM order_parts a JOIN order_parts b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY a.l_partkey, b.l_partkey
-)
-SELECT part1, part2, n_orders FROM pair_counts
-WHERE n_orders >= 3
+    oracle=f"""
+SELECT part1, part2, n_orders
+FROM {copurchase_pairs_sql(3, out=("part1", "part2", "n_orders"))}
 """,
 )
 def market_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket co-occurrence: part pairs appearing together in >= 3
     orders. Pair fan-out per order is C(parts_in_order, 2) — bounded by
-    the ~7-line order format, NOT by corpus size; the per-order
-    collect_set keeps repeated parts within an order from inflating
-    pairs. This is the a-priori candidate-pair kernel at 100 TB: one
-    partial-aggregable basket groupBy, quadratic only within an order.
-
-    Optimization r16 (guide §2.4, remove shuffles outright): the first
-    draft generated pairs with distinct + a corpus×corpus self-equi-join
-    on l_orderkey (an exchange for the distinct plus two join exchanges,
-    with sort-merge hint machinery against AQE's broadcast/SHJ
-    misestimation of the corpus-sized sides); scale.basket_pair_explode
-    reaches the identical pair multiset with ONE groupBy(l_orderkey)
-    collect_set and a JVM-side combination generator — no join, no
-    candidate-pair shuffle, and the misestimation hazard disappears with
-    the join itself."""
+    the ~7-line order format, NOT by corpus size; a part repeated within
+    an order counts once. This is the a-priori candidate-pair kernel at
+    100 TB: the co-purchase relation (``graph.copurchase_pairs``) is one
+    partial-aggregable basket groupBy, quadratic only within an order,
+    with no join and no candidate-pair shuffle."""
     t = Tables(spark, sf_dir)
-    from ai_dataingestion_spark.scale import basket_pair_explode
-
-    return (
-        basket_pair_explode(
-            t.lineitem.select("l_orderkey", "l_partkey"),
-            "l_orderkey", "l_partkey", out=("part1", "part2"),
-        )
-        .groupBy("part1", "part2")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-        .filter(F.col("n_orders") >= 3)
-    )
+    return copurchase_pairs(t.lineitem, 3, out=("part1", "part2", "n_orders"))
 
 
 @register(

@@ -24,6 +24,8 @@ from ai_dataingestion_spark.catalog import register, sql_op
 from ai_dataingestion_spark.functions.portable import (
     grid_sum,
     grid_sum_sql,
+    hash_bucket,
+    hash_bucket_sql,
     mant_exp_cols,
     mant_exp_sql,
     percentile,
@@ -3185,11 +3187,10 @@ def events_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_ab_proportion_ztest",
-    oracle="""
+    oracle=f"""
 WITH users AS (
   SELECT user_id,
-         CASE WHEN CAST('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 1)
-                        AS BIGINT) % 2 = 0
+         CASE WHEN CAST('0x' || {hash_bucket_sql("user_id")} AS BIGINT) % 2 = 0
               THEN 'A' ELSE 'B' END AS grp,
          CASE WHEN sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
                    > 13 THEN 1 ELSE 0 END AS conv
@@ -3221,8 +3222,8 @@ def events_ab_proportion_ztest(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Two-proportion z-test for a deterministic A/B split: users are
-    hash-assigned (first md5 nibble parity — the portable-hash idiom, so
-    assignment is reproducible and balanced) and the pooled-variance z
+    hash-assigned (the parity of their ``hash_bucket``, so assignment is
+    reproducible and balanced) and the pooled-variance z
     statistic compares the two conversion rates — the experimentation
     primitive of a product analytics engine. The conversion predicate is
     the pluggable part; in this corpus EVERY user purchases at least
@@ -3235,12 +3236,7 @@ def events_ab_proportion_ztest(
     degenerate pooled rate, and portable-6dp-rounded."""
     e = Tables(spark, sf_dir).events
     grp = F.when(
-        F.expr(
-            "conv(substring(md5(cast(user_id as string)), 1, 1), 16, 10)"
-        ).cast("bigint")
-        % 2
-        == 0,
-        "A",
+        F.conv(hash_bucket("user_id"), 16, 10).cast("bigint") % 2 == 0, "A"
     ).otherwise("B")
     users = e.groupBy("user_id").agg(
         F.when(
@@ -3294,8 +3290,7 @@ _CHI2_95_DF1 = 3.841458820694124
     "events_ab_srm_check",
     oracle=f"""
 WITH arms AS (
-  SELECT CASE WHEN substring(md5('srm' || CAST(user_id AS VARCHAR)), 1, 1)
-                   <= '7'
+  SELECT CASE WHEN {hash_bucket_sql("user_id", "srm")} <= '7'
               THEN 'A' ELSE 'B' END AS arm
   FROM (SELECT DISTINCT user_id FROM events)
 ),
@@ -3317,7 +3312,7 @@ FROM cnt
 )
 def events_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sample-ratio-mismatch (SRM) guard for the deterministic 50/50
-    md5 user split every A/B operator here relies on
+    hash-bucket user split every A/B operator here relies on
     (events_ab_proportion_ztest, CUPED, DiD): a χ²₁ goodness-of-fit of
     observed arm sizes against the designed ratio — THE pre-test that
     invalidates an experiment before any metric is read (Fabijan
@@ -3326,15 +3321,7 @@ def events_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     χ² threshold is the same literal on both engines, and the flag
     compares identical doubles. One distinct + one 1-row reduce."""
     e = Tables(spark, sf_dir).events
-    arm = F.when(
-        F.substring(
-            F.md5(F.concat(F.lit("srm"), F.col("user_id").cast("string"))),
-            1,
-            1,
-        )
-        <= "7",
-        "A",
-    ).otherwise("B")
+    arm = F.when(hash_bucket("user_id", "srm") <= "7", "A").otherwise("B")
     arms = e.select("user_id").distinct().select(arm.alias("arm"))
     cnt = arms.agg(
         F.count(F.when(F.col("arm") == "A", 1)).alias("na"),
@@ -3449,8 +3436,7 @@ def events_pre_post_welch_t(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_diff_in_differences",
     oracle=f"""
 WITH tagged AS (
-  SELECT CASE WHEN CAST('0x' || substring(md5(CAST(user_id AS VARCHAR)), 1, 1)
-                        AS BIGINT) % 2 = 0
+  SELECT CASE WHEN CAST('0x' || {hash_bucket_sql("user_id")} AS BIGINT) % 2 = 0
               THEN 'treated' ELSE 'control' END AS grp,
          CASE WHEN {PRE_PERIOD_SQL} THEN 'pre' ELSE 'post' END
            AS period,
@@ -3486,7 +3472,7 @@ def events_diff_in_differences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Difference-in-differences: (post − pre) for the treated group
     minus (post − pre) for control — the workhorse causal estimator
     when randomization is only at the group level, composed from the
-    repo's two established idioms (md5-nibble deterministic group
+    repo's two established idioms (hash-bucket deterministic group
     assignment, cutover-date period split). Four cell means from
     exact DECIMAL sums, the DiD contrast derived with identical IEEE
     order in both engines. One partial-aggregable pass to a 4-cell
@@ -3497,11 +3483,7 @@ def events_diff_in_differences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = Tables(spark, sf_dir).events.where(finite("value"))
     grp = F.when(
-        F.expr(
-            "conv(substring(md5(cast(user_id as string)), 1, 1), 16, 10)"
-        ).cast("bigint")
-        % 2
-        == 0,
+        F.conv(hash_bucket("user_id"), 16, 10).cast("bigint") % 2 == 0,
         "treated",
     ).otherwise("control")
     period = F.when(pre_period(), "pre").otherwise("post")

@@ -6,7 +6,9 @@ predicates into the scan (PushedFilters) and prunes to the referenced columns
 need. Cross-engine cast traps (SURVEY.md §5.4): double→int casts TRUNCATE in
 Spark but ROUND in DuckDB, so integerization always goes through floor();
 decimal results are cast back to double so both engines hand the driver the
-same physical type.
+same physical type. Reshaping (pivot / unpivot) pins its value list: an
+unpinned pivot runs an extra distinct-values job and orders its columns
+nondeterministically.
 """
 
 from __future__ import annotations
@@ -14,7 +16,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ai_dataingestion_spark.catalog import register
-from ai_dataingestion_spark.functions.portable import NET_PRICE_SQL, net_price
+from ai_dataingestion_spark.functions.portable import (
+    NET_PRICE_SQL,
+    net_price,
+    stable_rounded_sum,
+    stable_rounded_sum_sql,
+)
 from ai_dataingestion_spark.registry import Tables
 
 
@@ -140,3 +147,60 @@ def distinct_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SELECT DISTINCT projection — Catalyst plans it as a hash aggregate, so
     the shuffle carries one row per distinct pair."""
     return Tables(spark, sf_dir).documents.select("lang", "source").distinct()
+
+
+_EVENT_TYPES = ("click", "purchase", "error", "signup", "view")
+
+
+@register(
+    "pivot_wide",
+    oracle=f"""
+SELECT user_id,
+       {stable_rounded_sum_sql("CASE WHEN event_type = 'click' THEN value END")} AS click,
+       {stable_rounded_sum_sql("CASE WHEN event_type = 'purchase' THEN value END")} AS purchase,
+       {stable_rounded_sum_sql("CASE WHEN event_type = 'error' THEN value END")} AS error,
+       {stable_rounded_sum_sql("CASE WHEN event_type = 'signup' THEN value END")} AS signup,
+       {stable_rounded_sum_sql("CASE WHEN event_type = 'view' THEN value END")} AS view
+FROM events
+GROUP BY user_id
+""",
+)
+def pivot_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """True pivot: event_type values become columns of per-user value sums.
+    The value list is pinned explicitly — an unpinned pivot triggers an
+    extra distinct-values job and nondeterministic column order."""
+    e = Tables(spark, sf_dir).events
+    wide = (
+        e.groupBy("user_id")
+        .pivot("event_type", list(_EVENT_TYPES))
+        # order-independent cell totals (round-14 ties catch; portable.py)
+        .agg(stable_rounded_sum("value"))
+    )
+    return wide
+
+
+@register(
+    "unpivot_melt",
+    oracle="""
+SELECT l_orderkey, l_linenumber, 'quantity' AS measure, l_quantity AS val
+FROM lineitem
+UNION ALL
+SELECT l_orderkey, l_linenumber, 'extendedprice', l_extendedprice FROM lineitem
+UNION ALL
+SELECT l_orderkey, l_linenumber, 'discount', l_discount FROM lineitem
+""",
+)
+def unpivot_melt(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Unpivot (melt): three lineitem measures into (measure, val) long form
+    — the inverse reshaping of pivot_wide, one output row per (row, measure)."""
+    li = Tables(spark, sf_dir).lineitem
+    return li.unpivot(
+        ["l_orderkey", "l_linenumber"],
+        [
+            F.col("l_quantity").alias("quantity"),
+            F.col("l_extendedprice").alias("extendedprice"),
+            F.col("l_discount").alias("discount"),
+        ],
+        "measure",
+        "val",
+    )

@@ -15,9 +15,15 @@ on the wall-clock value) to match DuckDB's naive TIMESTAMP type.
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import re
+import shutil
+from collections.abc import Callable
+from urllib.parse import urlparse
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession, functions as F
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -315,6 +321,58 @@ def register_views(spark: SparkSession, sf_dir: str, prefix: str = "") -> None:
     §3.2 EP2) sees the same post-shim relations as the DataFrame API."""
     for name in TABLE_NAMES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(prefix + name)
+
+
+def warehouse_table_name(sf_dir: str, base: str) -> str:
+    """``base`` suffixed per corpus: the sanitised leaf of the corpus dir's
+    real path plus 6 hex digits of that path's md5, so one corpus however
+    spelled has one table, two dirs with one leaf never share one, and no
+    '/' reaches the identifier."""
+    canon = os.path.realpath(sf_dir)
+    leaf = re.sub(r"[^0-9A-Za-z_]", "_", os.path.basename(canon))
+    return f"{base}_{leaf}_{hashlib.md5(canon.encode()).hexdigest()[:6]}"
+
+
+def warehouse_table(
+    spark: SparkSession,
+    sf_dir: str,
+    base: str,
+    df: DataFrame,
+    configure: Callable[[DataFrameWriter], DataFrameWriter],
+) -> str:
+    """The name of the per-corpus warehouse table ``base``
+    (``warehouse_table_name``), written from ``df`` as parquet through
+    ``configure(df.write)`` unless the session's catalog already has it.
+
+    The write is crash-safe: it goes to ``{name}_w{pid}``, and the final
+    name is bound by a rename only once the write has completed, so a run
+    killed mid-write leaves at most a stale temp, never a half-written table
+    under the final name. A temp whose owner pid is dead is reaped here; a
+    live owner's (another process sharing the warehouse) is left alone. The
+    final-name directory can outlive its catalog entry (the in-memory catalog
+    dies with its session, the directory does not), so it is cleared right
+    before the rename."""
+    name = warehouse_table_name(sf_dir, base)
+    if spark.catalog.tableExists(name):
+        return name
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    for stale in glob.glob(f"{warehouse}/{name}_w*"):
+        try:
+            os.kill(int(stale.rsplit("_w", 1)[-1]), 0)
+            continue  # owner alive: leave its write alone
+        except ValueError:
+            pass  # no pid suffix: not a live write's temp
+        except ProcessLookupError:
+            pass  # owner dead
+        except PermissionError:
+            continue  # the pid exists under another uid: alive
+        shutil.rmtree(stale, ignore_errors=True)
+    tmp = f"{name}_w{os.getpid()}"
+    spark.sql(f"DROP TABLE IF EXISTS {tmp}")
+    configure(df.write).mode("overwrite").format("parquet").saveAsTable(tmp)
+    shutil.rmtree(f"{warehouse}/{name}", ignore_errors=True)
+    spark.sql(f"ALTER TABLE {tmp} RENAME TO {name}")
+    return name
 
 
 class Tables:

@@ -13,7 +13,10 @@ reproducible. Checkpoint/state directories are per-invocation temp dirs.
 
 At 100 TB the same topology holds: the file source becomes a bucketed cloud
 prefix or Kafka, watermarks bound state stores, and foreachBatch's
-anti-join-then-append is the idempotent ingest pattern.
+anti-join-then-append is the idempotent ingest pattern. Every streamed
+result must equal the batch computation over the same events: that is what
+the oracle checks, across joins (stream-static, stream-stream), upserts and
+AvailableNow drains alike.
 """
 
 from __future__ import annotations
@@ -21,6 +24,7 @@ from __future__ import annotations
 import contextlib
 import importlib.util
 import os
+import shutil
 import time
 
 import pandas as pd
@@ -30,7 +34,8 @@ from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
 from ai_dataingestion_spark.catalog import register
 from ai_dataingestion_spark.tmpdirs import op_tmpdir
-from ai_dataingestion_spark.registry import load_table
+from ai_dataingestion_spark.registry import Tables, load_table
+from ai_dataingestion_spark.scale import broadcast_if_small
 
 
 def has_tws_runtime() -> bool:
@@ -457,4 +462,311 @@ def ingest_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.schema(_RAW_EVENTS_DDL).parquet(out)
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
+@register(
+    "stream_foreachbatch_upsert",
+    oracle="""
+WITH ranked AS (
+  -- user_id IS NOT NULL both sides: upsert state is keyed by user, and
+  -- the correlated count below is null-unsafe anyway (count 0 for NULL)
+  SELECT user_id, event_type, value,
+         row_number() OVER (PARTITION BY user_id
+                            ORDER BY ts DESC, event_id DESC) AS rn
+  FROM events WHERE user_id IS NOT NULL
+)
+SELECT user_id,
+       (SELECT count(*) FROM events e WHERE e.user_id = ranked.user_id)
+         AS n_events,
+       -- finite gate on the summed METRIC only (nan-tier contract):
+       -- event counts keep every row, but ±Inf cannot enter the exact
+       -- DECIMAL state column (conversion error here, NULL-poison there)
+       (SELECT CAST(round(sum(CASE WHEN isfinite(value)
+                               THEN CAST(value AS DECIMAL(38,6)) END), 2)
+               AS DOUBLE)
+        FROM events e WHERE e.user_id = ranked.user_id) AS total_value,
+       event_type AS last_type
+FROM ranked WHERE rn = 1
+""",
+)
+def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming UPSERT via foreachBatch — last-writer-wins state merge,
+    the semantics ingest_incremental's dedup-append cannot express:
+    each micro-batch folds into a per-user state table (event count,
+    DECIMAL value total, latest event type by (ts, event_id)) by
+    re-aggregating old ⊕ new. The merge is associative because every
+    state column is a monoid — counts add, decimals add, and 'latest'
+    is max over a (ts, event_id, type) struct — which is exactly what
+    makes the pattern batch-order-independent and therefore
+    replay-safe at scale. State lands in alternating generation dirs
+    (write-new-then-advance), never read-and-overwrite in place. Final
+    answer must equal the batch aggregate over all events."""
+    from ai_dataingestion_spark.streaming.incremental import (
+        _RAW_EVENTS_DDL,
+        _read_stream,
+        _run_available_now,
+        stage_event_files,
+    )
+
+    staging = stage_event_files(spark, sf_dir, n_files=3)
+    root = op_tmpdir("upsert_state_")
+    ckpt = op_tmpdir("upsert_ckpt_")
+    state_schema = (
+        "user_id bigint, n_events bigint, sum_value decimal(38,6), "
+        "latest struct<ts:timestamp_ntz,event_id:bigint,event_type:string>"
+    )
+
+    def _gen_dir(gen: int) -> str:
+        return os.path.join(root, f"gen={gen}")
+
+    def _latest_gen() -> int:
+        gens = [
+            int(d.split("=", 1)[1])
+            for d in os.listdir(root)
+            if d.startswith("gen=")
+        ]
+        return max(gens, default=-1)
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        sess = batch_df.sparkSession
+        # upsert state is keyed by user: no user, no state row (oracle
+        # mirrors with user_id IS NOT NULL)
+        batch_df = batch_df.where(F.col("user_id").isNotNull())
+        # finite gate on the summed METRIC only (nan-tier contract,
+        # mirrored in the oracle): counts keep every event, but a ±Inf
+        # value must not enter the exact DECIMAL state column
+        from ai_dataingestion_spark.functions.portable import finite
+
+        batch_state = batch_df.groupBy("user_id").agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(
+                F.when(finite("value"), F.col("value")).cast("decimal(38,6)")
+            )
+            .cast("decimal(38,6)")
+            .alias("sum_value"),
+            F.max(F.struct("ts", "event_id", "event_type")).alias("latest"),
+        )
+        gen = _latest_gen()
+        if gen >= 0:
+            old = sess.read.schema(state_schema).parquet(_gen_dir(gen))
+            merged = (
+                old.unionByName(batch_state)
+                .groupBy("user_id")
+                .agg(
+                    F.sum("n_events").alias("n_events"),
+                    F.sum("sum_value").cast("decimal(38,6)").alias("sum_value"),
+                    F.max("latest").alias("latest"),
+                )
+            )
+        else:
+            merged = batch_state
+        merged.write.mode("overwrite").parquet(_gen_dir(gen + 1))
+
+    _run_available_now(
+        _read_stream(spark, staging)
+        .writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", ckpt)
+    )
+    gen = _latest_gen()
+    if gen < 0:
+        # empty corpus: zero micro-batches fired, no state generation
+        # exists — return the empty result in the contract schema
+        return spark.createDataFrame(
+            [],
+            "user_id bigint, n_events bigint, total_value double, "
+            "last_type string",
+        )
+    final = spark.read.schema(state_schema).parquet(_gen_dir(gen))
+    return final.select(
+        "user_id",
+        "n_events",
+        F.round("sum_value", 2).cast("double").alias("total_value"),
+        F.col("latest.event_type").alias("last_type"),
+    )
+
+
+@register(
+    "stream_available_now_drain",
+    oracle="""
+SELECT o_orderstatus AS status, count(*) AS n
+FROM orders GROUP BY 1
+""",
+)
+def stream_available_now_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Trigger.AvailableNow backlog drain: a two-batch file backlog is
+    processed by a STREAMING query that reads everything currently
+    available in rate-limited micro-batches and then STOPS — the
+    idempotent catch-up mode a scheduled ingestion job uses instead of
+    an always-on stream (same checkpoint, same exactly-once file sink;
+    re-running after new arrivals drains only the delta). The drained
+    sink is read back and aggregated; equality with the source proves
+    no batch was lost or doubled across micro-batch boundaries. Oracle:
+    the source aggregate."""
+    t = Tables(spark, sf_dir)
+    orders = t.orders
+    root = op_tmpdir("anow_")
+    src = os.path.join(root, "src")
+    ck = os.path.join(root, "ck")
+    out = os.path.join(root, "out")
+    shutil.rmtree(src, ignore_errors=True)
+    orders.filter(F.col("o_orderkey") % 2 == 0).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(src, "batch1"))
+    orders.filter(F.col("o_orderkey") % 2 == 1).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(src, "batch2"))
+    stream = (
+        spark.readStream.schema(orders.schema)
+        .option("recursiveFileLookup", "true")
+        .parquet(src)
+    )
+    q = (
+        stream.writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ck)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(300):
+        # a hung drain must fail loudly, not aggregate a partial sink as if
+        # it were the full backlog (ADVICE r6)
+        q.stop()
+        raise TimeoutError("AvailableNow drain did not finish within 300s")
+    os.makedirs(out, exist_ok=True)  # zero-row drain: sink dir may be bare
+    back = spark.read.schema(orders.schema).parquet(out)
+    return back.groupBy(F.col("o_orderstatus").alias("status")).agg(
+        F.count(F.lit(1)).alias("n")
+    )
+
+
+@register(
+    "stream_static_join",
+    oracle="""
+SELECT e.event_type, count(*) AS n, count(DISTINCT e.user_id) AS n_users
+FROM events e JOIN customer c ON e.user_id = c.c_custkey
+WHERE c.c_mktsegment = 'BUILDING'
+GROUP BY e.event_type
+""",
+)
+def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-static enrichment join — the canonical ingestion topology the
+    other streaming operators don't cover: a micro-batched event stream
+    joined against a static (slowly-changing) dimension inside the stream,
+    then aggregated. The dim side is re-planned per micro-batch (that is
+    Spark's stream-static contract), broadcast-sized here and at 100 TB
+    usually still broadcast after segment pruning. Final counts must equal
+    the batch join — exactly-once across the join."""
+    from ai_dataingestion_spark.registry import load_table
+    from ai_dataingestion_spark.streaming.incremental import (
+        _memory_query_name,
+        _read_stream,
+        _run_available_now,
+        stage_event_files,
+    )
+
+    staging = stage_event_files(spark, sf_dir, n_files=3)
+    name = _memory_query_name()
+    dim = (
+        load_table(spark, sf_dir, "customer")
+        .filter(F.col("c_mktsegment") == "BUILDING")
+        .select(F.col("c_custkey").alias("user_id"))
+    )
+    joined = (
+        _read_stream(spark, staging)
+        .join(broadcast_if_small(dim, sf_dir, "customer"), "user_id")
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.approx_count_distinct("user_id").alias("n_users_approx"),
+        )
+    )
+    _run_available_now(
+        joined.writeStream.format("memory").queryName(name).outputMode("complete")
+    )
+    # exact distinct for the oracle: recompute from the staged parquet is
+    # unnecessary — the memory sink holds final counts; exact distinct users
+    # comes from a batch pass over the SAME staged files (one bounded read)
+    exact = (
+        spark.read.schema(
+            "event_id bigint, ts timestamp_ntz, user_id bigint, "
+            "event_type string, value double, props string"
+        )
+        .option("recursiveFileLookup", "true")
+        .parquet(staging)
+        .join(broadcast_if_small(dim, sf_dir, "customer"), "user_id")
+        .groupBy("event_type")
+        .agg(F.countDistinct("user_id").alias("n_users"))
+    )
+    # eqNullSafe: the NULL event_type group is a legal aggregation result
+    # on both sides; a null-unsafe equijoin would silently drop it
+    agg = spark.table(name).select("event_type", "n")
+    return agg.join(
+        exact, agg["event_type"].eqNullSafe(exact["event_type"])
+    ).select(agg["event_type"], "n", "n_users")
+
+
+@register(
+    "stream_stream_join",
+    oracle="""
+SELECT c.user_id, c.event_id AS click_id, pu.event_id AS purchase_id,
+       epoch_us(pu.ts) - epoch_us(c.ts) AS lag_us
+FROM events c JOIN events pu
+  ON c.user_id = pu.user_id
+ AND c.event_type = 'click' AND pu.event_type = 'purchase'
+ AND pu.ts >= c.ts AND pu.ts <= c.ts + INTERVAL 1 HOUR
+ORDER BY c.user_id, click_id, purchase_id
+""",
+)
+def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream interval join (click→purchase attribution — the last
+    first-class Structured Streaming topology the suite didn't cover): two
+    watermarked event streams joined on user_id with an event-time range
+    condition. The time bound + both watermarks let Spark EVICT click
+    state once the purchase-side watermark passes click.ts + 1 hour — the
+    state-bounding contract that makes stream-stream joins viable at
+    100 TB (without it, the join buffers a stream forever).
+
+    The 2-hour watermark delay strictly dominates the 1-hour join window
+    plus batch skew on the ts-ordered drops, so no valid pair is ever
+    dropped and the append output equals the batch join exactly."""
+    from ai_dataingestion_spark.streaming.incremental import (
+        _memory_query_name,
+        _read_stream,
+        _run_available_now,
+        stage_event_files,
+    )
+
+    staging = stage_event_files(spark, sf_dir, n_files=3)
+    name = _memory_query_name()
+
+    def side(event_type: str, prefix: str):
+        return (
+            _read_stream(spark, staging)
+            .filter(F.col("event_type") == event_type)
+            .select(
+                F.col("event_id").alias(f"{prefix}_id"),
+                F.col("user_id").alias(f"{prefix}_user"),
+                F.col("ts").cast("timestamp").alias(f"{prefix}_ts"),
+            )
+            .withWatermark(f"{prefix}_ts", "2 hours")
+        )
+
+    clicks, purchases = side("click", "click"), side("purchase", "purchase")
+    pairs = clicks.join(
+        purchases,
+        (F.col("click_user") == F.col("purchase_user"))
+        & (F.col("purchase_ts") >= F.col("click_ts"))
+        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
+    )
+    _run_available_now(
+        pairs.writeStream.format("memory").queryName(name).outputMode("append")
+    )
+    return spark.table(name).select(
+        F.col("click_user").alias("user_id"),
+        F.col("click_id"),
+        F.col("purchase_id"),
+        (F.unix_micros("purchase_ts") - F.unix_micros("click_ts")).alias(
+            "lag_us"
+        ),
     )

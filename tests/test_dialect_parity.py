@@ -280,7 +280,8 @@ def test_mant_exp_twin_parity(spark):
 def test_decile_twin_parity(spark):
     """``decile_cuts`` / ``decile_bin`` and their SQL twins fit the same
     nine cuts and put every row in the same bin, 0 … 9; every value
-    against an empty fit (NULL cuts) falls in bin 0."""
+    against an empty fit (NULL cuts) falls in bin 0, and a NULL value has
+    no bin (NULL) on both engines."""
     from pyspark.sql import functions as F
 
     from ai_dataingestion_spark.functions.portable import (
@@ -317,6 +318,7 @@ def test_decile_twin_parity(spark):
         assert got_cuts == want_cuts
         assert got == want
         bins = dict(got)
+        assert bins.pop(MANT_EXP_VALUES.index(None)) is None
         if fit_sql == "false":
             assert set(bins.values()) == {0}
         else:
@@ -393,6 +395,95 @@ def test_portable_hash_parity(spark, data):
         ).fetchall()
     ]
     assert got == want
+
+
+# integer keys: NULL, 0, negatives, the int64 extremes, 2^53 and its
+# neighbours; string keys: NULL, empty, Unicode
+HASH_BUCKET_INTS = [None, 0, 1, -1, -7, 2**53 - 1, 2**53, 2**53 + 1,
+                    2**63 - 1, -(2**63)]
+HASH_BUCKET_STRS = [None, "", "doc", "naïve", "日本語", "🙂 x", "ß"]
+
+
+@pytest.mark.parametrize("salt", ["", "doc", "ü"])
+def test_hash_bucket_twin_parity(spark, salt):
+    """``hash_bucket`` and ``hash_bucket_sql`` put every key in the same
+    bucket: the first hex digit of ``md5(salt || key text)``, for integer
+    and Unicode string keys, with the empty salt too; a NULL key has none."""
+    import hashlib
+
+    from ai_dataingestion_spark.functions.portable import (
+        hash_bucket,
+        hash_bucket_sql,
+    )
+
+    con = duckdb.connect()
+    for keys, ddl, duck_type in (
+        (HASH_BUCKET_INTS, "k bigint", "BIGINT"),
+        (HASH_BUCKET_STRS, "k string", "VARCHAR"),
+    ):
+        df = _spark_one_col(spark, keys, ddl)
+        got = [r[0] for r in df.select(hash_bucket("k", salt)).collect()]
+        want = [
+            r[0]
+            for r in con.execute(
+                f"SELECT {hash_bucket_sql('k', salt)} "
+                f"FROM (SELECT unnest(?::{duck_type}[]) AS k, "
+                "generate_subscripts(?::INT[], 1) AS i) ORDER BY i",
+                [keys, list(range(len(keys)))],
+            ).fetchall()
+        ]
+        expect = [
+            None if k is None
+            else hashlib.md5(f"{salt}{k}".encode()).hexdigest()[0]
+            for k in keys
+        ]
+        assert got == want == expect
+
+
+# (l_orderkey, l_partkey) line items: a part repeated within an order, a
+# single-line order, NULL order and part keys, and pairs held by 1, 2 and
+# 3 orders
+COPURCHASE_LINES = [
+    (1, 10), (1, 20), (1, 20), (1, 30),
+    (2, 10), (2, 20),
+    (3, 50),
+    (4, 10), (4, 20), (4, 30),
+    (5, None), (5, 10),
+    (None, 10), (None, 20),
+    (6, 30), (6, 10),
+    (7, 40), (7, 50),
+]
+
+
+def test_copurchase_twin_parity(spark):
+    """``copurchase_pairs`` and ``copurchase_pairs_sql`` give the same part
+    pairs u < v and order counts: a repeated part counts once per order, a
+    single-line order and NULL keys pair with nothing, and ``min_orders``
+    cuts at n ≥ 1, 2, 3 and 4."""
+    from ai_dataingestion_spark.operators.graph import (
+        copurchase_pairs,
+        copurchase_pairs_sql,
+    )
+
+    li = spark.createDataFrame(COPURCHASE_LINES, "l_orderkey bigint, l_partkey bigint")
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE lineitem AS SELECT unnest(?::BIGINT[]) AS l_orderkey, "
+        "unnest(?::BIGINT[]) AS l_partkey",
+        [[o for o, _ in COPURCHASE_LINES], [p for _, p in COPURCHASE_LINES]],
+    )
+    counts = {(10, 20): 3, (10, 30): 3, (20, 30): 2, (40, 50): 1}
+    for k in (1, 2, 3, 4):
+        got = sorted(tuple(r) for r in copurchase_pairs(li, k).collect())
+        want = sorted(
+            con.execute(f"SELECT u, v, n FROM {copurchase_pairs_sql(k)}").fetchall()
+        )
+        assert got == want == sorted((*pair, n) for pair, n in counts.items() if n >= k)
+    out = ("part1", "part2", "n_orders")
+    assert copurchase_pairs(li, 3, out=out).columns == list(out)
+    assert [d[0] for d in con.execute(
+        f"SELECT * FROM {copurchase_pairs_sql(3, out=out)}"
+    ).description] == list(out)
 
 
 # (a, b) vector pairs for the vector-math twins: zero, mixed-sign,

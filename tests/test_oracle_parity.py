@@ -5,10 +5,12 @@ sf0.01. Operators without oracle SQL get a rows-runnable smoke test."""
 from __future__ import annotations
 
 import ast
+from pathlib import Path
 
 import pytest
 
-from ai_dataingestion_spark.ai import dedup, multimodal, similarity, text
+from ai_dataingestion_spark import streaming
+from ai_dataingestion_spark.ai import dedup, multimodal, sentiment, similarity, text
 from ai_dataingestion_spark.catalog import all_specs
 from ai_dataingestion_spark.functions import (
     csv_depth,
@@ -21,15 +23,29 @@ from ai_dataingestion_spark.functions import (
 from ai_dataingestion_spark.operators import (
     aggregates,
     analytics,
+    catalog_describe,
+    catalog_meta,
     collation_depth,
     events,
     generators,
+    graph,
+    joins,
     observability,
+    pipe_syntax,
+    projections,
+    sets,
+    sorts,
+    sql_clauses,
+    sql_params,
+    sql_scripting,
+    sql_udf,
     variant_depth,
+    windows,
 )
 from ai_dataingestion_spark.pipeline import quality
+from ai_dataingestion_spark.plans import pipeline
 from ai_dataingestion_spark.sources import python_pushdown, scans
-from ai_dataingestion_spark.udf import arrow_native, udfs
+from ai_dataingestion_spark.udf import arrow_native, udfs, udtf_depth
 from tests.parity import compare, duckdb_connect, run_with_spawn_retry
 
 SPECS = all_specs()
@@ -182,17 +198,31 @@ RELATIONAL_PREFIXES = (
 )
 
 
-def _registered_in(module) -> set[str]:
-    """IDs of the `register` / `sql_op` calls written in ``module``."""
-    tree = ast.parse(open(module.__file__).read())
-    return {
-        c.args[0].value
-        for c in ast.walk(tree)
-        if isinstance(c, ast.Call)
-        and getattr(c.func, "id", "") in ("register", "sql_op")
-        and c.args
-        and isinstance(c.args[0], ast.Constant)
-    }
+def _registered_in(*modules) -> set[str]:
+    """IDs written in ``modules`` (a package counts all of its modules) as
+    the first argument of a `register` / `sql_op` call or of a module's own
+    `_*_op` registration factory."""
+    files = []
+    for m in modules:
+        if hasattr(m, "__path__"):  # a package
+            files += sorted(Path(m.__path__[0]).glob("*.py"))
+        else:
+            files.append(Path(m.__file__))
+    ids = set()
+    for f in files:
+        for c in ast.walk(ast.parse(f.read_text())):
+            name = getattr(c.func, "id", "") if isinstance(c, ast.Call) else ""
+            if (
+                (name in ("register", "sql_op") or name.endswith("_op"))
+                and c.args
+                and isinstance(c.args[0], ast.Constant)
+            ):
+                ids.add(c.args[0].value)
+    return ids
+
+
+def _prefixed(*prefixes: str) -> set[str]:
+    return {n for n in SPECS if n.startswith(prefixes)}
 
 
 # modules that each own one family of scalar functions
@@ -200,43 +230,74 @@ FN_FAMILY_MODULES = (
     csv_depth, ingest_hygiene, map_hof, regex_depth, xml_depth,
     collation_depth, generators, observability, variant_depth,
 )
+SQL_CLAUSE_IDS = {
+    "sql_recursive_cte_rollup", "sql_group_by_all", "sql_pivot_clause",
+    "sql_named_window_clause",
+}
+
+# domain -> (its module or modules, the IDs it owns)
+DOMAINS = {
+    # events_time_of_day_rollup stays with the TIME-type functions it
+    # shares helpers with
+    "events": (events, _prefixed("events_") - {"events_time_of_day_rollup"}),
+    "relational": (analytics, _prefixed(*RELATIONAL_PREFIXES)),
+    # the count-min top-k sketch, the inverted index and context packing
+    # count tokens and register here too
+    "text": (text, _prefixed("text_") - NEAR_DUP_TEXT_IDS | {
+        "agg_count_min_topk", "corpus_source_entropy",
+        "search_inverted_index_and_query", "pack_context_windows",
+    }),
+    "similarity": (similarity, _prefixed("embed_", "sim_")),
+    "multimodal": (multimodal, _prefixed("multimodal_")),
+    "dedup": (dedup, _prefixed("dedup_") | NEAR_DUP_TEXT_IDS),
+    "scan-sink": (scans, _prefixed("scan_", "sink_")),
+    # pipeline_e2e_text is the composed DAG of plans/pipeline.py
+    "quality-pipeline": (quality, _prefixed("quality_", "pipeline_")
+                         - {"pipeline_e2e_text"} | {"schema_evolve"}),
+    "sources": (python_pushdown, _prefixed("source_") - STREAMING_SOURCE_IDS),
+    "aggregates": (aggregates, _prefixed("agg_") - {"agg_count_min_topk"}),
+    "functions": (scalar, _prefixed("fn_") - _registered_in(*FN_FAMILY_MODULES)
+                  | {"events_time_of_day_rollup"}),
+    "udf": (udfs, _prefixed("udf_") - _registered_in(arrow_native) | {"udtf_python"}),
+    "windows": (windows, _prefixed("win_")),
+    "sorts": (sorts, _prefixed("sort_", "topk_", "sample_", "limit_", "split_")),
+    "joins": (joins, _prefixed("join_")),
+    "graph": (graph, _prefixed("graph_")),
+    "sql-clauses": (sql_clauses, SQL_CLAUSE_IDS),
+    "catalog-meta": (catalog_meta,
+                     _prefixed("catalog_") - _registered_in(catalog_describe)),
+    "projections": (projections, _prefixed(
+        "project_", "filter_", "distinct_", "pivot_", "unpivot_")),
+    "streaming": (streaming, _prefixed("stream_", "statestore_", "ingest_")
+                  | STREAMING_SOURCE_IDS),
+    # the single-family modules
+    "fn-families": (FN_FAMILY_MODULES,
+                    _prefixed("fn_") & _registered_in(*FN_FAMILY_MODULES)),
+    "udf-families": ((arrow_native, udtf_depth), _prefixed("udtf_", "udf_map_in_arrow")
+                     - {"udtf_python"}),
+    "sql-surface": ((pipe_syntax, sql_scripting, sql_udf, sql_params),
+                    _prefixed("sql_") - SQL_CLAUSE_IDS),
+    "catalog-describe": (catalog_describe,
+                         _prefixed("catalog_describe_", "catalog_show_surface")),
+    "sets": (sets, _prefixed("set_")),
+    "sentiment": (sentiment, _prefixed("sentiment_")),
+    "pipeline-dag": (pipeline, {"pipeline_e2e_text"}),
+}
 
 
-@pytest.mark.parametrize(
-    "module, owned",
-    [
-        # events_time_of_day_rollup stays with the TIME-type functions it
-        # shares helpers with
-        (events, {n for n in SPECS if n.startswith("events_")}
-         - {"events_time_of_day_rollup"}),
-        (analytics, {n for n in SPECS if n.startswith(RELATIONAL_PREFIXES)}),
-        # the count-min top-k sketch counts tokens and registers here too
-        (text, {n for n in SPECS if n.startswith("text_")}
-         - NEAR_DUP_TEXT_IDS | {"agg_count_min_topk", "corpus_source_entropy"}),
-        (similarity, {n for n in SPECS if n.startswith(("embed_", "sim_"))}),
-        (multimodal, {n for n in SPECS if n.startswith("multimodal_")}),
-        (dedup, {n for n in SPECS if n.startswith("dedup_")} | NEAR_DUP_TEXT_IDS),
-        (scans, {n for n in SPECS if n.startswith(("scan_", "sink_"))}),
-        # pipeline_e2e_text is the composed DAG of plans/pipeline.py
-        (quality, {n for n in SPECS if n.startswith(("quality_", "pipeline_"))}
-         - {"pipeline_e2e_text"} | {"schema_evolve"}),
-        (python_pushdown, {n for n in SPECS if n.startswith("source_")}
-         - STREAMING_SOURCE_IDS),
-        (aggregates, {n for n in SPECS if n.startswith("agg_")}
-         - {"agg_count_min_topk"}),
-        (scalar, {n for n in SPECS if n.startswith("fn_")}
-         - set().union(*map(_registered_in, FN_FAMILY_MODULES))
-         | {"events_time_of_day_rollup"}),
-        (udfs, {n for n in SPECS if n.startswith("udf_")}
-         - _registered_in(arrow_native) | {"udtf_python"}),
-    ],
-    ids=["events", "relational", "text", "similarity", "multimodal", "dedup",
-         "scan-sink", "quality-pipeline", "sources", "aggregates", "functions",
-         "udf"],
-)
+@pytest.mark.parametrize("module, owned", DOMAINS.values(), ids=DOMAINS)
 def test_domain_module_owns_its_ids(module, owned):
     """A domain's operators register from its module and nowhere else."""
-    assert _registered_in(module) == owned
+    modules = module if isinstance(module, tuple) else (module,)
+    assert _registered_in(*modules) == owned
+
+
+def test_domains_partition_every_id():
+    """Every operator belongs to exactly one domain: an ID registered outside
+    every domain module, or claimed by two domains, fails here."""
+    owned = [ids for _, ids in DOMAINS.values()]
+    assert set().union(*owned) == set(SPECS)
+    assert sum(map(len, owned)) == len(SPECS)
 
 
 def test_near_dup_text_ids_register_with_the_index():

@@ -142,31 +142,48 @@ def test_pipeline_plan_fuses_into_one_catalyst_plan(spark, sf_small):
     assert "lang" in pushed, pushed
 
 
-def test_bucketed_join_survives_interrupted_write(spark, sf_small):
-    """A run killed mid-write must not poison later runs: simulate a crash
-    by planting a half-written temp table dir AND a corrupt directory under
-    the final table name (no catalog entry — the in-memory catalog died
-    with the 'crashed' session), then verify join_bucketed rebuilds cleanly
-    and still plans zero shuffle exchanges."""
+@pytest.mark.parametrize(
+    "qid, bases",
+    [("join_bucketed", ("li_bkt", "o_bkt")),
+     ("catalog_show_partitions_inventory", ("opart",))],
+    ids=["join_bucketed", "catalog_show_partitions_inventory"],
+)
+def test_warehouse_table_survives_interrupted_write(spark, sf_small, qid, bases):
+    """A run killed mid-write must not poison later runs. Plant what a
+    crash leaves behind — a torn temp table dir whose owner pid is dead, and
+    a corrupt directory under the final name with no catalog entry (the
+    in-memory catalog died with the crashed session) — then the operator
+    must reap the temp, rebuild its table and read it back; join_bucketed
+    still plans zero shuffle exchanges."""
     import os
+    import shutil
+    import subprocess
+    import sys
     from urllib.parse import urlparse
 
-    from ai_dataingestion_spark.catalog import all_specs
+    from ai_dataingestion_spark.registry import warehouse_table_name
 
-    suffix = sf_small.rstrip("/").rsplit("sf", 1)[-1].replace(".", "_")
+    child = subprocess.Popen([sys.executable, "-c", ""])
+    child.wait()  # reaped: its pid names no live process
     warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    for tab in (f"li_bkt_{suffix}", f"o_bkt_{suffix}"):
-        spark.sql(f"DROP TABLE IF EXISTS {tab}")
-        spark.sql(f"DROP TABLE IF EXISTS {tab}_w99999")
-        for d in (f"{warehouse}/{tab}", f"{warehouse}/{tab}_w99999"):
-            os.makedirs(d, exist_ok=True)
-            with open(os.path.join(d, "part-00000.parquet"), "w") as f:
-                f.write("NOT A PARQUET FILE")  # torn write
-
-    df = all_specs()["join_bucketed"].fn(spark, sf_small)
-    assert df.count() > 0
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning" not in plan
+    names = [warehouse_table_name(sf_small, b) for b in bases]
+    temps = [f"{warehouse}/{n}_w{child.pid}" for n in names]
+    try:
+        for name, temp in zip(names, temps):
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+            for d in (f"{warehouse}/{name}", temp):
+                os.makedirs(d, exist_ok=True)
+                with open(os.path.join(d, "part-00000.parquet"), "w") as f:
+                    f.write("NOT A PARQUET FILE")  # torn write
+        df = all_specs()[qid].fn(spark, sf_small)
+        assert df.count() > 0
+        assert [t for t in temps if os.path.exists(t)] == []
+        if qid == "join_bucketed":
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange hashpartitioning" not in plan
+    finally:
+        for temp in temps:  # the final-name dirs are the operator's own
+            shutil.rmtree(temp, ignore_errors=True)
 
 
 def test_q6_predicates_reach_scan(spark, sf_small):

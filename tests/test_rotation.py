@@ -15,7 +15,7 @@ import pytest
 from ai_dataingestion_spark import catalog, registry, tmpdirs
 from ai_dataingestion_spark.ai import dedup, similarity, text
 from ai_dataingestion_spark.functions import portable
-from ai_dataingestion_spark.operators import analytics, events
+from ai_dataingestion_spark.operators import analytics, events, graph
 from ai_dataingestion_spark.pipeline import quality
 from ai_dataingestion_spark.sources import scans
 
@@ -116,6 +116,17 @@ def test_unchanged_code_ranks_behind_everything(certified):
          "agg_stats agg_partial_merge_proof "
          "orders_seasonal_decomposition_additive events_cuped_adjustment "
          "events_sample_size_calc"),
+        (portable.hash_bucket, "__code__", (lambda key, salt="": None).__code__,
+         "split_train_eval sample_stratified text_naive_bayes_source_classifier "
+         "text_contamination_ngram events_ab_proportion_ztest "
+         "events_ab_srm_check events_diff_in_differences"),
+        (graph.copurchase_pairs, "__code__",
+         (lambda lineitem, min_orders=1, out=(): lineitem).__code__,
+         "graph_copurchase_triangles graph_degree_distribution "
+         "graph_link_prediction_jaccard market_basket_pairs"),
+        (registry.warehouse_table, "__code__",
+         (lambda spark, sf_dir, base, df, configure: base).__code__,
+         "join_bucketed catalog_show_partitions_inventory"),
         # run-time state: a global op_tmpdir rebinds, and a cache dict
         (tmpdirs, "_ROOT", "/elsewhere", ""),
         (registry, "_events_ts_unit", {("a",): "ns"}, ""),
@@ -125,6 +136,7 @@ def test_unchanged_code_ranks_behind_everything(certified):
          "money-sum-helper", "source-token-counts-helper", "df-cap-constant",
          "cosine-helper", "fingerprint-helper", "footer-reader",
          "cutover-constant", "percentile-twin", "decile-twin", "mant-exp-twin",
+         "hash-bucket-twin", "copurchase-twin", "warehouse-table-helper",
          "rebound-global", "cache-dict"],
 )
 def test_changed_dependency_moves_exactly_its_operators(
@@ -142,6 +154,28 @@ def test_module_names_stay_out_of_fingerprints(certified, monkeypatch):
         if getattr(mod, "__name__", "").startswith("ai_dataingestion_spark"):
             monkeypatch.setattr(mod, "__name__", f"{mod.__name__}_moved")
     assert _ranks(certified) == dict.fromkeys(SPECS, 4)
+
+
+def test_moving_next_to_imported_names_keeps_the_digest():
+    """A function-local import from the operator's own module reads that
+    module's scope once, so moving an operator into the module it imports
+    from leaves its digest as it was."""
+    import dataclasses
+    import types
+
+    spec = SPECS["stream_foreachbatch_upsert"]
+    code = spec.fn.__wrapped__.__code__
+    home = vars(sys.modules["ai_dataingestion_spark.streaming.incremental"])
+    imported = {"_RAW_EVENTS_DDL", "_read_stream", "_run_available_now",
+                "stage_event_files"}
+    away = {k: v for k, v in home.items() if k not in imported}
+    digests = {
+        catalog.fingerprint(
+            dataclasses.replace(spec, fn=types.FunctionType(code, scope))
+        )
+        for scope in (home, away)
+    }
+    assert len(digests) == 1
 
 
 def test_rank_one_orders_oldest_green_round_first(certified, monkeypatch):

@@ -1,5 +1,5 @@
 """Semantic tests for the round-16 block (functions/scalar.py +
-operators/round16_catalog.py) — properties the per-op oracle hash can't state:
+operators/catalog_meta.py) — properties the per-op oracle hash can't state:
 TIME arithmetic is internally consistent (bands partition the corpus,
 truncation lands on its grid), width_bucket agrees with independent
 floor arithmetic, the try_* constructors only ever admit genuinely valid
